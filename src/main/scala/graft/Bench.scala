@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 /** Benchmark main: times every registered query at the SF directory in
   * `SPARK_GRAFT_SF_DIR`, forcing FULL evaluation through the `noop`
   * sink (a bare `.count()` would let Catalyst prune every computed
@@ -81,32 +83,58 @@ object Bench {
       rx.findAllMatchIn(txt).map(m => m.group(1) -> m.group(2).toDouble).toMap
     } catch { case _: Throwable => Map.empty }
 
+  /** One query's passes. A `None` time is a pass that threw; a query
+    * with any such pass is recorded as failed and kept out of the total.
+    */
+  private final case class Timing(best: Option[Double], first: Option[Double],
+                                  retime: Option[Double], startOff: Double)
+
+  /** Fastest pass; `None` once any pass threw. */
+  private def minPass(passes: Seq[Option[Double]]): Option[Double] =
+    if (passes.forall(_.isDefined)) Some(passes.flatten.min) else None
+
   // ---- mutable sweep state shared with the shutdown hook ----------
   // (single-threaded writes from main; the hook only reads after the
   // JVM decided to die, so a plain @volatile flag + synchronized map
   // snapshot is enough)
-  private val measured =
-    new java.util.concurrent.ConcurrentHashMap[String, (Double, Double, Double, Double)]()
+  private val measured = new java.util.concurrent.ConcurrentHashMap[String, Timing]()
   @volatile private var finalLinePrinted = false
   @volatile private var sweepMeta: Map[String, String] = Map.empty
   private var sweepOrder: Vector[String] = Vector.empty
 
-  private def resultsSnapshot(): Seq[(String, Double)] = {
+  private def resultsSnapshot(): Seq[(String, Option[Double])] = {
     import scala.jdk.CollectionConverters._
-    measured.asScala.toSeq.map { case (n, (best, _, _, _)) => n -> best }
+    measured.asScala.toSeq.map { case (n, t) => n -> t.best }
+  }
+
+  /** One full evaluation through the noop sink: seconds, or `None` if
+    * the query threw (a failure must never be recorded as a fast pass).
+    */
+  private[graft] def timeOnce(spark: SparkSession, sfDir: String, name: String,
+                              fn: (SparkSession, String) => DataFrame): Option[Double] = {
+    val t0 = System.nanoTime()
+    try {
+      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      Some((System.nanoTime() - t0) / 1e9)
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] $name failed: ${e.getMessage}")
+      None
+    }
   }
 
   /** The driver's one-line parse format. Emitted normally at sweep
     * end, and by the shutdown hook when the sweep was killed first.
     */
-  private def totalLine(results: Seq[(String, Double)], sfDir: String,
-                        complete: Boolean): String = {
+  private[graft] def totalLine(outcomes: Seq[(String, Option[Double])], sfDir: String,
+                               complete: Boolean): String = {
+    val results = outcomes.collect { case (n, Some(sec)) => n -> sec }
+    val nFailed = outcomes.size - results.size
     val total = results.map(_._2).sum
     def line(k: Int): String = {
       val top = results.sortBy(-_._2).take(k).sortBy(_._1)
       val qs = top.map { case (n, v) => "\"" + n + "\":" + (math.rint(v * 1000) / 1000) }
         .mkString("{", ",", "}")
-      s"""{"metric":"total","value":${math.rint(total * 1000) / 1000},"unit":"sec","n_queries":${results.size},"complete":$complete,"queries":$qs,"detail":"BENCH_DETAIL.json","sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${math.rint(total * 1000) / 1000},"unit":"sec","n_queries":${results.size},"n_failed":$nFailed,"complete":$complete,"queries":$qs,"detail":"BENCH_DETAIL.json","sf":"$sfDir"}"""
     }
     (results.size to 1 by -1).view.map(line).find(_.length <= 1800)
       .getOrElse(line(1))
@@ -119,15 +147,19 @@ object Bench {
     */
   private def flushDetail(complete: Boolean): Unit = {
     val rows = sweepOrder.filter(measured.containsKey)
+    def num(v: Option[Double]): String = v.fold("null")(_.toString)
     val detail = rows.map { k =>
-      val (best, first, second, off) = measured.get(k)
-      val retime = if (second.isNaN) "null" else second.toString
-      "\"" + k + "\":{\"sec\":" + best + ",\"first\":" + first +
-        ",\"retime\":" + retime + ",\"start_off_sec\":" + off + "}"
+      val t = measured.get(k)
+      val status = if (t.best.isDefined) "ok" else "failed"
+      "\"" + k + "\":{\"status\":\"" + status + "\",\"sec\":" + num(t.best) +
+        ",\"first\":" + num(t.first) + ",\"retime\":" + num(t.retime) +
+        ",\"start_off_sec\":" + t.startOff + "}"
     }.mkString("{", ",", "}")
-    val total = rows.map(k => measured.get(k)._1).sum
+    val best = rows.map(k => measured.get(k).best)
+    val total = best.flatten.sum
+    val nFailed = best.count(_.isEmpty)
     val meta = sweepMeta.map { case (k, v) => s""""$k":$v""" }.mkString(",")
-    val txt = s"""{"metric":"total","value":$total,"unit":"sec","complete":$complete,"queries":$detail,$meta}"""
+    val txt = s"""{"metric":"total","value":$total,"unit":"sec","n_failed":$nFailed,"complete":$complete,"queries":$detail,$meta}"""
     val dir = java.nio.file.Paths.get(".").toAbsolutePath
     val tmp = java.nio.file.Files.createTempFile(dir, ".bench_detail", ".tmp")
     java.nio.file.Files.write(tmp, txt.getBytes("UTF-8"))
@@ -178,12 +210,6 @@ object Bench {
       .write.format("noop").mode("overwrite").save()
     SparkEntry.queries("silver_cleanse_events")(spark, sfDir)
       .write.format("noop").mode("overwrite").save()
-    def timeOnce(name: String, fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => System.err.println(s"[bench] $name: ${e.getMessage}") }
-      (System.nanoTime() - t0) / 1e9
-    }
     // Dev loop: SPARK_GRAFT_BENCH_ONLY=a,b,c times only those queries
     // (the driver never sets it — full registry by default).
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
@@ -192,6 +218,7 @@ object Bench {
       case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
       case None => SparkEntry.queries
     }
+    def timeOnce(name: String): Option[Double] = Bench.timeOnce(spark, sfDir, name, selected(name))
     val floors = baselineFloors()
     sweepOrder = selected.keys.toVector.sorted
     def putMeta(extra: (String, String)*): Unit =
@@ -209,8 +236,8 @@ object Bench {
     // judging time — first passes are never shed, whatever the budget)
     sweepOrder.foreach { name =>
       val startOff = (System.currentTimeMillis() - wallStart) / 1e3
-      val first = timeOnce(name, selected(name))
-      measured.put(name, (first, first, Double.NaN, startOff))
+      val first = timeOnce(name)
+      measured.put(name, Timing(first, first, None, startOff))
       flushDetail(complete = false)
     }
     // ---- Phase 2: retime passes, budget-gated -----------------------
@@ -227,8 +254,8 @@ object Bench {
     // numbers are identical to the r9-r14 methodology.
     var nRetimesSkipped = 0
     val retimePlan = sweepOrder
-      .map { name =>
-        val (first, _, _, _) = measured.get(name)
+      .flatMap(name => measured.get(name).first.map(name -> _)) // failed: no retime
+      .map { case (name, first) =>
         val extraPasses = if (first > 4 * RetimeThresholdSec) 3 else 1
         val inflation = floors.get(name).map(f => first / math.max(f, 1e-3))
           .getOrElse(Double.MaxValue) // no floor → most suspicious
@@ -240,9 +267,9 @@ object Bench {
       // 30 s reserve for the floor pass + teardown
       val estCost = first * 1.2 * extraPasses
       if (remainingS - 30 > estCost) {
-        val reruns = (1 to extraPasses).map(_ => timeOnce(name, selected(name)))
-        val (_, f0, _, off) = measured.get(name)
-        measured.put(name, ((first +: reruns).min, f0, reruns.head, off))
+        val reruns = (1 to extraPasses).map(_ => timeOnce(name))
+        val t = measured.get(name)
+        measured.put(name, t.copy(best = minPass(Some(first) +: reruns), retime = reruns.head))
         flushDetail(complete = false)
       } else nRetimesSkipped += extraPasses
     }
@@ -254,16 +281,16 @@ object Bench {
     var nFloorRetimes = 0
     var nFloorRetimesSkipped = 0
     sweepOrder.foreach { name =>
-      val (best, f0, second, off) = measured.get(name)
-      floors.get(name) match {
-        case Some(f) if best > 1.5 * f && best - f > 0.3 =>
+      val t = measured.get(name)
+      (floors.get(name), t.best) match {
+        case (Some(f), Some(best)) if best > 1.5 * f && best - f > 0.3 =>
           if (remainingS - 10 > best * 2.4) {
             // counted when the retime FIRES, not when it improves — a
             // confirmed regression (retimes stay slow) must still show
             // up in the record's self-diagnosis
             nFloorRetimes += 1
-            val again = (1 to 2).map(_ => timeOnce(name, selected(name)))
-            measured.put(name, ((best +: again).min, f0, second, off))
+            val again = (1 to 2).map(_ => timeOnce(name))
+            measured.put(name, t.copy(best = minPass(Some(best) +: again)))
             flushDetail(complete = false)
           } else {
             // budget-shed floor retimes are degradation too: without

@@ -1,14118 +1,38 @@
 package graft
 
-import graft.operators.Ckpt.CkptOps
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.functions.{Geo, Temporal, TextOps}
-import graft.operators._
+import graft.registry._
+import graft.registry.LakeQueries.q1Agg
 
 /** Driver contract — query registry + DuckDB oracle twins.
   *
+  * Each query is one [[registry.Query]] record holding its builder next
+  * to its DuckDB twin, or the reason it has none. The records live one
+  * file per family under `registry/`.
+  *
   * Naming follows SURVEY.md §2. Every aggregate / computed column is
-  * aliased identically here and in `oracleSql` (driver compares by
-  * column name). Monetary aggregates are summed in DECIMAL (exact,
-  * order-independent) and cast to DOUBLE at the end so parallel
+  * aliased identically in the builder and in its SQL twin (results
+  * are compared by column name). Monetary aggregates are summed in DECIMAL
+  * (exact, order-independent) and cast to DOUBLE at the end so parallel
   * reduction order can never change the value.
   */
 object SparkEntry {
 
-  private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    Tables(spark, dir, name)
-
-  private val money: Column => Column = c =>
-    graft.expressions.Kernels.toDecimal(c.cast("double"), 18, 2)
-
-  // ── flagship ──────────────────────────────────────────────────────
-  /** Pricing summary over lineitem (TPC-H Q1 shape): groupBy + exact
-    * decimal sums; one shuffle, map-side partial aggregation.
-    */
-  def q1Agg(spark: SparkSession, dir: String): DataFrame = {
-    val li = t(spark, dir, "lineitem")
-    li.groupBy(col("l_returnflag"), col("l_linestatus"))
-      .agg(
-        sum(money(col("l_quantity"))).cast("double").as("sum_qty"),
-        sum(money(col("l_extendedprice"))).cast("double").as("sum_base_price"),
-        sum(money(col("l_extendedprice")) * (lit(1).cast(DecimalType(18, 2)) - money(col("l_discount"))))
-          .cast("double").as("sum_disc_price"),
-        count(lit(1)).as("count_order"))
-  }
-
-  /** TPC-H Q5-shaped local-supplier revenue: six-table star join with
-    * a selective region/date filter. Exercises Catalyst's join
-    * reordering and the broadcast chain — every dim side is below the
-    * broadcast threshold, so the fact tables are never shuffled for SK
-    * resolution (the §4 contract, on a classic analytical shape).
-    */
-  def q5LocalSupplier(spark: SparkSession, dir: String): DataFrame = {
-    val li = t(spark, dir, "lineitem")
-    val o = t(spark, dir, "orders")
-      .filter(col("o_orderdate") >= "1996-01-01" && col("o_orderdate") < "1998-01-01")
-    val c = t(spark, dir, "customer")
-    val s = t(spark, dir, "supplier")
-    val n = t(spark, dir, "nation")
-    val r = t(spark, dir, "region").filter(col("r_name") === "ASIA")
-    li.join(o, col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(c), col("c_custkey") === col("o_custkey"))
-      .join(broadcast(s), col("l_suppkey") === col("s_suppkey") &&
-        col("c_nationkey") === col("s_nationkey"))
-      .join(broadcast(n), col("s_nationkey") === col("n_nationkey"))
-      .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
-      .groupBy(col("n_name"))
-      .agg(sum(money(col("l_extendedprice")) *
-          (lit(1).cast(DecimalType(18, 2)) - money(col("l_discount"))))
-        .cast("double").as("revenue"),
-        count(lit(1)).as("n_lineitems"))
-  }
-
-  // ── A. Silver ─────────────────────────────────────────────────────
-  /** Typed cleanse of the events feed: normalization, code-derived
-    * day type, temporal surrogate keys, JSON prop extraction.
-    * (reference: src/silver/transforms.py:325-454)
-    */
-  private def cleanseEvents(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "events").select(
-      col("event_id"),
-      col("user_id"),
-      upper(trim(col("event_type"))).as("event_type_norm"),
-      Temporal.tipoDia(col("ts")).as("tipo_dia"),
-      Temporal.dateSk(col("ts")).as("date_sk"),
-      Temporal.time30mSk(col("ts")).as("time_30m_sk"),
-      col("value"),
-      // Guard the cast to pure-integer strings so Spark (NULL on junk)
-      // and the DuckDB twin (raises on junk, rounds decimals) can never
-      // diverge on non-integer payloads.
-      propK(get_json_object(col("props"), "$.k")).as("prop_k"))
-
-  private def propK(raw: Column): Column =
-    // Single JSON evaluation (r16, guide §1.2 per-task work): the
-    // plain when(raw.rlike, raw.cast) form evaluates get_json_object
-    // TWICE per row (whole-stage codegen's subexpression elimination
-    // does not fold the two references through the conditional —
-    // measured 0.48 s vs the 0.25 s single-eval floor per cleanse
-    // scan at sf0.1). Binding the value once through a one-element
-    // array lambda halves the JSON cost for every cleanse consumer;
-    // same guard, same cast, bit-identical output (mismatches=0 on
-    // the full events relation).
-    element_at(
-      transform(array(raw), x => when(x.rlike("^-?[0-9]+$"), x.cast("int"))), 1)
-
-  /** Quality rules for events, first-match-wins (reference:
-    * src/silver/transforms.py:457-478 rule shape).
-    */
-  private def eventRules: Seq[QualityGate.Rule] = Seq(
-    QualityGate.Rule("MISSING_ID", col("user_id").isNull),
-    QualityGate.Rule("MISSING_TIMESTAMP", col("date_sk").isNull),
-    QualityGate.Rule("NEG_VALUE", col("value").isNotNull && col("value") < 0),
-    QualityGate.Rule("BAD_RANGE_VALUE", col("value").isNotNull && col("value") > 450.0),
-    QualityGate.Rule("BAD_TIME_SLOT", col("time_30m_sk").isNotNull &&
-      (col("time_30m_sk") < 0 || col("time_30m_sk") > 47)))
-
-  /** Events feed contract (the ViajesTripRow pattern, contracts.py:
-    * 47-109): required ids/timestamps, enum-checked normalized code,
-    * optional bounded measure, at-least-one payload cross rule.
-    */
-  private def eventsContract: (Seq[RowContract.Field], Seq[RowContract.Cross]) = (
-    Seq(
-      RowContract.required("user_id", "MISSING_ID"),
-      RowContract.upperEnum("event_type",
-        Seq("CLICK", "SIGNUP", "ERROR", "VIEW", "PURCHASE"),
-        badReason = "BAD_TYPE", missingReason = Some("MISSING_TYPE")),
-      RowContract.required("ts", "MISSING_TIMESTAMP"),
-      RowContract.optionalRange("value", 0, 450, "BAD_RANGE_VALUE")),
-    Seq(RowContract.atLeastOneOf("EMPTY_PAYLOAD", Seq("value", "props"))))
-
-  // ── B. Gold: SCD2 / as-of / star fact ─────────────────────────────
-  /** SCD2 user dimension from the events history: business key
-    * user_id, tracked attribute = latest-of-day event_type
-    * (reference: src/gold/load_gold.py:295-439 dim_stop semantics).
-    */
-  private def scd2User(spark: SparkSession, dir: String): DataFrame =
-    Scd2.fromHistory(t(spark, dir, "events"),
-      bk = "user_id", ts = "ts", tieBreak = Seq("event_id"), attrs = Seq("event_type"))
-
-  /** Incremental SCD2 load: dim built from the first half of the
-    * month, then a batch of the rest merged with expire-and-insert
-    * semantics (reference: load_gold.py:295-439). Must equal the
-    * full-history rebuild, so it shares gold_scd2_build's oracle.
-    */
-  private def scd2UserIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val ev = t(spark, dir, "events")
-    val cutoff = to_timestamp(lit("2024-01-16 00:00:00"))
-    val existing = Scd2.fromHistory(ev.filter(col("ts") < cutoff),
-      bk = "user_id", ts = "ts", tieBreak = Seq("event_id"), attrs = Seq("event_type"))
-    Scd2.applyChanges(existing, ev.filter(col("ts") >= cutoff),
-      bk = "user_id", ts = "ts", tieBreak = Seq("event_id"), attrs = Seq("event_type"))
-  }
-
-  /** Full-snapshot SCD2 load with DELETE semantics: the post-cutoff
-    * state (latest event_type per user observed at the snapshot date)
-    * is the complete universe — users absent from it expire, present
-    * users follow the applyChanges path.
-    */
-  private def scd2UserSnapshot(spark: SparkSession, dir: String): DataFrame = {
-    val ev = t(spark, dir, "events")
-    val cutoff = to_timestamp(lit("2024-01-16 00:00:00"))
-    val existing = Scd2.fromHistory(ev.filter(col("ts") < cutoff),
-      bk = "user_id", ts = "ts", tieBreak = Seq("event_id"), attrs = Seq("event_type"))
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts").desc, col("event_id").desc)
-    val snap = ev.filter(col("ts") >= cutoff)
-      .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
-      .select(col("user_id"), col("event_type"))
-    Scd2.applySnapshot(existing, snap, bk = "user_id",
-      attrs = Seq("event_type"), asOfDate = to_date(lit("2024-01-16")))
-  }
-
-  /** As-of resolution of every event to its covering SCD2 user version
-    * (reference: src/gold/load_gold.py:1144-1154).
-    */
-  private def asofEvents(spark: SparkSession, dir: String): DataFrame = {
-    val dim = scd2User(spark, dir)
-      .withColumnRenamed("user_id", "bk_user_id")
-      .withColumnRenamed("event_type", "segment")
-      .select("bk_user_id", "segment", "valid_from", "valid_to", "is_current")
-    val fact = t(spark, dir, "events")
-      .select(col("event_id"), col("user_id"), to_date(col("ts")).as("event_dt"))
-    AsOfJoin(fact, dim, "user_id", "bk_user_id", col("event_dt"))
-      .select("event_id", "user_id", "event_dt", "segment", "valid_from", "is_current")
-  }
-
-  /** Same resolution as [[asofEvents]] through the union+merge-scan
-    * fallback (one shuffle, no per-key pair materialization) — the
-    * large-both-sides path; must produce identical rows, so it shares
-    * the gold_asof_join oracle.
-    */
-  private def asofEventsMergeScan(spark: SparkSession, dir: String): DataFrame = {
-    val dim = scd2User(spark, dir)
-      .withColumnRenamed("user_id", "bk_user_id")
-      .withColumnRenamed("event_type", "segment")
-      .select("bk_user_id", "segment", "valid_from", "valid_to", "is_current")
-    val fact = t(spark, dir, "events")
-      .select(col("event_id"), col("user_id"), to_date(col("ts")).as("event_dt"))
-    AsOfJoin.mergeScan(fact, dim, "user_id", "bk_user_id", col("event_dt"))
-      .select("event_id", "user_id", "event_dt", "segment", "valid_from", "is_current")
-  }
-
-  /** The staged (cleansed, gated, cash-excluded) fact input. */
-  private def stagedEvents(spark: SparkSession, dir: String): DataFrame =
-    QualityGate.valid(cleanseEvents(spark, dir), eventRules)
-      .filter(col("user_id").isNotNull)
-
-  private val factGrain = Seq("user_id", "date_sk", "time_30m_sk", "event_type_norm")
-
-  /** Idempotent merge on the fact grain (reference: load_gold.py MERGE
-    * WHEN NOT MATCHED): an "existing" load of the early events plus an
-    * incoming full reload — re-loaded grains must not duplicate.
-    */
-  private def mergeGrain(spark: SparkSession, dir: String): DataFrame = {
-    val staged = stagedEvents(spark, dir)
-    val existing = Dedup.latestByGrain(staged.filter(col("event_id") < 5000),
-      grain = factGrain, order = Seq("event_id"))
-    val incoming = Dedup.latestByGrain(staged, grain = factGrain, order = Seq("event_id"))
-    Merge.appendNewGrains(existing, incoming, factGrain)
-  }
-
-  /** Full star fact build: cleanse -> quality gate -> cash-row
-    * exclusion -> grain dedup -> SK resolution via LEFT JOIN to the
-    * lookup dim -> as-of join to the SCD2 user dim
-    * (reference: src/gold/load_gold.py:1119-1180).
-    */
-  private def fctStar(spark: SparkSession, dir: String): DataFrame = {
-    val deduped = Dedup.latestByGrain(stagedEvents(spark, dir),
-      grain = factGrain, order = Seq("event_id"))
-    val dimEtype = Dims.lookupDim(cleanseEvents(spark, dir),
-      "event_type_norm", "event_type_sk", "event_type_name")
-    val dimUser = scd2User(spark, dir)
-      .withColumnRenamed("user_id", "bk_user_id")
-      .withColumnRenamed("event_type", "segment")
-      .select("bk_user_id", "segment", "valid_from", "valid_to")
-    val withSk = deduped.join(broadcast(dimEtype),
-      deduped("event_type_norm") === dimEtype("event_type_name"), "left")
-    AsOfJoin(withSk, dimUser, "user_id", "bk_user_id",
-        to_date(col("date_sk").cast("string"), "yyyyMMdd"))
-      .select(col("date_sk"), col("time_30m_sk"), col("user_id"),
-        col("event_type_sk"), col("tipo_dia"), col("segment"),
-        col("valid_from").as("segment_valid_from"),
-        col("event_id"), col("value"), col("prop_k"))
-  }
-
-  // ── C. Serving analytics ──────────────────────────────────────────
-  /** Fixed filter panel exercised by every serving query — mirrors the
-    * reference's dynamic predicate builder semantics
-    * (reference: src/webapp/query_service.py:65-107) with a pinned,
-    * oracle-reproducible parameter set.
-    */
-  private val servingFilters = Serving.Filters(
-    dateSkFrom = Some(20240105), dateSkTo = Some(20240128),
-    dayTypes = Seq("LABORAL", "SABADO"),
-    modes = Seq("CLICK", "VIEW", "PURCHASE"),
-    hourFrom = Some(6), hourTo = Some(22))
-
-  /** The validated serving frame (the reference's etapas_validation twin). */
-  private def servingValid(spark: SparkSession, dir: String): DataFrame =
-    QualityGate.valid(cleanseEvents(spark, dir), eventRules)
-
-  private def roundedSum(c: Column, name: String): Column =
-    coalesce(round(sum(money(c)), 2), lit(0)).cast("double").as(name)
-
-  /** Cross-table scalar panel (reference: query_service.py:260-290). */
-  private def svcOverview(spark: SparkSession, dir: String): DataFrame = {
-    val ev = servingValid(spark, dir).filter(Serving.predicate(servingFilters))
-    val evAgg = ev.agg(count(lit(1)).as("events_observados"),
-      roundedSum(col("value"), "events_estimados"))
-    val ordAgg = t(spark, dir, "orders").agg(
-      count(lit(1)).as("orders_observados"),
-      roundedSum(col("o_totalprice"), "orders_estimados"))
-    val liAgg = t(spark, dir, "lineitem").agg(
-      roundedSum(col("l_quantity"), "lineitem_qty_total"))
-    evAgg.crossJoin(ordAgg).crossJoin(liAgg)
-  }
-
-  /** Demand by day type (reference: query_service.py:293-311 — no
-    * day-type clause; mode + hour + date-range filters apply).
-    */
-  private def svcDemandByDayType(spark: SparkSession, dir: String): DataFrame =
-    servingValid(spark, dir)
-      .filter(Serving.predicate(servingFilters.copy(dayTypes = Nil)))
-      .groupBy(col("tipo_dia"))
-      .agg(count(lit(1)).as("etapas_observadas"),
-        roundedSum(col("value"), "etapas_estimadas"))
-
-  /** Demand by mode (reference: query_service.py:314-333). */
-  private def svcDemandByMode(spark: SparkSession, dir: String): DataFrame =
-    servingValid(spark, dir)
-      .filter(Serving.predicate(servingFilters))
-      .groupBy(col("event_type_norm").as("mode_code"))
-      .agg(count(lit(1)).as("etapas_observadas"),
-        roundedSum(col("value"), "etapas_estimadas"))
-
-  /** Top-N stops by summed boardings (reference: query_service.py:
-    * 336-357). orderBy+limit plans as TakeOrderedAndProject — no
-    * global sort at scale; extra ASC keys make the cut deterministic.
-    */
-  private def svcTopBoardings(spark: SparkSession, dir: String): DataFrame =
-    servingValid(spark, dir)
-      .filter(Serving.predicate(servingFilters))
-      .groupBy(col("user_id").as("stop_code"), col("event_type_norm").as("mode_code"))
-      .agg(roundedSum(col("value"), "subidas_promedio_total"))
-      .orderBy(col("subidas_promedio_total").desc, col("stop_code"), col("mode_code"))
-      .limit(20)
-
-  /** Map points: modal coordinate per stop joined to aggregated
-    * boardings, top-N (reference: query_service.py:151-257). The
-    * union-all of two coordinate sources mirrors the reference's
-    * board/alight legs; MIN replaces the reference's nondeterministic
-    * ANY_VALUE(comuna) so the oracle can hash-match.
-    */
-  /** Grid-bucketed nearest-stop resolution: every coordinate-bearing
-    * valid event resolved to its closest modal stop location within
-    * radius 5 (NULL when uncovered) — the spatial-join tier above
-    * svc_map_points' exact-key join.
-    */
-  private def geoNearestStop(spark: SparkSession, dir: String): DataFrame = {
-    // ONE materialized pass over the cleanse chain (r16): `ev` feeds
-    // the coord legs AND the point spine — un-checkpointed, the full
-    // cleanse/quality scan executed three times inside one plan (two
-    // complementary coord legs + points). Projected to the 5 columns
-    // this query touches before the checkpoint.
-    val ev = graft.operators.Ckpt.partitioned(
-      servingValid(spark, dir).select(col("event_id"), col("user_id"),
-        col("event_type_norm"), col("value"),
-        col("prop_k").cast("double").as("__y")))
-    // The two legs' predicates (isin / NOT isin) partition the non-NULL
-    // event_type_norm rows, and everything downstream is an aggregate —
-    // one IS NOT NULL filter produces the identical multiset in one
-    // pass instead of two.
-    val legs = ev.filter(col("event_type_norm").isNotNull)
-      .select(col("user_id").as("stop_code"), col("value").as("x_utm"),
-        col("__y").as("y_utm"))
-      .filter(col("x_utm").between(10, 400) && col("y_utm").between(5, 95))
-    val coords = Serving.modalValue(legs, "stop_code", Seq("x_utm", "y_utm"))
-      .drop("modal_cnt")
-    val points = ev.select(col("event_id"), col("value").as("x"),
-        col("__y").as("y"))
-      .filter(col("x").between(10, 400) && col("y").between(5, 95))
-    SpatialJoin.nearestNeighbor(points, "event_id", "x", "y",
-      coords, "stop_code", "x_utm", "y_utm", radius = 5.0)
-  }
-
-  private def svcMapPoints(spark: SparkSession, dir: String): DataFrame = {
-    // ONE materialized pass over the cleanse chain (r16, same shape as
-    // geoNearestStop): the un-checkpointed `ev` executed the cleanse 3x
-    // (two complementary coord legs + boardings), and the two legs'
-    // isin/NOT-isin predicates partition the non-NULL rows — a single
-    // IS NOT NULL filter feeds the same aggregate.
-    val ev = graft.operators.Ckpt.partitioned(
-      servingValid(spark, dir).select(col("user_id"), col("event_type_norm"),
-        col("value"), col("prop_k"), col("date_sk"), col("time_30m_sk"),
-        col("tipo_dia")))
-    val legs = ev.filter(col("event_type_norm").isNotNull)
-      .select(col("user_id").as("stop_code"), col("value").as("x_utm"),
-        col("prop_k").cast("double").as("y_utm"))
-      .filter(col("x_utm").between(10, 400) && col("y_utm").between(5, 95))
-    val coords = Serving.modalValue(legs, "stop_code", Seq("x_utm", "y_utm"))
-      .drop("modal_cnt")
-    val boardings = ev.filter(Serving.predicate(servingFilters))
-      .groupBy(col("date_sk").as("service_date"),
-        floor(col("time_30m_sk") / 2).cast("int").as("hour_of_day"),
-        col("tipo_dia"), col("event_type_norm").as("mode_code"),
-        col("user_id").as("stop_code"))
-      .agg(min(col("prop_k")).as("comuna"),
-        roundedSum(col("value"), "etapas_estimadas"),
-        count(lit(1)).as("etapas_observadas"))
-    boardings.join(broadcast(coords), Seq("stop_code"))
-      .select(col("service_date"), col("hour_of_day"), col("tipo_dia"),
-        col("mode_code"), col("stop_code"), col("comuna"),
-        col("x_utm"), col("y_utm"),
-        col("etapas_estimadas"), col("etapas_observadas"))
-      .orderBy(col("etapas_estimadas").desc, col("stop_code"),
-        col("service_date"), col("hour_of_day"), col("mode_code"))
-      .limit(400)
-  }
-
-  /** Map points reprojected to WGS84 (reference: query_service.py:
-    * 235-241, EPSG:32719 -> 4326). Synthetic x/y are scaled into the
-    * Santiago UTM window first so the series runs in its accurate
-    * domain; lat/lon rounded to 6 decimals like the reference.
-    */
-  private def svcUtmToWgs84(spark: SparkSession, dir: String): DataFrame = {
-    val pts = svcMapPoints(spark, dir)
-      .withColumn("x_utm_m", lit(200000.0) + col("x_utm") * 750.0)
-      .withColumn("y_utm_m", lit(6200000.0) + col("y_utm") * 1500.0)
-    pts.withColumn("lat", round(Geo.utmToLat(col("x_utm_m"), col("y_utm_m")), 6))
-      .withColumn("lon", round(Geo.utmToLon(col("x_utm_m"), col("y_utm_m")), 6))
-      .drop("x_utm_m", "y_utm_m")
-  }
-
-  /** 500 m grid-cell density over the map points (UTM-scaled exactly
-    * like [[svcUtmToWgs84]]): the serving heat-map aggregation.
-    */
-  private def svcGridDensity(spark: SparkSession, dir: String): DataFrame = {
-    val pts = svcMapPoints(spark, dir)
-      .withColumn("x_utm_m", lit(200000.0) + col("x_utm") * 750.0)
-      .withColumn("y_utm_m", lit(6200000.0) + col("y_utm") * 1500.0)
-    Serving.gridDensity(pts, "x_utm_m", "y_utm_m", cell = 500.0,
-      weightCol = "etapas_estimadas")
-  }
-
-  // ── D. Training-data pipeline: text ───────────────────────────────
-  /** Per-document token/char stats and a deterministic quality score. */
-  private def textStats(spark: SparkSession, dir: String): DataFrame = {
-    val txt = col("text")
-    val toks = TextOps.tokens(txt)
-    t(spark, dir, "documents").select(
-      col("doc_id"),
-      length(txt).as("n_chars_calc"),
-      size(toks).as("n_tokens"),
-      (aggregate(toks, lit(0), (a, x) => a + length(x)) / greatest(size(toks), lit(1)))
-        .as("avg_token_len"),
-      TextOps.bpeTokenCount(txt).as("n_tokens_bpe"),
-      (TextOps.punctCount(txt) / greatest(length(txt), lit(1))).as("punct_ratio"),
-      (TextOps.stopwordCountEn(toks) / greatest(size(toks), lit(1))).as("stopword_ratio"))
-      .withColumn("quality_score",
-        least(lit(1.0), col("n_tokens") / 100.0) *
-          (lit(1.0) - col("stopword_ratio") * 0.5) * (lit(1.0) - col("punct_ratio")))
-  }
-
-  /** Stopword/CJK heuristic language ID with ground truth passthrough. */
-  private def textLangId(spark: SparkSession, dir: String): DataFrame = {
-    val txt = col("text")
-    val toks = TextOps.tokens(txt)
-    val scores = TextOps.langScores(toks).map { case (c, name) => c.as(name) }
-    t(spark, dir, "documents")
-      .select(col("doc_id") +: col("lang") +: size(toks).as("n_tokens") +:
-        scores :+ TextOps.cjkCount(txt).as("cjk_n"): _*)
-      .withColumn("predicted_lang", TextOps.predictedLang(
-        col("en_n"), col("de_n"), col("es_n"), col("fr_n"), col("cjk_n"), col("n_tokens")))
-  }
-
-  private def textFingerprint(spark: SparkSession, dir: String): DataFrame = {
-    val toks = TextOps.tokens(col("text"))
-    // Both fingerprints come from one kernel pass, on md5-register
-    // hashes (r14 §5.1 conversion): the rolling fold expands to the
-    // positional sum Σ h_i·31^(n-i) mod p, which the oracle replays
-    // through a recursive powers-of-31 CTE; the min-shingle replays
-    // as MIN over the shingle relation. Spec pins the kernel to the
-    // declarative TextOps definitions.
-    t(spark, dir, "documents")
-      .select(col("doc_id"), size(toks).as("n_tokens"),
-        graft.expressions.Kernels.fingerprints(toks, 3, md5 = true).as("fp"))
-      .select(col("doc_id"), col("n_tokens"),
-        col("fp").getItem(0).as("fp_rolling"),
-        col("fp").getItem(1).as("fp_min_shingle"))
-  }
-
-  // ── registry ──────────────────────────────────────────────────────
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q1_agg" -> q1Agg _,
-
-    "q5_local_supplier" -> q5LocalSupplier _,
-
-    "silver_cleanse_events" -> cleanseEvents _,
-
-    "silver_quality_valid" -> ((s: SparkSession, d: String) =>
-      QualityGate.valid(cleanseEvents(s, d), eventRules)),
-
-    "silver_quality_quarantine" -> ((s: SparkSession, d: String) =>
-      QualityGate.quarantine(cleanseEvents(s, d), eventRules)),
-
-    "silver_quality_report" -> ((s: SparkSession, d: String) =>
-      QualityGate.report(cleanseEvents(s, d), eventRules)),
-
-    "silver_unpivot_measures" -> ((s: SparkSession, d: String) =>
-      t(s, d, "lineitem")
-        .unpivot(
-          Array(col("l_orderkey"), col("l_linenumber")),
-          Array(col("l_quantity"), col("l_extendedprice"), col("l_discount"), col("l_tax")),
-          "measure_name", "measure_value")),
-
-    // Leg-style grouped unpivot with the reference's empty-slot drop
-    // (reference: src/silver/transforms.py:516-558). One scan +
-    // explode of per-leg structs — the reference's 4-way UNION shape
-    // would scan the fact once per leg.
-    "silver_unpivot_legs" -> ((s: SparkSession, d: String) => {
-      val legs = array(
-        struct(lit(1).as("leg_seq"), col("l_returnflag").as("leg_attr"),
-          col("l_quantity").as("leg_value")),
-        struct(lit(2).as("leg_seq"), col("l_linestatus").as("leg_attr"),
-          col("l_extendedprice").as("leg_value")),
-        struct(lit(3).as("leg_seq"),
-          when(col("l_returnflag") === "N", lit(null).cast("string"))
-            .otherwise(col("l_returnflag")).as("leg_attr"),
-          when(col("l_tax") === 0.0, lit(null).cast("double"))
-            .otherwise(col("l_tax")).as("leg_value")))
-      t(s, d, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"), explode(legs).as("leg"))
-        .select(col("l_orderkey"), col("l_linenumber"),
-          col("leg.leg_seq").as("leg_seq"), col("leg.leg_attr").as("leg_attr"),
-          col("leg.leg_value").as("leg_value"))
-        .filter(col("leg_attr").isNotNull || col("leg_value").isNotNull)
-    }),
-
-    "gold_dim_date" -> ((s: SparkSession, d: String) =>
-      Dims.dimDate(t(s, d, "orders"), col("o_orderdate"))),
-
-    "gold_dim_time_30m" -> ((s: SparkSession, d: String) => Dims.dimTime30m(s)),
-
-    "gold_dim_lookup" -> ((s: SparkSession, d: String) =>
-      Dims.lookupDim(t(s, d, "orders"), "o_orderpriority", "priority_sk", "priority_name")),
-
-    // Kimball junk dimension: distinct flag combos with dense SKs.
-    "gold_junk_dim" -> ((s: SparkSession, d: String) =>
-      Dims.junkDim(t(s, d, "lineitem"),
-        Seq("l_returnflag", "l_linestatus"), "junk_sk")),
-
-    "gold_dedup_grain" -> ((s: SparkSession, d: String) =>
-      Dedup.latestByGrain(t(s, d, "events"),
-        grain = Seq("user_id", "event_type"), order = Seq("ts", "event_id"))),
-
-    // The reference's grain-index validation as a relational audit:
-    // the deduped fact must have ZERO duplicate grain keys (empty
-    // output = pass — the end-to-end proof the dedup holds its
-    // declared grain).
-    "audit_grain_unique" -> ((s: SparkSession, d: String) =>
-      Audit.grainViolations(
-        Dedup.latestByGrain(t(s, d, "events"),
-          grain = Seq("user_id", "event_type"), order = Seq("ts", "event_id")),
-        Seq("user_id", "event_type"))),
-
-    // Does user_id determine event_type? Measured, not assumed — the
-    // denormalization-safety audit (here loudly violated: users mix
-    // event types, which is the finding).
-    "audit_fd_check" -> ((s: SparkSession, d: String) =>
-      Audit.fdCheck(t(s, d, "events"), "user_id", "event_type")),
-
-    "gold_scd2_build" -> scd2User _,
-
-    // SCD TYPE 3 — current + previous attribute value per key with
-    // run-start timestamps (Kimball's alternate-reality column):
-    // lag-change runs, last two collapsed by conditional aggregate.
-    "gold_scd3_current_prev" -> ((s: SparkSession, d: String) =>
-      Scd2.scd3CurrentPrev(
-        t(s, d, "events").filter(col("ts").isNotNull &&
-          col("user_id").isNotNull && col("event_type").isNotNull),
-        "user_id", "ts", "event_id",
-        upper(trim(col("event_type"))))),
-
-    "gold_scd2_incremental" -> scd2UserIncremental _,
-
-    // Snapshot-diff SCD2: the batch is the COMPLETE universe, so
-    // absence is deletion — current versions of vanished keys expire
-    // at asOf−1; present keys take the applyChanges path.
-    "gold_scd2_snapshot" -> scd2UserSnapshot _,
-
-    "gold_asof_join" -> asofEvents _,
-
-    "gold_asof_merge_scan" -> asofEventsMergeScan _,
-
-    // The same resolution through the CUSTOM CATALYST OPERATOR
-    // (graft.plans.MergeAsOf: logical node + planner strategy +
-    // merge SparkPlan registered via SparkSessionExtensions): one
-    // exchange per side, zero pair materialization, zero window
-    // state — must produce identical rows, so it shares the
-    // gold_asof_join oracle.
-    "gold_asof_custom_exec" -> ((s: SparkSession, d: String) => {
-      val dim = scd2User(s, d)
-        .withColumnRenamed("user_id", "bk_user_id")
-        .withColumnRenamed("event_type", "segment")
-        .select("bk_user_id", "segment", "valid_from", "is_current")
-      val fact = t(s, d, "events")
-        .select(col("event_id"), col("user_id"), to_date(col("ts")).as("event_dt"))
-      graft.plans.MergeAsOf.join(fact, dim,
-          Seq("user_id"), Seq("bk_user_id"), "event_dt", "valid_from")
-        .select("event_id", "user_id", "event_dt", "segment", "valid_from",
-          "is_current")
-    }),
-
-    // Nearest-snapshot as-of (merge_asof direction='nearest'): each
-    // event takes the CLOSEST dim version start in either direction,
-    // backward on ties, NULL beyond the 30-day tolerance.
-    "gold_asof_nearest" -> ((s: SparkSession, d: String) => {
-      val dim = scd2User(s, d)
-        .withColumnRenamed("user_id", "bk_user_id")
-        .withColumnRenamed("event_type", "segment")
-        .select("bk_user_id", "segment", "valid_from")
-      val fact = t(s, d, "events")
-        .select(col("event_id"), col("user_id"), to_date(col("ts")).as("event_dt"))
-      AsOfJoin.nearest(fact, dim, "user_id", "bk_user_id", col("event_dt"),
-        "valid_from", toleranceDays = Some(30))
-    }),
-
-    "gold_fct_star" -> fctStar _,
-
-    // Data-Vault link build over the customer↔supplier relationship:
-    // deterministic md5 hub/link hash keys, first-seen + row-count
-    // satellite seed, one partial-agg shuffle on the key pair.
-    "gold_dv_link" -> ((s: SparkSession, d: String) =>
-      Star.dataVaultLink(
-        t(s, d, "lineitem").join(t(s, d, "orders"),
-          col("l_orderkey") === col("o_orderkey")),
-        "o_custkey", "l_suppkey", "o_orderdate")),
-
-    "gold_merge_grain" -> mergeGrain _,
-
-    // Cut-replacement load (cleanup_cut.sql): a stale half-load of the
-    // lake, with the final week's cuts fully rebuilt and swapped in —
-    // untouched cuts keep their stale rows, replaced cuts carry
-    // exactly the incoming batch.
-    "gold_cut_replace" -> ((s: SparkSession, d: String) => {
-      val cleansed = cleanseEvents(s, d)
-      val stale = cleansed.filter(col("event_id") % 2 === 0)
-      val incoming = cleansed.filter(col("date_sk") >= 20240122)
-      Merge.replaceCut(stale, incoming, "date_sk")
-    }),
-
-    // Snapshot CDC: the per-user latest-state snapshot before the
-    // 2024-01-15 cut diffed against the full-range snapshot — INSERT/
-    // UPDATE/DELETE delta rows, one co-keyed full-outer join.
-    "gold_snapshot_diff" -> ((s: SparkSession, d: String) => {
-      def snap(f: DataFrame): DataFrame = {
-        val w = Window.partitionBy(col("user_id"))
-          .orderBy(col("ts").desc, col("event_id").desc)
-        f.filter(col("user_id").isNotNull)
-          .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
-          .select(col("user_id"),
-            upper(trim(col("event_type"))).as("event_type"), col("value"))
-      }
-      val ev = t(s, d, "events")
-      Cdc.snapshotDiff(
-        snap(ev.filter(col("ts") < to_timestamp(lit("2024-01-15 00:00:00")))),
-        snap(ev), keys = Seq("user_id"), attrs = Seq("event_type", "value"))
-    }),
-
-    // Point-in-time SCD2 lookup: the user dimension as of 2024-01-15 —
-    // the covering version per key, a pure filter over the dim.
-    "gold_scd2_pit" -> ((s: SparkSession, d: String) =>
-      Scd2.asOf(scd2User(s, d), lit("2024-01-15").cast("date"))),
-
-    // Late-arriving dim: resolve orders against the subset of customer
-    // that has "arrived" (custkey % 10 != 0 — the rest are late), park
-    // misses on the Kimball unknown member (-1), then repair ONLY the
-    // parked rows once the full dim lands.
-    "gold_late_arriving" -> ((s: SparkSession, d: String) => {
-      val fact = t(s, d, "orders").select(col("o_orderkey"), col("o_custkey"))
-      val early = t(s, d, "customer").filter(col("c_custkey") % 10 =!= 0)
-      val phase1 = Star.resolveOrUnknown(fact, early, "o_custkey", "c_custkey", "cust_sk")
-      Star.repairUnknown(phase1, t(s, d, "customer"), "o_custkey", "c_custkey", "cust_sk")
-    }),
-
-    // Accumulating snapshot: order lifecycle milestones from lineitem
-    // (first/last ship per order, exact qty totals) + lag spans, with
-    // unshipped orders kept via the LEFT join.
-    "fct_accumulating_snapshot" -> ((s: SparkSession, d: String) =>
-      Star.accumulatingSnapshot(
-          t(s, d, "orders").select(col("o_orderkey"),
-            to_date(col("o_orderdate")).as("order_date"), col("o_orderstatus")),
-          t(s, d, "lineitem"), "o_orderkey", "l_orderkey", "l_shipdate", "l_quantity")
-        .withColumn("n_lines", coalesce(col("n_lines"), lit(0L)))
-        .withColumn("days_to_first_ship",
-          datediff(col("first_ship_date"), col("order_date")))
-        .withColumn("ship_span_days",
-          datediff(col("last_ship_date"), col("first_ship_date")))),
-
-    // Bridge allocation: order totalprice spread over its line items
-    // by exact-decimal extendedprice weights.
-    "gold_bridge_alloc" -> ((s: SparkSession, d: String) =>
-      Star.bridgeAllocation(
-          t(s, d, "orders"), t(s, d, "lineitem"),
-          "o_orderkey", "l_orderkey", "o_totalprice", "l_extendedprice")
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_extendedprice"),
-          col("weight"), col("allocated"))),
-
-    // Periodic snapshot: per-customer monthly order activity from the
-    // first active month, quiet months zero-filled with the balance
-    // carried forward.
-    "fct_periodic_snapshot" -> ((s: SparkSession, d: String) =>
-      Star.periodicSnapshot(t(s, d, "orders"),
-        "o_custkey", "o_orderdate", "o_totalprice")),
-
-    // Referential-integrity audit over the star's FK edges.
-    "audit_fk_integrity" -> ((s: SparkSession, d: String) => {
-      val li = t(s, d, "lineitem"); val o = t(s, d, "orders")
-      Audit.fkIntegrityAll(Seq(
-        (li, "l_orderkey", o, "o_orderkey", "lineitem.l_orderkey->orders"),
-        (li, "l_partkey", t(s, d, "part"), "p_partkey", "lineitem.l_partkey->part"),
-        (li, "l_suppkey", t(s, d, "supplier"), "s_suppkey", "lineitem.l_suppkey->supplier"),
-        (o, "o_custkey", t(s, d, "customer"), "c_custkey", "orders.o_custkey->customer")))
-    }),
-
-    // Sequence packing: documents into 2048-token bins across 8
-    // deterministic shards — pure window algebra, layout-stable.
-    "pack_sequences" -> ((s: SparkSession, d: String) =>
-      Packing.packGreedy(
-        t(s, d, "documents")
-          .select(col("doc_id"), size(TextOps.tokens(col("text"))).as("n_tokens")),
-        "doc_id", "n_tokens", budget = 2048, nShards = 8)),
-
-    "svc_overview" -> svcOverview _,
-
-    "svc_demand_by_day_type" -> svcDemandByDayType _,
-
-    "svc_demand_by_mode" -> svcDemandByMode _,
-
-    "svc_top_boardings" -> svcTopBoardings _,
-
-    "svc_map_points" -> svcMapPoints _,
-
-    // 500 m spatial grid density over the map points — per-cell point
-    // counts + exact-decimal boarding sums (serving heat map).
-    "svc_grid_density" -> svcGridDensity _,
-
-    "svc_utm_to_wgs84" -> svcUtmToWgs84 _,
-
-    // Grid-density hotspot clustering (DBSCAN's grid cousin): cells
-    // with >= 2 points merge with 8-neighbors into connected hotspot
-    // regions via the min-label fixpoint — per-region cell/point/
-    // boarding totals + bounding box.
-    "svc_hotspot_clusters" -> ((s: SparkSession, d: String) => {
-      val pts = svcMapPoints(s, d)
-        .withColumn("x_utm_m", lit(200000.0) + col("x_utm") * 750.0)
-        .withColumn("y_utm_m", lit(6200000.0) + col("y_utm") * 1500.0)
-      Serving.hotspotClusters(pts, "x_utm_m", "y_utm_m", cell = 500.0,
-        weightCol = "etapas_estimadas", minPts = 2)
-    }),
-
-    // Grid-bucketed spatial nearest-neighbor join: each event resolves
-    // to its closest modal stop within radius 5 (3x3 cell probe, never
-    // points x sites) — NULL site when uncovered.
-    "geo_nearest_stop" -> geoNearestStop _,
-
-    // ── gold analytics pack (docs/queries/01-05 twins) ──────────────
-    "ana_coverage_quartile" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.coverageQuartile(t(s, d, "orders"), t(s, d, "customer"), t(s, d, "nation"))),
-
-    "ana_wait_percentiles" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.waitPercentiles(servingValid(s, d))),
-
-    "ana_user_segments" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.userSegments(servingValid(s, d))),
-
-    "ana_pct_of_total" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.pctOfTotal(t(s, d, "lineitem"))),
-
-    "ana_demand_pivot_30m" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.demandPivot30m(servingValid(s, d))),
-
-    "ana_daily_delta" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.dailyDelta(servingValid(s, d))),
-
-    // CUSUM mean-shift curve over daily demand; argmax day flagged.
-    "ana_changepoint_cusum" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.changepointCusum(servingValid(s, d))),
-
-    // Binary-segmentation changepoint LOCATION: per candidate split
-    // day the exact two-mean SSE reduction from the prefix-sum
-    // identity, argmax flagged — the estimator next to cusum's
-    // detector.
-    "ana_changepoint_binseg" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.changepointBinseg(servingValid(s, d))),
-
-    // 10-90% trimmed mean of value per event type — the robust KPI
-    // between mean and median; exact rank brackets, boundary kept.
-    "ana_trimmed_mean" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.trimmedMean(t(s, d, "events"),
-        upper(trim(col("event_type"))), "value", pLo = 0.1, pHi = 0.9)),
-
-    // Periodogram over the daily series: squared Fourier magnitude at
-    // candidate periods 2..14 days on the mean-centered panel —
-    // MEASURE the dominant cycle the seasonal ops assume.
-    "ana_periodogram" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.periodogram(servingValid(s, d))),
-
-    // Hurst exponent via rescaled range: per window size the mean R/S
-    // over complete blocks, H from the log-log OLS — random walk at
-    // 0.5, persistence above, mean reversion below.
-    "ana_hurst" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.hurstExponent(servingValid(s, d),
-        windows = Seq(4, 8, 16, 32))),
-
-    // DP mean release: values clamped to [0,100], budget split over
-    // the clamped sum and the count, both noised by the deterministic
-    // md5 Laplace draw (salted per statistic) — the value sibling of
-    // privacy_dp_release.
-    "privacy_dp_mean" -> ((s: SparkSession, d: String) =>
-      Audit.dpNoisyMean(
-        t(s, d, "events")
-          .filter(col("ts").isNotNull && col("value").isNotNull)
-          .select(floor(hour(col("ts")) / 6).cast("long").as("hour_band"),
-            Temporal.isoDow(col("ts")).cast("long").as("iso_dow"),
-            col("value")),
-        Seq("hour_band", "iso_dow"), "value",
-        lo = 0.0, hi = 100.0, epsilon = 1.0)),
-
-    // Entropy rate of the user-journey Markov chain (π weighted by
-    // out-transition mass, so the sum is n_ij/N over the transition
-    // panel) + perplexity — the predictability scalar over
-    // ana_transition_matrix.
-    "ana_markov_entropy" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.markovEntropyRate(t(s, d, "events"))),
-
-    // Per-type OLS daily trend (slope + intercept from exact moments).
-    "ana_trend_slope" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.trendSlope(servingValid(s, d))),
-
-    // Holt level+trend smoother (dyadic coefficients, panel fold) —
-    // the trend-tracking twin of ana_ewma_demand.
-    "ana_holt_linear" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.holtDemand(servingValid(s, d))),
-
-    // Holt–Winters additive triple smoothing (m=7): the seasonal
-    // state absorbs the weekly dip Holt keeps re-reading as a trend
-    // change. One panel fold, dyadic coefficients, the seasonal lag
-    // read from the fold's own history.
-    "ana_holt_winters" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.holtWinters(servingValid(s, d))),
-
-    // One-step model evaluation: Holt and Holt-Winters forecasts
-    // scored against the next observed day — the model side of the
-    // baseline backtest ("does the model beat lag-7").
-    "ana_forecast_eval_models" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.forecastEvalModels(servingValid(s, d))),
-
-    // Seasonality-aware one-step forecast: the Holt level+trend
-    // forecast plus the F27 seasonal index of the NEXT day's weekday
-    // — a pure composition of two green operators, so the oracle is
-    // the composition of their oracles.
-    "ana_seasonal_forecast" -> ((s: SparkSession, d: String) => {
-      import graft.functions.Temporal
-      val holt = AnalyticsPack.holtDemand(servingValid(s, d))
-        .withColumn("day", to_date(col("date_sk").cast("string"), "yyyyMMdd"))
-        .withColumn("next_day", date_add(col("day"), 1))
-        .withColumn("next_iso_dow", Temporal.isoDow(col("next_day")))
-      val seasonal = AnalyticsPack.seasonalDecompose(t(s, d, "events"))
-        .select(col("iso_dow").as("next_iso_dow"), col("seasonal"))
-        .distinct()
-      holt.join(broadcast(seasonal), Seq("next_iso_dow"), "left")
-        .select(col("date_sk"), col("daily_value"), col("level"), col("trend"),
-          col("next_day"),
-          (col("level") + col("trend")).as("trend_forecast"),
-          when(col("seasonal").isNotNull,
-            col("level") + col("trend") + col("seasonal"))
-            .as("seasonal_forecast"))
-    }),
-
-    // Gini concentration of per-stop demand by day type (rank identity
-    // over the collapsed stop panel; one terminal IEEE division).
-    "ana_gini_demand" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.giniDemand(servingValid(s, d))),
-
-    // Median-of-pairwise-slopes robust trend (Theil–Sen) per type —
-    // the outlier-immune twin of ana_trend_slope.
-    "ana_theil_sen" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.theilSen(servingValid(s, d))),
-
-    // Per-stop robust trends (the F32 panel at stop grain): pair
-    // fan-out stays days² per stop, windows partition per stop.
-    "ana_theil_sen_stop" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.theilSenBy(
-        servingValid(s, d).filter(col("user_id").isNotNull), "user_id")),
-
-    // EWMA level smoother over the daily demand series (α = 0.25,
-    // dyadic-exact; the fold runs once over the collected day panel).
-    "ana_ewma_demand" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.ewmaDemand(servingValid(s, d))),
-
-    "ana_od_matrix" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.odMatrix(t(s, d, "lineitem"), t(s, d, "orders"),
-        t(s, d, "customer"), t(s, d, "supplier"), t(s, d, "nation"))),
-
-    // Weighted PageRank over the origin→destination flow graph (the
-    // F7 edges without the top-N cut): which zones are structurally
-    // central to the network, not merely busy. Fixed 10-round power
-    // iteration, decimal contribution partials — see Graph.pageRank.
-    "graph_pagerank" -> ((s: SparkSession, d: String) => {
-      val nation = t(s, d, "nation")
-      val flows = t(s, d, "lineitem")
-        .join(t(s, d, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, d, "supplier"), col("l_suppkey") === col("s_suppkey"))
-        .join(t(s, d, "customer"), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(nation.select(col("n_nationkey").as("__ok"),
-          col("n_name").as("src"))), col("s_nationkey") === col("__ok"))
-        .join(broadcast(nation.select(col("n_nationkey").as("__dk"),
-          col("n_name").as("dst"))), col("c_nationkey") === col("__dk"))
-        .filter(col("src") =!= col("dst"))
-        .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
-      Graph.pageRank(flows, "src", "dst", "w", iterations = 10, damping = 0.85)
-    }),
-
-    // Brandes betweenness centrality over the directed nation-flow
-    // graph: exact all-sources BFS DAG + backward dependency
-    // accumulation — the broker/bottleneck score next to pagerank's
-    // flow centrality.
-    "graph_betweenness" -> ((s: SparkSession, d: String) => {
-      val nation = t(s, d, "nation")
-      val flows = t(s, d, "lineitem")
-        .join(t(s, d, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, d, "supplier"), col("l_suppkey") === col("s_suppkey"))
-        .join(t(s, d, "customer"), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(nation.select(col("n_nationkey").as("__ok"),
-          col("n_name").as("src"))), col("s_nationkey") === col("__ok"))
-        .join(broadcast(nation.select(col("n_nationkey").as("__dk"),
-          col("n_name").as("dst"))), col("c_nationkey") === col("__dk"))
-        .filter(col("src") =!= col("dst"))
-        .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
-      Graph.betweenness(flows, "src", "dst")
-    }),
-
-    // Eccentricity / diameter / radius off the same BFS DAG: the
-    // distance EXTREMES where closeness reports the average — how far
-    // is each nation's worst reachable destination, and the graph's
-    // longest shortest path.
-    "graph_eccentricity" -> ((s: SparkSession, d: String) => {
-      val nation = t(s, d, "nation")
-      val flows = t(s, d, "lineitem")
-        .join(t(s, d, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, d, "supplier"), col("l_suppkey") === col("s_suppkey"))
-        .join(t(s, d, "customer"), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(nation.select(col("n_nationkey").as("__ok"),
-          col("n_name").as("src"))), col("s_nationkey") === col("__ok"))
-        .join(broadcast(nation.select(col("n_nationkey").as("__dk"),
-          col("n_name").as("dst"))), col("c_nationkey") === col("__dk"))
-        .filter(col("src") =!= col("dst"))
-        .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
-      Graph.eccentricity(flows, "src", "dst")
-    }),
-
-    // Closeness + harmonic centrality from the SAME all-sources BFS
-    // DAG: how near each nation is to everything it can reach
-    // (Wasserman-Faust disconnected-safe closeness, robust harmonic).
-    "graph_closeness" -> ((s: SparkSession, d: String) => {
-      val nation = t(s, d, "nation")
-      val flows = t(s, d, "lineitem")
-        .join(t(s, d, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, d, "supplier"), col("l_suppkey") === col("s_suppkey"))
-        .join(t(s, d, "customer"), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(nation.select(col("n_nationkey").as("__ok"),
-          col("n_name").as("src"))), col("s_nationkey") === col("__ok"))
-        .join(broadcast(nation.select(col("n_nationkey").as("__dk"),
-          col("n_name").as("dst"))), col("c_nationkey") === col("__dk"))
-        .filter(col("src") =!= col("dst"))
-        .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
-      Graph.closeness(flows, "src", "dst")
-    }),
-
-    // HITS hubs/authorities over the same flow graph - the directed
-    // role separation pageRank's single score cannot give (a pure
-    // exporter nation is a hub, a pure importer an authority).
-    "graph_hits" -> ((s: SparkSession, d: String) => {
-      val nation = t(s, d, "nation")
-      val flows = t(s, d, "lineitem")
-        .join(t(s, d, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, d, "supplier"), col("l_suppkey") === col("s_suppkey"))
-        .join(t(s, d, "customer"), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(nation.select(col("n_nationkey").as("__ok"),
-          col("n_name").as("src"))), col("s_nationkey") === col("__ok"))
-        .join(broadcast(nation.select(col("n_nationkey").as("__dk"),
-          col("n_name").as("dst"))), col("c_nationkey") === col("__dk"))
-        .filter(col("src") =!= col("dst"))
-        .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
-      Graph.hits(flows, "src", "dst", "w", iterations = 10)
-    }),
-
-    // Synchronous weighted label propagation over the same flow
-    // graph: which zones cluster into trade communities. Five fixed
-    // rounds, min-label ties, every round one edge join + node-sized
-    // argmax panels — see Graph.labelPropagation.
-    // Directed-edge reciprocity of the trade-flow graph: share of
-    // distinct flows whose reverse flow also exists (1-row panel).
-    // Out-degree distribution of the customer→supplier purchase graph
-    // (row-scale nodes, panel-sized histogram) + the log-log power-law
-    // slope — the hub-tail read before salting any iterative graph op.
-    "graph_degree_dist" -> ((s: SparkSession, d: String) => {
-      val edges = t(s, d, "lineitem")
-        .join(t(s, d, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("src"), col("l_suppkey").as("dst"))
-      Graph.degreeDistribution(edges, "src", "dst")
-    }),
-
-    "graph_reciprocity" -> ((s: SparkSession, d: String) => {
-      val nation = t(s, d, "nation")
-      val flows = t(s, d, "lineitem")
-        .join(t(s, d, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, d, "supplier"), col("l_suppkey") === col("s_suppkey"))
-        .join(t(s, d, "customer"), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(nation.select(col("n_nationkey").as("__ok"),
-          col("n_name").as("src"))), col("s_nationkey") === col("__ok"))
-        .join(broadcast(nation.select(col("n_nationkey").as("__dk"),
-          col("n_name").as("dst"))), col("c_nationkey") === col("__dk"))
-      Graph.reciprocity(flows, "src", "dst")
-    }),
-
-    // Directed BFS hop distance from NATION_3 over the trade-flow
-    // graph — the reachability panel next to pagerank's centrality:
-    // frontier relaxation with one edge pass + scalar delta per round.
-    "graph_bfs_hops" -> ((s: SparkSession, d: String) => {
-      val nation = t(s, d, "nation")
-      val flows = t(s, d, "lineitem")
-        .join(t(s, d, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, d, "supplier"), col("l_suppkey") === col("s_suppkey"))
-        .join(t(s, d, "customer"), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(nation.select(col("n_nationkey").as("__ok"),
-          col("n_name").as("src"))), col("s_nationkey") === col("__ok"))
-        .join(broadcast(nation.select(col("n_nationkey").as("__dk"),
-          col("n_name").as("dst"))), col("c_nationkey") === col("__dk"))
-        .filter(col("src") =!= col("dst"))
-        .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
-      Graph.bfsHops(flows, "src", "dst", source = "NATION_3")
-    }),
-
-    "graph_label_propagation" -> ((s: SparkSession, d: String) => {
-      val nation = t(s, d, "nation")
-      val flows = t(s, d, "lineitem")
-        .join(t(s, d, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, d, "supplier"), col("l_suppkey") === col("s_suppkey"))
-        .join(t(s, d, "customer"), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(nation.select(col("n_nationkey").as("__ok"),
-          col("n_name").as("src"))), col("s_nationkey") === col("__ok"))
-        .join(broadcast(nation.select(col("n_nationkey").as("__dk"),
-          col("n_name").as("dst"))), col("c_nationkey") === col("__dk"))
-        .filter(col("src") =!= col("dst"))
-        .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
-      Graph.labelPropagation(flows, "src", "dst", "w", rounds = 5)
-    }),
-
-    // Newman modularity of those communities: per community
-    // Q_c = W_c/W - (S_c/2W)^2 over the undirected weighted edges —
-    // the partition-quality score next to the partition itself.
-    "graph_modularity" -> ((s: SparkSession, d: String) => {
-      val nation = t(s, d, "nation")
-      val flows = t(s, d, "lineitem")
-        .join(t(s, d, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, d, "supplier"), col("l_suppkey") === col("s_suppkey"))
-        .join(t(s, d, "customer"), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(nation.select(col("n_nationkey").as("__ok"),
-          col("n_name").as("src"))), col("s_nationkey") === col("__ok"))
-        .join(broadcast(nation.select(col("n_nationkey").as("__dk"),
-          col("n_name").as("dst"))), col("c_nationkey") === col("__dk"))
-        .filter(col("src") =!= col("dst"))
-        .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
-      Graph.modularity(flows, "src", "dst", "w", rounds = 5)
-    }),
-
-    // k-core membership over the item co-purchase graph (edges =
-    // capped user-level co-occurrence with support >= 4): six fixed
-    // peel rounds, exact integer degrees — the degeneracy filter
-    // separating the dense co-purchase core from the long tail.
-    "graph_k_core" -> ((s: SparkSession, d: String) => {
-      // checkpointed: both sides of the pair self-join reuse it
-      val inter = graft.operators.Ckpt.partitioned(Recsys.interactions(
-        t(s, d, "lineitem").join(t(s, d, "orders"),
-          col("l_orderkey") === col("o_orderkey")),
-        "o_custkey", "l_partkey", userCap = 1000))
-      val edges = Recsys.coOccurrenceCounts(inter)
-        .select(col("item_a").as("ia"), col("item_b").as("ib"),
-          col("n_both").as("nb"))
-        .filter(col("nb") >= 4)
-      Graph.kCore(edges, "ia", "ib", k = 3, rounds = 6)
-    }),
-
-    // Minimum spanning forest (Borůvka rounds) over the nation-flow
-    // graph weighted by total flow value — the cheapest backbone
-    // connecting every zone. ORACLE-CHECKED since r13: the forest is
-    // unique under the (w,u,v) total edge order, so the oracle
-    // replays it as recursive Kruskal (no Borůvka mirror needed);
-    // also spec-pinned against a driver-side Kruskal on seeded
-    // random graphs.
-    "graph_mst" -> ((s: SparkSession, d: String) => {
-      val flows = t(s, d, "lineitem")
-        .join(t(s, d, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, d, "supplier"), col("l_suppkey") === col("s_suppkey"))
-        .join(t(s, d, "customer"), col("o_custkey") === col("c_custkey"))
-        .filter(col("s_nationkey") =!= col("c_nationkey"))
-        .groupBy(col("s_nationkey").as("src"), col("c_nationkey").as("dst"))
-        .agg(round(sum(money(col("l_extendedprice"))), 2)
-          .cast("double").as("w"))
-      Graph.minSpanningForest(flows, "src", "dst", "w")
-    }),
-
-    // Connected components over the STRONG half of the trade-flow
-    // graph (bilateral flow ≥ the median edge weight — a scale-free
-    // threshold that fragments the graph at any SF): per component,
-    // size and the node-id span. Labels come from the min-label
-    // fixpoint (TextDedup.connectedComponents); the oracle replays it
-    // as a recursive reachability CTE.
-    "graph_components" -> ((s: SparkSession, d: String) => {
-      val flows = t(s, d, "lineitem")
-        .join(t(s, d, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, d, "supplier"), col("l_suppkey") === col("s_suppkey"))
-        .join(t(s, d, "customer"), col("o_custkey") === col("c_custkey"))
-        .filter(col("s_nationkey") =!= col("c_nationkey"))
-        .groupBy(col("s_nationkey").as("src"), col("c_nationkey").as("dst"))
-        .agg(sum(money(col("l_extendedprice"))).as("__wdec"))
-      val edges = flows
-        .groupBy(least(col("src"), col("dst")).as("u"),
-          greatest(col("src"), col("dst")).as("v"))
-        .agg(sum(col("__wdec")).cast("double").as("w"))
-      val med = edges.agg(percentile(col("w"), lit(0.5)).as("m"))
-      val strong = edges.crossJoin(broadcast(med))
-        .filter(col("w") >= col("m"))
-        .select(col("u"), col("v"))
-      TextDedup.connectedComponents(strong, "u", "v")
-        .groupBy(col("cluster_id").as("component_id"))
-        .agg(count(lit(1)).as("n_nodes"),
-          min(col("doc_id")).as("node_min"),
-          max(col("doc_id")).as("node_max"))
-    }),
-
-    // Triangle enumeration over the same nation-flow graph (edges
-    // canonicalized undirected): closed 3-cliques = the tightly
-    // coupled trade triads. Two co-keyed joins, orientation-bounded
-    // fan-out, each triangle emitted exactly once — see
-    // Graph.triangles.
-    "graph_triangles" -> ((s: SparkSession, d: String) => {
-      val nation = t(s, d, "nation")
-      val flows = t(s, d, "lineitem")
-        .join(t(s, d, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, d, "supplier"), col("l_suppkey") === col("s_suppkey"))
-        .join(t(s, d, "customer"), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(nation.select(col("n_nationkey").as("__ok"),
-          col("n_name").as("src"))), col("s_nationkey") === col("__ok"))
-        .join(broadcast(nation.select(col("n_nationkey").as("__dk"),
-          col("n_name").as("dst"))), col("c_nationkey") === col("__dk"))
-        .filter(col("src") =!= col("dst"))
-      Graph.triangles(flows, "src", "dst")
-    }),
-
-    // Degree assortativity of the flow graph: Pearson r of endpoint
-    // degrees over both edge orientations — hub-to-hub vs
-    // hub-and-spoke mixing in one scalar; exact integer moments.
-    "graph_assortativity" -> ((s: SparkSession, d: String) => {
-      val nation = t(s, d, "nation")
-      val flows = t(s, d, "lineitem")
-        .join(t(s, d, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, d, "supplier"), col("l_suppkey") === col("s_suppkey"))
-        .join(t(s, d, "customer"), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(nation.select(col("n_nationkey").as("__ok"),
-          col("n_name").as("src"))), col("s_nationkey") === col("__ok"))
-        .join(broadcast(nation.select(col("n_nationkey").as("__dk"),
-          col("n_name").as("dst"))), col("c_nationkey") === col("__dk"))
-        .filter(col("src") =!= col("dst"))
-      Graph.assortativity(flows, "src", "dst")
-    }),
-
-    // Local clustering coefficient per zone over the same flow graph:
-    // degree + incident-triangle panels, one terminal division.
-    "graph_clustering_coeff" -> ((s: SparkSession, d: String) => {
-      val nation = t(s, d, "nation")
-      val flows = t(s, d, "lineitem")
-        .join(t(s, d, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, d, "supplier"), col("l_suppkey") === col("s_suppkey"))
-        .join(t(s, d, "customer"), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(nation.select(col("n_nationkey").as("__ok"),
-          col("n_name").as("src"))), col("s_nationkey") === col("__ok"))
-        .join(broadcast(nation.select(col("n_nationkey").as("__dk"),
-          col("n_name").as("dst"))), col("c_nationkey") === col("__dk"))
-        .filter(col("src") =!= col("dst"))
-      Graph.clusteringCoeff(flows, "src", "dst")
-    }),
-
-    // Link prediction over the TOP-DECILE flow graph: the full
-    // nation graph is complete (every pair trades a little), which
-    // makes link prediction vacuous — keeping only edges at/above
-    // the exact p90 flow count leaves the heavy-trade backbone
-    // (~60 of 276 possible edges), where "which strong edges should
-    // exist next" is a real question. Threshold = one broadcast
-    // 1-row exact percentile (the winsorize parity); then wedge join
-    // + one pair partial agg + left-anti on the edge list; AA's ln
-    // is safe by construction (shared neighbors have degree >= 2)
-    // and grid-quantized before its decimal partial.
-    "graph_link_prediction" -> ((s: SparkSession, d: String) => {
-      val nation = t(s, d, "nation")
-      val flows = t(s, d, "lineitem")
-        .join(t(s, d, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, d, "supplier"), col("l_suppkey") === col("s_suppkey"))
-        .join(t(s, d, "customer"), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(nation.select(col("n_nationkey").as("__ok"),
-          col("n_name").as("src"))), col("s_nationkey") === col("__ok"))
-        .join(broadcast(nation.select(col("n_nationkey").as("__dk"),
-          col("n_name").as("dst"))), col("c_nationkey") === col("__dk"))
-        .filter(col("src") =!= col("dst"))
-        .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
-      val thr = flows.agg(expr("percentile(w, 0.9)").as("__thr"))
-      val sparse = flows.crossJoin(broadcast(thr))
-        .filter(col("w") >= col("__thr"))
-      Graph.linkPrediction(sparse, "src", "dst")
-    }),
-
-    // Top 3-step event-type paths per user stream (sequence mining;
-    // integer-exact, total-ordered top-N).
-    "ana_top_paths" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.topPaths(t(s, d, "events"))),
-
-    // Churn survival curve: per-day hazard + cumulative log-survival
-    // over the per-user last-active-day panel (KM discipline, log
-    // space, no exp).
-    "ana_survival_curve" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.survivalCurve(t(s, d, "events"))),
-
-    // Brand-level market-basket rules over order baskets: support /
-    // confidence / lift, exact counts, one division per metric.
-    "ana_market_basket" -> ((s: SparkSession, d: String) => {
-      val baskets = t(s, d, "lineitem")
-        .join(broadcast(t(s, d, "part").select(col("p_partkey"), col("p_brand"))),
-          col("l_partkey") === col("p_partkey"))
-        .select(col("l_orderkey"), col("p_brand"))
-      AnalyticsPack.marketBasket(baskets, "l_orderkey", "p_brand")
-    }),
-
-    // Point-in-interval RANGE JOIN via bucketized equi-join (the
-    // technique Catalyst lacks a native strategy for — a raw theta
-    // join plans BNLJ): open-order density per order date against
-    // each order's [orderdate, last shipment] fulfillment interval.
-    "join_range_interval" -> ((s: SparkSession, d: String) => {
-      val epoch = lit("1970-01-01").cast("date")
-      val orders = t(s, d, "orders")
-        .select(col("o_orderkey"), to_date(col("o_orderdate")).as("lo_d"))
-      val shipEnd = t(s, d, "lineitem")
-        .groupBy(col("l_orderkey"))
-        .agg(max(to_date(col("l_shipdate"))).as("hi_d"))
-      val iv = orders
-        .join(shipEnd, col("o_orderkey") === col("l_orderkey"))
-        .select(datediff(col("lo_d"), epoch).cast("long").as("lo"),
-          datediff(col("hi_d"), epoch).cast("long").as("hi"))
-      val pts = orders.select(col("lo_d").as("d")).distinct()
-        .withColumn("p", datediff(col("d"), epoch).cast("long"))
-      RangeJoin.pointInInterval(pts, "p", iv, "lo", "hi", bucketWidth = 64)
-        .groupBy(col("d")).agg(count(lit(1)).as("n_open_orders"))
-    }),
-
-    "ana_pct_of_peak" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.pctOfPeak(servingValid(s, d))),
-
-    "ana_deviation_buckets" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.deviationBuckets(t(s, d, "lineitem"))),
-
-    "ana_user_mode_combos" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.userModeCombos(servingValid(s, d))),
-
-    "ana_coverage_audit" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.coverageAudit(servingValid(s, d))),
-
-    // Revenue-coverage gap over the comparable universe — the
-    // reference's headline PowerBI KPI family (docs/powerbi/
-    // DAX_ENTERPRISE_MEDIDAS.md §5-8): day-type-weighted scaled
-    // boardings (profile sub-window 0105-0114 scaled by calendar day
-    // counts) vs observed validations over the serving window, with
-    // the signed gap split, §7 comparability state machine and §8
-    // opportunity measures. CLICK/PURCHASE stand in for the BUS/METRO
-    // comparable-mode pair (2 of the 3 serving modes).
-    "ana_revenue_coverage_gap" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.revenueCoverageGap(servingValid(s, d),
-        baseFrom = 20240105, baseTo = 20240114,
-        winFrom = 20240105, winTo = 20240128,
-        comparableModes = Seq("CLICK", "PURCHASE"))),
-
-    // Cohort retention: first-seen cohorts × day offsets, distinct
-    // retained users, share of the day-0 cohort.
-    "ana_retention_cohort" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.retentionCohort(t(s, d, "events"))),
-
-    // Cumulative cohort value (the LTV curve): what retention's
-    // headcount view is worth in money, per cohort age.
-    "ana_cohort_ltv" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.cohortLtv(t(s, d, "events"))),
-
-    // Ordered VIEW→CLICK→PURCHASE funnel (running-min windows per
-    // user, one shuffle), panel of counts + conversion rates.
-    "ana_funnel_steps" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.funnelSteps(t(s, d, "events"))),
-
-    // Funnel latency: exact p25/50/75/90 of first-CLICK -> first-
-    // PURCHASE-after ms latency over converted users (rank-bracket
-    // quantiles; ms latencies are near-unique) plus conversion rate.
-    "ana_time_to_convert" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.timeToConvert(t(s, d, "events"))),
-
-    // Time-bounded funnel: each step counts only within 48h of the
-    // previous step's first completion — conversion, not retention.
-    // Same one-sort window ladder as the unbounded funnel, ms-exact
-    // deadlines.
-    "ana_funnel_windowed" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.funnelWindowed(t(s, d, "events"), windowSec = 48 * 3600)),
-
-    // Multi-model attribution: first/last/linear credit per purchase
-    // across its 72h click window, reported per (model, click day) —
-    // the credit-assignment semantics over E9's pair join.
-    "ana_attribution_models" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.attributionModels(t(s, d, "events"), windowSec = 72 * 3600)),
-
-    // 7-day rolling demand over the per-day aggregate series.
-    "ana_rolling_demand" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.rollingDemand(t(s, d, "events"))),
-
-    // Rolling 7-day distinct active users (WAU curve): sequence-
-    // expanded user-days, never a range join or a window distinct.
-    "ana_rolling_active_users" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.rollingActiveUsers(t(s, d, "events"))),
-
-    // DAU/WAU/MAU + stickiness (DAU/MAU) per day via the bounded
-    // 28-day window expansion — the product-health ratio panel.
-    "ana_stickiness" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.stickinessPanel(t(s, d, "events"))),
-
-    // K-anonymity / l-diversity audit over binned quasi-identifiers
-    // (6h band x iso-dow x value decile) with event_type as the
-    // sensitive attribute — the release gate next to GDPR erasure.
-    "privacy_k_anon_audit" -> ((s: SparkSession, d: String) =>
-      Audit.kAnonymity(
-        t(s, d, "events")
-          .filter(col("ts").isNotNull && col("value").isNotNull)
-          .select(col("event_type"),
-            floor(hour(col("ts")) / 6).cast("long").as("hour_band"),
-            Temporal.isoDow(col("ts")).cast("long").as("iso_dow"),
-            least(lit(9L), floor(col("value") / 10).cast("long")).as("val_decile")),
-        Seq("hour_band", "iso_dow", "val_decile"),
-        "event_type", k = 5, l = 2)),
-
-    // Entropy l-diversity over the same binned quasi-identifiers: the
-    // information tier between the distinct-l count and t-closeness —
-    // a combo must carry >= ln(l) nats of sensitive entropy, so a
-    // 99%-one-value combo fails where distinct-l passes.
-    "privacy_l_diversity" -> ((s: SparkSession, d: String) =>
-      Audit.lDiversityEntropy(
-        t(s, d, "events")
-          .filter(col("ts").isNotNull && col("value").isNotNull)
-          .select(col("event_type"),
-            floor(hour(col("ts")) / 6).cast("long").as("hour_band"),
-            Temporal.isoDow(col("ts")).cast("long").as("iso_dow"),
-            least(lit(9L), floor(col("value") / 10).cast("long")).as("val_decile")),
-        Seq("hour_band", "iso_dow", "val_decile"),
-        "event_type", l = 3)),
-
-    // t-closeness audit over the same binned quasi-identifiers: the
-    // distribution tier above the k/l count verdicts — per combo the
-    // variational distance between its sensitive mix and the global
-    // mix, released only when <= t.
-    "privacy_t_closeness" -> ((s: SparkSession, d: String) =>
-      Audit.tCloseness(
-        t(s, d, "events")
-          .filter(col("ts").isNotNull && col("value").isNotNull)
-          .select(col("event_type"),
-            floor(hour(col("ts")) / 6).cast("long").as("hour_band"),
-            Temporal.isoDow(col("ts")).cast("long").as("iso_dow"),
-            least(lit(9L), floor(col("value") / 10).cast("long")).as("val_decile")),
-        Seq("hour_band", "iso_dow", "val_decile"),
-        "event_type", t = 0.2)),
-
-    // The ACTING twin of the audit: the released view keeps only rows
-    // whose quasi-identifier combo passes both verdicts (suppression,
-    // the quality_valid/quarantine pattern applied to privacy).
-    "privacy_suppress_release" -> ((s: SparkSession, d: String) => {
-      val binned = t(s, d, "events")
-        .filter(col("ts").isNotNull && col("value").isNotNull)
-        .select(col("event_id"), col("event_type"), col("value"),
-          floor(hour(col("ts")) / 6).cast("long").as("hour_band"),
-          Temporal.isoDow(col("ts")).cast("long").as("iso_dow"),
-          least(lit(9L), floor(col("value") / 10).cast("long")).as("val_decile"))
-      val quasi = Seq("hour_band", "iso_dow", "val_decile")
-      val safe = Audit.kAnonymity(binned, quasi, "event_type", k = 5, l = 2)
-        .filter(col("k_anonymous") && col("l_diverse"))
-        .select(quasi.map(col): _*)
-      binned.join(safe.hint("shuffle_hash"), quasi, "left_semi")
-    }),
-
-    // Generalization-ladder release over the same quasi identifiers:
-    // coarsen (hour band / weekend flag / value band, then full
-    // redaction) until every class reaches k=5 — the third mechanism
-    // next to suppression and noise; gen_level records the cost.
-    "privacy_generalize_release" -> ((s: SparkSession, d: String) => {
-      val base = t(s, d, "events")
-        .filter(col("ts").isNotNull && col("value").isNotNull)
-      val ladder = Seq(
-        Seq(floor(hour(col("ts")) / 6).cast("long").cast("string"),
-          Temporal.isoDow(col("ts")).cast("long").cast("string"),
-          least(lit(9L), floor(col("value") / 10).cast("long")).cast("string")),
-        Seq(floor(hour(col("ts")) / 6).cast("long").cast("string"),
-          when(Temporal.isoDow(col("ts")) >= 6, "WE").otherwise("WD"),
-          least(lit(4L), floor(col("value") / 20).cast("long")).cast("string")),
-        Seq(lit("*"), lit("*"), lit("*")))
-      Audit.generalizeRelease(base, ladder,
-        Seq("hour_band", "iso_dow", "val_decile"), k = 5)
-    }),
-
-    // Deterministic Laplace DP release over the same quasi-identifier
-    // combos: epsilon=0.5 (b=2.0), noise a pure function of the group
-    // key through the md5 uniform — reproducible across runs so the
-    // privacy budget is spent once, not per re-run.
-    "privacy_dp_release" -> ((s: SparkSession, d: String) =>
-      Audit.dpNoisyCounts(
-        t(s, d, "events")
-          .filter(col("ts").isNotNull && col("value").isNotNull)
-          .select(floor(hour(col("ts")) / 6).cast("long").as("hour_band"),
-            Temporal.isoDow(col("ts")).cast("long").as("iso_dow"),
-            least(lit(9L), floor(col("value") / 10).cast("long")).as("val_decile")),
-        Seq("hour_band", "iso_dow", "val_decile"), epsilon = 0.5)),
-
-    // A/B readout over the deterministic md5 50/50 user assignment:
-    // one aggregation pass, two-proportion z statistic. Conversion =
-    // a high-value purchase (the plain PURCHASE flag saturates every
-    // user at this synthetic density).
-    "ana_abtest_readout" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.abtestReadout(
-        Sampling.splitAssign(
-          t(s, d, "events").filter(col("user_id").isNotNull),
-          Seq("A" -> 0.5, "B" -> 0.5), Seq("user_id")),
-        "split", "A", "B",
-        upper(trim(col("event_type"))) === "PURCHASE" && col("value") > 95)),
-
-    // FDR-controlled segment drill-down of the same experiment: the
-    // two-proportion z per ISO weekday, gridded A&S normal p, and
-    // the Benjamini-Hochberg step-up verdict at q=0.05.
-    "ana_benjamini_hochberg" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.benjaminiHochberg(
-        Sampling.splitAssign(
-          t(s, d, "events")
-            .filter(col("user_id").isNotNull && col("ts").isNotNull)
-            .withColumn("iso_dow", Temporal.isoDow(col("ts"))),
-          Seq("A" -> 0.5, "B" -> 0.5), Seq("user_id")),
-        "iso_dow", "split", "A", "B",
-        upper(trim(col("event_type"))) === "PURCHASE" && col("value") > 95)),
-
-    // Wilson 95% intervals per arm over the same split/conversion —
-    // what each arm's rate plausibly IS (the abtest z says whether
-    // they differ); honest at small n where Wald collapses.
-    "ana_rate_wilson" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.rateWilson(
-        Sampling.splitAssign(
-          t(s, d, "events").filter(col("user_id").isNotNull),
-          Seq("A" -> 0.5, "B" -> 0.5), Seq("user_id")),
-        "split",
-        upper(trim(col("event_type"))) === "PURCHASE" && col("value") > 95)),
-
-    // Exact ANALYZE-style quantile profile of the fact's numeric
-    // columns: p25/50/75/90/99 per column, one scan, flat panel.
-    "table_quantiles" -> ((s: SparkSession, d: String) =>
-      Profiling.quantileProfile(t(s, d, "lineitem"),
-        Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"))),
-
-    // Quantile-sketch accuracy panel: percentile_approx vs the exact
-    // rank brackets plus the EMPIRICAL rank error of each sketch
-    // answer — the evidence that licenses the single-pass sketch at
-    // 100 TB. Sketch internals → rows-only by the §5.1 sketch rule.
-    "sketch_quantile_error" -> ((s: SparkSession, d: String) =>
-      Profiling.quantileSketchError(t(s, d, "events"), "value",
-        ps = Seq(0.25, 0.5, 0.75, 0.9, 0.99), accuracy = 100)),
-
-    // HLL cardinality accuracy panel: exact distinct vs the HLL
-    // estimate per column, checked against the published 3σ envelope
-    // — the evidence behind sketch_profile's one-pass distincts.
-    // Sketch state → rows-only by the §5.1 sketch rule.
-    "sketch_hll_error" -> ((s: SparkSession, d: String) =>
-      Profiling.hllErrorPanel(t(s, d, "events"),
-        Seq("event_type", "user_id", "props"), lgK = 12)),
-
-    // Distribution-fit panel: normal / exponential / lognormal fitted
-    // by moments, scored by the two-sided KS staircase distance at
-    // every distinct value — which textbook family does `value`
-    // actually follow, before anyone simulates or extrapolates tails.
-    "ana_dist_fit" -> ((s: SparkSession, d: String) =>
-      Drift.distributionFit(t(s, d, "events"), "value")),
-
-    // KS separation of the value score between PURCHASE and the rest:
-    // the max CDF gap AND the score it occurs at (the natural
-    // threshold) — the credit-scoring discrimination statistic next
-    // to ROC AUC, on the two-sample KS machinery.
-    "ml_ks_separation" -> ((s: SparkSession, d: String) =>
-      MlLite.ksSeparation(t(s, d, "events"), "value",
-        upper(trim(col("event_type"))) === "PURCHASE")),
-
-    // FD discovery over the order columns: every ordered pair's
-    // violation count/share — o_orderkey→* holds (it is the key),
-    // the reverse directions quantify how far they are from FDs.
-    "audit_fd_discovery" -> ((s: SparkSession, d: String) =>
-      Audit.fdDiscovery(t(s, d, "orders"),
-        Seq("o_orderkey", "o_custkey", "o_orderstatus"))),
-
-    // Tukey-fence outlier audit over the same columns: exact
-    // rank-bracket quartiles, 1.5x-IQR fences, per-column tail counts.
-    "table_outlier_iqr" -> ((s: SparkSession, d: String) =>
-      Profiling.outlierFences(t(s, d, "lineitem"),
-        Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"))),
-
-    // Always-valid sequential readout (mSPRT): per-day cumulative
-    // enrollment/conversion panel with the mixture log LR and the
-    // monotone always-valid log p — peeking-safe, prefix-sum/-max
-    // machinery end to end.
-    "ana_msprt" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.msprtSequential(
-        Sampling.splitAssign(
-          t(s, d, "events").filter(col("user_id").isNotNull),
-          Seq("A" -> 0.5, "B" -> 0.5), Seq("user_id")),
-        "split", "A",
-        upper(trim(col("event_type"))) === "PURCHASE" && col("value") > 95)),
-
-    // Inter-arrival gap panel per type (the evidence a sessionization
-    // gap parameter is chosen by — p99 is the boundary candidate).
-    // Monthly growth accounting: MAU decomposed into new/retained/
-    // resurrected + churn and the quick ratio — join-only, windowless.
-    "ana_growth_accounting" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.growthAccounting(t(s, d, "events"))),
-
-    // Goh-Barabasi burstiness + CV per event type over the same
-    // within-user gaps as the interarrival panel: schedule vs bursts.
-    "ana_burstiness" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.burstiness(t(s, d, "events"))),
-
-    // HHI concentration of activity across users per type: exact
-    // integer sum-of-squares, one terminal division; 1/H = effective
-    // participant count.
-    "ana_concentration_hhi" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.concentrationHhi(t(s, d, "events"))),
-
-    // Mood's median test: global rank-bracket median, k x 2
-    // above/below counts, gridded chi2 — the outlier-immune
-    // shared-center screen before Kruskal-Wallis.
-    "ana_median_test" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.medianTest(t(s, d, "events"))),
-
-    "ana_interarrival" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.interarrivalStats(t(s, d, "events"))),
-
-    // Mann–Whitney U rank-sum test, weekend vs weekday values — the
-    // nonparametric sibling of the abtest readout: midrank ties,
-    // tie-corrected z, ranks over the distinct-value panel through
-    // the two-phase prefix sum (never a global data window).
-    "ana_mann_whitney" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.mannWhitney(
-        t(s, d, "events").filter(col("ts").isNotNull),
-        "value", Temporal.isoDow(col("ts")) >= 6)),
-
-    // Welch two-sample t-test on the same weekend/weekday split — the
-    // PARAMETRIC sibling of the rank-sum test: unequal-variance t,
-    // Welch–Satterthwaite df, Cohen's d / Hedges' g effect sizes from
-    // one exact-decimal moment panel.
-    "ana_welch_ttest" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.welchTTest(
-        t(s, d, "events").filter(col("ts").isNotNull),
-        "value", Temporal.isoDow(col("ts")) >= 6)),
-
-    // Lead/lag cross-correlation: does CLICK volume predict PURCHASE
-    // volume L days later — one Pearson per lag in [-7, 7] over the
-    // co-observed day panels, exact decimal moments per lag.
-    "ana_xcorr_lags" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.xcorrLags(t(s, d, "events"), "CLICK", "PURCHASE")),
-
-    // Neyman optimal stratified allocation: per event-type stratum
-    // the budget split n_h ∝ N_h·σ_h (vs naive proportional),
-    // largest-remainder rounded to hit the budget exactly — the
-    // survey-design step in front of the stratified samplers.
-    "sample_neyman" -> ((s: SparkSession, d: String) =>
-      Sampling.neymanAllocation(
-        t(s, d, "events")
-          .select(upper(trim(col("event_type"))).as("event_type_norm"),
-            col("value")),
-        "event_type_norm", "value", budget = 5000L)),
-
-    // Granger causality (lag-1) between every ordered event-type
-    // pair's daily series: restricted vs unrestricted OLS, F-test
-    // with the χ²(1) 5% critical verdict — the directed upgrade of
-    // the xcorr panel.
-    "ana_granger" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.granger(t(s, d, "events"))),
-
-    // Engle–Granger cointegration between every ordered event-type
-    // pair's daily series: step-1 levels OLS, step-2 ADF(0) on the
-    // gridded residuals, MacKinnon −3.33613 verdict — the long-run
-    // equilibrium companion of the granger panel.
-    "ana_cointegration" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.cointegration(t(s, d, "events"))),
-
-    // 2×2 odds-ratio readout: weekend exposure vs high-value-purchase
-    // outcome, log-scale Wald interval (grid-ln, parsed 1.96), the
-    // epidemiology companion of the abtest readout.
-    "ana_odds_ratio" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.oddsRatio(
-        t(s, d, "events").filter(col("ts").isNotNull && col("value").isNotNull),
-        Temporal.isoDow(col("ts")) >= 6,
-        upper(trim(col("event_type"))) === "PURCHASE" && col("value") > 95)),
-
-    // Cumulative gains/lift by descending value bin: how much of the
-    // purchase mass the top-value slices capture vs their population
-    // share — the targeting-evaluation panel next to the calibration.
-    "ml_gains_table" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.gainsTable(
-        t(s, d, "events").filter(col("value").isNotNull),
-        least(lit(19L), greatest(lit(0L), floor(col("value") / 5))),
-        upper(trim(col("event_type"))) === "PURCHASE")),
-
-    // SPC p-chart: the daily purchase rate against its binomial 3σ
-    // control limits — the rate monitor next to the drift/anomaly/
-    // CUSUM tiers.
-    "ana_control_chart" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.controlChartP(t(s, d, "events"),
-        upper(trim(col("event_type"))) === "PURCHASE")),
-
-    // Kruskal–Wallis H: does value's distribution differ across the
-    // K event types — the K-group generalization of the rank-sum
-    // test, same doubled-midrank prefix-sum machinery, tie-corrected.
-    "ana_kruskal_wallis" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.kruskalWallis(t(s, d, "events"), "value", "event_type")),
-
-    // One-way ANOVA F across the K event types — the parametric
-    // K-group sibling of Kruskal–Wallis: between/within SS
-    // decomposition, F and η² from per-group exact decimal moments.
-    "ana_anova_f" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.anovaF(t(s, d, "events"), "value", "event_type")),
-
-    // Brown–Forsythe variance-homogeneity W on the same grouping —
-    // the spread-equality assumption check ANOVA rests on: Levene's
-    // test on |x − group median|, delegated to the ANOVA machinery.
-    "ana_brown_forsythe" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.brownForsythe(t(s, d, "events"), "value", "event_type")),
-
-    // Exact ROC AUC via the rank-sum identity: does event VALUE rank-
-    // predict the purchase label — the standard scalar a ranking
-    // model is judged by, on the distinct-score panel (never a global
-    // row sort), with gini = 2·AUC − 1.
-    "ml_auc_roc" -> ((s: SparkSession, d: String) =>
-      MlLite.aucRoc(t(s, d, "events"), "value",
-        upper(trim(col("event_type"))) === "PURCHASE")),
-
-    // Exact average precision (PR-AUC) over the same score/label: the
-    // imbalanced-data metric next to ROC AUC, block-wise over the
-    // distinct-score panel with its prevalence floor.
-    "ml_avg_precision" -> ((s: SparkSession, d: String) =>
-      MlLite.averagePrecision(t(s, d, "events"), "value",
-        upper(trim(col("event_type"))) === "PURCHASE")),
-
-    // Brier + log-loss of the hour-of-day rate baseline for the same
-    // label — the proper-scoring floor a real model must beat; the
-    // row sums collapse onto the 24-row hour panel algebraically.
-    "ml_brier_logloss" -> ((s: SparkSession, d: String) =>
-      MlLite.baselineScorePanel(
-        t(s, d, "events").filter(col("ts").isNotNull),
-        upper(trim(col("event_type"))) === "PURCHASE",
-        hour(col("ts")))),
-
-    // Binned calibration audit (ECE / MCE) of the same hour-rate
-    // baseline — Brier says HOW wrong the probabilities are, ECE says
-    // WHERE per confidence bin. One partial-agg scan to the 24-hour
-    // panel, panel math after.
-    "ml_calibration_ece" -> ((s: SparkSession, d: String) =>
-      MlLite.calibrationEce(
-        t(s, d, "events").filter(col("ts").isNotNull),
-        upper(trim(col("event_type"))) === "PURCHASE",
-        hour(col("ts")), nBins = 10)),
-
-    // McNemar paired test: the peak-hour rule vs the high-value rule
-    // as PURCHASE classifiers on the SAME rows — only the discordant
-    // cells carry signal; the unpaired z over-counts shared rows.
-    "ml_mcnemar" -> ((s: SparkSession, d: String) =>
-      MlLite.mcnemar(t(s, d, "events"),
-        upper(trim(col("event_type"))) === "PURCHASE",
-        hour(col("ts")).isin(7, 8, 17, 18),
-        col("value") > lit(55.0))),
-
-    // Cohen's kappa between the DECLARED lang tag and the n-gram
-    // classifier's prediction — the chance-corrected one-scalar
-    // label-QC readout next to lang_confusion's full matrix.
-    "ml_cohens_kappa" -> ((s: SparkSession, d: String) =>
-      MlLite.cohensKappa(textLangId(s, d), "lang", "predicted_lang")),
-
-    // Quantile normalization: per-type daily demand aligned to the
-    // cross-type rank-mean distribution (ordering preserved).
-    "ana_quantile_normalize" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.quantileNormalize(servingValid(s, d))),
-
-    // Quasi-experimental DiD readout: md5-deterministic T/C groups,
-    // calendar split at 20240115 — shared trends cancel in the
-    // (T_post−T_pre)−(C_post−C_pre) estimate.
-    "ana_did" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.diffInDiff(
-        Sampling.splitAssign(
-          servingValid(s, d).filter(col("user_id").isNotNull),
-          Seq("T" -> 0.5, "C" -> 0.5), Seq("user_id")),
-        "split", "T", "C", col("value"), col("date_sk") >= 20240115)),
-
-    // Experiment power panel: required per-arm n across an MDE grid
-    // vs what the assignment has — "can this test detect a 5% lift"
-    // answered at design time. Literal z constants, raw IEEE panel
-    // math, NULL on unreachable targets.
-    "ana_abtest_power" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.abtestPower(
-        Sampling.splitAssign(
-          t(s, d, "events").filter(col("user_id").isNotNull),
-          Seq("A" -> 0.5, "B" -> 0.5), Seq("user_id")),
-        "split", "A", "B",
-        upper(trim(col("event_type"))) === "PURCHASE" && col("value") > 95)),
-
-    // 2-D Pareto skyline of the parts catalog: cheapest-for-the-size
-    // frontier (price lower-better, size higher-better) — every part
-    // flagged, dominance derived from the distributed prefix max.
-    "ana_skyline_parts" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.skyline2d(
-        t(s, d, "part").select(col("p_partkey").as("id"),
-          col("p_retailprice").as("x"),
-          col("p_size").cast("long").as("y")),
-        "x", "y")),
-
-    // CUPED variance-reduced readout over the same md5 A/B split:
-    // pre-period (date_sk < 20240115) user spend as the covariate,
-    // pooled theta, per-arm raw vs adjusted mean/variance and the
-    // variance-reduction share. One fact collapse to the user panel;
-    // everything after is panel math.
-    "ana_cuped" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.cupedReadout(
-        Sampling.splitAssign(
-          servingValid(s, d).filter(col("user_id").isNotNull),
-          Seq("A" -> 0.5, "B" -> 0.5), Seq("user_id")),
-        "split", col("value"), col("date_sk") < 20240115)),
-
-    // Daily new-vs-returning user split from first-seen days.
-    "ana_new_vs_returning" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.newVsReturning(t(s, d, "events"))),
-
-    // Cumulative registered-user curve: per first-seen day, new users
-    // + the running total — one user-keyed min aggregate collapses
-    // the fact, then the running sum is exact longs over the ≤#days
-    // panel (the day-panel window convention). Days with no first
-    // sighting don't appear (pair with ana_gapfill_30m to regularize).
-    "ana_cumulative_users" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.cumulativeUsers(t(s, d, "events"))),
-
-    // Day-of-week seasonal component + per-day residuals.
-    "ana_dow_seasonality" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.dowSeasonality(t(s, d, "events"))),
-
-    // Additive trend / weekly-seasonal / residual split of the daily
-    // series (STL-lite): centered 7-day MA trend, iso-dow means of
-    // the detrended values, all on the day panel.
-    "ana_seasonal_decompose" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.seasonalDecompose(t(s, d, "events"))),
-
-    // Hyndman STL strength diagnostics over the decomposition: does
-    // the weekly cycle / the trend carry signal (F ≈ 0 = noise).
-    "ana_seasonal_strength" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.seasonalStrength(t(s, d, "events"))),
-
-    // MAD robust-z over the decomposition residuals: "unusual for
-    // that weekday" — the seasonality-aware anomaly tier.
-    "anomaly_seasonal" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.anomalySeasonal(t(s, d, "events"))),
-
-    // Pareto curve: cumulative demand share by user rank through the
-    // distributed two-phase prefix sum — NEVER a global-window
-    // running total over the relation.
-    "ana_pareto_users" -> ((s: SparkSession, d: String) => {
-      val totals = t(s, d, "events")
-        .filter(col("user_id").isNotNull && col("value").isNotNull)
-        .groupBy(col("user_id"))
-        .agg(sum(money(col("value"))).as("total_demand"))
-      val grand = totals.agg(sum(col("total_demand")).as("__grand"))
-      PrefixSum.globalOrdered(totals,
-          Seq(col("total_demand").desc, col("user_id")), "total_demand")
-        .crossJoin(broadcast(grand))
-        .select(col("user_id"),
-          col("total_demand").cast("double").as("total_demand"),
-          col("row_rank").as("user_rank"),
-          (col("prefix_sum").cast("double") / col("__grand").cast("double"))
-            .as("cum_share"))
-    }),
-
-    // First-order Markov transition matrix over per-user event
-    // sequences; shares of each source type's outgoing total.
-    "ana_transition_matrix" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.transitionMatrix(t(s, d, "events"))),
-
-    // Top-3 busiest days per event type via DENSE_RANK (ties kept).
-    "ana_top_days_per_type" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.topDaysPerType(t(s, d, "events"), topN = 3)),
-
-    // Complete day × 48-slot grid with zero-filled counts and
-    // last-observation-carried-forward sums.
-    "ana_gapfill_30m" -> ((s: SparkSession, d: String) =>
-      TimeSeries.gapFill30m(t(s, d, "events"), "ts", "value")),
-
-    // Per-group z-score outliers: exact decimal moments + broadcast
-    // stats join back — the training-data outlier filter.
-    "anomaly_zscore" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.anomalyZscore(t(s, d, "events"))),
-
-    // Robust (median/MAD) outlier twin — survives the heavy tails
-    // that inflate a z-score's own mean/std.
-    "anomaly_mad" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.anomalyMad(t(s, d, "events"))),
-
-    "dedup_exact" -> ((s: SparkSession, d: String) =>
-      TextDedup.exact(t(s, d, "documents"), "text", "doc_id")),
-
-    // Canonicalized exact dedup: case/whitespace-normalized grouping —
-    // collapses trivial reformattings raw byte-exact dedup misses.
-    "dedup_exact_canonical" -> ((s: SparkSession, d: String) =>
-      TextDedup.exactCanonical(t(s, d, "documents"), "text", "doc_id")),
-
-    "dedup_ngram_jaccard" -> ((s: SparkSession, d: String) =>
-      TextDedup.jaccardPairs(t(s, d, "documents"), "doc_id", "text")),
-
-    // Dedup-rate curve: per Jaccard threshold, surviving pairs, docs
-    // removed under keep-lowest-id, and the removed corpus share —
-    // the threshold-selection evidence before a near-dup commit.
-    "dedup_rate_curve" -> ((s: SparkSession, d: String) =>
-      TextDedup.dedupRateCurve(t(s, d, "documents"), "doc_id", "text")),
-
-    // Prefix-filtered EXACT similarity join (AllPairs/PPJoin): the
-    // complete Jaccard pair set with no df-cap recall loss — the
-    // threshold itself bounds the candidate join.
-    "dedup_prefix_filter" -> ((s: SparkSession, d: String) =>
-      TextDedup.prefixFilterPairs(t(s, d, "documents"), "doc_id", "text")),
-
-    // Asymmetric containment: catches a short doc embedded in a long
-    // one, which symmetric Jaccard scores near zero.
-    "dedup_containment" -> ((s: SparkSession, d: String) =>
-      TextDedup.containmentPairs(t(s, d, "documents"), "doc_id", "text")),
-
-    // Levenshtein-verified near-dups over inverted-index candidates.
-    "dedup_edit_distance" -> ((s: SparkSession, d: String) =>
-      TextDedup.editDistancePairs(t(s, d, "documents"), "doc_id", "text")),
-
-    // Incremental corpus dedup: the new batch (doc_id >= 400) deduped
-    // against the standing corpus (doc_id < 400) and exactly within
-    // itself — the corpus is never re-paired with itself.
-    "dedup_incremental" -> ((s: SparkSession, d: String) => {
-      val docs = t(s, d, "documents")
-      TextDedup.incrementalDedup(
-        docs.filter(col("doc_id") < 400), docs.filter(col("doc_id") >= 400),
-        "doc_id", "text")
-    }),
-
-    // Incremental dedup against the PERSISTED corpus index: one index
-    // REFRESH (the per-corpus-commit cost) + the batch PROBE over the
-    // stored tables — the timed entry deliberately includes both
-    // halves of the operational cycle; at 100 TB the refresh amortizes
-    // over ~1000 batch probes. Same decision surface as
-    // dedup_incremental (shared tail), same oracle. One fixed scratch
-    // dir per (PROCESS, sf) — the pid component keeps two concurrent
-    // JVMs benchmarking the same sf from sharing a dir (one process's
-    // recursive rm would delete the index another is probing mid-run);
-    // within a process it is recursively cleared before each build, so
-    // repeated bench/verify passes never accumulate index copies.
-    "dedup_incremental_indexed" -> ((s: SparkSession, d: String) => {
-      val docs = t(s, d, "documents")
-      val pid = java.lang.ProcessHandle.current().pid()
-      val dir = new java.io.File(
-        sys.props("java.io.tmpdir"),
-        s"graft_dedup_idx_p${pid}_${d.replaceAll("[^A-Za-z0-9]", "_")}")
-      def rm(f: java.io.File): Unit = {
-        // listFiles() is null on IO error or a concurrent delete —
-        // treat as already-gone, not NPE
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      if (dir.exists()) rm(dir)
-      TextDedup.buildDedupIndex(
-        docs.filter(col("doc_id") < 400), "doc_id", "text", dir.toString)
-      TextDedup.incrementalDedupIndexed(
-        s, dir.toString, docs.filter(col("doc_id") >= 400), "doc_id", "text")
-    }),
-
-    // Duplicate-cluster assignment: connected components over the
-    // exact-Jaccard pair set (iterative min-label propagation — the
-    // survivor-selection step after any pair generator).
-    "dedup_clusters" -> ((s: SparkSession, d: String) =>
-      TextDedup.connectedComponents(
-        TextDedup.jaccardPairs(t(s, d, "documents"), "doc_id", "text"),
-        "doc_a", "doc_b")),
-
-    // Duplication-mass telemetry: the cluster-SIZE distribution of
-    // the dup graph — per size, how many clusters, how many docs
-    // they hold, how many a dedup pass would remove, and the share
-    // of the corpus — the "how much duplication do we actually have"
-    // panel that sizes a dedup investment before running it.
-    "dedup_cluster_stats" -> ((s: SparkSession, d: String) => {
-      val docs = t(s, d, "documents")
-      val clusters = TextDedup.connectedComponents(
-        TextDedup.jaccardPairs(docs, "doc_id", "text"), "doc_a", "doc_b")
-      val sizes = clusters.groupBy(col("cluster_id"))
-        .agg(count(lit(1)).as("cluster_size"))
-      val nDocs = docs.agg(count(lit(1)).as("__n_docs"))
-      sizes.groupBy(col("cluster_size"))
-        .agg(count(lit(1)).as("n_clusters"))
-        .crossJoin(broadcast(nDocs))
-        .select(col("cluster_size"), col("n_clusters"),
-          (col("cluster_size") * col("n_clusters")).as("n_docs"),
-          ((col("cluster_size") - 1) * col("n_clusters")).as("n_removable"),
-          ((col("cluster_size") * col("n_clusters")).cast("double")
-            / col("__n_docs").cast("double")).as("corpus_share"))
-    }),
-
-    // End-to-end corpus dedup ENDPOINT: duplicate clusters (Jaccard
-    // pairs + connected components), ONE best-quality survivor per
-    // cluster (text_stats score, doc_id tie-break), every unclustered
-    // doc kept as UNIQUE — the filtered-corpus output a training
-    // pipeline actually consumes after all the pair machinery.
-    "dedup_corpus_keep" -> ((s: SparkSession, d: String) => {
-      val docs = t(s, d, "documents")
-      val clusters = TextDedup.connectedComponents(
-        TextDedup.jaccardPairs(docs, "doc_id", "text"), "doc_a", "doc_b")
-      // both union branches consume j — checkpoint (the PrefixSum
-      // convention) so the tokenization-heavy textStats scan and the
-      // cluster join materialize ONCE, not once per branch
-      val j = textStats(s, d).select(col("doc_id"), col("quality_score"))
-        .join(clusters, Seq("doc_id"), "left")
-        .ckptPartitioned()
-      val w = Window.partitionBy(col("cluster_id"))
-        .orderBy(col("quality_score").desc, col("doc_id"))
-      j.filter(col("cluster_id").isNull)
-        .select(col("doc_id"), col("quality_score"), col("cluster_id"),
-          lit("UNIQUE").as("keep_reason"))
-        .unionByName(
-          j.filter(col("cluster_id").isNotNull)
-            .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
-            .select(col("doc_id"), col("quality_score"), col("cluster_id"),
-              lit("BEST_OF_CLUSTER").as("keep_reason")))
-    }),
-
-    // END-TO-END curation pipeline: the proven stages CHAINED with
-    // first-match staged drop reasons over EVERY input doc — the
-    // operational "run my whole corpus cleanup" shape. Stage order:
-    // canonical exact-dup (min-id keeps) -> quality gate (the
-    // doc_quality_gate rules) -> near-dup best-of-cluster over the
-    // SURVIVORS (dedup never wastes pairs on already-dropped docs) ->
-    // greedy token-budget cut (quality desc). Output = audit + filter
-    // in one: (doc, tokens, quality, drop_stage|NULL, is_kept).
-    "corpus_curation_pipeline" -> ((s: SparkSession, d: String) => {
-      val docs = t(s, d, "documents")
-      val norm = lower(regexp_replace(trim(col("text")),
-        "[ \\t\\n\\r\\f\\x0B]+", " "))
-      val canon = docs.select(col("doc_id"), norm.as("__norm"))
-      val keepers = canon.groupBy(col("__norm"))
-        .agg(min(col("doc_id")).as("__keep_id"))
-      val s1 = canon.join(keepers, "__norm")
-        .select(col("doc_id"), (col("doc_id") =!= col("__keep_id")).as("__exact_dup"))
-      val staged = textStats(s, d)
-        .join(docs.select(col("doc_id"), col("lang")), "doc_id")
-        .join(s1, "doc_id")
-        .withColumn("__q", when(col("n_tokens") < 5, "TOO_SHORT")
-          .when(col("n_tokens") > 100000, "TOO_LONG")
-          .when(col("punct_ratio") > 0.3, "HIGH_PUNCT")
-          .when(col("avg_token_len") < 2.0 || col("avg_token_len") > 12.0,
-            "BAD_TOKEN_LEN")
-          .when(col("lang") === "en" && col("n_tokens") >= 50 &&
-            col("stopword_ratio") < 0.01, "NO_STOPWORDS")
-          .otherwise(lit(null).cast("string")))
-        .ckptPartitioned() // consumed by the dedup stage AND final assembly
-      val surv12 = staged.filter(!col("__exact_dup") && col("__q").isNull)
-      val clusters = TextDedup.connectedComponents(
-        TextDedup.jaccardPairs(docs.join(surv12.select("doc_id"), "doc_id"),
-          "doc_id", "text"), "doc_a", "doc_b")
-      val j = surv12.select(col("doc_id"), col("quality_score"))
-        .join(clusters, Seq("doc_id"), "left")
-        .ckptPartitioned()
-      val w = Window.partitionBy(col("cluster_id"))
-        .orderBy(col("quality_score").desc, col("doc_id"))
-      val nearKeep = j.filter(col("cluster_id").isNull).select("doc_id")
-        .unionByName(j.filter(col("cluster_id").isNotNull)
-          .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
-          .select("doc_id"))
-      val surv123 = surv12.select(col("doc_id"), col("quality_score"),
-          col("n_tokens"))
-        .join(nearKeep, "doc_id")
-      val inBudget = Sampling.tokenBudget(surv123, "doc_id", "quality_score",
-          "n_tokens", budget = 50000L)
-        .select(col("doc_id"), lit(true).as("__in_budget"))
-      staged
-        .join(nearKeep.withColumn("__near_keep", lit(true)), Seq("doc_id"), "left")
-        .join(inBudget, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("n_tokens"), col("quality_score"),
-          when(col("__exact_dup"), "EXACT_DUP")
-            .when(col("__q").isNotNull, col("__q"))
-            .when(col("__near_keep").isNull, "NEAR_DUP")
-            .when(col("__in_budget").isNull, "OVER_BUDGET")
-            .otherwise(lit(null).cast("string")).as("drop_stage"))
-        .withColumn("is_kept", col("drop_stage").isNull)
-    }),
-
-    "dedup_minhash_lsh" -> ((s: SparkSession, d: String) =>
-      TextDedup.minhashLsh(t(s, d, "documents"), "doc_id", "text")),
-
-    // Recall panel of the approximate dedup tiers vs the exact
-    // prefix-filter truth — "measure, don't guess" for banding
-    // parameters; oracle-checked since r14 (both tiers ride
-    // md5-register hashes, so the panel composes three SQL relations).
-    "dedup_recall_eval" -> ((s: SparkSession, d: String) =>
-      TextDedup.dedupRecallEval(t(s, d, "documents"), "doc_id", "text")),
-
-    "dedup_simhash" -> ((s: SparkSession, d: String) =>
-      TextDedup.simhashPairs(t(s, d, "documents"), "doc_id", "text")),
-
-    // Document quality gate (Gopher-style corpus filter rules as a
-    // first-match reason-coded pass — the documents twin of the
-    // events QualityGate): length band, symbol-to-text ratio, mean
-    // token length band, stopword floor for long English text. One
-    // codegen'd scan, no shuffle.
-    "doc_quality_gate" -> ((s: SparkSession, d: String) => {
-      val txt = col("text")
-      val toks = TextOps.tokens(txt)
-      t(s, d, "documents")
-        .select(col("doc_id"), col("lang"),
-          size(toks).as("n_tokens"),
-          (TextOps.punctCount(txt) / greatest(length(txt), lit(1))).as("punct_ratio"),
-          (TextOps.stopwordCountEn(toks) / greatest(size(toks), lit(1)))
-            .as("stopword_ratio"),
-          (aggregate(toks, lit(0), (a, x) => a + length(x)) / greatest(size(toks), lit(1)))
-            .as("avg_token_len"))
-        .withColumn("reason_code",
-          when(col("n_tokens") < 5, "TOO_SHORT")
-            .when(col("n_tokens") > 100000, "TOO_LONG")
-            .when(col("punct_ratio") > 0.3, "HIGH_PUNCT")
-            .when(col("avg_token_len") < 2.0 || col("avg_token_len") > 12.0,
-              "BAD_TOKEN_LEN")
-            .when(col("lang") === "en" && col("n_tokens") >= 50 &&
-              col("stopword_ratio") < 0.01, "NO_STOPWORDS")
-            .otherwise(lit(null).cast("string")))
-        .withColumn("is_valid", col("reason_code").isNull)
-    }),
-
-    // PII-style scrubbing: emails and long digit runs masked with
-    // typed placeholders, with per-doc match counts for the run log.
-    // Patterns restricted to the Java-regex/RE2 common subset so any
-    // engine replays the exact redaction. n_long_numbers counts runs
-    // in the EMAIL-MASKED text (same pass order as the replacement),
-    // so the counts reconcile exactly with the <NUM> markers emitted
-    // — a digit run inside an email is one email redaction, not a
-    // phantom unredacted number.
-    // NFC unicode normalization — the first move of a text-cleanup
-    // pipeline (composed vs decomposed accents render identically but
-    // hash differently, silently splitting dedup groups); a native
-    // codegen'd kernel because Spark has no builtin and a UDF would
-    // break whole-stage codegen on the hottest preprocessing path.
-    "text_normalize" -> ((s: SparkSession, d: String) =>
-      t(s, d, "documents").select(col("doc_id"),
-        graft.expressions.Kernels.unicodeNormalize(col("text")).as("text_nfc"),
-        (graft.expressions.Kernels.unicodeNormalize(col("text"))
-          =!= col("text")).as("changed"))),
-
-    "text_redact" -> ((s: SparkSession, d: String) => {
-      val emailRe = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
-      val numRe = "[0-9]{6,}"
-      val txt = col("text")
-      t(s, d, "documents")
-        .withColumn("__graft_email_masked", regexp_replace(txt, emailRe, "<EMAIL>"))
-        .select(
-          col("doc_id"),
-          size(regexp_extract_all(txt, lit(emailRe), lit(0))).as("n_emails"),
-          size(regexp_extract_all(col("__graft_email_masked"), lit(numRe), lit(0)))
-            .as("n_long_numbers"),
-          regexp_replace(col("__graft_email_masked"), numRe, "<NUM>")
-            .as("text_redacted"))
-    }),
-
-    "text_stats" -> textStats _,
-
-    "text_lang_id" -> textLangId _,
-
-    // Label-vs-detector language agreement: where the declared lang
-    // column and the n-gram detector disagree, one of them is wrong —
-    // either way that slice needs curation attention.
-    "lang_confusion" -> ((s: SparkSession, d: String) => {
-      val c = textLangId(s, d)
-        .groupBy(col("lang"), col("predicted_lang"))
-        .agg(count(lit(1)).as("n_docs"))
-      val tot = c.groupBy(col("lang")).agg(sum(col("n_docs")).as("n_label"))
-      c.join(tot, "lang")
-        .select(col("lang"), col("predicted_lang"), col("n_docs"), col("n_label"),
-          (col("n_docs") / col("n_label")).as("share_of_label"),
-          (col("lang") === col("predicted_lang")).as("is_match"))
-    }),
-
-    "text_fingerprint" -> textFingerprint _,
-
-    // Gopher-style repetition signal over adjacent token bigrams.
-    "doc_repetition_stats" -> ((s: SparkSession, d: String) =>
-      CorpusQc.repetitionStats(t(s, d, "documents"), "doc_id", "text")),
-
-    // Log-free character-diversity panel: Simpson index 1 - Σp² from
-    // pure integer partials + one IEEE division per output.
-    "text_char_diversity" -> ((s: SparkSession, d: String) =>
-      CorpusQc.charDiversity(t(s, d, "documents"), "doc_id", "text")),
-
-    // Context-aware novelty: unseen-bigram counts + MLE continuation
-    // shares — the log-free perplexity stand-in (see bigramNovelty).
-    "doc_bigram_novelty" -> ((s: SparkSession, d: String) =>
-      CorpusQc.bigramNovelty(t(s, d, "documents"), "doc_id", "text")),
-
-    // Benchmark decontamination sweep: the held-out slice is every
-    // tenth document (doc_id % 10 == 7) standing in for an eval set.
-    "decontaminate_overlap" -> ((s: SparkSession, d: String) => {
-      val docs = t(s, d, "documents")
-      CorpusQc.contaminationPairs(
-        docs.filter(col("doc_id") % 10 =!= 7),
-        docs.filter(col("doc_id") % 10 === 7),
-        "doc_id", "text", n = 8, minShared = 5)
-    }),
-
-    // MinHash-banded decontamination — the broadcast-eval scale path
-    // of decontaminate_overlap (md5-register signatures since r14 —
-    // oracle-checked; the threshold is low because banding bounds
-    // RECALL, and the exact verify step keeps precision).
-    "decontaminate_minhash" -> ((s: SparkSession, d: String) => {
-      val docs = t(s, d, "documents")
-      CorpusQc.decontaminateMinhash(
-        docs.filter(col("doc_id") % 10 =!= 7),
-        docs.filter(col("doc_id") % 10 === 7),
-        "doc_id", "text", n = 8, threshold = 0.2)
-    }),
-
-    // Unigram-LM familiarity: mean corpus-frequency share per doc.
-    "text_freq_familiarity" -> ((s: SparkSession, d: String) =>
-      CorpusQc.freqFamiliarity(t(s, d, "documents"), "doc_id", "text")),
-
-    // Unigram-LM cross-entropy per doc (add-one smoothing; the log
-    // rides a quantized per-type panel, never row data — see
-    // CorpusQc.unigramSurprisal for the ulp-risk bound).
-    "text_surprisal" -> ((s: SparkSession, d: String) =>
-      CorpusQc.unigramSurprisal(t(s, d, "documents"), "doc_id", "text")),
-
-    // Pairwise JS divergence between source unigram distributions:
-    // one token join; single-source mass folds into ln2*(1-coverage).
-    "text_js_sources" -> ((s: SparkSession, d: String) =>
-      CorpusQc.jsBySource(t(s, d, "documents"), "source", "text")),
-
-    // Laplace-smoothed bigram-LM cross-entropy (CCNet-style quality
-    // score) — the context-aware tier above text_surprisal.
-    "text_bigram_lm" -> ((s: SparkSession, d: String) =>
-      CorpusQc.bigramLmScore(t(s, d, "documents"), "doc_id", "text")),
-
-    // 64-token chunks, 16-token overlap (stride 48).
-    "doc_chunks" -> ((s: SparkSession, d: String) =>
-      CorpusQc.chunkTokens(t(s, d, "documents"), "doc_id", "text",
-        chunkSize = 64, overlap = 16)),
-
-    // Entity resolution: candidate pairs over the distinct part-name
-    // entities (block = the noun token), native Jaro–Winkler kernel
-    // (bit-exact vs the DuckDB oracle — see JaroWinklerExpr), 1e-6
-    // grid before the threshold compare.
-    "er_candidate_pairs" -> ((s: SparkSession, d: String) =>
-      Linkage.candidatePairs(
-        t(s, d, "part").groupBy(upper(trim(col("p_name"))).as("ent_name"))
-          .agg(min(col("p_partkey")).as("ent_id")),
-        "ent_id", "ent_name", threshold = 0.8)),
-
-    // Blocking quality panel over the same entity relation: candidate
-    // pairs vs blind n²/2 (reduction ratio), the hot-block tail the
-    // cap would drop, the largest block.
-    "er_blocking_stats" -> ((s: SparkSession, d: String) =>
-      Linkage.blockingStats(
-        t(s, d, "part").groupBy(upper(trim(col("p_name"))).as("ent_name"))
-          .agg(min(col("p_partkey")).as("ent_id")),
-        "ent_id", "ent_name", blockCap = 1000)),
-
-    // DEFLATE compression ratio per document (the Gopher-style
-    // redundancy gate): JDK Deflater via batched mapPartitions — the
-    // JVM-codec boundary, rows-only by the §5.1 binary rule.
-    "doc_compression_ratio" -> ((s: SparkSession, d: String) =>
-      CorpusQc.compressionRatio(t(s, d, "documents"), "doc_id", "text")),
-
-    // Linkage assignment: the same entities deterministically
-    // "dirtied" (first token truncated to 3 chars) and re-linked to
-    // the clean set — within-block argmax by (score desc, ref id).
-    "er_best_match" -> ((s: SparkSession, d: String) => {
-      val clean = t(s, d, "part")
-        .groupBy(upper(trim(col("p_name"))).as("ent_name"))
-        .agg(min(col("p_partkey")).as("ent_id"))
-      val dirty = clean.select(col("ent_id"),
-        concat_ws(" ",
-          substring(element_at(split(col("ent_name"), " "), 1), 1, 3),
-          element_at(split(col("ent_name"), " "), -1)).as("ent_name"))
-      Linkage.bestMatch(dirty, "ent_id", "ent_name",
-        clean, "ent_id", "ent_name", threshold = 0.75)
-    }),
-
-    // Item-item collaborative filtering: user-level co-occurrence
-    // cosine, top-5 neighbor list per item (Recsys.scala — the
-    // user-history twin of the order-basket association rules).
-    "recsys_item_cosine" -> ((s: SparkSession, d: String) =>
-      Recsys.itemCosineTopK(
-        t(s, d, "lineitem").join(t(s, d, "orders"),
-          col("l_orderkey") === col("o_orderkey")),
-        "o_custkey", "l_partkey", k = 5)),
-
-    // Serving-time recommendations from the bounded neighbor lists:
-    // per-user top-5 unseen items by summed cosine linkage.
-    "recsys_recommend" -> ((s: SparkSession, d: String) =>
-      Recsys.recommendTopN(
-        t(s, d, "lineitem").join(t(s, d, "orders"),
-          col("l_orderkey") === col("o_orderkey")),
-        "o_custkey", "l_partkey", n = 5, k = 10)),
-
-    // Offline ranking evaluation of the same recommender: per-user
-    // deterministic leave-one-out holdout, recommend from the rest,
-    // hit-rate@5 / MRR / NDCG — the measurement tier that says
-    // whether the serving chain actually ranks held-out truth.
-    "recsys_eval_ranking" -> ((s: SparkSession, d: String) =>
-      Recsys.evalRankingLoo(
-        t(s, d, "lineitem").join(t(s, d, "orders"),
-          col("l_orderkey") === col("o_orderkey")),
-        "o_custkey", "l_partkey", n = 5, k = 10)),
-
-    // Serving-side health panel over the same recommendations:
-    // catalog coverage + exposure Gini (popularity bias). Exposure
-    // ranks ride the distributed prefix sum, never a global window.
-    // Registered at the SERVING support floor (minSupport=8), per the
-    // r12 judge directive: the floor-2 exhaustive pair build cost
-    // ~2x the floor-8 one for a panel nobody serves (a single shared
-    // user is noise), so the registry default is the production
-    // shape. The exhaustive floor stays spec-covered
-    // (itemCosineFromInteractions default = 2) and the floor lever
-    // itself is demonstrated by the _pruned sibling below.
-    "recsys_coverage" -> ((s: SparkSession, d: String) =>
-      Recsys.recommendationCoverage(
-        t(s, d, "lineitem").join(t(s, d, "orders"),
-          col("l_orderkey") === col("o_orderkey")),
-        "o_custkey", "l_partkey", n = 5, k = 10, minSupport = 8)),
-
-    // The deeper-pruned sibling: the SAME panel at a head-of-catalog
-    // floor (minSupport=16) — the documented lever on the exact-CF
-    // candidate explosion. The floor pre-prunes items before the pair
-    // build (exact — n_both <= min marginal), so coverage/exposure
-    // can be read at escalating floors with the identical oracle
-    // shape over the pruned support.
-    "recsys_coverage_pruned" -> ((s: SparkSession, d: String) =>
-      Recsys.recommendationCoverage(
-        t(s, d, "lineitem").join(t(s, d, "orders"),
-          col("l_orderkey") === col("o_orderkey")),
-        "o_custkey", "l_partkey", n = 5, k = 10, minSupport = 16)),
-
-    // Isotonic calibration of the purchase rate against the value
-    // bin: the PAV fit through the exact minimax identity — pure
-    // comparisons over exact-integer quotients, bit-replayable.
-    "ml_isotonic_calibration" -> ((s: SparkSession, d: String) =>
-      MlLite.isotonicCalibration(
-        t(s, d, "events").filter(col("value").isNotNull),
-        least(lit(19L), greatest(lit(0L), floor(col("value") / 5))),
-        upper(trim(col("event_type"))) === "PURCHASE")),
-
-    // ── in-engine classical ML (MlLite.scala) ───────────────────────
-
-    // Multinomial naive-Bayes language classifier, trained and scored
-    // in one shot over the corpus: add-one smoothed per-class token
-    // log-likelihoods (1e-6-grid ln summed as DECIMAL partials),
-    // argmax per doc with the runner-up margin.
-    "ml_naive_bayes" -> ((s: SparkSession, d: String) =>
-      MlLite.naiveBayes(t(s, d, "documents"), "doc_id", "text", "lang")),
-
-    // Two-regressor OLS with intercept (value ~ hour + iso-dow) solved
-    // closed-form from exact decimal moments — the multi-feature
-    // sibling of ana_trend_slope's single-regressor fit.
-    "ml_ols_value" -> ((s: SparkSession, d: String) =>
-      MlLite.olsTwoFeature(
-        t(s, d, "events").filter(col("ts").isNotNull)
-          .select(col("value"),
-            hour(col("ts")).cast("double").as("hr"),
-            Temporal.isoDow(col("ts")).cast("double").as("iso_dow")),
-        "value", "hr", "iso_dow")),
-
-    // Price elasticity of demand per part brand: grouped log-log OLS
-    // slope of ln(quantity) on ln(unit price), gridded lns, one scan.
-    "ana_price_elasticity" -> ((s: SparkSession, d: String) =>
-      MlLite.logLogElasticity(
-        t(s, d, "lineitem")
-          .join(t(s, d, "part"), col("l_partkey") === col("p_partkey"))
-          .select(col("p_brand"), col("l_quantity"),
-            (col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-              / col("l_quantity")).as("unit_price")),
-        "p_brand", "l_quantity", "unit_price")),
-
-    // The same fit with classical inference: sigma^2, coefficient
-    // standard errors from the centered (X'X)^-1 cofactors, t stats
-    // and normal-approx 5% verdicts — all from the one moment panel.
-    "ml_linear_tstats" -> ((s: SparkSession, d: String) =>
-      MlLite.olsInference(
-        t(s, d, "events").filter(col("ts").isNotNull)
-          .select(col("value"),
-            hour(col("ts")).cast("double").as("hr"),
-            Temporal.isoDow(col("ts")).cast("double").as("iso_dow")),
-        "value", "hr", "iso_dow")),
-
-    // Logistic regression by 6 rounds of full-batch gradient descent
-    // (driver sees one 4-scalar gradient panel per round): is this
-    // event a purchase, from grid-quantized hour/dow/value features.
-    "ml_logreg_purchase" -> ((s: SparkSession, d: String) =>
-      MlLite.logisticRegression(logregFeatures(s, d),
-        "y", Seq("x1", "x2", "x3"), lr = 0.5, rounds = 6)),
-
-    // Variance inflation factors over the same design: per feature
-    // the R-squared against the OTHER features and 1/(1-R2) — the
-    // multicollinearity diagnostic read before trusting any
-    // coefficient.
-    "ml_vif" -> ((s: SparkSession, d: String) =>
-      MlLite.vif(logregFeatures(s, d), Seq("x1", "x2", "x3"))),
-
-    // Permutation feature importance of the same fit: per feature the
-    // AUC drop under a deterministic md5-bucket rotation of that
-    // column — does the model actually USE the feature.
-    "ml_permutation_importance" -> ((s: SparkSession, d: String) =>
-      MlLite.permutationImportance(logregFeaturesWithId(s, d), "event_id",
-        "y", Seq("x1", "x2", "x3"), lr = 0.5, rounds = 6)),
-
-    // Calibration (reliability) panel of the same fit: 10 equal-width
-    // probability bins, mean predicted p vs observed positive rate —
-    // the curve that says whether "p = 0.8" means 80%.
-    "ml_logreg_calibration" -> ((s: SparkSession, d: String) =>
-      MlLite.logisticCalibration(logregFeatures(s, d),
-        "y", Seq("x1", "x2", "x3"), lr = 0.5, rounds = 6, bins = 10)),
-
-    // Precision/recall curve of the same fit: exact confusion counts
-    // per decision threshold — the operating-point menu.
-    "ml_logreg_pr_curve" -> ((s: SparkSession, d: String) =>
-      MlLite.logisticPrCurve(logregFeatures(s, d),
-        "y", Seq("x1", "x2", "x3"), lr = 0.5, rounds = 6,
-        thresholds = Seq(0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9))),
-
-    // Expected-cost curve over the same confusion counts: per FN cost
-    // ratio the cost at every threshold, argmin flagged — the
-    // threshold-to-deploy readout at each cost asymmetry.
-    "ml_cost_curve" -> ((s: SparkSession, d: String) =>
-      MlLite.costCurve(logregFeatures(s, d),
-        "y", Seq("x1", "x2", "x3"), lr = 0.5, rounds = 6,
-        thresholds = Seq(0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9),
-        fnCostRatios = Seq(1.0, 2.0, 5.0, 10.0))),
-
-    // Information-gain ranking of binned features vs the purchase
-    // label — the decision-tree split criterion as a panel, the
-    // nonparametric complement of the logistic coefficients.
-    "ml_info_gain" -> ((s: SparkSession, d: String) =>
-      MlLite.infoGain(
-        t(s, d, "events")
-          .filter(col("ts").isNotNull && col("value").isNotNull)
-          .select(
-            when(col("event_type") === "purchase", 1L).otherwise(0L).as("y"),
-            hour(col("ts")).cast("long").as("hr"),
-            Temporal.isoDow(col("ts")).cast("long").as("dow"),
-            least(lit(9L), floor(col("value") / 10).cast("long")).as("valdec")),
-        "y", Seq("hr", "dow", "valdec"))),
-
-    // AdaBoost over 5 weighted stumps on the collapsed feature-combo
-    // panel (one data scan; each boosting pass is panel math): the
-    // per-round model + the cumulative ensemble accuracy curve.
-    "ml_adaboost_stumps" -> ((s: SparkSession, d: String) =>
-      MlLite.adaboostStumps(
-        t(s, d, "events")
-          .filter(col("ts").isNotNull && col("value").isNotNull)
-          .select(
-            when(col("event_type") === "purchase", 1L).otherwise(0L).as("y"),
-            hour(col("ts")).cast("long").as("hr"),
-            Temporal.isoDow(col("ts")).cast("long").as("dow"),
-            least(lit(9L), floor(col("value") / 10).cast("long")).as("valdec")),
-        "y", Seq("hr", "dow", "valdec"), rounds = 5)),
-
-    // Leave-one-out target encoding of the high-cardinality customer
-    // key against order value (smoothing m=20): the encoded column a
-    // downstream fit consumes, own label excluded, rare categories
-    // shrunk to the prior.
-    "ml_target_encode" -> ((s: SparkSession, d: String) =>
-      MlLite.targetEncode(t(s, d, "orders"),
-        "o_orderkey", "o_custkey", "o_totalprice", smoothing = 20.0)),
-
-    // Gradient-boosted stump regression (squared loss) predicting
-    // event value from the calendar features: 5 shrunk residual-fit
-    // rounds on the collapsed (hr, dow) combo panel; the train_mse
-    // column is the boosting curve. eta=0.25 (dyadic — exact IEEE
-    // scaling, oracle-replayable).
-    "ml_gbt_regression" -> ((s: SparkSession, d: String) =>
-      MlLite.gbtStumpsRegression(
-        t(s, d, "events")
-          .filter(col("ts").isNotNull && col("value").isNotNull)
-          .select(col("value").as("y"),
-            hour(col("ts")).cast("long").as("hr"),
-            Temporal.isoDow(col("ts")).cast("long").as("dow")),
-        "y", Seq("hr", "dow"), rounds = 5, eta = 0.25)),
-
-    // Decision stump: the best single feature<=threshold split by
-    // info gain over the same binned features, with majority leaves
-    // and training accuracy — the unit a boosting loop stacks.
-    "ml_decision_stump" -> ((s: SparkSession, d: String) =>
-      MlLite.decisionStump(
-        t(s, d, "events")
-          .filter(col("ts").isNotNull && col("value").isNotNull)
-          .select(
-            when(col("event_type") === "purchase", 1L).otherwise(0L).as("y"),
-            hour(col("ts")).cast("long").as("hr"),
-            Temporal.isoDow(col("ts")).cast("long").as("dow"),
-            least(lit(9L), floor(col("value") / 10).cast("long")).as("valdec")),
-        "y", Seq("hr", "dow", "valdec"))),
-
-    // Ridge regression on the same moment panel (lambda on the
-    // centered diagonal, intercept unpenalized) — shrinkage priced by
-    // the honest quadratic-form r2.
-    "ml_ridge_value" -> ((s: SparkSession, d: String) =>
-      MlLite.ridgeTwoFeature(
-        t(s, d, "events").filter(col("ts").isNotNull)
-          .select(col("value"),
-            hour(col("ts")).cast("double").as("hr"),
-            Temporal.isoDow(col("ts")).cast("double").as("iso_dow")),
-        "value", "hr", "iso_dow", lambda = 100000.0)),
-
-    // Confusion panel of the naive-Bayes classifier: exact
-    // (true, predicted) doc counts — the evaluation artifact next to
-    // the model it describes.
-    "ml_nb_confusion" -> ((s: SparkSession, d: String) =>
-      MlLite.naiveBayes(t(s, d, "documents"), "doc_id", "text", "lang")
-        .groupBy(col("true_label"), col("pred_label"))
-        .agg(count(lit(1)).as("n_docs"))),
-
-    // 5-fold cross-validated NB accuracy WITHOUT training 5 models:
-    // every per-fold training count is global minus fold (counts are
-    // additive), per-fold vocabulary by exclusive-token subtraction —
-    // in-engine CV linear in corpus size, not k x it.
-    "ml_nb_kfold_cv" -> ((s: SparkSession, d: String) =>
-      MlLite.naiveBayesKFold(t(s, d, "documents"), "doc_id", "text",
-        "lang", folds = 5)),
-
-    // Learning curve: NB held-out accuracy at nested md5 train
-    // fractions of the 80% pool — "does more crawl buy accuracy",
-    // answered before the crawl is paid for.
-    "ml_learning_curve" -> ((s: SparkSession, d: String) =>
-      MlLite.learningCurve(t(s, d, "documents"), "doc_id", "text",
-        "lang", testFrac = 0.2, fracs = Seq(0.1, 0.25, 0.5, 1.0))),
-
-    // Incremental JOIN-view maintenance (the join sibling of
-    // gold_agg_incremental): orders >= 2000-01-01 arrive as the fact
-    // delta, every 97th customer arrives re-segmented as the dim
-    // delta; only touched custkey partitions recompute, the rest of
-    // the stored view carries over. The oracle is the full recompute
-    // of the upserted join — equality IS the correctness claim.
-    "gold_join_incremental" -> ((s: SparkSession, d: String) => {
-      val cut = lit("2000-01-01").cast("timestamp")
-      val orders = t(s, d, "orders")
-      val cust = t(s, d, "customer")
-      val viewCols = Seq(col("o_orderkey"), col("o_custkey"),
-        col("o_totalprice"), col("c_name"), col("c_mktsegment"))
-      val aOld = orders.filter(col("o_orderdate") < cut)
-      val aDelta = orders.filter(col("o_orderdate") >= cut)
-      val bOld = cust.withColumnRenamed("c_custkey", "o_custkey")
-      val bDelta = bOld.filter(col("o_custkey") % 97 === 0)
-        .withColumn("c_mktsegment", lit("CHANGED"))
-      val view = aOld.join(bOld, Seq("o_custkey")).select(viewCols: _*)
-      Merge.maintainJoinView(view,
-        aOld, aDelta, Seq("o_orderkey"),
-        bOld, bDelta, "o_custkey")
-    }),
-
-    // ER survivorship: connected components over the fuzzy candidate
-    // pairs, canonical entity = the min-id member — the golden-record
-    // step that turns pair evidence into one master row per entity.
-    "er_golden_record" -> ((s: SparkSession, d: String) => {
-      val ents = t(s, d, "part")
-        .groupBy(upper(trim(col("p_name"))).as("ent_name"))
-        .agg(min(col("p_partkey")).as("ent_id"))
-      val pairs = Linkage.candidatePairs(ents, "ent_id", "ent_name",
-        threshold = 0.8)
-      val comps = TextDedup.connectedComponents(pairs, "rec_id_a", "rec_id_b")
-      ents.join(comps.withColumnRenamed("doc_id", "ent_id"), Seq("ent_id"), "left")
-        .withColumn("canonical_id", coalesce(col("cluster_id"), col("ent_id")))
-        .drop("cluster_id")
-        .join(ents.select(col("ent_id").as("canonical_id"),
-          col("ent_name").as("canonical_name")), Seq("canonical_id"))
-        .select(col("ent_id"), col("ent_name"), col("canonical_id"),
-          col("canonical_name"),
-          (col("ent_id") === col("canonical_id")).as("is_canonical"))
-    }),
-
-    "ann_cosine_topk" -> ((s: SparkSession, d: String) =>
-      Ann.cosineTopK(t(s, d, "embeddings"), "vec_id", "embedding", nQueries = 10, k = 5)),
-
-    // Pairwise cosine-similarity histogram over the deterministic
-    // 96-vector md5 probe panel — the corpus-geometry evidence a
-    // SemDeDup/near-dup/LSH threshold is chosen against.
-    "embedding_similarity_hist" -> ((s: SparkSession, d: String) =>
-      Ann.similarityHist(t(s, d, "embeddings"), "vec_id", "embedding")),
-
-    // LSH banding tuning curve: the observed pair-cosine histogram
-    // folded through the hyperplane S-curve per candidate (bands,
-    // rows) config — expected candidate rate + recall over the >= tau
-    // mass, BEFORE paying for a full dedup run.
-    "dedup_lsh_curve" -> ((s: SparkSession, d: String) =>
-      Ann.lshTuningCurve(t(s, d, "embeddings"), "vec_id", "embedding",
-        configs = Seq((4, 4), (8, 4), (16, 4), (8, 8), (16, 8)),
-        tau = 0.5)),
-
-    // Rare-domain upsampling PLAN: integer replication factors that
-    // lift every source to at least a 6% share, capped at 4 epochs —
-    // the panel a reader joins on, never materialized xk.
-    "sample_upsample_rare" -> ((s: SparkSession, d: String) =>
-      Sampling.upsampleRare(t(s, d, "documents"), "source",
-        minShare = 0.06, maxRep = 4)),
-
-    // Max-min fair token-budget allocation (water-filling): every
-    // source gets an equal ration τ except those whose whole capacity
-    // fits under it; closed-form regime choice on the source panel.
-    "sample_budget_waterfill" -> ((s: SparkSession, d: String) =>
-      Sampling.budgetWaterfill(t(s, d, "documents"), "source",
-        "n_chars", budget = 100000L)),
-
-    // k-NN classification over the exact cosine tier: majority label
-    // of the 5 nearest neighbors, vote ties to the smaller label —
-    // the application layer the recall panel prices approximations
-    // against.
-    "ml_knn_classify" -> ((s: SparkSession, d: String) =>
-      Ann.knnClassify(t(s, d, "embeddings"), "vec_id", "embedding",
-        "label", nQueries = 50, k = 5)),
-
-    // INT8 scalar quantization error panel (the 4x-compression tier
-    // below PQ): per-vector symmetric scale, round-half-up codes,
-    // MSE / max-error / norm-ratio over the exploded relation.
-    "embedding_sq8_error" -> ((s: SparkSession, d: String) =>
-      Ann.sq8ErrorPanel(t(s, d, "embeddings"), "vec_id", "embedding")),
-
-    // FILTERED vector search: exact top-5 among even-label vectors
-    // only (pre-filter, so every query gets its true filtered top-k
-    // — the modern "nearest WHERE metadata" serving shape).
-    "ann_filtered_topk" -> ((s: SparkSession, d: String) =>
-      Ann.filteredTopK(t(s, d, "embeddings"), "vec_id", "embedding",
-        col("label") % 2 === 0, nQueries = 10, k = 5)),
-
-    // Radius twin of top-k: all neighbors with cos >= 0.35, pure
-    // codegen filter — zero windows, zero extra shuffles.
-    "ann_range_search" -> ((s: SparkSession, d: String) =>
-      Ann.rangeSearch(t(s, d, "embeddings"), "vec_id", "embedding",
-        nQueries = 10, threshold = 0.35)),
-
-    "ann_lsh_topk" -> ((s: SparkSession, d: String) =>
-      Ann.lshTopK(t(s, d, "embeddings"), "vec_id", "embedding", nQueries = 10, k = 5)),
-
-    // Multi-probe LSH: the query also probes every Hamming-1 bucket —
-    // measured recall 0.38 -> 0.88 at sf0.01 on the SAME index
-    // (ann_recall_eval), query-side-only fan-out. Oracle-checked
-    // since r14 (literal-hyperplane replay; see lshBucketCtes).
-    "ann_lsh_multiprobe" -> ((s: SparkSession, d: String) =>
-      Ann.lshMultiProbeTopK(t(s, d, "embeddings"), "vec_id", "embedding",
-        nQueries = 10, k = 5)),
-
-    // Greedy k-center coreset: 8 farthest-point picks + the coverage-
-    // radius curve — diverse-subset selection next to kmeans density.
-    "embedding_coreset" -> ((s: SparkSession, d: String) =>
-      Ann.kcenterSelect(t(s, d, "embeddings"), "vec_id", "embedding", k = 8)),
-
-    // Recall@k of every approximate index vs the exact baseline —
-    // the trust-the-index measurement as a query. Oracle-checked
-    // since r14: every tier it composes (lsh/ivf/pq/ivf_pq/sq8)
-    // replays as SQL, so the panel does too (recallEvalOracleSql).
-    "ann_recall_eval" -> ((s: SparkSession, d: String) =>
-      Ann.recallEval(t(s, d, "embeddings"), "vec_id", "embedding",
-        nQueries = 10, k = 5)),
-
-    "ann_ivf_topk" -> ((s: SparkSession, d: String) =>
-      Ann.ivfTopK(t(s, d, "embeddings"), "vec_id", "embedding", nQueries = 10, k = 5)),
-
-    // Product-quantization ANN: m-byte codes + ADC shortlist + exact
-    // re-rank — the bytes-bound scale path next to IVF/LSH.
-    // Oracle-checked since r14 (stride-sampled codebooks are
-    // relations; the ADC partial floor-grids before its DECIMAL).
-    "ann_pq_topk" -> ((s: SparkSession, d: String) =>
-      Ann.pqTopK(t(s, d, "embeddings"), "vec_id", "embedding", nQueries = 10, k = 5)),
-
-    // IVF-PQ composed: probe nProbe cells, ADC over m residual
-    // codes, exact re-rank — the candidate-volume AND bytes bounds
-    // in one index. Oracle-checked since r14 like its parents.
-    "ann_ivf_pq" -> ((s: SparkSession, d: String) =>
-      Ann.ivfPqTopK(t(s, d, "embeddings"), "vec_id", "embedding",
-        nQueries = 10, k = 5, nProbe = 6, shortlistFactor = 8)),
-
-    // JL random projection 64 -> 16 dims (seeded Rademacher matrix;
-    // oracle-checked: both sides embed the SAME driver-generated
-    // matrix literals, so the replay is the left-fold dot parity).
-    // Long form (vec_id, dim_pos, component): flat sortable schema,
-    // no nested array column in the driver-checked output.
-    "embedding_random_projection" -> ((s: SparkSession, d: String) =>
-      Ann.randomProjectLong(t(s, d, "embeddings"), "vec_id", "embedding",
-        inDim = 64, outDim = 16)),
-
-    "stream_events_30m" -> ((s: SparkSession, d: String) =>
-      t(s, d, "events").groupBy(
-          Temporal.windowStart(col("ts"), 1800).as("window_start"),
-          upper(trim(col("event_type"))).as("event_type_norm"))
-        .agg(count(lit(1)).as("n_events"),
-          coalesce(round(sum(money(col("value"))), 2), lit(0)).cast("double").as("value_sum"))),
-
-    // Sliding-window aggregation (1h window / 30m slide — each event
-    // lands in exactly 2 windows) through Spark's built-in window()
-    // generator: the overlap expansion happens inside codegen, the
-    // aggregate stays map-side partial, and the SAME expression runs
-    // streaming under a watermark (StreamOps.eventsSliding).
-    "stream_events_sliding" -> ((s: SparkSession, d: String) =>
-      t(s, d, "events").filter(col("ts").isNotNull)
-        .groupBy(window(col("ts"), "1 hour", "30 minutes").as("w"),
-          upper(trim(col("event_type"))).as("event_type_norm"))
-        .agg(count(lit(1)).as("n_events"),
-          coalesce(round(sum(money(col("value"))), 2), lit(0)).cast("double").as("value_sum"))
-        .select(col("w").getField("start").as("window_start"),
-          col("event_type_norm"), col("n_events"), col("value_sum"))),
-
-    "sessionize_gap" -> ((s: SparkSession, d: String) =>
-      Sessionize.byGap(t(s, d, "events"), "user_id", "ts", "event_id", "value", gapSec = 1800)),
-
-    // One-row session KPI panel over the gap sessions: counts, exact
-    // duration percentiles, bounce rate, value per session.
-    "ana_session_stats" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.sessionStats(
-        Sessionize.byGap(t(s, d, "events"), "user_id", "ts", "event_id",
-          "value", gapSec = 1800),
-        "user_id")),
-
-    // Sweep-line peak concurrency over the gap sessions: the busiest
-    // instant's open-session count — capacity planning over the
-    // session table. Distributed prefix sum, codegen sweep expansion.
-    "ana_peak_concurrency" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.peakConcurrency(
-        Sessionize.byGap(t(s, d, "events"), "user_id", "ts", "event_id",
-          "value", gapSec = 1800),
-        "session_start", "session_end", Seq("user_id", "session_seq"))),
-
-    "quality_threshold_gate" -> ((s: SparkSession, d: String) =>
-      QualityGate.thresholdGate(cleanseEvents(s, d), eventRules,
-        warnRate = 0.00001, failRate = 0.01)),
-
-    // Typed row contract over the RAW feed: per-field normalize (upper
-    // -or-none) then validate, first-match reason codes, cross-field
-    // at-least-one — the reference's Pydantic chain (contracts.py:
-    // 47-297) as one codegen'd scan over every row.
-    "contract_gate_events" -> ((s: SparkSession, d: String) => {
-      val (fields, cross) = eventsContract
-      RowContract.annotate(t(s, d, "events"), fields, cross)
-    }),
-
-    // Sampled contract pre-flight: the same contract over a bounded
-    // DETERMINISTIC 2000-row sample (lowest md5(event_id) — a pure
-    // function of the data, reproducible across engines/layouts; the
-    // reference validates `validation_sample_size` rows through
-    // Pydantic before the full pass, transforms.py:214-279). The
-    // rank-take runs as TakeOrdered — no global sort.
-    "contract_sample_gate" -> ((s: SparkSession, d: String) => {
-      val (fields, cross) = eventsContract
-      RowContract.sampleGate(t(s, d, "events"), fields, cross,
-        keyCols = Seq("event_id"), n = 2000, warnRate = 0.00001, failRate = 0.01)
-    }),
-
-    "dedup_embedding_cosine" -> ((s: SparkSession, d: String) =>
-      Ann.cosineNearDupPairs(t(s, d, "embeddings"), "vec_id", "embedding",
-        threshold = 0.45)),
-
-    // Mutual k-NN graph over the LSH candidate structure: symmetric
-    // neighborhoods for graph-based clustering/dedup (mutuality
-    // filters hub edges). Oracle-checked since r14 (literal-hyperplane
-    // replay); bundles/mutuality/determinism spec-pinned.
-    "embedding_mutual_knn" -> ((s: SparkSession, d: String) =>
-      Ann.mutualKnnLsh(t(s, d, "embeddings"), "vec_id", "embedding", k = 5)),
-
-    // Embedding-space duplicate CLUSTERS: connected components over
-    // the LSH-verified cosine near-dup pairs — the D16 cluster step
-    // applied to the embedding tier (SemDeDup groups around seeds;
-    // this follows the actual near-dup graph). Oracle-checked since
-    // r14 (literal-hyperplane replay + recursive min-label walk).
-    "dedup_embedding_clusters" -> ((s: SparkSession, d: String) =>
-      TextDedup.connectedComponents(
-        Ann.cosineNearDupPairs(t(s, d, "embeddings"), "vec_id", "embedding",
-          threshold = 0.45),
-        "vec_a", "vec_b")),
-
-    // First principal component by two-stage distributed power
-    // iteration: scatter panel in one pass, recurrence on d-sized
-    // panels, projection on the second corpus pass.
-    "embedding_pca_project" -> ((s: SparkSession, d: String) =>
-      Ann.pcaProject(t(s, d, "embeddings"), "vec_id", "embedding",
-        dim = 64, iterations = 15)),
-
-    // Lloyd's k-means: deterministic md5 seeds, fixed rounds,
-    // grid-quantized components, lowest-cid tie-break.
-    "embedding_kmeans" -> ((s: SparkSession, d: String) =>
-      Ann.kmeans(t(s, d, "embeddings"), "vec_id", "embedding",
-        k = 4, rounds = 5)),
-
-    // The trained centroid panel itself (long form) — what an IVF
-    // index or SemDeDup pass consumes downstream.
-    "embedding_kmeans_centroids" -> ((s: SparkSession, d: String) =>
-      Ann.kmeansCentroids(t(s, d, "embeddings"), "vec_id", "embedding",
-        k = 4, rounds = 5)),
-
-    // Per-cluster compactness/separation panel over the SAME trained
-    // model (k, rounds match embedding_kmeans) — the quality readout
-    // a k change shows its cost in.
-    "embedding_cluster_quality" -> ((s: SparkSession, d: String) =>
-      Ann.clusterQuality(t(s, d, "embeddings"), "vec_id", "embedding",
-        k = 4, rounds = 5)),
-
-    // Centroid-based silhouette per cluster over the same model:
-    // s = (b-a)/max(a,b), mean per cluster — the separation readout.
-    "ml_kmeans_silhouette" -> ((s: SparkSession, d: String) =>
-      Ann.kmeansSilhouette(t(s, d, "embeddings"), "vec_id", "embedding",
-        k = 4, rounds = 5)),
-
-    // Per-cluster p95 distance gate over the same model: the
-    // embedding-space junk filter (out-of-band vectors flagged
-    // against their OWN cluster's distance distribution).
-    "embedding_outlier_filter" -> ((s: SparkSession, d: String) =>
-      Ann.clusterOutliers(t(s, d, "embeddings"), "vec_id", "embedding",
-        k = 4, rounds = 5)),
-
-    // SemDeDup: cluster around k deterministic seeds, near-dup search
-    // within clusters only. k = 4 is what the auto rule
-    // (max(4, ceil(n/512))) yields across every driver SF — pinned
-    // explicitly so the DuckDB oracle can bake the same literal.
-    "dedup_semantic" -> ((s: SparkSession, d: String) =>
-      Ann.semanticDedup(t(s, d, "embeddings"), "vec_id", "embedding",
-        threshold = 0.30, k = 4)),
-
-    // Temperature-scaled mixture weights (p ∝ share^0.5): the
-    // derivation step whose temp_share output feeds sample_domain_mix.
-    "sample_temperature_mix" -> ((s: SparkSession, d: String) =>
-      Sampling.temperatureShares(t(s, d, "documents"), "lang", alpha = 0.5)),
-
-    // DSIR importance weights: English slice as the target
-    // distribution, 64 hashed unigram buckets (see
-    // Sampling.importanceWeights).
-    "sample_importance_dsir" -> ((s: SparkSession, d: String) =>
-      Sampling.importanceWeights(t(s, d, "documents"), "doc_id", "text",
-        col("lang") === "en", nBuckets = 64)),
-
-    // Domain-mixture curation: keep the largest corpus whose language
-    // proportions hit the target shares; per-domain keep rates are
-    // computed from the counts, membership is key mod 65536.
-    "sample_domain_mix" -> ((s: SparkSession, d: String) =>
-      Sampling.domainMix(t(s, d, "documents"), "lang",
-          Map("en" -> 0.40, "de" -> 0.15, "es" -> 0.15, "fr" -> 0.15, "zh" -> 0.15),
-          "doc_id")
-        .select(col("doc_id"), col("lang"), col("source"))),
-
-    "multimodal_features" -> ((s: SparkSession, d: String) =>
-      Multimodal.featuresOf(t(s, d, "documents").select(
-        col("doc_id").as("media_id"),
-        col("text").cast("binary").as("media"),
-        lit("txt").as("format")))),
-
-    // REAL video frame features: every 16th embedding renders to a
-    // 4-frame Motion-JPEG AVI (rotated gray tiles — deterministic,
-    // distinct frames), the RIFF demux extracts the actual frame
-    // payloads and javax.imageio decodes each sampled frame. Rows-only
-    // by protocol (binary decode); demux + round-trip spec-pinned.
-    "video_frame_features" -> ((s: SparkSession, d: String) => {
-      import s.implicits._
-      val rows = t(s, d, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>"))
-        .as[(Long, Seq[Double])]
-        .filter(_._1 % 16 == 0)
-        .map { case (id, v) =>
-          val frames = (0 until 4).map(j =>
-            Multimodal.grayJpeg8x8(v.drop(j * 4) ++ v.take(j * 4)))
-          Multimodal.MediaRow(id, Multimodal.mjpegAvi(frames.toSeq), "avi")
-        }
-      Multimodal.videoFrameFeatures(rows, k = 2).toDF()
-        .orderBy(col("media_id"), col("frame_ix"))
-    }),
-
-    // Image near-dup dedup: embeddings render to REAL 8x8 grayscale
-    // PNGs (every 20th vector additionally renders a one-component-
-    // jittered clone at id+10^6 — the planted near-dup truth, the
-    // dedup_recall_eval discipline), decode back through
-    // javax.imageio, hash with the integer-exact average-hash, and
-    // pair through the shared 64-bit banded hamming sweep. Rows-only
-    // by protocol (binary decode); kernel + banding spec-pinned.
-    "image_ahash_dedup" -> ((s: SparkSession, d: String) => {
-      import s.implicits._
-      val rows = t(s, d, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>"))
-        .as[(Long, Seq[Double])]
-        .flatMap { case (id, v) =>
-          val orig = Multimodal.MediaRow(id, Multimodal.grayPng8x8(v), "png")
-          if (id % 20 == 0) {
-            val jittered = v.toArray; jittered(0) += 0.02
-            Seq(orig, Multimodal.MediaRow(id + 1000000L,
-              Multimodal.grayPng8x8(jittered.toSeq), "png"))
-          } else Seq(orig)
-        }
-      TextDedup.hammingPairs64(Multimodal.aHashes(rows).toDF(),
-        "media_id", "ahash", maxHamming = 4)
-    }),
-
-    // Spectral band energies over REAL WAV decode: embeddings render
-    // to actual 16-bit PCM WAV (period = vector dim, so the spectrum
-    // concentrates on the dim's harmonics), decode through
-    // javax.sound, in-JVM radix-2 FFT, one flat row per band.
-    // Rows-only by protocol (binary decode); FFT + band fold
-    // spec-pinned on known tones.
-    "audio_spectral_bands" -> ((s: SparkSession, d: String) => {
-      import s.implicits._
-      val rows = t(s, d, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>"))
-        .as[(Long, Seq[Double])]
-        .map { case (id, v) =>
-          val samples = Array.tabulate(1024)(i => v(i % v.length)).toSeq
-          Multimodal.MediaRow(id, Multimodal.wavPcm16(samples, 8000), "wav")
-        }
-      Multimodal.spectralBands(rows).toDF()
-    }),
-
-    // Per-channel color statistics over REAL PNG decode (R/G/B means
-    // + luma-std contrast proxy, the flat/blank-asset gate input) —
-    // same bounded-pixel decode discipline as multimodal_features.
-    // Rows-only by protocol (binary decode); exactness spec-pinned.
-    "image_color_stats" -> ((s: SparkSession, d: String) => {
-      import s.implicits._
-      val rows = t(s, d, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>"))
-        .as[(Long, Seq[Double])]
-        .map { case (id, v) =>
-          Multimodal.MediaRow(id, Multimodal.grayPng8x8(v), "png")
-        }
-      Multimodal.colorStats(rows).toDF()
-    }),
-
-    // Built-in session_window twin of sessionize_gap: identical
-    // sessions with zero window-function passes (MergingSessionsExec),
-    // batch and streaming alike — shares the sessionize oracle.
-    "sessionize_window" -> ((s: SparkSession, d: String) =>
-      Sessionize.byGapBuiltin(t(s, d, "events"), "user_id", "ts", "event_id", "value",
-        gapSec = 1800)),
-
-    // Batch twin of streaming first-delivery-wins dedup
-    // (StreamOps.dedupStream): earliest row per key in event-time order.
-    "stream_dedup_events" -> ((s: SparkSession, d: String) =>
-      Dedup.firstByGrain(t(s, d, "events"),
-        grain = Seq("user_id", "event_type"), order = Seq("ts", "event_id"))),
-
-    // Skew-hardened dedup — must equal gold_dedup_grain row for row
-    // (same oracle), while no single task ever ranks a hot grain alone.
-    "gold_dedup_grain_salted" -> ((s: SparkSession, d: String) =>
-      Dedup.latestByGrainSalted(t(s, d, "events"),
-        grain = Seq("user_id", "event_type"), order = Seq("ts", "event_id"))),
-
-    // Deterministic stratified sample: membership is a pure function
-    // of md5(event_id) — replayable in any engine, no shuffle/state.
-    "sample_stratified" -> ((s: SparkSession, d: String) =>
-      Sampling.stratified(t(s, d, "events"), "event_type",
-        rates = Map("CLICK" -> 0.25, "VIEW" -> 0.125), defaultRate = 0.5,
-        keyCols = Seq("event_id"))),
-
-    // Deterministic class balancing: every language kept at the
-    // minority language's DATA-DERIVED rate — flat expected class
-    // histogram, md5-pure membership.
-    "sample_class_balance" -> ((s: SparkSession, d: String) =>
-      Sampling.classBalance(t(s, d, "documents"), "lang",
-        keyCols = Seq("doc_id"))),
-
-    // Exact k-per-stratum sample: each language keeps exactly its 12
-    // smallest-by-md5(doc_id) docs — candidate-bounded ranking, never
-    // a corpus-wide per-stratum sort (Sampling.exactQuota).
-    "sample_exact_quota" -> ((s: SparkSession, d: String) =>
-      Sampling.exactQuota(
-        t(s, d, "documents").select(col("doc_id"), col("lang")),
-        "lang", "doc_id", k = 12)
-        .select(col("lang"), col("doc_id"), col("sample_rank"))),
-
-    // Rank-ensemble quality calibration: per-source percentile ranks
-    // of three incomparable signals, ensembled as their mean — the
-    // scale-free "good for its source" score.
-    "doc_quality_ensemble" -> ((s: SparkSession, d: String) =>
-      CorpusQc.qualityEnsemble(
-        textStats(s, d)
-          .join(t(s, d, "documents").select(col("doc_id"), col("source")), "doc_id"),
-        "doc_id", "source", Seq("quality_score", "n_tokens", "avg_token_len"))),
-
-    // Unicode-script distribution panel: explicit codepoint-range
-    // classes (dialect-identical Java/RE2), residual, and dominant
-    // letter script by fixed precedence.
-    "text_script_profile" -> ((s: SparkSession, d: String) =>
-      CorpusQc.scriptProfile(t(s, d, "documents"), "doc_id", "text")),
-
-    // PII-signal panel: email/IPv4/long-digit-run/URL match counts +
-    // the curation gate flag (measurement twin of text_redact).
-    "pii_profile" -> ((s: SparkSession, d: String) =>
-      CorpusQc.piiProfile(t(s, d, "documents"), "doc_id", "text")),
-
-    // BM25 top-k lexical retrieval against a fixed query term set —
-    // seed-set expansion; ln only on the idf panel (1e-4 floor), term
-    // scores 1e-6-floored before the decimal sum, cut by TakeOrdered.
-    "text_bm25_topk" -> ((s: SparkSession, d: String) =>
-      CorpusQc.bm25TopK(t(s, d, "documents"), "doc_id", "text",
-        Seq("spark", "join", "window"), topK = 25)),
-
-    // Hybrid retrieval: reciprocal-rank fusion (k=60) of the BM25
-    // lexical top-25 with the exact-cosine semantic top-25 anchored
-    // on doc 0's embedding — the calibration-free fusion a hybrid
-    // search stack serves.
-    "search_hybrid_rrf" -> ((s: SparkSession, d: String) => {
-      val docs = t(s, d, "documents")
-      val lex = CorpusQc.bm25TopK(docs, "doc_id", "text",
-          Seq("spark", "join", "window"), topK = 25)
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("bm25_score").desc, col("doc_id"))))
-      val emb = t(s, d, "embeddings").join(
-        docs.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi")
-      val sem = Ann.cosineTopK(emb, "vec_id", "embedding", nQueries = 1, k = 25)
-        .select(col("neighbor_id").as("doc_id"), col("rank"))
-      CorpusQc.rrfFuse(lex, sem, "doc_id", kConst = 60, topK = 10)
-    }),
-
-    // Power-of-2 length histogram: bucket = bit length of the token
-    // count (floor(log2)+1 with no libm), exact integer boundaries.
-    "doc_length_histogram" -> ((s: SparkSession, d: String) =>
-      CorpusQc.lengthHistogram(t(s, d, "documents"), "doc_id", "text")),
-
-    // Click-to-purchase attribution (batch twin of the stream-stream
-    // watermarked join, StreamOps.attributionJoin): equi-key + a
-    // both-ways-bounded event-time residual — a range join that plans
-    // as a hash join on the key, never a cartesian. 30-minute window.
-    "attrib_click_purchase" -> ((s: SparkSession, d: String) => {
-      val ev = t(s, d, "events").filter(col("user_id").isNotNull)
-      val clicks = ev.filter(upper(trim(col("event_type"))) === "CLICK")
-        .select(col("user_id"), col("ts").as("click_ts"), col("event_id").as("click_id"))
-      val purchases = ev.filter(upper(trim(col("event_type"))) === "PURCHASE")
-        .select(col("user_id"), col("ts").as("purchase_ts"),
-          col("event_id").as("purchase_id"), col("value").as("purchase_value"))
-      purchases.join(clicks,
-          purchases("user_id") === clicks("user_id") &&
-            col("click_ts") >= col("purchase_ts") - expr("INTERVAL 1800 SECONDS") &&
-            col("click_ts") <= col("purchase_ts"),
-          "inner")
-        .drop(clicks("user_id"))
-        .select(col("purchase_id"), col("user_id"), col("purchase_ts"),
-          col("purchase_value"), col("click_id"), col("click_ts"))
-    }),
-
-    // Quality-weighted corpus sampling: exact quartile THRESHOLDS of
-    // the text_stats quality score through the rank brackets (the
-    // score is a near-unique ratio — the builtin percentile would
-    // merge the whole corpus's value map in one reducer) broadcast as
-    // one row — never a global NTILE window over the corpus —, tier
-    // by comparison, then each tier keeps its own deterministic md5
-    // rate (top tier whole, bottom 12.5%) — upweight quality without
-    // losing replayability.
-    "sample_quality_weighted" -> ((s: SparkSession, d: String) => {
-      val q = textStats(s, d).select(col("doc_id"), col("quality_score"))
-        .ckptPartitioned()
-      val thr = Profiling.exactQuantilesBy(q, Seq.empty, "quality_score",
-          Seq(0.25, 0.5, 0.75))
-        .agg(
-          max(when(col("quantile") === 0.25, col("value"))).as("p25"),
-          max(when(col("quantile") === 0.5, col("value"))).as("p50"),
-          max(when(col("quantile") === 0.75, col("value"))).as("p75"))
-      val tiered = q.crossJoin(broadcast(thr))
-        .withColumn("quality_tier",
-          when(col("quality_score") <= col("p25"), "T1")
-            .when(col("quality_score") <= col("p50"), "T2")
-            .when(col("quality_score") <= col("p75"), "T3")
-            .otherwise("T4"))
-        .drop("p25", "p50", "p75")
-      Sampling.stratified(tiered, "quality_tier",
-        rates = Map("T1" -> 0.125, "T2" -> 0.25, "T3" -> 0.5, "T4" -> 1.0),
-        defaultRate = 1.0, keyCols = Seq("doc_id"))
-    }),
-
-    // Deterministic training-order shuffle: md5-rank permutation
-    // position + fixed-size shard assignment via the distributed
-    // prefix sum (never a global ROW_NUMBER window; orderBy(rand())
-    // is neither reproducible nor resumable).
-    "corpus_shuffle" -> ((s: SparkSession, d: String) =>
-      Sampling.corpusShuffle(t(s, d, "documents"), "doc_id", shardSize = 256)
-        .select("doc_id", "shuffle_hash", "shuffle_pos", "shard", "shard_pos")),
-
-    // Deterministic contrastive negatives: 4 per anchor as a pure
-    // function of (doc_id, index) — nonzero rotation of the md5-rank
-    // permutation, never self-pairing, reproducible across engines.
-    "sample_negative_pairs" -> ((s: SparkSession, d: String) =>
-      Sampling.negativePairs(t(s, d, "documents"), "doc_id", k = 4)),
-
-    // Quality-greedy selection under a global token budget: keep the
-    // best docs while the running token total fits — the "best corpus
-    // that fits the training budget" cut, running total = distributed
-    // prefix sum of exact integer token counts.
-    "sample_token_budget" -> ((s: SparkSession, d: String) =>
-      Sampling.tokenBudget(
-        textStats(s, d).select(col("doc_id"), col("quality_score"), col("n_tokens")),
-        "doc_id", "quality_score", "n_tokens", budget = 15000L)),
-
-    // Cross-doc repeated-span share: per doc, the fraction of its
-    // distinct 10-token spans that appear in >= 1 other document —
-    // the measurement behind exact-substring dedup (licenses,
-    // templates, injected boilerplate).
-    "dup_span_stats" -> ((s: SparkSession, d: String) =>
-      CorpusQc.dupSpanStats(t(s, d, "documents"), "doc_id", "text")),
-
-    // Exact-substring dedup (the acting step dup_span_stats measures):
-    // every duplicated 10-token span is removed from all occurrences
-    // but the globally first; docs are rebuilt from surviving tokens.
-    "dedup_exact_substring" -> ((s: SparkSession, d: String) =>
-      TextDedup.removeDupSpans(t(s, d, "documents"), "doc_id", "text")),
-
-    // Source-level quality gate: a whole source is kept/dropped on
-    // its aggregate quality — domain filtering, the step per-doc
-    // gates cannot express.
-    "source_quality_gate" -> ((s: SparkSession, d: String) => {
-      val q = textStats(s, d).select(col("doc_id"), col("quality_score"))
-      val src = t(s, d, "documents").select(col("doc_id"), col("source"))
-      CorpusQc.sourceQualityGate(src.join(q, "doc_id"), "source",
-        "quality_score", minDocs = 10L, minMeanQuality = 0.5)
-    }),
-
-    // Multi-level ROLLUP rollup (mode × day → mode totals → grand
-    // total) in ONE pass — Catalyst expands grouping sets with
-    // map-side partial aggregation, replacing three separate scans.
-    "ana_rollup_demand" -> ((s: SparkSession, d: String) =>
-      t(s, d, "events")
-        .rollup(upper(trim(col("event_type"))).as("event_type_norm"),
-          to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("n_events"),
-          coalesce(round(sum(money(col("value"))), 2), lit(0)).cast("double")
-            .as("value_sum"))),
-
-    // Full CUBE over (type, day) — all four grouping sets (detail,
-    // per-type, per-day, grand total) in ONE pass via Catalyst's
-    // grouping-set Expand with map-side partials, same cost class as
-    // the rollup's three; grouping_id disambiguates a subtotal NULL
-    // from a NULL in the data (the rollup can't see per-day totals
-    // at all — that's the set CUBE adds).
-    "ana_cube_demand" -> ((s: SparkSession, d: String) =>
-      t(s, d, "events")
-        .cube(upper(trim(col("event_type"))).as("event_type_norm"),
-          to_date(col("ts")).as("day"))
-        .agg(grouping_id().as("grouping_set_id"),
-          count(lit(1)).as("n_events"),
-          coalesce(round(sum(money(col("value"))), 2), lit(0)).cast("double")
-            .as("value_sum"))),
-
-    // Leakage-safe train/val/test split: keyed on user_id (NOT the
-    // row id), so every row of a user lands in one split — groups
-    // split across train and test leak shared context into eval. The
-    // assignment is a pure function of the key: stable across
-    // engines, re-runs and repartitions.
-    "sample_split_assign" -> ((s: SparkSession, d: String) =>
-      Sampling.splitAssign(t(s, d, "events"),
-        Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1), Seq("user_id"))),
-
-    // 5-fold CV assignment keyed on user_id — same leakage argument
-    // as the split assigner, exact hash-space tiling, zero shuffle.
-    "sample_kfold_assign" -> ((s: SparkSession, d: String) =>
-      Sampling.kfoldAssign(t(s, d, "events"), k = 5, Seq("user_id"))),
-
-    // First BPE merge-step pair counts over the corpus vocabulary
-    // (tokenizer-training primitive; frequency-weighted).
-    "bpe_pair_counts" -> ((s: SparkSession, d: String) =>
-      CorpusQc.bpeTopPairs(t(s, d, "documents"), "text", topN = 20)),
-
-    // Greedy BPE TRAINING: six merge rounds over the vocab relation —
-    // the learned merge table a tokenizer ships.
-    "bpe_train_merges" -> ((s: SparkSession, d: String) =>
-      CorpusQc.bpeTrainMerges(t(s, d, "documents"), "text", rounds = 6)),
-
-    // The merges applied back to the corpus: per-doc BPE symbol
-    // counts (the packing-budget panel).
-    "bpe_encode" -> ((s: SparkSession, d: String) =>
-      CorpusQc.bpeEncode(t(s, d, "documents"), "doc_id", "text", rounds = 6)),
-
-    // Unigram-LM (SentencePiece-style) tokenizer TRAINING: substring
-    // seed, two hard-EM rounds (unrolled Viterbi E-step, prune +
-    // re-estimate M-step) — the shipped (piece, usage, log_prob) model.
-    "unigram_train" -> ((s: SparkSession, d: String) =>
-      CorpusQc.unigramTrain(t(s, d, "documents"), "text")),
-
-    // The unigram model applied back to the corpus: per-doc token and
-    // piece counts (the bpe_encode twin for the pruning tokenizer).
-    "unigram_encode" -> ((s: SparkSession, d: String) =>
-      CorpusQc.unigramEncode(t(s, d, "documents"), "doc_id", "text")),
-
-    // WordPiece TRAINING: six likelihood-scored merge rounds
-    // (score = n_pair / (n_left * n_right) — frequent pairs of RARE
-    // symbols win) — the third production tokenizer's merge table.
-    "wordpiece_train" -> ((s: SparkSession, d: String) =>
-      CorpusQc.wordpieceTrainMerges(t(s, d, "documents"), "text", rounds = 6)),
-
-    // WordPiece ENCODE: greedy longest-match-first against the
-    // role-keyed vocabulary (initial pieces bare, continuations
-    // ##-prefixed, char inventory in both roles) — per-doc token and
-    // piece counts, the production WordPiece inference rule.
-    "wordpiece_encode" -> ((s: SparkSession, d: String) =>
-      CorpusQc.wordpieceEncode(t(s, d, "documents"), "doc_id", "text", rounds = 6)),
-
-    // Tokenizer-selection panel: the same corpus through all THREE
-    // production tokenizers, corpus-level compression side by side.
-    "tokenizer_compare" -> ((s: SparkSession, d: String) =>
-      CorpusQc.tokenizerCompare(t(s, d, "documents"), "doc_id", "text")),
-
-    // Corpus token frequency top-N (training-data vocabulary stats):
-    // explode + one partial-aggregable shuffle + TakeOrdered.
-    "text_token_topn" -> ((s: SparkSession, d: String) =>
-      t(s, d, "documents")
-        .select(explode(TextOps.tokens(col("text"))).as("token"))
-        .filter(col("token") =!= "")
-        .groupBy(col("token"))
-        .agg(count(lit(1)).as("n_occurrences"))
-        .orderBy(col("n_occurrences").desc, col("token"))
-        .limit(50)),
-
-    // Corpus TF-IDF top terms per document: tf (one doc/token
-    // shuffle), df (one token shuffle), broadcast 1-row corpus size,
-    // per-doc top-3 by a doc-partitioned rank window. The idf is the
-    // PMI-ranked collocations (count floor + quantized ln) — the
-    // vocab-mining view of the corpus bigram space.
-    "text_pmi_bigrams" -> ((s: SparkSession, d: String) =>
-      CorpusQc.pmiBigrams(t(s, d, "documents"), "text")),
-
-    // Zipf-exponent OLS over the frequency-ranked vocabulary
-    // (distributed prefix-sum ranks, quantized-log moments).
-    "text_zipf_fit" -> ((s: SparkSession, d: String) =>
-      CorpusQc.zipfFit(t(s, d, "documents"), "text")),
-
-    // Heaps'-law vocabulary-growth fit: cumulative type counts at 16
-    // md5-bucket boundary points, log-log OLS → (k, beta) — "will 10x
-    // more crawl give 10x more vocabulary".
-    "text_heaps_fit" -> ((s: SparkSession, d: String) =>
-      CorpusQc.heapsFit(t(s, d, "documents"), "doc_id", "text")),
-
-    // Vocabulary coverage curve: share of token occurrences the top-k
-    // types cover, per candidate vocab size (prefix-sum ranks).
-    "text_vocab_coverage" -> ((s: SparkSession, d: String) =>
-      CorpusQc.vocabCoverage(t(s, d, "documents"), "text")),
-
-    // Flesch readability panel (vowel-group syllables, shuffle-free).
-    "text_readability" -> ((s: SparkSession, d: String) =>
-      CorpusQc.readability(t(s, d, "documents"), "doc_id", "text")),
-
-    // Corpus bigram conditional vs unigram entropy — the one-row
-    // language-structure fingerprint.
-    "text_bigram_entropy" -> ((s: SparkSession, d: String) =>
-      CorpusQc.bigramEntropy(t(s, d, "documents"), "text")),
-
-    // BM25-style RATIONAL form (n-df+0.5)/(df+0.5) — pure +,*,/ on
-    // exact integers, so any engine replays it bit for bit (ln()
-    // differs across libm implementations in the last ulp).
-    "text_tfidf_topn" -> ((s: SparkSession, d: String) => {
-      val tok = t(s, d, "documents")
-        .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("token"))
-        .filter(col("token") =!= "")
-      val tf = tok.groupBy(col("doc_id"), col("token")).agg(count(lit(1)).as("tf"))
-      val dfreq = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
-      val total = t(s, d, "documents").agg(count(lit(1)).as("n_docs"))
-      val w = Window.partitionBy(col("doc_id")).orderBy(col("tfidf").desc, col("token"))
-      tf.join(dfreq, "token").crossJoin(broadcast(total))
-        .withColumn("tfidf",
-          round(col("tf") * (col("n_docs") - col("df") + lit(0.5))
-            / (col("df") + lit(0.5)), 6))
-        .withColumn("term_rank", row_number().over(w))
-        .filter(col("term_rank") <= 3)
-        .select(col("doc_id"), col("term_rank"), col("token"),
-          col("tf"), col("df"), col("tfidf"))
-    }),
-
-    // Feature hashing (the hashing trick): token counts folded into a
-    // fixed 256-bucket sparse vector per doc, L2-normalized — the
-    // vocabulary-free featurization a downstream linear model eats.
-    "text_feature_hash" -> ((s: SparkSession, d: String) =>
-      CorpusQc.featureHash(t(s, d, "documents"), "doc_id", "text",
-        dim = 256)),
-
-    // Sentence-level shape stats per doc (split on [.!?]+): sentence
-    // count, mean tokens per sentence, longest sentence in chars —
-    // the wall-of-text / staccato signals a prose gate reads.
-    "text_sentence_stats" -> ((s: SparkSession, d: String) =>
-      CorpusQc.sentenceStats(t(s, d, "documents"), "doc_id", "text")),
-
-    // Embedding quality gate — see Ann.qualityGate (vector twin of
-    // the document/event gates; testdata vectors are 64-dim).
-    "embedding_quality_gate" -> ((s: SparkSession, d: String) =>
-      Ann.qualityGate(t(s, d, "embeddings"), "vec_id", "embedding", expectedDim = 64)),
-
-    // Distributed per-label vector mean — see Ann.centroids.
-    "embedding_centroids" -> ((s: SparkSession, d: String) =>
-      Ann.centroids(t(s, d, "embeddings"), "label", "embedding")),
-
-    // Per-dimension mean/std/min/max + variance-share anisotropy —
-    // the embedding QC panel before any geometry-dependent op.
-    "embedding_dim_stats" -> ((s: SparkSession, d: String) =>
-      Ann.dimStats(t(s, d, "embeddings"), "embedding")),
-
-    // One-scan table statistics profile (the ANALYZE TABLE / catalog-
-    // stats step of a lake load — the reference's build_catalog row
-    // accounting, widened to column stats). Counts/nulls/min/max are
-    // partial-aggregable scalars (map-side reduced to one row); the
-    // two EXACT distincts are not — Catalyst plans them via Expand +
-    // a shuffle keyed on the distinct values (the price of exactness,
-    // paid here for oracle parity). When a profile must stay a true
-    // 1-row mergeable reduce at any cardinality, that is exactly
-    // what sketch_profile's HLL variant below is for.
-    "table_profile_events" -> ((s: SparkSession, d: String) =>
-      t(s, d, "events").agg(
-        count(lit(1)).as("n_rows"),
-        sum(col("user_id").isNull.cast("long")).as("user_id_nulls"),
-        min(col("user_id")).as("user_id_min"),
-        max(col("user_id")).as("user_id_max"),
-        countDistinct(col("user_id")).as("user_id_distinct"),
-        sum(col("value").isNull.cast("long")).as("value_nulls"),
-        min(col("value")).as("value_min"),
-        max(col("value")).as("value_max"),
-        min(col("ts")).as("ts_min"),
-        max(col("ts")).as("ts_max"),
-        countDistinct(col("event_type")).as("event_type_distinct"))),
-
-    // END-TO-END bloom-prune proof under the driver gate: the
-    // (bloom-pruned fact) ⋈ dim result must be IDENTICAL to the plain
-    // join — no false negatives means the oracle is simply the join
-    // without the bloom. The prune only cuts shuffle volume.
-    "join_bloom_pruned" -> ((s: SparkSession, d: String) => {
-      val ev = t(s, d, "events")
-      val dim = ev.filter(col("user_id").isNotNull && col("user_id") % 7 === 0)
-        .select(col("user_id")).distinct()
-      val bloom = Prejoin.keyBloom(dim, "user_id", expectedItems = 100000)
-      Prejoin.pruneFactByDimKeys(ev, "user_id", bloom)
-        .join(dim, "user_id")
-        .groupBy(upper(trim(col("event_type"))).as("event_type_norm"))
-        .agg(count(lit(1)).as("n_events"),
-          countDistinct(col("user_id")).as("n_users"),
-          coalesce(round(sum(money(col("value"))), 2), lit(0)).cast("double")
-            .as("value_sum"))
-    }),
-
-    // Salted skew join: output must be EXACTLY the plain join's (the
-    // oracle runs the unsalted join) — salting redistributes the
-    // shuffle, never the semantics. user-dim enrichment keyed on the
-    // (skewable) user_id, salt derived from event_id.
-    "join_salted" -> ((s: SparkSession, d: String) => {
-      val ev = t(s, d, "events").filter(col("user_id").isNotNull)
-      val dim = ev.groupBy(col("user_id"))
-        .agg(count(lit(1)).as("user_events"))
-      Prejoin.saltedJoin(ev, dim, Seq("user_id"), "event_id", saltN = 8)
-        .select(col("event_id"), col("user_id"), col("user_events"))
-    }),
-
-    // Shuffle-skew diagnosis: per-key row counts, the top-5 hottest
-    // keys with their share and multiple-of-average — the measurement
-    // that decides WHERE salting (gold_dedup_grain_salted) is worth
-    // its overhead. One partial-aggregable shuffle + TakeOrdered.
-    "skew_hot_keys" -> ((s: SparkSession, d: String) => {
-      val perKey = t(s, d, "events").filter(col("user_id").isNotNull)
-        .groupBy(col("user_id")).agg(count(lit(1)).as("n_rows"))
-      val tot = perKey.agg(count(lit(1)).as("n_keys"),
-        sum(col("n_rows")).as("total_rows"))
-      // NO rounding on the shares: the raw division chain is IEEE-
-      // exact in any engine, while round-to-2dp diverges the moment a
-      // quotient's shortest decimal lands on a .5 boundary (85 keys of
-      // 10000 rows over 150 keys = exactly "1.275" — Spark rounds the
-      // string up, DuckDB rounds the binary down).
-      perKey.crossJoin(broadcast(tot))
-        .withColumn("pct_of_total", lit(100.0) * col("n_rows") / col("total_rows"))
-        .withColumn("x_avg",
-          col("n_rows") / (col("total_rows") / col("n_keys").cast("double")))
-        .select(col("user_id"), col("n_rows"), col("pct_of_total"), col("x_avg"))
-        .orderBy(col("n_rows").desc, col("user_id"))
-        .limit(5)
-    }),
-
-    // Equi-width value histogram (see Profiling.histogram) — the
-    // distribution profile next to table_profile_events.
-    "table_histogram_value" -> ((s: SparkSession, d: String) =>
-      Profiling.histogram(t(s, d, "events"), "value", k = 20)),
-
-    // Pairwise Pearson correlation over the fact's measures — one
-    // scan, exact DECIMAL moments, pair expansion on the 1-row panel.
-    "table_corr_pairs" -> ((s: SparkSession, d: String) =>
-      Profiling.corrPairs(t(s, d, "lineitem"),
-        Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"))),
-
-    // First-order partial correlation: does quantity↔extendedprice
-    // survive holding the per-unit tax fixed — the confounder audit
-    // over the same one-scan moment panel as table_corr_pairs.
-    "table_corr_partial" -> ((s: SparkSession, d: String) =>
-      Profiling.partialCorr(t(s, d, "lineitem"),
-        "l_quantity", "l_extendedprice", "l_tax")),
-
-    // Spearman rank correlation (monotone association) between the
-    // fact's quantity and price — doubled midranks over the
-    // distinct-value panels through the two-phase prefix sum; exact
-    // integer moments, one fixed-order double step at the edge.
-    "table_corr_spearman" -> ((s: SparkSession, d: String) =>
-      Profiling.spearmanPair(t(s, d, "lineitem"),
-        "l_quantity", "l_extendedprice")),
-
-    // Kendall tau-b between two discrete ordinal measures —
-    // concordant/discordant mass from the joint cell panel's
-    // broadcast self-join (panel², never data²), tie-adjusted.
-    "table_corr_kendall" -> ((s: SparkSession, d: String) =>
-      Profiling.kendallTauB(t(s, d, "lineitem"),
-        "l_quantity", "l_linenumber")),
-
-    // Missingness co-occurrence audit: do NULLs arrive together?
-    // phi per column pair over one integer-moment scan.
-    "table_missingness" -> ((s: SparkSession, d: String) =>
-      Profiling.missingnessPairs(t(s, d, "events"),
-        Seq("user_id", "event_type", "value", "props"))),
-
-    // Categorical-dependence audit: per-cell mutual-information panel
-    // between day type and mode over the validated serving frame.
-    "table_mutual_info" -> ((s: SparkSession, d: String) =>
-      Profiling.mutualInfo(servingValid(s, d), "tipo_dia", "event_type_norm")),
-
-    // Chi-square independence test + Cramér's V over the same pair
-    // the MI panel profiles — test statistic and normalized effect
-    // size; share-space terms keep the §5 grid magnitude-safe.
-    "table_chi2_assoc" -> ((s: SparkSession, d: String) =>
-      Profiling.chi2Assoc(servingValid(s, d), "tipo_dia", "event_type_norm")),
-
-    // Pairwise Cramer's V association matrix over the serving frame's
-    // categoricals - the categorical twin of table_corr_pairs.
-    "table_cramers_pairs" -> ((s: SparkSession, d: String) =>
-      Profiling.cramersVPairs(servingValid(s, d),
-        Seq("tipo_dia", "event_type_norm", "prop_k"))),
-
-    // Shannon-entropy panel over the serving frame's categoricals.
-    "table_entropy" -> ((s: SparkSession, d: String) =>
-      Profiling.entropyProfile(servingValid(s, d),
-        Seq("tipo_dia", "event_type_norm", "prop_k"))),
-
-    // Type-inference audit over a simulated all-VARCHAR bronze frame:
-    // per column the lexical-form match counts and the narrowest type
-    // covering >= 99% of non-empty values — the evidence-derived
-    // column spec the TRY_CAST coercion consumes. Anchored regex in
-    // the cross-engine subset, never try_cast (whose string->number
-    // edges differ across engines).
-    "silver_type_infer" -> ((s: SparkSession, d: String) => {
-      val ev = t(s, d, "events")
-      val bronze = ev.select(
-        col("event_id").cast("string").as("event_id"),
-        col("user_id").cast("string").as("user_id"),
-        money(col("value")).cast("string").as("value"),
-        date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("ts"),
-        col("event_type"), col("props"))
-      TypedCoerce.inferTypes(bronze,
-        Seq("event_id", "user_id", "value", "ts", "event_type", "props"))
-    }),
-
-    // Schema drift between two bronze drops (split at the 2024-01-15
-    // cutover the producer changed its export on): the old drop ships
-    // integer values, date-only timestamps and no props column — the
-    // audit reads ADDED / TYPE_CHANGED / UNCHANGED plus null-rate
-    // drift per column.
-    "audit_schema_drift" -> ((s: SparkSession, d: String) => {
-      val ev = t(s, d, "events")
-      val cutoff = to_date(lit("2024-01-15"))
-      val oldB = ev.filter(to_date(col("ts")) <= cutoff).select(
-        col("event_id").cast("string").as("event_id"),
-        col("user_id").cast("string").as("user_id"),
-        floor(col("value")).cast("long").cast("string").as("value"),
-        date_format(col("ts"), "yyyy-MM-dd").as("ts"),
-        col("event_type"))
-      val newB = ev.filter(to_date(col("ts")) > cutoff).select(
-        col("event_id").cast("string").as("event_id"),
-        col("user_id").cast("string").as("user_id"),
-        money(col("value")).cast("string").as("value"),
-        date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("ts"),
-        col("event_type"), col("props"))
-      TypedCoerce.schemaDrift(oldB, newB,
-        Seq("event_id", "user_id", "value", "ts", "event_type"),
-        Seq("event_id", "user_id", "value", "ts", "event_type", "props"))
-    }),
-
-    // Most-common-values panel (the ANALYZE MCV statistic): top-5
-    // values per column with exact counts + raw shares; two-phase
-    // salted rank, never a global sort of a value panel.
-    "table_topk_values" -> ((s: SparkSession, d: String) =>
-      Profiling.topValues(t(s, d, "events"),
-        Seq("event_type", "user_id", "props"), k = 5)),
-
-    // Mergeable-HLL distinct rollup (daily sketches → weekly union) —
-    // the reaggregable COUNT(DISTINCT) shape; rows-only by protocol
-    // (sketch internals), mergeability spec-pinned.
-    "sketch_hll_rollup" -> ((s: SparkSession, d: String) =>
-      Profiling.hllRollup(t(s, d, "events"), "ts", "user_id")),
-
-    // Mergeable-KLL quantile rollup (daily sketches -> weekly merged
-    // percentiles) — the reaggregable-percentile shape Spark 4 has no
-    // built-in state for; native TypedImperativeAggregate. Rows-only
-    // by protocol (sketch internals), envelope pinned by the error
-    // panel + spec.
-    "sketch_kll_rollup" -> ((s: SparkSession, d: String) =>
-      Profiling.kllRollup(t(s, d, "events"), "ts", "value")),
-
-    // KLL accuracy panel: the distributed sketch's quantile answers
-    // vs their EXACT empirical ranks, checked against the declared
-    // O(1/k) envelope — the evidence licensing stored quantile
-    // sketches. Rows-only by the sketch rule.
-    "sketch_kll_error" -> ((s: SparkSession, d: String) =>
-      Profiling.kllErrorPanel(t(s, d, "events"), "value")),
-
-    // HLL set algebra (rows-only by protocol): user overlap between
-    // the two snapshot halves — the retention/overlap question the
-    // stored-sketch tier answers without a rescan.
-    // HLL inclusion–exclusion overlap on the ORACLE-REPLAYABLE
-    // md5-register sketch (r13 conversion: the DataSketches-backed
-    // hllOverlap stays as the library-sketch interop variant,
-    // spec-pinned; this registration hash-compares end to end —
-    // registers are a SQL relation, estimates exact-integer `div`
-    // with the gridded-ln linear-counting branch).
-    "sketch_overlap" -> ((s: SparkSession, d: String) => {
-      val ev = t(s, d, "events").filter(col("ts").isNotNull)
-      Profiling.hllOverlapReplayable(ev, "user_id",
-        to_date(col("ts")) <= lit("2024-01-15"),
-        to_date(col("ts")) > lit("2024-01-15"), lgK = 12)
-    }),
-
-    // KMV/theta-sketch set algebra (same slices as sketch_overlap):
-    // the principled mergeable INTERSECTION/DIFFERENCE — a k-min
-    // keyspace sample scaled by theta, whose error does not blow up
-    // on small overlaps the way HLL inclusion–exclusion does. Built
-    // on md5Long60, so the sketch state is a SQL relation and the
-    // whole panel is hash-gated against the oracle (NOT rows-only).
-    "sketch_theta_ops" -> ((s: SparkSession, d: String) => {
-      val ev = t(s, d, "events").filter(col("ts").isNotNull)
-      Profiling.kmvOverlap(ev, "user_id",
-        to_date(col("ts")) <= lit("2024-01-15"),
-        to_date(col("ts")) > lit("2024-01-15"), k = 256)
-    }),
-
-    // Mergeable KMV distinct rollup (daily k-min lists -> weekly
-    // estimates): the D65 HLL-rollup shape with EXACT merge (weekly
-    // rollup == direct weekly sketch, spec-pinned) and a SQL-relation
-    // sketch state, so the stored-sketch rollup tier gets a
-    // hash-gated member next to the rows-only HLL/KLL ones.
-    "sketch_kmv_rollup" -> ((s: SparkSession, d: String) =>
-      Profiling.kmvRollup(t(s, d, "events"), "ts", "user_id", k = 256)),
-
-    // Count-min sketch frequency estimation (batch twin of the
-    // Misra–Gries streaming sink): 4x256 md5-salted cell grid over
-    // corpus tokens, per-token min-of-cells estimate vs exact for the
-    // top-40 — constant sketch memory regardless of vocabulary.
-    "sketch_countmin" -> ((s: SparkSession, d: String) =>
-      Profiling.countMinTopN(
-        t(s, d, "documents").select(
-          explode(TextOps.tokens(col("text"))).as("tok"))
-          .filter(col("tok") =!= ""),
-        "tok", d = 4, w = 256, topN = 40)),
-
-    // Interval-OVERLAP range join: same-customer order pairs whose
-    // fulfillment windows intersect, counted per customer — both
-    // sides bucket-exploded, pair ownership in the first shared
-    // bucket (no distinct).
-    "join_interval_overlap" -> ((s: SparkSession, d: String) => {
-      val epoch = lit("1970-01-01").cast("date")
-      val shipEnd = t(s, d, "lineitem")
-        .groupBy(col("l_orderkey"))
-        .agg(max(to_date(col("l_shipdate"))).as("ship_end"))
-      // the interval relation feeds BOTH join sides: materialize the
-      // orders⋈shipEnd derivation once (each side previously re-ran
-      // the lineitem aggregate + join through its own lineage)
-      val iv = t(s, d, "orders")
-        .join(shipEnd, col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey").as("cust"), col("o_orderkey").as("ok"),
-          datediff(to_date(col("o_orderdate")), epoch).cast("long").as("lo"),
-          datediff(col("ship_end"), epoch).cast("long").as("hi"))
-        .ckptPartitioned()
-      def side(suffix: String) = iv.select(col("cust").as(s"cust$suffix"),
-        col("ok").as(s"ok$suffix"), col("lo").as(s"lo$suffix"),
-        col("hi").as(s"hi$suffix"))
-      RangeJoin.intervalOverlap(side("_a"), "lo_a", "hi_a",
-          side("_b"), "lo_b", "hi_b", bucketWidth = 64)
-        .filter(col("cust_a") === col("cust_b") && col("ok_a") < col("ok_b"))
-        .groupBy(col("cust_a").as("custkey"))
-        .agg(count(lit(1)).as("n_overlapping_pairs"))
-    }),
-
-    // Per-customer fulfillment-interval UNION: merged busy blocks,
-    // covered days vs span — the utilization view over the same
-    // closed [orderdate, last-shipment] intervals E18 pairs up.
-    // Key-bounded windows, exact long lengths, one raw quotient.
-    "ana_interval_union" -> ((s: SparkSession, d: String) => {
-      val epoch = lit("1970-01-01").cast("date")
-      val shipEnd = t(s, d, "lineitem")
-        .groupBy(col("l_orderkey"))
-        .agg(max(to_date(col("l_shipdate"))).as("ship_end"))
-      val iv = t(s, d, "orders")
-        .join(shipEnd, col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey").as("custkey"),
-          datediff(to_date(col("o_orderdate")), epoch).cast("long").as("lo"),
-          datediff(col("ship_end"), epoch).cast("long").as("hi"))
-      AnalyticsPack.intervalUnion(iv, "custkey", "lo", "hi")
-        .withColumnRenamed("key", "custkey")
-    }),
-
-    // RFM segmentation over orders: quartile-scored recency/
-    // frequency/monetary + a first-match segment ladder. One
-    // customer-panel collapse, broadcast anchor + exact-percentile
-    // thresholds, pure codegen scoring.
-    "ana_rfm_segments" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.rfmSegments(t(s, d, "orders"),
-        "o_custkey", "o_orderdate", "o_totalprice")),
-
-    // Forecast backtest: persistence (lag-1) and seasonal-naive
-    // (lag-7) baselines scored per type (MAE/MAPE/bias) — the
-    // evaluation tier any shipped forecast must beat; calendar lag
-    // joins on the day panel, never row offsets.
-    // ACF diagnostic panel (lags 1..7, calendar-lagged): which lags
-    // carry signal — the measurement under the forecast family.
-    "ana_autocorrelation" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.autocorrelation(servingValid(s, d), maxLag = 7)),
-
-    // Ljung-Box portmanteau whiteness verdict over the ACF panel
-    // (even dof -> the exact Poisson-sum chi2 tail, no gamma needed).
-    "ana_ljung_box" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.ljungBox(servingValid(s, d), maxLag = 6)),
-
-    // Wald-Wolfowitz runs test: above/below-median run counts vs the
-    // exact exchangeability moments - the randomness screen
-    // orthogonal to the ACF's linear-correlation view.
-    "ana_runs_test" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.runsTest(servingValid(s, d))),
-
-    // Mann-Kendall monotone-trend significance (tie-corrected,
-    // continuity-corrected) - the verdict ana_theil_sen's slope
-    // estimate pairs with.
-    "ana_mann_kendall" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.mannKendall(servingValid(s, d))),
-
-    // Friedman blocked-rank test across day-of-week treatments: the
-    // formal seasonality verdict (complete Monday-aligned weeks as
-    // blocks, k=7 -> the even-dof exact chi2 tail).
-    "ana_friedman_dow" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.friedmanDow(servingValid(s, d))),
-
-    // PACF (Durbin–Levinson over the ACF panel): the AR-order
-    // diagnostic — where the ACF of an AR process decays forever,
-    // its PACF cuts off at the true lag order.
-    "ana_pacf" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.pacf(servingValid(s, d), maxLag = 7)),
-
-    // AR(3) 7-day demand forecast — the autoregressive member of the
-    // forecast family: Yule–Walker coefficients via Durbin–Levinson
-    // over the ACF panel, then the mean-centered multi-step recursion
-    // (reverts toward the mean at the fitted correlation rate).
-    "ana_ar_forecast" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.arForecast(servingValid(s, d), p = 3, horizon = 7)),
-
-    // Distribution-free conformal intervals over the backtest
-    // residuals: forecast ± q̂ with certified ≥80% coverage.
-    "ana_forecast_conformal" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.forecastConformal(servingValid(s, d))),
-
-    "ana_forecast_backtest" -> ((s: SparkSession, d: String) =>
-      AnalyticsPack.forecastBacktest(servingValid(s, d))),
-
-    // Bucketed snapshot reconciliation: the B side drops event 17 and
-    // perturbs event 42's value — the diff must localize both.
-    "audit_table_diff" -> ((s: SparkSession, d: String) => {
-      val ev = t(s, d, "events")
-      val b = ev.filter(col("event_id") =!= 17)
-        .withColumn("value",
-          when(col("event_id") === 42, col("value") + 1).otherwise(col("value")))
-      Audit.tableDiff(ev, b, "event_id", Seq("user_id", "event_type"), "value",
-        nBuckets = 16)
-    }),
-
-    // Deterministic Poisson-multiplier bootstrap: 32 hash-seeded
-    // resamples of the mean event value — the sampling-error panel.
-    "ana_bootstrap_ci" -> ((s: SparkSession, d: String) =>
-      Sampling.bootstrapMeans(t(s, d, "events"), "event_id", "value", b = 32)),
-
-    // Exact-n weighted sample without replacement (A-ES, md5 uniforms,
-    // quantized-ln rank) — budgeted weight-proportional selection.
-    "sample_weighted_n" -> ((s: SparkSession, d: String) =>
-      Sampling.weightedSampleN(t(s, d, "events"), "event_id", "value", n = 500)),
-
-    // Per-group winsorization to the exact [p05, p95] band.
-    "sample_winsorize" -> ((s: SparkSession, d: String) =>
-      Sampling.winsorize(
-        t(s, d, "events").filter(col("value").isNotNull)
-          .select(col("event_id"),
-            upper(trim(col("event_type"))).as("event_type_norm"), col("value")),
-        "event_type_norm", "value", pLo = 0.05, pHi = 0.95)),
-
-    // Equi-depth (quartile) histogram: ~n/4 rows per bucket however
-    // skewed the column; exact-percentile thresholds broadcast.
-    "table_histogram_equidepth" -> ((s: SparkSession, d: String) =>
-      Profiling.histogramEquiDepth(t(s, d, "events"), "value", k = 4)),
-
-    // Distribution drift between lake snapshots: ONE shared-bounds
-    // histogram pass splits per-bucket counts into old/new (cut =
-    // 2024-01-15), proportions + per-bucket shift as RAW IEEE
-    // quotients — the distribution-shift monitor a training pipeline
-    // runs between ingestion snapshots. Same scale shape as the
-    // histogram: broadcast 1-row bounds, <= k bucket keys, broadcast
-    // 1-row totals.
-    "data_drift_value" -> ((s: SparkSession, d: String) => {
-      val k = 20
-      val ev = t(s, d, "events").filter(col("value").isNotNull)
-        // coalesce: a NULL ts must count as old (matching the oracle's
-        // CASE ... ELSE 0), not vanish from both n_old and n_new —
-        // otherwise n_old+n_new under-counts the bucket's rows
-        .withColumn("is_new",
-          coalesce((to_date(col("ts")) > lit("2024-01-15")).cast("int"), lit(0)))
-      val bounds = ev.agg(min(col("value")).as("mn"), max(col("value")).as("mx"))
-      val width = (col("mx") - col("mn")) / k
-      val bucket = when(col("mx") === col("mn"), lit(0))
-        .otherwise(least(lit(k - 1), floor((col("value") - col("mn")) / width).cast("int")))
-      val byBucket = ev.crossJoin(broadcast(bounds))
-        .groupBy(bucket.as("bucket"))
-        .agg(sum(lit(1) - col("is_new")).as("n_old"), sum(col("is_new")).as("n_new"))
-      val tot = byBucket.agg(sum(col("n_old")).as("tot_old"),
-        sum(col("n_new")).as("tot_new"))
-      byBucket.crossJoin(broadcast(tot))
-        .withColumn("p_old", col("n_old") / col("tot_old"))
-        .withColumn("p_new", col("n_new") / col("tot_new"))
-        .withColumn("p_shift",
-          col("n_new") / col("tot_new") - col("n_old") / col("tot_old"))
-        .select(col("bucket"), col("n_old"), col("n_new"),
-          col("p_old"), col("p_new"), col("p_shift"))
-    }),
-
-    // Scalar drift gates over the same old/new split: log-free χ² +
-    // total-variation on the 20-bucket histogram, and the exact
-    // two-sample KS statistic via the distributed prefix sum — the
-    // one-row verdicts a monitoring pipeline alerts on (the per-bucket
-    // panel above is their diagnostic drill-down).
-    "data_drift_chi2" -> ((s: SparkSession, d: String) =>
-      Drift.chi2Histogram(
-        t(s, d, "events").filter(col("value").isNotNull)
-          .withColumn("is_new",
-            coalesce((to_date(col("ts")) > lit("2024-01-15")).cast("int"), lit(0))),
-        "value", "is_new", k = 20)),
-
-    // PSI over the same histogram — the industry-standard monitoring
-    // scalar (0.1/0.25 rules of thumb); ln terms ride only the
-    // ≤k-bucket panel under the §5 floor-grid, both-sides-empty
-    // buckets skipped (counted) rather than epsilon-smoothed.
-    "data_drift_psi" -> ((s: SparkSession, d: String) =>
-      Drift.psiHistogram(
-        t(s, d, "events").filter(col("value").isNotNull)
-          .withColumn("is_new",
-            coalesce((to_date(col("ts")) > lit("2024-01-15")).cast("int"), lit(0))),
-        "value", "is_new", k = 20)),
-
-    // Jensen–Shannon divergence over the same histogram — the
-    // symmetric, always-finite drift scalar (bounded [0, ln 2], no
-    // skipped-bucket accounting).
-    "data_drift_js" -> ((s: SparkSession, d: String) =>
-      Drift.jsHistogram(
-        t(s, d, "events").filter(col("value").isNotNull)
-          .withColumn("is_new",
-            coalesce((to_date(col("ts")) > lit("2024-01-15")).cast("int"), lit(0))),
-        "value", "is_new", k = 20)),
-
-    "data_drift_ks" -> ((s: SparkSession, d: String) =>
-      Drift.ksStatistic(
-        t(s, d, "events").filter(col("value").isNotNull)
-          .withColumn("is_new",
-            coalesce((to_date(col("ts")) > lit("2024-01-15")).cast("int"), lit(0))),
-        "value", "is_new")),
-
-    // Cramer-von Mises over the same split: the whole-curve squared
-    // EDF gap next to KS's worst single point — catches spread/tail
-    // drift KS misses.
-    "data_drift_cvm" -> ((s: SparkSession, d: String) =>
-      Drift.cvmStatistic(
-        t(s, d, "events").filter(col("value").isNotNull)
-          .withColumn("is_new",
-            coalesce((to_date(col("ts")) > lit("2024-01-15")).cast("int"), lit(0))),
-        "value", "is_new")),
-
-    // Wasserstein-1 drift over the same old/new snapshot split —
-    // "how much mass moved how far" next to KS's worst-point gap;
-    // ECDF differences integrated over the value axis via the same
-    // distributed prefix sum plus a rank->rank+1 self-join (never a
-    // global LEAD window).
-    // Vector-tier drift gate: unbiased polynomial-kernel MMD² between
-    // the even- and odd-label embedding populations (deterministic
-    // 200-per-side sample; the scalar histograms cannot see a vector
-    // distribution rotate).
-    "data_drift_mmd" -> ((s: SparkSession, d: String) =>
-      Drift.mmdPolynomial(
-        t(s, d, "embeddings").withColumn("is_new", pmod(col("label"), lit(2)) === 1),
-        "vec_id", "embedding", "is_new")),
-
-    "data_drift_wasserstein" -> ((s: SparkSession, d: String) =>
-      Drift.wassersteinW1(
-        t(s, d, "events").filter(col("value").isNotNull)
-          .withColumn("is_new",
-            coalesce((to_date(col("ts")) > lit("2024-01-15")).cast("int"), lit(0))),
-        "value", "is_new")),
-
-    // Benford first-digit audit over the monetary measure — the
-    // fabricated-data screen, log-free (CASE-ladder scale, literal
-    // expected shares).
-    "audit_benford_digits" -> ((s: SparkSession, d: String) =>
-      Audit.benfordDigits(t(s, d, "events"), "value")),
-
-    // Joint-distribution heatmap panel: 10x10 equi-width cells over
-    // (quantity, price) with exact-count shares.
-    "table_histogram_2d" -> ((s: SparkSession, d: String) =>
-      Profiling.histogram2d(t(s, d, "lineitem"),
-        "l_quantity", "l_extendedprice", kx = 10, ky = 10)),
-
-    // Incremental aggregate maintenance: the stored rollup absorbs a
-    // new batch's partial aggregate by grain-keyed summation
-    // (Merge.mergeAggregate) — always-fresh rollups without ever
-    // re-scanning history. The oracle recomputes from ALL rows:
-    // equality IS the mergeability proof.
-    "gold_agg_incremental" -> ((s: SparkSession, d: String) => {
-      val ev = t(s, d, "events")
-      def partial(df: DataFrame): DataFrame = df
-        .groupBy(upper(trim(col("event_type"))).as("event_type_norm"),
-          to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("n_events"), sum(money(col("value"))).as("__sum"))
-      val stored = partial(ev.filter(to_date(col("ts")) <= lit("2024-01-15")))
-      val batch = partial(ev.filter(to_date(col("ts")) > lit("2024-01-15")))
-      Merge.mergeAggregate(stored, batch, Seq("event_type_norm", "day"))
-        .select(col("event_type_norm"), col("day"), col("n_events"),
-          coalesce(round(col("__sum"), 2), lit(0)).cast("double").as("value_sum"))
-    }),
-
-    // Sketch profile: mergeable HLL distinct + t-digest quantiles per
-    // group — the 100-TB shapes for COUNT(DISTINCT)/PERCENTILE when
-    // exactness is traded for constant memory. Sketches are
-    // implementation-defined, so this row keeps the rows-only check;
-    // SamplingSketchSpec bounds the error against the exact answers.
-    "sketch_profile" -> ((s: SparkSession, d: String) =>
-      t(s, d, "events")
-        .groupBy(upper(trim(col("event_type"))).as("event_type_norm"))
-        .agg(
-          count(lit(1)).as("n_events"),
-          approx_count_distinct(col("user_id")).as("approx_users"),
-          round(percentile_approx(col("value"), lit(0.5), lit(10000)), 2)
-            .as("approx_median_value"),
-          round(percentile_approx(col("value"), lit(0.9), lit(10000)), 2)
-            .as("approx_p90_value")))
-  )
-
-  /** DuckDB twins. Table names resolve to the same parquet files. */
-  /** Shared feature frame of the logreg fit + its calibration panel:
-    * purchase flag vs grid-quantized hour/iso-dow/value (§5 grids so
-    * the chained-CTE oracle replays the fit bit for bit).
-    */
-  private def logregFeatures(s: SparkSession, d: String): DataFrame =
-    t(s, d, "events")
-      .filter(col("ts").isNotNull && col("value").isNotNull)
-      .select(
-        when(col("event_type") === "purchase", 1.0).otherwise(0.0).as("y"),
-        (floor(hour(col("ts")).cast("double") / lit(24.0) * lit(1e6))
-          / lit(1e6)).as("x1"),
-        (floor(Temporal.isoDow(col("ts")).cast("double") / lit(7.0)
-          * lit(1e6)) / lit(1e6)).as("x2"),
-        (floor(col("value") / lit(100.0) * lit(1e6)) / lit(1e6)).as("x3"))
-
-  /** [[logregFeatures]] carrying the row id the permutation-importance
-    * operator keys its deterministic shuffles on.
-    */
-  private def logregFeaturesWithId(s: SparkSession, d: String): DataFrame =
-    t(s, d, "events")
-      .filter(col("ts").isNotNull && col("value").isNotNull)
-      .select(col("event_id"),
-        when(col("event_type") === "purchase", 1.0).otherwise(0.0).as("y"),
-        (floor(hour(col("ts")).cast("double") / lit(24.0) * lit(1e6))
-          / lit(1e6)).as("x1"),
-        (floor(Temporal.isoDow(col("ts")).cast("double") / lit(7.0)
-          * lit(1e6)) / lit(1e6)).as("x2"),
-        (floor(col("value") / lit(100.0) * lit(1e6)) / lit(1e6)).as("x3"))
-
-  def oracleSql: Map[String, String] = Map(
-    "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS sum_disc_price,
-        |  COUNT(*) AS count_order
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q5_local_supplier" ->
-      """SELECT n_name,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
-        |  COUNT(*) AS n_lineitems
-        |FROM lineitem
-        |JOIN orders   ON l_orderkey = o_orderkey
-        |JOIN customer ON c_custkey = o_custkey
-        |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        |JOIN nation   ON s_nationkey = n_nationkey
-        |JOIN region   ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA'
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |  AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-        |GROUP BY n_name""".stripMargin,
-
-    "silver_cleanse_events" -> cleanseEventsSql(""),
-
-    "silver_quality_valid" ->
-      s"SELECT * EXCLUDE (reason_code) FROM (${qualityAnnotatedSql()}) WHERE reason_code IS NULL",
-
-    "silver_quality_quarantine" ->
-      s"SELECT * FROM (${qualityAnnotatedSql()}) WHERE reason_code IS NOT NULL",
-
-    "silver_quality_report" ->
-      s"""SELECT COALESCE(reason_code, 'VALID') AS reason_code, COUNT(*) AS n_rows
-         |FROM (${qualityAnnotatedSql()}) GROUP BY 1""".stripMargin,
-
-    "silver_unpivot_measures" ->
-      """SELECT l_orderkey, l_linenumber, 'l_quantity' AS measure_name, l_quantity AS measure_value FROM lineitem
-        |UNION ALL SELECT l_orderkey, l_linenumber, 'l_extendedprice', l_extendedprice FROM lineitem
-        |UNION ALL SELECT l_orderkey, l_linenumber, 'l_discount', l_discount FROM lineitem
-        |UNION ALL SELECT l_orderkey, l_linenumber, 'l_tax', l_tax FROM lineitem""".stripMargin,
-
-    "silver_unpivot_legs" ->
-      """SELECT * FROM (
-        |  SELECT l_orderkey, l_linenumber, 1 AS leg_seq, l_returnflag AS leg_attr, l_quantity AS leg_value FROM lineitem
-        |  UNION ALL
-        |  SELECT l_orderkey, l_linenumber, 2, l_linestatus, l_extendedprice FROM lineitem
-        |  UNION ALL
-        |  SELECT l_orderkey, l_linenumber, 3,
-        |    CASE WHEN l_returnflag = 'N' THEN NULL ELSE l_returnflag END,
-        |    CASE WHEN l_tax = 0 THEN NULL ELSE l_tax END
-        |  FROM lineitem)
-        |WHERE leg_attr IS NOT NULL OR leg_value IS NOT NULL""".stripMargin,
-
-    "gold_dim_date" ->
-      """WITH b AS (SELECT CAST(MIN(o_orderdate) AS DATE) AS d0, CAST(MAX(o_orderdate) AS DATE) AS d1 FROM orders),
-        |days AS (SELECT CAST(UNNEST(generate_series(d0, d1, INTERVAL 1 DAY)) AS DATE) AS full_date FROM b)
-        |SELECT
-        |  CAST(year(full_date)*10000 + month(full_date)*100 + day(full_date) AS INTEGER) AS date_sk,
-        |  full_date,
-        |  CAST(year(full_date) AS INTEGER) AS year,
-        |  CAST(month(full_date) AS INTEGER) AS month,
-        |  CAST(day(full_date) AS INTEGER) AS day,
-        |  CAST(weekofyear(full_date) AS INTEGER) AS iso_week,
-        |  CAST(isodow(full_date) AS INTEGER) AS iso_dow,
-        |  isodow(full_date) >= 6 AS is_weekend,
-        |  strftime(full_date, '%Y-%m') AS year_month,
-        |  CASE WHEN isodow(full_date) = 7 THEN 'DOMINGO'
-        |       WHEN isodow(full_date) = 6 THEN 'SABADO'
-        |       ELSE 'LABORAL' END AS tipo_dia
-        |FROM days""".stripMargin,
-
-    "gold_dim_time_30m" ->
-      """SELECT CAST(i AS INTEGER) AS time_30m_sk,
-        |  printf('%02d:%02d:00', i//2, (i%2)*30) AS start_time,
-        |  printf('%02d:%02d:00', ((i+1)//2)%24, ((i+1)%2)*30) AS end_time,
-        |  CAST(i//2 AS INTEGER) AS hour,
-        |  CAST((i%2)*30 AS INTEGER) AS minute,
-        |  printf('%02d:%02d', i//2, (i%2)*30) AS label
-        |FROM range(48) t(i)""".stripMargin,
-
-    "gold_dim_lookup" ->
-      """SELECT CAST(ROW_NUMBER() OVER (ORDER BY priority_name) AS INTEGER) AS priority_sk, priority_name
-        |FROM (SELECT DISTINCT TRIM(o_orderpriority) AS priority_name FROM orders
-        |      WHERE o_orderpriority IS NOT NULL AND TRIM(o_orderpriority) <> '')""".stripMargin,
-
-    "gold_junk_dim" ->
-      """SELECT CAST(ROW_NUMBER() OVER (ORDER BY l_returnflag, l_linestatus) AS INTEGER) AS junk_sk,
-        |  l_returnflag, l_linestatus
-        |FROM (SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem)""".stripMargin,
-
-    "gold_dedup_grain" -> dedupGrainSql,
-
-    // The salted variant is output-identical by construction.
-    "gold_dedup_grain_salted" -> dedupGrainSql,
-
-    // Empty on both engines: the deduped fact holds its declared
-    // grain (the reference's unique-grain-index assertion).
-    "audit_grain_unique" ->
-      s"""SELECT user_id, event_type, CAST(COUNT(*) AS BIGINT) AS n_rows
-         |FROM ($dedupGrainSql)
-         |GROUP BY 1, 2 HAVING COUNT(*) > 1""".stripMargin,
-
-    // Two-phase exact distinct per key; worst key = struct-max of
-    // (n distinct, key) — ties to the largest key on both engines.
-    "audit_fd_check" ->
-      """WITH pk AS (
-        |  SELECT CAST(user_id AS VARCHAR) AS k, CAST(COUNT(*) AS BIGINT) AS nd
-        |  FROM (SELECT DISTINCT user_id,
-        |          COALESCE(CAST(event_type AS VARCHAR), '<NULL>') AS v
-        |        FROM events WHERE user_id IS NOT NULL)
-        |  GROUP BY 1)
-        |SELECT CAST(COUNT(*) AS BIGINT) AS n_keys,
-        |  CAST(SUM(CASE WHEN nd > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_violating_keys,
-        |  CAST(SUM(CASE WHEN nd > 1 THEN 1 ELSE 0 END) AS BIGINT)
-        |    / CAST(CASE WHEN COUNT(*) > 0 THEN COUNT(*) END AS DOUBLE) AS violation_share,
-        |  MAX({'nd': nd, 'k': k}).nd AS max_distinct_dependents,
-        |  MAX({'nd': nd, 'k': k}).k AS worst_key
-        |FROM pk""".stripMargin,
-
-    // SUM over integers is HUGEINT in DuckDB — cast every summed stat
-    // to BIGINT or the driver's type-faithful hash can never match
-    // (the sessionize_gap lesson, round 2).
-    "table_profile_events" ->
-      """SELECT COUNT(*) AS n_rows,
-        |  CAST(SUM(CASE WHEN user_id IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS user_id_nulls,
-        |  MIN(user_id) AS user_id_min,
-        |  MAX(user_id) AS user_id_max,
-        |  COUNT(DISTINCT user_id) AS user_id_distinct,
-        |  CAST(SUM(CASE WHEN value IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS value_nulls,
-        |  MIN(value) AS value_min,
-        |  MAX(value) AS value_max,
-        |  MIN(ts) AS ts_min,
-        |  MAX(ts) AS ts_max,
-        |  COUNT(DISTINCT event_type) AS event_type_distinct
-        |FROM events""".stripMargin,
-
-    "ana_rollup_demand" ->
-      """SELECT UPPER(TRIM(event_type)) AS event_type_norm,
-        |  CAST(ts AS DATE) AS day,
-        |  COUNT(*) AS n_events,
-        |  CAST(COALESCE(ROUND(SUM(CAST(value AS DECIMAL(18,2))), 2), 0) AS DOUBLE) AS value_sum
-        |FROM events
-        |GROUP BY ROLLUP (UPPER(TRIM(event_type)), CAST(ts AS DATE))""".stripMargin,
-
-    // DuckDB GROUPING(a, b) carries Spark's grouping_id() bit layout
-    // (leftmost column = most significant bit, 1 = aggregated away).
-    "ana_cube_demand" ->
-      """SELECT UPPER(TRIM(event_type)) AS event_type_norm,
-        |  CAST(ts AS DATE) AS day,
-        |  CAST(GROUPING(UPPER(TRIM(event_type)), CAST(ts AS DATE)) AS BIGINT)
-        |    AS grouping_set_id,
-        |  COUNT(*) AS n_events,
-        |  CAST(COALESCE(ROUND(SUM(CAST(value AS DECIMAL(18,2))), 2), 0) AS DOUBLE) AS value_sum
-        |FROM events
-        |GROUP BY CUBE (UPPER(TRIM(event_type)), CAST(ts AS DATE))""".stripMargin,
-
-    // The bloom prune must be invisible in the result — the oracle is
-    // the SAME join with no bloom anywhere.
-    "join_bloom_pruned" ->
-      """WITH dim AS (
-        |  SELECT DISTINCT user_id FROM events
-        |  WHERE user_id IS NOT NULL AND user_id % 7 = 0)
-        |SELECT UPPER(TRIM(event_type)) AS event_type_norm,
-        |  COUNT(*) AS n_events,
-        |  COUNT(DISTINCT e.user_id) AS n_users,
-        |  CAST(COALESCE(ROUND(SUM(CAST(value AS DECIMAL(18,2))), 2), 0) AS DOUBLE) AS value_sum
-        |FROM events e JOIN dim USING (user_id)
-        |GROUP BY 1""".stripMargin,
-
-    "skew_hot_keys" ->
-      """WITH k AS (
-        |  SELECT user_id, COUNT(*) AS n_rows FROM events
-        |  WHERE user_id IS NOT NULL GROUP BY 1),
-        |tot AS (
-        |  SELECT COUNT(*) AS n_keys, CAST(SUM(n_rows) AS BIGINT) AS total_rows
-        |  FROM k)
-        |SELECT user_id, n_rows,
-        |  100.0 * n_rows / total_rows AS pct_of_total,
-        |  n_rows / (total_rows / CAST(n_keys AS DOUBLE)) AS x_avg
-        |FROM k, tot
-        |ORDER BY n_rows DESC, user_id
-        |LIMIT 5""".stripMargin,
-
-    // The oracle is the PLAIN join: salting must be invisible.
-    "join_salted" ->
-      """WITH ev AS (SELECT event_id, user_id FROM events WHERE user_id IS NOT NULL),
-        |dim AS (SELECT user_id, COUNT(*) AS user_events FROM ev GROUP BY 1)
-        |SELECT event_id, user_id, user_events
-        |FROM ev JOIN dim USING (user_id)""".stripMargin,
-
-    // Variance-identity correlation replayed op-for-op: DECIMAL
-    // moment sums (order-free), fixed CAST-to-DOUBLE op sequence,
-    // IEEE-correctly-rounded sqrt (the anomaly_zscore convention).
-    "table_corr_pairs" -> corrPairsOracleSql(
-      Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")),
-
-    "table_corr_partial" -> partialCorrOracleSql(
-      "l_quantity", "l_extendedprice", "l_tax"),
-
-    "table_missingness" -> missingnessOracleSql(
-      Seq("user_id", "event_type", "value", "props")),
-
-    // md5-derived 32-bit digests summed per bucket (order-free) —
-    // Spark's conv(hex,16,10) == DuckDB's CAST('0x…') ; the measure
-    // reconciles as a DECIMAL sum, never a float-to-string render.
-    "audit_table_diff" -> {
-      def panelSql(src: String, suffix: String) =
-        s"""SELECT
-           |  CAST(concat('0x', substr(md5(COALESCE(CAST(event_id AS VARCHAR), '<NULL>')), 1, 8)) AS BIGINT) % 16 AS bucket,
-           |  COUNT(*) AS n_rows_$suffix,
-           |  CAST(SUM(CAST(concat('0x', substr(md5(concat_ws('|',
-           |    COALESCE(CAST(event_id AS VARCHAR), '<NULL>'),
-           |    COALESCE(CAST(user_id AS VARCHAR), '<NULL>'),
-           |    COALESCE(CAST(event_type AS VARCHAR), '<NULL>'))), 1, 8)) AS BIGINT)) AS BIGINT) AS checksum_$suffix,
-           |  BIT_XOR(CAST(concat('0x', substr(md5(concat_ws('|',
-           |    COALESCE(CAST(event_id AS VARCHAR), '<NULL>'),
-           |    COALESCE(CAST(user_id AS VARCHAR), '<NULL>'),
-           |    COALESCE(CAST(event_type AS VARCHAR), '<NULL>'))), 1, 15)) AS BIGINT)) AS xor_$suffix,
-           |  SUM(CAST(value AS DECIMAL(28,6))) AS msum_$suffix
-           |FROM $src GROUP BY 1""".stripMargin
-      s"""WITH a AS (SELECT event_id, user_id, event_type, value FROM events),
-         |b AS (
-         |  SELECT event_id, user_id, event_type,
-         |    CASE WHEN event_id = 42 THEN value + 1 ELSE value END AS value
-         |  FROM events WHERE event_id <> 17),
-         |pa AS (${panelSql("a", "a")}),
-         |pb AS (${panelSql("b", "b")})
-         |SELECT bucket,
-         |  COALESCE(n_rows_a, 0) AS n_rows_a,
-         |  COALESCE(n_rows_b, 0) AS n_rows_b,
-         |  checksum_a, checksum_b,
-         |  xor_a, xor_b,
-         |  CAST(msum_a AS DOUBLE) AS measure_sum_a,
-         |  CAST(msum_b AS DOUBLE) AS measure_sum_b,
-         |  (COALESCE(n_rows_a, 0) = COALESCE(n_rows_b, 0)
-         |   AND checksum_a IS NOT DISTINCT FROM checksum_b
-         |   AND xor_a IS NOT DISTINCT FROM xor_b
-         |   AND msum_a IS NOT DISTINCT FROM msum_b) AS is_match
-         |FROM pa FULL OUTER JOIN pb USING (bucket)""".stripMargin
-    },
-
-    // Exact-percentile band (the F2 percentile==quantile_cont parity),
-    // pure least/greatest clip.
-    "sample_winsorize" ->
-      """WITH ev AS (
-        |  SELECT event_id, UPPER(TRIM(event_type)) AS event_type_norm, value
-        |  FROM events WHERE value IS NOT NULL),
-        |b AS (
-        |  SELECT event_type_norm,
-        |    quantile_cont(value, 0.05) AS p_lo,
-        |    quantile_cont(value, 0.95) AS p_hi
-        |  FROM ev GROUP BY 1)
-        |SELECT event_type_norm, event_id, value, p_lo, p_hi,
-        |  LEAST(GREATEST(value, p_lo), p_hi) AS value_winsorized,
-        |  (value < p_lo OR value > p_hi) AS was_clipped
-        |FROM ev JOIN b USING (event_type_norm)""".stripMargin,
-
-    // Bucket arithmetic replayed op-for-op: FLOOR((v-mn)/((mx-mn)/k))
-    // clamped to k-1 — IEEE subtract/divide/floor are engine-exact.
-    "table_histogram_value" ->
-      """WITH b AS (
-        |  SELECT MIN(value) AS mn, MAX(value) AS mx
-        |  FROM events WHERE value IS NOT NULL)
-        |SELECT
-        |  CASE WHEN mx = mn THEN 0
-        |       ELSE LEAST(19, CAST(FLOOR((value - mn) / ((mx - mn) / 20)) AS INTEGER)) END AS bucket,
-        |  COUNT(*) AS n_rows,
-        |  MIN(value) AS bucket_min,
-        |  MAX(value) AS bucket_max
-        |FROM events, b
-        |WHERE value IS NOT NULL
-        |GROUP BY 1""".stripMargin,
-
-    "table_histogram_equidepth" ->
-      """WITH r AS (SELECT value FROM events WHERE value IS NOT NULL),
-        |t AS (
-        |  SELECT quantile_cont(value, 0.25) AS t1,
-        |         quantile_cont(value, 0.5) AS t2,
-        |         quantile_cont(value, 0.75) AS t3
-        |  FROM r)
-        |SELECT
-        |  CASE WHEN value > t1 THEN 1 ELSE 0 END +
-        |  CASE WHEN value > t2 THEN 1 ELSE 0 END +
-        |  CASE WHEN value > t3 THEN 1 ELSE 0 END AS bucket,
-        |  COUNT(*) AS n_rows,
-        |  MIN(value) AS bucket_min,
-        |  MAX(value) AS bucket_max
-        |FROM r, t
-        |GROUP BY 1""".stripMargin,
-
-    "data_drift_value" ->
-      """WITH ev AS (
-        |  SELECT value,
-        |    CASE WHEN CAST(ts AS DATE) > DATE '2024-01-15' THEN 1 ELSE 0 END AS is_new
-        |  FROM events WHERE value IS NOT NULL),
-        |b AS (SELECT MIN(value) AS mn, MAX(value) AS mx FROM ev),
-        |k AS (
-        |  SELECT
-        |    CASE WHEN mx = mn THEN 0
-        |         ELSE LEAST(19, CAST(FLOOR((value - mn) / ((mx - mn) / 20)) AS INTEGER)) END AS bucket,
-        |    CAST(SUM(1 - is_new) AS BIGINT) AS n_old,
-        |    CAST(SUM(is_new) AS BIGINT) AS n_new
-        |  FROM ev, b GROUP BY 1),
-        |tot AS (
-        |  SELECT CAST(SUM(n_old) AS BIGINT) AS tot_old,
-        |         CAST(SUM(n_new) AS BIGINT) AS tot_new
-        |  FROM k)
-        |SELECT bucket, n_old, n_new,
-        |  n_old / CAST(tot_old AS DOUBLE) AS p_old,
-        |  n_new / CAST(tot_new AS DOUBLE) AS p_new,
-        |  n_new / CAST(tot_new AS DOUBLE) - n_old / CAST(tot_old AS DOUBLE) AS p_shift
-        |FROM k, tot""".stripMargin,
-
-    // Same bucketing CTE as data_drift_value, then the §5 grid rule
-    // on every full-entropy term before its decimal partial.
-    "data_drift_chi2" ->
-      """WITH ev AS (
-        |  SELECT value,
-        |    CASE WHEN CAST(ts AS DATE) > DATE '2024-01-15' THEN 1 ELSE 0 END AS is_new
-        |  FROM events WHERE value IS NOT NULL),
-        |b AS (SELECT MIN(value) AS mn, MAX(value) AS mx FROM ev),
-        |k AS (
-        |  SELECT
-        |    CASE WHEN mx = mn THEN 0
-        |         ELSE LEAST(19, CAST(FLOOR((value - mn) / ((mx - mn) / 20)) AS INTEGER)) END AS bucket,
-        |    CAST(SUM(1 - is_new) AS BIGINT) AS n_old,
-        |    CAST(SUM(is_new) AS BIGINT) AS n_new
-        |  FROM ev, b GROUP BY 1),
-        |tot AS (
-        |  SELECT CAST(SUM(n_old) AS BIGINT) AS tot_old,
-        |         CAST(SUM(n_new) AS BIGINT) AS tot_new
-        |  FROM k),
-        |p AS (
-        |  SELECT n_old, tot_old, tot_new,
-        |    n_old / CAST(tot_old AS DOUBLE) AS p_old,
-        |    n_new / CAST(tot_new AS DOUBLE)
-        |      - n_old / CAST(tot_old AS DOUBLE) AS diff
-        |  FROM k, tot)
-        |SELECT
-        |  CAST(SUM(CASE WHEN n_old > 0
-        |    THEN CAST(floor(diff * diff / p_old * 1e6) / 1e6 AS DECIMAL(28,6)) END) AS DOUBLE) AS chi2,
-        |  CAST(SUM(CAST(floor(abs(diff) * 1e6) / 1e6 AS DECIMAL(28,6))) AS DOUBLE) * 0.5 AS tv_dist,
-        |  CAST(SUM(CASE WHEN n_old > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_buckets_used,
-        |  CAST(SUM(CASE WHEN n_old > 0 THEN 0 ELSE 1 END) AS BIGINT) AS n_buckets_skipped,
-        |  CAST(MAX(tot_old) AS BIGINT) AS tot_old,
-        |  CAST(MAX(tot_new) AS BIGINT) AS tot_new
-        |FROM p""".stripMargin,
-
-    // PSI replay: same buckets/totals as chi2; each term's ln and the
-    // final (p_new-p_old)*ln product floor-quantize to 1e-6 before the
-    // DECIMAL(28,6) partial — grid scale == decimal scale (§5).
-    "data_drift_psi" ->
-      """WITH ev AS (
-        |  SELECT value,
-        |    CASE WHEN CAST(ts AS DATE) > DATE '2024-01-15' THEN 1 ELSE 0 END AS is_new
-        |  FROM events WHERE value IS NOT NULL),
-        |b AS (SELECT MIN(value) AS mn, MAX(value) AS mx FROM ev),
-        |k AS (
-        |  SELECT
-        |    CASE WHEN mx = mn THEN 0
-        |         ELSE LEAST(19, CAST(FLOOR((value - mn) / ((mx - mn) / 20)) AS INTEGER)) END AS bucket,
-        |    CAST(SUM(1 - is_new) AS BIGINT) AS n_old,
-        |    CAST(SUM(is_new) AS BIGINT) AS n_new
-        |  FROM ev, b GROUP BY 1),
-        |tot AS (
-        |  SELECT CAST(SUM(n_old) AS BIGINT) AS tot_old,
-        |         CAST(SUM(n_new) AS BIGINT) AS tot_new
-        |  FROM k),
-        |p AS (
-        |  SELECT n_old, n_new, tot_old, tot_new,
-        |    n_old / CAST(tot_old AS DOUBLE) AS p_old,
-        |    n_new / CAST(tot_new AS DOUBLE) AS p_new
-        |  FROM k, tot)
-        |SELECT
-        |  CAST(SUM(CASE WHEN n_old > 0 AND n_new > 0
-        |    THEN CAST(floor((p_new - p_old)
-        |      * (floor(ln(p_new / p_old) * 1e6) / 1e6) * 1e6) / 1e6
-        |      AS DECIMAL(28,6)) END) AS DOUBLE) AS psi,
-        |  CAST(SUM(CASE WHEN n_old > 0 AND n_new > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_buckets_used,
-        |  CAST(SUM(CASE WHEN n_old > 0 AND n_new > 0 THEN 0 ELSE 1 END) AS BIGINT) AS n_buckets_skipped,
-        |  CAST(MAX(tot_old) AS BIGINT) AS tot_old,
-        |  CAST(MAX(tot_new) AS BIGINT) AS tot_new
-        |FROM p""".stripMargin,
-
-    // Exact two-sample KS: ECDFs over the distinct-value relation,
-    // quotients of exact integer counts, argmax with the min-value
-    // tie-break (ORDER BY replays the engine's struct-max).
-    "data_drift_ks" ->
-      """WITH ev AS (
-        |  SELECT value,
-        |    CASE WHEN CAST(ts AS DATE) > DATE '2024-01-15' THEN 1 ELSE 0 END AS is_new
-        |  FROM events WHERE value IS NOT NULL),
-        |pv AS (
-        |  SELECT value,
-        |    CAST(SUM(1 - is_new) AS BIGINT) AS n_old_v,
-        |    CAST(SUM(is_new) AS BIGINT) AS n_new_v
-        |  FROM ev GROUP BY 1),
-        |tot AS (
-        |  SELECT CAST(SUM(n_old_v) AS BIGINT) AS tot_old,
-        |         CAST(SUM(n_new_v) AS BIGINT) AS tot_new
-        |  FROM pv),
-        |c AS (
-        |  SELECT value,
-        |    SUM(n_old_v) OVER (ORDER BY value) AS cum_old,
-        |    SUM(n_new_v) OVER (ORDER BY value) AS cum_new
-        |  FROM pv),
-        |d AS (
-        |  SELECT value,
-        |    ABS(cum_old / CAST(CASE WHEN tot_old > 0 THEN tot_old END AS DOUBLE)
-        |      - cum_new / CAST(CASE WHEN tot_new > 0 THEN tot_new END AS DOUBLE)) AS d_abs,
-        |    tot_old, tot_new
-        |  FROM c, tot)
-        |SELECT d_abs AS d_stat, value AS at_value,
-        |  (SELECT CAST(COUNT(*) AS BIGINT) FROM pv) AS n_distinct_values,
-        |  tot_old AS n_old, tot_new AS n_new
-        |FROM d ORDER BY d_abs DESC, value LIMIT 1""".stripMargin,
-
-    // Drift.distributionFit mirrored: distinct-value staircase,
-    // moments panel, the Horner-erfc Φ with the sign branch, gridded
-    // exp/ln cells, two-sided KS sup per family, argmin flag.
-    "ana_dist_fit" ->
-      """WITH base AS (
-        |  SELECT CAST(value AS DOUBLE) AS v FROM events
-        |  WHERE value IS NOT NULL AND value > 0.0),
-        |pv AS (SELECT v, CAST(COUNT(*) AS BIGINT) AS c FROM base GROUP BY 1),
-        |cumv AS (SELECT v, c, SUM(c) OVER (ORDER BY v) AS cum FROM pv),
-        |m AS (
-        |  SELECT CAST(COUNT(*) AS BIGINT) AS n,
-        |    CAST(SUM(CAST(FLOOR(v * 1e6) / 1e6 AS DECIMAL(28,6))) AS DOUBLE) AS sv,
-        |    CAST(SUM(CAST(FLOOR(v * v * 1e6) / 1e6 AS DECIMAL(28,6))) AS DOUBLE) AS svv,
-        |    CAST(SUM(CAST(FLOOR(LN(v) * 1e6) / 1e6 AS DECIMAL(28,6))) AS DOUBLE) AS sl,
-        |    CAST(SUM(CAST(FLOOR((FLOOR(LN(v) * 1e6) / 1e6)
-        |      * (FLOOR(LN(v) * 1e6) / 1e6) * 1e6) / 1e6 AS DECIMAL(28,6))) AS DOUBLE) AS sll
-        |  FROM base),
-        |mm AS (
-        |  SELECT n, sv / CAST(n AS DOUBLE) AS mu,
-        |    (svv - sv * sv / CAST(n AS DOUBLE)) / CAST(n AS DOUBLE) AS vr,
-        |    sl / CAST(n AS DOUBLE) AS mul,
-        |    (sll - sl * sl / CAST(n AS DOUBLE)) / CAST(n AS DOUBLE) AS varl
-        |  FROM m),
-        |z AS (
-        |  SELECT cumv.*, mm.*,
-        |    (v - mu) / sqrt(vr) AS zn,
-        |    (FLOOR(LN(v) * 1e6) / 1e6 - mul) / sqrt(varl) AS zl
-        |  FROM cumv CROSS JOIN mm),
-        |e1 AS (SELECT *, ABS(zn) / 1.4142135623730951 AS xn,
-        |              ABS(zl) / 1.4142135623730951 AS xl FROM z),
-        |e2 AS (SELECT *, 1.0 / (1.0 + 0.3275911 * xn) AS tn,
-        |              1.0 / (1.0 + 0.3275911 * xl) AS tl FROM e1),
-        |e3 AS (
-        |  SELECT *,
-        |    0.5 * (FLOOR(((((1.061405429 * tn - 1.453152027) * tn + 1.421413741) * tn
-        |      - 0.284496736) * tn + 0.254829592) * tn * EXP(-(xn * xn)) * 1e6) / 1e6) AS hn,
-        |    0.5 * (FLOOR(((((1.061405429 * tl - 1.453152027) * tl + 1.421413741) * tl
-        |      - 0.284496736) * tl + 0.254829592) * tl * EXP(-(xl * xl)) * 1e6) / 1e6) AS hl
-        |  FROM e2),
-        |f AS (
-        |  SELECT *,
-        |    CAST(cum AS DOUBLE) / CAST(n AS DOUBLE) AS fe,
-        |    CAST(cum - c AS DOUBLE) / CAST(n AS DOUBLE) AS fp,
-        |    CASE WHEN zn < 0.0 THEN hn ELSE 1.0 - hn END AS fnorm,
-        |    1.0 - FLOOR(EXP(-1.0 * v / mu) * 1e6) / 1e6 AS fexp,
-        |    CASE WHEN zl < 0.0 THEN hl ELSE 1.0 - hl END AS flogn
-        |  FROM e3),
-        |pan AS (
-        |  SELECT MAX(n) AS n, MAX(mu) AS mu, MAX(vr) AS vr,
-        |    MAX(mul) AS mul, MAX(varl) AS varl,
-        |    MAX(GREATEST(ABS(fe - fnorm), ABS(fp - fnorm))) AS d_norm,
-        |    MAX(GREATEST(ABS(fe - fexp), ABS(fp - fexp))) AS d_exp,
-        |    MAX(GREATEST(ABS(fe - flogn), ABS(fp - flogn))) AS d_logn
-        |  FROM f),
-        |rows0 AS (
-        |  SELECT 'normal' AS dist_name, n, mu AS param1,
-        |    sqrt(vr) AS param2, d_norm AS ks_distance FROM pan
-        |  UNION ALL SELECT 'exponential', n, 1.0 / mu,
-        |    CAST(NULL AS DOUBLE), d_exp FROM pan
-        |  UNION ALL SELECT 'lognormal', n, mul, sqrt(varl), d_logn FROM pan),
-        |b AS (SELECT MIN(ks_distance) AS mb FROM rows0)
-        |SELECT dist_name, n, param1, param2, ks_distance,
-        |  ks_distance = mb AS is_best
-        |FROM rows0 CROSS JOIN b""".stripMargin,
-
-    // MlLite.ksSeparation mirrored: the two-sample KS replay with the
-    // PURCHASE label as the split, model-evaluation column names.
-    "ml_ks_separation" ->
-      """WITH ev AS (
-        |  SELECT value,
-        |    CASE WHEN upper(trim(event_type)) = 'PURCHASE' THEN 1 ELSE 0 END AS is_new
-        |  FROM events WHERE value IS NOT NULL AND event_type IS NOT NULL),
-        |pv AS (
-        |  SELECT value,
-        |    CAST(SUM(1 - is_new) AS BIGINT) AS n_old_v,
-        |    CAST(SUM(is_new) AS BIGINT) AS n_new_v
-        |  FROM ev GROUP BY 1),
-        |tot AS (
-        |  SELECT CAST(SUM(n_old_v) AS BIGINT) AS tot_old,
-        |         CAST(SUM(n_new_v) AS BIGINT) AS tot_new
-        |  FROM pv),
-        |c AS (
-        |  SELECT value,
-        |    SUM(n_old_v) OVER (ORDER BY value) AS cum_old,
-        |    SUM(n_new_v) OVER (ORDER BY value) AS cum_new
-        |  FROM pv),
-        |d AS (
-        |  SELECT value,
-        |    ABS(cum_old / CAST(CASE WHEN tot_old > 0 THEN tot_old END AS DOUBLE)
-        |      - cum_new / CAST(CASE WHEN tot_new > 0 THEN tot_new END AS DOUBLE)) AS d_abs,
-        |    tot_old, tot_new
-        |  FROM c, tot)
-        |SELECT d_abs AS ks_stat, value AS best_threshold,
-        |  (SELECT CAST(COUNT(*) AS BIGINT) FROM pv) AS n_distinct_values,
-        |  tot_old AS n_neg, tot_new AS n_pos
-        |FROM d ORDER BY d_abs DESC, value LIMIT 1""".stripMargin,
-
-    // Drift.cvmStatistic mirrored: same distinct counts + cumulative
-    // window, gridded squared gaps times exact decimal weights, the
-    // identical n*m/(n+m)^2 panel factor.
-    "data_drift_cvm" ->
-      """WITH ev AS (
-        |  SELECT value,
-        |    CASE WHEN CAST(ts AS DATE) > DATE '2024-01-15' THEN 1 ELSE 0 END AS is_new
-        |  FROM events WHERE value IS NOT NULL),
-        |pv AS (
-        |  SELECT value,
-        |    CAST(SUM(1 - is_new) AS BIGINT) AS n_old_v,
-        |    CAST(SUM(is_new) AS BIGINT) AS n_new_v
-        |  FROM ev GROUP BY 1),
-        |tot AS (
-        |  SELECT CAST(SUM(n_old_v) AS BIGINT) AS tot_old,
-        |         CAST(SUM(n_new_v) AS BIGINT) AS tot_new,
-        |         CAST(COUNT(*) AS BIGINT) AS nd
-        |  FROM pv),
-        |c AS (
-        |  SELECT value, n_old_v, n_new_v,
-        |    SUM(n_old_v) OVER (ORDER BY value) AS cum_old,
-        |    SUM(n_new_v) OVER (ORDER BY value) AS cum_new
-        |  FROM pv),
-        |dd AS (
-        |  SELECT n_old_v, n_new_v,
-        |    cum_old / CAST(CASE WHEN tot_old > 0 THEN tot_old END AS DOUBLE)
-        |      - cum_new / CAST(CASE WHEN tot_new > 0 THEN tot_new END AS DOUBLE) AS d,
-        |    tot_old, tot_new, nd
-        |  FROM c, tot),
-        |ag AS (
-        |  SELECT SUM(CAST(n_old_v + n_new_v AS DECIMAL(19,0))
-        |      * CAST(FLOOR(d * d * 1e6) / 1e6 AS DECIMAL(28,6))) AS s,
-        |    MAX(tot_old) AS n_old, MAX(tot_new) AS n_new, MAX(nd) AS nd
-        |  FROM dd)
-        |SELECT
-        |  CAST(s AS DOUBLE) * (CAST(n_old AS DOUBLE) * CAST(n_new AS DOUBLE)
-        |    / ((CAST(n_old AS DOUBLE) + CAST(n_new AS DOUBLE))
-        |      * (CAST(n_old AS DOUBLE) + CAST(n_new AS DOUBLE)))) AS cvm_stat,
-        |  CAST(s AS DOUBLE) AS sum_sq_weighted,
-        |  nd AS n_distinct_values, n_old, n_new
-        |FROM ag""".stripMargin,
-
-    // MMD²: the proven list_reduce dot fold, explicit (1+d/l)² multiply
-    // (no POW), 1e-6 grid, DECIMAL(28,6) partials, edge divisions.
-    "data_drift_mmd" -> {
-      val dot = "list_reduce(list_prepend(0.0, list_transform(" +
-        "list_zip(a.v, b.v), p -> p[1] * p[2])), (x, y) -> x + y)"
-      val kterm = s"CAST(FLOOR((1.0 + ($dot) / len(a.v)) * " +
-        s"(1.0 + ($dot) / len(a.v)) * 1e6) / 1e6 AS DECIMAL(28,6))"
-      s"""WITH base AS (
-        |  SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v,
-        |    (label % 2 = 1) AS is_new
-        |  FROM embeddings),
-        |capped AS (
-        |  SELECT id, v, is_new FROM (
-        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY is_new ORDER BY id) AS rn
-        |    FROM base)
-        |  WHERE rn <= 200),
-        |cnt AS (
-        |  SELECT CAST(SUM(CASE WHEN NOT is_new THEN 1 ELSE 0 END) AS BIGINT) AS m,
-        |         CAST(SUM(CASE WHEN is_new THEN 1 ELSE 0 END) AS BIGINT) AS n
-        |  FROM capped),
-        |xx AS (
-        |  SELECT SUM($kterm) AS sxx, COUNT(*) AS nxx
-        |  FROM capped a JOIN capped b
-        |    ON NOT a.is_new AND NOT b.is_new AND a.id <> b.id),
-        |yy AS (
-        |  SELECT SUM($kterm) AS syy, COUNT(*) AS nyy
-        |  FROM capped a JOIN capped b
-        |    ON a.is_new AND b.is_new AND a.id <> b.id),
-        |xy AS (
-        |  SELECT SUM($kterm) AS sxy, COUNT(*) AS nxy
-        |  FROM capped a JOIN capped b ON NOT a.is_new AND b.is_new)
-        |SELECT m, n,
-        |  CAST(sxx AS DOUBLE) / nxx AS term_xx,
-        |  CAST(syy AS DOUBLE) / nyy AS term_yy,
-        |  CAST(sxy AS DOUBLE) / nxy AS term_xy,
-        |  CAST(sxx AS DOUBLE) / nxx + CAST(syy AS DOUBLE) / nyy
-        |    - 2.0 * (CAST(sxy AS DOUBLE) / nxy) AS mmd2
-        |FROM cnt, xx, yy, xy""".stripMargin
-    },
-
-    // W1 = sum over consecutive distinct values of |dECDF| * gap;
-    // terms floor-quantize to the 1e-6 grid before DECIMAL(28,6)
-    // partials (grid scale == decimal scale).
-    "data_drift_wasserstein" ->
-      """WITH ev AS (
-        |  SELECT value,
-        |    CASE WHEN CAST(ts AS DATE) > DATE '2024-01-15' THEN 1 ELSE 0 END AS is_new
-        |  FROM events WHERE value IS NOT NULL),
-        |pv AS (
-        |  SELECT value,
-        |    CAST(SUM(1 - is_new) AS BIGINT) AS n_old_v,
-        |    CAST(SUM(is_new) AS BIGINT) AS n_new_v
-        |  FROM ev GROUP BY 1),
-        |tot AS (
-        |  SELECT CAST(SUM(n_old_v) AS BIGINT) AS tot_old,
-        |         CAST(SUM(n_new_v) AS BIGINT) AS tot_new,
-        |         CAST(COUNT(*) AS BIGINT) AS n_distinct_values
-        |  FROM pv),
-        |c AS (
-        |  SELECT value,
-        |    SUM(n_old_v) OVER (ORDER BY value) AS cum_old,
-        |    SUM(n_new_v) OVER (ORDER BY value) AS cum_new,
-        |    LEAD(value) OVER (ORDER BY value) AS next_value
-        |  FROM pv),
-        |terms AS (
-        |  SELECT CAST(FLOOR(ABS(
-        |      cum_old / CAST(CASE WHEN tot_old > 0 THEN tot_old END AS DOUBLE)
-        |      - cum_new / CAST(CASE WHEN tot_new > 0 THEN tot_new END AS DOUBLE))
-        |    * (next_value - value) * 1e6) / 1e6 AS DECIMAL(28,6)) AS contrib
-        |  FROM c, tot WHERE next_value IS NOT NULL)
-        |SELECT
-        |  CAST(CASE WHEN tot_old > 0 AND tot_new > 0
-        |    THEN COALESCE((SELECT SUM(contrib) FROM terms), CAST(0 AS DECIMAL(28,6)))
-        |    END AS DOUBLE) AS w1_distance,
-        |  n_distinct_values, tot_old AS n_old, tot_new AS n_new
-        |FROM tot""".stripMargin,
-
-    // Both bucket rules replay data_drift_value's 1-D formula per
-    // axis; shares are exact-count quotients.
-    "table_histogram_2d" ->
-      """WITH rows_ AS (
-        |  SELECT l_quantity AS x, l_extendedprice AS y FROM lineitem
-        |  WHERE l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL),
-        |b AS (SELECT MIN(x) AS xmn, MAX(x) AS xmx, MIN(y) AS ymn, MAX(y) AS ymx
-        |      FROM rows_),
-        |tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS t FROM rows_),
-        |k AS (
-        |  SELECT
-        |    CASE WHEN xmx = xmn THEN 0
-        |         ELSE LEAST(9, CAST(FLOOR((x - xmn) / ((xmx - xmn) / 10)) AS INTEGER)) END AS bucket_x,
-        |    CASE WHEN ymx = ymn THEN 0
-        |         ELSE LEAST(9, CAST(FLOOR((y - ymn) / ((ymx - ymn) / 10)) AS INTEGER)) END AS bucket_y,
-        |    CAST(COUNT(*) AS BIGINT) AS n_rows
-        |  FROM rows_, b GROUP BY 1, 2)
-        |SELECT bucket_x, bucket_y, n_rows,
-        |  n_rows / CAST(t AS DOUBLE) AS share
-        |FROM k, tot""".stripMargin,
-
-    // CASE-ladder first digit (no log10/pow — the libm rule), VALUES
-    // literals for the Benford shares, grid-quantized χ² total.
-    "audit_benford_digits" ->
-      """WITH vv AS (
-        |  SELECT ABS(CAST(value AS DOUBLE)) AS v FROM events
-        |  WHERE value IS NOT NULL AND ABS(CAST(value AS DOUBLE)) > 0),
-        |s AS (
-        |  SELECT v, CASE
-        |    WHEN v >= 1e8 THEN 1e8 WHEN v >= 1e7 THEN 1e7 WHEN v >= 1e6 THEN 1e6
-        |    WHEN v >= 1e5 THEN 1e5 WHEN v >= 1e4 THEN 1e4 WHEN v >= 1e3 THEN 1e3
-        |    WHEN v >= 1e2 THEN 1e2 WHEN v >= 1e1 THEN 1e1 WHEN v >= 1e0 THEN 1e0
-        |    WHEN v >= 1e-1 THEN 1e-1 WHEN v >= 1e-2 THEN 1e-2 WHEN v >= 1e-3 THEN 1e-3
-        |    WHEN v >= 1e-4 THEN 1e-4 WHEN v >= 1e-5 THEN 1e-5 WHEN v >= 1e-6 THEN 1e-6
-        |    END AS scale
-        |  FROM vv),
-        |c AS (
-        |  SELECT CAST(FLOOR(v / scale) AS INTEGER) AS digit,
-        |         CAST(COUNT(*) AS BIGINT) AS n_obs
-        |  FROM s GROUP BY 1 HAVING digit BETWEEN 1 AND 9),
-        |tot AS (SELECT CAST(SUM(n_obs) AS BIGINT) AS t FROM c),
-        |e AS (SELECT * FROM (VALUES
-        |  (1, 0.30102999566398120), (2, 0.17609125905568124), (3, 0.12493873660829992),
-        |  (4, 0.09691001300805642), (5, 0.07918124604762482), (6, 0.06694678963061322),
-        |  (7, 0.05799194697768673), (8, 0.05115252244738129), (9, 0.04575749056067514))
-        |  AS t(digit, exp_share)),
-        |p AS (
-        |  SELECT digit, n_obs,
-        |    n_obs / CAST(t AS DOUBLE) AS obs_share, exp_share,
-        |    (n_obs / CAST(t AS DOUBLE) - exp_share)
-        |      * (n_obs / CAST(t AS DOUBLE) - exp_share) / exp_share AS chi2_term
-        |  FROM c JOIN e USING (digit), tot),
-        |tt AS (
-        |  SELECT CAST(SUM(CAST(floor(chi2_term * 1e6) / 1e6 AS DECIMAL(28,6))) AS DOUBLE)
-        |    AS chi2_total FROM p)
-        |SELECT digit, n_obs, obs_share, exp_share, chi2_term, chi2_total
-        |FROM p, tt""".stripMargin,
-
-    // The merged rollup must equal a recompute over ALL rows — the
-    // mergeability contract of Merge.mergeAggregate.
-    "gold_agg_incremental" ->
-      """SELECT UPPER(TRIM(event_type)) AS event_type_norm,
-        |  CAST(ts AS DATE) AS day,
-        |  COUNT(*) AS n_events,
-        |  CAST(COALESCE(ROUND(SUM(CAST(value AS DECIMAL(18,2))), 2), 0) AS DOUBLE) AS value_sum
-        |FROM events GROUP BY 1, 2""".stripMargin,
-
-    "attrib_click_purchase" ->
-      """WITH ev AS (SELECT * FROM events WHERE user_id IS NOT NULL),
-        |clicks AS (
-        |  SELECT user_id, ts AS click_ts, event_id AS click_id
-        |  FROM ev WHERE UPPER(TRIM(event_type)) = 'CLICK'),
-        |purchases AS (
-        |  SELECT user_id, ts AS purchase_ts, event_id AS purchase_id, value AS purchase_value
-        |  FROM ev WHERE UPPER(TRIM(event_type)) = 'PURCHASE')
-        |SELECT p.purchase_id, p.user_id, p.purchase_ts, p.purchase_value,
-        |       c.click_id, c.click_ts
-        |FROM purchases p
-        |JOIN clicks c
-        |  ON p.user_id = c.user_id
-        | AND c.click_ts >= p.purchase_ts - INTERVAL 1800 SECONDS
-        | AND c.click_ts <= p.purchase_ts""".stripMargin,
-
-    // Same md5 uniform, same quantized-ln rank, same total order.
-    "sample_weighted_n" ->
-      """SELECT * FROM (
-        |  SELECT *,
-        |    FLOOR(LN((CAST(concat('0x', substr(md5(
-        |        COALESCE(CAST(event_id AS VARCHAR), '<NULL>')), 1, 8)) AS BIGINT)
-        |      + 1.0) / 4294967296.0)
-        |      / CAST(value AS DOUBLE) * 1e9) / 1e9 AS sample_rank_key
-        |  FROM events
-        |  WHERE event_id IS NOT NULL AND value IS NOT NULL AND value > 0)
-        |ORDER BY sample_rank_key DESC, event_id
-        |LIMIT 500""".stripMargin,
-
-    // Poisson(1) multiplicities from exact-rational md5 uniforms and
-    // exact-double CDF fences; weighted sums in decimal, one division
-    // per resample.
-    // splitmix64 replay: seed = first 64 digest bits, k-th uniform =
-    // mix64(seed + (k+1)*gamma) via exact UHUGEINT mod-2^64 products
-    // and xor/shift — verified bit-equal to the JVM kernel.
-    "ana_bootstrap_ci" ->
-      """WITH base AS (
-        |  SELECT CAST(concat('0x', substr(md5(concat_ws('|',
-        |      CAST(event_id AS VARCHAR), 'boot')), 1, 16)) AS UBIGINT) AS seed,
-        |    CAST(value AS DECIMAL(18,2)) AS x
-        |  FROM events WHERE event_id IS NOT NULL AND value IS NOT NULL),
-        |bs AS (SELECT range AS b FROM range(0, 32)),
-        |z0 AS (
-        |  SELECT b, x,
-        |    CAST((CAST(seed AS UHUGEINT) + CAST(b + 1 AS UHUGEINT)
-        |      * CAST(11400714819323198485 AS UHUGEINT))
-        |      % CAST(18446744073709551616 AS UHUGEINT) AS UBIGINT) AS z
-        |  FROM base CROSS JOIN bs),
-        |z1 AS (SELECT b, x, xor(z, z >> 30) AS z FROM z0),
-        |z2 AS (SELECT b, x,
-        |    CAST((CAST(z AS UHUGEINT) * CAST(13787848793156543929 AS UHUGEINT))
-        |      % CAST(18446744073709551616 AS UHUGEINT) AS UBIGINT) AS z FROM z1),
-        |z3 AS (SELECT b, x, xor(z, z >> 27) AS z FROM z2),
-        |z4 AS (SELECT b, x,
-        |    CAST((CAST(z AS UHUGEINT) * CAST(10723151780598845931 AS UHUGEINT))
-        |      % CAST(18446744073709551616 AS UHUGEINT) AS UBIGINT) AS z FROM z3),
-        |draws AS (
-        |  SELECT b, x,
-        |    CAST(xor(z, z >> 31) >> 32 AS DOUBLE) / 4294967296.0 AS u
-        |  FROM z4),
-        |wts AS (
-        |  SELECT b, x,
-        |    CASE WHEN u < 0.36787944117144233 THEN 0
-        |         WHEN u < 0.7357588823428847 THEN 1
-        |         WHEN u < 0.9196986029286058 THEN 2
-        |         WHEN u < 0.9810118431238462 THEN 3
-        |         WHEN u < 0.9963401531726563 THEN 4
-        |         WHEN u < 0.9994058151824183 THEN 5
-        |         ELSE 6 END AS w
-        |  FROM draws)
-        |SELECT b AS resample_id, CAST(SUM(w) AS BIGINT) AS n_eff,
-        |  CASE WHEN SUM(w) > 0 THEN CAST(SUM(w * x) AS DOUBLE) / SUM(w) END AS mean_boot
-        |FROM wts GROUP BY 1""".stripMargin,
-
-    // Cumulative thresholds: 0.8 -> cccd, 0.9 -> e666 (round(f*65536)
-    // as %04x). md5 goes through concat_ws like the Spark side, so a
-    // NULL key hashes the empty string identically in both engines.
-    "sample_split_assign" ->
-      """SELECT * EXCLUDE (__b),
-        |  CASE WHEN __b < 'cccd' THEN 'train'
-        |       WHEN __b < 'e666' THEN 'val'
-        |       ELSE 'test' END AS split
-        |FROM (
-        |  SELECT *, substr(md5(concat_ws('|', CAST(user_id AS VARCHAR))), 1, 4) AS __b
-        |  FROM events)""".stripMargin,
-
-    // fold = floor(u*k) over the md5 uniform: bucket*k < 2^53 is
-    // double-exact and the 2^32 divisor is a power of two — no
-    // rounding decision for the engines to disagree on.
-    "sample_kfold_assign" ->
-      """SELECT *,
-        |  CAST(FLOOR(CAST(CAST(concat('0x',
-        |    substr(md5(COALESCE(CAST(user_id AS VARCHAR), '<NULL>')), 1, 8))
-        |    AS BIGINT) * 5 AS DOUBLE) / 4294967296.0) AS INT) AS fold_id
-        |FROM events""".stripMargin,
-
-    // Deterministic sampler: DuckDB replays the exact md5-bucket
-    // membership rule — same rows survive in both engines.
-    "sample_stratified" ->
-      """SELECT * FROM (
-        |  SELECT *,
-        |    substr(md5(CAST(event_id AS VARCHAR)), 1, 4) AS sample_bucket,
-        |    CASE WHEN event_type = 'CLICK' THEN '4000'
-        |         WHEN event_type = 'VIEW'  THEN '2000'
-        |         ELSE '8000' END AS sample_threshold
-        |  FROM events)
-        |WHERE sample_bucket < sample_threshold""".stripMargin,
-
-    // Sampling.classBalance mirrored: data-derived minority rate per
-    // class, integer bucket threshold round(rate*65536), md5 rule.
-    "sample_class_balance" ->
-      """WITH r AS (SELECT * FROM documents WHERE lang IS NOT NULL),
-        |c AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_class FROM r GROUP BY 1),
-        |mn AS (SELECT MIN(n_class) AS m FROM c),
-        |p AS (
-        |  SELECT lang, n_class,
-        |    CAST(m AS DOUBLE) / CAST(n_class AS DOUBLE) AS class_rate,
-        |    CAST(ROUND(CAST(m AS DOUBLE) / CAST(n_class AS DOUBLE) * 65536.0) AS BIGINT) AS thr
-        |  FROM c CROSS JOIN mn)
-        |SELECT r.lang, r.doc_id, r.text, r.source, r.n_chars,
-        |  p.n_class, p.class_rate
-        |FROM r JOIN p USING (lang)
-        |WHERE CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) AS BIGINT) < thr""".stripMargin,
-
-    // Exact top-k per stratum: DuckDB ranks whole strata (fine at
-    // oracle scale); Spark's candidate pre-filter provably preserves
-    // the same top-k because the filter bucket is a prefix of the
-    // ranking hash.
-    "sample_exact_quota" ->
-      """WITH r AS (
-        |  SELECT lang, doc_id,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY lang
-        |      ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS INT) AS sample_rank
-        |  FROM documents)
-        |SELECT lang, doc_id, sample_rank FROM r WHERE sample_rank <= 12""".stripMargin,
-
-    // T = min(n/share) (the largest total the scarcest domain allows);
-    // all share/rate arithmetic in DOUBLE, left-assoc like the Spark
-    // expression tree, so thresholds are bit-identical; membership is
-    // the repo's md5 bucket vs the hex-rendered threshold.
-    "sample_domain_mix" ->
-      """WITH shares AS (
-        |  SELECT * FROM (VALUES
-        |    ('en', CAST(0.40 AS DOUBLE)), ('de', CAST(0.15 AS DOUBLE)),
-        |    ('es', CAST(0.15 AS DOUBLE)), ('fr', CAST(0.15 AS DOUBLE)),
-        |    ('zh', CAST(0.15 AS DOUBLE))) AS t(lang, share)),
-        |c AS (
-        |  SELECT d.lang, s.share, COUNT(*) AS n
-        |  FROM documents d JOIN shares s ON d.lang = s.lang
-        |  GROUP BY 1, 2),
-        |mx AS (SELECT MIN(n / share) AS t_max FROM c),
-        |r AS (
-        |  SELECT lang,
-        |    CASE WHEN FLOOR(share * t_max / n * 65536) >= 65536 THEN 'g'
-        |         ELSE lower(lpad(to_hex(CAST(FLOOR(share * t_max / n * 65536)
-        |                                      AS BIGINT)), 4, '0'))
-        |    END AS thr_hex
-        |  FROM c, mx)
-        |SELECT d.doc_id, d.lang, d.source
-        |FROM documents d JOIN r ON d.lang = r.lang
-        |WHERE substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 4) < r.thr_hex""".stripMargin,
-
-    // Star.dataVaultLink mirrored: the same key-pair collapse, md5
-    // hub/link hashes over the '|'-joined rendered keys.
-    "gold_dv_link" ->
-      """WITH rel AS (
-        |  SELECT o_custkey AS left_key, l_suppkey AS right_key, o_orderdate
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |  WHERE o_custkey IS NOT NULL AND l_suppkey IS NOT NULL),
-        |g AS (
-        |  SELECT left_key, right_key, CAST(COUNT(*) AS BIGINT) AS n_rows,
-        |    MIN(o_orderdate) AS first_seen
-        |  FROM rel GROUP BY 1, 2)
-        |SELECT
-        |  md5(concat_ws('|',
-        |    COALESCE(CAST(left_key AS VARCHAR), '<NULL>'),
-        |    COALESCE(CAST(right_key AS VARCHAR), '<NULL>'))) AS link_hash,
-        |  md5(COALESCE(CAST(left_key AS VARCHAR), '<NULL>')) AS hub_left_hash,
-        |  md5(COALESCE(CAST(right_key AS VARCHAR), '<NULL>')) AS hub_right_hash,
-        |  left_key, right_key, first_seen, n_rows
-        |FROM g""".stripMargin,
-
-    "gold_merge_grain" ->
-      s"""WITH staged AS (
-         |  SELECT * EXCLUDE (reason_code) FROM (${qualityAnnotatedSql()})
-         |  WHERE reason_code IS NULL AND user_id IS NOT NULL),
-         |ded AS (
-         |  SELECT * EXCLUDE (rn) FROM (
-         |    SELECT *, ROW_NUMBER() OVER (
-         |      PARTITION BY user_id, date_sk, time_30m_sk, event_type_norm
-         |      ORDER BY event_id DESC) AS rn
-         |    FROM staged) WHERE rn = 1),
-         |ded_old AS (
-         |  SELECT * EXCLUDE (rn) FROM (
-         |    SELECT *, ROW_NUMBER() OVER (
-         |      PARTITION BY user_id, date_sk, time_30m_sk, event_type_norm
-         |      ORDER BY event_id DESC) AS rn
-         |    FROM staged WHERE event_id < 5000) WHERE rn = 1)
-         |SELECT * FROM ded_old
-         |UNION ALL
-         |SELECT d.* FROM ded d ANTI JOIN ded_old o
-         |  USING (user_id, date_sk, time_30m_sk, event_type_norm)""".stripMargin,
-
-    "gold_scd2_build" -> scd2UserSql,
-
-    // The incremental load must reproduce the full rebuild exactly.
-    "gold_scd2_incremental" -> scd2UserSql,
-
-    "gold_scd2_snapshot" -> scd2SnapshotSql,
-
-    // The dim as of a date = versions whose interval covers it.
-    "gold_scd2_pit" ->
-      s"""SELECT * FROM ($scd2UserSql)
-         |WHERE valid_from <= DATE '2024-01-15'
-         |  AND (valid_to IS NULL OR valid_to >= DATE '2024-01-15')""".stripMargin,
-
-    "gold_snapshot_diff" ->
-      """WITH so AS (
-        |  SELECT user_id, UPPER(TRIM(event_type)) AS event_type, value FROM (
-        |    SELECT user_id, event_type, value,
-        |      ROW_NUMBER() OVER (PARTITION BY user_id
-        |                         ORDER BY ts DESC, event_id DESC) AS rn
-        |    FROM events
-        |    WHERE user_id IS NOT NULL AND ts < TIMESTAMP '2024-01-15 00:00:00')
-        |  WHERE rn = 1),
-        |sn AS (
-        |  SELECT user_id, UPPER(TRIM(event_type)) AS event_type, value FROM (
-        |    SELECT user_id, event_type, value,
-        |      ROW_NUMBER() OVER (PARTITION BY user_id
-        |                         ORDER BY ts DESC, event_id DESC) AS rn
-        |    FROM events WHERE user_id IS NOT NULL)
-        |  WHERE rn = 1)
-        |SELECT * FROM (
-        |  SELECT user_id,
-        |    CASE WHEN o.user_id IS NULL THEN 'INSERT'
-        |         WHEN n.user_id IS NULL THEN 'DELETE'
-        |         WHEN (o.event_type IS DISTINCT FROM n.event_type)
-        |           OR (o.value IS DISTINCT FROM n.value) THEN 'UPDATE'
-        |    END AS change_type,
-        |    o.event_type AS old_event_type, n.event_type AS new_event_type,
-        |    o.value AS old_value, n.value AS new_value
-        |  FROM so o FULL OUTER JOIN sn n USING (user_id))
-        |WHERE change_type IS NOT NULL""".stripMargin,
-
-    "gold_late_arriving" ->
-      """SELECT o.o_orderkey, o.o_custkey,
-        |  COALESCE(cf.c_custkey, -1) AS cust_sk,
-        |  ce.c_custkey IS NULL AS was_late
-        |FROM orders o
-        |LEFT JOIN (SELECT c_custkey FROM customer WHERE c_custkey % 10 <> 0) ce
-        |  ON o.o_custkey = ce.c_custkey
-        |LEFT JOIN customer cf ON o.o_custkey = cf.c_custkey""".stripMargin,
-
-    "fct_accumulating_snapshot" ->
-      """SELECT o.o_orderkey, CAST(o.o_orderdate AS DATE) AS order_date,
-        |  o.o_orderstatus, f.first_ship_date, f.last_ship_date,
-        |  COALESCE(f.n_lines, 0) AS n_lines, f.total_qty,
-        |  CAST(date_diff('day', CAST(o.o_orderdate AS DATE), f.first_ship_date)
-        |       AS INTEGER) AS days_to_first_ship,
-        |  CAST(date_diff('day', f.first_ship_date, f.last_ship_date)
-        |       AS INTEGER) AS ship_span_days
-        |FROM orders o LEFT JOIN (
-        |  SELECT l_orderkey,
-        |    MIN(CAST(l_shipdate AS DATE)) AS first_ship_date,
-        |    MAX(CAST(l_shipdate AS DATE)) AS last_ship_date,
-        |    COUNT(*) AS n_lines,
-        |    CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS total_qty
-        |  FROM lineitem GROUP BY 1) f ON o.o_orderkey = f.l_orderkey""".stripMargin,
-
-    "fct_periodic_snapshot" ->
-      """WITH monthly AS (
-        |  SELECT o_custkey, CAST(date_trunc('month', o_orderdate) AS DATE) AS month,
-        |    COUNT(*) AS n_orders,
-        |    SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS spend
-        |  FROM orders GROUP BY 1, 2),
-        |mx AS (SELECT MAX(month) AS max_month FROM monthly),
-        |spans AS (SELECT o_custkey, MIN(month) AS first_month
-        |          FROM monthly GROUP BY 1),
-        |grid AS (
-        |  SELECT s.o_custkey,
-        |    CAST(UNNEST(generate_series(s.first_month, mx.max_month,
-        |                                INTERVAL 1 MONTH)) AS DATE) AS month
-        |  FROM spans s, mx)
-        |SELECT g.o_custkey, g.month,
-        |  COALESCE(m.n_orders, 0) AS n_orders,
-        |  CAST(COALESCE(m.spend, 0) AS DOUBLE) AS month_spend,
-        |  CAST(SUM(COALESCE(m.spend, 0)) OVER (
-        |    PARTITION BY g.o_custkey ORDER BY g.month) AS DOUBLE) AS cum_spend
-        |FROM grid g
-        |LEFT JOIN monthly m ON g.o_custkey = m.o_custkey AND g.month = m.month""".stripMargin,
-
-    "audit_fk_integrity" -> {
-      def edge(factTable: String, fk: String, dimTable: String,
-               dimKey: String, name: String): String =
-        s"""SELECT '$name' AS relationship,
-           |  COUNT(*) AS n_rows,
-           |  COUNT(CASE WHEN f.$fk IS NULL THEN 1 END) AS n_null_fk,
-           |  COUNT(CASE WHEN f.$fk IS NOT NULL AND d.k IS NULL THEN 1 END) AS n_orphans,
-           |  100.0 * COUNT(CASE WHEN f.$fk IS NOT NULL AND d.k IS NULL THEN 1 END)
-           |        / COUNT(*) AS orphan_pct
-           |FROM $factTable f
-           |LEFT JOIN (SELECT DISTINCT $dimKey AS k FROM $dimTable) d
-           |  ON f.$fk = d.k""".stripMargin
-      Seq(
-        edge("lineitem", "l_orderkey", "orders", "o_orderkey", "lineitem.l_orderkey->orders"),
-        edge("lineitem", "l_partkey", "part", "p_partkey", "lineitem.l_partkey->part"),
-        edge("lineitem", "l_suppkey", "supplier", "s_suppkey", "lineitem.l_suppkey->supplier"),
-        edge("orders", "o_custkey", "customer", "c_custkey", "orders.o_custkey->customer"))
-        .mkString("\nUNION ALL\n")
-    },
-
-    "gold_bridge_alloc" ->
-      """WITH d AS (
-        |  SELECT l_orderkey, l_linenumber, l_extendedprice,
-        |    l_extendedprice / CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)))
-        |      OVER (PARTITION BY l_orderkey) AS DOUBLE) AS weight
-        |  FROM lineitem)
-        |SELECT d.l_orderkey, d.l_linenumber, d.l_extendedprice, d.weight,
-        |  o.o_totalprice * d.weight AS allocated
-        |FROM d JOIN orders o ON d.l_orderkey = o.o_orderkey""".stripMargin,
-
-    "gold_asof_join" ->
-      s"""SELECT e.event_id, e.user_id, CAST(e.ts AS DATE) AS event_dt,
-         |  d.event_type AS segment, d.valid_from, d.is_current
-         |FROM events e LEFT JOIN ($scd2UserSql) d
-         |  ON d.user_id = e.user_id
-         | AND d.valid_from <= CAST(e.ts AS DATE)
-         | AND (d.valid_to IS NULL OR CAST(e.ts AS DATE) <= d.valid_to)""".stripMargin,
-
-    // Nearest semantics replayed as an explicit argmin: every version
-    // within tolerance ranked by (distance, valid_from) per fact row
-    // (fid = any bijection onto fact rows; NULL event_ids keep their
-    // own row). Tie at equal distance → smaller valid_from = backward,
-    // the engine's documented rule.
-    "gold_asof_nearest" ->
-      s"""WITH dim AS (
-         |  SELECT user_id AS bk_user_id, event_type AS segment, valid_from
-         |  FROM ($scd2UserSql)),
-         |f AS (
-         |  SELECT event_id, user_id, CAST(ts AS DATE) AS event_dt,
-         |    ROW_NUMBER() OVER () AS fid
-         |  FROM events),
-         |j AS (
-         |  SELECT f.event_id, f.user_id, f.event_dt, f.fid,
-         |    d.segment, d.valid_from,
-         |    CAST(ABS(datediff('day', d.valid_from, f.event_dt)) AS INTEGER) AS dist,
-         |    CASE WHEN d.valid_from <= f.event_dt THEN 'backward' ELSE 'forward' END AS dir
-         |  FROM f LEFT JOIN dim d
-         |    ON d.bk_user_id = f.user_id
-         |   AND ABS(datediff('day', d.valid_from, f.event_dt)) <= 30),
-         |r AS (
-         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY fid ORDER BY dist, valid_from) AS rn
-         |  FROM j)
-         |SELECT event_id, user_id, event_dt, segment, valid_from,
-         |  CASE WHEN valid_from IS NULL THEN NULL ELSE dist END AS asof_dist_days,
-         |  CASE WHEN valid_from IS NULL THEN NULL ELSE dir END AS asof_dir
-         |FROM r WHERE rn = 1""".stripMargin,
-
-    // Identical semantics through the merge-scan physical path.
-    "gold_asof_merge_scan" ->
-      s"""SELECT e.event_id, e.user_id, CAST(e.ts AS DATE) AS event_dt,
-         |  d.event_type AS segment, d.valid_from, d.is_current
-         |FROM events e LEFT JOIN ($scd2UserSql) d
-         |  ON d.user_id = e.user_id
-         | AND d.valid_from <= CAST(e.ts AS DATE)
-         | AND (d.valid_to IS NULL OR CAST(e.ts AS DATE) <= d.valid_to)""".stripMargin,
-
-    // The custom-operator twin must equal the interval join row for
-    // row on the contiguous SCD2 chain — same oracle as the others.
-    "gold_asof_custom_exec" ->
-      s"""SELECT e.event_id, e.user_id, CAST(e.ts AS DATE) AS event_dt,
-         |  d.event_type AS segment, d.valid_from, d.is_current
-         |FROM events e LEFT JOIN ($scd2UserSql) d
-         |  ON d.user_id = e.user_id
-         | AND d.valid_from <= CAST(e.ts AS DATE)
-         | AND (d.valid_to IS NULL OR CAST(e.ts AS DATE) <= d.valid_to)""".stripMargin,
-
-    "gold_fct_star" ->
-      s"""WITH staged AS MATERIALIZED (
-         |  SELECT * EXCLUDE (reason_code) FROM (${qualityAnnotatedSql()})
-         |  WHERE reason_code IS NULL AND user_id IS NOT NULL),
-         |deduped AS MATERIALIZED (
-         |  SELECT * FROM (
-         |    SELECT *, ROW_NUMBER() OVER (
-         |      PARTITION BY user_id, date_sk, time_30m_sk, event_type_norm
-         |      ORDER BY event_id DESC) AS rn
-         |    FROM staged) WHERE rn = 1),
-         |etype AS MATERIALIZED (
-         |  SELECT CAST(ROW_NUMBER() OVER (ORDER BY event_type_name) AS INTEGER) AS event_type_sk, event_type_name
-         |  FROM (SELECT DISTINCT TRIM(event_type_norm) AS event_type_name FROM (${cleanseEventsSql("")})
-         |        WHERE event_type_norm IS NOT NULL AND TRIM(event_type_norm) <> '')),
-         |dim_user AS MATERIALIZED (
-         |  SELECT user_id AS bk_user_id, event_type AS segment, valid_from, valid_to
-         |  FROM ($scd2UserSql))
-         |SELECT d.date_sk, d.time_30m_sk, d.user_id, t.event_type_sk, d.tipo_dia,
-         |  u.segment, u.valid_from AS segment_valid_from,
-         |  d.event_id, d.value, d.prop_k
-         |FROM deduped d
-         |LEFT JOIN etype t ON t.event_type_name = d.event_type_norm
-         |LEFT JOIN dim_user u ON u.bk_user_id = d.user_id
-         |  AND u.valid_from <= CAST(STRPTIME(CAST(d.date_sk AS VARCHAR), '%Y%m%d') AS DATE)
-         |  AND (u.valid_to IS NULL OR CAST(STRPTIME(CAST(d.date_sk AS VARCHAR), '%Y%m%d') AS DATE) <= u.valid_to)""".stripMargin,
-
-    // MlLite.olsTwoFeature mirrored: exact DECIMAL(28,6) moments (the
-    // regressand floor-quantized first), then the centered 2x2 Cramer
-    // solve in double arithmetic with the operation tree copied
-    // parenthesis for parenthesis.
-    "ml_ols_value" ->
-      """WITH r0 AS (
-        |  SELECT FLOOR(value * 1e6) / 1e6 AS yq,
-        |    CAST(hour(ts) AS DOUBLE) AS x1,
-        |    CAST(isodow(ts) AS DOUBLE) AS x2
-        |  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL),
-        |m AS (
-        |  SELECT CAST(COUNT(*) AS DOUBLE) AS n,
-        |    CAST(SUM(CAST(x1 AS DECIMAL(28,6))) AS DOUBLE) AS sx1,
-        |    CAST(SUM(CAST(x2 AS DECIMAL(28,6))) AS DOUBLE) AS sx2,
-        |    CAST(SUM(CAST(yq AS DECIMAL(28,6))) AS DOUBLE) AS sy,
-        |    CAST(SUM(CAST(x1 * x1 AS DECIMAL(28,6))) AS DOUBLE) AS sx1x1,
-        |    CAST(SUM(CAST(x2 * x2 AS DECIMAL(28,6))) AS DOUBLE) AS sx2x2,
-        |    CAST(SUM(CAST(x1 * x2 AS DECIMAL(28,6))) AS DOUBLE) AS sx1x2,
-        |    CAST(SUM(CAST(x1 * yq AS DECIMAL(28,6))) AS DOUBLE) AS sx1y,
-        |    CAST(SUM(CAST(x2 * yq AS DECIMAL(28,6))) AS DOUBLE) AS sx2y,
-        |    CAST(SUM(CAST(FLOOR(yq * yq * 1e6) / 1e6 AS DECIMAL(28,6))) AS DOUBLE) AS syy
-        |  FROM r0),
-        |c1s AS (
-        |  SELECT *,
-        |    sx1x1 - sx1 * sx1 / NULLIF(n, 0.0) AS a11,
-        |    sx2x2 - sx2 * sx2 / NULLIF(n, 0.0) AS a22,
-        |    sx1x2 - sx1 * sx2 / NULLIF(n, 0.0) AS a12,
-        |    sx1y - sx1 * sy / NULLIF(n, 0.0) AS c1,
-        |    sx2y - sx2 * sy / NULLIF(n, 0.0) AS c2,
-        |    syy - sy * sy / NULLIF(n, 0.0) AS sst
-        |  FROM m),
-        |c2s AS (SELECT *, NULLIF(a11 * a22 - a12 * a12, 0.0) AS det FROM c1s),
-        |c3s AS (
-        |  SELECT *,
-        |    (c1 * a22 - c2 * a12) / det AS b1,
-        |    (c2 * a11 - c1 * a12) / det AS b2
-        |  FROM c2s)
-        |SELECT CAST(n AS BIGINT) AS n,
-        |  (sy - b1 * sx1 - b2 * sx2) / NULLIF(n, 0.0) AS beta0,
-        |  b1 AS beta1, b2 AS beta2,
-        |  CASE WHEN sst = 0.0 THEN 0.0
-        |       ELSE 1.0 - (sst - (b1 * c1 + b2 * c2)) / sst END AS r2
-        |FROM c3s""".stripMargin,
-
-    // MlLite.logLogElasticity mirrored: gridded lns, q6-refloored
-    // products, decimal moment partials, fixed-order slope/corr.
-    "ana_price_elasticity" ->
-      """WITH r0 AS (
-        |  SELECT p_brand,
-        |    FLOOR(ln(l_extendedprice * (1.0 - l_discount) / l_quantity) * 1e6) / 1e6 AS x,
-        |    FLOOR(ln(l_quantity) * 1e6) / 1e6 AS y
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey
-        |  WHERE l_quantity IS NOT NULL AND l_quantity > 0
-        |    AND l_extendedprice * (1.0 - l_discount) / l_quantity > 0),
-        |m AS (
-        |  SELECT p_brand, CAST(COUNT(*) AS BIGINT) AS n,
-        |    CAST(SUM(CAST(x AS DECIMAL(28,6))) AS DOUBLE) AS sx,
-        |    CAST(SUM(CAST(y AS DECIMAL(28,6))) AS DOUBLE) AS sy,
-        |    CAST(SUM(CAST(FLOOR(x * x * 1e6) / 1e6 AS DECIMAL(28,6))) AS DOUBLE) AS sxx,
-        |    CAST(SUM(CAST(FLOOR(x * y * 1e6) / 1e6 AS DECIMAL(28,6))) AS DOUBLE) AS sxy,
-        |    CAST(SUM(CAST(FLOOR(y * y * 1e6) / 1e6 AS DECIMAL(28,6))) AS DOUBLE) AS syy
-        |  FROM r0 GROUP BY 1),
-        |c AS (
-        |  SELECT p_brand, n,
-        |    sxx - sx * sx / NULLIF(CAST(n AS DOUBLE), 0.0) AS cxx,
-        |    sxy - sx * sy / NULLIF(CAST(n AS DOUBLE), 0.0) AS cxy,
-        |    syy - sy * sy / NULLIF(CAST(n AS DOUBLE), 0.0) AS cyy,
-        |    sx, sy
-        |  FROM m),
-        |s AS (
-        |  SELECT *, cxy / NULLIF(cxx, 0.0) AS slope,
-        |    (CASE WHEN cxx < 0.0 THEN NULL ELSE sqrt(cxx) END)
-        |      * (CASE WHEN cyy < 0.0 THEN NULL ELSE sqrt(cyy) END) AS denom
-        |  FROM c)
-        |SELECT p_brand, n, slope AS elasticity,
-        |  (sy - slope * sx) / NULLIF(CAST(n AS DOUBLE), 0.0) AS intercept,
-        |  cxy / NULLIF(denom, 0.0) AS corr
-        |FROM s""".stripMargin,
-
-    // MlLite.olsInference mirrored: the ml_ols_value CTE chain plus
-    // sigma2/SE/t in the identical fixed IEEE order; sqrt through the
-    // same NULL-on-negative guard (DuckDB errors on sqrt(<0)).
-    "ml_linear_tstats" ->
-      """WITH r0 AS (
-        |  SELECT FLOOR(value * 1e6) / 1e6 AS yq,
-        |    CAST(hour(ts) AS DOUBLE) AS x1,
-        |    CAST(isodow(ts) AS DOUBLE) AS x2
-        |  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL),
-        |m AS (
-        |  SELECT CAST(COUNT(*) AS DOUBLE) AS n,
-        |    CAST(SUM(CAST(x1 AS DECIMAL(28,6))) AS DOUBLE) AS sx1,
-        |    CAST(SUM(CAST(x2 AS DECIMAL(28,6))) AS DOUBLE) AS sx2,
-        |    CAST(SUM(CAST(yq AS DECIMAL(28,6))) AS DOUBLE) AS sy,
-        |    CAST(SUM(CAST(x1 * x1 AS DECIMAL(28,6))) AS DOUBLE) AS sx1x1,
-        |    CAST(SUM(CAST(x2 * x2 AS DECIMAL(28,6))) AS DOUBLE) AS sx2x2,
-        |    CAST(SUM(CAST(x1 * x2 AS DECIMAL(28,6))) AS DOUBLE) AS sx1x2,
-        |    CAST(SUM(CAST(x1 * yq AS DECIMAL(28,6))) AS DOUBLE) AS sx1y,
-        |    CAST(SUM(CAST(x2 * yq AS DECIMAL(28,6))) AS DOUBLE) AS sx2y,
-        |    CAST(SUM(CAST(FLOOR(yq * yq * 1e6) / 1e6 AS DECIMAL(28,6))) AS DOUBLE) AS syy
-        |  FROM r0),
-        |c1s AS (
-        |  SELECT *,
-        |    sx1x1 - sx1 * sx1 / NULLIF(n, 0.0) AS a11,
-        |    sx2x2 - sx2 * sx2 / NULLIF(n, 0.0) AS a22,
-        |    sx1x2 - sx1 * sx2 / NULLIF(n, 0.0) AS a12,
-        |    sx1y - sx1 * sy / NULLIF(n, 0.0) AS c1,
-        |    sx2y - sx2 * sy / NULLIF(n, 0.0) AS c2,
-        |    syy - sy * sy / NULLIF(n, 0.0) AS sst
-        |  FROM m),
-        |c2s AS (SELECT *, NULLIF(a11 * a22 - a12 * a12, 0.0) AS det FROM c1s),
-        |c3s AS (
-        |  SELECT *,
-        |    (c1 * a22 - c2 * a12) / det AS b1,
-        |    (c2 * a11 - c1 * a12) / det AS b2
-        |  FROM c2s),
-        |c4s AS (
-        |  SELECT *,
-        |    (sst - (b1 * c1 + b2 * c2)) / NULLIF(n - 3.0, 0.0) AS sigma2,
-        |    sx1 / NULLIF(n, 0.0) AS m1, sx2 / NULLIF(n, 0.0) AS m2
-        |  FROM c3s),
-        |c5s AS (
-        |  SELECT *,
-        |    CASE WHEN sigma2 * a22 / det < 0.0 THEN NULL
-        |         ELSE sqrt(sigma2 * a22 / det) END AS se1,
-        |    CASE WHEN sigma2 * a11 / det < 0.0 THEN NULL
-        |         ELSE sqrt(sigma2 * a11 / det) END AS se2,
-        |    CASE WHEN sigma2 * (1.0 / NULLIF(n, 0.0)
-        |        + (m1 * m1 * a22 - 2.0 * m1 * m2 * a12 + m2 * m2 * a11) / det) < 0.0 THEN NULL
-        |         ELSE sqrt(sigma2 * (1.0 / NULLIF(n, 0.0)
-        |        + (m1 * m1 * a22 - 2.0 * m1 * m2 * a12 + m2 * m2 * a11) / det)) END AS se0,
-        |    (sy - b1 * sx1 - b2 * sx2) / NULLIF(n, 0.0) AS b0
-        |  FROM c4s)
-        |SELECT CAST(n AS BIGINT) AS n,
-        |  b0 AS beta0, b1 AS beta1, b2 AS beta2, sigma2,
-        |  se0, se1, se2,
-        |  b0 / NULLIF(se0, 0.0) AS t0,
-        |  b1 / NULLIF(se1, 0.0) AS t1,
-        |  b2 / NULLIF(se2, 0.0) AS t2,
-        |  abs(b1 / NULLIF(se1, 0.0)) > 1.96 AS x1_significant_5pct,
-        |  abs(b2 / NULLIF(se2, 0.0)) > 1.96 AS x2_significant_5pct
-        |FROM c5s""".stripMargin,
-
-    "ml_logreg_purchase" -> logregOracleSql(rounds = 6, lr = "0.5"),
-
-    // Permutation importance: the shared GD chain + per-feature
-    // md5-bucket rotations + exact-midrank AUC blocks.
-    "ml_permutation_importance" ->
-      permImportanceOracleSql(rounds = 6, lr = "0.5", buckets = 64),
-
-    // MlLite.vif mirrored: one DECIMAL(38,12) moment panel, each sum
-    // cast to double once, the same fixed r/R2/VIF sequence and the
-    // same degenerate-input guards.
-    "ml_vif" ->
-      """WITH r0 AS (
-        |  SELECT FLOOR(hour(ts) / 24.0 * 1e6) / 1e6 AS x1,
-        |    FLOOR(isodow(ts) / 7.0 * 1e6) / 1e6 AS x2,
-        |    FLOOR(value / 100.0 * 1e6) / 1e6 AS x3
-        |  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL),
-        |m AS (
-        |  SELECT CAST(COUNT(*) AS BIGINT) AS n,
-        |    CAST(SUM(CAST(x1 AS DECIMAL(38,12))) AS DOUBLE) AS s1,
-        |    CAST(SUM(CAST(x2 AS DECIMAL(38,12))) AS DOUBLE) AS s2,
-        |    CAST(SUM(CAST(x3 AS DECIMAL(38,12))) AS DOUBLE) AS s3,
-        |    CAST(SUM(CAST(x1 * x1 AS DECIMAL(38,12))) AS DOUBLE) AS s11,
-        |    CAST(SUM(CAST(x2 * x2 AS DECIMAL(38,12))) AS DOUBLE) AS s22,
-        |    CAST(SUM(CAST(x3 * x3 AS DECIMAL(38,12))) AS DOUBLE) AS s33,
-        |    CAST(SUM(CAST(x1 * x2 AS DECIMAL(38,12))) AS DOUBLE) AS s12,
-        |    CAST(SUM(CAST(x1 * x3 AS DECIMAL(38,12))) AS DOUBLE) AS s13,
-        |    CAST(SUM(CAST(x2 * x3 AS DECIMAL(38,12))) AS DOUBLE) AS s23
-        |  FROM r0),
-        |rr AS (
-        |  SELECT n,
-        |    CASE WHEN sqrt(CAST(n AS DOUBLE) * s11 - s1 * s1)
-        |              * sqrt(CAST(n AS DOUBLE) * s22 - s2 * s2) <> 0.0
-        |         THEN (CAST(n AS DOUBLE) * s12 - s1 * s2)
-        |              / (sqrt(CAST(n AS DOUBLE) * s11 - s1 * s1)
-        |                 * sqrt(CAST(n AS DOUBLE) * s22 - s2 * s2)) END AS r12,
-        |    CASE WHEN sqrt(CAST(n AS DOUBLE) * s11 - s1 * s1)
-        |              * sqrt(CAST(n AS DOUBLE) * s33 - s3 * s3) <> 0.0
-        |         THEN (CAST(n AS DOUBLE) * s13 - s1 * s3)
-        |              / (sqrt(CAST(n AS DOUBLE) * s11 - s1 * s1)
-        |                 * sqrt(CAST(n AS DOUBLE) * s33 - s3 * s3)) END AS r13,
-        |    CASE WHEN sqrt(CAST(n AS DOUBLE) * s22 - s2 * s2)
-        |              * sqrt(CAST(n AS DOUBLE) * s33 - s3 * s3) <> 0.0
-        |         THEN (CAST(n AS DOUBLE) * s23 - s2 * s3)
-        |              / (sqrt(CAST(n AS DOUBLE) * s22 - s2 * s2)
-        |                 * sqrt(CAST(n AS DOUBLE) * s33 - s3 * s3)) END AS r23
-        |  FROM m),
-        |rows_ AS (
-        |  SELECT 'x1' AS feature, n,
-        |    CASE WHEN 1.0 - r23 * r23 <> 0.0
-        |         THEN (r12*r12 + r13*r13 - 2.0*r12*r13*r23) / (1.0 - r23*r23)
-        |    END AS r2 FROM rr
-        |  UNION ALL
-        |  SELECT 'x2', n,
-        |    CASE WHEN 1.0 - r13 * r13 <> 0.0
-        |         THEN (r12*r12 + r23*r23 - 2.0*r12*r23*r13) / (1.0 - r13*r13)
-        |    END FROM rr
-        |  UNION ALL
-        |  SELECT 'x3', n,
-        |    CASE WHEN 1.0 - r12 * r12 <> 0.0
-        |         THEN (r13*r13 + r23*r23 - 2.0*r13*r23*r12) / (1.0 - r12*r12)
-        |    END FROM rr)
-        |SELECT feature, n,
-        |  FLOOR(r2 * 1e6) / 1e6 AS r2_others,
-        |  CASE WHEN r2 IS NOT NULL AND r2 < 1.0
-        |       THEN FLOOR(1.0 / (1.0 - r2) * 1e6) / 1e6 END AS vif
-        |FROM rows_""".stripMargin,
-
-    "ml_logreg_calibration" ->
-      logregCalibrationOracleSql(rounds = 6, lr = "0.5", bins = 10),
-
-    "ml_logreg_pr_curve" ->
-      logregPrOracleSql(rounds = 6, lr = "0.5",
-        thresholds = Seq(0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9)),
-
-    // MlLite.costCurve mirrored: the PR-curve replay as a CTE, the
-    // threshold × ratio grid, exact-count cost arithmetic, per-ratio
-    // argmin by exact-double equality.
-    "ml_cost_curve" ->
-      s"""WITH pr AS (
-        |${logregPrOracleSql(rounds = 6, lr = "0.5",
-          thresholds = Seq(0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9))}
-        |),
-        |grid AS (
-        |  SELECT threshold, tp, fp, fn, fn_cost_ratio,
-        |    CAST(fp AS DOUBLE) + fn_cost_ratio * CAST(fn AS DOUBLE) AS expected_cost
-        |  FROM pr CROSS JOIN (
-        |    SELECT CAST(UNNEST([1.0, 2.0, 5.0, 10.0]) AS DOUBLE) AS fn_cost_ratio)),
-        |best AS (
-        |  SELECT fn_cost_ratio, MIN(expected_cost) AS b
-        |  FROM grid GROUP BY 1)
-        |SELECT g.fn_cost_ratio, g.threshold, g.tp, g.fp, g.fn,
-        |  g.expected_cost, g.expected_cost = b.b AS is_optimal
-        |FROM grid g JOIN best b USING (fn_cost_ratio)""".stripMargin,
-
-    // MlLite.infoGain mirrored: count-weighted entropies with
-    // 1e-6-grid ln terms in DECIMAL partials, one /n at the end.
-    "ml_info_gain" ->
-      """WITH r0 AS (
-        |  SELECT CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y,
-        |    hour(ts) AS hr, isodow(ts) AS dow,
-        |    LEAST(9, CAST(FLOOR(value / 10) AS BIGINT)) AS valdec
-        |  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL),
-        |lng AS (
-        |  SELECT y, 'hr' AS feature, CAST(hr AS BIGINT) AS fval FROM r0
-        |  UNION ALL SELECT y, 'dow', CAST(dow AS BIGINT) FROM r0
-        |  UNION ALL SELECT y, 'valdec', valdec FROM r0),
-        |cells AS (SELECT feature, fval, y, COUNT(*) AS n_vc FROM lng GROUP BY 1, 2, 3),
-        |pv AS (SELECT feature, fval, SUM(n_vc) AS n_v FROM cells GROUP BY 1, 2),
-        |cond AS (
-        |  SELECT c.feature,
-        |    SUM(CAST(c.n_vc * (FLOOR(LN(CAST(c.n_vc AS DOUBLE) / CAST(p.n_v AS DOUBLE)) * 1e6) / 1e6) AS DECIMAL(28,6))) AS sx,
-        |    COUNT(DISTINCT c.fval) AS n_values,
-        |    SUM(c.n_vc) AS n
-        |  FROM cells c JOIN pv p ON p.feature = c.feature AND p.fval = c.fval
-        |  GROUP BY 1),
-        |lt AS (
-        |  SELECT SUM(CAST(n_c * (FLOOR(LN(CAST(n_c AS DOUBLE) / CAST(n_t AS DOUBLE)) * 1e6) / 1e6) AS DECIMAL(28,6))) AS sy
-        |  FROM (SELECT y, SUM(n_vc) AS n_c FROM cells WHERE feature = 'hr' GROUP BY 1) a,
-        |       (SELECT SUM(n_vc) AS n_t FROM cells WHERE feature = 'hr') b)
-        |SELECT feature, CAST(n_values AS BIGINT) AS n_values,
-        |  -CAST(sy AS DOUBLE) / CAST(n AS DOUBLE) AS entropy_y,
-        |  -CAST(sx AS DOUBLE) / CAST(n AS DOUBLE) AS cond_entropy,
-        |  CAST(sx - sy AS DOUBLE) / CAST(n AS DOUBLE) AS info_gain
-        |FROM cond, lt""".stripMargin,
-
-    "ml_adaboost_stumps" -> adaboostOracleSql(rounds = 5),
-
-    "ml_gbt_regression" -> gbtOracleSql(rounds = 5),
-
-    // LOO target encoding replay: decimal-exact category sums, the
-    // subtract-in-decimal-then-cast encode, raw-quotient prior.
-    "ml_target_encode" ->
-      """WITH base AS (
-        |  SELECT o_orderkey AS id, o_custkey AS cat,
-        |    CAST(o_totalprice AS DECIMAL(18,2)) AS yv
-        |  FROM orders WHERE o_custkey IS NOT NULL AND o_totalprice IS NOT NULL),
-        |cats AS (
-        |  SELECT cat, COUNT(*) AS n_cat, CAST(SUM(yv) AS DECIMAL(18,2)) AS sy_cat
-        |  FROM base GROUP BY 1),
-        |g AS (SELECT CAST(SUM(yv) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS prior FROM base)
-        |SELECT b.id, b.cat, CAST(b.yv AS DOUBLE) AS y, c.n_cat, g.prior,
-        |  (CAST(c.sy_cat - b.yv AS DOUBLE) + 20.0 * g.prior)
-        |    / (CAST(c.n_cat - 1 AS DOUBLE) + 20.0) AS encoded
-        |FROM base b JOIN cats c ON c.cat = b.cat, g""".stripMargin,
-
-    // Audit.kAnonymity mirrored: exact combo populations + distinct
-    // sensitive counts, both verdicts.
-    "privacy_k_anon_audit" ->
-      """SELECT CAST(FLOOR(hour(ts) / 6) AS BIGINT) AS hour_band,
-        |  CAST(isodow(ts) AS BIGINT) AS iso_dow,
-        |  LEAST(9, CAST(FLOOR(value / 10) AS BIGINT)) AS val_decile,
-        |  CAST(COUNT(*) AS BIGINT) AS n_rows,
-        |  CAST(COUNT(DISTINCT event_type) AS BIGINT) AS n_sensitive,
-        |  COUNT(*) >= 5 AS k_anonymous,
-        |  COUNT(DISTINCT event_type) >= 2 AS l_diverse
-        |FROM events WHERE ts IS NOT NULL AND value IS NOT NULL
-        |GROUP BY 1, 2, 3""".stripMargin,
-
-    // Audit.lDiversityEntropy mirrored: exact-count shares, p·ln p
-    // gridded 1e-6 into the DECIMAL(28,6) per-combo sum, negated at
-    // the edge; the ln(3) threshold is the SAME Scala-evaluated
-    // literal both engines compare against.
-    "privacy_l_diversity" ->
-      s"""WITH base AS (
-        |  SELECT event_type,
-        |    CAST(FLOOR(hour(ts) / 6) AS BIGINT) AS hour_band,
-        |    CAST(isodow(ts) AS BIGINT) AS iso_dow,
-        |    LEAST(9, CAST(FLOOR(value / 10) AS BIGINT)) AS val_decile
-        |  FROM events
-        |  WHERE ts IS NOT NULL AND value IS NOT NULL AND event_type IS NOT NULL),
-        |cells AS (
-        |  SELECT hour_band, iso_dow, val_decile, event_type AS s,
-        |    CAST(COUNT(*) AS BIGINT) AS n_cs
-        |  FROM base GROUP BY 1, 2, 3, 4),
-        |combos AS (
-        |  SELECT hour_band, iso_dow, val_decile,
-        |    CAST(SUM(n_cs) AS BIGINT) AS n_rows,
-        |    CAST(COUNT(*) AS BIGINT) AS n_sensitive
-        |  FROM cells GROUP BY 1, 2, 3)
-        |SELECT c.hour_band, c.iso_dow, c.val_decile, c.n_rows, c.n_sensitive,
-        |  -CAST(SUM(CAST(FLOOR(
-        |      (CAST(l.n_cs AS DOUBLE) / CAST(c.n_rows AS DOUBLE))
-        |      * LN(CAST(l.n_cs AS DOUBLE) / CAST(c.n_rows AS DOUBLE))
-        |      * 1e6) / 1e6 AS DECIMAL(28,6))) AS DOUBLE) AS entropy,
-        |  c.n_sensitive >= 3 AS distinct_l_diverse,
-        |  -CAST(SUM(CAST(FLOOR(
-        |      (CAST(l.n_cs AS DOUBLE) / CAST(c.n_rows AS DOUBLE))
-        |      * LN(CAST(l.n_cs AS DOUBLE) / CAST(c.n_rows AS DOUBLE))
-        |      * 1e6) / 1e6 AS DECIMAL(28,6))) AS DOUBLE)
-        |    >= ${math.log(3.0)} AS entropy_l_diverse
-        |FROM cells l JOIN combos c USING (hour_band, iso_dow, val_decile)
-        |GROUP BY 1, 2, 3, 4, 5""".stripMargin,
-
-    // Audit.tCloseness mirrored: full combo × sensitive grid so absent
-    // values pay |0 − q|, gridded 1e-6 terms into the DECIMAL(28,6)
-    // per-combo sum, halved at the edge.
-    "privacy_t_closeness" ->
-      """WITH base AS (
-        |  SELECT event_type,
-        |    CAST(FLOOR(hour(ts) / 6) AS BIGINT) AS hour_band,
-        |    CAST(isodow(ts) AS BIGINT) AS iso_dow,
-        |    LEAST(9, CAST(FLOOR(value / 10) AS BIGINT)) AS val_decile
-        |  FROM events
-        |  WHERE ts IS NOT NULL AND value IS NOT NULL AND event_type IS NOT NULL),
-        |cells AS (
-        |  SELECT hour_band, iso_dow, val_decile, event_type AS s,
-        |    CAST(COUNT(*) AS BIGINT) AS n_cs
-        |  FROM base GROUP BY 1, 2, 3, 4),
-        |combos AS (
-        |  SELECT hour_band, iso_dow, val_decile,
-        |    CAST(SUM(n_cs) AS BIGINT) AS n_rows
-        |  FROM cells GROUP BY 1, 2, 3),
-        |gpop AS (
-        |  SELECT event_type AS s, CAST(COUNT(*) AS BIGINT) AS n_s FROM base GROUP BY 1),
-        |totq AS (SELECT CAST(SUM(n_s) AS BIGINT) AS n FROM gpop),
-        |sens AS (
-        |  SELECT s, CAST(n_s AS DOUBLE) / CAST(n AS DOUBLE) AS q
-        |  FROM gpop CROSS JOIN totq),
-        |grid AS (
-        |  SELECT c.hour_band, c.iso_dow, c.val_decile, c.n_rows, se.s, se.q,
-        |    CAST(COALESCE(cl.n_cs, 0) AS DOUBLE) / CAST(c.n_rows AS DOUBLE) AS p
-        |  FROM combos c CROSS JOIN sens se
-        |  LEFT JOIN cells cl ON cl.hour_band = c.hour_band
-        |    AND cl.iso_dow = c.iso_dow AND cl.val_decile = c.val_decile
-        |    AND cl.s = se.s)
-        |SELECT hour_band, iso_dow, val_decile, n_rows,
-        |  CAST(SUM(CAST(FLOOR(ABS(p - q) * 1e6) / 1e6 AS DECIMAL(28,6)))
-        |    AS DOUBLE) / 2.0 AS tv_distance,
-        |  CAST(SUM(CAST(FLOOR(ABS(p - q) * 1e6) / 1e6 AS DECIMAL(28,6)))
-        |    AS DOUBLE) / 2.0 <= 0.2 AS t_close
-        |FROM grid GROUP BY 1, 2, 3, 4""".stripMargin,
-
-    "privacy_suppress_release" ->
-      """WITH binned AS (
-        |  SELECT event_id, event_type, value,
-        |    CAST(FLOOR(hour(ts) / 6) AS BIGINT) AS hour_band,
-        |    CAST(isodow(ts) AS BIGINT) AS iso_dow,
-        |    LEAST(9, CAST(FLOOR(value / 10) AS BIGINT)) AS val_decile
-        |  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL),
-        |safe AS (
-        |  SELECT hour_band, iso_dow, val_decile
-        |  FROM binned GROUP BY 1, 2, 3
-        |  HAVING COUNT(*) >= 5 AND COUNT(DISTINCT event_type) >= 2)
-        |SELECT b.event_id, b.event_type, b.value,
-        |  b.hour_band, b.iso_dow, b.val_decile
-        |FROM binned b
-        |JOIN safe s ON s.hour_band = b.hour_band AND s.iso_dow = b.iso_dow
-        |  AND s.val_decile = b.val_decile""".stripMargin,
-
-    // Generalization ladder replay: per-level min class size, the
-    // first-k-anonymous-level choice, CASE-selected rendering, final
-    // windowed suppression at the chosen grain.
-    "privacy_generalize_release" ->
-      """WITH base AS (
-        |  SELECT
-        |    CAST(CAST(FLOOR(hour(ts) / 6) AS BIGINT) AS VARCHAR) AS g0_0,
-        |    CAST(CAST(isodow(ts) AS BIGINT) AS VARCHAR) AS g0_1,
-        |    CAST(LEAST(9, CAST(FLOOR(value / 10) AS BIGINT)) AS VARCHAR) AS g0_2,
-        |    CAST(CAST(FLOOR(hour(ts) / 6) AS BIGINT) AS VARCHAR) AS g1_0,
-        |    CASE WHEN isodow(ts) >= 6 THEN 'WE' ELSE 'WD' END AS g1_1,
-        |    CAST(LEAST(4, CAST(FLOOR(value / 20) AS BIGINT)) AS VARCHAR) AS g1_2,
-        |    '*' AS g2_0, '*' AS g2_1, '*' AS g2_2
-        |  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL),
-        |m0 AS (SELECT MIN(c) AS m0 FROM
-        |  (SELECT COUNT(*) AS c FROM base GROUP BY g0_0, g0_1, g0_2)),
-        |m1 AS (SELECT MIN(c) AS m1 FROM
-        |  (SELECT COUNT(*) AS c FROM base GROUP BY g1_0, g1_1, g1_2)),
-        |lvl AS (SELECT CAST(CASE WHEN m0 >= 5 THEN 0
-        |                         WHEN m1 >= 5 THEN 1
-        |                         ELSE 2 END AS INTEGER) AS gen_level
-        |  FROM m0 CROSS JOIN m1),
-        |rel AS (SELECT
-        |    CASE gen_level WHEN 0 THEN g0_0 WHEN 1 THEN g1_0 ELSE g2_0 END
-        |      AS hour_band,
-        |    CASE gen_level WHEN 0 THEN g0_1 WHEN 1 THEN g1_1 ELSE g2_1 END
-        |      AS iso_dow,
-        |    CASE gen_level WHEN 0 THEN g0_2 WHEN 1 THEN g1_2 ELSE g2_2 END
-        |      AS val_decile,
-        |    gen_level
-        |  FROM base CROSS JOIN lvl)
-        |SELECT hour_band, iso_dow, val_decile, gen_level FROM (
-        |  SELECT *, COUNT(*) OVER
-        |    (PARTITION BY hour_band, iso_dow, val_decile) AS cn
-        |  FROM rel)
-        |WHERE cn >= 5""".stripMargin,
-
-    // Laplace DP release replay: the md5-32 uniform, the inverse-CDF
-    // draw with the ln floor-quantized on the group panel (§5), the
-    // clamped floor release; b = sensitivity/epsilon = 2.0 exact.
-    // Audit.dpNoisyMean mirrored: clamp-grid-decimal sum, two salted
-    // md5 Laplace draws, the floored-denominator mean.
-    "privacy_dp_mean" ->
-      """WITH g AS (
-        |  SELECT CAST(FLOOR(hour(ts) / 6) AS BIGINT) AS hour_band,
-        |    CAST(isodow(ts) AS BIGINT) AS iso_dow,
-        |    CAST(COUNT(*) AS BIGINT) AS n_rows,
-        |    CAST(SUM(CAST(FLOOR(LEAST(100.0, GREATEST(0.0, CAST(value AS DOUBLE))) * 1e6) / 1e6
-        |      AS DECIMAL(28,6))) AS DOUBLE) AS clamped_sum
-        |  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL
-        |  GROUP BY 1, 2),
-        |d AS (
-        |  SELECT *,
-        |    (CAST(CAST('0x' || substr(md5(concat_ws('|',
-        |       CAST(hour_band AS VARCHAR), CAST(iso_dow AS VARCHAR), 'sum')), 1, 8) AS BIGINT) AS DOUBLE)
-        |      + 0.5) / 4294967296.0 AS us,
-        |    (CAST(CAST('0x' || substr(md5(concat_ws('|',
-        |       CAST(hour_band AS VARCHAR), CAST(iso_dow AS VARCHAR), 'cnt')), 1, 8) AS BIGINT) AS DOUBLE)
-        |      + 0.5) / 4294967296.0 AS uc
-        |  FROM g),
-        |n AS (
-        |  SELECT hour_band, iso_dow, n_rows, clamped_sum,
-        |    FLOOR((-200.0) * (CASE WHEN us < 0.5 THEN -1.0 ELSE 1.0 END)
-        |      * (FLOOR(LN(1.0 - 2.0 * ABS(us - 0.5)) * 1e6) / 1e6) * 1e6) / 1e6 AS noise_sum,
-        |    FLOOR((-2.0) * (CASE WHEN uc < 0.5 THEN -1.0 ELSE 1.0 END)
-        |      * (FLOOR(LN(1.0 - 2.0 * ABS(uc - 0.5)) * 1e6) / 1e6) * 1e6) / 1e6 AS noise_cnt
-        |  FROM d)
-        |SELECT hour_band, iso_dow, n_rows, clamped_sum, noise_sum, noise_cnt,
-        |  (clamped_sum + noise_sum)
-        |    / GREATEST(1.0, CAST(n_rows AS DOUBLE) + noise_cnt) AS released_mean
-        |FROM n""".stripMargin,
-
-    "privacy_dp_release" ->
-      """WITH g AS (
-        |  SELECT CAST(FLOOR(hour(ts) / 6) AS BIGINT) AS hour_band,
-        |    CAST(isodow(ts) AS BIGINT) AS iso_dow,
-        |    LEAST(9, CAST(FLOOR(value / 10) AS BIGINT)) AS val_decile,
-        |    CAST(COUNT(*) AS BIGINT) AS n_rows
-        |  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL
-        |  GROUP BY 1, 2, 3),
-        |drawn AS (
-        |  SELECT *,
-        |    (CAST(CAST('0x' || substr(md5(concat_ws('|',
-        |       CAST(hour_band AS VARCHAR), CAST(iso_dow AS VARCHAR),
-        |       CAST(val_decile AS VARCHAR))), 1, 8) AS BIGINT) AS DOUBLE)
-        |      + 0.5) / 4294967296.0 AS u
-        |  FROM g),
-        |noised AS (
-        |  SELECT hour_band, iso_dow, val_decile, n_rows,
-        |    FLOOR((-2.0) * (CASE WHEN u < 0.5 THEN -1.0 ELSE 1.0 END)
-        |      * (FLOOR(LN(1.0 - 2.0 * ABS(u - 0.5)) * 1e6) / 1e6) * 1e6) / 1e6 AS noise
-        |  FROM drawn)
-        |SELECT hour_band, iso_dow, val_decile, n_rows, noise,
-        |  CAST(n_rows AS DOUBLE) + noise AS noisy_count,
-        |  CAST(GREATEST(0, FLOOR(CAST(n_rows AS DOUBLE) + noise)) AS BIGINT) AS released_count
-        |FROM noised""".stripMargin,
-
-    // MlLite.decisionStump mirrored: cumulative bin prefixes per
-    // feature, guarded 0·ln0 split entropies, total-ordered argmax.
-    "ml_decision_stump" ->
-      """WITH r0 AS (
-        |  SELECT CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y,
-        |    hour(ts) AS hr, isodow(ts) AS dow,
-        |    LEAST(9, CAST(FLOOR(value / 10) AS BIGINT)) AS valdec
-        |  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL),
-        |lng AS (
-        |  SELECT y, 'hr' AS feature, CAST(hr AS BIGINT) AS fval FROM r0
-        |  UNION ALL SELECT y, 'dow', CAST(dow AS BIGINT) FROM r0
-        |  UNION ALL SELECT y, 'valdec', valdec FROM r0),
-        |cells AS (SELECT feature, fval, y, COUNT(*) AS n_vc FROM lng GROUP BY 1, 2, 3),
-        |pv AS (
-        |  SELECT feature, fval, SUM(n_vc) AS n_v,
-        |    SUM(CASE WHEN y = 1 THEN n_vc ELSE 0 END) AS pos_v
-        |  FROM cells GROUP BY 1, 2),
-        |tot AS (SELECT feature, SUM(n_v) AS n, SUM(pos_v) AS pos, MAX(fval) AS maxv
-        |        FROM pv GROUP BY 1),
-        |cand AS (
-        |  SELECT pv.feature, pv.fval,
-        |    SUM(n_v) OVER (PARTITION BY pv.feature ORDER BY fval ROWS UNBOUNDED PRECEDING) AS n_le,
-        |    SUM(pos_v) OVER (PARTITION BY pv.feature ORDER BY fval ROWS UNBOUNDED PRECEDING) AS pos_le,
-        |    tot.n, tot.pos, tot.maxv
-        |  FROM pv JOIN tot ON tot.feature = pv.feature),
-        |c2 AS (
-        |  SELECT *, n - n_le AS n_gt, pos - pos_le AS pos_gt
-        |  FROM cand WHERE fval < maxv),
-        |scored AS (
-        |  SELECT *,
-        |    (CASE WHEN pos_le > 0 THEN CAST(pos_le * (FLOOR(LN(CAST(pos_le AS DOUBLE) / CAST(n_le AS DOUBLE)) * 1e6) / 1e6) AS DECIMAL(28,6)) ELSE CAST(0 AS DECIMAL(28,6)) END
-        |     + CASE WHEN n_le - pos_le > 0 THEN CAST((n_le - pos_le) * (FLOOR(LN(CAST(n_le - pos_le AS DOUBLE) / CAST(n_le AS DOUBLE)) * 1e6) / 1e6) AS DECIMAL(28,6)) ELSE CAST(0 AS DECIMAL(28,6)) END
-        |     + CASE WHEN pos_gt > 0 THEN CAST(pos_gt * (FLOOR(LN(CAST(pos_gt AS DOUBLE) / CAST(n_gt AS DOUBLE)) * 1e6) / 1e6) AS DECIMAL(28,6)) ELSE CAST(0 AS DECIMAL(28,6)) END
-        |     + CASE WHEN n_gt - pos_gt > 0 THEN CAST((n_gt - pos_gt) * (FLOOR(LN(CAST(n_gt - pos_gt AS DOUBLE) / CAST(n_gt AS DOUBLE)) * 1e6) / 1e6) AS DECIMAL(28,6)) ELSE CAST(0 AS DECIMAL(28,6)) END) AS sx,
-        |    (CASE WHEN pos > 0 THEN CAST(pos * (FLOOR(LN(CAST(pos AS DOUBLE) / CAST(n AS DOUBLE)) * 1e6) / 1e6) AS DECIMAL(28,6)) ELSE CAST(0 AS DECIMAL(28,6)) END
-        |     + CASE WHEN n - pos > 0 THEN CAST((n - pos) * (FLOOR(LN(CAST(n - pos AS DOUBLE) / CAST(n AS DOUBLE)) * 1e6) / 1e6) AS DECIMAL(28,6)) ELSE CAST(0 AS DECIMAL(28,6)) END) AS sy
-        |  FROM c2)
-        |SELECT feature, fval AS threshold,
-        |  CAST(sx - sy AS DOUBLE) / CAST(n AS DOUBLE) AS info_gain,
-        |  CASE WHEN pos_le * 2 > n_le THEN 1 ELSE 0 END AS left_pred,
-        |  CASE WHEN pos_gt * 2 > n_gt THEN 1 ELSE 0 END AS right_pred,
-        |  CAST(GREATEST(pos_le, n_le - pos_le) + GREATEST(pos_gt, n_gt - pos_gt) AS DOUBLE)
-        |    / CAST(n AS DOUBLE) AS accuracy
-        |FROM scored
-        |QUALIFY ROW_NUMBER() OVER (ORDER BY CAST(sx - sy AS DOUBLE) / CAST(n AS DOUBLE) DESC, feature, fval) = 1""".stripMargin,
-
-    // MlLite.ridgeTwoFeature mirrored: the OLS moment panel with
-    // lambda on the centered diagonal and the full quadratic-form SSE
-    // over the UNpenalized moments.
-    "ml_ridge_value" ->
-      """WITH r0 AS (
-        |  SELECT FLOOR(value * 1e6) / 1e6 AS yq,
-        |    CAST(hour(ts) AS DOUBLE) AS x1,
-        |    CAST(isodow(ts) AS DOUBLE) AS x2
-        |  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL),
-        |m AS (
-        |  SELECT CAST(COUNT(*) AS DOUBLE) AS n,
-        |    CAST(SUM(CAST(x1 AS DECIMAL(28,6))) AS DOUBLE) AS sx1,
-        |    CAST(SUM(CAST(x2 AS DECIMAL(28,6))) AS DOUBLE) AS sx2,
-        |    CAST(SUM(CAST(yq AS DECIMAL(28,6))) AS DOUBLE) AS sy,
-        |    CAST(SUM(CAST(x1 * x1 AS DECIMAL(28,6))) AS DOUBLE) AS sx1x1,
-        |    CAST(SUM(CAST(x2 * x2 AS DECIMAL(28,6))) AS DOUBLE) AS sx2x2,
-        |    CAST(SUM(CAST(x1 * x2 AS DECIMAL(28,6))) AS DOUBLE) AS sx1x2,
-        |    CAST(SUM(CAST(x1 * yq AS DECIMAL(28,6))) AS DOUBLE) AS sx1y,
-        |    CAST(SUM(CAST(x2 * yq AS DECIMAL(28,6))) AS DOUBLE) AS sx2y,
-        |    CAST(SUM(CAST(FLOOR(yq * yq * 1e6) / 1e6 AS DECIMAL(28,6))) AS DOUBLE) AS syy
-        |  FROM r0),
-        |c1s AS (
-        |  SELECT *,
-        |    sx1x1 - sx1 * sx1 / NULLIF(n, 0.0) AS a11u,
-        |    sx2x2 - sx2 * sx2 / NULLIF(n, 0.0) AS a22u,
-        |    sx1x2 - sx1 * sx2 / NULLIF(n, 0.0) AS a12,
-        |    sx1y - sx1 * sy / NULLIF(n, 0.0) AS c1,
-        |    sx2y - sx2 * sy / NULLIF(n, 0.0) AS c2,
-        |    syy - sy * sy / NULLIF(n, 0.0) AS sst
-        |  FROM m),
-        |c1r AS (SELECT *, a11u + 100000.0 AS a11, a22u + 100000.0 AS a22 FROM c1s),
-        |c2s AS (SELECT *, NULLIF(a11 * a22 - a12 * a12, 0.0) AS det FROM c1r),
-        |c3s AS (
-        |  SELECT *,
-        |    (c1 * a22 - c2 * a12) / det AS b1,
-        |    (c2 * a11 - c1 * a12) / det AS b2
-        |  FROM c2s)
-        |SELECT CAST(n AS BIGINT) AS n,
-        |  (sy - b1 * sx1 - b2 * sx2) / NULLIF(n, 0.0) AS beta0,
-        |  b1 AS beta1, b2 AS beta2,
-        |  CASE WHEN sst = 0.0 THEN 0.0
-        |       ELSE 1.0 - (sst - 2.0 * (b1 * c1 + b2 * c2)
-        |         + (b1 * b1 * a11u + 2.0 * b1 * b2 * a12 + b2 * b2 * a22u)) / sst END AS r2
-        |FROM c3s""".stripMargin,
-
-    // Scd2.scd3CurrentPrev mirrored: lag-change flag, running-sum run
-    // ids, per-run min collapse, last-two conditional aggregate.
-    "gold_scd3_current_prev" ->
-      """WITH r0 AS (
-        |  SELECT user_id, ts, event_id, UPPER(TRIM(event_type)) AS attr
-        |  FROM events
-        |  WHERE ts IS NOT NULL AND user_id IS NOT NULL AND event_type IS NOT NULL),
-        |ch AS (
-        |  SELECT *, CASE WHEN LAG(attr) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-        |                   OR LAG(attr) OVER (PARTITION BY user_id ORDER BY ts, event_id) <> attr
-        |            THEN 1 ELSE 0 END AS chg
-        |  FROM r0),
-        |rn AS (
-        |  SELECT *, SUM(chg) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                           ROWS UNBOUNDED PRECEDING) AS run
-        |  FROM ch),
-        |pr AS (
-        |  SELECT user_id, run, MIN(ts) AS since, MIN(attr) AS value
-        |  FROM rn GROUP BY 1, 2),
-        |rk AS (
-        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY run DESC) AS rk
-        |  FROM pr)
-        |SELECT user_id,
-        |  MAX(CASE WHEN rk = 1 THEN value END) AS current_value,
-        |  MAX(CASE WHEN rk = 1 THEN since END) AS current_since,
-        |  MAX(CASE WHEN rk = 2 THEN value END) AS prev_value,
-        |  MAX(CASE WHEN rk = 2 THEN since END) AS prev_since,
-        |  CAST(MAX(run) AS BIGINT) AS n_runs
-        |FROM rk WHERE rk <= 2 GROUP BY 1""".stripMargin,
-
-    // Merge.maintainJoinView: the oracle IS the full recompute of the
-    // upserted join — incremental == full is the correctness claim.
-    "gold_join_incremental" ->
-      """WITH b AS (
-        |  SELECT c_custkey, c_name,
-        |    CASE WHEN c_custkey % 97 = 0 THEN 'CHANGED' ELSE c_mktsegment END AS c_mktsegment
-        |  FROM customer)
-        |SELECT o_orderkey, o_custkey, o_totalprice, c_name, c_mktsegment
-        |FROM orders JOIN b ON b.c_custkey = o_custkey""".stripMargin
-  ) ++ servingOracleSql ++ analyticsOracleSql ++ textOracleSql ++ annOracleSql ++
-    centroidOracleSql ++ streamingOracleSql
-
-  /** MlLite.logisticRegression replayed as a chained CTE (the
-    * bpe_train_merges convention): round r's gradient scans r0 with
-    * round r−1's 1-row weight panel cross-joined in, the weight
-    * update mirrors the driver's `floor((w − lr·(g/n))·1e6)/1e6`
-    * double arithmetic op for op, σ(z) floor-quantized per row.
-    */
-  /** The gridded-sigmoid score expression of the logreg GD chain —
-    * shared by every oracle that applies the trained weights.
-    */
-  private def logregPExprSql(w: String): String =
-    s"FLOOR(1.0 / (1.0 + exp(-($w.w0 + $w.w1 * x1 + $w.w2 * x2 + $w.w3 * x3))) * 1e6) / 1e6"
-
-  /** The GD iteration CTEs (g$r / w$r over r0 / nn / w0) — shared by
-    * the logreg fit oracles and the permutation-importance oracle,
-    * whose head carries the row id alongside the features.
-    */
-  private def logregIterCtes(rounds: Int, lr: String): Seq[String] =
-    (1 to rounds).map { r =>
-      s"""g$r AS (
-         |  SELECT
-         |    CAST(SUM(CAST((p - y) AS DECIMAL(38,12))) AS DOUBLE) AS g0,
-         |    CAST(SUM(CAST((p - y) * x1 AS DECIMAL(38,12))) AS DOUBLE) AS g1,
-         |    CAST(SUM(CAST((p - y) * x2 AS DECIMAL(38,12))) AS DOUBLE) AS g2,
-         |    CAST(SUM(CAST((p - y) * x3 AS DECIMAL(38,12))) AS DOUBLE) AS g3
-         |  FROM (SELECT r0.*, ${logregPExprSql("w")} AS p FROM r0, w${r - 1} w)),
-         |w$r AS (
-         |  SELECT
-         |    FLOOR((w.w0 - $lr * (g.g0 / nn.n)) * 1e6) / 1e6 AS w0,
-         |    FLOOR((w.w1 - $lr * (g.g1 / nn.n)) * 1e6) / 1e6 AS w1,
-         |    FLOOR((w.w2 - $lr * (g.g2 / nn.n)) * 1e6) / 1e6 AS w2,
-         |    FLOOR((w.w3 - $lr * (g.g3 / nn.n)) * 1e6) / 1e6 AS w3
-         |  FROM w${r - 1} w, g$r g, nn)""".stripMargin
-    }
-
-  private def logregOracleSql(rounds: Int, lr: String): String = {
-    val head =
-      """r0 AS (
-        |  SELECT CASE WHEN event_type = 'purchase' THEN 1.0 ELSE 0.0 END AS y,
-        |    FLOOR(hour(ts) / 24.0 * 1e6) / 1e6 AS x1,
-        |    FLOOR(isodow(ts) / 7.0 * 1e6) / 1e6 AS x2,
-        |    FLOOR(value / 100.0 * 1e6) / 1e6 AS x3
-        |  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL),
-        |nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM r0),
-        |w0 AS (SELECT 0.0 AS w0, 0.0 AS w1, 0.0 AS w2, 0.0 AS w3)""".stripMargin
-    def pExpr(w: String) = logregPExprSql(w)
-    val iters = logregIterCtes(rounds, lr)
-    s"""WITH ${(head +: iters).mkString(",\n")}
-       |SELECT CAST(COUNT(*) AS BIGINT) AS n,
-       |  MIN(w.w0) AS w0, MIN(w.w1) AS w1, MIN(w.w2) AS w2, MIN(w.w3) AS w3,
-       |  CAST(SUM(CASE WHEN (p >= 0.5) = (y = 1.0) THEN 1 ELSE 0 END) AS DOUBLE)
-       |    / CAST(COUNT(*) AS DOUBLE) AS accuracy
-       |FROM (SELECT r0.*, ${pExpr("w")} AS p
-       |      FROM r0, w$rounds w) q, w$rounds w""".stripMargin
-  }
-
-  /** Permutation-importance oracle: the shared GD chain over an
-    * id-carrying head, per-feature md5-bucket rotations through the
-    * identical LEAD/FIRST_VALUE window, and one exact-midrank AUC
-    * block per scored relation (the ml_auc_roc shape).
-    */
-  private def permImportanceOracleSql(rounds: Int, lr: String,
-                                      buckets: Int): String = {
-    val head =
-      """r0p AS MATERIALIZED (
-        |  SELECT event_id,
-        |    CASE WHEN event_type = 'purchase' THEN 1.0 ELSE 0.0 END AS y,
-        |    FLOOR(hour(ts) / 24.0 * 1e6) / 1e6 AS x1,
-        |    FLOOR(isodow(ts) / 7.0 * 1e6) / 1e6 AS x2,
-        |    FLOOR(value / 100.0 * 1e6) / 1e6 AS x3
-        |  FROM events
-        |  WHERE ts IS NOT NULL AND value IS NOT NULL AND event_id IS NOT NULL),
-        |r0 AS (SELECT y, x1, x2, x3 FROM r0p),
-        |nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM r0),
-        |w0 AS (SELECT 0.0 AS w0, 0.0 AS w1, 0.0 AS w2, 0.0 AS w3)""".stripMargin
-    val keyed =
-      // effective bucket count mirrors MlLite.permutationImportance's
-      // expected-size->=2 clamp: min(buckets, n/2), floor 1
-      s"""keyed AS MATERIALIZED (
-         |  SELECT *,
-         |    CAST(concat('0x', substr(md5(COALESCE(CAST(event_id AS VARCHAR),
-         |      '<NULL>')), 1, 8)) AS BIGINT)
-         |      % GREATEST(1, LEAST($buckets,
-         |          (SELECT COUNT(*) FROM r0p) // 2)) AS b,
-         |    CAST(concat('0x', substr(md5(concat_ws('|',
-         |      COALESCE(CAST(event_id AS VARCHAR), '<NULL>'), 'perm')), 1, 15))
-         |      AS BIGINT) AS h
-         |  FROM r0p)""".stripMargin
-    val feats = Seq("x1", "x2", "x3")
-    val scored = s"""sc0 AS (SELECT y, ${logregPExprSql("w")} AS p FROM r0p, w$rounds w)""" +:
-      feats.zipWithIndex.map { case (f, i) =>
-        val others = feats.filterNot(_ == f).mkString(", ")
-        s"""pm${i + 1} AS (
-           |  SELECT y, COALESCE(LEAD($f) OVER win, FIRST_VALUE($f) OVER win) AS $f,
-           |    $others
-           |  FROM keyed WINDOW win AS (PARTITION BY b ORDER BY h, event_id)),
-           |sc${i + 1} AS (SELECT y, ${logregPExprSql("w")} AS p FROM pm${i + 1}, w$rounds w)""".stripMargin
-      }
-    def aucCtes(t: String, src: String): String =
-      s"""${t}pnl AS (
-         |  SELECT p AS s2,
-         |    SUM(CASE WHEN y = 1.0 THEN 1 ELSE 0 END) AS np,
-         |    SUM(CASE WHEN y = 1.0 THEN 0 ELSE 1 END) AS nn2,
-         |    COUNT(*) AS nt
-         |  FROM $src GROUP BY 1),
-         |${t}rk AS (SELECT *, SUM(nt) OVER (ORDER BY s2) AS cum FROM ${t}pnl),
-         |${t}agg AS (
-         |  SELECT CAST(SUM(np) AS BIGINT) AS n_pos, CAST(SUM(nn2) AS BIGINT) AS n_neg,
-         |    SUM(CAST(CAST(np AS DOUBLE)
-         |      * (CAST(cum - nt AS DOUBLE) + CAST(nt + 1 AS DOUBLE) / 2.0)
-         |      AS DECIMAL(28,1))) AS rp
-         |  FROM ${t}rk),
-         |${t}a AS (
-         |  SELECT (CAST(rp AS DOUBLE)
-         |    - CAST(n_pos AS DOUBLE) * CAST(n_pos + 1 AS DOUBLE) / 2.0)
-         |    / NULLIF(CAST(n_pos AS DOUBLE) * CAST(n_neg AS DOUBLE), 0.0) AS auc
-         |  FROM ${t}agg)""".stripMargin
-    val aucs = (0 to 3).map(i => aucCtes(s"a$i", s"sc$i"))
-    val featRows = feats.zipWithIndex.map { case (f, i) =>
-      s"SELECT '$f' AS feature, auc FROM a${i + 1}a"
-    }.mkString("\n  UNION ALL\n  ")
-    s"""WITH ${((head +: logregIterCtes(rounds, lr)) ++ Seq(keyed) ++ scored ++ aucs).mkString(",\n")}
-       |SELECT f.feature, b.auc AS auc_model, f.auc AS auc_permuted,
-       |  FLOOR((b.auc - f.auc) * 1e6) / 1e6 AS importance
-       |FROM ($featRows) f CROSS JOIN a0a b""".stripMargin
-  }
-
-  /** The same chained-CTE fit, finished with the calibration binning
-    * instead of the weight panel (MlLite.logisticCalibration).
-    */
-  private def logregCalibrationOracleSql(rounds: Int, lr: String,
-                                         bins: Int): String = {
-    val fit = logregOracleSql(rounds, lr)
-    val ctes = fit.substring(0, fit.lastIndexOf("SELECT CAST(COUNT(*)"))
-    s"""$ctes
-       |SELECT LEAST(${bins - 1}, CAST(FLOOR(p * $bins) AS INTEGER)) AS bin,
-       |  CAST(COUNT(*) AS BIGINT) AS n_rows,
-       |  CAST(SUM(CAST(p AS DECIMAL(28,6))) AS DOUBLE)
-       |    / CAST(COUNT(*) AS DOUBLE) AS mean_p,
-       |  CAST(SUM(CAST(y AS DECIMAL(28,6))) AS DOUBLE)
-       |    / CAST(COUNT(*) AS DOUBLE) AS pos_rate
-       |FROM (SELECT r0.*,
-       |        FLOOR(1.0 / (1.0 + exp(-(w.w0 + w.w1 * x1 + w.w2 * x2 + w.w3 * x3))) * 1e6) / 1e6 AS p
-       |      FROM r0, w$rounds w) q
-       |GROUP BY 1""".stripMargin
-  }
-
-  /** MlLite.adaboostStumps replayed as chained CTEs: per round the
-    * weighted-error stump argmin, the clamped ε / grid-ln α scalars
-    * and the rescale mass update, then one accuracy row per round
-    * over the cumulative ensemble.
-    */
-  /** Chained-MATERIALIZED-CTE replay of the gradient-boosted stump
-    * regression (MlLite.gbtStumpsRegression): per round the gridded
-    * residual masses, the prefix-summed split candidates (narrowed to
-    * DECIMAL(18,6) before subtraction — the §5 decimal-add rule), the
-    * SSE-gain argmax with the (gain desc, feature, fval) total order,
-    * the gridded leaf means and the eta-shrunk prediction update;
-    * eta = 0.25 is a dyadic literal so the scaling is exact IEEE on
-    * both engines.
-    */
-  private def gbtOracleSql(rounds: Int): String = {
-    val head =
-      """r0 AS MATERIALIZED (
-        |  SELECT CAST(value AS DECIMAL(18,2)) AS yv,
-        |    hour(ts) AS hr, isodow(ts) AS dow
-        |  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL),
-        |c0 AS MATERIALIZED (
-        |  SELECT CAST(hr AS BIGINT) AS hr, CAST(dow AS BIGINT) AS dow,
-        |    COUNT(*) AS n_j,
-        |    CAST(SUM(yv) AS DECIMAL(18,2)) AS sy,
-        |    CAST(SUM(CAST(yv * yv AS DECIMAL(28,4))) AS DECIMAL(28,4)) AS syy
-        |  FROM r0 GROUP BY 1, 2),
-        |f0 AS MATERIALIZED (
-        |  SELECT FLOOR(CAST(SUM(sy) AS DOUBLE) / CAST(SUM(n_j) AS DOUBLE) * 1e6) / 1e6 AS f
-        |  FROM c0),
-        |p0 AS MATERIALIZED (SELECT c0.*, f0.f FROM c0, f0)""".stripMargin
-    val iters = (1 to rounds).map { r =>
-      s"""sv$r AS MATERIALIZED (
-         |  SELECT *, FLOOR((CAST(sy AS DOUBLE) - CAST(n_j AS DOUBLE) * f) * 1e6) / 1e6 AS s
-         |  FROM p${r - 1}),
-         |pv$r AS MATERIALIZED (
-         |  SELECT feature, fval, SUM(CAST(s AS DECIMAL(28,6))) AS sr, SUM(n_j) AS nv
-         |  FROM (SELECT s, n_j, 'hr' AS feature, hr AS fval FROM sv$r
-         |        UNION ALL SELECT s, n_j, 'dow', dow FROM sv$r)
-         |  GROUP BY 1, 2),
-         |cd$r AS MATERIALIZED (
-         |  SELECT pv.feature, pv.fval,
-         |    CAST(SUM(sr) OVER (PARTITION BY pv.feature ORDER BY fval ROWS UNBOUNDED PRECEDING) AS DECIMAL(18,6)) AS s_le,
-         |    SUM(nv) OVER (PARTITION BY pv.feature ORDER BY fval ROWS UNBOUNDED PRECEDING) AS n_le,
-         |    t.st, t.nt, t.maxv
-         |  FROM pv$r pv JOIN (
-         |    SELECT feature, CAST(SUM(sr) AS DECIMAL(18,6)) AS st,
-         |      SUM(nv) AS nt, MAX(fval) AS maxv
-         |    FROM pv$r GROUP BY 1) t ON t.feature = pv.feature),
-         |ce$r AS MATERIALIZED (
-         |  SELECT feature, fval,
-         |    CAST(s_le AS DOUBLE) AS sl, CAST(st - s_le AS DOUBLE) AS sg,
-         |    CAST(n_le AS DOUBLE) AS nl, CAST(nt - n_le AS DOUBLE) AS ng
-         |  FROM cd$r WHERE fval < maxv),
-         |bs$r AS MATERIALIZED (
-         |  SELECT feature, fval,
-         |    FLOOR(sl / nl * 1e6) / 1e6 AS gamma_l,
-         |    FLOOR(sg / ng * 1e6) / 1e6 AS gamma_r
-         |  FROM ce$r
-         |  QUALIFY ROW_NUMBER() OVER (
-         |    ORDER BY sl * sl / nl + sg * sg / ng DESC, feature, fval) = 1),
-         |p$r AS MATERIALIZED (
-         |  SELECT p.hr, p.dow, p.n_j, p.sy, p.syy,
-         |    p.f + (CASE WHEN (CASE b.feature WHEN 'hr' THEN p.hr ELSE p.dow END) <= b.fval
-         |           THEN 0.25 * b.gamma_l ELSE 0.25 * b.gamma_r END) AS f
-         |  FROM p${r - 1} p, bs$r b)""".stripMargin
-    }
-    val finalRows = (1 to rounds).map { r =>
-      s"""SELECT $r AS round, b.feature, CAST(b.fval AS BIGINT) AS threshold,
-         |  b.gamma_l AS gamma_left, b.gamma_r AS gamma_right,
-         |  (SELECT CAST(SUM(CAST(FLOOR((CAST(syy AS DOUBLE) - 2.0 * f * CAST(sy AS DOUBLE)
-         |       + CAST(n_j AS DOUBLE) * f * f) * 1e6) / 1e6 AS DECIMAL(28,6))) AS DOUBLE)
-         |     / CAST(SUM(n_j) AS DOUBLE) FROM p$r) AS train_mse
-         |FROM bs$r b""".stripMargin
-    }
-    s"""WITH ${(head +: iters).mkString(",\n")}
-       |${finalRows.mkString("\nUNION ALL\n")}""".stripMargin
-  }
-
-  private def adaboostOracleSql(rounds: Int): String = {
-    val head =
-      """r0 AS MATERIALIZED (
-        |  SELECT CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y,
-        |    hour(ts) AS hr, isodow(ts) AS dow,
-        |    LEAST(9, CAST(FLOOR(value / 10) AS BIGINT)) AS valdec
-        |  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL),
-        |c0 AS MATERIALIZED (
-        |  SELECT y, CAST(hr AS BIGINT) AS hr, CAST(dow AS BIGINT) AS dow,
-        |    valdec, COUNT(*) AS n_j
-        |  FROM r0 GROUP BY 1, 2, 3, 4),
-        |nn AS MATERIALIZED (SELECT CAST(SUM(n_j) AS BIGINT) AS n FROM c0),
-        |p0 AS MATERIALIZED (
-        |  SELECT c0.*,
-        |    FLOOR(CAST(n_j AS DOUBLE) / CAST(nn.n AS DOUBLE) * 1e12) / 1e12 AS m
-        |  FROM c0, nn)""".stripMargin
-    def fvalOf(alias: String) =
-      s"(CASE $alias.feature WHEN 'hr' THEN p.hr WHEN 'dow' THEN p.dow ELSE p.valdec END)"
-    val iters = (1 to rounds).map { r =>
-      s"""pv$r AS MATERIALIZED (
-         |  SELECT feature, fval,
-         |    SUM(CASE WHEN y = 1 THEN CAST(m AS DECIMAL(38,12)) ELSE CAST(0 AS DECIMAL(38,12)) END) AS mp,
-         |    SUM(CASE WHEN y = 0 THEN CAST(m AS DECIMAL(38,12)) ELSE CAST(0 AS DECIMAL(38,12)) END) AS mn
-         |  FROM (SELECT y, m, 'hr' AS feature, hr AS fval FROM p${r - 1}
-         |        UNION ALL SELECT y, m, 'dow', dow FROM p${r - 1}
-         |        UNION ALL SELECT y, m, 'valdec', valdec FROM p${r - 1})
-         |  GROUP BY 1, 2),
-         |cd$r AS MATERIALIZED (
-         |  SELECT pv.feature, pv.fval,
-         |    SUM(mp) OVER (PARTITION BY pv.feature ORDER BY fval ROWS UNBOUNDED PRECEDING) AS mp_le,
-         |    SUM(mn) OVER (PARTITION BY pv.feature ORDER BY fval ROWS UNBOUNDED PRECEDING) AS mn_le,
-         |    t.pos, t.neg, t.maxv
-         |  FROM pv$r pv JOIN (
-         |    SELECT feature, SUM(mp) AS pos, SUM(mn) AS neg, MAX(fval) AS maxv
-         |    FROM pv$r GROUP BY 1) t ON t.feature = pv.feature),
-         |ce$r AS MATERIALIZED (
-         |  SELECT *,
-         |    CAST(mn_le + (pos - mp_le) AS DOUBLE) AS err_a,
-         |    CAST(mp_le + (neg - mn_le) AS DOUBLE) AS err_b
-         |  FROM cd$r WHERE fval < maxv),
-         |bs$r AS MATERIALIZED (
-         |  SELECT feature, fval, NOT (err_b < err_a) AS pol_a,
-         |    LEAST(err_a, err_b) AS err
-         |  FROM ce$r
-         |  QUALIFY ROW_NUMBER() OVER (ORDER BY LEAST(err_a, err_b), feature, fval) = 1),
-         |sa$r AS MATERIALIZED (
-         |  SELECT eps, 0.5 * (FLOOR(LN((1.0 - eps) / eps) * 1e6) / 1e6) AS alpha
-         |  FROM (SELECT GREATEST(CAST(0.000001 AS DOUBLE),
-         |               LEAST(1.0 - CAST(0.000001 AS DOUBLE), err)) AS eps
-         |        FROM bs$r)),
-         |p$r AS MATERIALIZED (
-         |  SELECT p.y, p.hr, p.dow, p.valdec, p.n_j,
-         |    CASE WHEN (CASE WHEN b.pol_a
-         |                THEN CASE WHEN ${fvalOf("b")} <= b.fval THEN 1 ELSE 0 END
-         |                ELSE CASE WHEN ${fvalOf("b")} <= b.fval THEN 0 ELSE 1 END END) <> p.y
-         |         THEN FLOOR(p.m / (2.0 * s.eps) * 1e12) / 1e12
-         |         ELSE FLOOR(p.m / (2.0 * (1.0 - s.eps)) * 1e12) / 1e12 END AS m
-         |  FROM p${r - 1} p, bs$r b, sa$r s)""".stripMargin
-    }
-    val finalRows = (1 to rounds).map { t =>
-      val score = (1 to t).map { r =>
-        s"""(CASE WHEN b$r.pol_a
-           |  THEN CASE WHEN ${fvalOf(s"b$r")} <= b$r.fval THEN 1.0 ELSE -1.0 END
-           |  ELSE CASE WHEN ${fvalOf(s"b$r")} <= b$r.fval THEN -1.0 ELSE 1.0 END END
-           | * s$r.alpha)""".stripMargin.replace("\n", " ")
-      }.mkString(" + ")
-      val froms = (1 to t).map(r => s"bs$r b$r, sa$r s$r").mkString(", ")
-      s"""SELECT $t AS round, bt.feature, CAST(bt.fval AS BIGINT) AS threshold,
-         |  CASE WHEN bt.pol_a THEN 'A' ELSE 'B' END AS polarity,
-         |  st.eps AS epsilon, st.alpha,
-         |  (SELECT CAST(SUM(CASE WHEN (CASE WHEN $score > 0.0 THEN 1 ELSE 0 END) = p.y THEN p.n_j ELSE 0 END) AS DOUBLE)
-         |     / CAST(SUM(p.n_j) AS DOUBLE)
-         |   FROM c0 p, $froms) AS ensemble_accuracy
-         |FROM bs$t bt, sa$t st""".stripMargin
-    }
-    s"""WITH ${(head +: iters).mkString(",\n")}
-       |${finalRows.mkString("\nUNION ALL\n")}""".stripMargin
-  }
-
-  /** The chained-CTE fit finished with per-threshold exact confusion
-    * counts (MlLite.logisticPrCurve).
-    */
-  private def logregPrOracleSql(rounds: Int, lr: String,
-                                thresholds: Seq[Double]): String = {
-    val fit = logregOracleSql(rounds, lr)
-    val ctes = fit.substring(0, fit.lastIndexOf("SELECT CAST(COUNT(*)"))
-    val list = thresholds.mkString(", ")
-    s"""$ctes
-       |SELECT threshold,
-       |  CAST(tp AS BIGINT) AS tp, CAST(fp AS BIGINT) AS fp,
-       |  CAST(fn AS BIGINT) AS fn,
-       |  CASE WHEN tp + fp = 0 THEN 0.0
-       |       ELSE CAST(tp AS DOUBLE) / CAST(tp + fp AS DOUBLE) END AS precision,
-       |  CASE WHEN tp + fn = 0 THEN 0.0
-       |       ELSE CAST(tp AS DOUBLE) / CAST(tp + fn AS DOUBLE) END AS recall,
-       |  CASE WHEN (CASE WHEN tp + fp = 0 THEN 0.0
-       |             ELSE CAST(tp AS DOUBLE) / CAST(tp + fp AS DOUBLE) END)
-       |          + (CASE WHEN tp + fn = 0 THEN 0.0
-       |             ELSE CAST(tp AS DOUBLE) / CAST(tp + fn AS DOUBLE) END) = 0.0
-       |       THEN 0.0
-       |       ELSE 2.0 * (CASE WHEN tp + fp = 0 THEN 0.0
-       |             ELSE CAST(tp AS DOUBLE) / CAST(tp + fp AS DOUBLE) END)
-       |          * (CASE WHEN tp + fn = 0 THEN 0.0
-       |             ELSE CAST(tp AS DOUBLE) / CAST(tp + fn AS DOUBLE) END)
-       |          / ((CASE WHEN tp + fp = 0 THEN 0.0
-       |             ELSE CAST(tp AS DOUBLE) / CAST(tp + fp AS DOUBLE) END)
-       |           + (CASE WHEN tp + fn = 0 THEN 0.0
-       |             ELSE CAST(tp AS DOUBLE) / CAST(tp + fn AS DOUBLE) END)) END AS f1
-       |FROM (
-       |  SELECT t.threshold,
-       |    SUM(CASE WHEN p >= t.threshold AND y = 1.0 THEN 1 ELSE 0 END) AS tp,
-       |    SUM(CASE WHEN p >= t.threshold AND y = 0.0 THEN 1 ELSE 0 END) AS fp,
-       |    SUM(CASE WHEN p < t.threshold AND y = 1.0 THEN 1 ELSE 0 END) AS fn
-       |  FROM (SELECT r0.*,
-       |          FLOOR(1.0 / (1.0 + exp(-(w.w0 + w.w1 * x1 + w.w2 * x2 + w.w3 * x3))) * 1e6) / 1e6 AS p
-       |        FROM r0, w$rounds w) q
-       |  CROSS JOIN (SELECT CAST(UNNEST([$list]) AS DOUBLE) AS threshold) t
-       |  GROUP BY 1) agg""".stripMargin
-  }
-
-  /** DuckDB twins of the gold analytics pack (reference:
-    * docs/queries/01-05). Shared determinism rules: averages are
-    * CAST(SUM(DECIMAL) AS DOUBLE)/COUNT (exact sum + one IEEE
-    * division), percentiles are exact quantile_cont, every window
-    * orders an aggregated frame with tie-break keys.
-    */
-  /** The ACF oracle body, shared verbatim by ana_autocorrelation and
-    * the PACF replay (which pivots it and runs Durbin-Levinson CTE
-    * levels on top).
-    */
-  private def acfOracleSql(validSql: String): String =
-    s"""WITH byday AS (
-           |  SELECT event_type_norm, date_sk,
-           |    CAST(COALESCE(ROUND(SUM(CAST(value AS DECIMAL(18,2))), 2), 0) AS DOUBLE) AS y,
-           |    CAST(strptime(CAST(date_sk AS VARCHAR), '%Y%m%d') AS DATE) AS d
-           |  FROM ($validSql) WHERE date_sk IS NOT NULL
-           |  GROUP BY 1, 2),
-           |mp AS (
-           |  SELECT event_type_norm,
-           |    ROUND(CAST(SUM(CAST(y AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*), 4) AS ybar
-           |  FROM byday GROUP BY 1),
-           |dev AS (
-           |  SELECT b.event_type_norm, b.d, b.y - m.ybar AS dev
-           |  FROM byday b JOIN mp m USING (event_type_norm)),
-           |den AS (
-           |  SELECT event_type_norm,
-           |    CAST(CAST(CAST(SUM(CAST(FLOOR(dev * dev * 1e6) / 1e6 AS DECIMAL(28,6))) AS DECIMAL(28,6)) * 1000000 AS BIGINT) AS DOUBLE) / 1e6 AS den
-           |  FROM dev GROUP BY 1),
-           |probes AS (
-           |  SELECT event_type_norm, u.lag, d + u.lag AS d, dev AS dev_t
-           |  FROM dev, (SELECT UNNEST([1, 2, 3, 4, 5, 6, 7]) AS lag) u),
-           |num AS (
-           |  SELECT p.event_type_norm, p.lag,
-           |    CAST(COUNT(*) AS BIGINT) AS n_pairs,
-           |    CAST(CAST(CAST(SUM(CAST(FLOOR(p.dev_t * v.dev * 1e6) / 1e6 AS DECIMAL(28,6))) AS DECIMAL(28,6)) * 1000000 AS BIGINT) AS DOUBLE) / 1e6 AS num
-           |  FROM probes p JOIN dev v
-           |    ON p.event_type_norm = v.event_type_norm AND p.d = v.d
-           |  GROUP BY 1, 2)
-           |SELECT n.event_type_norm, n.lag, n.n_pairs,
-           |  CASE WHEN de.den <> 0 THEN n.num / de.den END AS acf
-           |FROM num n JOIN den de USING (event_type_norm)""".stripMargin
-
-  /** Durbin–Levinson PACF replay: pivot the ACF panel to r1..rK, one
-    * CTE pair per level (fkk, then the coefficient updates that
-    * reference it), sequential left-to-right term sums — op-for-op
-    * the driver recursion in [[graft.operators.AnalyticsPack.pacf]].
-    */
-  private def pacfOracleSql(acfSql: String, maxLag: Int): String = {
-    val rcols = (1 to maxLag)
-      .map(k => s"MAX(CASE WHEN lag = $k THEN acf END) AS r$k")
-      .mkString(",\n    ")
-    val sb = new StringBuilder
-    sb.append(s"WITH acf_panel AS (\n$acfSql\n),\n")
-    sb.append(s"piv AS (\n  SELECT event_type_norm,\n    $rcols\n  FROM acf_panel GROUP BY 1),\n")
-    sb.append("p1 AS (SELECT *, r1 AS f1_1 FROM piv)")
-    for (k <- 2 to maxLag) {
-      val num = s"(r$k - (${(1 until k).map(j => s"f${k - 1}_$j * r${k - j}").mkString(" + ")}))"
-      val den = s"(1.0 - (${(1 until k).map(j => s"f${k - 1}_$j * r$j").mkString(" + ")}))"
-      sb.append(s",\npd$k AS (SELECT *, CASE WHEN $den = 0.0 THEN NULL " +
-        s"ELSE $num / $den END AS f${k}_$k FROM p${k - 1})")
-      val ups = (1 until k)
-        .map(j => s"f${k - 1}_$j - f${k}_$k * f${k - 1}_${k - j} AS f${k}_$j")
-        .mkString(", ")
-      sb.append(s",\np$k AS (SELECT *, $ups FROM pd$k)")
-    }
-    val unions = (1 to maxLag).map(k =>
-      s"SELECT event_type_norm, CAST($k AS INTEGER) AS lag, r$k AS acf, " +
-        s"f${k}_$k AS pacf FROM p$maxLag").mkString("\nUNION ALL\n")
-    sb.append(s"\n$unions")
-    sb.toString
-  }
-
-  /** AR(p) forecast replay: the Durbin–Levinson chain (as in
-    * [[pacfOracleSql]]) for the Yule–Walker row, the 4dp mean and
-    * back-pivoted tail values, then one chained CTE per horizon step
-    * with the mean-centered recursion in the driver's exact term
-    * order.
-    */
-  private def arForecastOracleSql(acfSql: String, validSql: String,
-                                  p: Int, horizon: Int): String = {
-    val rcols = (1 to p)
-      .map(k => s"MAX(CASE WHEN lag = $k THEN acf END) AS r$k")
-      .mkString(",\n    ")
-    val sb = new StringBuilder
-    sb.append(s"WITH acf_panel AS (\n$acfSql\n),\n")
-    sb.append(s"piv AS (\n  SELECT event_type_norm,\n    $rcols\n  FROM acf_panel GROUP BY 1),\n")
-    sb.append("p1 AS (SELECT *, r1 AS f1_1 FROM piv)")
-    for (k <- 2 to p) {
-      val num = s"(r$k - (${(1 until k).map(j => s"f${k - 1}_$j * r${k - j}").mkString(" + ")}))"
-      val den = s"(1.0 - (${(1 until k).map(j => s"f${k - 1}_$j * r$j").mkString(" + ")}))"
-      sb.append(s",\npd$k AS (SELECT *, CASE WHEN $den = 0.0 THEN NULL " +
-        s"ELSE $num / $den END AS f${k}_$k FROM p${k - 1})")
-      val ups = (1 until k)
-        .map(j => s"f${k - 1}_$j - f${k}_$k * f${k - 1}_${k - j} AS f${k}_$j")
-        .mkString(", ")
-      sb.append(s",\np$k AS (SELECT *, $ups FROM pd$k)")
-    }
-    // the day panel, 4dp mean, and the last p observed calendar days
-    // pivoted to xb0 (= the max day) .. xb{p-1}
-    sb.append(s""",
-      |byday2 AS (
-      |  SELECT event_type_norm,
-      |    CAST(COALESCE(ROUND(SUM(CAST(value AS DECIMAL(18,2))), 2), 0) AS DOUBLE) AS y,
-      |    CAST(strptime(CAST(date_sk AS VARCHAR), '%Y%m%d') AS DATE) AS d
-      |  FROM ($validSql) WHERE date_sk IS NOT NULL
-      |  GROUP BY event_type_norm, date_sk),
-      |mp2 AS (
-      |  SELECT event_type_norm,
-      |    ROUND(CAST(SUM(CAST(y AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*), 4) AS ybar
-      |  FROM byday2 GROUP BY 1),
-      |mx AS (SELECT event_type_norm, MAX(d) AS d_max FROM byday2 GROUP BY 1),
-      |tl AS (
-      |  SELECT b.event_type_norm, date_diff('day', b.d, m.d_max) AS back, b.y
-      |  FROM byday2 b JOIN mx m USING (event_type_norm)
-      |  WHERE b.d >= m.d_max - ${p - 1}),
-      |tp AS (
-      |  SELECT event_type_norm,
-      |    ${(0 until p).map(i => s"MAX(CASE WHEN back = $i THEN y END) AS xb$i").mkString(",\n    ")}
-      |  FROM tl GROUP BY 1),
-      |base AS (
-      |  SELECT f.*, m.ybar, ${(0 until p).map(i => s"t.xb$i").mkString(", ")}
-      |  FROM p$p f
-      |  LEFT JOIN mp2 m USING (event_type_norm)
-      |  LEFT JOIN tp t USING (event_type_norm))""".stripMargin)
-    def xref(i: Int): String = if (i >= 1) s"f$i" else s"xb${-i}"
-    var prev = "base"
-    for (h <- 1 to horizon) {
-      val terms = (1 to p)
-        .map(j => s"f${p}_$j * (${xref(h - j)} - ybar)").mkString(" + ")
-      sb.append(s",\nfc$h AS (SELECT *, ybar + ($terms) AS f$h FROM $prev)")
-      prev = s"fc$h"
-    }
-    val unions = (1 to horizon).map(h =>
-      s"SELECT event_type_norm, CAST($h AS INTEGER) AS h, f$h AS forecast FROM fc$horizon")
-      .mkString("\nUNION ALL\n")
-    sb.append(s"\n$unions")
-    sb.toString
-  }
-
-  private def analyticsOracleSql: Map[String, String] = {
-    val validSql =
-      s"SELECT * EXCLUDE (reason_code) FROM (${qualityAnnotatedSql()}) WHERE reason_code IS NULL"
-    def avgD(sumExpr: String, cntExpr: String, scale: Int): String =
-      s"ROUND(CAST(SUM($sumExpr) AS DOUBLE) / NULLIF($cntExpr, 0), $scale)"
-    Map(
-      // AnalyticsPack.mannWhitney mirrored: distinct-value panel,
-      // half-integer midranks summed as DECIMAL(28,1), tie-corrected
-      // normal z over exact integer moments.
-      "ana_mann_whitney" ->
-        """WITH r0 AS (
-          |  SELECT value AS v, isodow(ts) >= 6 AS ga
-          |  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL),
-          |p AS (
-          |  SELECT v,
-          |    SUM(CASE WHEN ga THEN 1 ELSE 0 END) AS na,
-          |    SUM(CASE WHEN ga THEN 0 ELSE 1 END) AS nb,
-          |    COUNT(*) AS nt
-          |  FROM r0 GROUP BY 1),
-          |rk AS (SELECT *, SUM(nt) OVER (ORDER BY v) AS cum FROM p),
-          |mid AS (
-          |  SELECT *,
-          |    CAST(cum - nt AS DOUBLE) + CAST(nt + 1 AS DOUBLE) / 2.0 AS midrank
-          |  FROM rk),
-          |agg AS (
-          |  SELECT CAST(SUM(na) AS BIGINT) AS n_a,
-          |    CAST(SUM(nb) AS BIGINT) AS n_b,
-          |    SUM(CAST(CAST(na AS DOUBLE) * midrank AS DECIMAL(28,1))) AS r_a,
-          |    CAST(SUM(nt * nt * nt - nt) AS BIGINT) AS ties
-          |  FROM mid),
-          |u AS (
-          |  SELECT *,
-          |    r_a - CAST(n_a * (n_a + 1) / 2.0 AS DECIMAL(28,1)) AS u_a,
-          |    n_a + n_b AS nn
-          |  FROM agg),
-          |vv AS (
-          |  SELECT *,
-          |    CAST(n_a * n_b AS DECIMAL(28,1)) - u_a AS u_b,
-          |    CAST(n_a * n_b AS DOUBLE) / 12.0 *
-          |      (CAST(nn + 1 AS DOUBLE)
-          |        - CAST(ties AS DOUBLE) / CAST(nn * (nn - 1) AS DOUBLE)) AS var
-          |  FROM u)
-          |SELECT n_a, n_b,
-          |  CAST(u_a AS DOUBLE) AS u_a, CAST(u_b AS DOUBLE) AS u_b,
-          |  CAST(r_a AS DOUBLE) AS r_a,
-          |  CASE WHEN var = 0.0 THEN 0.0
-          |       ELSE (CAST(u_a AS DOUBLE) - CAST(n_a * n_b AS DOUBLE) / 2.0)
-          |            / sqrt(var) END AS z
-          |FROM vv""".stripMargin,
-      // AnalyticsPack.welchTTest mirrored: q6 values, decimal moment
-      // sums per CASE side, then the identical fixed-order IEEE panel
-      // math (variance, t, Welch df, Cohen d, Hedges g).
-      "ana_welch_ttest" ->
-        """WITH r0 AS (
-          |  SELECT FLOOR(value * 1e6) / 1e6 AS v, isodow(ts) >= 6 AS ga
-          |  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL),
-          |m AS (
-          |  SELECT
-          |    CAST(SUM(CASE WHEN ga THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-          |    CAST(SUM(CAST(CASE WHEN ga THEN v ELSE 0.0 END AS DECIMAL(28,6))) AS DOUBLE) AS s_a,
-          |    CAST(SUM(CAST(CASE WHEN ga THEN FLOOR(v * v * 1e6) / 1e6 ELSE 0.0 END AS DECIMAL(28,6))) AS DOUBLE) AS ss_a,
-          |    CAST(SUM(CASE WHEN ga THEN 0 ELSE 1 END) AS BIGINT) AS n_b,
-          |    CAST(SUM(CAST(CASE WHEN ga THEN 0.0 ELSE v END AS DECIMAL(28,6))) AS DOUBLE) AS s_b,
-          |    CAST(SUM(CAST(CASE WHEN ga THEN 0.0 ELSE FLOOR(v * v * 1e6) / 1e6 END AS DECIMAL(28,6))) AS DOUBLE) AS ss_b
-          |  FROM r0),
-          |st AS (
-          |  SELECT n_a, n_b,
-          |    s_a / NULLIF(CAST(n_a AS DOUBLE), 0.0) AS mean_a,
-          |    s_b / NULLIF(CAST(n_b AS DOUBLE), 0.0) AS mean_b,
-          |    (ss_a - s_a * s_a / NULLIF(CAST(n_a AS DOUBLE), 0.0))
-          |      / NULLIF(CAST(n_a AS DOUBLE) - 1.0, 0.0) AS var_a,
-          |    (ss_b - s_b * s_b / NULLIF(CAST(n_b AS DOUBLE), 0.0))
-          |      / NULLIF(CAST(n_b AS DOUBLE) - 1.0, 0.0) AS var_b
-          |  FROM m),
-          |se AS (
-          |  SELECT *,
-          |    var_a / NULLIF(CAST(n_a AS DOUBLE), 0.0) AS se_a,
-          |    var_b / NULLIF(CAST(n_b AS DOUBLE), 0.0) AS se_b
-          |  FROM st),
-          |tt AS (
-          |  SELECT *,
-          |    (mean_a - mean_b) / NULLIF(sqrt(se_a + se_b), 0.0) AS t_stat,
-          |    (se_a + se_b) * (se_a + se_b)
-          |      / NULLIF(se_a * se_a / NULLIF(CAST(n_a AS DOUBLE) - 1.0, 0.0)
-          |             + se_b * se_b / NULLIF(CAST(n_b AS DOUBLE) - 1.0, 0.0), 0.0) AS df_welch,
-          |    (mean_a - mean_b) / NULLIF(sqrt(((CAST(n_a AS DOUBLE) - 1.0) * var_a
-          |        + (CAST(n_b AS DOUBLE) - 1.0) * var_b)
-          |      / NULLIF(CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE) - 2.0, 0.0)), 0.0) AS cohen_d
-          |  FROM se)
-          |SELECT n_a, n_b, mean_a, mean_b, var_a, var_b,
-          |  mean_a - mean_b AS mean_diff, t_stat, df_welch, cohen_d,
-          |  cohen_d * (1.0 - 3.0 / (4.0 * (CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE)) - 9.0)) AS hedges_g,
-          |  ABS(t_stat) > 1.96 AS significant_normal_5pct
-          |FROM tt""".stripMargin,
-
-      // AnalyticsPack.anovaF mirrored: per-group decimal moments,
-      // grid-quantized s²/n panel partials, fixed-order F/η².
-      "ana_anova_f" ->
-        """WITH r0 AS (
-          |  SELECT FLOOR(value * 1e6) / 1e6 AS v, event_type AS g
-          |  FROM events WHERE value IS NOT NULL AND event_type IS NOT NULL),
-          |grp AS (
-          |  SELECT g, COUNT(*) AS n,
-          |    SUM(CAST(v AS DECIMAL(28,6))) AS sdec,
-          |    SUM(CAST(FLOOR(v * v * 1e6) / 1e6 AS DECIMAL(28,6))) AS ssdec
-          |  FROM r0 GROUP BY g),
-          |panel AS (
-          |  SELECT CAST(COUNT(*) AS BIGINT) AS k_groups,
-          |    CAST(SUM(n) AS BIGINT) AS n_total,
-          |    CAST(SUM(CAST(FLOOR(CAST(sdec AS DOUBLE) * CAST(sdec AS DOUBLE)
-          |      / CAST(n AS DOUBLE) * 1e6) / 1e6 AS DECIMAL(28,6))) AS DOUBLE) AS sum_sg2n,
-          |    CAST(SUM(sdec) AS DOUBLE) AS grand_s,
-          |    CAST(SUM(ssdec) AS DOUBLE) AS grand_ss
-          |  FROM grp),
-          |calc AS (
-          |  SELECT *,
-          |    sum_sg2n - grand_s * grand_s / NULLIF(CAST(n_total AS DOUBLE), 0.0) AS ssb,
-          |    grand_ss - sum_sg2n AS ssw
-          |  FROM panel)
-          |SELECT k_groups, n_total, ssb AS ss_between, ssw AS ss_within,
-          |  CAST(k_groups AS DOUBLE) - 1.0 AS df_between,
-          |  CAST(n_total AS DOUBLE) - CAST(k_groups AS DOUBLE) AS df_within,
-          |  (ssb / NULLIF(CAST(k_groups AS DOUBLE) - 1.0, 0.0))
-          |    / NULLIF(ssw / NULLIF(CAST(n_total AS DOUBLE) - CAST(k_groups AS DOUBLE), 0.0), 0.0) AS f_stat,
-          |  ssb / NULLIF(ssb + ssw, 0.0) AS eta_sq
-          |FROM calc""".stripMargin,
-
-      // AnalyticsPack.brownForsythe mirrored: quantile_cont group
-      // medians, |x − med| deviations, then the anovaF body verbatim
-      // (the deviation is floor-gridded exactly once, matching the
-      // operator's single q6).
-      "ana_brown_forsythe" ->
-        """WITH rows0 AS (
-          |  SELECT event_type AS g, CAST(value AS DOUBLE) AS v0
-          |  FROM events WHERE value IS NOT NULL AND event_type IS NOT NULL),
-          |meds AS (SELECT g, quantile_cont(v0, 0.5) AS med FROM rows0 GROUP BY g),
-          |r0 AS (
-          |  SELECT rows0.g AS g,
-          |    FLOOR(ABS(v0 - med) * 1e6) / 1e6 AS v
-          |  FROM rows0 JOIN meds ON rows0.g = meds.g),
-          |grp AS (
-          |  SELECT g, COUNT(*) AS n,
-          |    SUM(CAST(v AS DECIMAL(28,6))) AS sdec,
-          |    SUM(CAST(FLOOR(v * v * 1e6) / 1e6 AS DECIMAL(28,6))) AS ssdec
-          |  FROM r0 GROUP BY g),
-          |panel AS (
-          |  SELECT CAST(COUNT(*) AS BIGINT) AS k_groups,
-          |    CAST(SUM(n) AS BIGINT) AS n_total,
-          |    CAST(SUM(CAST(FLOOR(CAST(sdec AS DOUBLE) * CAST(sdec AS DOUBLE)
-          |      / CAST(n AS DOUBLE) * 1e6) / 1e6 AS DECIMAL(28,6))) AS DOUBLE) AS sum_sg2n,
-          |    CAST(SUM(sdec) AS DOUBLE) AS grand_s,
-          |    CAST(SUM(ssdec) AS DOUBLE) AS grand_ss
-          |  FROM grp),
-          |calc AS (
-          |  SELECT *,
-          |    sum_sg2n - grand_s * grand_s / NULLIF(CAST(n_total AS DOUBLE), 0.0) AS ssb,
-          |    grand_ss - sum_sg2n AS ssw
-          |  FROM panel)
-          |SELECT k_groups, n_total,
-          |  (ssb / NULLIF(CAST(k_groups AS DOUBLE) - 1.0, 0.0))
-          |    / NULLIF(ssw / NULLIF(CAST(n_total AS DOUBLE) - CAST(k_groups AS DOUBLE), 0.0), 0.0) AS w_stat,
-          |  CAST(k_groups AS DOUBLE) - 1.0 AS df_between,
-          |  CAST(n_total AS DOUBLE) - CAST(k_groups AS DOUBLE) AS df_within
-          |FROM calc""".stripMargin,
-
-      // MlLite.aucRoc mirrored: distinct-score panel, midranks via
-      // the running sum, DECIMAL(28,1) rank mass, the U/(n⁺·n⁻)
-      // normalization in one fixed op order.
-      "ml_auc_roc" ->
-        """WITH r0 AS (
-          |  SELECT value AS s, upper(trim(event_type)) = 'PURCHASE' AS pos
-          |  FROM events WHERE value IS NOT NULL),
-          |p AS (
-          |  SELECT s,
-          |    SUM(CASE WHEN pos THEN 1 ELSE 0 END) AS np,
-          |    SUM(CASE WHEN pos THEN 0 ELSE 1 END) AS nn,
-          |    COUNT(*) AS nt
-          |  FROM r0 GROUP BY 1),
-          |rk AS (SELECT *, SUM(nt) OVER (ORDER BY s) AS cum FROM p),
-          |mid AS (
-          |  SELECT *,
-          |    CAST(cum - nt AS DOUBLE) + CAST(nt + 1 AS DOUBLE) / 2.0 AS midrank
-          |  FROM rk),
-          |agg AS (
-          |  SELECT CAST(SUM(np) AS BIGINT) AS n_pos,
-          |    CAST(SUM(nn) AS BIGINT) AS n_neg,
-          |    SUM(CAST(CAST(np AS DOUBLE) * midrank AS DECIMAL(28,1))) AS rp
-          |  FROM mid),
-          |a AS (
-          |  SELECT n_pos, n_neg,
-          |    (CAST(rp AS DOUBLE)
-          |      - CAST(n_pos AS DOUBLE) * CAST(n_pos + 1 AS DOUBLE) / 2.0)
-          |      / NULLIF(CAST(n_pos AS DOUBLE) * CAST(n_neg AS DOUBLE), 0.0) AS auc
-          |  FROM agg)
-          |SELECT n_pos, n_neg, auc, 2.0 * auc - 1.0 AS gini FROM a""".stripMargin,
-
-      // MlLite.averagePrecision mirrored: ascending cumulative panel,
-      // >= -score cumulatives by subtraction, gridded block precision
-      // times exact decimal block positives, one /P at the edge.
-      "ml_avg_precision" ->
-        """WITH r0 AS (
-          |  SELECT value AS s, upper(trim(event_type)) = 'PURCHASE' AS pos
-          |  FROM events WHERE value IS NOT NULL),
-          |p AS (
-          |  SELECT s,
-          |    SUM(CASE WHEN pos THEN 1 ELSE 0 END) AS np,
-          |    SUM(CASE WHEN pos THEN 0 ELSE 1 END) AS nn
-          |  FROM r0 GROUP BY 1),
-          |p2 AS (SELECT *, np + nn AS nt FROM p),
-          |rk AS (
-          |  SELECT *, SUM(np) OVER (ORDER BY s) AS pnp,
-          |    SUM(nt) OVER (ORDER BY s) AS pnt
-          |  FROM p2),
-          |tot AS (
-          |  SELECT CAST(SUM(np) AS BIGINT) AS n_pos,
-          |    CAST(SUM(nn) AS BIGINT) AS n_neg
-          |  FROM p2),
-          |tm AS (
-          |  SELECT CAST(np AS DECIMAL(19,0)) * CAST(FLOOR(
-          |      (CAST(n_pos AS DOUBLE) - CAST(pnp - np AS DOUBLE))
-          |      / (CAST(n_pos + n_neg AS DOUBLE) - CAST(pnt - nt AS DOUBLE))
-          |      * 1e6) / 1e6 AS DECIMAL(28,6)) AS term,
-          |    n_pos, n_neg
-          |  FROM rk CROSS JOIN tot)
-          |SELECT MAX(n_pos) AS n_pos, MAX(n_neg) AS n_neg,
-          |  CAST(SUM(term) AS DOUBLE) / NULLIF(CAST(MAX(n_pos) AS DOUBLE), 0.0) AS avg_precision,
-          |  CAST(MAX(n_pos) AS DOUBLE) / NULLIF(CAST(MAX(n_pos) + MAX(n_neg) AS DOUBLE), 0.0) AS prevalence
-          |FROM tm""".stripMargin,
-
-      // MlLite.baselineScorePanel mirrored: hour panel, Laplace rate,
-      // the algebraically-collapsed Brier/log-loss terms with panel
-      // grid-ln, DECIMAL(28,6) partials.
-      "ml_brier_logloss" ->
-        """WITH r0 AS (
-          |  SELECT hour(ts) AS g,
-          |    CASE WHEN upper(trim(event_type)) = 'PURCHASE' THEN 1 ELSE 0 END AS y
-          |  FROM events WHERE ts IS NOT NULL),
-          |panel AS (
-          |  SELECT g, COUNT(*) AS n, CAST(SUM(y) AS BIGINT) AS pos
-          |  FROM r0 GROUP BY g),
-          |pp AS (
-          |  SELECT *,
-          |    (CAST(pos AS DOUBLE) + 0.5) / (CAST(n AS DOUBLE) + 1.0) AS p,
-          |    n - pos AS neg
-          |  FROM panel),
-          |terms AS (
-          |  SELECT *,
-          |    FLOOR((CAST(pos AS DOUBLE) * (1.0 - p) * (1.0 - p)
-          |      + CAST(neg AS DOUBLE) * p * p) * 1e6) / 1e6 AS bt,
-          |    FLOOR((-1.0 * (CAST(pos AS DOUBLE) * (FLOOR(ln(p) * 1e6) / 1e6)
-          |      + CAST(neg AS DOUBLE) * (FLOOR(ln(1.0 - p) * 1e6) / 1e6))) * 1e6) / 1e6 AS lt
-          |  FROM pp)
-          |SELECT CAST(SUM(n) AS BIGINT) AS n,
-          |  CAST(COUNT(*) AS BIGINT) AS k_groups,
-          |  CAST(SUM(pos) AS DOUBLE) / NULLIF(CAST(SUM(n) AS DOUBLE), 0.0) AS base_rate,
-          |  CAST(SUM(CAST(bt AS DECIMAL(28,6))) AS DOUBLE)
-          |    / NULLIF(CAST(SUM(n) AS DOUBLE), 0.0) AS brier,
-          |  CAST(SUM(CAST(lt AS DECIMAL(28,6))) AS DOUBLE)
-          |    / NULLIF(CAST(SUM(n) AS DOUBLE), 0.0) AS log_loss
-          |FROM terms""".stripMargin,
-
-      // MlLite.calibrationEce mirrored: hour panel → Laplace rate →
-      // equal-width bins; per-bin confidence mass as exact-decimal ×
-      // gridded-rate products, the gap re-gridded before the ece sum.
-      "ml_calibration_ece" ->
-        """WITH g AS (
-          |  SELECT hour(ts) AS hr, COUNT(*) AS n,
-          |    CAST(SUM(CASE WHEN upper(trim(event_type)) = 'PURCHASE'
-          |      THEN 1 ELSE 0 END) AS BIGINT) AS pos
-          |  FROM events WHERE ts IS NOT NULL GROUP BY 1),
-          |gp AS (
-          |  SELECT *,
-          |    (CAST(pos AS DOUBLE) + 0.5) / (CAST(n AS DOUBLE) + 1.0) AS p
-          |  FROM g),
-          |gb AS (
-          |  SELECT *, LEAST(CAST(FLOOR(p * 10) AS INTEGER), 9) AS bin FROM gp),
-          |b AS (
-          |  SELECT bin, CAST(SUM(n) AS BIGINT) AS n_rows,
-          |    COUNT(*) AS n_groups, CAST(SUM(pos) AS BIGINT) AS bpos,
-          |    SUM(CAST(n AS DECIMAL(19,0))
-          |      * CAST(FLOOR(p * 1e6) / 1e6 AS DECIMAL(28,6))) AS conf_mass
-          |  FROM gb GROUP BY 1),
-          |b2 AS (
-          |  SELECT bin, n_rows, n_groups,
-          |    CAST(conf_mass AS DOUBLE) / NULLIF(CAST(n_rows AS DOUBLE), 0.0) AS avg_conf,
-          |    CAST(bpos AS DOUBLE) / NULLIF(CAST(n_rows AS DOUBLE), 0.0) AS accuracy
-          |  FROM b),
-          |b3 AS (SELECT *, ABS(accuracy - avg_conf) AS abs_gap FROM b2),
-          |s AS (
-          |  SELECT
-          |    CAST(SUM(CAST(n_rows AS DECIMAL(19,0))
-          |        * CAST(FLOOR(abs_gap * 1e6) / 1e6 AS DECIMAL(28,6))) AS DOUBLE)
-          |      / NULLIF(CAST(SUM(n_rows) AS DOUBLE), 0.0) AS ece,
-          |    MAX(FLOOR(abs_gap * 1e6) / 1e6) AS mce
-          |  FROM b3)
-          |SELECT bin, n_rows, n_groups, avg_conf, accuracy, abs_gap, ece, mce
-          |FROM b3 CROSS JOIN s""".stripMargin,
-
-      // MlLite.mcnemar mirrored: one scan to the 2×2 paired cells,
-      // continuity-corrected chi2, the Horner-erfc 1-dof tail gridded.
-      "ml_mcnemar" ->
-        """WITH r AS (
-          |  SELECT upper(trim(event_type)) = 'PURCHASE' AS y,
-          |    hour(ts) IN (7, 8, 17, 18) AS pa,
-          |    value > 55.0 AS pb
-          |  FROM events),
-          |f AS (SELECT * FROM r
-          |      WHERE y IS NOT NULL AND pa IS NOT NULL AND pb IS NOT NULL),
-          |g AS (
-          |  SELECT CAST(COUNT(*) AS BIGINT) AS n,
-          |    CAST(SUM(CASE WHEN pa = y AND pb = y THEN 1 ELSE 0 END) AS BIGINT) AS n_both_correct,
-          |    CAST(SUM(CASE WHEN pa = y AND pb <> y THEN 1 ELSE 0 END) AS BIGINT) AS n_a_only,
-          |    CAST(SUM(CASE WHEN pa <> y AND pb = y THEN 1 ELSE 0 END) AS BIGINT) AS n_b_only,
-          |    CAST(SUM(CASE WHEN pa <> y AND pb <> y THEN 1 ELSE 0 END) AS BIGINT) AS n_both_wrong
-          |  FROM f),
-          |c AS (
-          |  SELECT *,
-          |    CASE WHEN n_a_only + n_b_only = 0 THEN NULL
-          |         ELSE GREATEST(ABS(CAST(n_a_only AS DOUBLE) - CAST(n_b_only AS DOUBLE)) - 1.0, 0.0)
-          |            * GREATEST(ABS(CAST(n_a_only AS DOUBLE) - CAST(n_b_only AS DOUBLE)) - 1.0, 0.0)
-          |            / (CAST(n_a_only AS DOUBLE) + CAST(n_b_only AS DOUBLE))
-          |    END AS chi2_cc
-          |  FROM g),
-          |px AS (SELECT *, SQRT(chi2_cc / 2.0) AS x FROM c),
-          |pt AS (SELECT *, 1.0 / (1.0 + 0.3275911 * x) AS t FROM px)
-          |SELECT n, n_both_correct, n_a_only, n_b_only, n_both_wrong,
-          |  (CAST(n_both_correct AS DOUBLE) + CAST(n_a_only AS DOUBLE))
-          |    / NULLIF(CAST(n AS DOUBLE), 0.0) AS acc_a,
-          |  (CAST(n_both_correct AS DOUBLE) + CAST(n_b_only AS DOUBLE))
-          |    / NULLIF(CAST(n AS DOUBLE), 0.0) AS acc_b,
-          |  chi2_cc,
-          |  FLOOR(((((1.061405429 * t - 1.453152027) * t + 1.421413741) * t
-          |    - 0.284496736) * t + 0.254829592) * t * EXP(-(x * x)) * 1e6) / 1e6 AS p_value
-          |FROM pt""".stripMargin,
-
-      // Drift.jsHistogram mirrored: same bucketing as PSI, mixture
-      // midpoint, grid-ln KL terms summed as DECIMAL(28,6).
-      "data_drift_js" ->
-        """WITH ev AS (
-          |  SELECT value,
-          |    CASE WHEN CAST(ts AS DATE) > DATE '2024-01-15' THEN 1 ELSE 0 END AS is_new
-          |  FROM events WHERE value IS NOT NULL),
-          |b AS (SELECT MIN(value) AS mn, MAX(value) AS mx FROM ev),
-          |k AS (
-          |  SELECT
-          |    CASE WHEN mx = mn THEN 0
-          |         ELSE LEAST(19, CAST(FLOOR((value - mn) / ((mx - mn) / 20)) AS INTEGER)) END AS bucket,
-          |    CAST(SUM(1 - is_new) AS BIGINT) AS n_old,
-          |    CAST(SUM(is_new) AS BIGINT) AS n_new
-          |  FROM ev, b GROUP BY 1),
-          |tot AS (
-          |  SELECT CAST(SUM(n_old) AS BIGINT) AS tot_old,
-          |         CAST(SUM(n_new) AS BIGINT) AS tot_new
-          |  FROM k),
-          |p AS (
-          |  SELECT n_old, n_new, tot_old, tot_new,
-          |    n_old / CAST(tot_old AS DOUBLE) AS p_old,
-          |    n_new / CAST(tot_new AS DOUBLE) AS p_new
-          |  FROM k, tot),
-          |pm AS (SELECT *, (p_old + p_new) / 2.0 AS m FROM p)
-          |SELECT
-          |  (CAST(SUM(CAST(CASE WHEN p_old > 0.0
-          |      THEN FLOOR(p_old * (FLOOR(ln(p_old / m) * 1e6) / 1e6) * 1e6) / 1e6
-          |      ELSE 0.0 END AS DECIMAL(28,6))) AS DOUBLE)
-          |   + CAST(SUM(CAST(CASE WHEN p_new > 0.0
-          |      THEN FLOOR(p_new * (FLOOR(ln(p_new / m) * 1e6) / 1e6) * 1e6) / 1e6
-          |      ELSE 0.0 END AS DECIMAL(28,6))) AS DOUBLE)) / 2.0 AS js_div,
-          |  CAST(COUNT(*) AS BIGINT) AS n_buckets,
-          |  CAST(MAX(tot_old) AS BIGINT) AS tot_old,
-          |  CAST(MAX(tot_new) AS BIGINT) AS tot_new
-          |FROM pm""".stripMargin,
-
-      "ana_coverage_quartile" ->
-        s"""WITH base AS (
-           |  SELECT n_name,
-           |    COUNT(DISTINCT c_custkey) AS num_clientes,
-           |    CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,2))), 0) AS DOUBLE) AS ventas_total,
-           |    ${avgD("CAST(o_totalprice AS DECIMAL(18,2))", "COUNT(*)", 1)} AS ventas_por_orden
-           |  FROM orders
-           |  JOIN customer ON o_custkey = c_custkey
-           |  JOIN nation ON c_nationkey = n_nationkey
-           |  GROUP BY n_name),
-           |ranked AS (
-           |  SELECT *, NTILE(4) OVER (ORDER BY ventas_por_orden, n_name) AS cuartil_cobertura
-           |  FROM base)
-           |SELECT *,
-           |  CASE cuartil_cobertura
-           |    WHEN 1 THEN 'Sub-servida'
-           |    WHEN 2 THEN 'Baja cobertura'
-           |    WHEN 3 THEN 'Cobertura media'
-           |    ELSE 'Bien servida' END AS categoria
-           |FROM ranked""".stripMargin,
-
-      "ana_wait_percentiles" ->
-        s"""SELECT event_type_norm AS mode_code,
-           |  COUNT(*) AS validaciones,
-           |  ${avgD("CAST(value AS DECIMAL(18,2))", "COUNT(*)", 2)} AS espera_promedio_min,
-           |  ROUND(quantile_cont(value, 0.5), 2) AS espera_mediana_min,
-           |  ROUND(quantile_cont(value, 0.9), 2) AS espera_p90_min,
-           |  ${avgD("CASE WHEN tipo_dia = 'LABORAL' THEN CAST(value AS DECIMAL(18,2)) END",
-               "COUNT(CASE WHEN tipo_dia = 'LABORAL' THEN 1 END)", 2)} AS espera_laboral,
-           |  ${avgD("CASE WHEN tipo_dia = 'DOMINGO' THEN CAST(value AS DECIMAL(18,2)) END",
-               "COUNT(CASE WHEN tipo_dia = 'DOMINGO' THEN 1 END)", 2)} AS espera_domingo
-           |FROM ($validSql)
-           |WHERE value IS NOT NULL AND value BETWEEN 0 AND 450
-           |GROUP BY event_type_norm""".stripMargin,
-
-      "ana_user_segments" ->
-        s"""WITH daily AS (
-           |  SELECT user_id, date_sk, COUNT(*) AS viajes_en_dia
-           |  FROM ($validSql)
-           |  WHERE tipo_dia = 'LABORAL' AND user_id IS NOT NULL
-           |  GROUP BY user_id, date_sk),
-           |per_user AS (
-           |  SELECT user_id,
-           |    ROUND(CAST(SUM(viajes_en_dia) AS DOUBLE) / COUNT(*), 2) AS viajes_x_dia_laboral,
-           |    COUNT(*) AS dias_con_actividad
-           |  FROM daily GROUP BY user_id
-           |  HAVING COUNT(*) >= 3),
-           |seg AS (
-           |  SELECT
-           |    CASE WHEN viajes_x_dia_laboral >= 6 THEN '>=6 (extremo cautivo)'
-           |         WHEN viajes_x_dia_laboral >= 4 THEN '4-5 (cautivo)'
-           |         WHEN viajes_x_dia_laboral >= 2 THEN '2-3 (regular)'
-           |         ELSE '1 (esporadico)' END AS segmento_uso,
-           |    COUNT(*) AS tarjetas,
-           |    ${avgD("CAST(viajes_x_dia_laboral AS DECIMAL(18,2))", "COUNT(*)", 2)} AS media_viajes_dia,
-           |    ROUND(CAST(SUM(dias_con_actividad) AS DOUBLE) / COUNT(*), 1) AS dias_activos_promedio
-           |  FROM per_user GROUP BY 1)
-           |SELECT segmento_uso, tarjetas, media_viajes_dia, dias_activos_promedio,
-           |  ROUND(100.0 * tarjetas / SUM(tarjetas) OVER (), 2) AS pct_tarjetas
-           |FROM seg""".stripMargin,
-
-      "ana_pct_of_total" ->
-        s"""WITH seg AS (
-           |  SELECT l_linenumber AS num_etapas, COUNT(*) AS viajes,
-           |    CAST(ROUND(SUM(CAST(l_quantity AS DECIMAL(18,2))), 0) AS DOUBLE) AS demanda_expandida,
-           |    ${avgD("CAST(l_extendedprice AS DECIMAL(18,2))", "COUNT(*)", 1)} AS precio_promedio,
-           |    ${avgD("CAST(l_discount AS DECIMAL(18,2))", "COUNT(*)", 3)} AS descuento_promedio
-           |  FROM lineitem GROUP BY 1)
-           |SELECT num_etapas, viajes, demanda_expandida, precio_promedio, descuento_promedio,
-           |  ROUND(100.0 * viajes / SUM(viajes) OVER (), 2) AS pct_total
-           |FROM seg""".stripMargin,
-
-      "ana_demand_pivot_30m" ->
-        s"""SELECT time_30m_sk, subidas_laboral, subidas_sabado, subidas_domingo,
-           |  ROUND(100.0 * subidas_laboral / NULLIF(subidas_domingo, 0) - 100, 1)
-           |    AS pct_laboral_vs_domingo
-           |FROM (
-           |  SELECT time_30m_sk,
-           |    CAST(COALESCE(ROUND(SUM(CASE WHEN tipo_dia = 'LABORAL' THEN CAST(value AS DECIMAL(18,2)) END), 2), 0) AS DOUBLE) AS subidas_laboral,
-           |    CAST(COALESCE(ROUND(SUM(CASE WHEN tipo_dia = 'SABADO' THEN CAST(value AS DECIMAL(18,2)) END), 2), 0) AS DOUBLE) AS subidas_sabado,
-           |    CAST(COALESCE(ROUND(SUM(CASE WHEN tipo_dia = 'DOMINGO' THEN CAST(value AS DECIMAL(18,2)) END), 2), 0) AS DOUBLE) AS subidas_domingo
-           |  FROM ($validSql) GROUP BY time_30m_sk)""".stripMargin,
-
-      // Profiling.chi2Assoc mirrored: share-space cell terms on the
-      // 1e-12 grid, DECIMAL(18,12) order-free sum, fixed-order chi2/V.
-      "table_chi2_assoc" ->
-        chi2PairOracleSql(validSql, "tipo_dia", "event_type_norm"),
-
-      // Profiling.cramersVPairs mirrored: one chi2-pair statement per
-      // column combination (generated from the SAME column list),
-      // UNION ALL into the association matrix.
-      "table_cramers_pairs" ->
-        Seq("tipo_dia", "event_type_norm", "prop_k").combinations(2)
-          .map { case Seq(a, b) =>
-            s"SELECT * FROM (${chi2PairOracleSql(validSql, a, b)})" }
-          .mkString("\nUNION ALL\n"),
-
-      // AnalyticsPack.oddsRatio mirrored: exact-integer cell products,
-      // grid-ln, parsed 1.96, log-scale interval and verdict.
-      "ana_odds_ratio" ->
-        """WITH g AS (
-          |  SELECT
-          |    SUM(CASE WHEN isodow(ts) >= 6 AND UPPER(TRIM(event_type)) = 'PURCHASE' AND value > 95 THEN 1 ELSE 0 END) AS a,
-          |    SUM(CASE WHEN isodow(ts) >= 6 AND NOT (UPPER(TRIM(event_type)) = 'PURCHASE' AND value > 95) THEN 1 ELSE 0 END) AS b,
-          |    SUM(CASE WHEN isodow(ts) < 6 AND UPPER(TRIM(event_type)) = 'PURCHASE' AND value > 95 THEN 1 ELSE 0 END) AS c,
-          |    SUM(CASE WHEN isodow(ts) < 6 AND NOT (UPPER(TRIM(event_type)) = 'PURCHASE' AND value > 95) THEN 1 ELSE 0 END) AS d
-          |  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL),
-          |s AS (SELECT
-          |    CAST(a AS BIGINT) AS n_exp_pos, CAST(b AS BIGINT) AS n_exp_neg,
-          |    CAST(c AS BIGINT) AS n_ctl_pos, CAST(d AS BIGINT) AS n_ctl_neg,
-          |    (a = 0 OR b = 0 OR c = 0 OR d = 0) AS empty,
-          |    CAST(a*d AS DOUBLE) / CAST(b*c AS DOUBLE) AS orr,
-          |    FLOOR(LN(CAST(a*d AS DOUBLE) / CAST(b*c AS DOUBLE)) * 1e6) / 1e6 AS lnor,
-          |    sqrt(1.0 / CAST(a AS DOUBLE) + 1.0 / CAST(b AS DOUBLE)
-          |       + 1.0 / CAST(c AS DOUBLE) + 1.0 / CAST(d AS DOUBLE)) AS se
-          |  FROM g)
-          |SELECT n_exp_pos, n_exp_neg, n_ctl_pos, n_ctl_neg,
-          |  CASE WHEN empty THEN NULL ELSE orr END AS odds_ratio,
-          |  CASE WHEN empty THEN NULL ELSE lnor END AS ln_or,
-          |  CASE WHEN empty THEN NULL ELSE lnor - 1.96 * se END AS ln_or_lo95,
-          |  CASE WHEN empty THEN NULL ELSE lnor + 1.96 * se END AS ln_or_hi95,
-          |  CASE WHEN empty THEN NULL
-          |       ELSE (lnor - 1.96 * se > 0.0 OR lnor + 1.96 * se < 0.0)
-          |  END AS significant_5pct
-          |FROM s""".stripMargin,
-
-      // AnalyticsPack.gainsTable mirrored: descending-bin cumulative
-      // window sums, exact-integer share quotients, one lift divide.
-      "ml_gains_table" ->
-        """WITH panel AS (
-          |  SELECT LEAST(19, GREATEST(0, CAST(FLOOR(value / 5) AS BIGINT))) AS bin,
-          |    CAST(COUNT(*) AS BIGINT) AS n,
-          |    CAST(SUM(CASE WHEN UPPER(TRIM(event_type)) = 'PURCHASE'
-          |                  THEN 1 ELSE 0 END) AS BIGINT) AS n_pos
-          |  FROM events WHERE value IS NOT NULL GROUP BY 1),
-          |tot AS (SELECT SUM(n) AS tn, SUM(n_pos) AS tp FROM panel),
-          |cum AS (SELECT bin, n, n_pos,
-          |    CAST(SUM(n) OVER (ORDER BY bin DESC) AS BIGINT) AS cum_n,
-          |    CAST(SUM(n_pos) OVER (ORDER BY bin DESC) AS BIGINT) AS cum_pos
-          |  FROM panel)
-          |SELECT bin, n, n_pos, cum_n, cum_pos,
-          |  CAST(cum_n AS DOUBLE) / CAST(tn AS DOUBLE) AS population_share,
-          |  CASE WHEN tp = 0 THEN NULL
-          |       ELSE CAST(cum_pos AS DOUBLE) / CAST(tp AS DOUBLE) END
-          |    AS captured_share,
-          |  CASE WHEN tp = 0 THEN NULL
-          |       ELSE (CAST(cum_pos AS DOUBLE) / CAST(tp AS DOUBLE))
-          |            / (CAST(cum_n AS DOUBLE) / CAST(tn AS DOUBLE)) END AS lift
-          |FROM cum CROSS JOIN tot""".stripMargin,
-
-      // AnalyticsPack.controlChartP mirrored: exact-integer rate and
-      // center-line quotients, fixed-order IEEE limits, comparisons.
-      "ana_control_chart" ->
-        """WITH daily AS (
-          |  SELECT CAST(ts AS DATE) AS day, CAST(COUNT(*) AS BIGINT) AS n,
-          |    CAST(SUM(CASE WHEN UPPER(TRIM(event_type)) = 'PURCHASE'
-          |                  THEN 1 ELSE 0 END) AS BIGINT) AS n_pos
-          |  FROM events WHERE ts IS NOT NULL GROUP BY 1),
-          |tot AS (SELECT SUM(n) AS tn, SUM(n_pos) AS tp FROM daily),
-          |lim AS (SELECT day, n, n_pos,
-          |    CAST(n_pos AS DOUBLE) / CAST(n AS DOUBLE) AS rate,
-          |    CAST(tp AS DOUBLE) / CAST(tn AS DOUBLE) AS p_bar,
-          |    CAST(tp AS DOUBLE) / CAST(tn AS DOUBLE)
-          |      + 3.0 * sqrt(CAST(tp AS DOUBLE) / CAST(tn AS DOUBLE)
-          |          * (1.0 - CAST(tp AS DOUBLE) / CAST(tn AS DOUBLE))
-          |          / CAST(n AS DOUBLE)) AS ucl,
-          |    GREATEST(0.0, CAST(tp AS DOUBLE) / CAST(tn AS DOUBLE)
-          |      - 3.0 * sqrt(CAST(tp AS DOUBLE) / CAST(tn AS DOUBLE)
-          |          * (1.0 - CAST(tp AS DOUBLE) / CAST(tn AS DOUBLE))
-          |          / CAST(n AS DOUBLE))) AS lcl
-          |  FROM daily CROSS JOIN tot)
-          |SELECT day, n, n_pos, rate, p_bar, ucl, lcl,
-          |  (rate > ucl OR rate < lcl) AS out_of_control
-          |FROM lim""".stripMargin,
-
-      // AnalyticsPack.xcorrLags mirrored: co-observed day panels per
-      // lag, HUGEINT moments, one fixed-order double corr per lag.
-      "ana_xcorr_lags" ->
-        """WITH a AS (
-          |  SELECT CAST(ts AS DATE) AS d, CAST(COUNT(*) AS BIGINT) AS na
-          |  FROM events
-          |  WHERE ts IS NOT NULL AND UPPER(TRIM(event_type)) = 'CLICK'
-          |  GROUP BY 1),
-          |b AS (
-          |  SELECT CAST(ts AS DATE) AS db, CAST(COUNT(*) AS BIGINT) AS nb
-          |  FROM events
-          |  WHERE ts IS NOT NULL AND UPPER(TRIM(event_type)) = 'PURCHASE'
-          |  GROUP BY 1),
-          |l AS (SELECT CAST(UNNEST(range(-7, 8)) AS INTEGER) AS lag),
-          |j AS (SELECT lag, na, nb
-          |  FROM a CROSS JOIN l JOIN b ON a.d + lag = b.db),
-          |agg AS (SELECT lag, CAST(COUNT(*) AS BIGINT) AS n_days,
-          |    SUM(na) AS sa, SUM(nb) AS sb, SUM(na*na) AS saa,
-          |    SUM(nb*nb) AS sbb, SUM(na*nb) AS sab
-          |  FROM j GROUP BY 1)
-          |SELECT lag, n_days,
-          |  (CAST(n_days*sab AS DOUBLE) - CAST(sa*sb AS DOUBLE))
-          |    / NULLIF(sqrt(CAST(n_days*saa AS DOUBLE) - CAST(sa*sa AS DOUBLE))
-          |        * sqrt(CAST(n_days*sbb AS DOUBLE) - CAST(sb*sb AS DOUBLE)), 0)
-          |    AS xcorr
-          |FROM agg""".stripMargin,
-
-      // Sampling.neymanAllocation mirrored: exact decimal moments,
-      // 1e-6-gridded sd/weights, DECIMAL weight total, the same fixed
-      // IEEE raw allocations and the (fraction DESC, stratum)
-      // largest-remainder ranking.
-      "sample_neyman" ->
-        """WITH ev AS (
-          |  SELECT UPPER(TRIM(event_type)) AS stratum, CAST(value AS DOUBLE) AS v
-          |  FROM events
-          |  WHERE event_type IS NOT NULL AND value IS NOT NULL),
-          |moms AS (
-          |  SELECT stratum, CAST(COUNT(*) AS BIGINT) AS n_rows,
-          |    SUM(CAST(v AS DECIMAL(28,6))) AS s1,
-          |    SUM(CAST(v * v AS DECIMAL(28,6))) AS s2
-          |  FROM ev GROUP BY 1),
-          |st AS (
-          |  SELECT stratum, n_rows,
-          |    FLOOR(COALESCE(CASE WHEN n_rows >= 2 THEN
-          |      sqrt(GREATEST(0.0,
-          |        (CAST(s2 AS DOUBLE) - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE) / n_rows)
-          |        / (n_rows - 1))) END, 0.0) * 1e6) / 1e6 AS sd
-          |  FROM moms),
-          |w AS (
-          |  SELECT stratum, n_rows, sd,
-          |    FLOOR(CAST(n_rows AS DOUBLE) * sd * 1e6) / 1e6 AS wgt
-          |  FROM st),
-          |tots AS (
-          |  SELECT CAST(SUM(CAST(wgt AS DECIMAL(28,6))) AS DOUBLE) AS wsum,
-          |    CAST(SUM(n_rows) AS BIGINT) AS ntot
-          |  FROM w),
-          |raw AS (
-          |  SELECT stratum, n_rows, sd,
-          |    CASE WHEN wsum > 0 THEN 5000.0 * wgt / wsum END AS raw_n,
-          |    5000.0 * CAST(n_rows AS DOUBLE) / CAST(ntot AS DOUBLE) AS raw_p
-          |  FROM w CROSS JOIN tots),
-          |based AS (
-          |  SELECT stratum, n_rows, sd, raw_n,
-          |    CAST(FLOOR(raw_n) AS BIGINT) AS bn, raw_n - FLOOR(raw_n) AS fn,
-          |    CAST(FLOOR(raw_p) AS BIGINT) AS bp, raw_p - FLOOR(raw_p) AS fp
-          |  FROM raw),
-          |short AS (
-          |  SELECT 5000 - COALESCE(SUM(bn), 5000) AS shn,
-          |    5000 - SUM(bp) AS shp
-          |  FROM based),
-          |rk AS (
-          |  SELECT b.*, shn, shp,
-          |    ROW_NUMBER() OVER (ORDER BY fn DESC, stratum) AS rn,
-          |    ROW_NUMBER() OVER (ORDER BY fp DESC, stratum) AS rp
-          |  FROM based b CROSS JOIN short)
-          |SELECT stratum, n_rows, sd,
-          |  CASE WHEN raw_n IS NOT NULL
-          |       THEN bn + CASE WHEN rn <= shn THEN 1 ELSE 0 END END AS alloc_neyman,
-          |  bp + CASE WHEN rp <= shp THEN 1 ELSE 0 END AS alloc_proportional,
-          |  CASE WHEN raw_n IS NOT NULL
-          |       THEN (bn + CASE WHEN rn <= shn THEN 1 ELSE 0 END) > n_rows
-          |       ELSE FALSE END AS over_allocated
-          |FROM rk""".stripMargin,
-
-      // AnalyticsPack.granger mirrored: daily panel, lag-1 joins over
-      // all ordered type pairs, exact integer moments, the n·Σ−Σ·Σ
-      // centered forms cast to double ONCE each, the same fixed IEEE
-      // sequence for det/b/RSS/F, same NULL guards and 3.841459
-      // verdict constant.
-      "ana_granger" ->
-        """WITH daily AS (
-          |  SELECT UPPER(TRIM(event_type)) AS et, CAST(ts AS DATE) AS d,
-          |         CAST(COUNT(*) AS BIGINT) AS n
-          |  FROM events
-          |  WHERE ts IS NOT NULL AND event_type IS NOT NULL
-          |  GROUP BY 1, 2),
-          |rws AS (
-          |  SELECT x.et AS cause, y.et AS effect, y.n AS y, l.n AS y1, x.n AS x1
-          |  FROM daily y
-          |  JOIN daily l ON l.et = y.et AND l.d + 1 = y.d
-          |  JOIN daily x ON x.d + 1 = y.d AND x.et <> y.et),
-          |m AS (
-          |  SELECT cause, effect, CAST(COUNT(*) AS BIGINT) AS n_days,
-          |    SUM(y) AS sy, SUM(y1) AS sy1, SUM(x1) AS sx1,
-          |    SUM(y*y) AS syy, SUM(y1*y1) AS s11, SUM(x1*x1) AS s22,
-          |    SUM(y*y1) AS sy_1, SUM(y*x1) AS sy_2, SUM(y1*x1) AS s12
-          |  FROM rws GROUP BY 1, 2),
-          |c AS (
-          |  SELECT cause, effect, n_days,
-          |    CAST(n_days*s11 AS DOUBLE) - CAST(sy1*sy1 AS DOUBLE) AS a11,
-          |    CAST(n_days*s22 AS DOUBLE) - CAST(sx1*sx1 AS DOUBLE) AS a22,
-          |    CAST(n_days*s12 AS DOUBLE) - CAST(sy1*sx1 AS DOUBLE) AS a12,
-          |    CAST(n_days*sy_1 AS DOUBLE) - CAST(sy1*sy AS DOUBLE) AS a1y,
-          |    CAST(n_days*sy_2 AS DOUBLE) - CAST(sx1*sy AS DOUBLE) AS a2y,
-          |    CAST(n_days*syy AS DOUBLE) - CAST(sy*sy AS DOUBLE) AS ayy
-          |  FROM m),
-          |s AS (
-          |  SELECT cause, effect, n_days, a11,
-          |    a11*a22 - a12*a12 AS det,
-          |    (a1y*a22 - a2y*a12) / (a11*a22 - a12*a12) AS b1,
-          |    (a2y*a11 - a1y*a12) / (a11*a22 - a12*a12) AS b2,
-          |    a1y, a2y, ayy
-          |  FROM c),
-          |r AS (
-          |  SELECT cause, effect, n_days, a11, det, b2,
-          |    ayy - b1*a1y - b2*a2y AS rss_u,
-          |    ayy - a1y*a1y/a11 AS rss_r
-          |  FROM s)
-          |SELECT cause, effect, n_days,
-          |  CASE WHEN n_days >= 4 AND det <> 0.0
-          |       THEN FLOOR(b2 * 1e6) / 1e6 END AS b_cause,
-          |  CASE WHEN n_days >= 4 AND det <> 0.0 AND a11 <> 0.0 AND rss_u > 0.0
-          |       THEN FLOOR((rss_r - rss_u) * CAST(n_days - 3 AS DOUBLE) / rss_u
-          |                  * 1e6) / 1e6 END AS f_stat,
-          |  CASE WHEN n_days >= 4 AND det <> 0.0 AND a11 <> 0.0 AND rss_u > 0.0
-          |       THEN (FLOOR((rss_r - rss_u) * CAST(n_days - 3 AS DOUBLE) / rss_u
-          |                   * 1e6) / 1e6) > 3.841459 END AS granger_5pct
-          |FROM r""".stripMargin,
-
-      // AnalyticsPack.cointegration mirrored: step-1 exact-moment OLS
-      // (one double cast per centered form), residuals through the
-      // identical (y − a) − b·x IEEE sequence floor-gridded to
-      // micro-unit BIGINTs, step-2 HUGEINT moment sums (µ² units
-      // cancel in γ and t), same guards and −3.33613 verdict.
-      "ana_cointegration" ->
-        """WITH daily AS (
-          |  SELECT UPPER(TRIM(event_type)) AS et, CAST(ts AS DATE) AS d,
-          |         CAST(COUNT(*) AS BIGINT) AS n
-          |  FROM events
-          |  WHERE ts IS NOT NULL AND event_type IS NOT NULL
-          |  GROUP BY 1, 2),
-          |rws AS (
-          |  SELECT x.et AS series_x, y.et AS series_y, y.d, x.n AS x, y.n AS y
-          |  FROM daily y JOIN daily x ON x.d = y.d AND x.et <> y.et),
-          |m1 AS (
-          |  SELECT series_x, series_y, CAST(COUNT(*) AS BIGINT) AS n_days,
-          |    SUM(x) AS sx, SUM(y) AS sy, SUM(x*x) AS sxx, SUM(x*y) AS sxy
-          |  FROM rws GROUP BY 1, 2),
-          |coef AS (
-          |  SELECT series_x, series_y, n_days,
-          |    CASE WHEN CAST(n_days*sxx AS DOUBLE) - CAST(sx*sx AS DOUBLE) <> 0.0
-          |         THEN (CAST(n_days*sxy AS DOUBLE) - CAST(sx*sy AS DOUBLE))
-          |              / (CAST(n_days*sxx AS DOUBLE) - CAST(sx*sx AS DOUBLE))
-          |    END AS b,
-          |    CAST(sy AS DOUBLE) AS syd, CAST(sx AS DOUBLE) AS sxd
-          |  FROM m1),
-          |coef2 AS (
-          |  SELECT series_x, series_y, n_days, b,
-          |    (syd - b * sxd) / CAST(n_days AS DOUBLE) AS a,
-          |    FLOOR(b * 1e6) / 1e6 AS beta
-          |  FROM coef),
-          |resid AS (
-          |  SELECT r.series_x, r.series_y, r.d,
-          |    CAST(FLOOR((CAST(r.y AS DOUBLE) - c.a
-          |                - c.b * CAST(r.x AS DOUBLE)) * 1e6) AS BIGINT) AS e6
-          |  FROM rws r JOIN coef2 c USING (series_x, series_y)
-          |  WHERE c.b IS NOT NULL),
-          |diffs AS (
-          |  SELECT c.series_x, c.series_y, p.e6 AS pe6, c.e6 - p.e6 AS de6
-          |  FROM resid c JOIN resid p
-          |    ON p.series_x = c.series_x AND p.series_y = c.series_y
-          |   AND p.d + 1 = c.d),
-          |m2 AS (
-          |  SELECT series_x, series_y, CAST(COUNT(*) AS BIGINT) AS n_diffs,
-          |    SUM(CAST(pe6 AS HUGEINT) * CAST(de6 AS HUGEINT)) AS sed,
-          |    SUM(CAST(pe6 AS HUGEINT) * CAST(pe6 AS HUGEINT)) AS see,
-          |    SUM(CAST(de6 AS HUGEINT) * CAST(de6 AS HUGEINT)) AS sdd
-          |  FROM diffs GROUP BY 1, 2),
-          |s AS (
-          |  SELECT series_x, series_y, n_diffs,
-          |    CAST(sed AS DOUBLE) AS ed, CAST(see AS DOUBLE) AS ee,
-          |    CAST(sdd AS DOUBLE) AS dd
-          |  FROM m2),
-          |r AS (
-          |  SELECT series_x, series_y, n_diffs, ee,
-          |    ed / ee AS gamma,
-          |    dd - ed * ed / ee AS rss
-          |  FROM s)
-          |SELECT c.series_x, c.series_y, c.n_days,
-          |  COALESCE(r.n_diffs, CAST(0 AS BIGINT)) AS n_diffs, c.beta,
-          |  CASE WHEN c.beta IS NOT NULL AND r.n_diffs >= 3 AND r.ee <> 0.0
-          |       THEN FLOOR(r.gamma * 1e6) / 1e6 END AS gamma,
-          |  CASE WHEN c.beta IS NOT NULL AND r.n_diffs >= 3 AND r.ee <> 0.0
-          |            AND r.rss > 0.0
-          |       THEN FLOOR(r.gamma / sqrt((r.rss / CAST(r.n_diffs - 1 AS DOUBLE))
-          |                                 / r.ee) * 1e6) / 1e6 END AS adf_t,
-          |  CASE WHEN c.beta IS NOT NULL AND r.n_diffs >= 3 AND r.ee <> 0.0
-          |            AND r.rss > 0.0
-          |       THEN (FLOOR(r.gamma / sqrt((r.rss / CAST(r.n_diffs - 1 AS DOUBLE))
-          |                                  / r.ee) * 1e6) / 1e6) < -3.33613
-          |  END AS coint_5pct
-          |FROM coef2 c LEFT JOIN r USING (series_x, series_y)""".stripMargin,
-
-      // Profiling.spearmanPair mirrored: doubled integer midranks per
-      // distinct value, HUGEINT moments, one fixed-order double rho.
-      "table_corr_spearman" ->
-        """WITH pairs AS (
-          |  SELECT l_quantity AS vx, l_extendedprice AS vy FROM lineitem
-          |  WHERE l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL),
-          |px AS (SELECT vx, COUNT(*) AS nt FROM pairs GROUP BY 1),
-          |rx AS (SELECT vx, 2*(SUM(nt) OVER (ORDER BY vx) - nt) + nt + 1 AS dx FROM px),
-          |py AS (SELECT vy, COUNT(*) AS nt FROM pairs GROUP BY 1),
-          |ry AS (SELECT vy, 2*(SUM(nt) OVER (ORDER BY vy) - nt) + nt + 1 AS dy FROM py),
-          |j AS (SELECT dx, dy FROM pairs JOIN rx USING (vx) JOIN ry USING (vy)),
-          |agg AS (SELECT COUNT(*) AS n, SUM(dx) AS sx, SUM(dy) AS sy,
-          |  SUM(dx*dx) AS sxx, SUM(dy*dy) AS syy, SUM(dx*dy) AS sxy FROM j)
-          |SELECT 'l_quantity' AS col_x, 'l_extendedprice' AS col_y,
-          |  CAST(n AS BIGINT) AS n_pairs,
-          |  (CAST(n*sxy AS DOUBLE) - CAST(sx*sy AS DOUBLE))
-          |    / NULLIF(sqrt(CAST(n*sxx AS DOUBLE) - CAST(sx*sx AS DOUBLE))
-          |        * sqrt(CAST(n*syy AS DOUBLE) - CAST(sy*sy AS DOUBLE)), 0) AS rho
-          |FROM agg""".stripMargin,
-
-      // Profiling.kendallTauB mirrored: joint-cell panel self-join for
-      // concordant/discordant mass, exact margin tie terms, tau-b.
-      "table_corr_kendall" ->
-        """WITH cells AS (
-          |  SELECT l_quantity AS cx, l_linenumber AS cy, COUNT(*) AS nc
-          |  FROM lineitem
-          |  WHERE l_quantity IS NOT NULL AND l_linenumber IS NOT NULL
-          |  GROUP BY 1, 2),
-          |pm AS (
-          |  SELECT
-          |    SUM(CASE WHEN b.cy > a.cy THEN CAST(a.nc AS HUGEINT) * b.nc END) AS c_mass,
-          |    SUM(CASE WHEN b.cy < a.cy THEN CAST(a.nc AS HUGEINT) * b.nc END) AS d_mass
-          |  FROM cells a JOIN cells b ON b.cx > a.cx),
-          |tot AS (SELECT CAST(SUM(nc) AS BIGINT) AS n FROM cells),
-          |tx AS (SELECT SUM(CAST(t AS HUGEINT)*(t-1)) AS tie_x2
-          |  FROM (SELECT SUM(nc) AS t FROM cells GROUP BY cx)),
-          |ty AS (SELECT SUM(CAST(t AS HUGEINT)*(t-1)) AS tie_y2
-          |  FROM (SELECT SUM(nc) AS t FROM cells GROUP BY cy)),
-          |fin AS (
-          |  SELECT n,
-          |    COALESCE(CAST(c_mass AS DOUBLE), 0.0) AS n_c,
-          |    COALESCE(CAST(d_mass AS DOUBLE), 0.0) AS n_d,
-          |    CAST(tie_x2 AS DOUBLE) AS tie_x2,
-          |    CAST(tie_y2 AS DOUBLE) AS tie_y2,
-          |    CAST(CAST(n AS HUGEINT)*(n-1) - tie_x2 AS DOUBLE) / 2.0 AS halfx,
-          |    CAST(CAST(n AS HUGEINT)*(n-1) - tie_y2 AS DOUBLE) / 2.0 AS halfy
-          |  FROM pm CROSS JOIN tot CROSS JOIN tx CROSS JOIN ty)
-          |SELECT 'l_quantity' AS col_x, 'l_linenumber' AS col_y,
-          |  n AS n_rows, n_c, n_d, tie_x2, tie_y2,
-          |  (n_c - n_d) / NULLIF(sqrt(halfx) * sqrt(halfy), 0) AS tau_b
-          |FROM fin""".stripMargin,
-
-      // AnalyticsPack.kruskalWallis mirrored: doubled midranks over
-      // the distinct-value panel, per-group HUGEINT rank sums, the
-      // 1e-12-grid share terms summed as DECIMAL(18,12), fixed-order
-      // H and tie correction.
-      "ana_kruskal_wallis" ->
-        """WITH r0 AS (
-          |  SELECT value AS v, event_type AS g FROM events
-          |  WHERE value IS NOT NULL AND event_type IS NOT NULL),
-          |cell AS (SELECT v, g, COUNT(*) AS nvg FROM r0 GROUP BY 1, 2),
-          |pv AS (SELECT v, SUM(nvg) AS nt FROM cell GROUP BY 1),
-          |dv AS (SELECT v, nt, 2*(SUM(nt) OVER (ORDER BY v) - nt) + nt + 1 AS d2
-          |  FROM pv),
-          |grp AS (SELECT g, SUM(nvg) AS ng, SUM(CAST(nvg AS HUGEINT) * d2) AS r2g
-          |  FROM cell JOIN dv USING (v) GROUP BY g),
-          |tot AS (SELECT CAST(SUM(ng) AS BIGINT) AS n,
-          |  CAST(COUNT(*) AS BIGINT) AS n_groups FROM grp),
-          |tie AS (SELECT SUM(CAST(nt AS HUGEINT)*nt*nt - nt) AS t3 FROM pv),
-          |sq AS (SELECT SUM(CAST(FLOOR(s*s / CAST(ng AS DOUBLE) * 1e12) / 1e12
-          |    AS DECIMAL(18,12))) AS sq
-          |  FROM (SELECT ng,
-          |      CAST(r2g AS DOUBLE) / CAST(CAST(n AS HUGEINT)*(n+1) AS DOUBLE) AS s
-          |    FROM grp CROSS JOIN tot)),
-          |fin AS (SELECT n, n_groups,
-          |  3.0 * CAST(CAST(n AS HUGEINT)*(n+1) AS DOUBLE) * CAST(sq AS DOUBLE)
-          |    - 3.0 * (CAST(n AS DOUBLE) + 1.0) AS h,
-          |  1.0 - CAST(t3 AS DOUBLE)
-          |    / CAST(CAST(n AS HUGEINT)*n*n - n AS DOUBLE) AS c
-          |  FROM sq CROSS JOIN tot CROSS JOIN tie)
-          |SELECT n, n_groups, h,
-          |  CASE WHEN c = 0.0 THEN NULL ELSE h / c END AS h_corrected
-          |FROM fin""".stripMargin,
-
-      "table_mutual_info" ->
-        s"""WITH xy AS (
-           |  SELECT tipo_dia AS x, event_type_norm AS y, CAST(COUNT(*) AS BIGINT) AS n_xy
-           |  FROM ($validSql)
-           |  WHERE tipo_dia IS NOT NULL AND event_type_norm IS NOT NULL
-           |  GROUP BY 1, 2),
-           |nx AS (SELECT x, CAST(SUM(n_xy) AS BIGINT) AS n_x FROM xy GROUP BY 1),
-           |ny AS (SELECT y, CAST(SUM(n_xy) AS BIGINT) AS n_y FROM xy GROUP BY 1),
-           |nt AS (SELECT CAST(SUM(n_xy) AS BIGINT) AS n FROM xy),
-           |cells AS (
-           |  SELECT x, y, n_xy, n_x, n_y, n,
-           |    FLOOR(LN(CAST(n_xy * n AS DOUBLE) / CAST(n_x * n_y AS DOUBLE)) * 1e4) / 1e4 AS pmi
-           |  FROM xy JOIN nx USING (x) JOIN ny USING (y) CROSS JOIN nt)
-           |SELECT x, y, n_xy, n_x, n_y, n, pmi,
-           |  FLOOR((CAST(n_xy AS DOUBLE) / CAST(n AS DOUBLE)) * pmi * 1e8) / 1e8 AS mi_term
-           |FROM cells""".stripMargin,
-
-      "table_entropy" -> Seq("tipo_dia", "event_type_norm", "prop_k").map { c =>
-        s"""SELECT '$c' AS column_name,
-           |  CAST(MAX(n) AS BIGINT) AS n_values,
-           |  CAST(MAX(k) AS BIGINT) AS n_distinct,
-           |  CAST(SUM(CAST(FLOOR((CAST(cnt AS DOUBLE) / CAST(n AS DOUBLE))
-           |    * LN(CAST(n AS DOUBLE) / CAST(cnt AS DOUBLE)) * 1e8) / 1e8
-           |    AS DECIMAL(28,12))) AS DOUBLE) AS entropy_nats
-           |FROM (
-           |  SELECT cnt, SUM(cnt) OVER () AS n, COUNT(*) OVER () AS k
-           |  FROM (SELECT CAST($c AS VARCHAR) AS v, CAST(COUNT(*) AS BIGINT) AS cnt
-           |        FROM (${servingValidSql}) WHERE $c IS NOT NULL GROUP BY 1))""".stripMargin
-      }.mkString("", "\nUNION ALL\n", ""),
-
-      // Type-inference replay: identical bronze stringification
-      // (decimal-rendered doubles, strftime timestamps — floats are
-      // never CAST-rendered, the tableDiff rule), same anchored
-      // regexes, same >= threshold ladder.
-      "silver_type_infer" -> {
-        val cols = Seq("event_id", "user_id", "value", "ts", "event_type", "props")
-        val bronzeSql =
-          """SELECT CAST(event_id AS VARCHAR) AS event_id,
-            |    CAST(user_id AS VARCHAR) AS user_id,
-            |    CAST(CAST(value AS DECIMAL(18,2)) AS VARCHAR) AS value,
-            |    strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts,
-            |    event_type, props
-            |  FROM events""".stripMargin
-        cols.map { c =>
-          def cnt(pat: String) =
-            s"CAST(SUM(CASE WHEN $c IS NOT NULL AND TRIM($c) <> '' AND " +
-              s"regexp_matches(TRIM($c), '$pat') THEN 1 ELSE 0 END) AS BIGINT)"
-          val nb = cnt("^(true|false|TRUE|FALSE|True|False)$")
-          val nl = cnt("^[+-]?[0-9]{1,18}$")
-          val nd = cnt("^[+-]?([0-9]+([.][0-9]*)?|[.][0-9]+)([eE][+-]?[0-9]+)?$")
-          val ndt = cnt("^[0-9]{4}-[0-9]{2}-[0-9]{2}$")
-          val nts = cnt("^[0-9]{4}-[0-9]{2}-[0-9]{2}[ T][0-9]{2}:[0-9]{2}:[0-9]{2}")
-          s"""SELECT '$c' AS column_name,
-             |  CAST(COUNT(*) AS BIGINT) AS n_rows,
-             |  CAST(SUM(CASE WHEN $c IS NOT NULL AND TRIM($c) <> '' THEN 1 ELSE 0 END) AS BIGINT) AS n_nonnull,
-             |  $nb AS n_bool, $nl AS n_long, $nd AS n_double,
-             |  $ndt AS n_date, $nts AS n_ts,
-             |  CASE WHEN SUM(CASE WHEN $c IS NOT NULL AND TRIM($c) <> '' THEN 1 ELSE 0 END) = 0 THEN 'VARCHAR'
-             |       WHEN CAST($nb AS DOUBLE) >= 0.99 * CAST(SUM(CASE WHEN $c IS NOT NULL AND TRIM($c) <> '' THEN 1 ELSE 0 END) AS DOUBLE) THEN 'BOOLEAN'
-             |       WHEN CAST($nl AS DOUBLE) >= 0.99 * CAST(SUM(CASE WHEN $c IS NOT NULL AND TRIM($c) <> '' THEN 1 ELSE 0 END) AS DOUBLE) THEN 'BIGINT'
-             |       WHEN CAST($nd AS DOUBLE) >= 0.99 * CAST(SUM(CASE WHEN $c IS NOT NULL AND TRIM($c) <> '' THEN 1 ELSE 0 END) AS DOUBLE) THEN 'DOUBLE'
-             |       WHEN CAST($ndt AS DOUBLE) >= 0.99 * CAST(SUM(CASE WHEN $c IS NOT NULL AND TRIM($c) <> '' THEN 1 ELSE 0 END) AS DOUBLE) THEN 'DATE'
-             |       WHEN CAST($nts AS DOUBLE) >= 0.99 * CAST(SUM(CASE WHEN $c IS NOT NULL AND TRIM($c) <> '' THEN 1 ELSE 0 END) AS DOUBLE) THEN 'TIMESTAMP'
-             |       ELSE 'VARCHAR' END AS suggested_type
-             |FROM ($bronzeSql)""".stripMargin
-        }.mkString("", "\nUNION ALL\n", "")
-      },
-
-      // TypedCoerce.schemaDrift mirrored: the inferTypes union per
-      // drop, full-outer on column name, the same verdict ladder and
-      // exact null-rate quotients (empty batch → rate 1.0).
-      "audit_schema_drift" -> {
-        def inferSql(bronzeSql: String, cols: Seq[String]): String =
-          cols.map { c =>
-            def nnSum =
-              s"SUM(CASE WHEN $c IS NOT NULL AND TRIM($c) <> '' THEN 1 ELSE 0 END)"
-            def cnt(pat: String) =
-              s"CAST(SUM(CASE WHEN $c IS NOT NULL AND TRIM($c) <> '' AND " +
-                s"regexp_matches(TRIM($c), '$pat') THEN 1 ELSE 0 END) AS BIGINT)"
-            val nb = cnt("^(true|false|TRUE|FALSE|True|False)$")
-            val nl = cnt("^[+-]?[0-9]{1,18}$")
-            val nd = cnt("^[+-]?([0-9]+([.][0-9]*)?|[.][0-9]+)([eE][+-]?[0-9]+)?$")
-            val ndt = cnt("^[0-9]{4}-[0-9]{2}-[0-9]{2}$")
-            val nts = cnt("^[0-9]{4}-[0-9]{2}-[0-9]{2}[ T][0-9]{2}:[0-9]{2}:[0-9]{2}")
-            s"""SELECT '$c' AS column_name,
-               |  CAST(COUNT(*) AS BIGINT) AS n_rows,
-               |  CAST($nnSum AS BIGINT) AS n_nonnull,
-               |  CASE WHEN $nnSum = 0 THEN 'VARCHAR'
-               |       WHEN CAST($nb AS DOUBLE) >= 0.99 * CAST($nnSum AS DOUBLE) THEN 'BOOLEAN'
-               |       WHEN CAST($nl AS DOUBLE) >= 0.99 * CAST($nnSum AS DOUBLE) THEN 'BIGINT'
-               |       WHEN CAST($nd AS DOUBLE) >= 0.99 * CAST($nnSum AS DOUBLE) THEN 'DOUBLE'
-               |       WHEN CAST($ndt AS DOUBLE) >= 0.99 * CAST($nnSum AS DOUBLE) THEN 'DATE'
-               |       WHEN CAST($nts AS DOUBLE) >= 0.99 * CAST($nnSum AS DOUBLE) THEN 'TIMESTAMP'
-               |       ELSE 'VARCHAR' END AS suggested_type
-               |FROM ($bronzeSql)""".stripMargin
-          }.mkString("", "\nUNION ALL\n", "")
-        val oldBronze =
-          """SELECT CAST(event_id AS VARCHAR) AS event_id,
-            |    CAST(user_id AS VARCHAR) AS user_id,
-            |    CAST(CAST(FLOOR(value) AS BIGINT) AS VARCHAR) AS value,
-            |    strftime(ts, '%Y-%m-%d') AS ts,
-            |    event_type
-            |  FROM events WHERE CAST(ts AS DATE) <= DATE '2024-01-15'""".stripMargin
-        val newBronze =
-          """SELECT CAST(event_id AS VARCHAR) AS event_id,
-            |    CAST(user_id AS VARCHAR) AS user_id,
-            |    CAST(CAST(value AS DECIMAL(18,2)) AS VARCHAR) AS value,
-            |    strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts,
-            |    event_type, props
-            |  FROM events WHERE CAST(ts AS DATE) > DATE '2024-01-15'""".stripMargin
-        val oldInfer = inferSql(oldBronze,
-          Seq("event_id", "user_id", "value", "ts", "event_type"))
-        val newInfer = inferSql(newBronze,
-          Seq("event_id", "user_id", "value", "ts", "event_type", "props"))
-        s"""WITH oi AS ($oldInfer),
-           |ni AS ($newInfer),
-           |oo AS (
-           |  SELECT column_name, suggested_type AS old_type,
-           |    CASE WHEN n_rows = 0 THEN 1.0
-           |         ELSE 1.0 - CAST(n_nonnull AS DOUBLE) / CAST(n_rows AS DOUBLE)
-           |    END AS old_null_rate
-           |  FROM oi),
-           |nn AS (
-           |  SELECT column_name, suggested_type AS new_type,
-           |    CASE WHEN n_rows = 0 THEN 1.0
-           |         ELSE 1.0 - CAST(n_nonnull AS DOUBLE) / CAST(n_rows AS DOUBLE)
-           |    END AS new_null_rate
-           |  FROM ni)
-           |SELECT column_name, old_type, old_null_rate, new_type, new_null_rate,
-           |  CASE WHEN old_type IS NULL THEN 'ADDED'
-           |       WHEN new_type IS NULL THEN 'DROPPED'
-           |       WHEN old_type <> new_type THEN 'TYPE_CHANGED'
-           |       ELSE 'UNCHANGED' END AS change
-           |FROM oo FULL OUTER JOIN nn USING (column_name)""".stripMargin
-      },
-
-      // MCV replay: per column top-5 by (count desc, value), raw
-      // share quotients of exact longs.
-      "table_topk_values" -> Seq("event_type", "user_id", "props").map { c =>
-        s"""SELECT * FROM (
-           |  SELECT '$c' AS column_name,
-           |    CAST(ROW_NUMBER() OVER (ORDER BY n_rows DESC, value) AS INTEGER) AS rank,
-           |    value, n_rows,
-           |    CAST(n_rows AS DOUBLE) / CAST(SUM(n_rows) OVER () AS DOUBLE) AS share
-           |  FROM (SELECT CAST($c AS VARCHAR) AS value, CAST(COUNT(*) AS BIGINT) AS n_rows
-           |        FROM events WHERE $c IS NOT NULL GROUP BY 1))
-           |WHERE rank <= 5""".stripMargin
-      }.mkString("", "\nUNION ALL\n", ""),
-
-      // HAVING mirrors the operator's malformed-interval contract: an
-      // inverted window (last shipment before the order — a data
-      // quirk) is not an interval and drops on BOTH engines.
-      "join_interval_overlap" ->
-        """WITH iv AS (
-          |  SELECT o_custkey AS cust, o_orderkey AS ok,
-          |    CAST(o_orderdate AS DATE) AS lo_d, MAX(CAST(l_shipdate AS DATE)) AS hi_d
-          |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-          |  GROUP BY 1, 2, 3
-          |  HAVING MAX(CAST(l_shipdate AS DATE)) >= CAST(o_orderdate AS DATE))
-          |SELECT a.cust AS custkey, CAST(COUNT(*) AS BIGINT) AS n_overlapping_pairs
-          |FROM iv a JOIN iv b ON a.cust = b.cust AND a.ok < b.ok
-          |  AND a.lo_d <= b.hi_d AND b.lo_d <= a.hi_d
-          |GROUP BY 1""".stripMargin,
-
-      // Backtest replay: same day panel, calendar self-joins at +1/+7,
-      // 2dp decimal error partials, grid-quantized MAPE quotients.
-      "ana_forecast_backtest" ->
-        s"""WITH byday AS (
-           |  SELECT event_type_norm, date_sk,
-           |    CAST(COALESCE(ROUND(SUM(CAST(value AS DECIMAL(18,2))), 2), 0) AS DOUBLE) AS y,
-           |    CAST(strptime(CAST(date_sk AS VARCHAR), '%Y%m%d') AS DATE) AS d
-           |  FROM ($validSql) WHERE date_sk IS NOT NULL
-           |  GROUP BY 1, 2),
-           |joined AS (
-           |  SELECT b.event_type_norm, b.y, l1.y AS f_lag1, l7.y AS f_lag7
-           |  FROM byday b
-           |  LEFT JOIN byday l1 ON b.event_type_norm = l1.event_type_norm
-           |    AND b.d = l1.d + 1
-           |  LEFT JOIN byday l7 ON b.event_type_norm = l7.event_type_norm
-           |    AND b.d = l7.d + 7),
-           |longf AS (
-           |  SELECT event_type_norm, u.method, y,
-           |    CASE u.method WHEN 'naive_lag1' THEN f_lag1 ELSE f_lag7 END AS f
-           |  FROM joined,
-           |    (SELECT UNNEST(['naive_lag1', 'seasonal_lag7']) AS method) u),
-           |ev AS (SELECT * FROM longf WHERE f IS NOT NULL)
-           |SELECT event_type_norm, method,
-           |  CAST(COUNT(*) AS BIGINT) AS n_eval,
-           |  CAST(SUM(CAST(ABS(y - f) AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) AS mae,
-           |  CAST(SUM(CAST(y - f AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) AS bias,
-           |  CAST(SUM(CASE WHEN y <> 0 THEN
-           |      CAST(FLOOR(ABS(y - f) / y * 1e6) / 1e6 AS DECIMAL(28,6)) END) AS DOUBLE)
-           |    / SUM(CASE WHEN y <> 0 THEN 1 END) AS mape
-           |FROM ev GROUP BY 1, 2""".stripMargin,
-
-      // PACF: the Durbin–Levinson recursion replayed as chained CTE
-      // levels over the pivoted ACF panel — sequential left-to-right
-      // term sums and one division per level, mirroring the driver's
-      // panel recursion op for op; NULL/zero-denominator cascade.
-      "ana_pacf" -> pacfOracleSql(acfOracleSql(validSql), 7),
-
-      // AR(3) forecast: D-L Yule–Walker row + tail pivot + chained
-      // per-horizon recursion CTEs, op-for-op the driver fold.
-      "ana_ar_forecast" ->
-        arForecastOracleSql(acfOracleSql(validSql), validSql, 3, 7),
-
-      // ACF: 4dp mean, 1e-6-grid deviation products, DECIMAL(28,6)
-      // partials, one edge division per (type, lag).
-      "ana_autocorrelation" -> acfOracleSql(validSql),
-
-      // AnalyticsPack.ljungBox mirrored: the ACF panel (lags 1..6 of
-      // the same 7-lag SQL), 1e-12-grid r^2/(n-k) terms as exact
-      // DECIMAL(28,12), Q = n(n+2)*s in fixed order, and the EVEN-dof
-      // chi2 tail as the exact Poisson sum e^{-q}(0.5q^2+q+1), p
-      // floor-gridded at 1e-6 (the house exp convention).
-      "ana_ljung_box" ->
-        s"""WITH acfp AS (
-           |  SELECT * FROM (${acfOracleSql(validSql)}) WHERE lag <= 6),
-           |np AS (
-           |  SELECT event_type_norm,
-           |    CAST(COUNT(DISTINCT date_sk) AS BIGINT) AS n_days
-           |  FROM ($validSql) WHERE date_sk IS NOT NULL GROUP BY 1),
-           |ag AS (
-           |  SELECT a.event_type_norm,
-           |    CAST(COUNT(*) AS BIGINT) AS nl,
-           |    CAST(SUM(CAST(FLOOR(a.acf * a.acf
-           |        / CAST(n.n_days - a.lag AS DOUBLE) * 1e12) / 1e12
-           |      AS DECIMAL(28,12))) AS DOUBLE) AS s
-           |  FROM acfp a JOIN np n USING (event_type_norm)
-           |  WHERE a.acf IS NOT NULL AND n.n_days > a.lag
-           |  GROUP BY 1),
-           |q AS (
-           |  SELECT n.event_type_norm, n.n_days,
-           |    CAST(COALESCE(ag.nl, 0) AS BIGINT) AS n_lags,
-           |    CASE WHEN COALESCE(ag.nl, 0) = 6 THEN
-           |      CAST(n.n_days AS DOUBLE) * CAST(n.n_days + 2 AS DOUBLE) * ag.s
-           |    END AS q_stat,
-           |    CAST(6 AS BIGINT) AS dof
-           |  FROM np n LEFT JOIN ag USING (event_type_norm)),
-           |p AS (
-           |  SELECT *,
-           |    FLOOR(EXP(-(q_stat / 2.0))
-           |      * ((0.5 * (q_stat / 2.0) + 1.0) * (q_stat / 2.0) + 1.0)
-           |      * 1e6) / 1e6 AS p_value
-           |  FROM q)
-           |SELECT event_type_norm, n_days, n_lags, q_stat, dof, p_value,
-           |  p_value > 0.05 AS white_noise
-           |FROM p""".stripMargin,
-
-      // AnalyticsPack.friedmanDow mirrored: integer day arithmetic
-      // against the 1970-01-05 Monday epoch for dow/week, complete
-      // blocks only, RANK+COUNT midranks, the /56 and /336 constants
-      // (k=7), tie-corrected chi2, the even-dof Poisson-sum tail.
-      "ana_friedman_dow" ->
-        s"""WITH byday AS (
-           |  SELECT event_type_norm, date_sk,
-           |    CAST(COALESCE(ROUND(SUM(CAST(value AS DECIMAL(18,2))), 2), 0) AS DOUBLE) AS y,
-           |    CAST(strptime(CAST(date_sk AS VARCHAR), '%Y%m%d') AS DATE) AS d
-           |  FROM ($validSql) WHERE date_sk IS NOT NULL
-           |  GROUP BY 1, 2),
-           |dw AS (
-           |  SELECT *,
-           |    ((CAST(d - DATE '1970-01-05' AS BIGINT) % 7) + 7) % 7 AS dow
-           |  FROM byday),
-           |wkd AS (SELECT *, d - CAST(dow AS INTEGER) AS wk FROM dw),
-           |complete AS (
-           |  SELECT event_type_norm, wk FROM wkd
-           |  GROUP BY 1, 2 HAVING COUNT(*) = 7),
-           |blocks AS (
-           |  SELECT w.* FROM wkd w JOIN complete USING (event_type_norm, wk)),
-           |ranked AS (
-           |  SELECT event_type_norm, wk, dow, y,
-           |    CAST(RANK() OVER (PARTITION BY event_type_norm, wk ORDER BY y) AS DOUBLE)
-           |      + CAST(COUNT(*) OVER (PARTITION BY event_type_norm, wk, y) - 1 AS DOUBLE) / 2.0
-           |      AS midrank
-           |  FROM blocks),
-           |rj AS (
-           |  SELECT event_type_norm, dow, SUM(midrank) AS rj
-           |  FROM ranked GROUP BY 1, 2),
-           |r2 AS (
-           |  SELECT event_type_norm, SUM(rj * rj) AS sum_r2
-           |  FROM rj GROUP BY 1),
-           |bp AS (
-           |  SELECT event_type_norm, CAST(COUNT(*) AS BIGINT) AS n_blocks
-           |  FROM complete GROUP BY 1),
-           |tie AS (
-           |  SELECT event_type_norm,
-           |    CAST(SUM(t * t * t - t) AS BIGINT) AS tie_sum
-           |  FROM (SELECT event_type_norm, wk, y, CAST(COUNT(*) AS BIGINT) AS t
-           |        FROM blocks GROUP BY 1, 2, 3)
-           |  GROUP BY 1),
-           |j AS (
-           |  SELECT b.event_type_norm, b.n_blocks,
-           |    CAST(7 AS BIGINT) AS k_treatments,
-           |    12.0 / CAST(b.n_blocks * 56 AS DOUBLE) * r.sum_r2
-           |      - 3.0 * CAST(b.n_blocks AS DOUBLE) * 8.0 AS chi2_raw,
-           |    1.0 - CAST(t.tie_sum AS DOUBLE)
-           |      / CAST(b.n_blocks * 336 AS DOUBLE) AS tie_correction
-           |  FROM bp b JOIN r2 r USING (event_type_norm)
-           |  JOIN tie t USING (event_type_norm)),
-           |c AS (
-           |  SELECT *,
-           |    CASE WHEN tie_correction > 0 THEN chi2_raw / tie_correction END
-           |      AS chi2_stat,
-           |    CAST(6 AS BIGINT) AS dof
-           |  FROM j),
-           |p AS (
-           |  SELECT *,
-           |    FLOOR(EXP(-(chi2_stat / 2.0))
-           |      * ((0.5 * (chi2_stat / 2.0) + 1.0) * (chi2_stat / 2.0) + 1.0)
-           |      * 1e6) / 1e6 AS p_value
-           |  FROM c)
-           |SELECT event_type_norm, n_blocks, k_treatments, chi2_raw,
-           |  tie_correction, chi2_stat, dof, p_value,
-           |  p_value <= 0.05 AS seasonal_5pct
-           |FROM p""".stripMargin,
-
-      // AnalyticsPack.mannKendall mirrored: byday collapse, the
-      // panel^2 day-pair sign sum, exact integer tie terms, the /18
-      // variance, continuity-corrected z and the Horner erfc p.
-      "ana_mann_kendall" ->
-        s"""WITH byday AS (
-           |  SELECT event_type_norm, date_sk,
-           |    CAST(COALESCE(ROUND(SUM(CAST(value AS DECIMAL(18,2))), 2), 0) AS DOUBLE) AS y,
-           |    CAST(strptime(CAST(date_sk AS VARCHAR), '%Y%m%d') AS DATE) AS d
-           |  FROM ($validSql) WHERE date_sk IS NOT NULL
-           |  GROUP BY 1, 2),
-           |sp AS (
-           |  SELECT a.event_type_norm,
-           |    CAST(SUM(CASE WHEN b.y > a.y THEN 1
-           |                  WHEN b.y < a.y THEN -1 ELSE 0 END) AS BIGINT) AS s_stat
-           |  FROM byday a JOIN byday b
-           |    ON a.event_type_norm = b.event_type_norm AND a.d < b.d
-           |  GROUP BY 1),
-           |np AS (
-           |  SELECT event_type_norm, CAST(COUNT(*) AS BIGINT) AS n_days
-           |  FROM byday GROUP BY 1),
-           |tp AS (
-           |  SELECT event_type_norm,
-           |    CAST(SUM(t * (t - 1) * (2 * t + 5)) AS BIGINT) AS tie_term
-           |  FROM (SELECT event_type_norm, CAST(COUNT(*) AS BIGINT) AS t
-           |        FROM byday GROUP BY event_type_norm, y)
-           |  GROUP BY 1),
-           |j AS (
-           |  SELECT n.event_type_norm, n.n_days, s.s_stat,
-           |    CAST(n.n_days * (n.n_days - 1) * (2 * n.n_days + 5)
-           |      - tp.tie_term AS DOUBLE) / 18.0 AS var_s
-           |  FROM np n LEFT JOIN sp s USING (event_type_norm)
-           |  LEFT JOIN tp USING (event_type_norm)),
-           |z AS (
-           |  SELECT *,
-           |    CASE WHEN var_s > 0 THEN
-           |      CASE WHEN s_stat > 0 THEN CAST(s_stat - 1 AS DOUBLE) / SQRT(var_s)
-           |           WHEN s_stat < 0 THEN CAST(s_stat + 1 AS DOUBLE) / SQRT(var_s)
-           |           ELSE 0.0 END
-           |    END AS z_score
-           |  FROM j),
-           |px AS (SELECT *, ABS(z_score) / 1.4142135623730951 AS x FROM z),
-           |pt AS (SELECT *, 1.0 / (1.0 + 0.3275911 * x) AS t FROM px),
-           |pp AS (
-           |  SELECT *,
-           |    FLOOR(((((1.061405429 * t - 1.453152027) * t + 1.421413741) * t
-           |      - 0.284496736) * t + 0.254829592) * t * EXP(-(x * x)) * 1e6) / 1e6
-           |      AS p_value
-           |  FROM pt)
-           |SELECT event_type_norm, n_days, s_stat, var_s, z_score, p_value,
-           |  CASE WHEN p_value IS NULL THEN NULL
-           |       WHEN p_value <= 0.05 AND s_stat > 0 THEN 'increasing'
-           |       WHEN p_value <= 0.05 AND s_stat < 0 THEN 'decreasing'
-           |       ELSE 'no_trend' END AS trend
-           |FROM pp""".stripMargin,
-
-      // AnalyticsPack.runsTest mirrored: same byday collapse,
-      // quantile_cont median (the exactQuantilesBy parity), ties
-      // dropped, LAG-window run starts, exact run-count moments and
-      // the A&S Horner erfc p gridded at 1e-6.
-      "ana_runs_test" ->
-        s"""WITH byday AS (
-           |  SELECT event_type_norm, date_sk,
-           |    CAST(COALESCE(ROUND(SUM(CAST(value AS DECIMAL(18,2))), 2), 0) AS DOUBLE) AS y,
-           |    CAST(strptime(CAST(date_sk AS VARCHAR), '%Y%m%d') AS DATE) AS d
-           |  FROM ($validSql) WHERE date_sk IS NOT NULL
-           |  GROUP BY 1, 2),
-           |med AS (
-           |  SELECT event_type_norm, quantile_cont(y, 0.5) AS med
-           |  FROM byday GROUP BY 1),
-           |signed AS (
-           |  SELECT b.event_type_norm, b.d, b.y > m.med AS up
-           |  FROM byday b JOIN med m USING (event_type_norm)
-           |  WHERE b.y <> m.med),
-           |runsrc AS (
-           |  SELECT event_type_norm, up,
-           |    CASE WHEN LAG(up) OVER (PARTITION BY event_type_norm ORDER BY d) IS NULL
-           |           OR LAG(up) OVER (PARTITION BY event_type_norm ORDER BY d) <> up
-           |         THEN 1 ELSE 0 END AS new_run
-           |  FROM signed),
-           |g AS (
-           |  SELECT event_type_norm,
-           |    CAST(SUM(CASE WHEN up THEN 1 ELSE 0 END) AS BIGINT) AS n_above,
-           |    CAST(SUM(CASE WHEN up THEN 0 ELSE 1 END) AS BIGINT) AS n_below,
-           |    CAST(SUM(new_run) AS BIGINT) AS n_runs
-           |  FROM runsrc GROUP BY 1),
-           |mo AS (
-           |  SELECT *,
-           |    2.0 * CAST(n_above AS DOUBLE) * CAST(n_below AS DOUBLE)
-           |      / CAST(n_above + n_below AS DOUBLE) + 1.0 AS expected_runs
-           |  FROM g),
-           |vz AS (
-           |  SELECT *,
-           |    (expected_runs - 1.0) * (expected_runs - 2.0)
-           |      / (CAST(n_above + n_below AS DOUBLE) - 1.0) AS variance
-           |  FROM mo),
-           |z AS (
-           |  SELECT event_type_norm, n_above, n_below, n_runs, expected_runs,
-           |    CASE WHEN n_above > 0 AND n_below > 0 AND variance > 0 THEN
-           |      (CAST(n_runs AS DOUBLE) - expected_runs) / SQRT(variance)
-           |    END AS z_score
-           |  FROM vz),
-           |px AS (SELECT *, ABS(z_score) / 1.4142135623730951 AS x FROM z),
-           |pt AS (SELECT *, 1.0 / (1.0 + 0.3275911 * x) AS t FROM px),
-           |pp AS (
-           |  SELECT *,
-           |    FLOOR(((((1.061405429 * t - 1.453152027) * t + 1.421413741) * t
-           |      - 0.284496736) * t + 0.254829592) * t * EXP(-(x * x)) * 1e6) / 1e6
-           |      AS p_value
-           |  FROM pt)
-           |SELECT event_type_norm, n_above, n_below, n_runs, expected_runs,
-           |  z_score, p_value, p_value > 0.05 AS random_5pct
-           |FROM pp""".stripMargin,
-
-
-
-      // Split-conformal intervals: residuals ordered as exact
-      // DECIMAL(18,2), the ⌈0.8(n+1)⌉ rank in integer arithmetic,
-      // next-day anchors joined on the calendar.
-      "ana_forecast_conformal" ->
-        s"""WITH byday AS (
-           |  SELECT event_type_norm, date_sk,
-           |    CAST(COALESCE(ROUND(SUM(CAST(value AS DECIMAL(18,2))), 2), 0) AS DOUBLE) AS y,
-           |    CAST(strptime(CAST(date_sk AS VARCHAR), '%Y%m%d') AS DATE) AS d
-           |  FROM ($validSql) WHERE date_sk IS NOT NULL
-           |  GROUP BY 1, 2),
-           |joined AS (
-           |  SELECT b.event_type_norm, b.d, b.y, l1.y AS f_lag1, l7.y AS f_lag7
-           |  FROM byday b
-           |  LEFT JOIN byday l1 ON b.event_type_norm = l1.event_type_norm
-           |    AND b.d = l1.d + 1
-           |  LEFT JOIN byday l7 ON b.event_type_norm = l7.event_type_norm
-           |    AND b.d = l7.d + 7),
-           |longf AS (
-           |  SELECT event_type_norm, u.method, d, y,
-           |    CASE u.method WHEN 'naive_lag1' THEN f_lag1 ELSE f_lag7 END AS f
-           |  FROM joined,
-           |    (SELECT UNNEST(['naive_lag1', 'seasonal_lag7']) AS method) u),
-           |ev AS (SELECT event_type_norm, method, d,
-           |    CAST(ABS(y - f) AS DECIMAL(18,2)) AS abs_err_dec
-           |  FROM longf WHERE f IS NOT NULL),
-           |ranked AS (
-           |  SELECT event_type_norm, method, abs_err_dec,
-           |    ROW_NUMBER() OVER (PARTITION BY event_type_norm, method
-           |      ORDER BY abs_err_dec, d) AS rn,
-           |    COUNT(*) OVER (PARTITION BY event_type_norm, method) AS n_eval
-           |  FROM ev),
-           |groups AS (
-           |  SELECT event_type_norm, method,
-           |    CAST(MAX(n_eval) AS BIGINT) AS n_eval,
-           |    CAST(MAX((8 * (n_eval + 1) + 9) // 10) AS BIGINT) AS conf_rank
-           |  FROM ranked GROUP BY 1, 2),
-           |qsel AS (
-           |  SELECT event_type_norm, method, CAST(abs_err_dec AS DOUBLE) AS q_hat
-           |  FROM ranked WHERE rn = (8 * (n_eval + 1) + 9) // 10),
-           |anchor AS (
-           |  SELECT event_type_norm, MAX(d) AS last_d FROM byday GROUP BY 1),
-           |fnext AS (
-           |  SELECT a.event_type_norm, u.method,
-           |    CASE u.method WHEN 'naive_lag1' THEN p.y ELSE s.y END AS f_next
-           |  FROM anchor a
-           |  LEFT JOIN byday p ON a.event_type_norm = p.event_type_norm
-           |    AND p.d = a.last_d
-           |  LEFT JOIN byday s ON a.event_type_norm = s.event_type_norm
-           |    AND s.d + 6 = a.last_d,
-           |    (SELECT UNNEST(['naive_lag1', 'seasonal_lag7']) AS method) u)
-           |SELECT g.event_type_norm, g.method, g.n_eval, g.conf_rank,
-           |  q.q_hat, f.f_next,
-           |  f.f_next - q.q_hat AS lo, f.f_next + q.q_hat AS hi
-           |FROM groups g
-           |LEFT JOIN qsel q ON g.event_type_norm = q.event_type_norm
-           |  AND g.method = q.method
-           |LEFT JOIN fnext f ON g.event_type_norm = f.event_type_norm
-           |  AND g.method = f.method""".stripMargin,
-
-      // RFM replay: same panel collapse, quantile_cont thresholds
-      // (the percentile parity), identical CASE ladders.
-      "ana_rfm_segments" ->
-        """WITH base AS (
-          |  SELECT o_custkey AS custkey, CAST(o_orderdate AS DATE) AS d,
-          |    CAST(o_totalprice AS DECIMAL(18,2)) AS amt
-          |  FROM orders WHERE o_orderdate IS NOT NULL),
-          |anchor AS (SELECT MAX(d) AS anchor_d FROM base),
-          |rfm AS (
-          |  SELECT custkey,
-          |    CAST(MIN(anchor_d - d) AS BIGINT) AS recency_days,
-          |    CAST(COUNT(*) AS BIGINT) AS frequency,
-          |    CAST(SUM(amt) AS DOUBLE) AS monetary
-          |  FROM base, anchor GROUP BY 1),
-          |thr AS (
-          |  SELECT quantile_cont(recency_days, 0.25) AS r25,
-          |    quantile_cont(recency_days, 0.5) AS r50,
-          |    quantile_cont(recency_days, 0.75) AS r75,
-          |    quantile_cont(frequency, 0.25) AS f25,
-          |    quantile_cont(frequency, 0.5) AS f50,
-          |    quantile_cont(frequency, 0.75) AS f75,
-          |    quantile_cont(monetary, 0.25) AS m25,
-          |    quantile_cont(monetary, 0.5) AS m50,
-          |    quantile_cont(monetary, 0.75) AS m75
-          |  FROM rfm),
-          |scored AS (
-          |  SELECT custkey, recency_days, frequency, monetary,
-          |    CASE WHEN recency_days <= r25 THEN 4
-          |         WHEN recency_days <= r50 THEN 3
-          |         WHEN recency_days <= r75 THEN 2 ELSE 1 END AS r_score,
-          |    CASE WHEN frequency >= f75 THEN 4
-          |         WHEN frequency >= f50 THEN 3
-          |         WHEN frequency >= f25 THEN 2 ELSE 1 END AS f_score,
-          |    CASE WHEN monetary >= m75 THEN 4
-          |         WHEN monetary >= m50 THEN 3
-          |         WHEN monetary >= m25 THEN 2 ELSE 1 END AS m_score
-          |  FROM rfm, thr)
-          |SELECT custkey, recency_days, frequency, monetary,
-          |  r_score, f_score, m_score,
-          |  CASE WHEN r_score >= 4 AND f_score >= 4 AND m_score >= 4 THEN 'CHAMPION'
-          |       WHEN r_score >= 3 AND f_score >= 3 THEN 'LOYAL'
-          |       WHEN m_score >= 4 THEN 'BIG_SPENDER'
-          |       WHEN r_score <= 2 AND f_score >= 3 THEN 'AT_RISK'
-          |       WHEN r_score <= 1 AND f_score <= 2 THEN 'LOST'
-          |       ELSE 'REGULAR' END AS segment
-          |FROM scored""".stripMargin,
-
-      // Interval-union replay: running-max-hi sweep per customer
-      // (closed semantics: lo > prev max starts a block), blocks
-      // collapse to (min lo, max hi), exact long lengths, raw quotient.
-      "ana_interval_union" ->
-        """WITH ivd AS (
-          |  SELECT o_custkey AS custkey, o_orderkey AS ok,
-          |    CAST(o_orderdate AS DATE) AS lo_d,
-          |    MAX(CAST(l_shipdate AS DATE)) AS hi_d
-          |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-          |  GROUP BY 1, 2, 3
-          |  HAVING MAX(CAST(l_shipdate AS DATE)) >= CAST(o_orderdate AS DATE)),
-          |iv AS (
-          |  SELECT custkey,
-          |    CAST(lo_d - DATE '1970-01-01' AS BIGINT) AS lo,
-          |    CAST(hi_d - DATE '1970-01-01' AS BIGINT) AS hi
-          |  FROM ivd),
-          |m AS (
-          |  SELECT custkey, lo, hi,
-          |    CASE WHEN MAX(hi) OVER (PARTITION BY custkey ORDER BY lo, hi
-          |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) IS NULL
-          |      OR lo > MAX(hi) OVER (PARTITION BY custkey ORDER BY lo, hi
-          |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-          |    THEN 1 ELSE 0 END AS nb
-          |  FROM iv),
-          |blk AS (
-          |  SELECT custkey, lo, hi,
-          |    SUM(nb) OVER (PARTITION BY custkey ORDER BY lo, hi
-          |      ROWS UNBOUNDED PRECEDING) AS block
-          |  FROM m),
-          |g AS (
-          |  SELECT custkey, block, MIN(lo) AS b_lo, MAX(hi) AS b_hi,
-          |    CAST(COUNT(*) AS BIGINT) AS n_iv
-          |  FROM blk GROUP BY 1, 2),
-          |per AS (
-          |  SELECT custkey,
-          |    CAST(SUM(n_iv) AS BIGINT) AS n_intervals,
-          |    CAST(COUNT(*) AS BIGINT) AS n_blocks,
-          |    CAST(SUM(b_hi - b_lo + 1) AS BIGINT) AS covered_units,
-          |    CAST(MIN(b_lo) AS BIGINT) AS span_lo,
-          |    CAST(MAX(b_hi) AS BIGINT) AS span_hi
-          |  FROM g GROUP BY 1)
-          |SELECT custkey, n_intervals, n_blocks, covered_units, span_lo, span_hi,
-          |  CAST(span_hi - span_lo + 1 AS BIGINT) AS span_units,
-          |  CAST(covered_units AS DOUBLE) / CAST(span_hi - span_lo + 1 AS DOUBLE)
-          |    AS coverage_ratio
-          |FROM per""".stripMargin,
-
-      "ana_gini_demand" ->
-        s"""WITH perstop AS (
-           |  SELECT tipo_dia, user_id AS stop_code,
-           |    COALESCE(ROUND(SUM(CAST(value AS DECIMAL(18,2))), 2), 0) AS x
-           |  FROM ($validSql) WHERE user_id IS NOT NULL AND value IS NOT NULL
-           |  GROUP BY 1, 2),
-           |ranked AS (
-           |  SELECT tipo_dia, x,
-           |    CAST(ROW_NUMBER() OVER (PARTITION BY tipo_dia ORDER BY x, stop_code) AS BIGINT) AS i
-           |  FROM perstop),
-           |agg AS (
-           |  SELECT tipo_dia, COUNT(*) AS n_stops, SUM(x) AS total, SUM(i * x) AS wsum
-           |  FROM ranked GROUP BY 1)
-           |SELECT tipo_dia, n_stops,
-           |  CAST(total AS DOUBLE) AS total_demand,
-           |  CASE WHEN total > 0 THEN
-           |    CAST(2 * wsum - (n_stops + 1) * total AS DOUBLE)
-           |      / CAST(n_stops * total AS DOUBLE)
-           |  END AS gini
-           |FROM agg""".stripMargin,
-
-      "ana_theil_sen" ->
-        s"""WITH byday AS (
-           |  SELECT event_type_norm, date_sk,
-           |    CAST(COALESCE(ROUND(SUM(CAST(value AS DECIMAL(18,2))), 2), 0) AS DOUBLE) AS y
-           |  FROM ($validSql) WHERE date_sk IS NOT NULL
-           |  GROUP BY 1, 2),
-           |idx AS (
-           |  SELECT event_type_norm,
-           |    CAST(ROW_NUMBER() OVER (PARTITION BY event_type_norm ORDER BY date_sk) - 1 AS BIGINT) AS x,
-           |    y
-           |  FROM byday),
-           |sl AS (
-           |  SELECT a.event_type_norm AS event_type_norm, a.x AS xa, b.x AS xb,
-           |    FLOOR(((b.y - a.y) / CAST(b.x - a.x AS DOUBLE)) * 1e6) / 1e6 AS slope_q
-           |  FROM idx a JOIN idx b
-           |    ON a.event_type_norm = b.event_type_norm AND a.x < b.x),
-           |ranked AS (
-           |  SELECT event_type_norm, slope_q,
-           |    ROW_NUMBER() OVER (PARTITION BY event_type_norm ORDER BY slope_q, xa, xb) AS rn,
-           |    COUNT(*) OVER (PARTITION BY event_type_norm) AS m
-           |  FROM sl)
-           |SELECT event_type_norm, MAX(m) AS n_pairs,
-           |  SUM(slope_q) / COUNT(*) AS ts_slope
-           |FROM ranked
-           |WHERE rn = FLOOR((m + 1) / 2.0) OR rn = FLOOR((m + 2) / 2.0)
-           |GROUP BY 1""".stripMargin,
-
-      "ana_theil_sen_stop" ->
-        s"""WITH byday AS (
-           |  SELECT user_id, date_sk,
-           |    CAST(COALESCE(ROUND(SUM(CAST(value AS DECIMAL(18,2))), 2), 0) AS DOUBLE) AS y
-           |  FROM ($validSql) WHERE date_sk IS NOT NULL AND user_id IS NOT NULL
-           |  GROUP BY 1, 2),
-           |idx AS (
-           |  SELECT user_id,
-           |    CAST(ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY date_sk) - 1 AS BIGINT) AS x,
-           |    y
-           |  FROM byday),
-           |sl AS (
-           |  SELECT a.user_id AS user_id, a.x AS xa, b.x AS xb,
-           |    FLOOR(((b.y - a.y) / CAST(b.x - a.x AS DOUBLE)) * 1e6) / 1e6 AS slope_q
-           |  FROM idx a JOIN idx b
-           |    ON a.user_id = b.user_id AND a.x < b.x),
-           |ranked AS (
-           |  SELECT user_id, slope_q,
-           |    ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY slope_q, xa, xb) AS rn,
-           |    COUNT(*) OVER (PARTITION BY user_id) AS m
-           |  FROM sl)
-           |SELECT user_id, MAX(m) AS n_pairs,
-           |  SUM(slope_q) / COUNT(*) AS ts_slope
-           |FROM ranked
-           |WHERE rn = FLOOR((m + 1) / 2.0) OR rn = FLOOR((m + 2) / 2.0)
-           |GROUP BY 1""".stripMargin,
-
-      // Integer-ms gaps, quantile_cont percentile parity, exact mean.
-      "ana_interarrival" ->
-        """WITH base AS (
-          |  SELECT user_id, UPPER(TRIM(event_type)) AS event_type_norm,
-          |    epoch_ms(ts) AS ms, event_id
-          |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-          |gaps AS (
-          |  SELECT event_type_norm,
-          |    ms - LAG(ms) OVER (PARTITION BY user_id, event_type_norm
-          |      ORDER BY ms, event_id) AS gap_ms
-          |  FROM base)
-          |SELECT event_type_norm,
-          |  CAST(COUNT(*) AS BIGINT) AS n_gaps,
-          |  CAST(SUM(gap_ms) AS DOUBLE) / COUNT(*) AS mean_gap_ms,
-          |  quantile_cont(gap_ms, 0.5) AS p50_gap_ms,
-          |  quantile_cont(gap_ms, 0.9) AS p90_gap_ms,
-          |  quantile_cont(gap_ms, 0.99) AS p99_gap_ms
-          |FROM gaps WHERE gap_ms IS NOT NULL
-          |GROUP BY 1""".stripMargin,
-
-      "ana_quantile_normalize" ->
-        s"""WITH byday AS (
-           |  SELECT event_type_norm, date_sk,
-           |    CAST(ROUND(SUM(CAST(value AS DECIMAL(18,2))), 2) AS DOUBLE) AS y
-           |  FROM ($validSql) WHERE date_sk IS NOT NULL
-           |  GROUP BY 1, 2),
-           |ranked AS (
-           |  SELECT event_type_norm, date_sk, y,
-           |    CAST(ROW_NUMBER() OVER (PARTITION BY event_type_norm
-           |      ORDER BY y, date_sk) AS INTEGER) AS rank
-           |  FROM byday),
-           |refs AS (
-           |  SELECT rank,
-           |    ROUND(CAST(SUM(CAST(y AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*), 4) AS y_qnorm,
-           |    COUNT(*) AS n_groups
-           |  FROM ranked GROUP BY 1)
-           |SELECT event_type_norm, date_sk, y, rank, n_groups, y_qnorm
-           |FROM ranked JOIN refs USING (rank)""".stripMargin,
-
-      // DiD: same md5 split as the A/B oracles, calendar split at
-      // 20240115, 4dp money means, fixed subtraction order.
-      "ana_did" ->
-        s"""WITH ev AS (
-           |  SELECT user_id, value, date_sk,
-           |    CASE WHEN substr(md5(concat_ws('|', CAST(user_id AS VARCHAR))), 1, 4) < '8000'
-           |         THEN 'T' ELSE 'C' END AS split
-           |  FROM ($validSql) WHERE user_id IS NOT NULL),
-           |agg AS (
-           |  SELECT
-           |    COUNT(CASE WHEN split = 'T' AND date_sk < 20240115 THEN 1 END) AS n_treat_pre,
-           |    ROUND(CAST(SUM(CASE WHEN split = 'T' AND date_sk < 20240115 THEN CAST(value AS DECIMAL(18,2)) END) AS DOUBLE)
-           |      / NULLIF(COUNT(CASE WHEN split = 'T' AND date_sk < 20240115 THEN 1 END), 0), 4) AS mean_treat_pre,
-           |    COUNT(CASE WHEN split = 'T' AND date_sk >= 20240115 THEN 1 END) AS n_treat_post,
-           |    ROUND(CAST(SUM(CASE WHEN split = 'T' AND date_sk >= 20240115 THEN CAST(value AS DECIMAL(18,2)) END) AS DOUBLE)
-           |      / NULLIF(COUNT(CASE WHEN split = 'T' AND date_sk >= 20240115 THEN 1 END), 0), 4) AS mean_treat_post,
-           |    COUNT(CASE WHEN split = 'C' AND date_sk < 20240115 THEN 1 END) AS n_ctrl_pre,
-           |    ROUND(CAST(SUM(CASE WHEN split = 'C' AND date_sk < 20240115 THEN CAST(value AS DECIMAL(18,2)) END) AS DOUBLE)
-           |      / NULLIF(COUNT(CASE WHEN split = 'C' AND date_sk < 20240115 THEN 1 END), 0), 4) AS mean_ctrl_pre,
-           |    COUNT(CASE WHEN split = 'C' AND date_sk >= 20240115 THEN 1 END) AS n_ctrl_post,
-           |    ROUND(CAST(SUM(CASE WHEN split = 'C' AND date_sk >= 20240115 THEN CAST(value AS DECIMAL(18,2)) END) AS DOUBLE)
-           |      / NULLIF(COUNT(CASE WHEN split = 'C' AND date_sk >= 20240115 THEN 1 END), 0), 4) AS mean_ctrl_post
-           |  FROM ev)
-           |SELECT agg.*,
-           |  (mean_treat_post - mean_treat_pre) - (mean_ctrl_post - mean_ctrl_pre) AS did_estimate
-           |FROM agg""".stripMargin,
-
-      // Skyline replay: the declarative dominance form (per-x maxima
-      // + the strictly-below-x running max) — two different
-      // algorithms, identical rows; comparisons only, no arithmetic.
-      "ana_skyline_parts" ->
-        """WITH pts AS (
-          |  SELECT p_partkey AS id, p_retailprice AS x, CAST(p_size AS BIGINT) AS y
-          |  FROM part WHERE p_retailprice IS NOT NULL AND p_size IS NOT NULL),
-          |panel AS (
-          |  SELECT x, MAX(y) AS max_y_at_x FROM pts GROUP BY 1),
-          |panel2 AS (
-          |  SELECT x, max_y_at_x,
-          |    MAX(max_y_at_x) OVER (ORDER BY x
-          |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS max_y_below_x
-          |  FROM panel)
-          |SELECT p.id, p.x, p.y, q.max_y_at_x, q.max_y_below_x,
-          |  NOT ((q.max_y_below_x IS NOT NULL AND q.max_y_below_x >= p.y)
-          |       OR q.max_y_at_x > p.y) AS is_skyline
-          |FROM pts p JOIN panel2 q ON q.x = p.x""".stripMargin,
-
-      // CUPED replay: the same md5 split, per-user pre/post money
-      // sums narrowed to DECIMAL(18,2), pooled theta from exact
-      // decimal moments in the Spark op order, adjusted values on the
-      // 1e-6 floor grid before their DECIMAL(28,6) partials.
-      "ana_cuped" ->
-        s"""WITH ev AS (
-           |  SELECT user_id, value, date_sk,
-           |    CASE WHEN substr(md5(concat_ws('|', CAST(user_id AS VARCHAR))), 1, 4) < '8000'
-           |         THEN 'A' ELSE 'B' END AS split
-           |  FROM ($validSql) WHERE user_id IS NOT NULL),
-           |users AS (
-           |  SELECT user_id, split AS arm,
-           |    CAST(COALESCE(SUM(CASE WHEN date_sk < 20240115 THEN CAST(value AS DECIMAL(18,2)) END), 0) AS DECIMAL(18,2)) AS x,
-           |    CAST(COALESCE(SUM(CASE WHEN NOT (date_sk < 20240115) THEN CAST(value AS DECIMAL(18,2)) END), 0) AS DECIMAL(18,2)) AS y
-           |  FROM ev GROUP BY 1, 2),
-           |pooled AS (
-           |  SELECT
-           |    CAST(CAST(CAST(SUM(x) AS DECIMAL(28,2)) * 100 AS BIGINT) AS DOUBLE) / 1e2 / CAST(COUNT(*) AS DOUBLE) AS mean_x,
-           |    (CAST(CAST(CAST(SUM(CAST(x * y AS DECIMAL(28,4))) AS DECIMAL(28,4)) * 10000 AS BIGINT) AS DOUBLE) / 1e4
-           |       - CAST(CAST(CAST(SUM(x) AS DECIMAL(28,2)) * 100 AS BIGINT) AS DOUBLE) / 1e2 * (CAST(CAST(CAST(SUM(y) AS DECIMAL(28,2)) * 100 AS BIGINT) AS DOUBLE) / 1e2) / CAST(COUNT(*) AS DOUBLE))
-           |      / NULLIF(CAST(CAST(CAST(SUM(CAST(x * x AS DECIMAL(28,4))) AS DECIMAL(28,4)) * 10000 AS BIGINT) AS DOUBLE) / 1e4
-           |       - CAST(CAST(CAST(SUM(x) AS DECIMAL(28,2)) * 100 AS BIGINT) AS DOUBLE) / 1e2 * (CAST(CAST(CAST(SUM(x) AS DECIMAL(28,2)) * 100 AS BIGINT) AS DOUBLE) / 1e2) / CAST(COUNT(*) AS DOUBLE), 0) AS theta
-           |  FROM users),
-           |adj AS (
-           |  SELECT u.arm, u.x, u.y, p.theta,
-           |    FLOOR((CAST(u.y AS DOUBLE) - p.theta * (CAST(u.x AS DOUBLE) - p.mean_x)) * 1e6) / 1e6 AS ya
-           |  FROM users u CROSS JOIN pooled p),
-           |arms AS (
-           |  SELECT arm, COUNT(*) AS n_users, MIN(theta) AS theta,
-           |    CAST(CAST(CAST(SUM(y) AS DECIMAL(28,2)) * 100 AS BIGINT) AS DOUBLE) / 1e2 AS sy,
-           |    CAST(CAST(CAST(SUM(CAST(y * y AS DECIMAL(28,4))) AS DECIMAL(28,4)) * 10000 AS BIGINT) AS DOUBLE) / 1e4 AS syy,
-           |    CAST(CAST(CAST(SUM(CAST(ya AS DECIMAL(28,6))) AS DECIMAL(28,6)) * 1000000 AS BIGINT) AS DOUBLE) / 1e6 AS sa,
-           |    CAST(CAST(CAST(SUM(CAST(FLOOR(ya * ya * 1e6) / 1e6 AS DECIMAL(28,6))) AS DECIMAL(28,6)) * 1000000 AS BIGINT) AS DOUBLE) / 1e6 AS saa,
-           |    CAST(COUNT(*) AS DOUBLE) AS nd
-           |  FROM adj GROUP BY 1),
-           |panel AS (
-           |  SELECT arm, n_users, theta,
-           |    sy / nd AS mean_raw, sa / nd AS mean_adj,
-           |    (syy - sy * sy / nd) / nd AS var_raw,
-           |    (saa - sa * sa / nd) / nd AS var_adj
-           |  FROM arms)
-           |SELECT arm, n_users, theta, mean_raw, mean_adj, var_raw, var_adj,
-           |  1.0 - var_adj / NULLIF(var_raw, 0) AS var_reduction
-           |FROM panel""".stripMargin,
-
-      "ana_trend_slope" ->
-        s"""WITH byday AS (
-           |  SELECT event_type_norm, date_sk,
-           |    CAST(COALESCE(ROUND(SUM(CAST(value AS DECIMAL(18,2))), 2), 0) AS DOUBLE) AS y
-           |  FROM ($validSql) WHERE date_sk IS NOT NULL
-           |  GROUP BY 1, 2),
-           |idx AS (
-           |  SELECT event_type_norm,
-           |    CAST(ROW_NUMBER() OVER (PARTITION BY event_type_norm ORDER BY date_sk) - 1 AS BIGINT) AS x,
-           |    y
-           |  FROM byday),
-           |moms AS (
-           |  SELECT event_type_norm, COUNT(*) AS n_days,
-           |    CAST(SUM(x) AS BIGINT) AS sx,
-           |    SUM(CAST(y AS DECIMAL(28,6))) AS sy,
-           |    SUM(CAST(CAST(x AS DOUBLE) * y AS DECIMAL(28,6))) AS sxy,
-           |    CAST(SUM(x * x) AS BIGINT) AS sxx
-           |  FROM idx GROUP BY 1),
-           |sl AS (
-           |  SELECT event_type_norm, n_days, sx, sy,
-           |    (n_days * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-           |      / NULLIF(n_days * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE), 0) AS slope
-           |  FROM moms)
-           |SELECT event_type_norm, n_days, slope,
-           |  (CAST(sy AS DOUBLE) - slope * CAST(sx AS DOUBLE)) / n_days AS intercept
-           |FROM sl""".stripMargin,
-
-      "ana_changepoint_cusum" ->
-        s"""WITH byday AS (
-           |  SELECT date_sk,
-           |    CAST(COALESCE(ROUND(SUM(CAST(value AS DECIMAL(18,2))), 2), 0) AS DOUBLE) AS daily_value
-           |  FROM ($validSql) WHERE date_sk IS NOT NULL
-           |  GROUP BY 1),
-           |st AS (
-           |  SELECT CAST(SUM(CAST(daily_value AS DECIMAL(28,6))) AS DOUBLE) / COUNT(*) AS mean_value
-           |  FROM byday),
-           |dev AS (
-           |  SELECT date_sk, daily_value, daily_value - mean_value AS deviation
-           |  FROM byday CROSS JOIN st),
-           |cum AS (
-           |  SELECT *, CAST(SUM(CAST(floor(deviation * 1e6) / 1e6 AS DECIMAL(28,6)))
-           |      OVER (ORDER BY date_sk) AS DOUBLE) AS cusum
-           |  FROM dev),
-           |pk AS (SELECT MAX(abs(cusum)) AS max_abs FROM cum)
-           |SELECT date_sk, daily_value, deviation, cusum,
-           |  abs(cusum) = max_abs AS is_changepoint
-           |FROM cum CROSS JOIN pk""".stripMargin,
-
-      // AnalyticsPack.changepointBinseg mirrored: same byday panel as
-      // cusum, day-ordered DECIMAL prefix sums, the prefix-sum SSE
-      // identity as the identical double expression tree, argmax by
-      // exact-double equality.
-      "ana_changepoint_binseg" ->
-        s"""WITH byday AS (
-           |  SELECT date_sk,
-           |    CAST(COALESCE(ROUND(SUM(CAST(value AS DECIMAL(18,2))), 2), 0) AS DOUBLE) AS daily_value
-           |  FROM ($validSql) WHERE date_sk IS NOT NULL
-           |  GROUP BY 1),
-           |pre AS (
-           |  SELECT date_sk,
-           |    CAST(SUM(CAST(daily_value AS DECIMAL(28,6)))
-           |      OVER (ORDER BY date_sk) AS DOUBLE) AS sl,
-           |    COUNT(*) OVER (ORDER BY date_sk) AS n_left
-           |  FROM byday),
-           |tot AS (
-           |  SELECT CAST(SUM(CAST(daily_value AS DECIMAL(28,6))) AS DOUBLE) AS s,
-           |    COUNT(*) AS n
-           |  FROM byday),
-           |g AS (
-           |  SELECT date_sk, n_left, n - n_left AS n_right, sl, s - sl AS sr, s, n
-           |  FROM pre CROSS JOIN tot
-           |  WHERE n - n_left > 0),
-           |gains AS (
-           |  SELECT date_sk AS split_after_date_sk,
-           |    CAST(n_left AS BIGINT) AS n_left,
-           |    CAST(n_right AS BIGINT) AS n_right,
-           |    sl / CAST(n_left AS DOUBLE) AS mean_left,
-           |    sr / CAST(n_right AS DOUBLE) AS mean_right,
-           |    sl * sl / CAST(n_left AS DOUBLE)
-           |      + sr * sr / CAST(n_right AS DOUBLE)
-           |      - s * s / CAST(n AS DOUBLE) AS sse_reduction
-           |  FROM g),
-           |best AS (SELECT MAX(sse_reduction) AS b FROM gains)
-           |SELECT split_after_date_sk, n_left, n_right, mean_left, mean_right,
-           |  sse_reduction, sse_reduction = b AS is_split
-           |FROM gains CROSS JOIN best""".stripMargin,
-
-      // Recursive-CTE replay of the EWMA fold: every step is two
-      // correctly-rounded IEEE ops on dyadic constants (0.25e0 /
-      // 0.75e0 force DOUBLE literals — a bare 0.25 parses as DECIMAL
-      // in DuckDB and would change the arithmetic).
-      // Composition of the Holt walk (validSql day panel) and the F27
-      // seasonal panel (raw-events day panel) — both replayed as in
-      // their own oracles, joined on the NEXT day's iso weekday.
-      "ana_seasonal_forecast" ->
-        s"""WITH RECURSIVE byday AS (
-           |  SELECT date_sk,
-           |    CAST(COALESCE(ROUND(SUM(CAST(value AS DECIMAL(18,2))), 2), 0) AS DOUBLE) AS daily_value
-           |  FROM ($validSql) WHERE date_sk IS NOT NULL
-           |  GROUP BY 1),
-           |idx AS (
-           |  SELECT date_sk, daily_value,
-           |    ROW_NUMBER() OVER (ORDER BY date_sk) AS rn
-           |  FROM byday),
-           |walk(rn, date_sk, daily_value, level, trend) AS (
-           |  SELECT rn, date_sk, daily_value, daily_value, 0e0 FROM idx WHERE rn = 1
-           |  UNION ALL
-           |  SELECT i.rn, i.date_sk, i.daily_value,
-           |    0.25e0 * i.daily_value + 0.75e0 * (w.level + w.trend),
-           |    0.125e0 * ((0.25e0 * i.daily_value + 0.75e0 * (w.level + w.trend)) - w.level)
-           |      + 0.875e0 * w.trend
-           |  FROM idx i JOIN walk w ON i.rn = w.rn + 1),
-           |daily AS (
-           |  SELECT CAST(ts AS DATE) AS day, SUM(CAST(value AS DECIMAL(18,2))) AS dem
-           |  FROM events WHERE ts IS NOT NULL GROUP BY 1),
-           |d2 AS (SELECT *, CAST(isodow(day) AS INTEGER) AS iso_dow FROM daily),
-           |tr AS (
-           |  SELECT *, CASE WHEN COUNT(*) OVER wd = 7
-           |    THEN CAST(SUM(dem) OVER wd AS DOUBLE) / 7.0 END AS trend_ma
-           |  FROM d2 WINDOW wd AS (ORDER BY day ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)),
-           |se AS (
-           |  SELECT iso_dow,
-           |    CAST(SUM(CAST(floor((CAST(dem AS DOUBLE) - trend_ma) * 1e6) / 1e6
-           |      AS DECIMAL(28,6))) AS DOUBLE) / COUNT(*) AS seasonal
-           |  FROM tr WHERE trend_ma IS NOT NULL GROUP BY 1)
-           |SELECT w.date_sk, w.daily_value, w.level, w.trend,
-           |  CAST(strptime(CAST(w.date_sk AS VARCHAR), '%Y%m%d') AS DATE) + 1 AS next_day,
-           |  w.level + w.trend AS trend_forecast,
-           |  CASE WHEN se.seasonal IS NOT NULL THEN w.level + w.trend + se.seasonal END AS seasonal_forecast
-           |FROM walk w
-           |LEFT JOIN se ON se.iso_dow = CAST(isodow(
-           |  CAST(strptime(CAST(w.date_sk AS VARCHAR), '%Y%m%d') AS DATE) + 1) AS INTEGER)""".stripMargin,
-
-      // Holt recursion replayed with the NEW level's formula repeated
-      // inside the trend term — identical op order to the Spark fold.
-      // Model-evaluation replay: both recursive walks, LEAD for the
-      // next observed actual, grid-quantized error partials.
-      "ana_forecast_eval_models" ->
-        s"""WITH RECURSIVE byday AS (
-           |  SELECT date_sk,
-           |    CAST(COALESCE(ROUND(SUM(CAST(value AS DECIMAL(18,2))), 2), 0) AS DOUBLE) AS daily_value
-           |  FROM ($validSql) WHERE date_sk IS NOT NULL
-           |  GROUP BY 1),
-           |idx AS (
-           |  SELECT date_sk, daily_value,
-           |    ROW_NUMBER() OVER (ORDER BY date_sk) AS rn
-           |  FROM byday),
-           |hwalk(rn, date_sk, daily_value, level, trend) AS (
-           |  SELECT rn, date_sk, daily_value, daily_value, 0e0 FROM idx WHERE rn = 1
-           |  UNION ALL
-           |  SELECT i.rn, i.date_sk, i.daily_value,
-           |    0.25e0 * i.daily_value + 0.75e0 * (w.level + w.trend),
-           |    0.125e0 * ((0.25e0 * i.daily_value + 0.75e0 * (w.level + w.trend)) - w.level)
-           |      + 0.875e0 * w.trend
-           |  FROM idx i JOIN hwalk w ON i.rn = w.rn + 1),
-           |wwalk(rn, date_sk, daily_value, level, trend, forecast_next, hist) AS (
-           |  SELECT rn, date_sk, daily_value, daily_value, 0e0, daily_value,
-           |    [0e0, 0e0, 0e0, 0e0, 0e0, 0e0, 0e0]
-           |  FROM idx WHERE rn = 1
-           |  UNION ALL
-           |  SELECT i.rn, i.date_sk, i.daily_value,
-           |    0.25e0 * (i.daily_value - w.hist[1]) + 0.75e0 * (w.level + w.trend),
-           |    0.125e0 * ((0.25e0 * (i.daily_value - w.hist[1]) + 0.75e0 * (w.level + w.trend)) - w.level)
-           |      + 0.875e0 * w.trend,
-           |    (0.25e0 * (i.daily_value - w.hist[1]) + 0.75e0 * (w.level + w.trend))
-           |      + (0.125e0 * ((0.25e0 * (i.daily_value - w.hist[1]) + 0.75e0 * (w.level + w.trend)) - w.level)
-           |         + 0.875e0 * w.trend)
-           |      + w.hist[2],
-           |    w.hist[2:7] ||
-           |      [0.25e0 * (i.daily_value - (0.25e0 * (i.daily_value - w.hist[1]) + 0.75e0 * (w.level + w.trend)))
-           |       + 0.75e0 * w.hist[1]]
-           |  FROM idx i JOIN wwalk w ON i.rn = w.rn + 1),
-           |hev AS (
-           |  SELECT daily_value, level + trend AS forecast_next,
-           |    LEAD(daily_value, 1) OVER (ORDER BY date_sk) AS actual_next
-           |  FROM hwalk),
-           |wev AS (
-           |  SELECT daily_value, forecast_next,
-           |    LEAD(daily_value, 1) OVER (ORDER BY date_sk) AS actual_next
-           |  FROM wwalk)
-           |SELECT 'holt_linear' AS method,
-           |  CAST(COUNT(*) AS BIGINT) AS n_eval,
-           |  CAST(SUM(CAST(FLOOR(ABS(actual_next - forecast_next) * 1e6) / 1e6 AS DECIMAL(28,6))) AS DOUBLE)
-           |    / COUNT(*) AS mae,
-           |  CAST(SUM(CAST(FLOOR((actual_next - forecast_next) * 1e6) / 1e6 AS DECIMAL(28,6))) AS DOUBLE)
-           |    / COUNT(*) AS bias,
-           |  CAST(SUM(CASE WHEN actual_next <> 0 THEN
-           |      CAST(FLOOR(ABS(actual_next - forecast_next) / actual_next * 1e6) / 1e6 AS DECIMAL(28,6)) END) AS DOUBLE)
-           |    / SUM(CASE WHEN actual_next <> 0 THEN 1 END) AS mape
-           |FROM hev WHERE actual_next IS NOT NULL
-           |UNION ALL
-           |SELECT 'holt_winters',
-           |  CAST(COUNT(*) AS BIGINT),
-           |  CAST(SUM(CAST(FLOOR(ABS(actual_next - forecast_next) * 1e6) / 1e6 AS DECIMAL(28,6))) AS DOUBLE)
-           |    / COUNT(*),
-           |  CAST(SUM(CAST(FLOOR((actual_next - forecast_next) * 1e6) / 1e6 AS DECIMAL(28,6))) AS DOUBLE)
-           |    / COUNT(*),
-           |  CAST(SUM(CASE WHEN actual_next <> 0 THEN
-           |      CAST(FLOOR(ABS(actual_next - forecast_next) / actual_next * 1e6) / 1e6 AS DECIMAL(28,6)) END) AS DOUBLE)
-           |    / SUM(CASE WHEN actual_next <> 0 THEN 1 END)
-           |FROM wev WHERE actual_next IS NOT NULL""".stripMargin,
-
-      // Holt–Winters replay: the recursive walk carries the last
-      // seven seasonals as a LIST column (hist[1] = s_{t-7},
-      // hist[2] = s_{t-6}); the level formula is repeated textually
-      // inside the trend/seasonal/forecast terms (the Holt oracle's
-      // precedent) so the op order matches the fold bit-for-bit.
-      "ana_holt_winters" ->
-        s"""WITH RECURSIVE byday AS (
-           |  SELECT date_sk,
-           |    CAST(COALESCE(ROUND(SUM(CAST(value AS DECIMAL(18,2))), 2), 0) AS DOUBLE) AS daily_value
-           |  FROM ($validSql) WHERE date_sk IS NOT NULL
-           |  GROUP BY 1),
-           |idx AS (
-           |  SELECT date_sk, daily_value,
-           |    ROW_NUMBER() OVER (ORDER BY date_sk) AS rn
-           |  FROM byday),
-           |walk(rn, date_sk, daily_value, level, trend, seasonal, forecast_next, hist) AS (
-           |  SELECT rn, date_sk, daily_value, daily_value, 0e0, 0e0, daily_value,
-           |    [0e0, 0e0, 0e0, 0e0, 0e0, 0e0, 0e0]
-           |  FROM idx WHERE rn = 1
-           |  UNION ALL
-           |  SELECT i.rn, i.date_sk, i.daily_value,
-           |    0.25e0 * (i.daily_value - w.hist[1]) + 0.75e0 * (w.level + w.trend),
-           |    0.125e0 * ((0.25e0 * (i.daily_value - w.hist[1]) + 0.75e0 * (w.level + w.trend)) - w.level)
-           |      + 0.875e0 * w.trend,
-           |    0.25e0 * (i.daily_value - (0.25e0 * (i.daily_value - w.hist[1]) + 0.75e0 * (w.level + w.trend)))
-           |      + 0.75e0 * w.hist[1],
-           |    (0.25e0 * (i.daily_value - w.hist[1]) + 0.75e0 * (w.level + w.trend))
-           |      + (0.125e0 * ((0.25e0 * (i.daily_value - w.hist[1]) + 0.75e0 * (w.level + w.trend)) - w.level)
-           |         + 0.875e0 * w.trend)
-           |      + w.hist[2],
-           |    w.hist[2:7] ||
-           |      [0.25e0 * (i.daily_value - (0.25e0 * (i.daily_value - w.hist[1]) + 0.75e0 * (w.level + w.trend)))
-           |       + 0.75e0 * w.hist[1]]
-           |  FROM idx i JOIN walk w ON i.rn = w.rn + 1)
-           |SELECT date_sk, daily_value, level, trend, seasonal, forecast_next
-           |FROM walk""".stripMargin,
-
-      "ana_holt_linear" ->
-        s"""WITH RECURSIVE byday AS (
-           |  SELECT date_sk,
-           |    CAST(COALESCE(ROUND(SUM(CAST(value AS DECIMAL(18,2))), 2), 0) AS DOUBLE) AS daily_value
-           |  FROM ($validSql) WHERE date_sk IS NOT NULL
-           |  GROUP BY 1),
-           |idx AS (
-           |  SELECT date_sk, daily_value,
-           |    ROW_NUMBER() OVER (ORDER BY date_sk) AS rn
-           |  FROM byday),
-           |walk(rn, date_sk, daily_value, level, trend) AS (
-           |  SELECT rn, date_sk, daily_value, daily_value, 0e0 FROM idx WHERE rn = 1
-           |  UNION ALL
-           |  SELECT i.rn, i.date_sk, i.daily_value,
-           |    0.25e0 * i.daily_value + 0.75e0 * (w.level + w.trend),
-           |    0.125e0 * ((0.25e0 * i.daily_value + 0.75e0 * (w.level + w.trend)) - w.level)
-           |      + 0.875e0 * w.trend
-           |  FROM idx i JOIN walk w ON i.rn = w.rn + 1)
-           |SELECT date_sk, daily_value, level, trend,
-           |  level + trend AS forecast_next
-           |FROM walk""".stripMargin,
-
-      "ana_ewma_demand" ->
-        s"""WITH RECURSIVE byday AS (
-           |  SELECT date_sk,
-           |    CAST(COALESCE(ROUND(SUM(CAST(value AS DECIMAL(18,2))), 2), 0) AS DOUBLE) AS daily_value
-           |  FROM ($validSql) WHERE date_sk IS NOT NULL
-           |  GROUP BY 1),
-           |idx AS (
-           |  SELECT date_sk, daily_value,
-           |    ROW_NUMBER() OVER (ORDER BY date_sk) AS rn
-           |  FROM byday),
-           |walk(rn, date_sk, daily_value, ewma) AS (
-           |  SELECT rn, date_sk, daily_value, daily_value FROM idx WHERE rn = 1
-           |  UNION ALL
-           |  SELECT i.rn, i.date_sk, i.daily_value,
-           |    0.25e0 * i.daily_value + 0.75e0 * w.ewma
-           |  FROM idx i JOIN walk w ON i.rn = w.rn + 1)
-           |SELECT date_sk, daily_value, ewma FROM walk""".stripMargin,
-
-      "ana_daily_delta" ->
-        s"""WITH byday AS (
-           |  SELECT date_sk, tipo_dia,
-           |    COUNT(DISTINCT user_id) AS tarjetas_unicas,
-           |    COUNT(*) AS viajes_muestra,
-           |    CAST(COALESCE(ROUND(SUM(CAST(value AS DECIMAL(18,2))), 2), 0) AS DOUBLE) AS demanda_expandida
-           |  FROM ($validSql) WHERE date_sk IS NOT NULL
-           |  GROUP BY 1, 2)
-           |SELECT *,
-           |  ROUND(demanda_expandida - LAG(demanda_expandida) OVER (ORDER BY date_sk), 2)
-           |    AS delta_vs_dia_anterior
-           |FROM byday""".stripMargin,
-
-      "ana_pct_of_peak" ->
-        s"""WITH slots AS (
-           |  SELECT time_30m_sk,
-           |    CAST(ROUND(SUM(CAST(value AS DECIMAL(18,2))), 0) AS DOUBLE) AS en_transito
-           |  FROM ($validSql) WHERE tipo_dia = 'LABORAL'
-           |  GROUP BY time_30m_sk)
-           |SELECT time_30m_sk, en_transito,
-           |  ROUND(100.0 * en_transito / NULLIF(MAX(en_transito) OVER (), 0), 1) AS pct_del_pico
-           |FROM slots""".stripMargin,
-
-      "ana_deviation_buckets" ->
-        """WITH base AS (
-          |  SELECT *, l_extendedprice / NULLIF(l_quantity, 0) AS ratio
-          |  FROM lineitem
-          |  WHERE l_quantity >= 5 AND l_extendedprice IS NOT NULL)
-          |SELECT
-          |  CASE WHEN ratio < 1000 THEN 'Muy directo (<1000)'
-          |       WHEN ratio < 2000 THEN 'Directo (1000-2000)'
-          |       WHEN ratio < 3400 THEN 'Moderado (2000-3400)'
-          |       ELSE 'Alto desvio (>=3400)' END AS categoria_desvio,
-          |  COUNT(*) AS viajes,
-          |  ROUND(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / NULLIF(COUNT(*), 0), 1) AS precio_promedio,
-          |  ROUND(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / NULLIF(COUNT(*), 0), 2) AS qty_promedio,
-          |  ROUND(CAST(SUM(CAST(ratio AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*), 3) AS factor_desvio_promedio
-          |FROM base
-          |GROUP BY 1""".stripMargin,
-
-      "ana_user_mode_combos" ->
-        s"""WITH per_user AS (
-           |  SELECT user_id,
-           |    MAX(CASE WHEN event_type_norm = 'CLICK' THEN 1 ELSE 0 END) AS tiene_click,
-           |    MAX(CASE WHEN event_type_norm = 'VIEW' THEN 1 ELSE 0 END) AS tiene_view,
-           |    MAX(CASE WHEN event_type_norm = 'PURCHASE' THEN 1 ELSE 0 END) AS tiene_purchase,
-           |    COUNT(*) AS n_events
-           |  FROM ($validSql) WHERE user_id IS NOT NULL
-           |  GROUP BY user_id),
-           |seg AS (
-           |  SELECT
-           |    CASE WHEN tiene_purchase = 1 THEN 'Comprador'
-           |         WHEN tiene_click = 1 AND tiene_view = 1 THEN 'Click + View'
-           |         WHEN tiene_click = 1 THEN 'Solo Click'
-           |         WHEN tiene_view = 1 THEN 'Solo View'
-           |         ELSE 'Otra combinacion' END AS tipo_uso,
-           |    COUNT(*) AS usuarios,
-           |    ROUND(CAST(SUM(n_events) AS DOUBLE) / COUNT(*), 2) AS eventos_promedio,
-           |    ROUND(quantile_cont(n_events, 0.5), 1) AS eventos_mediana
-           |  FROM per_user GROUP BY 1)
-           |SELECT tipo_uso, usuarios, eventos_promedio, eventos_mediana,
-           |  ROUND(100.0 * usuarios / SUM(usuarios) OVER (), 2) AS pct_usuarios
-           |FROM seg""".stripMargin,
-
-      "ana_coverage_audit" ->
-        s"""SELECT event_type_norm AS mode_code, tipo_dia,
-           |  COUNT(*) AS total,
-           |  COUNT(prop_k) AS con_dato,
-           |  COUNT(*) - COUNT(prop_k) AS sin_dato,
-           |  ROUND(100.0 * COUNT(prop_k) / COUNT(*), 2) AS pct_con_dato,
-           |  ${avgD("CASE WHEN prop_k IS NOT NULL THEN CAST(value AS DECIMAL(18,2)) END",
-               "COUNT(CASE WHEN prop_k IS NOT NULL THEN value END)", 1)} AS valor_promedio_con_dato,
-           |  CASE WHEN ROUND(100.0 * COUNT(prop_k) / COUNT(*), 2) < 90.0
-           |       THEN 'INCUMPLE' ELSE 'OK' END AS estado
-           |FROM ($validSql)
-           |GROUP BY 1, 2""".stripMargin,
-
-      // AnalyticsPack.revenueCoverageGap mirrored: exact DECIMAL value
-      // sums, profile avg = one IEEE division, scale multiply, §6 gap
-      // split, §7 state machine, §8 opportunity measures.
-      "ana_revenue_coverage_gap" ->
-        s"""WITH ev AS MATERIALIZED (
-           |  SELECT event_type_norm AS mode_code, tipo_dia, date_sk,
-           |    CAST(value AS DECIMAL(18,2)) AS v
-           |  FROM ($validSql)
-           |  WHERE date_sk BETWEEN 20240105 AND 20240128 AND value IS NOT NULL),
-           |obs AS (
-           |  SELECT mode_code, tipo_dia,
-           |    CAST(COALESCE(ROUND(SUM(v), 2), 0) AS DOUBLE) AS validaciones
-           |  FROM ev GROUP BY 1, 2),
-           |db AS (
-           |  SELECT mode_code, tipo_dia, date_sk, SUM(v) AS day_total
-           |  FROM ev WHERE date_sk BETWEEN 20240105 AND 20240114
-           |  GROUP BY 1, 2, 3),
-           |prof AS (
-           |  SELECT mode_code, tipo_dia, SUM(day_total) AS base_total,
-           |    CAST(COUNT(*) AS BIGINT) AS n_dias_base
-           |  FROM db GROUP BY 1, 2),
-           |cal AS (
-           |  SELECT tipo_dia, CAST(COUNT(DISTINCT date_sk) AS BIGINT) AS n_dias
-           |  FROM ev GROUP BY 1),
-           |j AS (
-           |  SELECT o.mode_code, o.tipo_dia, o.validaciones,
-           |    p.n_dias_base, c.n_dias,
-           |    o.mode_code IN ('CLICK', 'PURCHASE') AS is_comp,
-           |    ROUND(CAST(p.base_total AS DOUBLE) / p.n_dias_base, 2)
-           |      AS subidas_diarias_base
-           |  FROM obs o
-           |  LEFT JOIN prof p ON p.mode_code = o.mode_code AND p.tipo_dia = o.tipo_dia
-           |  JOIN cal c ON c.tipo_dia = o.tipo_dia),
-           |k AS (
-           |  SELECT *, ROUND(subidas_diarias_base * n_dias, 2) AS pe0 FROM j),
-           |m AS (
-           |  SELECT *,
-           |    CASE WHEN is_comp AND pe0 > 0 THEN pe0 END AS pasajeros_estimados
-           |  FROM k),
-           |n AS (
-           |  SELECT *,
-           |    ROUND(validaciones / pasajeros_estimados, 4) AS cobertura,
-           |    ROUND(pasajeros_estimados - validaciones, 2) AS brecha_signed
-           |  FROM m),
-           |g AS (
-           |  SELECT *,
-           |    CASE WHEN brecha_signed IS NULL THEN NULL
-           |         WHEN brecha_signed > 0 THEN brecha_signed
-           |         ELSE CAST(0 AS DOUBLE) END AS brecha_no_validada,
-           |    CASE WHEN brecha_signed IS NULL THEN NULL
-           |         WHEN brecha_signed < 0 THEN -brecha_signed
-           |         ELSE CAST(0 AS DOUBLE) END AS sobrevalidacion
-           |  FROM n)
-           |SELECT mode_code, tipo_dia, validaciones, n_dias_base, n_dias,
-           |  subidas_diarias_base, pasajeros_estimados, cobertura,
-           |  brecha_signed, brecha_no_validada, sobrevalidacion,
-           |  CASE WHEN NOT is_comp THEN 'NO_COMPARABLE_MODO'
-           |       WHEN pasajeros_estimados IS NULL THEN 'NO_COMPARABLE_SIN_BASE'
-           |       WHEN cobertura < 0.30 THEN 'NO_COMPARABLE_BASE_SOBREDIMENSIONADA'
-           |       WHEN cobertura > 1.50 THEN 'NO_COMPARABLE_BASE_SUBDIMENSIONADA'
-           |       ELSE 'COMPARABLE' END AS estado_comparabilidad,
-           |  CASE WHEN pasajeros_estimados IS NULL OR pasajeros_estimados < 500
-           |       THEN 0 ELSE 1 END AS bandera_calidad,
-           |  ROUND(0.10 * brecha_no_validada, 2) AS recuperacion_pot_10,
-           |  ROUND(0.20 * brecha_no_validada, 2) AS recuperacion_pot_20,
-           |  ROUND(brecha_no_validada / pasajeros_estimados, 4) AS brecha_relativa,
-           |  ROUND(0.95 - cobertura, 4) AS gap_vs_meta
-           |FROM g""".stripMargin,
-
-      "ana_cohort_ltv" ->
-      """WITH ev AS (
-        |  SELECT user_id, CAST(ts AS DATE) AS day, CAST(value AS DOUBLE) AS v
-        |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-        |fs AS (SELECT user_id, MIN(day) AS cohort_date FROM ev GROUP BY 1),
-        |ba AS (
-        |  SELECT cohort_date, date_diff('day', cohort_date, day) AS age_days,
-        |    CAST(COUNT(DISTINCT ev.user_id) AS BIGINT) AS n_active_users,
-        |    COALESCE(SUM(CAST(v AS DECIMAL(18,2))), CAST(0 AS DECIMAL(18,2))) AS rev
-        |  FROM ev JOIN fs USING (user_id)
-        |  GROUP BY 1, 2),
-        |base AS (
-        |  SELECT cohort_date, n_active_users AS cohort_size
-        |  FROM ba WHERE age_days = 0)
-        |SELECT ba.cohort_date, ba.age_days, ba.n_active_users,
-        |  CAST(rev AS DOUBLE) AS revenue,
-        |  CAST(SUM(rev) OVER (PARTITION BY ba.cohort_date ORDER BY ba.age_days
-        |    ROWS UNBOUNDED PRECEDING) AS DOUBLE) AS cum_revenue,
-        |  CAST(SUM(rev) OVER (PARTITION BY ba.cohort_date ORDER BY ba.age_days
-        |    ROWS UNBOUNDED PRECEDING) AS DOUBLE)
-        |    / CAST(cohort_size AS DOUBLE) AS ltv_per_user
-        |FROM ba JOIN base USING (cohort_date)""".stripMargin,
-
-    "ana_retention_cohort" ->
-        """WITH ev AS (
-          |  SELECT user_id, CAST(ts AS DATE) AS day
-          |  FROM events WHERE user_id IS NOT NULL),
-          |fs AS (SELECT user_id, MIN(day) AS cohort_date FROM ev GROUP BY user_id),
-          |offs AS (
-          |  SELECT cohort_date,
-          |    CAST(date_diff('day', cohort_date, day) AS INTEGER) AS offset_days,
-          |    COUNT(DISTINCT e.user_id) AS retained_users
-          |  FROM ev e JOIN fs USING (user_id)
-          |  GROUP BY 1, 2)
-          |SELECT cohort_date, offset_days, retained_users,
-          |  100.0 * retained_users / b.cohort_size AS pct_retained
-          |FROM offs
-          |JOIN (SELECT cohort_date, retained_users AS cohort_size
-          |      FROM offs WHERE offset_days = 0) b USING (cohort_date)""".stripMargin,
-
-      // AnalyticsPack.growthAccounting mirrored: distinct user-months,
-      // first-month panel, month-shifted joins, churn bounded to the
-      // observed month panel, one guarded quotient.
-      "ana_growth_accounting" ->
-        """WITH um AS (
-          |  SELECT DISTINCT user_id, CAST(date_trunc('month', ts) AS DATE) AS month
-          |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-          |fm AS (SELECT user_id, MIN(month) AS first_month FROM um GROUP BY 1),
-          |pv AS (SELECT user_id, CAST(month + INTERVAL 1 MONTH AS DATE) AS month FROM um),
-          |cl AS (
-          |  SELECT u.month,
-          |    CASE WHEN u.month = f.first_month THEN 'new'
-          |         WHEN p.user_id IS NOT NULL THEN 'retained'
-          |         ELSE 'resurrected' END AS status
-          |  FROM um u JOIN fm f USING (user_id)
-          |  LEFT JOIN pv p ON p.user_id = u.user_id AND p.month = u.month),
-          |mau AS (
-          |  SELECT month, CAST(COUNT(*) AS BIGINT) AS mau,
-          |    CAST(SUM(CASE WHEN status = 'new' THEN 1 ELSE 0 END) AS BIGINT) AS n_new,
-          |    CAST(SUM(CASE WHEN status = 'retained' THEN 1 ELSE 0 END) AS BIGINT) AS n_retained,
-          |    CAST(SUM(CASE WHEN status = 'resurrected' THEN 1 ELSE 0 END) AS BIGINT) AS n_resurrected
-          |  FROM cl GROUP BY 1),
-          |ch AS (
-          |  SELECT p.month, CAST(COUNT(*) AS BIGINT) AS n_churned
-          |  FROM pv p
-          |  JOIN (SELECT DISTINCT month FROM um) mp ON mp.month = p.month
-          |  LEFT JOIN um u ON u.user_id = p.user_id AND u.month = p.month
-          |  WHERE u.user_id IS NULL GROUP BY 1)
-          |SELECT m.month, mau, n_new, n_retained, n_resurrected,
-          |  COALESCE(ch.n_churned, CAST(0 AS BIGINT)) AS n_churned,
-          |  CAST(n_new + n_resurrected AS DOUBLE)
-          |    / NULLIF(CAST(COALESCE(ch.n_churned, CAST(0 AS BIGINT)) AS DOUBLE), 0.0) AS quick_ratio
-          |FROM mau m LEFT JOIN ch ON ch.month = m.month""".stripMargin,
-
-      // AnalyticsPack.medianTest mirrored: quantile_cont median, k x 2
-      // counts, gridded (O-E)^2/E decimal partials.
-      "ana_median_test" ->
-        """WITH ev AS (
-          |  SELECT UPPER(TRIM(event_type)) AS event_type_norm, value
-          |  FROM events WHERE value IS NOT NULL),
-          |md AS (SELECT quantile_cont(CAST(value AS DOUBLE), 0.5) AS m FROM ev),
-          |cnt AS (
-          |  SELECT event_type_norm,
-          |    CAST(SUM(CASE WHEN value > m THEN 1 ELSE 0 END) AS BIGINT) AS n_above,
-          |    CAST(SUM(CASE WHEN value <= m THEN 1 ELSE 0 END) AS BIGINT) AS n_below_eq
-          |  FROM ev, md GROUP BY 1),
-          |tot AS (
-          |  SELECT CAST(SUM(n_above) AS BIGINT) AS ta,
-          |    CAST(SUM(n_below_eq) AS BIGINT) AS tb,
-          |    CAST(COUNT(*) AS BIGINT) AS k
-          |  FROM cnt),
-          |wt AS (
-          |  SELECT c.*, t.ta, t.tb, t.k, t.ta + t.tb AS n,
-          |    c.n_above + c.n_below_eq AS rg
-          |  FROM cnt c CROSS JOIN tot t),
-          |ex AS (
-          |  SELECT *,
-          |    CAST(rg AS DOUBLE) * CAST(ta AS DOUBLE) / NULLIF(CAST(n AS DOUBLE), 0.0) AS ea,
-          |    CAST(rg AS DOUBLE) * CAST(tb AS DOUBLE) / NULLIF(CAST(n AS DOUBLE), 0.0) AS eb
-          |  FROM wt),
-          |ch AS (
-          |  SELECT CAST(
-          |      SUM(CAST(FLOOR((CAST(n_above AS DOUBLE) - ea) * (CAST(n_above AS DOUBLE) - ea) / NULLIF(ea, 0.0) * 1e6) / 1e6 AS DECIMAL(28,6)))
-          |      + SUM(CAST(FLOOR((CAST(n_below_eq AS DOUBLE) - eb) * (CAST(n_below_eq AS DOUBLE) - eb) / NULLIF(eb, 0.0) * 1e6) / 1e6 AS DECIMAL(28,6)))
-          |    AS DOUBLE) AS chi2,
-          |    CAST(MAX(k) - 1 AS BIGINT) AS dof
-          |  FROM ex)
-          |SELECT event_type_norm, n_above, n_below_eq, ea AS exp_above, chi2, dof
-          |FROM ex CROSS JOIN ch""".stripMargin,
-
-      // AnalyticsPack.concentrationHhi mirrored: exact integer
-      // sum-of-squares, identical terminal divisions.
-      "ana_concentration_hhi" ->
-        """WITH pu AS (
-          |  SELECT UPPER(TRIM(event_type)) AS event_type_norm, user_id,
-          |    CAST(COUNT(*) AS BIGINT) AS n
-          |  FROM events WHERE user_id IS NOT NULL GROUP BY 1, 2),
-          |m AS (
-          |  SELECT event_type_norm,
-          |    CAST(COUNT(*) AS BIGINT) AS n_users,
-          |    CAST(SUM(n) AS BIGINT) AS n_events,
-          |    SUM(CAST(n AS DECIMAL(19,0)) * CAST(n AS DECIMAL(19,0))) AS s2
-          |  FROM pu GROUP BY 1),
-          |h AS (
-          |  SELECT *,
-          |    CAST(s2 AS DOUBLE) / NULLIF(CAST(n_events AS DOUBLE) * CAST(n_events AS DOUBLE), 0.0) AS hhi,
-          |    1.0 / NULLIF(CAST(n_users AS DOUBLE), 0.0) AS inv_n
-          |  FROM m)
-          |SELECT event_type_norm, n_users, n_events, hhi,
-          |  (hhi - inv_n) / NULLIF(1.0 - inv_n, 0.0) AS hhi_normalized,
-          |  1.0 / NULLIF(hhi, 0.0) AS effective_users
-          |FROM h""".stripMargin,
-
-      // AnalyticsPack.burstiness mirrored: same per-user gap lag,
-      // exact decimal moments, fixed-order IEEE panel math.
-      "ana_burstiness" ->
-        """WITH base AS (
-          |  SELECT user_id, UPPER(TRIM(event_type)) AS event_type_norm,
-          |    epoch_ms(ts) AS ms, event_id
-          |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-          |gaps AS (
-          |  SELECT event_type_norm,
-          |    ms - LAG(ms) OVER (PARTITION BY user_id, event_type_norm
-          |                       ORDER BY ms, event_id) AS gap_ms
-          |  FROM base),
-          |m AS (
-          |  SELECT event_type_norm, CAST(COUNT(*) AS BIGINT) AS n_gaps,
-          |    SUM(CAST(gap_ms AS DECIMAL(19,0))) AS s1,
-          |    SUM(CAST(gap_ms AS DECIMAL(19,0)) * CAST(gap_ms AS DECIMAL(19,0))) AS s2
-          |  FROM gaps WHERE gap_ms IS NOT NULL GROUP BY 1),
-          |st AS (
-          |  SELECT event_type_norm, n_gaps,
-          |    CAST(s1 AS DOUBLE) / NULLIF(CAST(n_gaps AS DOUBLE), 0.0) AS mu,
-          |    CAST(s2 AS DOUBLE) / NULLIF(CAST(n_gaps AS DOUBLE), 0.0)
-          |      - (CAST(s1 AS DOUBLE) / NULLIF(CAST(n_gaps AS DOUBLE), 0.0))
-          |        * (CAST(s1 AS DOUBLE) / NULLIF(CAST(n_gaps AS DOUBLE), 0.0)) AS var
-          |  FROM m),
-          |sd AS (
-          |  SELECT *, CASE WHEN var < 0.0 THEN 0.0 ELSE sqrt(var) END AS sdv
-          |  FROM st)
-          |SELECT event_type_norm, n_gaps, mu AS mean_gap_ms, sdv AS std_gap_ms,
-          |  sdv / NULLIF(mu, 0.0) AS cv,
-          |  (sdv - mu) / NULLIF(sdv + mu, 0.0) AS burstiness
-          |FROM sd""".stripMargin,
-
-      // AnalyticsPack.timeToConvert mirrored: same running-min window
-      // (ts, event_id order), epoch-ms latency, quantile_cont panel.
-      "ana_time_to_convert" ->
-        """WITH ev AS (
-          |  SELECT user_id, ts, event_id, UPPER(TRIM(event_type)) AS et
-          |  FROM events WHERE user_id IS NOT NULL),
-          |st AS (
-          |  SELECT user_id, ts, et,
-          |    MIN(CASE WHEN et = 'CLICK' THEN ts END) OVER
-          |      (PARTITION BY user_id ORDER BY ts, event_id
-          |       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS first_click
-          |  FROM ev),
-          |pu AS (
-          |  SELECT user_id,
-          |    MAX(CASE WHEN et = 'CLICK' THEN 1 ELSE 0 END) AS had_click,
-          |    MIN(CASE WHEN et = 'PURCHASE' AND first_click IS NOT NULL
-          |      THEN epoch_ms(ts) - epoch_ms(first_click) END) AS latency_ms
-          |  FROM st GROUP BY 1),
-          |ck AS (SELECT * FROM pu WHERE had_click = 1)
-          |SELECT COUNT(*) AS n_clickers,
-          |  COUNT(latency_ms) AS n_converted,
-          |  ROUND(100.0 * COUNT(latency_ms) / NULLIF(COUNT(*), 0), 2) AS pct_convert,
-          |  quantile_cont(CAST(latency_ms AS DOUBLE), 0.25) AS p25_ms,
-          |  quantile_cont(CAST(latency_ms AS DOUBLE), 0.5) AS p50_ms,
-          |  quantile_cont(CAST(latency_ms AS DOUBLE), 0.75) AS p75_ms,
-          |  quantile_cont(CAST(latency_ms AS DOUBLE), 0.9) AS p90_ms
-          |FROM ck""".stripMargin,
-
-      "ana_funnel_steps" ->
-        """WITH e AS (
-          |  SELECT user_id, ts, event_id, UPPER(TRIM(event_type)) AS et
-          |  FROM events WHERE user_id IS NOT NULL),
-          |w1 AS (
-          |  SELECT *, MIN(CASE WHEN et = 'VIEW' THEN ts END) OVER
-          |    (PARTITION BY user_id ORDER BY ts, event_id
-          |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS first_view
-          |  FROM e),
-          |w2 AS (
-          |  SELECT *, MIN(CASE WHEN et = 'CLICK' AND first_view IS NOT NULL THEN ts END) OVER
-          |    (PARTITION BY user_id ORDER BY ts, event_id
-          |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS first_click_av
-          |  FROM w1),
-          |per_user AS (
-          |  SELECT user_id,
-          |    MAX(CASE WHEN et = 'VIEW' THEN 1 ELSE 0 END) AS had_view,
-          |    MAX(CASE WHEN et = 'CLICK' AND first_view IS NOT NULL THEN 1 ELSE 0 END) AS had_click,
-          |    MAX(CASE WHEN et = 'PURCHASE' AND first_click_av IS NOT NULL THEN 1 ELSE 0 END) AS had_purchase
-          |  FROM w2 GROUP BY user_id)
-          |SELECT COUNT(*) AS users_total,
-          |  CAST(SUM(had_view) AS BIGINT) AS users_view,
-          |  CAST(SUM(had_click) AS BIGINT) AS users_click_after_view,
-          |  CAST(SUM(had_purchase) AS BIGINT) AS users_purchase_after_click,
-          |  ROUND(100.0 * CAST(SUM(had_view) AS BIGINT) / NULLIF(COUNT(*), 0), 2) AS pct_to_view,
-          |  ROUND(100.0 * CAST(SUM(had_click) AS BIGINT) / NULLIF(CAST(SUM(had_view) AS BIGINT), 0), 2) AS pct_view_to_click,
-          |  ROUND(100.0 * CAST(SUM(had_purchase) AS BIGINT) / NULLIF(CAST(SUM(had_click) AS BIGINT), 0), 2) AS pct_click_to_purchase
-          |FROM per_user""".stripMargin,
-
-      // Attribution replay: the same user-keyed pair join, struct
-      // min/max first/last (ts then id), grid-quantized linear split.
-      "ana_attribution_models" ->
-        """WITH e AS (
-          |  SELECT user_id, ts, event_id, UPPER(TRIM(event_type)) AS et, value
-          |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-          |clicks AS (
-          |  SELECT user_id, ts AS click_ts, event_id AS click_id
-          |  FROM e WHERE et = 'CLICK'),
-          |purchases AS (
-          |  SELECT user_id, ts AS p_ts, event_id AS p_id,
-          |    COALESCE(CAST(value AS DECIMAL(18,2)), CAST(0.0 AS DECIMAL(18,2))) AS p_val
-          |  FROM e WHERE et = 'PURCHASE'),
-          |pairs AS (
-          |  SELECT p.p_id, p.p_val, c.click_ts, c.click_id
-          |  FROM purchases p JOIN clicks c ON p.user_id = c.user_id
-          |  WHERE c.click_ts <= p.p_ts
-          |    AND epoch_ms(p.p_ts) - epoch_ms(c.click_ts) <= 259200000),
-          |perp AS (
-          |  SELECT p_id, p_val, CAST(COUNT(*) AS BIGINT) AS n_clicks,
-          |    MIN({'click_ts': click_ts, 'click_id': click_id}) AS first_c,
-          |    MAX({'click_ts': click_ts, 'click_id': click_id}) AS last_c
-          |  FROM pairs GROUP BY 1, 2),
-          |credits AS (
-          |  SELECT 'linear' AS model, pr.click_ts,
-          |    CAST(FLOOR(CAST(pr.p_val AS DOUBLE) / CAST(pp.n_clicks AS DOUBLE) * 1e6) / 1e6
-          |      AS DECIMAL(28,6)) AS credit
-          |  FROM pairs pr JOIN perp pp ON pr.p_id = pp.p_id
-          |  UNION ALL
-          |  SELECT 'first_touch', first_c.click_ts, CAST(p_val AS DECIMAL(28,6)) FROM perp
-          |  UNION ALL
-          |  SELECT 'last_touch', last_c.click_ts, CAST(p_val AS DECIMAL(28,6)) FROM perp)
-          |SELECT model, CAST(click_ts AS DATE) AS click_day,
-          |  CAST(COUNT(*) AS BIGINT) AS n_credits,
-          |  CAST(SUM(credit) AS DOUBLE) AS attributed_value
-          |FROM credits GROUP BY 1, 2""".stripMargin,
-
-      // Windowed-funnel replay: the same ladder with epoch-ms step
-      // deadlines (48h) on the cumulative first-step times.
-      "ana_funnel_windowed" ->
-        """WITH e AS (
-          |  SELECT user_id, ts, event_id, UPPER(TRIM(event_type)) AS et
-          |  FROM events WHERE user_id IS NOT NULL),
-          |w1 AS (
-          |  SELECT *, MIN(CASE WHEN et = 'VIEW' THEN ts END) OVER
-          |    (PARTITION BY user_id ORDER BY ts, event_id
-          |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS first_view
-          |  FROM e),
-          |w2 AS (
-          |  SELECT *, MIN(CASE WHEN et = 'CLICK' AND first_view IS NOT NULL
-          |      AND epoch_ms(ts) - epoch_ms(first_view) <= 172800000 THEN ts END) OVER
-          |    (PARTITION BY user_id ORDER BY ts, event_id
-          |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS first_click_w
-          |  FROM w1),
-          |w3 AS (
-          |  SELECT *, MIN(CASE WHEN et = 'PURCHASE' AND first_click_w IS NOT NULL
-          |      AND epoch_ms(ts) - epoch_ms(first_click_w) <= 172800000 THEN ts END) OVER
-          |    (PARTITION BY user_id ORDER BY ts, event_id
-          |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS first_purchase_w
-          |  FROM w2),
-          |per_user AS (
-          |  SELECT user_id,
-          |    MAX(CASE WHEN et = 'VIEW' THEN 1 ELSE 0 END) AS had_view,
-          |    MAX(CASE WHEN first_click_w IS NOT NULL THEN 1 ELSE 0 END) AS had_click,
-          |    MAX(CASE WHEN first_purchase_w IS NOT NULL THEN 1 ELSE 0 END) AS had_purchase
-          |  FROM w3 GROUP BY user_id)
-          |SELECT COUNT(*) AS users_total,
-          |  CAST(SUM(had_view) AS BIGINT) AS users_view,
-          |  CAST(SUM(had_click) AS BIGINT) AS users_click_in_window,
-          |  CAST(SUM(had_purchase) AS BIGINT) AS users_purchase_in_window,
-          |  ROUND(100.0 * CAST(SUM(had_view) AS BIGINT) / NULLIF(COUNT(*), 0), 2) AS pct_to_view,
-          |  ROUND(100.0 * CAST(SUM(had_click) AS BIGINT) / NULLIF(CAST(SUM(had_view) AS BIGINT), 0), 2) AS pct_view_to_click,
-          |  ROUND(100.0 * CAST(SUM(had_purchase) AS BIGINT) / NULLIF(CAST(SUM(had_click) AS BIGINT), 0), 2) AS pct_click_to_purchase
-          |FROM per_user""".stripMargin,
-
-      // The md5 50/50 assignment replayed exactly (thresholdHex(0.5)
-      // = '8000'); every readout value is a fixed IEEE op sequence
-      // over exact distinct counts.
-      "ana_abtest_readout" ->
-        """WITH ev AS (
-          |  SELECT user_id, UPPER(TRIM(event_type)) AS et, value,
-          |    CASE WHEN substr(md5(concat_ws('|', CAST(user_id AS VARCHAR))), 1, 4) < '8000'
-          |         THEN 'A' ELSE 'B' END AS split
-          |  FROM events WHERE user_id IS NOT NULL),
-          |agg AS (
-          |  SELECT
-          |    COUNT(DISTINCT CASE WHEN split = 'A' THEN user_id END) AS n_a,
-          |    COUNT(DISTINCT CASE WHEN split = 'B' THEN user_id END) AS n_b,
-          |    COUNT(DISTINCT CASE WHEN split = 'A' AND et = 'PURCHASE' AND value > 95 THEN user_id END) AS conv_a,
-          |    COUNT(DISTINCT CASE WHEN split = 'B' AND et = 'PURCHASE' AND value > 95 THEN user_id END) AS conv_b
-          |  FROM ev)
-          |SELECT n_a, n_b, conv_a, conv_b,
-          |  conv_a / NULLIF(n_a, 0) AS rate_a,
-          |  conv_b / NULLIF(n_b, 0) AS rate_b,
-          |  conv_b / NULLIF(n_b, 0) - conv_a / NULLIF(n_a, 0) AS lift_abs,
-          |  (conv_b / NULLIF(n_b, 0) - conv_a / NULLIF(n_a, 0))
-          |    / NULLIF(sqrt(((conv_a + conv_b) / NULLIF(n_a + n_b, 0))
-          |           * (1.0 - (conv_a + conv_b) / NULLIF(n_a + n_b, 0))
-          |           * (1.0 / NULLIF(n_a, 0) + 1.0 / NULLIF(n_b, 0))), 0) AS z_score
-          |FROM agg""".stripMargin,
-
-      // AnalyticsPack.benjaminiHochberg mirrored: per-ISO-weekday
-      // two-proportion z, the same A&S 7.1.26 Horner erfc under the
-      // 1e-6 grid, rank/threshold/k* step-up in fixed IEEE order.
-      "ana_benjamini_hochberg" ->
-        """WITH ev AS (
-          |  SELECT user_id, UPPER(TRIM(event_type)) AS et, value,
-          |    CAST(isodow(ts) AS INTEGER) AS segment,
-          |    CASE WHEN substr(md5(concat_ws('|', CAST(user_id AS VARCHAR))), 1, 4) < '8000'
-          |         THEN 'A' ELSE 'B' END AS split
-          |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-          |agg AS (
-          |  SELECT segment,
-          |    COUNT(DISTINCT CASE WHEN split = 'A' THEN user_id END) AS n_a,
-          |    COUNT(DISTINCT CASE WHEN split = 'B' THEN user_id END) AS n_b,
-          |    COUNT(DISTINCT CASE WHEN split = 'A' AND et = 'PURCHASE' AND value > 95 THEN user_id END) AS conv_a,
-          |    COUNT(DISTINCT CASE WHEN split = 'B' AND et = 'PURCHASE' AND value > 95 THEN user_id END) AS conv_b
-          |  FROM ev GROUP BY 1),
-          |zs AS (
-          |  SELECT *,
-          |    conv_a / NULLIF(n_a, 0) AS rate_a,
-          |    conv_b / NULLIF(n_b, 0) AS rate_b,
-          |    (conv_b / NULLIF(n_b, 0) - conv_a / NULLIF(n_a, 0))
-          |      / NULLIF(sqrt(((conv_a + conv_b) / NULLIF(n_a + n_b, 0))
-          |             * (1.0 - (conv_a + conv_b) / NULLIF(n_a + n_b, 0))
-          |             * (1.0 / NULLIF(n_a, 0) + 1.0 / NULLIF(n_b, 0))), 0) AS z_score
-          |  FROM agg),
-          |pv AS (
-          |  SELECT segment, n_a, n_b, conv_a, conv_b, rate_a, rate_b, z_score,
-          |    FLOOR(((((1.061405429 * tt - 1.453152027) * tt + 1.421413741) * tt
-          |      - 0.284496736) * tt + 0.254829592) * tt
-          |      * exp(-(xx * xx)) * 1e6) / 1e6 AS p_value
-          |  FROM (SELECT *, 1.0 / (1.0 + 0.3275911 * xx) AS tt FROM
-          |        (SELECT *, abs(z_score) / 1.4142135623730951 AS xx FROM zs))
-          |  WHERE z_score IS NOT NULL),
-          |rk AS (
-          |  SELECT *, CAST(ROW_NUMBER() OVER (ORDER BY p_value, segment) AS BIGINT) AS p_rank,
-          |    CAST(COUNT(*) OVER () AS BIGINT) AS m
-          |  FROM pv),
-          |th AS (SELECT *, CAST(p_rank AS DOUBLE) * 0.05 / CAST(m AS DOUBLE) AS bh_threshold FROM rk),
-          |ks AS (SELECT COALESCE(MAX(CASE WHEN p_value <= bh_threshold THEN p_rank END), CAST(0 AS BIGINT)) AS k FROM th)
-          |SELECT segment, n_a, n_b, conv_a, conv_b, rate_a, rate_b, z_score,
-          |  p_value, p_rank, bh_threshold, p_rank <= k AS significant
-          |FROM th, ks""".stripMargin,
-
-      // AnalyticsPack.rateWilson mirrored: same split/conversion
-      // grain as the abtest oracle, Wilson center/half in the
-      // identical fixed op order (z = 1.96 parsed literal).
-      "ana_rate_wilson" ->
-        """WITH ev AS (
-          |  SELECT user_id, UPPER(TRIM(event_type)) AS et, value,
-          |    CASE WHEN substr(md5(concat_ws('|', CAST(user_id AS VARCHAR))), 1, 4) < '8000'
-          |         THEN 'A' ELSE 'B' END AS split
-          |  FROM events WHERE user_id IS NOT NULL),
-          |panel AS (
-          |  SELECT split AS variant,
-          |    CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users,
-          |    CAST(COUNT(DISTINCT CASE WHEN et = 'PURCHASE' AND value > 95
-          |      THEN user_id END) AS BIGINT) AS n_conv
-          |  FROM ev GROUP BY 1),
-          |w AS (
-          |  SELECT *,
-          |    CAST(n_users AS DOUBLE) AS n,
-          |    CAST(n_conv AS DOUBLE) / NULLIF(CAST(n_users AS DOUBLE), 0.0) AS p
-          |  FROM panel),
-          |c AS (
-          |  SELECT *,
-          |    1.0 + 1.96 * 1.96 / n AS denom,
-          |    (p + 1.96 * 1.96 / (2.0 * n)) / (1.0 + 1.96 * 1.96 / n) AS center,
-          |    1.96 * sqrt(p * (1.0 - p) / n + 1.96 * 1.96 / (4.0 * n * n))
-          |      / (1.0 + 1.96 * 1.96 / n) AS half
-          |  FROM w)
-          |SELECT variant, n_users, n_conv, p AS rate,
-          |  center - half AS wilson_lo, center + half AS wilson_hi
-          |FROM c""".stripMargin,
-
-      // Profiling.quantileProfile mirrored: quantile_cont per
-      // (column, p), unioned flat.
-      // Audit.fdDiscovery mirrored: per ordered pair the pair-distinct
-      // → determinant-keyed count plan, unioned.
-      "audit_fd_discovery" -> {
-        val cols = Seq("o_orderkey", "o_custkey", "o_orderstatus")
-        (for { a <- cols; b <- cols if a != b } yield
-          s"""SELECT '$a' AS determinant, '$b' AS dependent,
-             |  CAST(n_keys AS BIGINT) AS n_keys,
-             |  CAST(nv AS BIGINT) AS n_violating_keys,
-             |  CAST(nv AS DOUBLE)
-             |    / (CASE WHEN n_keys > 0 THEN CAST(n_keys AS DOUBLE) END)
-             |    AS violation_share,
-             |  n_keys > 0 AND nv = 0 AS fd_holds
-             |FROM (
-             |  SELECT COUNT(*) AS n_keys,
-             |    SUM(CASE WHEN nd > 1 THEN 1 ELSE 0 END) AS nv
-             |  FROM (
-             |    SELECT k, COUNT(*) AS nd FROM (
-             |      SELECT DISTINCT CAST($a AS VARCHAR) AS k,
-             |        COALESCE(CAST($b AS VARCHAR), '<NULL>') AS v
-             |      FROM orders WHERE $a IS NOT NULL)
-             |    GROUP BY 1))""".stripMargin)
-          .mkString("\nUNION ALL\n")
-      },
-
-      "table_quantiles" ->
-        (for {
-          c <- Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
-          p <- Seq(0.25, 0.5, 0.75, 0.9, 0.99)
-        } yield
-          s"""SELECT '$c' AS column_name, $p AS quantile,
-             |  quantile_cont(CAST($c AS DOUBLE), $p) AS value FROM lineitem""".stripMargin)
-          .mkString("\nUNION ALL\n"),
-
-      // AnalyticsPack.periodogram mirrored: the byday panel, exact
-      // date-index arithmetic, q6 trig cells re-gridded with the
-      // centered series before DECIMAL(28,6) partials, mirrored power.
-      "ana_periodogram" -> {
-        val body = (2 to 14).map { p =>
-          val pd = s"${p.toDouble}"
-          def cell(fn: String) =
-            s"CAST(FLOOR((FLOOR($fn(6.283185307179586 * idx / $pd) * 1e6) / 1e6) * yc * 1e6) / 1e6 AS DECIMAL(28,6))"
-          s"""SELECT $p AS period_days, MAX(n_days) AS n_days,
-             |  CAST(COALESCE(SUM(${cell("COS")}), 0) AS DOUBLE) AS cos_sum,
-             |  CAST(COALESCE(SUM(${cell("SIN")}), 0) AS DOUBLE) AS sin_sum,
-             |  (CAST(COALESCE(SUM(${cell("COS")}), 0) AS DOUBLE)
-             |     * CAST(COALESCE(SUM(${cell("COS")}), 0) AS DOUBLE)
-             |   + CAST(COALESCE(SUM(${cell("SIN")}), 0) AS DOUBLE)
-             |     * CAST(COALESCE(SUM(${cell("SIN")}), 0) AS DOUBLE))
-             |  / CAST(MAX(n_days) AS DOUBLE) AS power
-             |FROM base""".stripMargin
-        }.mkString("\nUNION ALL\n")
-        s"""WITH byday AS (
-           |  SELECT date_sk,
-           |    CAST(COALESCE(ROUND(SUM(CAST(value AS DECIMAL(18,2))), 2), 0) AS DOUBLE) AS y
-           |  FROM ($validSql) WHERE date_sk IS NOT NULL
-           |  GROUP BY 1),
-           |st AS (
-           |  SELECT MIN(date_sk) AS d0, CAST(COUNT(*) AS BIGINT) AS n_days,
-           |    CAST(SUM(CAST(y AS DECIMAL(28,6))) AS DOUBLE) / COUNT(*) AS m
-           |  FROM byday),
-           |base AS (
-           |  SELECT date_sk, y,
-           |    CAST(date_diff('day', strptime(CAST(d0 AS VARCHAR), '%Y%m%d'),
-           |      strptime(CAST(date_sk AS VARCHAR), '%Y%m%d')) AS DOUBLE) AS idx,
-           |    y - m AS yc, n_days
-           |  FROM byday CROSS JOIN st),
-           |pan AS (
-           |$body
-           |),
-           |best AS (SELECT MAX(power) AS b FROM pan)
-           |SELECT period_days, n_days, cos_sum, sin_sum, power,
-           |  power = b AS is_dominant
-           |FROM pan CROSS JOIN best""".stripMargin
-      },
-
-      // AnalyticsPack.hurstExponent mirrored: indexed day panel,
-      // FLOOR block ids, block-partitioned decimal prefix sums, the
-      // mirrored R/S and variance trees, zipf-grid OLS for H.
-      "ana_hurst" -> {
-        val ws = Seq(4, 8, 16, 32)
-        val blocks = ws.zipWithIndex.map { case (w, i) =>
-          val wd = s"${w.toDouble}"
-          s"""bl_$i AS (
-             |  SELECT *, CAST(FLOOR(idx / $wd) AS BIGINT) AS b FROM indexed),
-             |sz_$i AS (
-             |  SELECT b FROM bl_$i GROUP BY 1 HAVING COUNT(*) = $w),
-             |full_$i AS (SELECT bl_$i.* FROM bl_$i JOIN sz_$i USING (b)),
-             |st_$i AS (
-             |  SELECT b,
-             |    CAST(SUM(CAST(y AS DECIMAL(28,6))) AS DOUBLE) / $wd AS m,
-             |    (CAST(SUM(CAST(FLOOR(y * y * 1e6) / 1e6 AS DECIMAL(28,6))) AS DOUBLE)
-             |      - CAST(SUM(CAST(y AS DECIMAL(28,6))) AS DOUBLE)
-             |        * CAST(SUM(CAST(y AS DECIMAL(28,6))) AS DOUBLE) / $wd)
-             |      / $wd AS v
-             |  FROM full_$i GROUP BY 1),
-             |cum_$i AS (
-             |  SELECT f.b, st_$i.v,
-             |    CAST(SUM(CAST(f.y AS DECIMAL(28,6)))
-             |      OVER (PARTITION BY f.b ORDER BY f.idx) AS DOUBLE)
-             |      - CAST(COUNT(*) OVER (PARTITION BY f.b ORDER BY f.idx) AS DOUBLE)
-             |        * st_$i.m AS cum
-             |  FROM full_$i f JOIN st_$i USING (b)),
-             |rs_$i AS (
-             |  SELECT b, (MAX(cum) - MIN(cum)) / sqrt(v) AS rs
-             |  FROM cum_$i WHERE v > 0.0 GROUP BY b, v),
-             |pw_$i AS (
-             |  SELECT $w AS window_days,
-             |    CAST(COUNT(*) AS BIGINT) AS n_blocks,
-             |    CASE WHEN COUNT(*) > 0 THEN
-             |      CAST(COALESCE(SUM(CAST(FLOOR(rs * 1e6) / 1e6 AS DECIMAL(28,6))), 0) AS DOUBLE)
-             |        / CAST(COUNT(*) AS DOUBLE)
-             |    END AS mean_rs
-             |  FROM rs_$i)""".stripMargin
-        }
-        val union = ws.indices.map(i => s"SELECT * FROM pw_$i")
-          .mkString("\nUNION ALL\n")
-        s"""WITH byday AS (
-           |  SELECT date_sk,
-           |    CAST(COALESCE(ROUND(SUM(CAST(value AS DECIMAL(18,2))), 2), 0) AS DOUBLE) AS y
-           |  FROM ($validSql) WHERE date_sk IS NOT NULL
-           |  GROUP BY 1),
-           |indexed AS (
-           |  SELECT date_sk, y,
-           |    CAST(date_diff('day', strptime(CAST(d0 AS VARCHAR), '%Y%m%d'),
-           |      strptime(CAST(date_sk AS VARCHAR), '%Y%m%d')) AS BIGINT) AS idx
-           |  FROM byday CROSS JOIN (SELECT MIN(date_sk) AS d0 FROM byday)),
-           |${blocks.mkString(",\n")},
-           |perw AS (
-           |$union
-           |),
-           |pts AS (
-           |  SELECT FLOOR(LN(CAST(window_days AS DOUBLE)) * 1e6) / 1e6 AS lx,
-           |    FLOOR(LN(mean_rs) * 1e6) / 1e6 AS ly
-           |  FROM perw WHERE n_blocks > 0 AND mean_rs > 0.0),
-           |moms AS (
-           |  SELECT COUNT(*) AS k,
-           |    SUM(CAST(FLOOR(lx * 1e8) / 1e8 AS DECIMAL(28,8))) AS sx,
-           |    SUM(CAST(FLOOR(ly * 1e8) / 1e8 AS DECIMAL(28,8))) AS sy,
-           |    SUM(CAST(FLOOR(lx * ly * 1e8) / 1e8 AS DECIMAL(28,8))) AS sxy,
-           |    SUM(CAST(FLOOR(lx * lx * 1e8) / 1e8 AS DECIMAL(28,8))) AS sxx
-           |  FROM pts),
-           |fit AS (
-           |  SELECT (k * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-           |    / NULLIF(k * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE), 0)
-           |    AS hurst_h
-           |  FROM moms)
-           |SELECT window_days, n_blocks, mean_rs, hurst_h
-           |FROM perw CROSS JOIN fit""".stripMargin
-      },
-
-      // AnalyticsPack.trimmedMean mirrored: quantile_cont brackets
-      // (the table_quantiles interpolation identity), boundary rows
-      // kept, both means as gridded DECIMAL(28,6) sums over doubles.
-      "ana_trimmed_mean" ->
-        """WITH l AS (
-          |  SELECT UPPER(TRIM(event_type)) AS group_key,
-          |    CAST(value AS DOUBLE) AS v
-          |  FROM events WHERE value IS NOT NULL),
-          |f AS (
-          |  SELECT group_key, CAST(COUNT(*) AS BIGINT) AS n_total,
-          |    quantile_cont(v, 0.1) AS q_lo, quantile_cont(v, 0.9) AS q_hi,
-          |    CAST(SUM(CAST(FLOOR(v * 1e6) / 1e6 AS DECIMAL(28,6))) AS DOUBLE) AS rs
-          |  FROM l GROUP BY 1),
-          |k AS (
-          |  SELECT group_key, CAST(COUNT(*) AS BIGINT) AS n_kept,
-          |    CAST(SUM(CAST(FLOOR(v * 1e6) / 1e6 AS DECIMAL(28,6))) AS DOUBLE) AS ts
-          |  FROM l JOIN f USING (group_key)
-          |  WHERE v >= q_lo AND v <= q_hi GROUP BY 1)
-          |SELECT group_key, n_total,
-          |  CAST(COALESCE(k.n_kept, 0) AS BIGINT) AS n_kept, q_lo, q_hi,
-          |  rs / CAST(n_total AS DOUBLE) AS raw_mean,
-          |  ts / CAST(k.n_kept AS DOUBLE) AS trimmed_mean
-          |FROM f LEFT JOIN k USING (group_key)""".stripMargin,
-
-      // Profiling.outlierFences mirrored: unpivot, exact quartiles,
-      // fixed-order fence arithmetic, tail counts CAST to BIGINT
-      // (HUGEINT surfaces as float64 through the pandas fetch).
-      "table_outlier_iqr" ->
-        ("WITH l AS (\n" +
-          Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax").map(c =>
-            s"  SELECT '$c' AS column_name, CAST($c AS DOUBLE) AS v FROM lineitem WHERE $c IS NOT NULL")
-            .mkString("\n  UNION ALL\n") + "),\n" +
-          """f AS (
-            |  SELECT column_name,
-            |    quantile_cont(v, 0.25) AS q1, quantile_cont(v, 0.75) AS q3
-            |  FROM l GROUP BY 1),
-            |f2 AS (SELECT column_name, q1, q3, q3 - q1 AS iqr FROM f),
-            |f3 AS (SELECT *, q1 - 1.5 * iqr AS fence_lo, q3 + 1.5 * iqr AS fence_hi FROM f2)
-            |SELECT column_name, q1, q3, iqr, fence_lo, fence_hi,
-            |  COUNT(*) AS n,
-            |  CAST(SUM(CASE WHEN v < fence_lo THEN 1 ELSE 0 END) AS BIGINT) AS n_below,
-            |  CAST(SUM(CASE WHEN v > fence_hi THEN 1 ELSE 0 END) AS BIGINT) AS n_above,
-            |  ROUND(100.0 * (SUM(CASE WHEN v < fence_lo THEN 1 ELSE 0 END)
-            |    + SUM(CASE WHEN v > fence_hi THEN 1 ELSE 0 END)) / COUNT(*), 4) AS pct_outliers
-            |FROM l JOIN f3 USING (column_name)
-            |GROUP BY 1, 2, 3, 4, 5, 6""".stripMargin),
-
-      // AnalyticsPack.msprtSequential mirrored: per-user collapse,
-      // additive day panel, window cumulative sums, 1e-6 grid-ln,
-      // running MAX, parsed ln(0.05) boundary.
-      "ana_msprt" ->
-        """WITH ev AS (
-          |  SELECT user_id, CAST(ts AS DATE) AS day,
-          |    UPPER(TRIM(event_type)) AS et, value,
-          |    CASE WHEN substr(md5(concat_ws('|', CAST(user_id AS VARCHAR))), 1, 4) < '8000'
-          |         THEN 'A' ELSE 'B' END AS split
-          |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
-          |users AS (
-          |  SELECT user_id, split, MIN(day) AS enr_d,
-          |    MIN(CASE WHEN et = 'PURCHASE' AND value > 95 THEN day END) AS cnv_d
-          |  FROM ev GROUP BY 1, 2),
-          |enr AS (SELECT enr_d AS day,
-          |    SUM(CASE WHEN split = 'A' THEN 1 ELSE 0 END) AS d_na,
-          |    SUM(CASE WHEN split = 'B' THEN 1 ELSE 0 END) AS d_nb,
-          |    0 AS d_ca, 0 AS d_cb
-          |  FROM users GROUP BY 1),
-          |cnv AS (SELECT cnv_d AS day, 0 AS d_na, 0 AS d_nb,
-          |    SUM(CASE WHEN split = 'A' THEN 1 ELSE 0 END) AS d_ca,
-          |    SUM(CASE WHEN split = 'B' THEN 1 ELSE 0 END) AS d_cb
-          |  FROM users WHERE cnv_d IS NOT NULL GROUP BY 1),
-          |byday AS (SELECT day, SUM(d_na) AS d_na, SUM(d_nb) AS d_nb,
-          |    SUM(d_ca) AS d_ca, SUM(d_cb) AS d_cb
-          |  FROM (SELECT * FROM enr UNION ALL SELECT * FROM cnv)
-          |  GROUP BY 1),
-          |cum AS (SELECT day,
-          |    CAST(SUM(d_na) OVER (ORDER BY day) AS BIGINT) AS n_a,
-          |    CAST(SUM(d_nb) OVER (ORDER BY day) AS BIGINT) AS n_b,
-          |    CAST(SUM(d_ca) OVER (ORDER BY day) AS BIGINT) AS conv_a,
-          |    CAST(SUM(d_cb) OVER (ORDER BY day) AS BIGINT) AS conv_b
-          |  FROM byday),
-          |v AS (SELECT *,
-          |    conv_b / NULLIF(n_b, 0) - conv_a / NULLIF(n_a, 0) AS delta,
-          |    ((conv_a + conv_b) / NULLIF(n_a + n_b, 0))
-          |      * (1.0 - (conv_a + conv_b) / NULLIF(n_a + n_b, 0))
-          |      * (1.0 / NULLIF(n_a, 0) + 1.0 / NULLIF(n_b, 0)) AS vn
-          |  FROM cum),
-          |ll AS (SELECT day, n_a, n_b, conv_a, conv_b,
-          |    CASE WHEN vn IS NULL OR vn = 0.0 THEN NULL
-          |         ELSE 0.5 * (FLOOR(LN(vn / (vn + 0.01)) * 1e6) / 1e6)
-          |           + delta * delta * 0.01 / (2.0 * vn * (vn + 0.01)) END
-          |      AS ln_lambda
-          |  FROM v),
-          |fin AS (SELECT *, MAX(ln_lambda) OVER (ORDER BY day) AS pm FROM ll)
-          |SELECT day, n_a, n_b, conv_a, conv_b, ln_lambda,
-          |  CASE WHEN pm IS NULL THEN NULL
-          |       ELSE -GREATEST(pm, 0.0) END AS ln_p_always_valid,
-          |  CASE WHEN pm IS NULL THEN NULL
-          |       ELSE -GREATEST(pm, 0.0) < -2.995732273553991 END AS reject_5pct
-          |FROM fin""".stripMargin,
-
-      // Power replay: the same assignment + conversion, the z-sum
-      // squared as a PARSED LITERAL (7.848879734349088 — libm erfinv
-      // differs across engines, literals do not), raw IEEE panel math.
-      "ana_abtest_power" ->
-        """WITH ev AS (
-          |  SELECT user_id, UPPER(TRIM(event_type)) AS et, value,
-          |    CASE WHEN substr(md5(concat_ws('|', CAST(user_id AS VARCHAR))), 1, 4) < '8000'
-          |         THEN 'A' ELSE 'B' END AS split
-          |  FROM events WHERE user_id IS NOT NULL),
-          |agg AS (
-          |  SELECT
-          |    COUNT(DISTINCT CASE WHEN split = 'A' THEN user_id END) AS n_a,
-          |    COUNT(DISTINCT CASE WHEN split = 'B' THEN user_id END) AS n_b,
-          |    COUNT(DISTINCT CASE WHEN split = 'A' AND et = 'PURCHASE' AND value > 95 THEN user_id END) AS conv_a
-          |  FROM ev),
-          |grid AS (
-          |  SELECT n_a, n_b, conv_a / NULLIF(n_a, 0) AS p_control, g.mde_rel
-          |  FROM agg, (SELECT UNNEST([0.02e0, 0.05e0, 0.10e0, 0.20e0, 0.50e0]) AS mde_rel) g),
-          |t AS (
-          |  SELECT *, CASE WHEN p_control IS NOT NULL
-          |      AND p_control * (1.0 + mde_rel) < 1.0
-          |    THEN p_control * (1.0 + mde_rel) END AS p_target
-          |  FROM grid)
-          |SELECT mde_rel, p_control, p_target,
-          |  CASE WHEN p_target IS NOT NULL AND p_target <> p_control THEN
-          |    CAST(CEIL(7.848879734349088
-          |      * (p_control * (1.0 - p_control) + p_target * (1.0 - p_target))
-          |      / ((p_target - p_control) * (p_target - p_control))) AS BIGINT)
-          |  END AS required_n_per_arm,
-          |  LEAST(n_a, n_b) AS available_n_per_arm,
-          |  CASE WHEN p_target IS NOT NULL AND p_target <> p_control THEN
-          |    LEAST(n_a, n_b) >= CAST(CEIL(7.848879734349088
-          |      * (p_control * (1.0 - p_control) + p_target * (1.0 - p_target))
-          |      / ((p_target - p_control) * (p_target - p_control))) AS BIGINT)
-          |  END AS feasible
-          |FROM t""".stripMargin,
-
-      // isoDow <-> isodow parity (the B1 convention); means are the
-      // one-division rule over DECIMAL sums.
-      "ana_dow_seasonality" ->
-        """WITH daily AS (
-          |  SELECT CAST(ts AS DATE) AS day, COUNT(*) AS n_events,
-          |    SUM(CAST(value AS DECIMAL(18,2))) AS dem
-          |  FROM events WHERE ts IS NOT NULL GROUP BY 1),
-          |d2 AS (SELECT *, CAST(isodow(day) AS INTEGER) AS iso_dow FROM daily),
-          |m AS (
-          |  SELECT iso_dow, CAST(SUM(dem) AS DOUBLE) / COUNT(*) AS dow_mean_demand
-          |  FROM d2 GROUP BY 1)
-          |SELECT day, iso_dow, n_events,
-          |  CAST(dem AS DOUBLE) AS demand, dow_mean_demand,
-          |  CAST(dem AS DOUBLE) - dow_mean_demand AS residual
-          |FROM d2 JOIN m USING (iso_dow)""".stripMargin,
-
-      // STL-lite: full-window 7-day MA trend (decimal 7-sum, one
-      // divide), iso-dow mean of the grid-quantized detrended values
-      // (§5 rule), raw-IEEE residual.
-      "ana_seasonal_decompose" ->
-        """WITH daily AS (
-          |  SELECT CAST(ts AS DATE) AS day, SUM(CAST(value AS DECIMAL(18,2))) AS dem
-          |  FROM events WHERE ts IS NOT NULL GROUP BY 1),
-          |d2 AS (SELECT *, CAST(isodow(day) AS INTEGER) AS iso_dow FROM daily),
-          |tr AS (
-          |  SELECT *, CASE WHEN COUNT(*) OVER w = 7
-          |    THEN CAST(SUM(dem) OVER w AS DOUBLE) / 7.0 END AS trend
-          |  FROM d2 WINDOW w AS (ORDER BY day ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)),
-          |se AS (
-          |  SELECT iso_dow,
-          |    CAST(SUM(CAST(floor((CAST(dem AS DOUBLE) - trend) * 1e6) / 1e6
-          |      AS DECIMAL(28,6))) AS DOUBLE) / COUNT(*) AS seasonal
-          |  FROM tr WHERE trend IS NOT NULL GROUP BY 1)
-          |SELECT day, iso_dow, CAST(dem AS DOUBLE) AS demand, trend, seasonal,
-          |  CAST(dem AS DOUBLE) - trend - seasonal AS residual
-          |FROM tr LEFT JOIN se USING (iso_dow)""".stripMargin,
-
-      // The decomposition replayed, then §5 quantized-moment
-      // variances (4dp means, 1e-6 squared deviations, DECIMAL
-      // partials) and the two strength ratios at the edge.
-      "ana_seasonal_strength" ->
-        """WITH daily AS (
-          |  SELECT CAST(ts AS DATE) AS day, SUM(CAST(value AS DECIMAL(18,2))) AS dem
-          |  FROM events WHERE ts IS NOT NULL GROUP BY 1),
-          |d2 AS (SELECT *, CAST(isodow(day) AS INTEGER) AS iso_dow FROM daily),
-          |tr AS (
-          |  SELECT *, CASE WHEN COUNT(*) OVER w = 7
-          |    THEN CAST(SUM(dem) OVER w AS DOUBLE) / 7.0 END AS trend
-          |  FROM d2 WINDOW w AS (ORDER BY day ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)),
-          |se AS (
-          |  SELECT iso_dow,
-          |    CAST(SUM(CAST(floor((CAST(dem AS DOUBLE) - trend) * 1e6) / 1e6
-          |      AS DECIMAL(28,6))) AS DOUBLE) / COUNT(*) AS seasonal
-          |  FROM tr WHERE trend IS NOT NULL GROUP BY 1),
-          |dec AS (
-          |  SELECT trend, seasonal,
-          |    CAST(dem AS DOUBLE) - trend - seasonal AS residual
-          |  FROM tr LEFT JOIN se USING (iso_dow)
-          |  WHERE trend IS NOT NULL),
-          |base AS (
-          |  SELECT residual AS r, seasonal + residual AS sr,
-          |    trend + residual AS tr2
-          |  FROM dec),
-          |means AS (
-          |  SELECT COUNT(*) AS n_days,
-          |    ROUND(CAST(CAST(CAST(SUM(CAST(FLOOR(r * 1e6) / 1e6 AS DECIMAL(28,6))) AS DECIMAL(28,6)) * 1000000 AS BIGINT) AS DOUBLE) / 1e6 / COUNT(*), 4) AS mr,
-          |    ROUND(CAST(CAST(CAST(SUM(CAST(FLOOR(sr * 1e6) / 1e6 AS DECIMAL(28,6))) AS DECIMAL(28,6)) * 1000000 AS BIGINT) AS DOUBLE) / 1e6 / COUNT(*), 4) AS msr,
-          |    ROUND(CAST(CAST(CAST(SUM(CAST(FLOOR(tr2 * 1e6) / 1e6 AS DECIMAL(28,6))) AS DECIMAL(28,6)) * 1000000 AS BIGINT) AS DOUBLE) / 1e6 / COUNT(*), 4) AS mtr
-          |  FROM base),
-          |v AS (
-          |  SELECT CAST(MAX(n_days) AS BIGINT) AS n_days,
-          |    CAST(CAST(CAST(SUM(CAST(FLOOR((r - mr) * (r - mr) * 1e6) / 1e6 AS DECIMAL(28,6))) AS DECIMAL(28,6)) * 1000000 AS BIGINT) AS DOUBLE) / 1e6 / MAX(n_days) AS var_r,
-          |    CAST(CAST(CAST(SUM(CAST(FLOOR((sr - msr) * (sr - msr) * 1e6) / 1e6 AS DECIMAL(28,6))) AS DECIMAL(28,6)) * 1000000 AS BIGINT) AS DOUBLE) / 1e6 / MAX(n_days) AS var_sr,
-          |    CAST(CAST(CAST(SUM(CAST(FLOOR((tr2 - mtr) * (tr2 - mtr) * 1e6) / 1e6 AS DECIMAL(28,6))) AS DECIMAL(28,6)) * 1000000 AS BIGINT) AS DOUBLE) / 1e6 / MAX(n_days) AS var_tr
-          |  FROM base, means)
-          |SELECT n_days, var_r, var_sr, var_tr,
-          |  GREATEST(0.0, 1.0 - var_r / NULLIF(var_sr, 0)) AS f_seasonal,
-          |  GREATEST(0.0, 1.0 - var_r / NULLIF(var_tr, 0)) AS f_trend
-          |FROM v""".stripMargin,
-
-      // The decomposition replayed, then exact-order-statistic
-      // median/MAD on the residuals (quantile_cont ≡ percentile, the
-      // F2 parity) and a RAW robust-z quotient.
-      "anomaly_seasonal" ->
-        """WITH daily AS (
-          |  SELECT CAST(ts AS DATE) AS day, SUM(CAST(value AS DECIMAL(18,2))) AS dem
-          |  FROM events WHERE ts IS NOT NULL GROUP BY 1),
-          |d2 AS (SELECT *, CAST(isodow(day) AS INTEGER) AS iso_dow FROM daily),
-          |tr AS (
-          |  SELECT *, CASE WHEN COUNT(*) OVER w = 7
-          |    THEN CAST(SUM(dem) OVER w AS DOUBLE) / 7.0 END AS trend
-          |  FROM d2 WINDOW w AS (ORDER BY day ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)),
-          |se AS (
-          |  SELECT iso_dow,
-          |    CAST(SUM(CAST(floor((CAST(dem AS DOUBLE) - trend) * 1e6) / 1e6
-          |      AS DECIMAL(28,6))) AS DOUBLE) / COUNT(*) AS seasonal
-          |  FROM tr WHERE trend IS NOT NULL GROUP BY 1),
-          |dec AS (
-          |  SELECT day, iso_dow, CAST(dem AS DOUBLE) AS demand,
-          |    CAST(dem AS DOUBLE) - trend - seasonal AS residual
-          |  FROM tr LEFT JOIN se USING (iso_dow)
-          |  WHERE CAST(dem AS DOUBLE) - trend - seasonal IS NOT NULL),
-          |md AS (SELECT quantile_cont(residual, 0.5) AS med FROM dec),
-          |ad AS (SELECT quantile_cont(ABS(residual - med), 0.5) AS mad FROM dec, md)
-          |SELECT day, iso_dow, demand, residual, med, mad,
-          |  (residual - med) / (CASE WHEN mad * 1.4826 = 0 THEN NULL
-          |                           ELSE mad * 1.4826 END) AS robust_z,
-          |  ABS((residual - med) / (CASE WHEN mad * 1.4826 = 0 THEN NULL
-          |                               ELSE mad * 1.4826 END)) > 3.5 AS is_anomaly
-          |FROM dec, md, ad""".stripMargin,
-
-      "ana_new_vs_returning" ->
-        """WITH ud AS (
-          |  SELECT DISTINCT CAST(ts AS DATE) AS d, user_id FROM events
-          |  WHERE ts IS NOT NULL AND user_id IS NOT NULL),
-          |f AS (SELECT user_id, MIN(d) AS first_seen FROM ud GROUP BY 1)
-          |SELECT d AS day,
-          |  COUNT(DISTINCT CASE WHEN d = first_seen THEN user_id END) AS n_new,
-          |  COUNT(DISTINCT CASE WHEN d <> first_seen THEN user_id END) AS n_returning
-          |FROM ud JOIN f USING (user_id)
-          |GROUP BY 1""".stripMargin,
-
-      "ana_cumulative_users" ->
-        """WITH f AS (
-          |  SELECT user_id, MIN(CAST(ts AS DATE)) AS day FROM events
-          |  WHERE ts IS NOT NULL AND user_id IS NOT NULL GROUP BY 1),
-          |d AS (SELECT day, CAST(COUNT(*) AS BIGINT) AS n_new FROM f GROUP BY 1)
-          |SELECT day, n_new,
-          |  CAST(SUM(n_new) OVER (ORDER BY day
-          |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_users
-          |FROM d""".stripMargin,
-
-      // The oracle writes the naive global window; the Spark plan is
-      // the two-phase distributed prefix sum — identical output for
-      // the unique (total DESC, user) order.
-      "ana_pareto_users" ->
-        """WITH totals AS (
-          |  SELECT user_id, SUM(CAST(value AS DECIMAL(18,2))) AS total_demand
-          |  FROM events WHERE user_id IS NOT NULL AND value IS NOT NULL
-          |  GROUP BY 1),
-          |g AS (SELECT SUM(total_demand) AS grand FROM totals),
-          |w AS (
-          |  SELECT user_id, total_demand,
-          |    SUM(total_demand) OVER (ORDER BY total_demand DESC, user_id
-          |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-          |    ROW_NUMBER() OVER (ORDER BY total_demand DESC, user_id) AS user_rank
-          |  FROM totals)
-          |SELECT user_id, CAST(total_demand AS DOUBLE) AS total_demand,
-          |  user_rank, CAST(cum AS DOUBLE) / CAST(grand AS DOUBLE) AS cum_share
-          |FROM w, g""".stripMargin,
-
-      // Same user-day set as the Spark sequence-expansion: d BETWEEN
-      // g-6 AND g  <=>  g IN [d, d+6] ∩ observed days.
-      "ana_rolling_active_users" ->
-        """WITH ud AS (
-          |  SELECT DISTINCT CAST(ts AS DATE) AS d, user_id
-          |  FROM events WHERE ts IS NOT NULL),
-          |days AS (SELECT DISTINCT d AS g FROM ud)
-          |SELECT g.g AS day,
-          |  COUNT(DISTINCT CASE WHEN u.d = g.g THEN u.user_id END) AS n_users_day,
-          |  COUNT(DISTINCT u.user_id) AS n_users_7d
-          |FROM days g JOIN ud u ON u.d BETWEEN g.g - 6 AND g.g
-          |GROUP BY 1""".stripMargin,
-
-      // AnalyticsPack.stickinessPanel: the 28-day range-join twin of
-      // the rolling-actives oracle, with the WAU band and the
-      // DAU/MAU raw quotient.
-      "ana_stickiness" ->
-        """WITH ud AS (
-          |  SELECT DISTINCT CAST(ts AS DATE) AS d, user_id
-          |  FROM events WHERE ts IS NOT NULL),
-          |days AS (SELECT DISTINCT d AS g FROM ud),
-          |agg AS (
-          |  SELECT g.g AS day,
-          |    COUNT(DISTINCT CASE WHEN u.d = g.g THEN u.user_id END) AS dau,
-          |    COUNT(DISTINCT CASE WHEN u.d >= g.g - 6 THEN u.user_id END) AS wau,
-          |    COUNT(DISTINCT u.user_id) AS mau
-          |  FROM days g JOIN ud u ON u.d BETWEEN g.g - 27 AND g.g
-          |  GROUP BY 1)
-          |SELECT day, dau, wau, mau,
-          |  CAST(dau AS DOUBLE) / CAST(mau AS DOUBLE) AS stickiness
-          |FROM agg""".stripMargin,
-
-      "ana_rolling_demand" ->
-        """WITH daily AS (
-          |  SELECT CAST(ts AS DATE) AS day, COUNT(*) AS viajes,
-          |    SUM(CAST(value AS DECIMAL(18,2))) AS dem
-          |  FROM events GROUP BY 1)
-          |SELECT day, viajes,
-          |  CAST(COALESCE(ROUND(dem, 2), 0) AS DOUBLE) AS demanda,
-          |  CAST(COALESCE(ROUND(SUM(dem) OVER w, 2), 0) AS DOUBLE) AS demanda_7d,
-          |  COUNT(*) OVER w AS dias_en_ventana,
-          |  CAST(SUM(dem) OVER w AS DOUBLE) / COUNT(*) OVER w AS demanda_7d_avg
-          |FROM daily
-          |WINDOW w AS (ORDER BY day ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)""".stripMargin,
-
-      "ana_transition_matrix" ->
-        """WITH e AS (
-          |  SELECT user_id, ts, event_id, UPPER(TRIM(event_type)) AS et
-          |  FROM events WHERE user_id IS NOT NULL),
-          |tr AS (
-          |  SELECT et AS from_type,
-          |    LEAD(et) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS to_type
-          |  FROM e),
-          |c AS (
-          |  SELECT from_type, to_type, COUNT(*) AS n
-          |  FROM tr WHERE to_type IS NOT NULL GROUP BY 1, 2),
-          |t AS (SELECT from_type, CAST(SUM(n) AS BIGINT) AS total_from
-          |      FROM c GROUP BY 1)
-          |SELECT from_type, to_type, n, n / total_from AS p
-          |FROM c JOIN t USING (from_type)""".stripMargin,
-
-      // AnalyticsPack.markovEntropyRate mirrored: the transition panel
-      // as above, per-cell gridded ln terms re-gridded before the
-      // DECIMAL(28,6) sum, one mirrored exp at the edge.
-      "ana_markov_entropy" ->
-        """WITH e AS (
-          |  SELECT user_id, ts, event_id, UPPER(TRIM(event_type)) AS et
-          |  FROM events WHERE user_id IS NOT NULL),
-          |tr AS (
-          |  SELECT et AS from_type,
-          |    LEAD(et) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS to_type
-          |  FROM e),
-          |c AS (
-          |  SELECT from_type, to_type, COUNT(*) AS n
-          |  FROM tr WHERE to_type IS NOT NULL GROUP BY 1, 2),
-          |t AS (SELECT from_type, CAST(SUM(n) AS BIGINT) AS total_from
-          |      FROM c GROUP BY 1),
-          |tm AS (
-          |  SELECT from_type, to_type, n, n / total_from AS p
-          |  FROM c JOIN t USING (from_type)),
-          |st AS (
-          |  SELECT CAST(COUNT(DISTINCT s) AS BIGINT) AS n_states FROM (
-          |    SELECT from_type AS s FROM tm
-          |    UNION ALL SELECT to_type FROM tm)),
-          |tot AS (SELECT CAST(SUM(n) AS BIGINT) AS nt FROM tm),
-          |h AS (
-          |  SELECT
-          |    COALESCE(CAST(SUM(CAST(FLOOR((CAST(n AS DOUBLE) / CAST(nt AS DOUBLE))
-          |      * (FLOOR(ln(p) * 1e6) / 1e6) * 1e6) / 1e6
-          |      AS DECIMAL(28,6))) AS DECIMAL(28,6)), 0) AS hsum,
-          |    MAX(nt) AS n_transitions
-          |  FROM tm CROSS JOIN tot)
-          |SELECT n_transitions, n_states,
-          |  -CAST(hsum AS DOUBLE) AS entropy_rate_nats,
-          |  FLOOR(EXP(-CAST(hsum AS DOUBLE)) * 1e6) / 1e6 AS perplexity
-          |FROM h CROSS JOIN st""".stripMargin,
-
-      "ana_top_days_per_type" ->
-        """SELECT * FROM (
-          |  SELECT event_type_norm, day, n_events,
-          |    CAST(DENSE_RANK() OVER (PARTITION BY event_type_norm
-          |                            ORDER BY n_events DESC) AS INTEGER) AS rnk
-          |  FROM (
-          |    SELECT UPPER(TRIM(event_type)) AS event_type_norm,
-          |      CAST(ts AS DATE) AS day, COUNT(*) AS n_events
-          |    FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
-          |    GROUP BY 1, 2))
-          |WHERE rnk <= 3""".stripMargin,
-
-      "ana_gapfill_30m" ->
-        """WITH ev AS (
-          |  SELECT CAST(ts AS DATE) AS day,
-          |    CAST(hour(ts)*2 + CASE WHEN minute(ts) >= 30 THEN 1 ELSE 0 END
-          |         AS INTEGER) AS slot,
-          |    value
-          |  FROM events WHERE ts IS NOT NULL),
-          |obs AS (
-          |  SELECT day, slot, COUNT(*) AS n_events,
-          |    CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS value_sum
-          |  FROM ev GROUP BY 1, 2),
-          |grid AS (
-          |  SELECT d.day, s.slot
-          |  FROM (SELECT DISTINCT day FROM ev) d,
-          |       (SELECT CAST(UNNEST(generate_series(0, 47)) AS INTEGER) AS slot) s)
-          |SELECT g.day, g.slot,
-          |  COALESCE(o.n_events, 0) AS n_events, o.value_sum,
-          |  LAST_VALUE(o.value_sum IGNORE NULLS) OVER (
-          |    PARTITION BY g.day ORDER BY g.slot
-          |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS value_locf
-          |FROM grid g LEFT JOIN obs o ON g.day = o.day AND g.slot = o.slot""".stripMargin,
-
-      "anomaly_mad" ->
-        """WITH ev AS (
-          |  SELECT event_id, UPPER(TRIM(event_type)) AS event_type_norm, value
-          |  FROM events WHERE value IS NOT NULL),
-          |med AS (
-          |  SELECT event_type_norm, quantile_cont(value, 0.5) AS med
-          |  FROM ev GROUP BY 1 HAVING COUNT(*) >= 2),
-          |dev AS (
-          |  SELECT ev.event_id, ev.event_type_norm, ev.value, med.med,
-          |    abs(ev.value - med.med) AS absdev
-          |  FROM ev JOIN med USING (event_type_norm)),
-          |mad AS (
-          |  SELECT event_type_norm, quantile_cont(absdev, 0.5) AS mad
-          |  FROM dev GROUP BY 1),
-          |scored AS (
-          |  SELECT event_id, event_type_norm, value,
-          |    ROUND(med, 3) AS grupo_mediana, ROUND(mad, 3) AS grupo_mad,
-          |    ROUND((value - med) / NULLIF(mad * 1.4826, 0), 3) AS robust_z
-          |  FROM dev JOIN mad USING (event_type_norm))
-          |SELECT * FROM scored WHERE abs(robust_z) > 3.5""".stripMargin,
-
-      "anomaly_zscore" ->
-        """WITH ev AS (
-          |  SELECT event_id, UPPER(TRIM(event_type)) AS event_type_norm, value
-          |  FROM events WHERE value IS NOT NULL),
-          |moms AS (
-          |  SELECT event_type_norm, COUNT(*) AS n,
-          |    SUM(CAST(value AS DECIMAL(28,6))) AS s1,
-          |    SUM(CAST(value * value AS DECIMAL(28,6))) AS s2
-          |  FROM ev GROUP BY 1 HAVING COUNT(*) >= 2),
-          |st AS (
-          |  SELECT event_type_norm,
-          |    CAST(s1 AS DOUBLE) / n AS mean,
-          |    sqrt((CAST(s2 AS DOUBLE) - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE) / n) / (n - 1)) AS std
-          |  FROM moms),
-          |scored AS (
-          |  SELECT event_id, event_type_norm, value,
-          |    ROUND(mean, 3) AS grupo_media, ROUND(std, 3) AS grupo_std,
-          |    ROUND((value - mean) / NULLIF(std, 0), 3) AS z
-          |  FROM ev JOIN st USING (event_type_norm))
-          |SELECT * FROM scored WHERE ABS(z) > 3""".stripMargin,
-
-      "graph_pagerank" -> pageRankOracleSql(10, 0.85),
-      "graph_hits" -> hitsOracleSql(10),
-      "graph_label_propagation" -> labelPropOracleSql(5),
-      "graph_modularity" -> modularityOracleSql(5),
-
-      // Connected components over the median-thresholded flow graph:
-      // the min-label fixpoint replayed as recursive reachability
-      // (the svc_hotspot_clusters walk pattern).
-      "graph_components" ->
-        """WITH RECURSIVE flows AS (
-          |  SELECT s_nationkey AS src, c_nationkey AS dst,
-          |    SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS wdec
-          |  FROM lineitem
-          |  JOIN orders ON l_orderkey = o_orderkey
-          |  JOIN supplier ON l_suppkey = s_suppkey
-          |  JOIN customer ON o_custkey = c_custkey
-          |  WHERE s_nationkey <> c_nationkey
-          |  GROUP BY 1, 2),
-          |edges AS (
-          |  SELECT LEAST(src, dst) AS u, GREATEST(src, dst) AS v,
-          |    CAST(SUM(wdec) AS DOUBLE) AS w
-          |  FROM flows GROUP BY 1, 2),
-          |med AS (SELECT quantile_cont(w, 0.5) AS m FROM edges),
-          |strong AS (SELECT u, v FROM edges, med WHERE w >= m),
-          |e2 AS (SELECT u AS src, v AS dst FROM strong
-          |       UNION ALL SELECT v, u FROM strong),
-          |walk(id, label) AS (
-          |  SELECT src, src FROM e2
-          |  UNION
-          |  SELECT e.src, w.label FROM e2 e JOIN walk w ON w.id = e.dst),
-          |lab AS (SELECT id, MIN(label) AS cluster_id FROM walk GROUP BY id)
-          |SELECT CAST(cluster_id AS BIGINT) AS component_id,
-          |  CAST(COUNT(*) AS BIGINT) AS n_nodes,
-          |  CAST(MIN(id) AS BIGINT) AS node_min,
-          |  CAST(MAX(id) AS BIGINT) AS node_max
-          |FROM lab GROUP BY 1""".stripMargin,
-
-      // Graph.minSpanningForest replayed as RECURSIVE KRUSKAL: the
-      // forest is UNIQUE under the (w, u, v) total edge order (the
-      // operator's documented tie-break argument), so the oracle need
-      // not mirror Borůvka — any MST algorithm over the same ordered
-      // edge list yields the identical edge set. Kruskal runs as a
-      // recursive CTE over edge ranks: state = (step, node, comp),
-      // one step per edge, comps merge to their min label when the
-      // edge bridges two components (min-label merging reproduces the
-      // operator's final min-node component labels). The recursion is
-      // panel-sized (25 nations x ~canon-edge steps).
-      "graph_mst" ->
-        """WITH RECURSIVE flows AS MATERIALIZED (
-          |  SELECT s_nationkey AS src, c_nationkey AS dst,
-          |    CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,2))), 2) AS DOUBLE) AS w
-          |  FROM lineitem
-          |  JOIN orders ON l_orderkey = o_orderkey
-          |  JOIN supplier ON l_suppkey = s_suppkey
-          |  JOIN customer ON o_custkey = c_custkey
-          |  WHERE s_nationkey <> c_nationkey
-          |  GROUP BY 1, 2),
-          |canon AS MATERIALIZED (
-          |  SELECT CAST(LEAST(src, dst) AS BIGINT) AS u,
-          |    CAST(GREATEST(src, dst) AS BIGINT) AS v, MIN(w) AS w
-          |  FROM flows GROUP BY 1, 2),
-          |nodes AS MATERIALIZED (
-          |  SELECT DISTINCT node FROM (
-          |    SELECT u AS node FROM canon UNION ALL SELECT v FROM canon)),
-          |-- MATERIALIZED is load-bearing: `ranked` is referenced inside
-          |-- the recursive term, so without it DuckDB re-evaluates the
-          |-- row-scale flows join once PER RECURSION STEP (measured
-          |-- >240s at the 10x replica vs ~2s materialized)
-          |ranked AS MATERIALIZED (
-          |  SELECT u, v, w, ROW_NUMBER() OVER (ORDER BY w, u, v) AS r
-          |  FROM canon),
-          |kr(step, node, comp) AS (
-          |  SELECT CAST(0 AS BIGINT), node, node FROM nodes
-          |  UNION ALL
-          |  SELECT step + 1, node,
-          |    CASE WHEN cu IS NOT NULL AND cv IS NOT NULL AND cu <> cv
-          |              AND comp IN (cu, cv)
-          |         THEN LEAST(cu, cv) ELSE comp END
-          |  FROM (
-          |    SELECT k.step, k.node, k.comp,
-          |      MAX(CASE WHEN k.node = e.u THEN k.comp END) OVER () AS cu,
-          |      MAX(CASE WHEN k.node = e.v THEN k.comp END) OVER () AS cv
-          |    FROM kr k JOIN ranked e ON e.r = k.step + 1)),
-          |fin AS (
-          |  SELECT node, comp FROM kr
-          |  WHERE step = (SELECT COUNT(*) FROM ranked))
-          |SELECT e.u, e.v, e.w, CAST(f.comp AS BIGINT) AS comp
-          |FROM ranked e
-          |JOIN kr su ON su.step = e.r - 1 AND su.node = e.u
-          |JOIN kr sv ON sv.step = e.r - 1 AND sv.node = e.v
-          |JOIN fin f ON f.node = e.u
-          |WHERE su.comp <> sv.comp""".stripMargin,
-
-      // Graph.degreeDistribution mirrored: distinct customer→supplier
-      // edges, degree panel, histogram + the zipfFit log-log OLS grids.
-      "graph_degree_dist" ->
-        """WITH e AS (
-          |  SELECT DISTINCT CAST(o_custkey AS VARCHAR) AS u,
-          |    CAST(l_suppkey AS VARCHAR) AS v
-          |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-          |  WHERE o_custkey IS NOT NULL AND l_suppkey IS NOT NULL),
-          |deg AS (SELECT u, CAST(COUNT(*) AS BIGINT) AS degree FROM e GROUP BY 1),
-          |hist AS (SELECT degree, CAST(COUNT(*) AS BIGINT) AS n_nodes FROM deg GROUP BY 1),
-          |tot AS (SELECT CAST(SUM(n_nodes) AS BIGINT) AS t FROM hist),
-          |pts AS (
-          |  SELECT FLOOR(LN(CAST(degree AS DOUBLE)) * 1e6) / 1e6 AS lx,
-          |    FLOOR(LN(CAST(n_nodes AS DOUBLE)) * 1e6) / 1e6 AS ly
-          |  FROM hist),
-          |moms AS (
-          |  SELECT COUNT(*) AS k,
-          |    SUM(CAST(FLOOR(lx * 1e8) / 1e8 AS DECIMAL(28,8))) AS sx,
-          |    SUM(CAST(FLOOR(ly * 1e8) / 1e8 AS DECIMAL(28,8))) AS sy,
-          |    SUM(CAST(FLOOR(lx * ly * 1e8) / 1e8 AS DECIMAL(28,8))) AS sxy,
-          |    SUM(CAST(FLOOR(lx * lx * 1e8) / 1e8 AS DECIMAL(28,8))) AS sxx
-          |  FROM pts WHERE lx IS NOT NULL),
-          |fit AS (
-          |  SELECT (k * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-          |    / NULLIF(k * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE), 0)
-          |    AS powerlaw_slope
-          |  FROM moms)
-          |SELECT degree, n_nodes,
-          |  CAST(n_nodes AS DOUBLE) / CAST(t AS DOUBLE) AS node_share,
-          |  powerlaw_slope
-          |FROM hist CROSS JOIN tot CROSS JOIN fit""".stripMargin,
-
-      // Graph.reciprocity: distinct directed flows left-joined to
-      // their own reversal, a 1-row panel.
-      "graph_reciprocity" ->
-        """WITH e AS (
-          |  SELECT DISTINCT sn.n_name AS src, cn.n_name AS dst
-          |  FROM lineitem
-          |  JOIN orders ON l_orderkey = o_orderkey
-          |  JOIN supplier ON l_suppkey = s_suppkey
-          |  JOIN customer ON o_custkey = c_custkey
-          |  JOIN nation sn ON s_nationkey = sn.n_nationkey
-          |  JOIN nation cn ON c_nationkey = cn.n_nationkey
-          |  WHERE sn.n_name <> cn.n_name),
-          |r AS (SELECT dst AS src, src AS dst, 1 AS rr FROM e)
-          |SELECT CAST(COUNT(*) AS BIGINT) AS n_edges,
-          |  CAST(SUM(CASE WHEN r.rr IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_reciprocated,
-          |  CAST(SUM(CASE WHEN r.rr IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
-          |    / CAST(COUNT(*) AS DOUBLE) AS reciprocity
-          |FROM e LEFT JOIN r ON r.src = e.src AND r.dst = e.dst""".stripMargin,
-
-      // Graph.bfsHops replayed as the recursive min-hop CTE (the
-      // dedup_clusters walk convention, depth-bounded to the
-      // operator's maxRounds).
-      "graph_bfs_hops" ->
-        """WITH RECURSIVE e0 AS MATERIALIZED (
-          |  SELECT sn.n_name AS src, cn.n_name AS dst
-          |  FROM lineitem
-          |  JOIN orders ON l_orderkey = o_orderkey
-          |  JOIN supplier ON l_suppkey = s_suppkey
-          |  JOIN customer ON o_custkey = c_custkey
-          |  JOIN nation sn ON s_nationkey = sn.n_nationkey
-          |  JOIN nation cn ON c_nationkey = cn.n_nationkey
-          |  WHERE sn.n_name <> cn.n_name
-          |  GROUP BY 1, 2),
-          |walk(node, d) AS (
-          |  SELECT 'NATION_3' AS node, 0 AS d
-          |  WHERE EXISTS (SELECT 1 FROM e0
-          |                WHERE src = 'NATION_3' OR dst = 'NATION_3')
-          |  UNION
-          |  SELECT e.dst, w.d + 1 FROM e0 e JOIN walk w ON w.node = e.src
-          |  WHERE w.d < 32)
-          |SELECT node, CAST(MIN(d) AS BIGINT) AS hops
-          |FROM walk GROUP BY 1""".stripMargin,
-
-      "graph_k_core" -> kCoreOracleSql(3, 6),
-
-      // Brandes betweenness unrolled to the registered maxDepth=8:
-      // exact BIGINT path counts forward, 1e-9-gridded DECIMAL
-      // dependency sums backward — see betweennessOracleSql.
-      "graph_betweenness" -> betweennessOracleSql(8),
-
-      // Closeness/harmonic over the shared forward chain — see
-      // closenessOracleSql.
-      "graph_closeness" -> closenessOracleSql(8),
-
-      // Eccentricity/diameter/radius over the same forward chain:
-      // per-source max depth + the two-extreme graph panel, exact
-      // integers end to end.
-      "graph_eccentricity" -> {
-        val maxDepth = 8
-        val dUnion = (1 to maxDepth)
-          .map(l => s"SELECT s, CAST($l AS BIGINT) AS d FROM bl$l")
-          .mkString(" UNION ALL ")
-        bfsForwardCtes(maxDepth) +
-          s""",
-             |ereach AS MATERIALIZED (
-             |  SELECT s AS node, CAST(COUNT(*) AS BIGINT) AS n_reached,
-             |    CAST(MAX(d) AS BIGINT) AS ecc
-             |  FROM ($dUnion) GROUP BY 1),
-             |epn AS MATERIALIZED (
-             |  SELECT n.node,
-             |    COALESCE(r.n_reached, CAST(0 AS BIGINT)) AS n_reached,
-             |    COALESCE(r.ecc, CAST(0 AS BIGINT)) AS eccentricity
-             |  FROM bn n LEFT JOIN ereach r ON r.node = n.node)
-             |SELECT epn.*, p.diameter, p.radius
-             |FROM epn CROSS JOIN (
-             |  SELECT MAX(eccentricity) AS diameter,
-             |    MIN(CASE WHEN n_reached > 0 THEN eccentricity END) AS radius
-             |  FROM epn) p""".stripMargin
-      },
-
-      // Same nation-flow edges, canonicalized undirected; the a<b<c
-      // orientation generates each triangle exactly once.
-      // Graph.assortativity mirrored: canonical edges, degree panel,
-      // exact decimal moments, fixed-order IEEE r on the 1-row panel.
-      "graph_assortativity" ->
-        """WITH flows AS (
-          |  SELECT sn.n_name AS src, cn.n_name AS dst
-          |  FROM lineitem
-          |  JOIN orders ON l_orderkey = o_orderkey
-          |  JOIN supplier ON l_suppkey = s_suppkey
-          |  JOIN customer ON o_custkey = c_custkey
-          |  JOIN nation sn ON s_nationkey = sn.n_nationkey
-          |  JOIN nation cn ON c_nationkey = cn.n_nationkey
-          |  WHERE sn.n_name <> cn.n_name),
-          |e AS (
-          |  SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-          |  FROM flows),
-          |deg AS (
-          |  SELECT node, CAST(COUNT(*) AS BIGINT) AS degree
-          |  FROM (SELECT a AS node FROM e UNION ALL SELECT b AS node FROM e)
-          |  GROUP BY 1),
-          |wd AS (
-          |  SELECT CAST(da.degree AS DECIMAL(19,0)) AS da,
-          |         CAST(db.degree AS DECIMAL(19,0)) AS db
-          |  FROM e JOIN deg da ON e.a = da.node JOIN deg db ON e.b = db.node),
-          |m AS (
-          |  SELECT CAST(COUNT(*) AS BIGINT) AS n_edges,
-          |    SUM(da + db) AS s1, SUM(da * da + db * db) AS s2,
-          |    SUM(da * db) AS sdd
-          |  FROM wd),
-          |nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_nodes FROM deg)
-          |SELECT n_nodes, n_edges,
-          |  (2.0 * CAST(sdd AS DOUBLE) / CAST(2 * n_edges AS DOUBLE)
-          |     - (CAST(s1 AS DOUBLE) / CAST(2 * n_edges AS DOUBLE))
-          |       * (CAST(s1 AS DOUBLE) / CAST(2 * n_edges AS DOUBLE)))
-          |  / NULLIF(CAST(s2 AS DOUBLE) / CAST(2 * n_edges AS DOUBLE)
-          |     - (CAST(s1 AS DOUBLE) / CAST(2 * n_edges AS DOUBLE))
-          |       * (CAST(s1 AS DOUBLE) / CAST(2 * n_edges AS DOUBLE)), 0.0)
-          |  AS assortativity
-          |FROM m, nn""".stripMargin,
-
-      "graph_triangles" ->
-        """WITH flows AS (
-          |  SELECT sn.n_name AS src, cn.n_name AS dst
-          |  FROM lineitem
-          |  JOIN orders ON l_orderkey = o_orderkey
-          |  JOIN supplier ON l_suppkey = s_suppkey
-          |  JOIN customer ON o_custkey = c_custkey
-          |  JOIN nation sn ON s_nationkey = sn.n_nationkey
-          |  JOIN nation cn ON c_nationkey = cn.n_nationkey
-          |  WHERE sn.n_name <> cn.n_name),
-          |e AS (
-          |  SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-          |  FROM flows),
-          |w AS (
-          |  SELECT ab.a AS node_a, ab.b AS node_b, ac.b AS node_c
-          |  FROM e ab JOIN e ac ON ab.a = ac.a AND ab.b < ac.b)
-          |SELECT node_a, node_b, node_c
-          |FROM w JOIN e bc ON w.node_b = bc.a AND w.node_c = bc.b""".stripMargin,
-
-      // Degree and incident-triangle panels over the same canonical
-      // edges; integer-exact until the one terminal division.
-      "graph_clustering_coeff" ->
-        """WITH flows AS (
-          |  SELECT sn.n_name AS src, cn.n_name AS dst
-          |  FROM lineitem
-          |  JOIN orders ON l_orderkey = o_orderkey
-          |  JOIN supplier ON l_suppkey = s_suppkey
-          |  JOIN customer ON o_custkey = c_custkey
-          |  JOIN nation sn ON s_nationkey = sn.n_nationkey
-          |  JOIN nation cn ON c_nationkey = cn.n_nationkey
-          |  WHERE sn.n_name <> cn.n_name),
-          |e AS (
-          |  SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-          |  FROM flows),
-          |deg AS (
-          |  SELECT node, CAST(COUNT(*) AS BIGINT) AS degree
-          |  FROM (SELECT a AS node FROM e UNION ALL SELECT b AS node FROM e)
-          |  GROUP BY 1),
-          |w AS (
-          |  SELECT ab.a AS node_a, ab.b AS node_b, ac.b AS node_c
-          |  FROM e ab JOIN e ac ON ab.a = ac.a AND ab.b < ac.b),
-          |tri AS (
-          |  SELECT node_a, node_b, node_c
-          |  FROM w JOIN e bc ON w.node_b = bc.a AND w.node_c = bc.b),
-          |tc AS (
-          |  SELECT node, CAST(COUNT(*) AS BIGINT) AS n_triangles
-          |  FROM (SELECT node_a AS node FROM tri
-          |        UNION ALL SELECT node_b AS node FROM tri
-          |        UNION ALL SELECT node_c AS node FROM tri)
-          |  GROUP BY 1)
-          |SELECT d.node, d.degree,
-          |  COALESCE(tc.n_triangles, 0) AS n_triangles,
-          |  CASE WHEN d.degree >= 2 THEN
-          |    CAST(2 * COALESCE(tc.n_triangles, 0) AS DOUBLE)
-          |      / CAST(d.degree * (d.degree - 1) AS DOUBLE)
-          |  ELSE 0.0 END AS clustering
-          |FROM deg d LEFT JOIN tc ON d.node = tc.node""".stripMargin,
-
-      // Link-prediction replay: wedge pairs per shared neighbor,
-      // 1/ln(deg(w)) grid-quantized into DECIMAL(28,6) partials,
-      // NOT EXISTS drops adjacent pairs, raw Jaccard quotient.
-      "graph_link_prediction" ->
-        """WITH flows AS (
-          |  SELECT sn.n_name AS src, cn.n_name AS dst, COUNT(*) AS w
-          |  FROM lineitem
-          |  JOIN orders ON l_orderkey = o_orderkey
-          |  JOIN supplier ON l_suppkey = s_suppkey
-          |  JOIN customer ON o_custkey = c_custkey
-          |  JOIN nation sn ON s_nationkey = sn.n_nationkey
-          |  JOIN nation cn ON c_nationkey = cn.n_nationkey
-          |  WHERE sn.n_name <> cn.n_name
-          |  GROUP BY 1, 2),
-          |thr AS (SELECT quantile_cont(w, 0.9) AS t FROM flows),
-          |sparse AS (SELECT src, dst FROM flows, thr WHERE w >= t),
-          |e AS (
-          |  SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-          |  FROM sparse),
-          |nbr AS (
-          |  SELECT a AS node, b AS nb FROM e
-          |  UNION ALL SELECT b AS node, a AS nb FROM e),
-          |deg AS (
-          |  SELECT node, CAST(COUNT(*) AS BIGINT) AS degree
-          |  FROM nbr GROUP BY 1),
-          |wedge AS (
-          |  SELECT l.node AS node_a, r.node AS node_b, l.nb AS w
-          |  FROM nbr l JOIN nbr r ON l.nb = r.nb AND l.node < r.node),
-          |pairs AS (
-          |  SELECT node_a, node_b, CAST(COUNT(*) AS BIGINT) AS n_common,
-          |    SUM(CAST(FLOOR((1.0 / ln(CAST(dw.degree AS DOUBLE))) * 1e6) / 1e6
-          |      AS DECIMAL(28,6))) AS aa
-          |  FROM wedge JOIN deg dw ON wedge.w = dw.node
-          |  GROUP BY 1, 2),
-          |cand AS (
-          |  SELECT * FROM pairs p
-          |  WHERE NOT EXISTS (SELECT 1 FROM e
-          |    WHERE e.a = p.node_a AND e.b = p.node_b))
-          |SELECT c.node_a, c.node_b, c.n_common,
-          |  da.degree AS deg_a, db.degree AS deg_b,
-          |  CAST(c.n_common AS DOUBLE)
-          |    / CAST(da.degree + db.degree - c.n_common AS DOUBLE) AS jaccard,
-          |  CAST(c.aa AS DOUBLE) AS adamic_adar
-          |FROM cand c
-          |JOIN deg da ON c.node_a = da.node
-          |JOIN deg db ON c.node_b = db.node""".stripMargin,
-
-      "ana_market_basket" ->
-        """WITH items AS (
-          |  SELECT DISTINCT l_orderkey AS bk, p_brand AS item
-          |  FROM lineitem JOIN part ON l_partkey = p_partkey),
-          |nb AS (SELECT CAST(COUNT(DISTINCT bk) AS BIGINT) AS n_baskets FROM items),
-          |marg AS (SELECT item, CAST(COUNT(*) AS BIGINT) AS n_i FROM items GROUP BY 1),
-          |pairs AS (
-          |  SELECT a.item AS item_a, b.item AS item_b, CAST(COUNT(*) AS BIGINT) AS n_ab
-          |  FROM items a JOIN items b ON a.bk = b.bk AND a.item < b.item
-          |  GROUP BY 1, 2 HAVING COUNT(*) >= 2)
-          |SELECT item_a, item_b, n_ab, ma.n_i AS n_a, mb.n_i AS n_b, n_baskets,
-          |  CAST(n_ab AS DOUBLE) / CAST(n_baskets AS DOUBLE) AS support,
-          |  CAST(n_ab AS DOUBLE) / CAST(ma.n_i AS DOUBLE) AS confidence,
-          |  CAST(n_ab * n_baskets AS DOUBLE) / CAST(ma.n_i * mb.n_i AS DOUBLE) AS lift
-          |FROM pairs
-          |JOIN marg ma ON ma.item = item_a
-          |JOIN marg mb ON mb.item = item_b
-          |CROSS JOIN nb""".stripMargin,
-
-      // KM churn curve: suffix at-risk counts, quantized ln(1-h),
-      // decimal-accumulated cumulative log-survival; the closed
-      // window's final day (hazard 1) is NULL by definition.
-      "ana_survival_curve" ->
-        """WITH lastday AS (
-          |  SELECT user_id, MAX(CAST(ts AS DATE)) AS last_day
-          |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
-          |  GROUP BY 1),
-          |churn AS (
-          |  SELECT last_day, CAST(COUNT(*) AS BIGINT) AS n_churned
-          |  FROM lastday GROUP BY 1),
-          |risk AS (
-          |  SELECT last_day, n_churned,
-          |    CAST(SUM(n_churned) OVER (ORDER BY last_day DESC
-          |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS n_at_risk
-          |  FROM churn),
-          |hz AS (
-          |  SELECT last_day, n_churned, n_at_risk,
-          |    CAST(n_churned AS DOUBLE) / CAST(n_at_risk AS DOUBLE) AS hazard,
-          |    CASE WHEN n_churned < n_at_risk THEN
-          |      FLOOR(LN(1.0 - CAST(n_churned AS DOUBLE) / CAST(n_at_risk AS DOUBLE)) * 1e6) / 1e6
-          |    END AS l1m
-          |  FROM risk)
-          |SELECT last_day, n_churned, n_at_risk, hazard,
-          |  CASE WHEN n_churned < n_at_risk THEN
-          |    CAST(SUM(CAST(l1m AS DECIMAL(28,6))) OVER (ORDER BY last_day
-          |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
-          |  END AS log_survival,
-          |  CAST(SUM(CAST(FLOOR(hazard * 1e6) / 1e6 AS DECIMAL(28,6)))
-          |    OVER (ORDER BY last_day
-          |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS cum_hazard
-          |FROM hz""".stripMargin,
-
-      // The oracle states the range join declaratively (DuckDB's
-      // IEJoin executes it); the Spark side must reproduce it through
-      // the bucketized equi-join + residual plan.
-      "join_range_interval" ->
-        """WITH iv AS (
-          |  SELECT o_orderkey, CAST(o_orderdate AS DATE) AS lo_d,
-          |    MAX(CAST(l_shipdate AS DATE)) AS hi_d
-          |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-          |  GROUP BY 1, 2),
-          |pts AS (SELECT DISTINCT CAST(o_orderdate AS DATE) AS d FROM orders)
-          |SELECT d, CAST(COUNT(*) AS BIGINT) AS n_open_orders
-          |FROM pts JOIN iv ON iv.lo_d <= pts.d AND pts.d <= iv.hi_d
-          |GROUP BY 1""".stripMargin,
-
-      // Integer-exact sequence mining: lead-window 3-grams per user,
-      // total-ordered top-N.
-      "ana_top_paths" ->
-        """WITH seqs AS (
-          |  SELECT user_id, event_type AS e1,
-          |    LEAD(event_type, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS e2,
-          |    LEAD(event_type, 2) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS e3
-          |  FROM events
-          |  WHERE user_id IS NOT NULL AND ts IS NOT NULL AND event_type IS NOT NULL)
-          |SELECT e1, e2, e3, CAST(COUNT(*) AS BIGINT) AS n_paths,
-          |  CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users
-          |FROM seqs WHERE e2 IS NOT NULL AND e3 IS NOT NULL
-          |GROUP BY 1, 2, 3
-          |ORDER BY n_paths DESC, e1, e2, e3
-          |LIMIT 20""".stripMargin,
-
-      "ana_od_matrix" ->
-        """SELECT sn.n_name AS zona_origen, cn.n_name AS zona_destino,
-          |  COUNT(*) AS viajes_totales,
-          |  CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(18,2))), 0) AS DOUBLE) AS demanda_expandida,
-          |  ROUND(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / NULLIF(COUNT(*), 0), 2) AS qty_promedio
-          |FROM lineitem
-          |JOIN orders ON l_orderkey = o_orderkey
-          |JOIN supplier ON l_suppkey = s_suppkey
-          |JOIN customer ON o_custkey = c_custkey
-          |JOIN nation sn ON s_nationkey = sn.n_nationkey
-          |JOIN nation cn ON c_nationkey = cn.n_nationkey
-          |WHERE sn.n_name <> cn.n_name
-          |GROUP BY 1, 2
-          |ORDER BY demanda_expandida DESC, zona_origen, zona_destino
-          |LIMIT 30""".stripMargin)
-  }
-
-  private val dedupGrainSql =
-    """SELECT event_id, ts, user_id, event_type, value, props FROM (
-      |  SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id, event_type ORDER BY ts DESC, event_id DESC) AS rn
-      |  FROM events) WHERE rn = 1""".stripMargin
-
-  /** Shared by sessionize_gap and its session_window twin — the two
-    * operators must agree row for row, so they share one oracle.
-    */
-  private val sessionizeOracleSql =
-    """WITH marked AS (
-      |  SELECT user_id, ts, event_id, value,
-      |    CASE WHEN lag_ms IS NULL OR ms - lag_ms > 1800000 THEN 1 ELSE 0 END AS new_s
-      |  FROM (
-      |    SELECT user_id, ts, event_id, value,
-      |      epoch_ms(ts) AS ms,
-      |      LAG(epoch_ms(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS lag_ms
-      |    FROM events)),
-      |sess AS (
-      |  SELECT *, CAST(SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-      |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_seq
-      |  FROM marked)
-      |SELECT user_id, session_seq,
-      |  MIN(ts) AS session_start, MAX(ts) AS session_end,
-      |  COUNT(*) AS n_events,
-      |  CAST(COALESCE(ROUND(SUM(CAST(value AS DECIMAL(18,2))), 2), 0) AS DOUBLE) AS value_sum
-      |FROM sess GROUP BY 1, 2""".stripMargin
-
-  /** DuckDB twins of the batch forms of the streaming operators. */
-  private def streamingOracleSql: Map[String, String] = Map(
-    "sessionize_window" -> sessionizeOracleSql,
-
-    "stream_dedup_events" ->
-      """SELECT event_id, ts, user_id, event_type, value, props FROM (
-        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id, event_type ORDER BY ts, event_id) AS rn
-        |  FROM events) WHERE rn = 1""".stripMargin,
-    "stream_events_30m" ->
-      """SELECT make_timestamp(CAST(FLOOR(epoch(ts) / 1800) AS BIGINT) * 1800 * 1000000) AS window_start,
-        |  UPPER(TRIM(event_type)) AS event_type_norm,
-        |  COUNT(*) AS n_events,
-        |  CAST(COALESCE(ROUND(SUM(CAST(value AS DECIMAL(18,2))), 2), 0) AS DOUBLE) AS value_sum
-        |FROM events GROUP BY 1, 2""".stripMargin,
-
-    // An event at t belongs to the two slide-aligned starts
-    // {floor30(t), floor30(t) - 30m}: start <= t < start + 1h.
-    "stream_events_sliding" ->
-      """WITH e AS (
-        |  SELECT UPPER(TRIM(event_type)) AS event_type_norm, value,
-        |    make_timestamp(CAST(FLOOR(epoch(ts) / 1800) AS BIGINT)
-        |                   * 1800 * 1000000) AS s0
-        |  FROM events WHERE ts IS NOT NULL),
-        |x AS (
-        |  SELECT UNNEST([s0, s0 - INTERVAL 30 MINUTE]) AS window_start,
-        |    event_type_norm, value
-        |  FROM e)
-        |SELECT window_start, event_type_norm, COUNT(*) AS n_events,
-        |  CAST(COALESCE(ROUND(SUM(CAST(value AS DECIMAL(18,2))), 2), 0)
-        |       AS DOUBLE) AS value_sum
-        |FROM x GROUP BY 1, 2""".stripMargin,
-
-    "sessionize_gap" -> sessionizeOracleSql,
-
-    // Session-KPI replay over the same sessionizer CTE: exact counts,
-    // quantile_cont percentiles, decimal value sums, one division each.
-    "ana_session_stats" ->
-      s"""WITH sess AS MATERIALIZED ($sessionizeOracleSql)
-         |SELECT CAST(COUNT(*) AS BIGINT) AS n_sessions,
-         |  CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users,
-         |  quantile_cont(epoch_ms(session_end) - epoch_ms(session_start), 0.5) AS p50_duration_ms,
-         |  quantile_cont(epoch_ms(session_end) - epoch_ms(session_start), 0.9) AS p90_duration_ms,
-         |  CAST(SUM(n_events) AS DOUBLE) / COUNT(*) AS avg_events,
-         |  CAST(SUM(CASE WHEN n_events = 1 THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*) AS bounce_rate,
-         |  CAST(SUM(CAST(value_sum AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) AS avg_value
-         |FROM sess""".stripMargin,
-
-    // Sweep replay: starts before ends at a shared instant (delta
-    // DESC), total order closed by (user_id, session_seq), running
-    // sum over exact longs, struct-argmax with earliest-instant ties.
-    "ana_peak_concurrency" ->
-      s"""WITH sess AS MATERIALIZED ($sessionizeOracleSql),
-         |sw AS (
-         |  SELECT session_start AS ts, CAST(1 AS BIGINT) AS delta, user_id, session_seq FROM sess
-         |  UNION ALL
-         |  SELECT session_end, CAST(-1 AS BIGINT), user_id, session_seq FROM sess),
-         |c AS (
-         |  SELECT ts,
-         |    SUM(delta) OVER (ORDER BY ts, delta DESC, user_id, session_seq
-         |      ROWS UNBOUNDED PRECEDING) AS run
-         |  FROM sw)
-         |SELECT CAST(MAX({'p': run, 'negts': -epoch_ms(ts)}).p AS BIGINT) AS peak_concurrency,
-         |  make_timestamp(-MAX({'p': run, 'negts': -epoch_ms(ts)}).negts * 1000) AS at_ts,
-         |  CAST((SELECT COUNT(*) FROM sw) / 2 AS BIGINT) AS n_intervals
-         |FROM c""".stripMargin,
-
-    "gold_cut_replace" ->
-      s"""WITH c AS (${cleanseEventsSql("")}),
-         |stale AS (SELECT * FROM c WHERE event_id % 2 = 0),
-         |inc AS (SELECT * FROM c WHERE date_sk >= 20240122)
-         |SELECT * FROM stale s
-         |WHERE NOT EXISTS (SELECT 1 FROM inc i WHERE i.date_sk = s.date_sk)
-         |UNION ALL
-         |SELECT * FROM inc""".stripMargin,
-
-    "contract_gate_events" ->
-      """WITH norm AS (
-        |  SELECT event_id, ts, user_id,
-        |    NULLIF(UPPER(TRIM(event_type)), '') AS event_type,
-        |    value, props
-        |  FROM events)
-        |SELECT *,
-        |  CASE WHEN user_id IS NULL THEN 'MISSING_ID'
-        |       WHEN event_type IS NULL THEN 'MISSING_TYPE'
-        |       WHEN event_type NOT IN ('CLICK','SIGNUP','ERROR','VIEW','PURCHASE') THEN 'BAD_TYPE'
-        |       WHEN ts IS NULL THEN 'MISSING_TIMESTAMP'
-        |       WHEN NOT COALESCE(value IS NULL OR value BETWEEN 0 AND 450, FALSE) THEN 'BAD_RANGE_VALUE'
-        |       WHEN value IS NULL AND props IS NULL THEN 'EMPTY_PAYLOAD'
-        |       ELSE NULL END AS reason_code
-        |FROM norm""".stripMargin,
-
-    "quality_threshold_gate" ->
-      s"""SELECT reason_code, n_rows,
-         |  n_rows / SUM(n_rows) OVER () AS rate,
-         |  CASE WHEN reason_code = 'VALID' THEN 'OK'
-         |       WHEN n_rows / SUM(n_rows) OVER () >= 0.01 THEN 'FAIL'
-         |       WHEN n_rows / SUM(n_rows) OVER () >= 0.00001 THEN 'WARN'
-         |       ELSE 'OK' END AS status
-         |FROM (SELECT COALESCE(reason_code, 'VALID') AS reason_code, COUNT(*) AS n_rows
-         |      FROM (${qualityAnnotatedSql()}) GROUP BY 1)""".stripMargin,
-
-    "contract_sample_gate" ->
-      """WITH s AS (
-        |  SELECT * FROM events
-        |  ORDER BY md5(COALESCE(CAST(event_id AS VARCHAR), '<NULL>')) LIMIT 2000),
-        |norm AS (
-        |  SELECT event_id, ts, user_id,
-        |    NULLIF(UPPER(TRIM(event_type)), '') AS event_type,
-        |    value, props
-        |  FROM s),
-        |ann AS (
-        |  SELECT CASE WHEN user_id IS NULL THEN 'MISSING_ID'
-        |       WHEN event_type IS NULL THEN 'MISSING_TYPE'
-        |       WHEN event_type NOT IN ('CLICK','SIGNUP','ERROR','VIEW','PURCHASE') THEN 'BAD_TYPE'
-        |       WHEN ts IS NULL THEN 'MISSING_TIMESTAMP'
-        |       WHEN NOT COALESCE(value IS NULL OR value BETWEEN 0 AND 450, FALSE) THEN 'BAD_RANGE_VALUE'
-        |       WHEN value IS NULL AND props IS NULL THEN 'EMPTY_PAYLOAD'
-        |       ELSE NULL END AS reason_code
-        |  FROM norm)
-        |SELECT reason_code, n_rows,
-        |  n_rows / SUM(n_rows) OVER () AS rate,
-        |  CASE WHEN reason_code = 'VALID' THEN 'OK'
-        |       WHEN n_rows / SUM(n_rows) OVER () >= 0.01 THEN 'FAIL'
-        |       WHEN n_rows / SUM(n_rows) OVER () >= 0.00001 THEN 'WARN'
-        |       ELSE 'OK' END AS status
-        |FROM (SELECT COALESCE(reason_code, 'VALID') AS reason_code, COUNT(*) AS n_rows
-        |      FROM ann GROUP BY 1)""".stripMargin)
-
-  /** DuckDB twin of the brute-force ANN baseline. Float parity is
-    * exact (see below); the centroid twin goes float -> DOUBLE ->
-    * DECIMAL in both engines so the order-free decimal sums agree.
-    */
-  private val centroidOracleSql: Map[String, String] = Map(
-    "embedding_centroids" ->
-      """WITH ex AS (
-        |  SELECT label,
-        |    UNNEST(range(0, len(embedding))) AS dim_pos,
-        |    UNNEST(embedding) AS v
-        |  FROM embeddings WHERE embedding IS NOT NULL)
-        |SELECT label, CAST(dim_pos AS INTEGER) AS dim_pos,
-        |  COUNT(*) AS n_vectors,
-        |  ROUND(CAST(SUM(CAST(CAST(v AS DOUBLE) AS DECIMAL(28,12))) AS DOUBLE) / COUNT(*), 6) AS centroid_v
-        |FROM ex GROUP BY 1, 2""".stripMargin,
-
-    // Ann.dimStats mirrored: exact float→double→decimal mean sums
-    // (the centroids precedent), squares gridded 1e-12 (components
-    // are sub-unit) before their decimal partials, mirrored variance
-    // identity, per-dim variance re-gridded before the total sum.
-    "embedding_dim_stats" ->
-      """WITH ex AS (
-        |  SELECT UNNEST(range(0, len(embedding))) AS dim_pos,
-        |    UNNEST(embedding) AS v
-        |  FROM embeddings WHERE embedding IS NOT NULL),
-        |p AS (
-        |  SELECT CAST(dim_pos AS INTEGER) AS dim_pos, COUNT(*) AS n_vectors,
-        |    SUM(CAST(FLOOR(CAST(v AS DOUBLE) * 1e12) / 1e12 AS DECIMAL(28,12))) AS s,
-        |    SUM(CAST(FLOOR(CAST(v AS DOUBLE) * CAST(v AS DOUBLE) * 1e12) / 1e12
-        |      AS DECIMAL(28,12))) AS ss,
-        |    MIN(CAST(v AS DOUBLE)) AS min_v, MAX(CAST(v AS DOUBLE)) AS max_v
-        |  FROM ex GROUP BY 1),
-        |p2 AS (
-        |  SELECT dim_pos, n_vectors,
-        |    CAST(s AS DOUBLE) / CAST(n_vectors AS DOUBLE) AS mean_v,
-        |    (CAST(ss AS DOUBLE)
-        |      - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / CAST(n_vectors AS DOUBLE))
-        |      / CAST(n_vectors AS DOUBLE) AS var_v,
-        |    min_v, max_v
-        |  FROM p),
-        |tv AS (
-        |  SELECT SUM(CAST(FLOOR(var_v * 1e12) / 1e12 AS DECIMAL(28,12))) AS t
-        |  FROM p2)
-        |SELECT dim_pos, n_vectors, mean_v, SQRT(var_v) AS std_v, min_v, max_v,
-        |  (FLOOR(var_v * 1e12) / 1e12) / NULLIF(CAST(t AS DOUBLE), 0.0) AS var_share
-        |FROM p2 CROSS JOIN tv""".stripMargin)
-
-  // ── r14 LSH-tier replays (former §5.1 rows-only) ──────────────────
-  //
-  // Random-hyperplane LSH is fully SQL-replayable once (a) each
-  // (table, plane) coefficient vector is drawn from its own seeded
-  // stream (Ann.planeVec — independent of how many planes a run
-  // uses), (b) the plane count derives from the corpus size through
-  // exact POWER(2,p) comparisons instead of libm log2 (Ann.planesFor),
-  // and (c) the sign dots ride the pre-verified left-fold kernel.
-  // The oracle embeds the 3x24x64 plane literals once and masks
-  // `j < planes` at runtime, so ONE static statement replays every
-  // scale (sf0.01 gate and the 10x replica alike) — the
-  // embedding_random_projection literal-matrix recipe extended to a
-  // data-adaptive index.
-
-  /** Shortest-repr double literal (round-trips to the same IEEE
-    * double in any strtod-correct parser, DuckDB included).
-    */
-  private def sqlDouble(d: Double): String = d.toString
-
-  private def lshPlaneDotSql(vExpr: String, plane: Array[Double]): String =
-    s"list_reduce(list_prepend(0.0, list_transform(list_zip($vExpr, " +
-      plane.map(sqlDouble).mkString("[", ", ", "]") +
-      "), p -> p[1] * p[2])), (a, b) -> a + b)"
-
-  /** Shared LSH CTE block: corpus count, exact-power plane count,
-    * normed vectors, and the (vec, table, bucket) relation with the
-    * masked 24-term sign sum per table.
-    */
-  private def lshBucketCtes(tables: Int = 3, maxPlanes: Int = 24,
-                            dim: Int = 64, seed: Long = 42L): String = {
-    val tableSelects = (0 until tables).map { tb =>
-      val terms = (0 until maxPlanes).map { j =>
-        val pv = graft.operators.Ann.planeVec(tb, j, dim, seed)
-        s"(CASE WHEN $j < pl.planes AND ${lshPlaneDotSql("nb.v", pv)} > 0 THEN ${1 << j} ELSE 0 END)"
-      }.mkString("\n    + ")
-      s"SELECT nb.vec_id, $tb AS tbl,\n    $terms AS bucket\n  FROM nb, pl"
-    }.mkString("\n  UNION ALL\n  ")
-    s"""cnt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM embeddings),
-       |pl AS (
-       |  SELECT LEAST(24, GREATEST(4, COALESCE((
-       |    SELECT MIN(p) FROM range(0, 25) t(p), cnt
-       |    WHERE POWER(2.0, CAST(p AS DOUBLE)) >= GREATEST(1.0, CAST(n AS DOUBLE) / 128.0)),
-       |    24))) AS planes),
-       |nb AS MATERIALIZED (
-       |  SELECT vec_id, v,
-       |    sqrt(list_reduce(list_prepend(0.0, list_transform(v, x -> x * x)), (a, b) -> a + b)) AS nrm
-       |  FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)),
-       |hb AS MATERIALIZED (
-       |  $tableSelects)""".stripMargin
-  }
-
-  private val lshCosSql =
-    "list_reduce(list_prepend(0.0, list_transform(list_zip(na.v, nb2.v), " +
-      "p -> p[1] * p[2])), (a, b) -> a + b) / (na.nrm * nb2.nrm)"
-
-  /** Ann.cosineNearDupPairs replayed: banded candidates, exact-cosine
-    * verify at the threshold.
-    */
-  private def lshNearDupOracleSql(threshold: Double): String =
-    s"""WITH ${lshBucketCtes()},
-       |cand AS MATERIALIZED (
-       |  SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
-       |  FROM hb a JOIN hb b ON a.tbl = b.tbl AND a.bucket = b.bucket
-       |    AND a.vec_id < b.vec_id)
-       |SELECT vec_a, vec_b, cos_sim FROM (
-       |  SELECT c.vec_a, c.vec_b, $lshCosSql AS cos_sim
-       |  FROM cand c
-       |  JOIN nb na ON na.vec_id = c.vec_a
-       |  JOIN nb nb2 ON nb2.vec_id = c.vec_b)
-       |WHERE cos_sim >= $threshold""".stripMargin
-
-  /** TextDedup.connectedComponents over the near-dup pairs, as the
-    * recursive min-label walk (the graph_components recipe).
-    */
-  private def lshClustersOracleSql(threshold: Double): String =
-    s"""WITH RECURSIVE ${lshBucketCtes()},
-       |cand AS MATERIALIZED (
-       |  SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
-       |  FROM hb a JOIN hb b ON a.tbl = b.tbl AND a.bucket = b.bucket
-       |    AND a.vec_id < b.vec_id),
-       |pairs AS MATERIALIZED (
-       |  SELECT vec_a, vec_b FROM (
-       |    SELECT c.vec_a, c.vec_b, $lshCosSql AS cos_sim
-       |    FROM cand c
-       |    JOIN nb na ON na.vec_id = c.vec_a
-       |    JOIN nb nb2 ON nb2.vec_id = c.vec_b)
-       |  WHERE cos_sim >= $threshold),
-       |edges AS (
-       |  SELECT vec_a AS src, vec_b AS dst FROM pairs
-       |  UNION
-       |  SELECT vec_b, vec_a FROM pairs),
-       |walk(id, label) AS (
-       |  SELECT src, src FROM edges
-       |  UNION
-       |  SELECT e.src, w.label FROM edges e JOIN walk w ON w.id = e.dst)
-       |SELECT id AS doc_id, MIN(label) AS cluster_id FROM walk GROUP BY id""".stripMargin
-
-  /** Ann.mutualKnnLsh replayed: scored candidates, per-node rank,
-    * mutual-membership join.
-    */
-  private def lshMutualKnnOracleSql(k: Int): String =
-    s"""WITH ${lshBucketCtes()},
-       |cand AS MATERIALIZED (
-       |  SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
-       |  FROM hb a JOIN hb b ON a.tbl = b.tbl AND a.bucket = b.bucket
-       |    AND a.vec_id < b.vec_id),
-       |scored AS MATERIALIZED (
-       |  SELECT c.vec_a, c.vec_b, $lshCosSql AS cos_sim
-       |  FROM cand c
-       |  JOIN nb na ON na.vec_id = c.vec_a
-       |  JOIN nb nb2 ON nb2.vec_id = c.vec_b),
-       |directed AS (
-       |  SELECT vec_a AS node, vec_b AS nbr, cos_sim FROM scored
-       |  UNION ALL
-       |  SELECT vec_b, vec_a, cos_sim FROM scored),
-       |ranked AS MATERIALIZED (
-       |  SELECT * FROM (
-       |    SELECT node, nbr, cos_sim,
-       |      CAST(ROW_NUMBER() OVER (PARTITION BY node ORDER BY cos_sim DESC, nbr) AS INTEGER) AS rank
-       |    FROM directed) WHERE rank <= $k)
-       |SELECT x.node AS node_a, x.nbr AS node_b, x.cos_sim,
-       |  x.rank AS rank_ab, y.rank AS rank_ba
-       |FROM ranked x JOIN ranked y ON x.node = y.nbr AND x.nbr = y.node
-       |WHERE x.node < x.nbr""".stripMargin
-
-  /** Ann.lshTopK / lshMultiProbeTopK replayed: query buckets (plus the
-    * Hamming-1 probe fan for multiprobe), banded candidates, exact
-    * cosine, global rank.
-    */
-  private def lshTopKOracleSql(nQueries: Int, k: Int, multiprobe: Boolean): String = {
-    val probes =
-      if (!multiprobe)
-        """qp AS (
-          |  SELECT vec_id AS q_id, tbl AS q_tbl, bucket AS q_bucket
-          |  FROM hb WHERE vec_id < %NQ%),""".stripMargin
-      else
-        """qp AS (
-          |  SELECT DISTINCT q_id, q_tbl,
-          |    CASE WHEN j = -1 THEN q_bucket ELSE xor(q_bucket, (1 << j)) END AS q_bucket
-          |  FROM (SELECT vec_id AS q_id, tbl AS q_tbl, bucket AS q_bucket
-          |        FROM hb WHERE vec_id < %NQ%),
-          |    range(-1, 24) r(j), pl
-          |  WHERE j = -1 OR j < pl.planes),""".stripMargin
-    s"""WITH ${lshBucketCtes()},
-       |${probes.replace("%NQ%", nQueries.toString)}
-       |cand AS MATERIALIZED (
-       |  SELECT DISTINCT qp.q_id, hb.vec_id
-       |  FROM hb JOIN qp ON hb.tbl = qp.q_tbl AND hb.bucket = qp.q_bucket
-       |    AND hb.vec_id <> qp.q_id)
-       |SELECT q_id,
-       |  CAST(ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos_sim DESC, neighbor_id) AS INTEGER) AS rank,
-       |  neighbor_id, cos_sim
-       |FROM (
-       |  SELECT c.q_id, c.vec_id AS neighbor_id,
-       |    list_reduce(list_prepend(0.0, list_transform(list_zip(na.v, nq.v), p -> p[1] * p[2])), (a, b) -> a + b)
-       |      / (na.nrm * nq.nrm) AS cos_sim
-       |  FROM cand c
-       |  JOIN nb na ON na.vec_id = c.vec_id
-       |  JOIN nb nq ON nq.vec_id = c.q_id)
-       |QUALIFY rank <= $k""".stripMargin
-  }
-
-  // ── r14 IVF/PQ-tier replays (former §5.1 rows-only) ───────────────
-  //
-  // The ivf/pq "codebook training" was never iterative: centroids are
-  // stride samples (every 31st vec_id, lowest-id LIMIT) and PQ
-  // codebooks the first ks sampled subvectors per subspace —
-  // deterministic RELATIONS, so the whole index pipeline (assignment
-  // ranks, residuals, ADC tables, shortlists, exact re-ranks) replays
-  // as SQL over the pre-verified left-fold kernel. The one float
-  // hazard was the ADC DECIMAL partial over raw full-entropy doubles;
-  // both engines now floor-grid it to the 1e-12 lattice first (§5).
-
-  /** Left-fold dot of two DOUBLE[] expressions (the proven kernel). */
-  private def fdot(a: String, b: String): String =
-    s"list_reduce(list_prepend(0.0, list_transform(list_zip($a, $b), " +
-      "p -> p[1] * p[2])), (a, b) -> a + b)"
-
-  /** Normed corpus (`Ann.prepared`) + broadcast query panel. */
-  private def annNbQCtes(nQueries: Int): String =
-    s"""nb AS MATERIALIZED (
-       |  SELECT vec_id, v,
-       |    sqrt(list_reduce(list_prepend(0.0, list_transform(v, x -> x * x)), (a, b) -> a + b)) AS nrm
-       |  FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)),
-       |q AS (SELECT vec_id AS q_id, v AS qv, nrm AS qnrm FROM nb WHERE vec_id < $nQueries)""".stripMargin
-
-  /** Query panel alone (for composition on top of lshBucketCtes,
-    * whose `nb` is the same prepared relation).
-    */
-  private def annQCte(nQueries: Int): String =
-    s"q AS (SELECT vec_id AS q_id, v AS qv, nrm AS qnrm FROM nb WHERE vec_id < $nQueries)"
-
-  /** Stride-sampled centroid panel + nearest-cell assignment ranks
-    * (Ann.ivfTopK's `centroids`/`assigned`); shared by the IVF oracle,
-    * the IVF-PQ residual tier and the recall panel.
-    */
-  private def ivfAsgCtes(nCentroids: Int = 16, stride: Long = 31L): String =
-    s"""ivf_cent AS MATERIALIZED (
-       |  SELECT vec_id AS c_id, v AS cv, nrm AS cnrm FROM nb
-       |  WHERE vec_id % $stride = 0 ORDER BY vec_id LIMIT $nCentroids),
-       |ivf_asg AS MATERIALIZED (
-       |  SELECT vec_id, c_id,
-       |    ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY csim DESC, c_id) AS crank
-       |  FROM (
-       |    SELECT nb.vec_id, c.c_id,
-       |      ${fdot("nb.v", "c.cv")} / (nb.nrm * c.cnrm) AS csim
-       |    FROM nb CROSS JOIN ivf_cent c))""".stripMargin
-
-  /** IVF top-k as a CTE named `$name`: probe nProbe nearest cells,
-    * exact cosine within probed cells, global rank.
-    */
-  private def ivfTopCte(name: String, nQueries: Int, k: Int, nProbe: Int = 4): String =
-    s"""$name AS (
-       |  SELECT q_id,
-       |    CAST(ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos_sim DESC, neighbor_id) AS INTEGER) AS rank,
-       |    neighbor_id, cos_sim
-       |  FROM (
-       |    SELECT p.q_id, cell.vec_id AS neighbor_id,
-       |      ${fdot("na.v", "q.qv")} / (na.nrm * q.qnrm) AS cos_sim
-       |    FROM (SELECT vec_id, c_id AS cell FROM ivf_asg WHERE crank = 1) cell
-       |    JOIN (SELECT vec_id AS q_id, c_id AS cell FROM ivf_asg
-       |          WHERE vec_id < $nQueries AND crank <= $nProbe) p USING (cell)
-       |    JOIN nb na ON na.vec_id = cell.vec_id
-       |    JOIN q ON q.q_id = p.q_id
-       |    WHERE cell.vec_id <> p.q_id)
-       |  QUALIFY rank <= $k)""".stripMargin
-
-  /** PQ codebook + nearest-code encode + query ADC table over an
-    * exploded (vec_id, sub, subv) relation `${p}ex`; the ADC query
-    * table draws its subvectors from `$qex` (raw-vector slices — for
-    * the residual-coded IVF-PQ tier this differs from `${p}ex`).
-    */
-  private def pqCodeCtes(p: String, qex: String, ks: Int, stride: Long,
-                         nQueries: Int): String =
-    s"""${p}cb AS MATERIALIZED (
-       |  SELECT sub, code, subv AS cv FROM (
-       |    SELECT sub, subv,
-       |      ROW_NUMBER() OVER (PARTITION BY sub ORDER BY vec_id) AS code
-       |    FROM ${p}ex WHERE vec_id % $stride = 0)
-       |  WHERE code <= $ks),
-       |${p}enc AS MATERIALIZED (
-       |  SELECT vec_id, sub, code FROM (
-       |    SELECT vec_id, sub, code,
-       |      ROW_NUMBER() OVER (PARTITION BY vec_id, sub ORDER BY d2 ASC, code) AS er
-       |    FROM (
-       |      SELECT e.vec_id, e.sub, c.code,
-       |        ${fdot("e.subv", "e.subv")} - 2.0 * ${fdot("e.subv", "c.cv")} + ${fdot("c.cv", "c.cv")} AS d2
-       |      FROM ${p}ex e JOIN ${p}cb c ON c.sub = e.sub))
-       |  WHERE er = 1),
-       |${p}qtab AS MATERIALIZED (
-       |  SELECT e.vec_id AS q_id, e.sub, c.code, ${fdot("e.subv", "c.cv")} AS part
-       |  FROM $qex e JOIN ${p}cb c ON c.sub = e.sub
-       |  WHERE e.vec_id < $nQueries)""".stripMargin
-
-  /** Shortlist + exact re-rank shared by the PQ tiers: ADC scores in
-    * `${p}adc` (q_id, vec_id, cos_sim) → `${p}top`.
-    */
-  private def pqRerankCtes(p: String, k: Int, shortlistFactor: Int): String =
-    s"""${p}short AS (
-       |  SELECT q_id, neighbor_id FROM (
-       |    SELECT q_id, vec_id AS neighbor_id,
-       |      ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos_sim DESC, vec_id) AS rk
-       |    FROM ${p}adc) WHERE rk <= ${shortlistFactor * k}),
-       |${p}top AS (
-       |  SELECT q_id,
-       |    CAST(ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos_sim DESC, neighbor_id) AS INTEGER) AS rank,
-       |    neighbor_id, cos_sim
-       |  FROM (
-       |    SELECT s.q_id, s.neighbor_id,
-       |      ${fdot("na.v", "q.qv")} / (na.nrm * q.qnrm) AS cos_sim
-       |    FROM ${p}short s
-       |    JOIN nb na ON na.vec_id = s.neighbor_id
-       |    JOIN q ON q.q_id = s.q_id)
-       |  QUALIFY rank <= $k)""".stripMargin
-
-  /** Ann.pqTopK's full CTE chain ending at `pq_top`. */
-  private def pqTopCtes(nQueries: Int, k: Int, m: Int = 8, ks: Int = 16,
-                        dim: Int = 64, stride: Long = 31L,
-                        shortlistFactor: Int = 4): String = {
-    val subDim = dim / m
-    s"""pq_ex AS MATERIALIZED (
-       |  SELECT vec_id, s.sub,
-       |    v[s.sub * $subDim + 1 : s.sub * $subDim + $subDim] AS subv
-       |  FROM nb, range(0, $m) s(sub)),
-       |${pqCodeCtes("pq_", "pq_ex", ks, stride, nQueries)},
-       |pq_adc AS (
-       |  SELECT g.q_id, g.vec_id, g.adot / (g.nrm * q.qnrm) AS cos_sim
-       |  FROM (
-       |    SELECT t.q_id, e.vec_id, na.nrm,
-       |      CAST(SUM(CAST(FLOOR(t.part * 1e12) / 1e12 AS DECIMAL(38,12))) AS DOUBLE) AS adot
-       |    FROM pq_enc e
-       |    JOIN nb na ON na.vec_id = e.vec_id
-       |    JOIN pq_qtab t ON t.sub = e.sub AND t.code = e.code AND e.vec_id <> t.q_id
-       |    GROUP BY 1, 2, 3) g
-       |  JOIN q ON q.q_id = g.q_id),
-       |${pqRerankCtes("pq_", k, shortlistFactor)}""".stripMargin
-  }
-
-  /** Ann.ivfPqTopK's residual-coded chain ending at `ip_top`; needs
-    * ivfAsgCtes in scope (cells + probe ranks).
-    */
-  private def ivfPqTopCtes(nQueries: Int, k: Int, nProbe: Int = 6,
-                           m: Int = 8, ks: Int = 16, dim: Int = 64,
-                           stride: Long = 31L,
-                           shortlistFactor: Int = 8): String = {
-    val subDim = dim / m
-    s"""ip_resid AS MATERIALIZED (
-       |  SELECT a.vec_id, nb.nrm, a.c_id AS cell,
-       |    list_transform(list_zip(nb.v, c.cv), p -> p[1] - p[2]) AS rv
-       |  FROM ivf_asg a
-       |  JOIN nb ON nb.vec_id = a.vec_id
-       |  JOIN ivf_cent c ON c.c_id = a.c_id
-       |  WHERE a.crank = 1),
-       |ip_ex AS MATERIALIZED (
-       |  SELECT vec_id, s.sub,
-       |    rv[s.sub * $subDim + 1 : s.sub * $subDim + $subDim] AS subv
-       |  FROM ip_resid, range(0, $m) s(sub)),
-       |ip_qex AS (
-       |  SELECT vec_id, s.sub,
-       |    v[s.sub * $subDim + 1 : s.sub * $subDim + $subDim] AS subv
-       |  FROM nb, range(0, $m) s(sub) WHERE vec_id < $nQueries),
-       |${pqCodeCtes("ip_", "ip_qex", ks, stride, nQueries)},
-       |ip_probes AS (
-       |  SELECT a.vec_id AS q_id, a.c_id AS cell,
-       |    ${fdot("nb.v", "c.cv")} AS cdot
-       |  FROM ivf_asg a
-       |  JOIN nb ON nb.vec_id = a.vec_id
-       |  JOIN ivf_cent c ON c.c_id = a.c_id
-       |  WHERE a.vec_id < $nQueries AND a.crank <= $nProbe),
-       |ip_adc AS (
-       |  SELECT g.q_id, g.vec_id, (g.cdot + g.rdot) / (g.nrm * q.qnrm) AS cos_sim
-       |  FROM (
-       |    SELECT p.q_id, e.vec_id, r.nrm, p.cdot,
-       |      CAST(SUM(CAST(FLOOR(t.part * 1e12) / 1e12 AS DECIMAL(38,12))) AS DOUBLE) AS rdot
-       |    FROM ip_enc e
-       |    JOIN ip_resid r ON r.vec_id = e.vec_id
-       |    JOIN ip_probes p ON p.cell = r.cell AND e.vec_id <> p.q_id
-       |    JOIN ip_qtab t ON t.q_id = p.q_id AND t.sub = e.sub AND t.code = e.code
-       |    GROUP BY 1, 2, 3, 4) g
-       |  JOIN q ON q.q_id = g.q_id),
-       |${pqRerankCtes("ip_", k, shortlistFactor)}""".stripMargin
-  }
-
-  /** Ann.sq8TopK replayed: int8 round-trip reconstruction per vector
-    * (symmetric scale, round-half-up via the engine-exact floor),
-    * full-precision queries, exact cosine over reconstructed corpus.
-    */
-  private def sq8TopCte(name: String, nQueries: Int, k: Int): String =
-    s"""$name AS (
-       |  SELECT q_id,
-       |    CAST(ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos_sim DESC, neighbor_id) AS INTEGER) AS rank,
-       |    neighbor_id, cos_sim
-       |  FROM (
-       |    SELECT q.q_id, r.vec_id AS neighbor_id,
-       |      ${fdot("r.rv", "q.qv")} / (r.nrm * q.qnrm) AS cos_sim
-       |    FROM (
-       |      SELECT vec_id, rv,
-       |        sqrt(list_reduce(list_prepend(0.0, list_transform(rv, x -> x * x)), (a, b) -> a + b)) AS nrm
-       |      FROM (
-       |        SELECT vec_id,
-       |          list_transform(v, x -> CASE WHEN scale = 0.0 THEN 0.0
-       |            ELSE CAST(CAST(FLOOR(x / scale + 0.5) AS BIGINT) AS DOUBLE) * scale END) AS rv
-       |        FROM (
-       |          SELECT vec_id, v,
-       |            list_aggregate(list_transform(v, x -> abs(x)), 'max') / 127.0 AS scale
-       |          FROM nb))) r
-       |    CROSS JOIN q WHERE r.vec_id <> q.q_id)
-       |  QUALIFY rank <= $k)""".stripMargin
-
-  /** Exact cosine top-k as a CTE (the recall panel's truth side). */
-  private def exactTopCte(name: String, k: Int): String =
-    s"""$name AS (
-       |  SELECT q_id,
-       |    CAST(ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos_sim DESC, neighbor_id) AS INTEGER) AS rank,
-       |    neighbor_id, cos_sim
-       |  FROM (
-       |    SELECT q.q_id, nb.vec_id AS neighbor_id,
-       |      ${fdot("nb.v", "q.qv")} / (nb.nrm * q.qnrm) AS cos_sim
-       |    FROM nb CROSS JOIN q WHERE nb.vec_id <> q.q_id)
-       |  QUALIFY rank <= $k)""".stripMargin
-
-  /** LSH top-k as prefixed CTEs (`${p}top`) on top of lshBucketCtes'
-    * hb/pl relations — the composable form of lshTopKOracleSql.
-    */
-  private def lshTopCtes(p: String, nQueries: Int, k: Int,
-                         multiprobe: Boolean): String = {
-    val qp =
-      if (!multiprobe)
-        s"""${p}qp AS (
-           |  SELECT vec_id AS q_id, tbl AS q_tbl, bucket AS q_bucket
-           |  FROM hb WHERE vec_id < $nQueries)""".stripMargin
-      else
-        s"""${p}qp AS (
-           |  SELECT DISTINCT q_id, q_tbl,
-           |    CASE WHEN j = -1 THEN q_bucket ELSE xor(q_bucket, (1 << j)) END AS q_bucket
-           |  FROM (SELECT vec_id AS q_id, tbl AS q_tbl, bucket AS q_bucket
-           |        FROM hb WHERE vec_id < $nQueries),
-           |    range(-1, 24) r(j), pl
-           |  WHERE j = -1 OR j < pl.planes)""".stripMargin
-    s"""$qp,
-       |${p}cand AS MATERIALIZED (
-       |  SELECT DISTINCT qp.q_id, hb.vec_id
-       |  FROM hb JOIN ${p}qp qp ON hb.tbl = qp.q_tbl AND hb.bucket = qp.q_bucket
-       |    AND hb.vec_id <> qp.q_id),
-       |${p}top AS (
-       |  SELECT q_id,
-       |    CAST(ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos_sim DESC, neighbor_id) AS INTEGER) AS rank,
-       |    neighbor_id, cos_sim
-       |  FROM (
-       |    SELECT c.q_id, c.vec_id AS neighbor_id,
-       |      ${fdot("na.v", "nq.v")} / (na.nrm * nq.nrm) AS cos_sim
-       |    FROM ${p}cand c
-       |    JOIN nb na ON na.vec_id = c.vec_id
-       |    JOIN nb nq ON nq.vec_id = c.q_id)
-       |  QUALIFY rank <= $k)""".stripMargin
-  }
-
-  private def ivfTopKOracleSql(nQueries: Int, k: Int): String =
-    s"""WITH ${annNbQCtes(nQueries)},
-       |${ivfAsgCtes()},
-       |${ivfTopCte("ivf_top", nQueries, k)}
-       |SELECT q_id, rank, neighbor_id, cos_sim FROM ivf_top""".stripMargin
-
-  private def pqTopKOracleSql(nQueries: Int, k: Int): String =
-    s"""WITH ${annNbQCtes(nQueries)},
-       |${pqTopCtes(nQueries, k)}
-       |SELECT q_id, rank, neighbor_id, cos_sim FROM pq_top""".stripMargin
-
-  private def ivfPqTopKOracleSql(nQueries: Int, k: Int): String =
-    s"""WITH ${annNbQCtes(nQueries)},
-       |${ivfAsgCtes()},
-       |${ivfPqTopCtes(nQueries, k)}
-       |SELECT q_id, rank, neighbor_id, cos_sim FROM ip_top""".stripMargin
-
-  /** Ann.recallEval replayed whole: every tier's CTE chain over ONE
-    * shared prepared corpus, each joined to the exact truth.
-    */
-  private def recallEvalOracleSql(nQueries: Int, k: Int): String = {
-    def row(method: String, top: String): String =
-      s"""SELECT '$method' AS method,
-         |  CAST(COUNT(*) AS BIGINT) AS n_truth,
-         |  CAST(SUM(CASE WHEN a.q_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit,
-         |  CAST(CAST(SUM(CASE WHEN a.q_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS DOUBLE)
-         |    / CAST(CAST(COUNT(*) AS BIGINT) AS DOUBLE) AS recall_at_k
-         |FROM ex_top e LEFT JOIN $top a
-         |  ON a.q_id = e.q_id AND a.neighbor_id = e.neighbor_id""".stripMargin
-    s"""WITH ${lshBucketCtes()},
-       |${annQCte(nQueries)},
-       |${exactTopCte("ex_top", k)},
-       |${lshTopCtes("lt_", nQueries, k, multiprobe = false)},
-       |${lshTopCtes("lm_", nQueries, k, multiprobe = true)},
-       |${ivfAsgCtes()},
-       |${ivfTopCte("ivf_top", nQueries, k)},
-       |${pqTopCtes(nQueries, k)},
-       |${ivfPqTopCtes(nQueries, k)},
-       |${sq8TopCte("s8_top", nQueries, k)}
-       |${row("lsh", "lt_top")}
-       |UNION ALL
-       |${row("lsh_multiprobe", "lm_top")}
-       |UNION ALL
-       |${row("ivf", "ivf_top")}
-       |UNION ALL
-       |${row("pq", "pq_top")}
-       |UNION ALL
-       |${row("ivf_pq", "ip_top")}
-       |UNION ALL
-       |${row("sq8", "s8_top")}""".stripMargin
-  }
-
-  /** DuckDB twin of the brute-force ANN baseline (annOracleSql). Float parity is
-    * exact because both sides fold the products left-to-right in
-    * double precision: Spark `aggregate(zip_with(...), 0.0, +)` vs
-    * DuckDB `list_reduce(list_prepend(0.0, ...), +)` — pre-verified
-    * bit-for-bit on the test lake. (Since r14 the LSH tier AND the
-    * stride-sampled IVF/PQ tiers replay too — see lshBucketCtes /
-    * ivfAsgCtes / pqCodeCtes.)
-    */
-  private def annOracleSql: Map[String, String] = Map(
-    "ann_ivf_topk" -> ivfTopKOracleSql(10, 5),
-    "ann_pq_topk" -> pqTopKOracleSql(10, 5),
-    "ann_ivf_pq" -> ivfPqTopKOracleSql(10, 5),
-    "ann_recall_eval" -> recallEvalOracleSql(10, 5),
-    "dedup_embedding_cosine" -> lshNearDupOracleSql(0.45),
-    "dedup_embedding_clusters" -> lshClustersOracleSql(0.45),
-    "embedding_mutual_knn" -> lshMutualKnnOracleSql(5),
-    "ann_lsh_topk" -> lshTopKOracleSql(10, 5, multiprobe = false),
-    "ann_lsh_multiprobe" -> lshTopKOracleSql(10, 5, multiprobe = true),
-    // Same left-fold norm as the cosine twin; NULL/size conventions
-    // masked to the engine-neutral form (see Ann.qualityGate).
-    "embedding_quality_gate" ->
-      """WITH base AS (
-        |  SELECT vec_id,
-        |    CASE WHEN embedding IS NULL THEN NULL
-        |         ELSE CAST(len(embedding) AS INTEGER) END AS n_dims,
-        |    CASE WHEN embedding IS NULL
-        |           OR len(list_filter(CAST(embedding AS DOUBLE[]), x -> isnan(x) OR isinf(x))) > 0
-        |         THEN NULL
-        |         ELSE ROUND(sqrt(list_reduce(list_prepend(0.0,
-        |           list_transform(CAST(embedding AS DOUBLE[]), x -> x * x)), (a, b) -> a + b)), 6)
-        |    END AS l2_norm
-        |  FROM embeddings)
-        |SELECT *, reason_code IS NULL AS is_valid FROM (
-        |  SELECT *,
-        |    CASE WHEN n_dims IS NULL THEN 'NULL_VEC'
-        |         WHEN n_dims <> 64 THEN 'BAD_DIM'
-        |         WHEN l2_norm IS NULL THEN 'NON_FINITE'
-        |         WHEN l2_norm = 0 THEN 'ZERO_NORM'
-        |         WHEN l2_norm < CAST(0.001 AS DOUBLE) THEN 'LOW_NORM'
-        |         WHEN l2_norm > CAST(1000.0 AS DOUBLE) THEN 'HIGH_NORM'
-        |         ELSE NULL END AS reason_code
-        |  FROM base)""".stripMargin,
-
-    "embedding_pca_project" -> pcaOracleSql(64, 15),
-
-    "embedding_kmeans" -> kmeansOracleSql(4, 5),
-    "embedding_cluster_quality" -> kmeansQualityOracleSql(4, 5),
-    "ml_kmeans_silhouette" -> kmeansSilhouetteOracleSql(4, 5),
-    "embedding_random_projection" -> randomProjectionOracleSql(64, 16, 42L),
-    "embedding_outlier_filter" -> kmeansOutlierOracleSql(4, 5, 0.95),
-    "embedding_coreset" -> kcenterOracleSql(8),
-
-    "embedding_kmeans_centroids" -> kmeansCentroidsOracleSql(4, 5),
-
-    // Sampling.budgetWaterfill mirrored: triangular panel cumulation,
-    // the same largest-feasible-regime filter (ORDER BY i DESC LIMIT 1
-    // == the max-struct choice: ranks are a total order), mirrored τ.
-    "sample_budget_waterfill" ->
-      """WITH caps AS (
-        |  SELECT CAST(source AS VARCHAR) AS source,
-        |    CAST(SUM(CAST(n_chars AS BIGINT)) AS BIGINT) AS capacity
-        |  FROM documents
-        |  WHERE source IS NOT NULL AND n_chars IS NOT NULL GROUP BY 1),
-        |tot AS (
-        |  SELECT CAST(COUNT(*) AS BIGINT) AS k,
-        |    CAST(SUM(capacity) AS BIGINT) AS totcap
-        |  FROM caps),
-        |ranked AS (
-        |  SELECT x.source, x.capacity,
-        |    CAST(COUNT(*) AS BIGINT) AS i, CAST(SUM(y.capacity) AS BIGINT) AS p
-        |  FROM caps x JOIN caps y
-        |    ON (y.capacity, y.source) <= (x.capacity, x.source)
-        |  GROUP BY 1, 2),
-        |feas AS (
-        |  SELECT i AS ci, p AS cp FROM ranked CROSS JOIN tot
-        |  WHERE i < k AND capacity * (k - i) <= 100000 - p
-        |  ORDER BY i DESC LIMIT 1),
-        |feas2 AS (
-        |  SELECT COALESCE((SELECT ci FROM feas), 0) AS ci,
-        |    COALESCE((SELECT cp FROM feas), 0) AS cp),
-        |tau AS (
-        |  SELECT CASE WHEN totcap <= 100000 THEN NULL
-        |    ELSE CAST(100000 - cp AS DOUBLE)
-        |      / NULLIF(CAST(k - ci AS DOUBLE), 0.0) END AS tau
-        |  FROM feas2 CROSS JOIN tot),
-        |alloc AS (
-        |  SELECT c.source, c.capacity, t.tau,
-        |    CASE WHEN t.tau IS NULL THEN c.capacity
-        |         ELSE LEAST(c.capacity, CAST(FLOOR(t.tau) AS BIGINT)) END AS allocated
-        |  FROM caps c CROSS JOIN tau t)
-        |SELECT source, capacity, allocated, tau,
-        |  CAST(allocated AS DOUBLE) / NULLIF(CAST(capacity AS DOUBLE), 0.0)
-        |    AS utilization,
-        |  allocated = capacity AS is_exhausted
-        |FROM alloc""".stripMargin,
-
-    // Sampling.upsampleRare mirrored: exact counts, one mirrored
-    // ceil, exact-long post shares.
-    "sample_upsample_rare" ->
-      """WITH c AS (
-        |  SELECT CAST(source AS VARCHAR) AS domain,
-        |    CAST(COUNT(*) AS BIGINT) AS n_docs
-        |  FROM documents WHERE source IS NOT NULL GROUP BY 1),
-        |t AS (SELECT CAST(SUM(n_docs) AS BIGINT) AS tt FROM c),
-        |p AS (
-        |  SELECT domain, n_docs,
-        |    CAST(n_docs AS DOUBLE) / CAST(tt AS DOUBLE) AS raw_share,
-        |    CASE WHEN CAST(n_docs AS DOUBLE) / CAST(tt AS DOUBLE) >= 0.06
-        |         THEN CAST(1 AS BIGINT)
-        |         ELSE LEAST(CAST(4 AS BIGINT),
-        |           CAST(CEIL(0.06 * CAST(tt AS DOUBLE) / CAST(n_docs AS DOUBLE)) AS BIGINT))
-        |    END AS rep_factor
-        |  FROM c CROSS JOIN t),
-        |p2 AS (SELECT *, rep_factor * n_docs AS upsampled_docs FROM p),
-        |t2 AS (SELECT CAST(SUM(upsampled_docs) AS BIGINT) AS u FROM p2)
-        |SELECT domain, n_docs, raw_share, rep_factor,
-        |  CAST(upsampled_docs AS BIGINT) AS upsampled_docs,
-        |  CAST(upsampled_docs AS DOUBLE) / CAST(u AS DOUBLE) AS upsampled_share
-        |FROM p2 CROSS JOIN t2""".stripMargin,
-
-    "sample_temperature_mix" ->
-      """WITH c AS (
-        |  SELECT CAST(lang AS VARCHAR) AS domain, COUNT(*) AS n_docs
-        |  FROM documents WHERE lang IS NOT NULL GROUP BY 1),
-        |t AS (SELECT SUM(n_docs) AS total FROM c),
-        |p AS (
-        |  SELECT domain, n_docs,
-        |    CAST(n_docs AS DOUBLE) / CAST(total AS DOUBLE) AS raw_share,
-        |    floor(sqrt(CAST(n_docs AS DOUBLE) / CAST(total AS DOUBLE)) * 1e6) / 1e6 AS numq
-        |  FROM c CROSS JOIN t),
-        |d AS (SELECT SUM(CAST(numq AS DECIMAL(28,12))) AS den FROM p)
-        |SELECT domain, n_docs, raw_share,
-        |  numq / CAST(den AS DOUBLE) AS temp_share
-        |FROM p CROSS JOIN d""".stripMargin,
-
-    "dedup_semantic" ->
-      """WITH base AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |n AS (
-        |  SELECT vec_id, v,
-        |    sqrt(list_reduce(list_prepend(0.0, list_transform(v, x -> x * x)), (a, b) -> a + b)) AS nrm
-        |  FROM base),
-        |seeds AS (
-        |  SELECT vec_id AS seed_id, v AS sv, nrm AS snrm FROM n
-        |  ORDER BY CAST(concat('0x', substr(md5(CAST(vec_id AS VARCHAR)), 1, 8)) AS BIGINT), vec_id
-        |  LIMIT 4),
-        |assign AS (
-        |  SELECT n.vec_id, n.v, n.nrm, s.seed_id,
-        |    list_reduce(list_prepend(0.0, list_transform(list_zip(n.v, s.sv), p -> p[1] * p[2])), (a, b) -> a + b)
-        |      / (n.nrm * s.snrm) AS cos_s
-        |  FROM n CROSS JOIN seeds s),
-        |best AS (
-        |  SELECT vec_id, v, nrm, seed_id AS cluster_id FROM assign
-        |  QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY cos_s DESC, seed_id) = 1),
-        |dups AS (
-        |  SELECT DISTINCT y.vec_id
-        |  FROM best x JOIN best y ON x.cluster_id = y.cluster_id AND x.vec_id < y.vec_id
-        |  WHERE list_reduce(list_prepend(0.0, list_transform(list_zip(x.v, y.v), p -> p[1] * p[2])), (a, b) -> a + b)
-        |      / (x.nrm * y.nrm) >= 0.30)
-        |SELECT b.vec_id, b.cluster_id, (d.vec_id IS NOT NULL) AS is_dup
-        |FROM best b LEFT JOIN dups d ON b.vec_id = d.vec_id""".stripMargin,
-
-    // ER pair generation: DuckDB's jaro_winkler_similarity is the
-    // kernel's byte-based reference implementation; both sides floor
-    // to the 1e-6 grid before the threshold compare.
-    "er_candidate_pairs" ->
-      """WITH names AS (
-        |  SELECT MIN(p_partkey) AS rec_id, UPPER(TRIM(p_name)) AS name_norm
-        |  FROM part
-        |  WHERE p_name IS NOT NULL AND LENGTH(UPPER(TRIM(p_name))) > 0
-        |  GROUP BY 2),
-        |b AS (
-        |  SELECT rec_id, name_norm,
-        |    list_extract(string_split(name_norm, ' '), -1) AS block
-        |  FROM names),
-        |sz AS (SELECT block, COUNT(*) AS block_n FROM b GROUP BY 1),
-        |ok AS (SELECT b.* FROM b JOIN sz USING (block) WHERE block_n <= 1000)
-        |SELECT * FROM (
-        |  SELECT a.rec_id AS rec_id_a, c.rec_id AS rec_id_b,
-        |    a.name_norm AS name_a, c.name_norm AS name_b,
-        |    FLOOR(jaro_winkler_similarity(a.name_norm, c.name_norm) * 1e6) / 1e6 AS jw_sim
-        |  FROM ok a JOIN ok c ON a.block = c.block AND a.rec_id < c.rec_id)
-        |WHERE jw_sim >= 0.8""".stripMargin,
-
-    // Linkage.blockingStats mirrored: the same block projection, the
-    // block-size panel, exact pair arithmetic with a DECIMAL(38,0)
-    // sum, one mirrored ratio.
-    "er_blocking_stats" ->
-      """WITH names AS (
-        |  SELECT MIN(p_partkey) AS rec_id, UPPER(TRIM(p_name)) AS name_norm
-        |  FROM part
-        |  WHERE p_name IS NOT NULL AND LENGTH(UPPER(TRIM(p_name))) > 0
-        |  GROUP BY 2),
-        |b AS (
-        |  SELECT rec_id, name_norm,
-        |    list_extract(string_split(name_norm, ' '), -1) AS block
-        |  FROM names),
-        |sz AS (SELECT block, CAST(COUNT(*) AS BIGINT) AS s FROM b GROUP BY 1),
-        |agg AS (
-        |  SELECT CAST(SUM(s) AS BIGINT) AS n_records,
-        |    CAST(COUNT(*) AS BIGINT) AS n_blocks,
-        |    CAST(MAX(s) AS BIGINT) AS max_block,
-        |    CAST(SUM(CASE WHEN s > 1000 THEN 1 ELSE 0 END) AS BIGINT) AS n_blocks_over_cap,
-        |    CAST(COALESCE(CAST(SUM(CAST(s * (s - 1) / 2 AS DECIMAL(38,0))) AS DECIMAL(38,0)), 0) AS BIGINT) AS candidate_pairs
-        |  FROM sz)
-        |SELECT n_records, n_blocks, max_block, n_blocks_over_cap,
-        |  candidate_pairs,
-        |  n_records * (n_records - 1) // 2 AS all_pairs,
-        |  1.0 - CAST(candidate_pairs AS DOUBLE)
-        |    / NULLIF(CAST(n_records * (n_records - 1) // 2 AS DOUBLE), 0.0)
-        |    AS reduction_ratio
-        |FROM agg""".stripMargin,
-
-    // Golden record: the ER pair CTE + the house recursive-closure
-    // fixpoint (the dedup_clusters convention), min-id survivorship.
-    "er_golden_record" ->
-      """WITH RECURSIVE names AS (
-        |  SELECT MIN(p_partkey) AS rec_id, UPPER(TRIM(p_name)) AS name_norm
-        |  FROM part
-        |  WHERE p_name IS NOT NULL AND LENGTH(UPPER(TRIM(p_name))) > 0
-        |  GROUP BY 2),
-        |b AS (
-        |  SELECT rec_id, name_norm,
-        |    list_extract(string_split(name_norm, ' '), -1) AS block
-        |  FROM names),
-        |sz AS (SELECT block, COUNT(*) AS block_n FROM b GROUP BY 1),
-        |ok AS (SELECT b.* FROM b JOIN sz USING (block) WHERE block_n <= 1000),
-        |ep AS (
-        |  SELECT * FROM (
-        |    SELECT a.rec_id AS rec_id_a, c.rec_id AS rec_id_b,
-        |      FLOOR(jaro_winkler_similarity(a.name_norm, c.name_norm) * 1e6) / 1e6 AS jw_sim
-        |    FROM ok a JOIN ok c ON a.block = c.block AND a.rec_id < c.rec_id)
-        |  WHERE jw_sim >= 0.8),
-        |edges AS (
-        |  SELECT rec_id_a AS src, rec_id_b AS dst FROM ep
-        |  UNION
-        |  SELECT rec_id_b, rec_id_a FROM ep),
-        |walk(id, label) AS (
-        |  SELECT src, src FROM edges
-        |  UNION
-        |  SELECT e.src, w.label FROM edges e JOIN walk w ON w.id = e.dst),
-        |clusters AS (
-        |  SELECT id, MIN(label) AS cluster_id FROM walk GROUP BY 1)
-        |SELECT n.rec_id AS ent_id, n.name_norm AS ent_name,
-        |  COALESCE(c.cluster_id, n.rec_id) AS canonical_id,
-        |  cn.name_norm AS canonical_name,
-        |  (n.rec_id = COALESCE(c.cluster_id, n.rec_id)) AS is_canonical
-        |FROM names n
-        |LEFT JOIN clusters c ON n.rec_id = c.id
-        |JOIN names cn ON cn.rec_id = COALESCE(c.cluster_id, n.rec_id)""".stripMargin,
-
-    "er_best_match" ->
-      """WITH clean AS (
-        |  SELECT MIN(p_partkey) AS rec_id, UPPER(TRIM(p_name)) AS name_norm
-        |  FROM part
-        |  WHERE p_name IS NOT NULL AND LENGTH(UPPER(TRIM(p_name))) > 0
-        |  GROUP BY 2),
-        |dirty AS (
-        |  SELECT rec_id,
-        |    concat(substr(list_extract(string_split(name_norm, ' '), 1), 1, 3),
-        |           ' ', list_extract(string_split(name_norm, ' '), -1)) AS name_norm
-        |  FROM clean),
-        |lb AS (
-        |  SELECT rec_id, name_norm,
-        |    list_extract(string_split(name_norm, ' '), -1) AS block
-        |  FROM (SELECT DISTINCT rec_id, name_norm FROM dirty)),
-        |lsz AS (SELECT block, COUNT(*) AS block_n FROM lb GROUP BY 1),
-        |lok AS (SELECT lb.* FROM lb JOIN lsz USING (block) WHERE block_n <= 1000),
-        |rb AS (
-        |  SELECT rec_id, name_norm,
-        |    list_extract(string_split(name_norm, ' '), -1) AS block
-        |  FROM clean),
-        |rsz AS (SELECT block, COUNT(*) AS block_n FROM rb GROUP BY 1),
-        |rok AS (SELECT rb.* FROM rb JOIN rsz USING (block) WHERE block_n <= 1000),
-        |scored AS (
-        |  SELECT * FROM (
-        |    SELECT l.rec_id, l.name_norm, r.rec_id AS ref_id,
-        |      r.name_norm AS ref_name,
-        |      FLOOR(jaro_winkler_similarity(l.name_norm, r.name_norm) * 1e6) / 1e6 AS jw_sim
-        |    FROM lok l JOIN rok r ON l.block = r.block)
-        |  WHERE jw_sim >= 0.75),
-        |best AS (
-        |  SELECT * FROM scored
-        |  QUALIFY ROW_NUMBER() OVER (PARTITION BY rec_id
-        |    ORDER BY jw_sim DESC, ref_id) = 1)
-        |SELECT l.rec_id, l.name_norm, b.ref_id, b.ref_name, b.jw_sim
-        |FROM lok l LEFT JOIN best b ON l.rec_id = b.rec_id""".stripMargin,
-
-    // Item-item CF: exact integer co-occurrence counts; the cosine is
-    // one sqrt + one division over exact-integer doubles (bit-identical
-    // across engines), floored to the 1e-6 grid before ranking.
-    "recsys_item_cosine" ->
-      s"""WITH capped AS MATERIALIZED ($recsysInteractionsSql),
-        |marg AS MATERIALIZED (SELECT item_id, COUNT(*) AS n FROM capped GROUP BY 1),
-        |pairs AS (
-        |  SELECT a.item_id AS ia, b.item_id AS ib, COUNT(*) AS n_both
-        |  FROM capped a JOIN capped b
-        |    ON a.user_id = b.user_id AND a.item_id < b.item_id
-        |  GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-        |scored AS MATERIALIZED (
-        |  SELECT ia, ib, n_both,
-        |    FLOOR(CAST(n_both AS DOUBLE)
-        |      / sqrt(CAST(ma.n AS DOUBLE) * CAST(mb.n AS DOUBLE)) * 1e6) / 1e6 AS cosine
-        |  FROM pairs
-        |  JOIN marg ma ON ia = ma.item_id
-        |  JOIN marg mb ON ib = mb.item_id),
-        |sym AS (
-        |  SELECT ia AS item_id, ib AS neighbor_id, n_both, cosine FROM scored
-        |  UNION ALL
-        |  SELECT ib, ia, n_both, cosine FROM scored)
-        |SELECT item_id,
-        |  CAST(ROW_NUMBER() OVER (PARTITION BY item_id
-        |    ORDER BY cosine DESC, neighbor_id) AS INTEGER) AS rank,
-        |  neighbor_id, n_both, cosine
-        |FROM sym
-        |QUALIFY rank <= 5""".stripMargin,
-
-    "recsys_recommend" -> recsysRecommendOracleSql,
-
-    // LOO ranking eval: the shared recommend chain over the
-    // deterministic train split + parsed-literal gain ladders.
-    "recsys_eval_ranking" -> recsysEvalRankingOracleSql(2, 5),
-
-    // Recsys.recommendationCoverage mirrored: the full recommend
-    // chain as a CTE, exposure counts, rank formula Gini with
-    // mirrored double ops at the edge. Registered at the serving
-    // floor (8) per the r12 judge directive; the exhaustive floor-2
-    // chain remains spec-covered.
-    "recsys_coverage" -> recsysCoverageOracleSql(8),
-
-    // identical panel over the deeper minSupport=16 pruned support
-    "recsys_coverage_pruned" -> recsysCoverageOracleSql(16),
-
-    // Ann.similarityHist mirrored: md5-smallest probe panel, the
-    // left-fold cosine, fixed [-1,1] bucket arithmetic.
-    "embedding_similarity_hist" ->
-      """WITH base AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-        |  WHERE embedding IS NOT NULL),
-        |n AS (
-        |  SELECT vec_id, v,
-        |    sqrt(list_reduce(list_prepend(0.0, list_transform(v, x -> x * x)), (a, b) -> a + b)) AS nrm
-        |  FROM base),
-        |panel AS (
-        |  SELECT vec_id, v, nrm FROM (
-        |    SELECT *, CAST('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 8) AS BIGINT) AS h
-        |    FROM n WHERE nrm > 0.0)
-        |  ORDER BY h, vec_id LIMIT 96),
-        |pairs AS (
-        |  SELECT
-        |    list_reduce(list_prepend(0.0, list_transform(list_zip(a.v, b.v), p -> p[1] * p[2])), (x, y) -> x + y)
-        |      / (a.nrm * b.nrm) AS cos
-        |  FROM panel a JOIN panel b ON a.vec_id < b.vec_id),
-        |hist AS (
-        |  SELECT GREATEST(0, LEAST(19, CAST(FLOOR((cos + 1.0) / 0.1) AS INTEGER))) AS bucket,
-        |    COUNT(*) AS n_pairs
-        |  FROM pairs GROUP BY 1)
-        |SELECT bucket, CAST(n_pairs AS BIGINT) AS n_pairs,
-        |  -1.0 + CAST(bucket AS DOUBLE) * 0.1 AS bucket_lo
-        |FROM hist""".stripMargin,
-
-    // Ann.lshTuningCurve mirrored: the similarity-hist panel, gridded
-    // arccos collision prob, the gridded S-curve per config, decimal
-    // mass terms, one mirrored quotient pair per config row.
-    "dedup_lsh_curve" -> {
-      val histSql =
-        """WITH base AS (
-          |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-          |  WHERE embedding IS NOT NULL),
-          |n AS (
-          |  SELECT vec_id, v,
-          |    sqrt(list_reduce(list_prepend(0.0, list_transform(v, x -> x * x)), (a, b) -> a + b)) AS nrm
-          |  FROM base),
-          |panel AS (
-          |  SELECT vec_id, v, nrm FROM (
-          |    SELECT *, CAST('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 8) AS BIGINT) AS h
-          |    FROM n WHERE nrm > 0.0)
-          |  ORDER BY h, vec_id LIMIT 96),
-          |pairs AS (
-          |  SELECT
-          |    list_reduce(list_prepend(0.0, list_transform(list_zip(a.v, b.v), p -> p[1] * p[2])), (x, y) -> x + y)
-          |      / (a.nrm * b.nrm) AS cos
-          |  FROM panel a JOIN panel b ON a.vec_id < b.vec_id),
-          |hist AS (
-          |  SELECT GREATEST(0, LEAST(19, CAST(FLOOR((cos + 1.0) / 0.1) AS INTEGER))) AS bucket,
-          |    CAST(COUNT(*) AS BIGINT) AS n_pairs
-          |  FROM pairs GROUP BY 1),
-          |hp AS (
-          |  SELECT n_pairs,
-          |    (-1.0 + CAST(bucket AS DOUBLE) * 0.1) + 0.05 AS mid,
-          |    FLOOR((1.0 - ACOS(GREATEST(-1.0, LEAST(1.0,
-          |      (-1.0 + CAST(bucket AS DOUBLE) * 0.1) + 0.05)))
-          |      / 3.141592653589793) * 1e6) / 1e6 AS p
-          |  FROM hist)""".stripMargin
-      val blocks = Seq((4, 4), (8, 4), (16, 4), (8, 8), (16, 8)).map { case (b, r) =>
-        s"""SELECT $b AS bands, $r AS rows_per_band,
-           |  CAST(SUM(n_pairs) AS BIGINT) AS n_pairs_total,
-           |  CAST(SUM(CASE WHEN mid >= 0.5 THEN n_pairs ELSE 0 END) AS BIGINT) AS n_above_tau,
-           |  CAST(SUM(CAST(n_pairs AS DECIMAL(19,0))
-           |    * CAST(FLOOR((1.0 - POW(1.0 - POW(p, $r), $b)) * 1e6) / 1e6 AS DECIMAL(28,6))) AS DOUBLE)
-           |    AS expected_candidates,
-           |  CAST(SUM(CAST(n_pairs AS DECIMAL(19,0))
-           |    * CAST(FLOOR((1.0 - POW(1.0 - POW(p, $r), $b)) * 1e6) / 1e6 AS DECIMAL(28,6))) AS DOUBLE)
-           |    / NULLIF(CAST(SUM(n_pairs) AS DOUBLE), 0.0) AS candidate_rate,
-           |  CAST(COALESCE(SUM(CASE WHEN mid >= 0.5 THEN CAST(n_pairs AS DECIMAL(19,0))
-           |    * CAST(FLOOR((1.0 - POW(1.0 - POW(p, $r), $b)) * 1e6) / 1e6 AS DECIMAL(28,6)) END), 0) AS DOUBLE)
-           |    / NULLIF(CAST(SUM(CASE WHEN mid >= 0.5 THEN n_pairs ELSE 0 END) AS DOUBLE), 0.0)
-           |    AS expected_recall_at_tau
-           |FROM hp""".stripMargin
-      }
-      histSql + "\n" + blocks.mkString("\nUNION ALL\n")
-    },
-
-    "ann_cosine_topk" ->
-      """WITH base AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |n AS (
-        |  SELECT vec_id, v,
-        |    sqrt(list_reduce(list_prepend(0.0, list_transform(v, x -> x * x)), (a, b) -> a + b)) AS nrm
-        |  FROM base),
-        |q AS (SELECT vec_id AS q_id, v AS qv, nrm AS qnrm FROM n WHERE vec_id < 10),
-        |scored AS (
-        |  SELECT q.q_id, n.vec_id AS neighbor_id,
-        |    list_reduce(list_prepend(0.0, list_transform(list_zip(n.v, q.qv), p -> p[1] * p[2])), (a, b) -> a + b)
-        |      / (n.nrm * q.qnrm) AS cos_sim
-        |  FROM n CROSS JOIN q WHERE n.vec_id <> q.q_id)
-        |SELECT q_id, CAST(ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos_sim DESC, neighbor_id) AS INTEGER) AS rank,
-        |       neighbor_id, cos_sim
-        |FROM scored
-        |QUALIFY rank <= 5""".stripMargin,
-
-    // Ann.knnClassify mirrored over the proven cosine fold: top-5
-    // neighbors per query, majority vote, ties to the smaller label.
-    "ml_knn_classify" ->
-      """WITH base AS (
-        |  SELECT vec_id, CAST(label AS BIGINT) AS label,
-        |         CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings),
-        |n AS (
-        |  SELECT vec_id, label, v,
-        |    sqrt(list_reduce(list_prepend(0.0, list_transform(v, x -> x * x)), (a, b) -> a + b)) AS nrm
-        |  FROM base),
-        |q AS (SELECT vec_id AS q_id, label AS label_true, v AS qv, nrm AS qnrm
-        |      FROM n WHERE vec_id < 50),
-        |scored AS (
-        |  SELECT q.q_id, n.vec_id AS neighbor_id, n.label AS n_label,
-        |    list_reduce(list_prepend(0.0, list_transform(list_zip(n.v, q.qv), p -> p[1] * p[2])), (a, b) -> a + b)
-        |      / (n.nrm * q.qnrm) AS cos_sim
-        |  FROM n CROSS JOIN q WHERE n.vec_id <> q.q_id),
-        |topk AS (
-        |  SELECT * FROM (
-        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos_sim DESC, neighbor_id) AS rk
-        |    FROM scored) WHERE rk <= 5),
-        |votes AS (
-        |  SELECT q_id, n_label, CAST(COUNT(*) AS BIGINT) AS votes
-        |  FROM topk GROUP BY 1, 2),
-        |best AS (
-        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY votes DESC, n_label) AS vr
-        |  FROM votes)
-        |SELECT b.q_id AS vec_id, qq.label_true, b.n_label AS pred_label,
-        |  b.votes, b.n_label = qq.label_true AS is_correct
-        |FROM best b
-        |JOIN (SELECT DISTINCT q_id, label_true FROM q) qq ON qq.q_id = b.q_id
-        |WHERE b.vr = 1""".stripMargin,
-
-    // Ann.filteredTopK: the proven cosine fold with the metadata
-    // predicate cutting the corpus side BEFORE ranking.
-    "ann_filtered_topk" ->
-      """WITH base AS (
-        |  SELECT vec_id, CAST(label AS BIGINT) AS label,
-        |         CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings),
-        |n AS (
-        |  SELECT vec_id, label, v,
-        |    sqrt(list_reduce(list_prepend(0.0, list_transform(v, x -> x * x)), (a, b) -> a + b)) AS nrm
-        |  FROM base),
-        |q AS (SELECT vec_id AS q_id, v AS qv, nrm AS qnrm FROM n WHERE vec_id < 10),
-        |scored AS (
-        |  SELECT q.q_id, n.vec_id AS neighbor_id,
-        |    list_reduce(list_prepend(0.0, list_transform(list_zip(n.v, q.qv), p -> p[1] * p[2])), (a, b) -> a + b)
-        |      / (n.nrm * q.qnrm) AS cos_sim
-        |  FROM n CROSS JOIN q
-        |  WHERE n.vec_id <> q.q_id AND n.label % 2 = 0)
-        |SELECT q_id, CAST(ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos_sim DESC, neighbor_id) AS INTEGER) AS rank,
-        |       neighbor_id, cos_sim
-        |FROM scored
-        |QUALIFY rank <= 5""".stripMargin,
-
-    // Ann.sq8ErrorPanel mirrored on the exploded relation: round-
-    // half-up codes via one engine-exact floor, error terms
-    // 1e-12-grid-quantized into DECIMAL(38,12) partials.
-    "embedding_sq8_error" ->
-      """WITH comps AS (
-        |  SELECT vec_id, UNNEST(CAST(embedding AS DOUBLE[])) AS x
-        |  FROM embeddings WHERE embedding IS NOT NULL),
-        |scales AS (
-        |  SELECT vec_id, MAX(abs(x)) AS mx, CAST(COUNT(*) AS BIGINT) AS dim
-        |  FROM comps GROUP BY 1),
-        |s2 AS (SELECT *, mx / 127.0 AS scale FROM scales),
-        |j AS (
-        |  SELECT c.vec_id, s.dim, s.scale, c.x,
-        |    CASE WHEN s.scale = 0.0 THEN 0
-        |         ELSE CAST(FLOOR(c.x / s.scale + 0.5) AS BIGINT) END AS code
-        |  FROM comps c JOIN s2 s ON s.vec_id = c.vec_id),
-        |e AS (
-        |  SELECT *, x - CAST(code AS DOUBLE) * scale AS err,
-        |    CAST(code AS DOUBLE) * scale AS recon
-        |  FROM j),
-        |agg AS (
-        |  SELECT vec_id, dim, scale,
-        |    CAST(SUM(CAST(FLOOR(err * err * 1e12) / 1e12 AS DECIMAL(38,12))) AS DOUBLE) / dim AS mse,
-        |    MAX(abs(err)) AS max_abs_err,
-        |    CAST(SUM(CAST(FLOOR(recon * recon * 1e12) / 1e12 AS DECIMAL(38,12))) AS DOUBLE) AS rn2,
-        |    CAST(SUM(CAST(FLOOR(x * x * 1e12) / 1e12 AS DECIMAL(38,12))) AS DOUBLE) AS xn2
-        |  FROM e GROUP BY 1, 2, 3)
-        |SELECT vec_id, dim, scale, mse, max_abs_err,
-        |  CASE WHEN xn2 = 0.0 THEN 0.0 ELSE sqrt(rn2) / sqrt(xn2) END AS norm_ratio
-        |FROM agg""".stripMargin,
-
-    // Radius search: the proven cosine fold, threshold filter, no rank.
-    "ann_range_search" ->
-      """WITH base AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |n AS (
-        |  SELECT vec_id, v,
-        |    sqrt(list_reduce(list_prepend(0.0, list_transform(v, x -> x * x)), (a, b) -> a + b)) AS nrm
-        |  FROM base),
-        |q AS (SELECT vec_id AS q_id, v AS qv, nrm AS qnrm FROM n WHERE vec_id < 10),
-        |scored AS (
-        |  SELECT q.q_id, n.vec_id AS neighbor_id,
-        |    list_reduce(list_prepend(0.0, list_transform(list_zip(n.v, q.qv), p -> p[1] * p[2])), (a, b) -> a + b)
-        |      / (n.nrm * q.qnrm) AS cos_sim
-        |  FROM n CROSS JOIN q WHERE n.vec_id <> q.q_id)
-        |SELECT q_id, neighbor_id, cos_sim
-        |FROM scored WHERE cos_sim >= 0.35""".stripMargin)
-
-  /** The pairwise-correlation oracle, generated from the profiled
-    * column list so the moment names and the op order can never drift
-    * from Profiling.corrPairs.
-    */
-  /** The Lloyd's k-means oracle — seed panel, per-round assignment
-    * (QUALIFY argmin with the lowest-cid tie-break) and decimal-exact
-    * means, replaying Ann.kmeans op-for-op; the dot folds are the
-    * proven cosine-oracle list_reduce idiom.
-    */
-  /** Greedy k-center replayed as chained MATERIALIZED CTEs: the same
-    * md5-lowest seed, full |v|²−2v·c+|c|² distance in the same op
-    * order, (md DESC, vec_id) argmax per round, LEAST-folded
-    * min-distance relation — the kmeans replay discipline.
-    */
-  private def kcenterOracleSql(k: Int): String = {
-    def dotSql(a: String, b: String) =
-      s"list_reduce(list_prepend(0.0, list_transform(list_zip($a, $b), p -> p[1] * p[2])), (x, y) -> x + y)"
-    def d2Sql(v: String, c: String) =
-      s"${dotSql(v, v)} - CAST(2 AS DOUBLE) * ${dotSql(v, c)} + ${dotSql(c, c)}"
-    val head =
-      s"""WITH base AS MATERIALIZED (
-         |  SELECT vec_id,
-         |    list_transform(CAST(embedding AS DOUBLE[]),
-         |      x -> floor(x * CAST(1000000 AS DOUBLE)) / CAST(1000000 AS DOUBLE)) AS v
-         |  FROM embeddings WHERE embedding IS NOT NULL),
-         |sel0 AS MATERIALIZED (
-         |  SELECT vec_id, v FROM (
-         |    SELECT vec_id, v,
-         |      CAST(concat('0x', substr(md5(CAST(vec_id AS VARCHAR)), 1, 8)) AS BIGINT) AS dg
-         |    FROM base ORDER BY dg, vec_id LIMIT 1)),
-         |md1 AS MATERIALIZED (
-         |  SELECT b.vec_id, b.v, ${d2Sql("b.v", "s.v")} AS md
-         |  FROM base b CROSS JOIN sel0 s)""".stripMargin
-    val rounds = (1 until k).map { r =>
-      val sel =
-        s"""sel$r AS MATERIALIZED (
-           |  SELECT vec_id, v, md FROM md$r
-           |  QUALIFY ROW_NUMBER() OVER (ORDER BY md DESC, vec_id) = 1)""".stripMargin
-      val nextMd = if (r < k - 1)
-        s""",
-           |md${r + 1} AS MATERIALIZED (
-           |  SELECT m.vec_id, m.v, LEAST(m.md, ${d2Sql("m.v", "s.v")}) AS md
-           |  FROM md$r m CROSS JOIN sel$r s)""".stripMargin
-      else ""
-      sel + nextMd
-    }.mkString(",\n")
-    val unions = (1 until k).map(r =>
-      s"SELECT CAST($r AS BIGINT) AS sel_rank, vec_id, md AS d2_sel FROM sel$r")
-      .mkString("\nUNION ALL\n")
-    s"""$head,
-       |$rounds
-       |SELECT CAST(0 AS BIGINT) AS sel_rank, vec_id, CAST(NULL AS DOUBLE) AS d2_sel FROM sel0
-       |UNION ALL
-       |$unions""".stripMargin
-  }
-
-  private def kmeansOracleSql(k: Int, rounds: Int): String = {
-    def dotSql(a: String, b: String) =
-      s"list_reduce(list_prepend(0.0, list_transform(list_zip($a, $b), p -> p[1] * p[2])), (x, y) -> x + y)"
-    val head =
-      s"""WITH base AS MATERIALIZED (
-         |  SELECT vec_id,
-         |    list_transform(CAST(embedding AS DOUBLE[]),
-         |      x -> floor(x * CAST(1000000 AS DOUBLE)) / CAST(1000000 AS DOUBLE)) AS v
-         |  FROM embeddings WHERE embedding IS NOT NULL),
-         |exp0 AS MATERIALIZED (
-         |  SELECT vec_id, UNNEST(range(len(v))) AS dim_pos, UNNEST(v) AS vx FROM base),
-         |cent0 AS MATERIALIZED (
-         |  SELECT CAST(ROW_NUMBER() OVER (ORDER BY dg, vec_id) - 1 AS BIGINT) AS cid, v AS c
-         |  FROM (
-         |    SELECT vec_id, v,
-         |      CAST(concat('0x', substr(md5(CAST(vec_id AS VARCHAR)), 1, 8)) AS BIGINT) AS dg
-         |    FROM base ORDER BY dg, vec_id LIMIT $k))""".stripMargin
-    def assignSql(cent: String) =
-      s"""SELECT vec_id, cid, d2 FROM (
-         |    SELECT b.vec_id, ct.cid,
-         |      ${dotSql("ct.c", "ct.c")} - CAST(2 AS DOUBLE) * ${dotSql("b.v", "ct.c")} AS d2
-         |    FROM base b CROSS JOIN $cent ct)
-         |  QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cid) = 1""".stripMargin
-    val iters = (1 to rounds).map { i =>
-      s"""asg$i AS MATERIALIZED (
-         |  ${assignSql(s"cent${i - 1}")}),
-         |mean$i AS MATERIALIZED (
-         |  SELECT a.cid AS cluster_id, e.dim_pos,
-         |    CAST(SUM(CAST(e.vx AS DECIMAL(28,12))) AS DOUBLE) / COUNT(*) AS mx
-         |  FROM exp0 e JOIN asg$i a USING (vec_id)
-         |  GROUP BY 1, 2),
-         |cent$i AS MATERIALIZED (
-         |  SELECT cluster_id AS cid, list(mx ORDER BY dim_pos) AS c
-         |  FROM mean$i GROUP BY 1)""".stripMargin
-    }.mkString(",\n")
-    s"""$head,
-       |$iters
-       |SELECT vec_id, cid AS cluster_id, d2 FROM (
-       |  SELECT b.vec_id, ct.cid,
-       |    ${dotSql("ct.c", "ct.c")} - CAST(2 AS DOUBLE) * ${dotSql("b.v", "ct.c")} AS d2
-       |  FROM base b CROSS JOIN cent$rounds ct)
-       |QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cid) = 1""".stripMargin
-  }
-
-  /** Centroid-panel twin of [[kmeansOracleSql]]: same rounds, final
-    * select is the last mean relation instead of the assignment.
-    */
-  private def kmeansCentroidsOracleSql(k: Int, rounds: Int): String = {
-    val body = kmeansOracleSql(k, rounds)
-    val cut = body.lastIndexOf("SELECT vec_id, cid AS cluster_id, d2 FROM (")
-    body.substring(0, cut) +
-      s"SELECT cluster_id AS cid, dim_pos, mx AS c FROM mean$rounds"
-  }
-
-  /** Cluster-quality twin of [[kmeansOracleSql]]: same trained
-    * rounds, then the full-distance intra panel (d2 + |v|², 1e-6-grid
-    * DECIMAL(28,6) partials) and the k×k nearest-other-centroid
-    * separation, ratio as a raw quotient.
-    */
-  private def kmeansQualityOracleSql(k: Int, rounds: Int): String = {
-    def dotSql(a: String, b: String) =
-      s"list_reduce(list_prepend(0.0, list_transform(list_zip($a, $b), p -> p[1] * p[2])), (x, y) -> x + y)"
-    val body = kmeansOracleSql(k, rounds)
-    val cut = body.lastIndexOf("SELECT vec_id, cid AS cluster_id, d2 FROM (")
-    // the inherited prefix ends after the last round CTE (no trailing
-    // comma — the original's final SELECT followed directly)
-    body.substring(0, cut).stripSuffix("\n") + ",\n" +
-      s"""asgF AS MATERIALIZED (
-         |  SELECT vec_id, cid AS cluster_id, d2 FROM (
-         |    SELECT b.vec_id, ct.cid,
-         |      ${dotSql("ct.c", "ct.c")} - CAST(2 AS DOUBLE) * ${dotSql("b.v", "ct.c")} AS d2
-         |    FROM base b CROSS JOIN cent$rounds ct)
-         |  QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cid) = 1),
-         |intra AS MATERIALIZED (
-         |  SELECT a.cluster_id, CAST(COUNT(*) AS BIGINT) AS n_members,
-         |    CAST(SUM(CAST(FLOOR((a.d2 + ${dotSql("b.v", "b.v")}) * 1e6) / 1e6
-         |      AS DECIMAL(28,6))) AS DOUBLE) / COUNT(*) AS mean_d2
-         |  FROM base b JOIN asgF a USING (vec_id)
-         |  GROUP BY 1),
-         |sep AS MATERIALIZED (
-         |  SELECT a.cid AS cluster_id,
-         |    MIN(${dotSql("a.c", "a.c")} - CAST(2 AS DOUBLE) * ${dotSql("a.c", "b.c")}
-         |      + ${dotSql("b.c", "b.c")}) AS min_other_d2
-         |  FROM cent$rounds a JOIN cent$rounds b ON a.cid <> b.cid
-         |  GROUP BY 1)
-         |SELECT i.cluster_id, i.n_members, i.mean_d2, s.min_other_d2,
-         |  i.mean_d2 / NULLIF(s.min_other_d2, 0) AS compactness_ratio
-         |FROM intra i LEFT JOIN sep s ON i.cluster_id = s.cluster_id""".stripMargin
-  }
-
-  /** Outlier-gate twin of [[kmeansOracleSql]]: full distance per
-    * vector, per-cluster exact quantile_cont threshold (the F2
-    * percentile parity), one comparison.
-    */
-  private def kmeansOutlierOracleSql(k: Int, rounds: Int, p: Double): String = {
-    def dotSql(a: String, b: String) =
-      s"list_reduce(list_prepend(0.0, list_transform(list_zip($a, $b), p -> p[1] * p[2])), (x, y) -> x + y)"
-    val body = kmeansOracleSql(k, rounds)
-    val cut = body.lastIndexOf("SELECT vec_id, cid AS cluster_id, d2 FROM (")
-    body.substring(0, cut).stripSuffix("\n") + ",\n" +
-      s"""asgF AS MATERIALIZED (
-         |  SELECT vec_id, cid AS cluster_id, d2 FROM (
-         |    SELECT b.vec_id, ct.cid,
-         |      ${dotSql("ct.c", "ct.c")} - CAST(2 AS DOUBLE) * ${dotSql("b.v", "ct.c")} AS d2
-         |    FROM base b CROSS JOIN cent$rounds ct)
-         |  QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cid) = 1),
-         |full_d AS MATERIALIZED (
-         |  SELECT a.vec_id, a.cluster_id, a.d2 + ${dotSql("b.v", "b.v")} AS d2_full
-         |  FROM base b JOIN asgF a USING (vec_id)),
-         |thr AS MATERIALIZED (
-         |  SELECT cluster_id, quantile_cont(d2_full, $p) AS p95_d2
-         |  FROM full_d GROUP BY 1)
-         |SELECT f.vec_id, f.cluster_id, f.d2_full, t.p95_d2,
-         |  f.d2_full > t.p95_d2 AS is_outlier
-         |FROM full_d f JOIN thr t USING (cluster_id)""".stripMargin
-  }
-
-  /** JL projection oracle: the SAME seeded Rademacher matrix the
-    * operator embeds as literals (both sides are generated by this
-    * JVM from the same java.util.Random sequence), replayed with the
-    * left-fold dot product (the annOracleSql bit-parity precedent)
-    * and the identical terminal scale multiply.
-    */
-  private def randomProjectionOracleSql(inDim: Int, outDim: Int,
-                                        seed: Long): String = {
-    val rnd = new java.util.Random(seed)
-    val mat = Seq.fill(outDim)(Array.fill(inDim)(if (rnd.nextBoolean()) 1.0 else -1.0))
-    val scale = 1.0 / math.sqrt(outDim.toDouble)
-    def fold(row: Array[Double]): String = {
-      val lst = row.map(x => if (x > 0) "1" else "-1").mkString("[", ", ", "]")
-      s"list_reduce(list_prepend(0.0, list_transform(list_zip(v, CAST($lst AS DOUBLE[])), p -> p[1] * p[2])), (x, y) -> x + y)"
-    }
-    val branches = mat.zipWithIndex.map { case (row, j) =>
-      s"""SELECT vec_id, $j AS dim_pos,
-         |  ${fold(row)} * CAST('${scale.toString}' AS DOUBLE) AS component
-         |FROM base""".stripMargin
-    }.mkString("\nUNION ALL\n")
-    s"""WITH base AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)
-       |$branches""".stripMargin
-  }
-
-  /** Silhouette oracle: the kmeans replay extended with the full n×k
-    * distance pass, the (d2f, cid) argmin, the other-centroid min and
-    * the gridded per-vector s — Ann.kmeansSilhouette op-for-op.
-    */
-  private def kmeansSilhouetteOracleSql(k: Int, rounds: Int): String = {
-    def dotSql(a: String, b: String) =
-      s"list_reduce(list_prepend(0.0, list_transform(list_zip($a, $b), p -> p[1] * p[2])), (x, y) -> x + y)"
-    val body = kmeansOracleSql(k, rounds)
-    val cut = body.lastIndexOf("SELECT vec_id, cid AS cluster_id, d2 FROM (")
-    body.substring(0, cut).stripSuffix("\n") + ",\n" +
-      s"""allF AS MATERIALIZED (
-         |  SELECT b.vec_id, ct.cid,
-         |    ${dotSql("ct.c", "ct.c")} - CAST(2 AS DOUBLE) * ${dotSql("b.v", "ct.c")}
-         |      + ${dotSql("b.v", "b.v")} AS d2f
-         |  FROM base b CROSS JOIN cent$rounds ct),
-         |dd AS MATERIALIZED (
-         |  SELECT *, sqrt(GREATEST(0.0, d2f)) AS dist FROM allF),
-         |own AS MATERIALIZED (
-         |  SELECT vec_id, cid AS cluster_id, sqrt(GREATEST(0.0, d2f)) AS a_dist
-         |  FROM allF QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2f, cid) = 1),
-         |oth AS MATERIALIZED (
-         |  SELECT d.vec_id, o.cluster_id, o.a_dist, MIN(d.dist) AS b_dist
-         |  FROM dd d JOIN own o USING (vec_id) WHERE d.cid <> o.cluster_id
-         |  GROUP BY 1, 2, 3)
-         |SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS n_members,
-         |  CAST(SUM(CAST(FLOOR((b_dist - a_dist)
-         |      / NULLIF(GREATEST(a_dist, b_dist), 0.0) * 1e6) / 1e6 AS DECIMAL(28,6))) AS DOUBLE)
-         |    / COUNT(*) AS mean_silhouette
-         |FROM oth GROUP BY 1""".stripMargin
-  }
-
-  /** The power-iteration PCA oracle — scatter panel, fixed-round
-    * matrix·vector recurrence and projection replayed with the same
-    * decimal partials and op order as Ann.pcaProject; CTEs
-    * MATERIALIZED (each round references the previous twice).
-    */
-  private def pcaOracleSql(dim: Int, iterations: Int): String = {
-    val head =
-      """WITH comps AS MATERIALIZED (
-        |  SELECT vec_id, dim_pos,
-        |    floor(vr * CAST(1000000 AS DOUBLE)) / CAST(1000000 AS DOUBLE) AS v
-        |  FROM (
-        |    SELECT vec_id,
-        |      UNNEST(range(len(v))) AS dim_pos,
-        |      UNNEST(v) AS vr
-        |    FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-        |          WHERE embedding IS NOT NULL))),
-        |means AS MATERIALIZED (
-        |  SELECT dim_pos, CAST(SUM(CAST(v AS DECIMAL(28,12))) AS DOUBLE) / COUNT(*) AS mu
-        |  FROM comps GROUP BY 1),
-        |centered AS MATERIALIZED (
-        |  SELECT vec_id, dim_pos, v - mu AS cv
-        |  FROM comps JOIN means USING (dim_pos)),
-        |gram AS MATERIALIZED (
-        |  SELECT a.dim_pos AS gi, b.dim_pos AS gj,
-        |    CAST(SUM(CAST(floor((a.cv * b.cv) * CAST(1000000 AS DOUBLE)) / CAST(1000000 AS DOUBLE) AS DECIMAL(28,12))) AS DOUBLE) AS gij
-        |  FROM centered a JOIN centered b USING (vec_id)
-        |  GROUP BY 1, 2),""".stripMargin +
-      s"""
-         |r0 AS MATERIALIZED (
-         |  SELECT DISTINCT gi AS dim_pos,
-         |    CAST(1 AS DOUBLE) / sqrt(CAST($dim AS DOUBLE)) AS r
-         |  FROM gram)""".stripMargin
-    val iters = (1 to iterations).map { i =>
-      s"""m$i AS MATERIALIZED (
-         |  SELECT gi AS dim_pos, CAST(SUM(CAST(floor((gij * r) * CAST(1000000 AS DOUBLE)) / CAST(1000000 AS DOUBLE) AS DECIMAL(28,12))) AS DOUBLE) AS rn
-         |  FROM gram JOIN r${i - 1} ON r${i - 1}.dim_pos = gram.gj
-         |  GROUP BY 1),
-         |n$i AS MATERIALIZED (
-         |  SELECT sqrt(CAST(SUM(CAST(floor((rn * rn) * CAST(1000000 AS DOUBLE)) / CAST(1000000 AS DOUBLE) AS DECIMAL(28,12))) AS DOUBLE)) AS nrm FROM m$i),
-         |r$i AS MATERIALIZED (
-         |  SELECT dim_pos, rn / nrm AS r FROM m$i CROSS JOIN n$i)""".stripMargin
-    }.mkString(",\n")
-    s"""$head,
-       |$iters
-       |SELECT c.vec_id, CAST(SUM(CAST(floor((c.cv * r.r) * CAST(1000000 AS DOUBLE)) / CAST(1000000 AS DOUBLE) AS DECIMAL(28,12))) AS DOUBLE) AS pc1_score
-       |FROM centered c JOIN r$iterations r USING (dim_pos)
-       |GROUP BY 1""".stripMargin
-  }
-
-  /** Label-propagation oracle: each synchronous round is one chained
-    * CTE stage — neighbor-label weight sums (the same DECIMAL(28,6)
-    * partials), max-weight panel, min-label winner, coalesce for
-    * isolated nodes — generated with the SAME round count as the
-    * registered query.
-    */
-  /** Brandes betweenness oracle, unrolled to the SAME `maxDepth` as
-    * the registered query: forward level CTEs `bl{l}` (exact BIGINT
-    * path counts, anti-joined against the reached set `br{l}`), then
-    * backward dependency CTEs `bd{l}` — each term the identical
-    * (σv/σw)·(1+δw) IEEE sequence floor-gridded to 1e-9 into a
-    * DECIMAL(28,9) per-(s,v) sum. Levels past the graph's true depth
-    * are empty relations and contribute nothing, exactly like the
-    * Spark loop that stops at the empty frontier.
-    */
-  /** The forward half of the Brandes chain, shared by the betweenness
-    * and closeness oracles: canonical nation-flow edges `be`, node
-    * panel `bn`, per-level frontiers `bl{l}` with exact BIGINT path
-    * counts, cumulative reached sets `br{l}`.
-    */
-  private def bfsForwardCtes(maxDepth: Int): String = {
-    val head =
-      """WITH be AS MATERIALIZED (
-        |  SELECT sn.n_name AS src, cn.n_name AS dst
-        |  FROM lineitem
-        |  JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN nation sn ON s_nationkey = sn.n_nationkey
-        |  JOIN nation cn ON c_nationkey = cn.n_nationkey
-        |  WHERE sn.n_name <> cn.n_name
-        |  GROUP BY 1, 2),
-        |bn AS MATERIALIZED (
-        |  SELECT DISTINCT node FROM (
-        |    SELECT src AS node FROM be UNION ALL SELECT dst FROM be)),
-        |bl0 AS MATERIALIZED (
-        |  SELECT node AS s, node AS v, CAST(1 AS BIGINT) AS sigma FROM bn),
-        |br0 AS MATERIALIZED (SELECT s, v FROM bl0)""".stripMargin
-    val fwd = (1 to maxDepth).map { l =>
-      s"""bl$l AS MATERIALIZED (
-         |  SELECT s, v, sigma FROM (
-         |    SELECT p.s, be.dst AS v, CAST(SUM(p.sigma) AS BIGINT) AS sigma
-         |    FROM bl${l - 1} p JOIN be ON p.v = be.src
-         |    GROUP BY 1, 2) f
-         |  ANTI JOIN br${l - 1} USING (s, v)),
-         |br$l AS MATERIALIZED (
-         |  SELECT s, v FROM br${l - 1} UNION ALL SELECT s, v FROM bl$l)""".stripMargin
-    }
-    (head +: fwd).mkString(",\n")
-  }
-
-  /** Closeness/harmonic oracle over the shared forward chain: per
-    * source the reached count, total out-distance, 1e-9-gridded
-    * harmonic sum and the two-factor Wasserman–Faust closeness —
-    * the identical IEEE sequence as Graph.closeness.
-    */
-  private def closenessOracleSql(maxDepth: Int): String = {
-    val dUnion = (1 to maxDepth)
-      .map(l => s"SELECT s, CAST($l AS BIGINT) AS d FROM bl$l")
-      .mkString(" UNION ALL ")
-    bfsForwardCtes(maxDepth) +
-      s""",
-         |creach AS MATERIALIZED (
-         |  SELECT s AS node, CAST(COUNT(*) AS BIGINT) AS n_reached,
-         |    CAST(SUM(d) AS BIGINT) AS total_dist,
-         |    CAST(SUM(CAST(FLOOR(1.0 / CAST(d AS DOUBLE) * 1e9) / 1e9
-         |                  AS DECIMAL(28,9))) AS DOUBLE) AS harmonic
-         |  FROM ($dUnion) GROUP BY 1)
-         |SELECT n.node,
-         |  COALESCE(r.n_reached, CAST(0 AS BIGINT)) AS n_reached,
-         |  COALESCE(r.total_dist, CAST(0 AS BIGINT)) AS total_dist,
-         |  COALESCE(r.harmonic, 0.0) AS harmonic,
-         |  CASE WHEN COALESCE(r.n_reached, CAST(0 AS BIGINT)) = 0 THEN 0.0
-         |       ELSE FLOOR((CAST(r.n_reached AS DOUBLE) / CAST(c.n - 1 AS DOUBLE))
-         |                  * (CAST(r.n_reached AS DOUBLE) / CAST(r.total_dist AS DOUBLE))
-         |                  * 1e9) / 1e9 END AS closeness_wf
-         |FROM bn n
-         |CROSS JOIN (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM bn) c
-         |LEFT JOIN creach r ON r.node = n.node""".stripMargin
-  }
-
-  private def betweennessOracleSql(maxDepth: Int): String = {
-    val back = (maxDepth - 1) to 0 by -1 map { l =>
-      s"""bd$l AS MATERIALIZED (
-         |  SELECT lv.s, lv.v, COALESCE(t.delta, 0.0) AS delta
-         |  FROM bl$l lv LEFT JOIN (
-         |    SELECT s, v, CAST(SUM(term) AS DOUBLE) AS delta FROM (
-         |      SELECT p.s, p.v,
-         |        CAST(FLOOR((CAST(p.sigma AS DOUBLE) / CAST(w.sigma AS DOUBLE))
-         |             * (1.0 + COALESCE(dw.delta, 0.0)) * 1e9) / 1e9
-         |             AS DECIMAL(28,9)) AS term
-         |      FROM bl$l p JOIN be ON p.v = be.src
-         |      JOIN bl${l + 1} w ON w.s = p.s AND w.v = be.dst
-         |      LEFT JOIN bd${l + 1} dw ON dw.s = p.s AND dw.v = be.dst)
-         |    GROUP BY 1, 2) t USING (s, v))""".stripMargin
-    }
-    val dUnion = (1 until maxDepth)
-      .map(l => s"SELECT v, delta FROM bd$l").mkString(" UNION ALL ")
-    bfsForwardCtes(maxDepth) + ",\n" +
-      s"""bd$maxDepth AS MATERIALIZED (
-         |  SELECT s, v, CAST(0.0 AS DOUBLE) AS delta FROM bl$maxDepth)""".stripMargin +
-      ",\n" + back.mkString(",\n") +
-      s"""
-         |SELECT n.node, COALESCE(b.bc, 0.0) AS betweenness,
-         |  CASE WHEN c.n >= 3
-         |       THEN FLOOR(COALESCE(b.bc, 0.0)
-         |                  / (CAST(c.n - 1 AS DOUBLE) * CAST(c.n - 2 AS DOUBLE))
-         |                  * 1e9) / 1e9 END AS betweenness_norm
-         |FROM bn n
-         |CROSS JOIN (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM bn) c
-         |LEFT JOIN (
-         |  SELECT v AS node,
-         |         CAST(SUM(CAST(delta AS DECIMAL(28,9))) AS DOUBLE) AS bc
-         |  FROM ($dUnion) GROUP BY 1) b ON b.node = n.node""".stripMargin
-  }
-
-  /** The k-core oracle, generated with the SAME k and round count as
-    * the registered query — each peel round is one degree CTE + one
-    * filter CTE over the previous alive set.
-    */
-  private def kCoreOracleSql(k: Int, rounds: Int): String = {
-    val head =
-      s"""WITH capped AS MATERIALIZED ($recsysInteractionsSql),
-         |e0 AS MATERIALIZED (
-         |  SELECT a.item_id AS u, b.item_id AS v
-         |  FROM capped a JOIN capped b
-         |    ON a.user_id = b.user_id AND a.item_id < b.item_id
-         |  GROUP BY 1, 2 HAVING COUNT(*) >= 4),
-         |e AS MATERIALIZED (
-         |  SELECT u, v FROM e0 UNION SELECT v AS u, u AS v FROM e0),
-         |a0 AS MATERIALIZED (SELECT DISTINCT u AS node FROM e)""".stripMargin
-    val iters = (1 to rounds).map { r =>
-      s"""d$r AS MATERIALIZED (
-         |  SELECT e.u, COUNT(*) AS deg
-         |  FROM e JOIN a${r - 1} x ON e.u = x.node
-         |         JOIN a${r - 1} y ON e.v = y.node
-         |  GROUP BY 1),
-         |a$r AS MATERIALIZED (SELECT u AS node FROM d$r WHERE deg >= $k)""".stripMargin
-    }.mkString(",\n")
-    val tail =
-      s"""cd AS (
-         |  SELECT e.u AS node, CAST(COUNT(*) AS BIGINT) AS core_degree
-         |  FROM e JOIN a$rounds x ON e.u = x.node
-         |         JOIN a$rounds y ON e.v = y.node
-         |  GROUP BY 1)
-         |SELECT n.node, (c.node IS NOT NULL) AS in_core, c.core_degree
-         |FROM a0 n LEFT JOIN cd c ON n.node = c.node""".stripMargin
-    s"$head,\n$iters,\n$tail"
-  }
-
-  private def labelPropOracleSql(rounds: Int): String = {
-    val head =
-      """WITH e0 AS MATERIALIZED (
-        |  SELECT sn.n_name AS u, cn.n_name AS v, CAST(COUNT(*) AS DOUBLE) AS w
-        |  FROM lineitem
-        |  JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN nation sn ON s_nationkey = sn.n_nationkey
-        |  JOIN nation cn ON c_nationkey = cn.n_nationkey
-        |  WHERE sn.n_name <> cn.n_name
-        |  GROUP BY 1, 2),
-        |e AS MATERIALIZED (
-        |  SELECT u, v, w FROM e0 UNION ALL SELECT v AS u, u AS v, w FROM e0),
-        |l0 AS MATERIALIZED (SELECT DISTINCT u AS node, u AS label FROM e)""".stripMargin
-    val iters = (1 to rounds).map { r =>
-      s"""s$r AS MATERIALIZED (
-         |  SELECT e.u, l.label, SUM(CAST(e.w AS DECIMAL(28,6))) AS sw
-         |  FROM e JOIN l${r - 1} l ON e.v = l.node GROUP BY 1, 2),
-         |m$r AS MATERIALIZED (SELECT u, MAX(sw) AS msw FROM s$r GROUP BY 1),
-         |w$r AS MATERIALIZED (
-         |  SELECT s.u AS node, MIN(s.label) AS label
-         |  FROM s$r s JOIN m$r m ON s.u = m.u AND s.sw = m.msw GROUP BY 1),
-         |l$r AS MATERIALIZED (
-         |  SELECT l.node, COALESCE(n.label, l.label) AS label
-         |  FROM l${r - 1} l LEFT JOIN w$r n ON l.node = n.node)""".stripMargin
-    }.mkString(",\n")
-    s"$head,\n$iters\nSELECT node, label AS community FROM l$rounds"
-  }
-
-  /** Modularity oracle: the label-propagation replay (same round
-    * count) extended with the undirected-weight aggregate and the
-    * per-community Q pieces in Graph.modularity's fixed IEEE order.
-    */
-  private def modularityOracleSql(rounds: Int): String = {
-    val body = labelPropOracleSql(rounds)
-    val cut = body.lastIndexOf("SELECT node, label AS community")
-    body.substring(0, cut).stripSuffix("\n") + ",\n" +
-      s"""lblf AS MATERIALIZED (SELECT node, label AS community FROM l$rounds),
-         |und AS MATERIALIZED (
-         |  SELECT LEAST(u, v) AS a, GREATEST(u, v) AS b,
-         |    SUM(CAST(w AS DECIMAL(28,6))) AS w
-         |  FROM e0 GROUP BY 1, 2),
-         |wt AS (SELECT SUM(w) AS tot_w FROM und),
-         |str AS (
-         |  SELECT l.community, SUM(s.w) AS strength
-         |  FROM (SELECT a AS node, w FROM und UNION ALL SELECT b AS node, w FROM und) s
-         |  JOIN lblf l ON l.node = s.node GROUP BY 1),
-         |intra AS (
-         |  SELECT la.community, SUM(u.w) AS w_intra
-         |  FROM und u JOIN lblf la ON u.a = la.node JOIN lblf lb ON u.b = lb.node
-         |  WHERE la.community = lb.community GROUP BY 1),
-         |sz AS (SELECT community, CAST(COUNT(*) AS BIGINT) AS n_nodes FROM lblf GROUP BY 1)
-         |SELECT sz.community, n_nodes,
-         |  CAST(COALESCE(w_intra, 0) AS DOUBLE) AS w_intra,
-         |  CAST(strength AS DOUBLE) AS strength,
-         |  CAST(COALESCE(w_intra, 0) AS DOUBLE) / CAST(tot_w AS DOUBLE)
-         |    - (CAST(strength AS DOUBLE) / (2.0 * CAST(tot_w AS DOUBLE)))
-         |      * (CAST(strength AS DOUBLE) / (2.0 * CAST(tot_w AS DOUBLE))) AS q_contribution
-         |FROM sz JOIN str USING (community) LEFT JOIN intra USING (community) CROSS JOIN wt""".stripMargin
-  }
-
-  /** The PageRank oracle, generated with the SAME iteration count and
-    * damping literal as the registered query — each power-iteration
-    * round becomes one chained CTE stage replaying the decimal
-    * contribution sums and the double recurrence op-for-op.
-    */
-  /** HITS replay: the pagerank edge CTE with weights pre-normalized
-    * to w/tot, then per round the two gridded-decimal half-steps
-    * (authority from hubs, hub from the NEW authorities), each with
-    * its L2-norm panel — op-for-op Graph.hits.
-    */
-  private def hitsOracleSql(iterations: Int): String = {
-    val head =
-      """WITH e0 AS MATERIALIZED (
-        |  SELECT sn.n_name AS src, cn.n_name AS dst, CAST(COUNT(*) AS DOUBLE) AS w0
-        |  FROM lineitem
-        |  JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN nation sn ON s_nationkey = sn.n_nationkey
-        |  JOIN nation cn ON c_nationkey = cn.n_nationkey
-        |  WHERE sn.n_name <> cn.n_name
-        |  GROUP BY 1, 2),
-        |tw AS MATERIALIZED (
-        |  SELECT CAST(SUM(CAST(w0 AS DECIMAL(28,6))) AS DOUBLE) AS tot FROM e0),
-        |e AS MATERIALIZED (
-        |  SELECT src, dst, w0 / tot AS w FROM e0 CROSS JOIN tw),
-        |nodes AS MATERIALIZED (SELECT src AS node FROM e UNION SELECT dst FROM e),
-        |h0 AS MATERIALIZED (SELECT node, CAST(1 AS DOUBLE) AS hub FROM nodes)""".stripMargin
-    val iters = (1 to iterations).map { i =>
-      s"""ar$i AS MATERIALIZED (
-         |  SELECT e.dst AS node,
-         |    CAST(SUM(CAST(FLOOR(h.hub * e.w * 1e12) / 1e12 AS DECIMAL(28,12))) AS DOUBLE) AS araw
-         |  FROM h${i - 1} h JOIN e ON h.node = e.src GROUP BY 1),
-         |an$i AS MATERIALIZED (
-         |  SELECT SQRT(COALESCE(CAST(SUM(CAST(FLOOR(araw * araw * 1e12) / 1e12 AS DECIMAL(28,12))) AS DOUBLE), 0.0)) AS nrm
-         |  FROM ar$i),
-         |a$i AS MATERIALIZED (
-         |  SELECT nd.node,
-         |    CASE WHEN an.nrm > 0 THEN COALESCE(ar.araw, 0.0) / an.nrm ELSE 0.0 END AS authority
-         |  FROM nodes nd CROSS JOIN an$i an LEFT JOIN ar$i ar ON ar.node = nd.node),
-         |hr$i AS MATERIALIZED (
-         |  SELECT e.src AS node,
-         |    CAST(SUM(CAST(FLOOR(a.authority * e.w * 1e12) / 1e12 AS DECIMAL(28,12))) AS DOUBLE) AS hraw
-         |  FROM a$i a JOIN e ON a.node = e.dst GROUP BY 1),
-         |hn$i AS MATERIALIZED (
-         |  SELECT SQRT(COALESCE(CAST(SUM(CAST(FLOOR(hraw * hraw * 1e12) / 1e12 AS DECIMAL(28,12))) AS DOUBLE), 0.0)) AS nrm
-         |  FROM hr$i),
-         |h$i AS MATERIALIZED (
-         |  SELECT nd.node,
-         |    CASE WHEN hn.nrm > 0 THEN COALESCE(hr.hraw, 0.0) / hn.nrm ELSE 0.0 END AS hub
-         |  FROM nodes nd CROSS JOIN hn$i hn LEFT JOIN hr$i hr ON hr.node = nd.node)""".stripMargin
-    }.mkString(",\n")
-    s"$head,\n$iters\nSELECT h.node, h.hub, a.authority FROM h$iterations h JOIN a$iterations a USING (node)"
-  }
-
-  /** One chi2/Cramér's-V pair statement (Profiling.chi2Assoc mirror),
-    * parametrized by the column pair — shared by the single-pair
-    * query and the pairwise matrix (generated from the same column
-    * list, the corrPairs discipline).
-    */
-  private def chi2PairOracleSql(validSql: String, x: String, y: String): String =
-    s"""WITH xy AS (
-       |  SELECT $x AS x, $y AS y,
-       |    CAST(COUNT(*) AS BIGINT) AS nxy
-       |  FROM ($validSql)
-       |  WHERE $x IS NOT NULL AND $y IS NOT NULL
-       |  GROUP BY 1, 2),
-       |nx AS (SELECT x, CAST(SUM(nxy) AS BIGINT) AS nx FROM xy GROUP BY 1),
-       |ny AS (SELECT y, CAST(SUM(nxy) AS BIGINT) AS ny FROM xy GROUP BY 1),
-       |kx AS (SELECT CAST(COUNT(*) AS BIGINT) AS kx FROM nx),
-       |ky AS (SELECT CAST(COUNT(*) AS BIGINT) AS ky FROM ny),
-       |nt AS (SELECT CAST(SUM(nxy) AS BIGINT) AS n FROM xy),
-       |grid AS (
-       |  SELECT nx.x, ny.y, nx.nx, ny.ny, COALESCE(xy.nxy, 0) AS nxy
-       |  FROM nx CROSS JOIN ny
-       |  LEFT JOIN xy ON xy.x = nx.x AND xy.y = ny.y),
-       |pe AS (
-       |  SELECT n, nxy, CAST(nxy AS DOUBLE) / CAST(n AS DOUBLE) AS pxy,
-       |    (CAST(nx AS DOUBLE) / CAST(n AS DOUBLE))
-       |      * (CAST(ny AS DOUBLE) / CAST(n AS DOUBLE)) AS e
-       |  FROM grid CROSS JOIN nt),
-       |terms AS (
-       |  SELECT n, nxy,
-       |    FLOOR((pxy - e) * (pxy - e) / e * 1e12) / 1e12 AS term
-       |  FROM pe),
-       |s AS (SELECT CAST(MAX(n) AS BIGINT) AS n,
-       |  CAST(SUM(CASE WHEN nxy > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_cells,
-       |  SUM(CAST(term AS DECIMAL(18,12))) AS s FROM terms)
-       |SELECT '$x' AS col_x, '$y' AS col_y,
-       |  n, n_cells, kx AS k_x, ky AS k_y,
-       |  (kx - 1) * (ky - 1) AS dof,
-       |  CAST(n AS DOUBLE) * CAST(s AS DOUBLE) AS chi2,
-       |  CASE WHEN LEAST(kx - 1, ky - 1) <= 0 THEN NULL
-       |       ELSE sqrt(CAST(s AS DOUBLE)
-       |                 / CAST(LEAST(kx - 1, ky - 1) AS DOUBLE)) END AS cramers_v
-       |FROM s CROSS JOIN kx CROSS JOIN ky""".stripMargin
-
-  private def pageRankOracleSql(iterations: Int, damping: Double): String = {
-    val d = s"CAST('${damping.toString}' AS DOUBLE)"
-    val head =
-      """WITH e AS MATERIALIZED (
-        |  SELECT sn.n_name AS src, cn.n_name AS dst, CAST(COUNT(*) AS DOUBLE) AS w
-        |  FROM lineitem
-        |  JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN nation sn ON s_nationkey = sn.n_nationkey
-        |  JOIN nation cn ON c_nationkey = cn.n_nationkey
-        |  WHERE sn.n_name <> cn.n_name
-        |  GROUP BY 1, 2),
-        |ow AS MATERIALIZED (
-        |  SELECT src, CAST(SUM(CAST(w AS DECIMAL(28,6))) AS DOUBLE) AS out_w
-        |  FROM e GROUP BY 1),
-        |nodes AS MATERIALIZED (SELECT src AS node FROM e UNION SELECT dst FROM e),
-        |nn AS MATERIALIZED (SELECT COUNT(*) AS cnt FROM nodes),
-        |r0 AS MATERIALIZED (SELECT node, CAST(1 AS DOUBLE) / cnt AS rank FROM nodes CROSS JOIN nn)""".stripMargin
-    val iters = (1 to iterations).map { i =>
-      s"""dg$i AS MATERIALIZED (
-         |  SELECT COALESCE(SUM(CAST(rank AS DECIMAL(28,12))), CAST(0 AS DECIMAL(28,12))) AS dang
-         |  FROM r${i - 1} WHERE node NOT IN (SELECT src FROM ow)),
-         |c$i AS MATERIALIZED (
-         |  SELECT e.dst AS node, SUM(CAST(r.rank * e.w / ow.out_w AS DECIMAL(28,12))) AS s
-         |  FROM e JOIN ow ON e.src = ow.src JOIN r${i - 1} r ON r.node = e.src
-         |  GROUP BY 1),
-         |r$i AS MATERIALIZED (
-         |  SELECT nd.node,
-         |    (CAST(1 AS DOUBLE) - $d) / cnt
-         |      + $d * (CAST(COALESCE(c.s, CAST(0 AS DECIMAL(28,12))) AS DOUBLE)
-         |        + CAST(dg.dang AS DOUBLE) / cnt) AS rank
-         |  FROM nodes nd CROSS JOIN nn CROSS JOIN dg$i dg
-         |    LEFT JOIN c$i c ON c.node = nd.node)""".stripMargin
-    }.mkString(",\n")
-    s"$head,\n$iters\nSELECT node, rank FROM r$iterations"
-  }
-
-  /** Missingness-audit oracle generated from the SAME column list —
-    * integer moments, the identical fixed-order phi expression.
-    */
-  private def missingnessOracleSql(cols: Seq[String]): String = {
-    val moms =
-      cols.map(c => s"CAST(SUM(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS nn_$c") ++
-      cols.combinations(2).map { case Seq(a, b) =>
-        s"CAST(SUM(CASE WHEN $a IS NULL AND $b IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS nb_${a}_$b" }
-    val pairSelects = cols.combinations(2).map { case Seq(a, b) =>
-      s"""SELECT '$a' AS col_x, '$b' AS col_y, n,
-         |  nn_$a AS n_null_x, nn_$b AS n_null_y, nb_${a}_$b AS n_both_null,
-         |  (CAST(n AS DOUBLE) * CAST(nb_${a}_$b AS DOUBLE)
-         |     - CAST(nn_$a AS DOUBLE) * CAST(nn_$b AS DOUBLE))
-         |  / NULLIF(sqrt(CAST(nn_$a AS DOUBLE) * CAST(n - nn_$a AS DOUBLE)
-         |     * CAST(nn_$b AS DOUBLE) * CAST(n - nn_$b AS DOUBLE)), 0) AS phi
-         |FROM m""".stripMargin
-    }.mkString("\nUNION ALL\n")
-    s"""WITH m AS (
-       |  SELECT COUNT(*) AS n, ${moms.mkString(",\n  ")}
-       |  FROM events)
-       |$pairSelects""".stripMargin
-  }
-
-  /** Profiling.partialCorr mirrored: the corrPairs moment idiom, the
-    * three r's as subexpressions, one fixed-order partial at the edge.
-    */
-  private def partialCorrOracleSql(x: String, y: String, z: String): String = {
-    val cols = Seq(x, y, z)
-    val moms =
-      cols.map(c => s"SUM(CAST($c AS DECIMAL(18,6))) AS s1_$c") ++
-      cols.map(c => s"SUM(CAST($c * $c AS DECIMAL(18,6))) AS s2_$c") ++
-      cols.combinations(2).map { case Seq(a, b) =>
-        s"SUM(CAST($a * $b AS DECIMAL(18,6))) AS sp_${a}_$b" }
-    def r(a: String, b: String): String = {
-      val sp = if (cols.indexOf(a) < cols.indexOf(b)) s"sp_${a}_$b" else s"sp_${b}_$a"
-      s"""(CAST($sp AS DOUBLE) - CAST(s1_$a AS DOUBLE) * CAST(s1_$b AS DOUBLE) / n)
-         |  / NULLIF(sqrt(CAST(s2_$a AS DOUBLE) - CAST(s1_$a AS DOUBLE) * CAST(s1_$a AS DOUBLE) / n)
-         |         * sqrt(CAST(s2_$b AS DOUBLE) - CAST(s1_$b AS DOUBLE) * CAST(s1_$b AS DOUBLE) / n), 0)""".stripMargin
-    }
-    s"""WITH r AS (
-       |  SELECT * FROM lineitem
-       |  WHERE ${cols.map(c => s"$c IS NOT NULL").mkString(" AND ")}),
-       |m AS (SELECT COUNT(*) AS n, ${moms.mkString(",\n  ")} FROM r),
-       |rr AS (
-       |  SELECT n,
-       |    ${r(x, y)} AS r_xy,
-       |    ${r(x, z)} AS r_xz,
-       |    ${r(y, z)} AS r_yz
-       |  FROM m)
-       |SELECT '$x' AS col_x, '$y' AS col_y, '$z' AS col_given, n,
-       |  r_xy, r_xz, r_yz,
-       |  (r_xy - r_xz * r_yz)
-       |    / NULLIF(sqrt((1.0 - r_xz * r_xz) * (1.0 - r_yz * r_yz)), 0.0) AS partial_corr
-       |FROM rr""".stripMargin
-  }
-
-  private def corrPairsOracleSql(cols: Seq[String]): String = {
-    val moms =
-      cols.map(c => s"SUM(CAST($c AS DECIMAL(18,6))) AS s1_$c") ++
-      cols.map(c => s"SUM(CAST($c * $c AS DECIMAL(18,6))) AS s2_$c") ++
-      cols.combinations(2).map { case Seq(a, b) =>
-        s"SUM(CAST($a * $b AS DECIMAL(18,6))) AS sp_${a}_$b" }
-    val pairSelects = cols.combinations(2).map { case Seq(a, b) =>
-      s"""SELECT '$a' AS col_x, '$b' AS col_y, n,
-         |  (CAST(sp_${a}_$b AS DOUBLE) - CAST(s1_$a AS DOUBLE) * CAST(s1_$b AS DOUBLE) / n)
-         |  / NULLIF(sqrt(CAST(s2_$a AS DOUBLE) - CAST(s1_$a AS DOUBLE) * CAST(s1_$a AS DOUBLE) / n)
-         |         * sqrt(CAST(s2_$b AS DOUBLE) - CAST(s1_$b AS DOUBLE) * CAST(s1_$b AS DOUBLE) / n), 0) AS corr
-         |FROM m""".stripMargin
-    }.mkString("\nUNION ALL\n")
-    s"""WITH r AS (
-       |  SELECT * FROM lineitem
-       |  WHERE ${cols.map(c => s"$c IS NOT NULL").mkString(" AND ")}),
-       |m AS (SELECT COUNT(*) AS n, ${moms.mkString(",\n  ")} FROM r)
-       |$pairSelects""".stripMargin
-  }
-
-  /** BPE training rounds as chained MATERIALIZED CTEs (v0 vocab,
-    * p_r pairs, b_r winner, v_r merged vocab) — shared by the
-    * bpe_train_merges and bpe_encode oracles so the two replay the
-    * SAME learned merges.
-    */
-  private def bpeTrainCtes(toksSql: String, rounds: Int): String = {
-    val head =
-      s"""WITH v0 AS MATERIALIZED (
-         |  SELECT ' ' || array_to_string(regexp_extract_all(tok, '.'), '  ') || ' ' AS sym,
-         |         COUNT(*) AS wf
-         |  FROM (SELECT UNNEST(t) AS tok FROM (SELECT $toksSql AS t FROM documents))
-         |  GROUP BY 1)""".stripMargin
-    val iters = (1 to rounds).map { r =>
-      s"""p$r AS MATERIALIZED (
-         |  SELECT UNNEST(list_slice(t, 1, n - 1)) AS l,
-         |         UNNEST(list_slice(t, 2, n)) AS r,
-         |         wf
-         |  FROM (SELECT string_split(trim(sym), '  ') AS t,
-         |               len(string_split(trim(sym), '  ')) AS n, wf
-         |        FROM v${r - 1})
-         |  WHERE n >= 2),
-         |b$r AS MATERIALIZED (
-         |  SELECT l, r, CAST(SUM(wf) AS BIGINT) AS cnt FROM p$r GROUP BY 1, 2
-         |  ORDER BY cnt DESC, l, r LIMIT 1),
-         |v$r AS MATERIALIZED (
-         |  SELECT replace(sym, ' ' || b.l || '  ' || b.r || ' ',
-         |                      ' ' || b.l || b.r || ' ') AS sym, wf
-         |  FROM v${r - 1}, b$r b
-         |  UNION ALL
-         |  SELECT sym, wf FROM v${r - 1}
-         |  WHERE NOT EXISTS (SELECT 1 FROM b$r))""".stripMargin
-    }
-    (head +: iters).mkString(",\n")
-  }
-
-  /** The learned BPE merges applied to every corpus token in round
-    * order (e0 = char-split tokens, e_r = round-r merge applied) —
-    * the shared apply chain of the bpe_encode and tokenizer_compare
-    * oracles; pairs with [[bpeTrainCtes]] (which defines the b$r
-    * winners it references).
-    */
-  private def bpeApplyCtes(toksSql: String, rounds: Int): String = {
-    val applies = (1 to rounds).map { r =>
-      s"""e$r AS MATERIALIZED (
-         |  SELECT doc_id, replace(sym, ' ' || b.l || '  ' || b.r || ' ',
-         |                              ' ' || b.l || b.r || ' ') AS sym
-         |  FROM e${r - 1}, b$r b
-         |  UNION ALL
-         |  SELECT doc_id, sym FROM e${r - 1}
-         |  WHERE NOT EXISTS (SELECT 1 FROM b$r))""".stripMargin
-    }.mkString(",\n")
-    s"""e0 AS MATERIALIZED (
-       |  SELECT doc_id, ' ' || array_to_string(regexp_extract_all(tok, '.'), '  ') || ' ' AS sym
-       |  FROM (SELECT doc_id, UNNEST(t) AS tok
-       |        FROM (SELECT doc_id, $toksSql AS t FROM documents))),
-       |$applies""".stripMargin
-  }
-
-  /** Unigram-LM tokenizer training as chained MATERIALIZED CTEs (the
-    * bpeTrainCtes discipline): `w` word freqs, `sub` substring seed,
-    * `inv` char inventory, `v0`/`u0v` seed vocab, then per EM round a
-    * `lcap`-step unrolled Viterbi DP (`r{r}b{i}` winners per position,
-    * `r{r}f` finals), usage `u{r}` and the re-estimated vocab `u{r}v`.
-    * `viterbiCtes(tag, vocab)` is exposed to the encode oracle so both
-    * replay the SAME model. DP scores are left-to-right folds of
-    * 1e-6-gridded log-probs — bit-identical to the Spark fold — and
-    * every per-word argmax carries the (score DESC, seg ASC) total
-    * tie-break.
-    */
-  private object UnigramOracle {
-    val (emRounds, seedMultis, keepMultis, maxLen, lcap) = (2, 300, 200, 4, 12)
-
-    def viterbiCtes(tag: String, vocabCte: String): String = {
-      val steps = (1 to lcap).map { i =>
-        val lo = math.max(0, i - maxLen)
-        val fr = ((if (lo == 0) Seq(s"${tag}d0") else Nil) ++
-          (math.max(1, lo) until i).map(j => s"${tag}b$j"))
-          .map(c => s"SELECT * FROM $c").mkString(" UNION ALL ")
-        s"""${tag}b$i AS MATERIALIZED (
-           |  SELECT word, wf, wl, $i AS pos, score, seg FROM (
-           |    SELECT c.*, ROW_NUMBER() OVER (PARTITION BY word
-           |      ORDER BY score DESC, seg) AS rn
-           |    FROM (
-           |      SELECT d.word, d.wf, d.wl, d.score + v.log_prob AS score,
-           |             d.seg || ' ' || v.piece AS seg
-           |      FROM ($fr) d JOIN $vocabCte v
-           |        ON v.piece = substr(d.word, d.pos + 1, $i - d.pos)
-           |      WHERE d.wl >= $i) c)
-           |  WHERE rn = 1)""".stripMargin
-      }
-      val finals = (1 to lcap).map(i => s"SELECT * FROM ${tag}b$i")
-        .mkString(" UNION ALL ")
-      (s"""${tag}d0 AS MATERIALIZED (
-          |  SELECT word, wf, len(word) AS wl, 0 AS pos,
-          |         CAST(0.0 AS DOUBLE) AS score, '' AS seg FROM w)""".stripMargin
-        +: steps :+
-        s"""${tag}f AS MATERIALIZED (
-           |  SELECT word, wf, ltrim(seg) AS seg FROM ($finals)
-           |  WHERE pos = wl)""".stripMargin).mkString(",\n")
-    }
-
-    /** The unigram ENCODE tail shared by the unigram_encode and
-      * tokenizer_compare oracles: one more Viterbi pass under the
-      * final vocab (tag `e`) + the per-doc token relation and the
-      * per-word piece counts — ONE definition, so the two oracles can
-      * never silently diverge on the encode surface (the bpeApplyCtes
-      * discipline). `tokCte`/`pcCte` name the emitted CTEs.
-      */
-    def applyCtes(toksSql: String, tokCte: String, pcCte: String): String =
-      viterbiCtes("e", s"u${emRounds}v") +
-        s""",
-           |$tokCte AS MATERIALIZED (
-           |  SELECT doc_id, substr(tok, 1, $lcap) AS word
-           |  FROM (SELECT doc_id, UNNEST(t) AS tok
-           |        FROM (SELECT doc_id, $toksSql AS t FROM documents))
-           |  WHERE tok <> ''),
-           |$pcCte AS MATERIALIZED (
-           |  SELECT word, len(string_split(seg, ' ')) AS n_pieces FROM ef)""".stripMargin
-
-    def trainCtes(toksSql: String): String = {
-      val head =
-        s"""WITH w AS MATERIALIZED (
-           |  SELECT substr(tok, 1, $lcap) AS word, COUNT(*) AS wf
-           |  FROM (SELECT UNNEST(t) AS tok FROM (SELECT $toksSql AS t FROM documents))
-           |  WHERE tok <> '' GROUP BY 1),
-           |sub AS MATERIALIZED (
-           |  SELECT piece, CAST(SUM(wf) AS BIGINT) AS cnt FROM (
-           |    SELECT UNNEST(flatten(list_transform(range(1, len(word) + 1), s ->
-           |      list_transform(range(1, least($maxLen, len(word) - s + 1) + 1), l ->
-           |        substr(word, s, l))))) AS piece, wf
-           |    FROM w)
-           |  GROUP BY 1),
-           |inv AS MATERIALIZED (SELECT piece FROM sub WHERE len(piece) = 1),
-           |ugv0 AS MATERIALIZED (
-           |  SELECT piece, cnt AS n_used FROM sub WHERE len(piece) = 1
-           |  UNION ALL
-           |  SELECT piece, cnt AS n_used FROM (
-           |    SELECT piece, cnt FROM sub WHERE len(piece) >= 2
-           |    ORDER BY cnt DESC, piece LIMIT $seedMultis)),
-           |u0v AS MATERIALIZED (
-           |  SELECT piece, n_used,
-           |    FLOOR(LN(CAST(n_used AS DOUBLE) / t.tot) * 1e6) / 1e6 AS log_prob
-           |  FROM ugv0, (SELECT CAST(SUM(n_used) AS DOUBLE) AS tot FROM ugv0) t)""".stripMargin
-      val rounds = (1 to emRounds).map { r =>
-        viterbiCtes(s"r$r", s"u${r - 1}v") + ",\n" +
-          s"""u$r AS MATERIALIZED (
-             |  SELECT piece, CAST(SUM(wf) AS BIGINT) AS n_used
-             |  FROM (SELECT wf, UNNEST(string_split(seg, ' ')) AS piece FROM r${r}f)
-             |  GROUP BY 1),
-             |ugv$r AS MATERIALIZED (
-             |  SELECT i.piece, COALESCE(u.n_used, CAST(0 AS BIGINT)) AS n_used
-             |  FROM inv i LEFT JOIN u$r u USING (piece)
-             |  UNION ALL
-             |  SELECT piece, n_used FROM (
-             |    SELECT piece, n_used FROM u$r WHERE len(piece) >= 2
-             |    ORDER BY n_used DESC, piece LIMIT $keepMultis)),
-             |u${r}v AS MATERIALIZED (
-             |  SELECT piece, n_used,
-             |    FLOOR(LN(CAST(n_used + 1 AS DOUBLE) / t.tot) * 1e6) / 1e6 AS log_prob
-             |  FROM ugv$r, (SELECT CAST(SUM(n_used + 1) AS DOUBLE) AS tot FROM ugv$r) t)""".stripMargin
-      }
-      (head +: rounds).mkString(",\n")
-    }
-  }
-
-  /** WordPiece tokenizer training + greedy encode as chained
-    * MATERIALIZED CTEs (the bpeTrainCtes/UnigramOracle discipline):
-    * training = per round the symbol-frequency relation `wps{r}`,
-    * the pair relation `wpp{r}`, the likelihood-scored winner
-    * `wpb{r}` (score = n_pair / (n_left·n_right), one double multiply
-    * + one division — bit-identical to the Spark argmax) and the
-    * replaced vocabulary `wpv{r}`; encode = the role-keyed vocab
-    * `wpkeys` (word-initial pieces bare, continuations ##-prefixed,
-    * char inventory in both roles), the longest-match table `wpj`
-    * and an `lcap`-step unrolled greedy walk `wpg{i}`
-    * (pos += jump(pos) while pos ≤ len) — the exact recurrence the
-    * Spark per-word aggregate fold runs.
-    */
-  private object WordpieceOracle {
-    val (rounds, lcap) = (6, 12)
-
-    /** Training chain, WITH-prefixed: wpv0 (char-split vocab) then
-      * per round wpt/wps/wpp/wpb/wpv.
-      */
-    def trainCtes(toksSql: String): String = {
-      val head =
-        s"""WITH wpv0 AS MATERIALIZED (
-           |  SELECT ' ' || array_to_string(regexp_extract_all(tok, '.'), '  ') || ' ' AS sym,
-           |         COUNT(*) AS wf
-           |  FROM (SELECT UNNEST(t) AS tok FROM (SELECT $toksSql AS t FROM documents))
-           |  WHERE tok <> '' GROUP BY 1)""".stripMargin
-      val iters = (1 to rounds).map { r =>
-        s"""wpt$r AS MATERIALIZED (
-           |  SELECT string_split(trim(sym), '  ') AS t,
-           |         len(string_split(trim(sym), '  ')) AS n, wf
-           |  FROM wpv${r - 1}),
-           |wps$r AS MATERIALIZED (
-           |  SELECT s, CAST(SUM(wf) AS BIGINT) AS sf FROM (
-           |    SELECT UNNEST(t) AS s, wf FROM wpt$r) GROUP BY 1),
-           |wpp$r AS MATERIALIZED (
-           |  SELECT l, r, CAST(SUM(wf) AS BIGINT) AS np FROM (
-           |    SELECT UNNEST(list_slice(t, 1, n - 1)) AS l,
-           |           UNNEST(list_slice(t, 2, n)) AS r, wf
-           |    FROM wpt$r WHERE n >= 2) GROUP BY 1, 2),
-           |wpb$r AS MATERIALIZED (
-           |  SELECT p.l, p.r, p.np, sl.sf AS nl, sr.sf AS nr,
-           |         CAST(p.np AS DOUBLE) / (CAST(sl.sf AS DOUBLE) * CAST(sr.sf AS DOUBLE)) AS score
-           |  FROM wpp$r p JOIN wps$r sl ON sl.s = p.l JOIN wps$r sr ON sr.s = p.r
-           |  ORDER BY score DESC, p.l, p.r LIMIT 1),
-           |wpv$r AS MATERIALIZED (
-           |  SELECT replace(sym, ' ' || b.l || '  ' || b.r || ' ',
-           |                      ' ' || b.l || b.r || ' ') AS sym, wf
-           |  FROM wpv${r - 1}, wpb$r b
-           |  UNION ALL
-           |  SELECT sym, wf FROM wpv${r - 1}
-           |  WHERE NOT EXISTS (SELECT 1 FROM wpb$r))""".stripMargin
-      }
-      (head +: iters).mkString(",\n")
-    }
-
-    /** Encode chain appended after [[trainCtes]]: truncated word
-      * relation `wpw`, role-keyed vocab `wpkeys` from the final
-      * `wpv{rounds}` symbolization, longest-match `wpj`, the unrolled
-      * greedy walk ending in `wpgf` (word → n_pieces), and the
-      * per-doc token relation `wptok`.
-      */
-    def applyCtes(toksSql: String): String = {
-      val steps = (1 to lcap).map { i =>
-        s"""wpg$i AS MATERIALIZED (
-           |  SELECT g.word, g.wf, g.wl,
-           |    CASE WHEN g.pos <= g.wl THEN g.pos + j.jump ELSE g.pos END AS pos,
-           |    CASE WHEN g.pos <= g.wl THEN g.cnt + 1 ELSE g.cnt END AS cnt
-           |  FROM wpg${i - 1} g LEFT JOIN wpj j ON j.word = g.word AND j.s = g.pos)""".stripMargin
-      }.mkString(",\n")
-      s"""wpw AS MATERIALIZED (
-         |  SELECT substr(tok, 1, $lcap) AS word, COUNT(*) AS wf
-         |  FROM (SELECT UNNEST(t) AS tok FROM (SELECT $toksSql AS t FROM documents))
-         |  WHERE tok <> '' GROUP BY 1),
-         |wpkeys AS MATERIALIZED (
-         |  SELECT DISTINCT init, piece FROM (
-         |    SELECT i = 1 AS init, t[i] AS piece
-         |    FROM (SELECT t, UNNEST(range(1, len(t) + 1)) AS i
-         |          FROM (SELECT string_split(trim(sym), '  ') AS t FROM wpv$rounds))
-         |    UNION ALL
-         |    SELECT TRUE AS init, c AS piece FROM (
-         |      SELECT DISTINCT UNNEST(regexp_extract_all(word, '.')) AS c FROM wpw)
-         |    UNION ALL
-         |    SELECT FALSE AS init, c AS piece FROM (
-         |      SELECT DISTINCT UNNEST(regexp_extract_all(word, '.')) AS c FROM wpw))),
-         |wpj AS MATERIALIZED (
-         |  SELECT word, wf, wl, s, MAX(l) AS jump FROM (
-         |    SELECT word, wf, wl, u.s AS s, u.l AS l,
-         |      (u.s = 1) AS init, substr(word, u.s, u.l) AS piece
-         |    FROM (
-         |      SELECT word, wf, len(word) AS wl,
-         |        UNNEST(flatten(list_transform(range(1, len(word) + 1), s ->
-         |          list_transform(range(1, len(word) - s + 2), l ->
-         |            {'s': s, 'l': l})))) AS u
-         |      FROM wpw)) m JOIN wpkeys USING (init, piece)
-         |  GROUP BY 1, 2, 3, 4),
-         |wpg0 AS MATERIALIZED (
-         |  SELECT word, wf, len(word) AS wl, 1 AS pos, 0 AS cnt FROM wpw),
-         |$steps,
-         |wpgf AS MATERIALIZED (
-         |  SELECT word, cnt AS n_pieces FROM wpg$lcap),
-         |wptok AS MATERIALIZED (
-         |  SELECT doc_id, substr(tok, 1, $lcap) AS word
-         |  FROM (SELECT doc_id, UNNEST(t) AS tok
-         |        FROM (SELECT doc_id, $toksSql AS t FROM documents))
-         |  WHERE tok <> '')""".stripMargin
-    }
-  }
-
-  /** DuckDB twins of the text-pipeline queries. Since r14 the
-    * probabilistic tier (minhash / simhash / fingerprint /
-    * decontaminate-minhash and the recall panel over them) is
-    * oracle-checked too: signatures ride md5-register hashes
-    * ([[graft.expressions.ArrayKernels.md5Long60]]), so the sketch
-    * state is a SQL relation the oracle recomputes — the D75
-    * hllOverlapReplayable recipe applied to the text tier.
-    */
-  // ── md5-register text-tier replays (r14 §5.1 conversion) ─────────
-
-  /** md5Long60 over a SQL expression — DuckDB's exact numeric twin of
-    * [[graft.expressions.ArrayKernels.md5Long60]] / Spark's
-    * `conv(substring(md5(e),1,15),16,10)`.
-    */
-  private def md5Long60Sql(e: String): String =
-    s"CAST(concat('0x', substr(md5($e), 1, 15)) AS BIGINT)"
-
-  private val docToksSql = """regexp_split_to_array(trim(text), '\s+')"""
-
-  /** The distinct n-gram shingle list over a token list `t` —
-    * generalizes the n=3 form the jaccard oracles pin (short docs
-    * contribute their whole token join, matching TextOps.shingles).
-    */
-  private def shinglesSqlFor(n: Int): String =
-    s"""CASE WHEN len(t) >= $n
-       |     THEN list_distinct(list_transform(range(1, len(t) - ${n - 2}),
-       |          i -> array_to_string(list_slice(t, i, i + ${n - 1}), ' ')))
-       |     ELSE [array_to_string(t, ' ')] END""".stripMargin
-
-  /** The interleaved seed-42 affine coefficient draws — mirrors
-    * MinHashSigExpr's coefA/coefB generation exactly, so the oracle
-    * embeds the same literals the kernel uses.
-    */
-  private def minhashCoefs(numHashes: Int, seed: Long = 42L): (Array[Long], Array[Long]) = {
-    val rnd = new java.util.Random(seed)
-    def coef(): Long = 1L + rnd.nextInt(Int.MaxValue - 1)
-    val a = new Array[Long](numHashes)
-    val b = new Array[Long](numHashes)
-    var i = 0
-    while (i < numHashes) { a(i) = coef(); b(i) = coef(); i += 1 }
-    (a, b)
-  }
-
-  /** CTE block replaying the md5-register minhash signature + banding
-    * of one (doc_id, text) source: distinct md5Long60 shingle hashes,
-    * the 32-slot affine-minimum signature, md5Long60 band buckets —
-    * every relation TextDedup.minhashLsh materializes, prefixed so two
-    * sources can coexist in one statement (decontaminate).
-    */
-  private def minhashSigBandCtes(src: String, pfx: String, n: Int,
-                                 numHashes: Int, bands: Int): String = {
-    val rows = numHashes / bands
-    val (a, b) = minhashCoefs(numHashes)
-    val P = 1000000007L
-    val slotCols = (0 until numHashes).map(i =>
-      s"MIN(((h % $P) * ${a(i)} + ${b(i)}) % $P) AS s$i").mkString(",\n    ")
-    val bandSelects = (0 until bands).map { bd =>
-      val cols = (0 until rows).map(i => s"s${bd * rows + i}").mkString(", ")
-      s"SELECT doc_id, $bd AS band_id, ${md5Long60Sql(s"concat_ws('|', $cols)")} AS bucket FROM ${pfx}sig"
-    }.mkString("\n  UNION ALL ")
-    s"""${pfx}docs AS MATERIALIZED (
-       |  SELECT doc_id, ${shinglesSqlFor(n)} AS shs
-       |  FROM (SELECT doc_id, $docToksSql AS t FROM $src)),
-       |${pfx}hs AS MATERIALIZED (
-       |  SELECT DISTINCT doc_id, ${md5Long60Sql("sh")} AS h
-       |  FROM (SELECT doc_id, UNNEST(shs) AS sh FROM ${pfx}docs)),
-       |${pfx}sz AS MATERIALIZED (SELECT doc_id, COUNT(*) AS n_sh FROM ${pfx}hs GROUP BY 1),
-       |${pfx}sig AS MATERIALIZED (
-       |  SELECT doc_id,
-       |    $slotCols
-       |  FROM ${pfx}hs GROUP BY doc_id),
-       |${pfx}bnd AS MATERIALIZED (
-       |  $bandSelects)""".stripMargin
-  }
-
-  /** TextDedup.minhashLsh replayed end to end: banded candidates
-    * (count of agreeing bands) verified by exact Jaccard over the
-    * distinct-hash shingle sets.
-    */
-  private def minhashLshOracleSql(threshold: Double): String =
-    s"""WITH ${minhashSigBandCtes("documents", "", 3, 32, 8)},
-       |cand AS MATERIALIZED (
-       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_bands
-       |  FROM bnd a JOIN bnd b ON a.band_id = b.band_id AND a.bucket = b.bucket
-       |    AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2),
-       |iv AS (
-       |  SELECT c.doc_a, c.doc_b, COUNT(*) AS n_inter
-       |  FROM cand c
-       |  JOIN hs ha ON ha.doc_id = c.doc_a
-       |  JOIN hs hb ON hb.doc_id = c.doc_b AND hb.h = ha.h
-       |  GROUP BY 1, 2)
-       |SELECT c.doc_a, c.doc_b, c.n_bands,
-       |  iv.n_inter / CAST(sa.n_sh + sb.n_sh - iv.n_inter AS DOUBLE) AS jaccard
-       |FROM cand c
-       |JOIN iv ON iv.doc_a = c.doc_a AND iv.doc_b = c.doc_b
-       |JOIN sz sa ON sa.doc_id = c.doc_a
-       |JOIN sz sb ON sb.doc_id = c.doc_b
-       |WHERE iv.n_inter / CAST(sa.n_sh + sb.n_sh - iv.n_inter AS DOUBLE) >= $threshold""".stripMargin
-
-  /** CorpusQc.decontaminateMinhash replayed: the same signature/band
-    * machinery over the train and eval splits, cross-side band
-    * collisions only, exact-Jaccard verification.
-    */
-  private def decontaminateMinhashOracleSql(threshold: Double): String = {
-    val train = "(SELECT doc_id, text FROM documents WHERE doc_id % 10 <> 7)"
-    val evalS = "(SELECT doc_id, text FROM documents WHERE doc_id % 10 = 7)"
-    s"""WITH ${minhashSigBandCtes(train, "t", 8, 32, 8)},
-       |${minhashSigBandCtes(evalS, "e", 8, 32, 8)},
-       |cand AS MATERIALIZED (
-       |  SELECT a.doc_id AS train_id, b.doc_id AS eval_id, COUNT(*) AS n_bands
-       |  FROM tbnd a JOIN ebnd b ON a.band_id = b.band_id AND a.bucket = b.bucket
-       |  GROUP BY 1, 2),
-       |iv AS (
-       |  SELECT c.train_id, c.eval_id, COUNT(*) AS n_inter
-       |  FROM cand c
-       |  JOIN ths ha ON ha.doc_id = c.train_id
-       |  JOIN ehs hb ON hb.doc_id = c.eval_id AND hb.h = ha.h
-       |  GROUP BY 1, 2)
-       |SELECT c.train_id, c.eval_id, c.n_bands,
-       |  iv.n_inter / CAST(sa.n_sh + sb.n_sh - iv.n_inter AS DOUBLE) AS jaccard
-       |FROM cand c
-       |JOIN iv ON iv.train_id = c.train_id AND iv.eval_id = c.eval_id
-       |JOIN tsz sa ON sa.doc_id = c.train_id
-       |JOIN esz sb ON sb.doc_id = c.eval_id
-       |WHERE iv.n_inter / CAST(sa.n_sh + sb.n_sh - iv.n_inter AS DOUBLE) >= $threshold""".stripMargin
-  }
-
-  /** TextDedup.simhashPairs replayed: the 60-bit md5-register simhash
-    * as 60 per-bit majority votes, four 15-bit bands, banded pairs
-    * filtered by exact bit_count(xor) Hamming distance.
-    */
-  private def simhashOracleSql(maxHamming: Int): String = {
-    val votes = (0 until 60).map(j =>
-      s"(CASE WHEN SUM(CASE WHEN (h >> $j) & 1 = 1 THEN 1 ELSE -1 END) >= 0 THEN ${1L << j} ELSE 0 END)")
-      .grouped(4).map(_.mkString(" + ")).mkString("\n    + ")
-    val bandSelects = (0 until 4).map(b =>
-      s"SELECT doc_id, h64, $b AS band_id, (h64 >> ${b * 15}) & 32767 AS bucket FROM fp")
-      .mkString("\n  UNION ALL ")
-    s"""WITH tk AS MATERIALIZED (
-       |  SELECT doc_id, ${md5Long60Sql("tok")} AS h
-       |  FROM (SELECT doc_id, UNNEST($docToksSql) AS tok FROM documents)),
-       |fp AS MATERIALIZED (
-       |  SELECT doc_id,
-       |    $votes AS h64
-       |  FROM tk GROUP BY doc_id),
-       |bnd AS MATERIALIZED (
-       |  $bandSelects)
-       |SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       |  bit_count(xor(a.h64, b.h64)) AS hamming
-       |FROM bnd a JOIN bnd b ON a.band_id = b.band_id AND a.bucket = b.bucket
-       |  AND a.doc_id < b.doc_id
-       |WHERE bit_count(xor(a.h64, b.h64)) <= $maxHamming""".stripMargin
-  }
-
-  /** The textFingerprint registry query replayed: the rolling fold
-    * expands to the positional sum Σ h_i·31^(n−i) mod p over a
-    * recursive powers-of-31 table; the min-shingle is MIN over the
-    * md5Long60 shingle relation (duplicate windows are MIN-invariant,
-    * so the distinct shingle list replays the kernel's all-windows
-    * scan exactly).
-    */
-  private def textFingerprintOracleSql: String = {
-    val P = 1000000007L
-    s"""WITH RECURSIVE tk AS MATERIALIZED (
-       |  SELECT doc_id, $docToksSql AS t FROM documents),
-       |mx AS MATERIALIZED (SELECT MAX(len(t)) AS mx FROM tk),
-       |pows AS (
-       |  SELECT 0 AS k, CAST(1 AS BIGINT) AS v
-       |  UNION ALL
-       |  SELECT k + 1, (v * 31) % $P FROM pows WHERE k + 1 < (SELECT mx FROM mx)),
-       |ps AS MATERIALIZED (
-       |  SELECT doc_id, len(t) AS n, UNNEST(t) AS tok,
-       |    UNNEST(range(1, len(t) + 1)) AS pos
-       |  FROM tk),
-       |hv AS (
-       |  SELECT doc_id, n, pos, ${md5Long60Sql("tok")} % $P AS h FROM ps),
-       |roll AS (
-       |  -- SUM(BIGINT) is HUGEINT in DuckDB; the positional sum is
-       |  -- < n·p (~2^47), so the BIGINT narrowing is exact
-       |  SELECT doc_id, CAST(SUM((h * pw.v) % $P) % $P AS BIGINT) AS fp_rolling
-       |  FROM hv JOIN pows pw ON pw.k = hv.n - hv.pos
-       |  GROUP BY 1),
-       |msh AS (
-       |  SELECT doc_id, MIN(${md5Long60Sql("sh")} % $P) AS fp_min_shingle
-       |  FROM (SELECT doc_id, UNNEST(shs) AS sh
-       |        FROM (SELECT doc_id, ${shinglesSqlFor(3)} AS shs FROM tk))
-       |  GROUP BY 1)
-       |SELECT tk.doc_id, len(tk.t) AS n_tokens, roll.fp_rolling, msh.fp_min_shingle
-       |FROM tk
-       |JOIN roll ON roll.doc_id = tk.doc_id
-       |JOIN msh ON msh.doc_id = tk.doc_id""".stripMargin
-  }
-
-  /** TextDedup.dedupRecallEval replayed: the exact prefix-filter truth
-    * and both (now fully SQL-replayable) approximate tiers composed
-    * into the two-row recall panel.
-    */
-  private def dedupRecallEvalOracleSql(toksSql: String, shinglesSql: String): String =
-    s"""WITH truth AS MATERIALIZED (
-       |  SELECT doc_a, doc_b FROM (
-       |${jaccardPairsOracleSqlUncapped(toksSql, shinglesSql)})),
-       |mh AS MATERIALIZED (
-       |  SELECT DISTINCT doc_a, doc_b FROM (${minhashLshOracleSql(0.5)})),
-       |sh AS MATERIALIZED (
-       |  SELECT DISTINCT doc_a, doc_b FROM (${simhashOracleSql(8)})),
-       |nt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_truth FROM truth)
-       |SELECT 'minhash_lsh' AS method, nt.n_truth,
-       |  (SELECT CAST(COUNT(*) AS BIGINT) FROM mh) AS n_found,
-       |  (SELECT CAST(COUNT(*) AS BIGINT) FROM truth t
-       |     JOIN mh ON mh.doc_a = t.doc_a AND mh.doc_b = t.doc_b) AS n_hit,
-       |  CAST((SELECT COUNT(*) FROM truth t
-       |     JOIN mh ON mh.doc_a = t.doc_a AND mh.doc_b = t.doc_b) AS DOUBLE)
-       |    / CAST(nt.n_truth AS DOUBLE) AS recall
-       |FROM nt
-       |UNION ALL
-       |SELECT 'simhash' AS method, nt.n_truth,
-       |  (SELECT CAST(COUNT(*) AS BIGINT) FROM sh) AS n_found,
-       |  (SELECT CAST(COUNT(*) AS BIGINT) FROM truth t
-       |     JOIN sh ON sh.doc_a = t.doc_a AND sh.doc_b = t.doc_b) AS n_hit,
-       |  CAST((SELECT COUNT(*) FROM truth t
-       |     JOIN sh ON sh.doc_a = t.doc_a AND sh.doc_b = t.doc_b) AS DOUBLE)
-       |    / CAST(nt.n_truth AS DOUBLE) AS recall
-       |FROM nt""".stripMargin
-
-  /** The uncapped exact >= 0.5 Jaccard pair set (dedup_prefix_filter's
-    * oracle body), reused as the recall panel's truth relation.
-    */
-  private def jaccardPairsOracleSqlUncapped(toksSql: String, shinglesSql: String): String =
-    s"""WITH pf_docs AS (
-       |  SELECT doc_id, $shinglesSql AS shs
-       |  FROM (SELECT doc_id, $toksSql AS t FROM documents)),
-       |pf_sh AS (SELECT doc_id, UNNEST(shs) AS sh FROM pf_docs),
-       |pf_sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM pf_sh GROUP BY doc_id),
-       |pf_pairs AS (
-       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-       |  FROM pf_sh a JOIN pf_sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2)
-       |SELECT p.doc_a, p.doc_b
-       |FROM pf_pairs p
-       |JOIN pf_sizes sa ON sa.doc_id = p.doc_a
-       |JOIN pf_sizes sb ON sb.doc_id = p.doc_b
-       |WHERE p.n_common / (sa.n_sh + sb.n_sh - p.n_common) >= 0.5""".stripMargin
-
-  /** TextDedup.incrementalDedup / incrementalDedupIndexed mirrored —
-    * corpus digests + df-capped postings, symmetric stop-shingle drop,
-    * exact Jaccard, first-match decision. ONE string for both: the two
-    * queries share the Scala decision tail, so they share the oracle.
-    */
-  private def incrementalDedupSql(toksSql: String, shinglesSql: String): String =
-    s"""WITH corp AS (SELECT doc_id, text FROM documents WHERE doc_id < 400),
-       |bat AS (SELECT doc_id, text FROM documents WHERE doc_id >= 400),
-       |corp_dig AS (
-       |  SELECT sha256(text) AS digest, MIN(doc_id) AS corp_match
-       |  FROM corp GROUP BY 1),
-       |b2 AS (
-       |  SELECT doc_id, sha256(text) AS digest,
-       |    MIN(doc_id) OVER (PARTITION BY sha256(text)) AS batch_first
-       |  FROM bat),
-       |csh AS (
-       |  SELECT doc_id AS c_id, UNNEST(shs) AS sh FROM (
-       |    SELECT doc_id, $shinglesSql AS shs
-       |    FROM (SELECT doc_id, $toksSql AS t FROM documents
-       |          WHERE doc_id < 400))),
-       |stop AS (SELECT sh FROM csh GROUP BY sh HAVING COUNT(*) > 1000),
-       |ckept AS (SELECT c_id, sh FROM csh ANTI JOIN stop USING (sh)),
-       |csizes AS (SELECT c_id, COUNT(*) AS n_c FROM ckept GROUP BY 1),
-       |bsh AS (
-       |  SELECT doc_id, UNNEST(shs) AS sh FROM (
-       |    SELECT doc_id, $shinglesSql AS shs
-       |    FROM (SELECT doc_id, $toksSql AS t FROM documents
-       |          WHERE doc_id >= 400))),
-       |bkept AS (SELECT doc_id, sh FROM bsh ANTI JOIN stop USING (sh)),
-       |bsizes AS (SELECT doc_id, COUNT(*) AS n_b FROM bkept GROUP BY 1),
-       |cmn AS (
-       |  SELECT b.doc_id, c.c_id, COUNT(*) AS n_common
-       |  FROM bkept b JOIN ckept c USING (sh) GROUP BY 1, 2),
-       |near AS (
-       |  SELECT doc_id, c_id, n_common / (n_b + n_c - n_common) AS jaccard
-       |  FROM cmn JOIN bsizes USING (doc_id) JOIN csizes USING (c_id)
-       |  WHERE n_common / (n_b + n_c - n_common) >= 0.5),
-       |best AS (
-       |  SELECT doc_id, c_id AS near_match FROM (
-       |    SELECT doc_id, c_id, ROW_NUMBER() OVER (
-       |      PARTITION BY doc_id ORDER BY jaccard DESC, c_id) AS r
-       |    FROM near) WHERE r = 1)
-       |SELECT b2.doc_id,
-       |  (cd.corp_match IS NULL AND b2.doc_id = b2.batch_first
-       |   AND bst.near_match IS NULL) AS keep,
-       |  CASE WHEN cd.corp_match IS NOT NULL THEN 'EXACT_DUP_CORPUS'
-       |       WHEN b2.doc_id <> b2.batch_first THEN 'EXACT_DUP_BATCH'
-       |       WHEN bst.near_match IS NOT NULL THEN 'NEAR_DUP_CORPUS'
-       |       ELSE 'KEPT' END AS reason,
-       |  CASE WHEN cd.corp_match IS NOT NULL THEN cd.corp_match
-       |       WHEN b2.doc_id <> b2.batch_first THEN b2.batch_first
-       |       ELSE bst.near_match END AS match_id
-       |FROM b2
-       |LEFT JOIN corp_dig cd USING (digest)
-       |LEFT JOIN best bst USING (doc_id)""".stripMargin
-
-  private def textOracleSql: Map[String, String] = {
-    val toksSql = """regexp_split_to_array(trim(text), '\s+')"""
-    val shinglesSql =
-      s"""CASE WHEN len(t) >= 3
-         |     THEN list_distinct(list_transform(range(1, len(t) - 1),
-         |          i -> array_to_string(list_slice(t, i, i + 2), ' ')))
-         |     ELSE [array_to_string(t, ' ')] END""".stripMargin
-    // The min-label fixpoint as a recursive transitive-closure CTE
-    // (UNION-distinct terminates it) — shared by dedup_clusters and
-    // the corpus-keep endpoint so both replay the SAME cluster set.
-    // jp/edges/clusters are MATERIALIZED (r15, VERDICT #6): the
-    // recursive walk re-scans `edges` every fixpoint round, and
-    // DuckDB inlines non-materialized CTEs — at the 10x-replica gate
-    // the re-inlined shingle join blew the 300 s oracle budget.
-    // MATERIALIZED is a pure evaluation hint: the result set (and so
-    // the driver's hash compare) is unchanged.
-    def clusterCtesFor(src: String) =
-      s"""jp AS MATERIALIZED (${jaccardPairsOracleSql(toksSql, shinglesSql, src = src)}),
-         |edges AS MATERIALIZED (
-         |  SELECT doc_a AS src, doc_b AS dst FROM jp
-         |  UNION
-         |  SELECT doc_b, doc_a FROM jp),
-         |walk(id, label) AS (
-         |  SELECT src, src FROM edges
-         |  UNION
-         |  SELECT e.src, w.label FROM edges e JOIN walk w ON w.id = e.dst),
-         |clusters AS MATERIALIZED (
-         |  SELECT id AS doc_id, MIN(label) AS cluster_id
-         |  FROM walk GROUP BY id)""".stripMargin
-    val clusterCtes = clusterCtesFor("documents")
-    // MlLite.naiveBayes mirrored term for term — shared by the
-    // per-doc prediction row and the confusion panel wrapper.
-    val nbOracleSql =
-      s"""WITH tok AS (
-         |  SELECT doc_id, lang AS label, UNNEST($toksSql) AS token FROM documents),
-         |tok2 AS (SELECT * FROM tok WHERE token <> ''),
-         |dt AS (SELECT doc_id, token, COUNT(*) AS tf FROM tok2 GROUP BY 1, 2),
-         |ct AS (SELECT label, token, COUNT(*) AS cnt FROM tok2 GROUP BY 1, 2),
-         |nd AS (SELECT COUNT(*) AS n_total FROM documents),
-         |vv AS (SELECT COUNT(DISTINCT token) AS v FROM dt),
-         |cp AS (
-         |  SELECT c.label,
-         |    FLOOR(LN(CAST(c.n_c AS DOUBLE) / CAST(nd.n_total AS DOUBLE)) * 1e6) / 1e6 AS log_prior,
-         |    FLOOR(LN(CAST(tc.total_c + vv.v AS DOUBLE)) * 1e6) / 1e6 AS log_denom
-         |  FROM (SELECT lang AS label, COUNT(*) AS n_c FROM documents GROUP BY 1) c, nd, vv,
-         |       (SELECT label, SUM(cnt) AS total_c FROM ct GROUP BY 1) tc
-         |  WHERE tc.label = c.label),
-         |ms AS (
-         |  SELECT dt.doc_id, ct.label,
-         |    SUM(CAST(dt.tf * (FLOOR(LN(CAST(ct.cnt + 1 AS DOUBLE)) * 1e6) / 1e6) AS DECIMAL(28,6))) AS match_sum
-         |  FROM dt JOIN ct ON ct.token = dt.token GROUP BY 1, 2),
-         |dp AS (
-         |  SELECT dt.doc_id, SUM(dt.tf) AS n_tok, MIN(d.lang) AS true_label
-         |  FROM dt JOIN documents d ON d.doc_id = dt.doc_id GROUP BY 1),
-         |scored AS (
-         |  SELECT dp.doc_id, dp.true_label, cp.label,
-         |    CAST(CAST(cp.log_prior AS DECIMAL(28,6))
-         |      - CAST(dp.n_tok * cp.log_denom AS DECIMAL(28,6))
-         |      + COALESCE(ms.match_sum, CAST(0 AS DECIMAL(28,6))) AS DOUBLE) AS score
-         |  FROM dp CROSS JOIN cp
-         |  LEFT JOIN ms ON ms.doc_id = dp.doc_id AND ms.label = cp.label),
-         |rk AS (
-         |  SELECT *,
-         |    ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY score DESC, label) AS rn,
-         |    LEAD(score, 1) OVER (PARTITION BY doc_id ORDER BY score DESC, label) AS nxt
-         |  FROM scored)
-         |SELECT doc_id, true_label, label AS pred_label, score,
-         |  COALESCE(score - nxt, 0.0) AS margin,
-         |  label = true_label AS is_correct
-         |FROM rk WHERE rn = 1""".stripMargin
-    val textStatsSql =
-      s"""SELECT doc_id, n_chars_calc, n_tokens, avg_token_len, n_tokens_bpe, punct_ratio, stopword_ratio,
-         |  least(1.0, n_tokens / 100.0) * (1.0 - stopword_ratio * 0.5) * (1.0 - punct_ratio) AS quality_score
-         |FROM (
-         |  SELECT doc_id,
-         |    length(text) AS n_chars_calc,
-         |    len(t) AS n_tokens,
-         |    list_sum(list_transform(t, x -> length(x))) / greatest(len(t), 1) AS avg_token_len,
-         |    len(regexp_extract_all(text, '${TextOps.BpeTokenPattern}')) AS n_tokens_bpe,
-         |    (length(text) - length(regexp_replace(text, '[!-/:-@\\[-`{-~]', '', 'g'))) / greatest(length(text), 1) AS punct_ratio,
-         |    len(list_filter(t, x -> x IN ${TextOps.stopListSql("en")})) / greatest(len(t), 1) AS stopword_ratio
-         |  FROM (SELECT doc_id, text, $toksSql AS t FROM documents))""".stripMargin
-    val langIdSql =
-      s"""SELECT *,
-         |  CASE WHEN cjk_n > 0 AND cjk_n * 2 >= n_tokens THEN 'zh'
-         |       WHEN en_n >= de_n AND en_n >= es_n AND en_n >= fr_n THEN 'en'
-         |       WHEN de_n >= es_n AND de_n >= fr_n THEN 'de'
-         |       WHEN es_n >= fr_n THEN 'es'
-         |       ELSE 'fr' END AS predicted_lang
-         |FROM (
-         |  SELECT doc_id, lang, len(t) AS n_tokens,
-         |    len(list_filter(t, x -> x IN ${TextOps.stopListSql("en")})) AS en_n,
-         |    len(list_filter(t, x -> x IN ${TextOps.stopListSql("de")})) AS de_n,
-         |    len(list_filter(t, x -> x IN ${TextOps.stopListSql("es")})) AS es_n,
-         |    len(list_filter(t, x -> x IN ${TextOps.stopListSql("fr")})) AS fr_n,
-         |    length(text) - length(regexp_replace(text, '[\\x{4e00}-\\x{9fff}]', '', 'g')) AS cjk_n
-         |  FROM (SELECT doc_id, lang, text, $toksSql AS t FROM documents))""".stripMargin
-    Map(
-      "dedup_exact" ->
-        """SELECT doc_id, text, lang, source, n_chars, n_copies FROM (
-          |  SELECT *, ROW_NUMBER() OVER (PARTITION BY text ORDER BY doc_id) AS rn,
-          |         COUNT(*) OVER (PARTITION BY text) AS n_copies
-          |  FROM documents) WHERE rn = 1""".stripMargin,
-
-      // MlLite.naiveBayes mirrored term for term: the Σ tf·ln(cnt+1)
-      // inner join (unseen pairs contribute ln(1)=0 by construction),
-      // 1e-6-grid ln terms summed as DECIMAL(28,6), argmax by
-      // (score DESC, label).
-      "ml_naive_bayes" -> nbOracleSql,
-
-      // Isotonic fit replay: the minimax identity over the binned
-      // panel — exact-integer cumulative quotients, MIN within the
-      // (j ≤ i ≤ k) triangle, MAX across j; comparisons only.
-      "ml_isotonic_calibration" ->
-        """WITH panel AS (
-          |  SELECT LEAST(19, GREATEST(0, CAST(FLOOR(value / 5) AS BIGINT))) AS bin,
-          |    CAST(COUNT(*) AS BIGINT) AS n,
-          |    CAST(SUM(CASE WHEN UPPER(TRIM(event_type)) = 'PURCHASE'
-          |                  THEN 1 ELSE 0 END) AS BIGINT) AS n_pos
-          |  FROM events WHERE value IS NOT NULL GROUP BY 1),
-          |cum AS (SELECT bin, n, n_pos,
-          |    SUM(n) OVER (ORDER BY bin) AS cn,
-          |    SUM(n_pos) OVER (ORDER BY bin) AS cp
-          |  FROM panel),
-          |pairs AS (SELECT j.bin AS bj, k.bin AS bk_,
-          |    CAST(k.cp - (j.cp - j.n_pos) AS DOUBLE)
-          |      / CAST(k.cn - (j.cn - j.n) AS DOUBLE) AS rate
-          |  FROM cum j JOIN cum k ON k.bin >= j.bin),
-          |inner_min AS (SELECT c.bin AS bin, p.bj, MIN(p.rate) AS mn
-          |  FROM cum c JOIN pairs p ON p.bj <= c.bin AND p.bk_ >= c.bin
-          |  GROUP BY 1, 2),
-          |fit AS (SELECT bin, MAX(mn) AS rate_isotonic FROM inner_min GROUP BY 1)
-          |SELECT c.bin, c.n, c.n_pos,
-          |  CAST(c.n_pos AS DOUBLE) / CAST(c.n AS DOUBLE) AS rate_raw,
-          |  f.rate_isotonic
-          |FROM cum c JOIN fit f USING (bin)""".stripMargin,
-
-      // MlLite.naiveBayesKFold mirrored: the global-minus-fold count
-      // subtraction, the exclusive-token vocabulary, the same §5
-      // scoring, folds from the md5-tiling idiom.
-      "ml_nb_kfold_cv" ->
-        s"""WITH tok0 AS (
-           |  SELECT doc_id, lang AS label, UNNEST($toksSql) AS token FROM documents),
-           |tok AS (
-           |  SELECT *, CAST(FLOOR(CAST(CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) * 5 AS DOUBLE) / 4294967296.0) AS INTEGER) AS fold_id
-           |  FROM tok0 WHERE token <> ''),
-           |dt AS (SELECT doc_id, fold_id, token, COUNT(*) AS tf FROM tok GROUP BY 1, 2, 3),
-           |ctg AS (SELECT label, token, COUNT(*) AS cnt_g FROM tok GROUP BY 1, 2),
-           |ctf AS (SELECT fold_id, label, token, COUNT(*) AS cnt_f FROM tok GROUP BY 1, 2, 3),
-           |tg AS (SELECT token, SUM(cnt_g) AS any_g FROM ctg GROUP BY 1),
-           |tft AS (SELECT fold_id, token, SUM(cnt_f) AS any_f FROM ctf GROUP BY 1, 2),
-           |vg AS (SELECT COUNT(*) AS v_g FROM tg),
-           |vf AS (
-           |  SELECT fold_id, v_g - SUM(CASE WHEN any_f = any_g THEN 1 ELSE 0 END) AS v_train
-           |  FROM tft JOIN tg USING (token), vg GROUP BY fold_id, v_g),
-           |dff AS (
-           |  SELECT doc_id, lang AS label,
-           |    CAST(FLOOR(CAST(CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) * 5 AS DOUBLE) / 4294967296.0) AS INTEGER) AS fold_id
-           |  FROM documents),
-           |ncg AS (SELECT label, COUNT(*) AS n_c_g FROM dff GROUP BY 1),
-           |ncf AS (SELECT fold_id, label, COUNT(*) AS n_c_f FROM dff GROUP BY 1, 2),
-           |ntot AS (SELECT COUNT(*) AS n_g FROM dff),
-           |nfold AS (SELECT fold_id, COUNT(*) AS n_f FROM dff GROUP BY 1),
-           |tcg AS (SELECT label, SUM(cnt_g) AS tot_g FROM ctg GROUP BY 1),
-           |tcf AS (SELECT fold_id, label, SUM(cnt_f) AS tot_f FROM ctf GROUP BY 1, 2),
-           |cp AS (
-           |  SELECT f.fold_id, g.label,
-           |    FLOOR(LN(CAST(g.n_c_g - COALESCE(ncf.n_c_f, 0) AS DOUBLE)
-           |      / CAST(ntot.n_g - f.n_f AS DOUBLE)) * 1e6) / 1e6 AS log_prior,
-           |    FLOOR(LN(CAST((tcg.tot_g - COALESCE(tcf.tot_f, 0)) + vf.v_train AS DOUBLE)) * 1e6) / 1e6 AS log_denom
-           |  FROM nfold f
-           |  CROSS JOIN ncg g
-           |  JOIN vf ON vf.fold_id = f.fold_id
-           |  CROSS JOIN ntot
-           |  LEFT JOIN ncf ON ncf.fold_id = f.fold_id AND ncf.label = g.label
-           |  JOIN tcg ON tcg.label = g.label
-           |  LEFT JOIN tcf ON tcf.fold_id = f.fold_id AND tcf.label = g.label
-           |  WHERE g.n_c_g - COALESCE(ncf.n_c_f, 0) > 0),
-           |ms AS (
-           |  SELECT dt.doc_id, ctg.label,
-           |    SUM(CAST(dt.tf * (FLOOR(LN(CAST((ctg.cnt_g - COALESCE(ctf.cnt_f, 0)) + 1 AS DOUBLE)) * 1e6) / 1e6) AS DECIMAL(28,6))) AS match_sum
-           |  FROM dt JOIN ctg ON ctg.token = dt.token
-           |  LEFT JOIN ctf ON ctf.fold_id = dt.fold_id AND ctf.label = ctg.label AND ctf.token = dt.token
-           |  GROUP BY 1, 2),
-           |dp AS (
-           |  SELECT dt.doc_id, dt.fold_id, SUM(dt.tf) AS n_tok, MIN(d.label) AS true_label
-           |  FROM dt JOIN dff d ON d.doc_id = dt.doc_id GROUP BY 1, 2),
-           |sc AS (
-           |  SELECT dp.doc_id, dp.fold_id, dp.true_label, cp.label,
-           |    CAST(CAST(cp.log_prior AS DECIMAL(28,6))
-           |      - CAST(dp.n_tok * cp.log_denom AS DECIMAL(28,6))
-           |      + COALESCE(ms.match_sum, CAST(0 AS DECIMAL(28,6))) AS DOUBLE) AS score
-           |  FROM dp JOIN cp ON cp.fold_id = dp.fold_id
-           |  LEFT JOIN ms ON ms.doc_id = dp.doc_id AND ms.label = cp.label),
-           |rk AS (
-           |  SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY score DESC, label) AS rn
-           |  FROM sc)
-           |SELECT fold_id, CAST(COUNT(*) AS BIGINT) AS n_docs,
-           |  CAST(SUM(CASE WHEN label = true_label THEN 1 ELSE 0 END) AS BIGINT) AS n_correct,
-           |  CAST(SUM(CASE WHEN label = true_label THEN 1 ELSE 0 END) AS DOUBLE)
-           |    / CAST(COUNT(*) AS DOUBLE) AS accuracy
-           |FROM rk WHERE rn = 1 GROUP BY 1""".stripMargin,
-
-      // MlLite.learningCurve mirrored: shared md5-keyed token/test
-      // CTEs, one namespaced NB train+score chain per fraction
-      // (integer-threshold splits — no float membership tests),
-      // UNION ALL of the per-fraction 1-row panels.
-      "ml_learning_curve" -> {
-        val full = 4294967296.0
-        val thrTest = math.floor(0.8 * full).toLong
-        val hSql = "CAST(concat('0x', substr(md5(COALESCE(CAST(doc_id AS VARCHAR), '<NULL>')), 1, 8)) AS BIGINT)"
-        val shared =
-          s"""WITH docsh AS (
-             |  SELECT doc_id, lang AS label, $hSql AS h FROM documents),
-             |tok0 AS (
-             |  SELECT doc_id, lang AS label, $hSql AS h,
-             |    UNNEST($toksSql) AS token
-             |  FROM documents),
-             |tok AS (SELECT * FROM tok0 WHERE token <> ''),
-             |ttf AS (
-             |  SELECT doc_id, token, COUNT(*) AS tf FROM tok
-             |  WHERE h >= $thrTest GROUP BY 1, 2),
-             |dp AS (
-             |  SELECT t.doc_id, SUM(t.tf) AS n_tok, MIN(d.label) AS true_label
-             |  FROM ttf t JOIN docsh d ON d.doc_id = t.doc_id
-             |  WHERE d.h >= $thrTest GROUP BY 1)""".stripMargin
-        val fracs = Seq(0.1, 0.25, 0.5, 1.0)
-        val blocks = fracs.zipWithIndex.map { case (f, i) =>
-          val thr = math.floor(0.8 * f * full).toLong
-          s"""ctg_$i AS (
-             |  SELECT label, token, COUNT(*) AS cnt FROM tok
-             |  WHERE h < $thr GROUP BY 1, 2),
-             |vg_$i AS (SELECT COUNT(DISTINCT token) AS v FROM ctg_$i),
-             |pri_$i AS (
-             |  SELECT label, COUNT(*) AS n_c FROM docsh WHERE h < $thr GROUP BY 1),
-             |ntr_$i AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_train FROM docsh WHERE h < $thr),
-             |totc_$i AS (SELECT label, SUM(cnt) AS tot_c FROM ctg_$i GROUP BY 1),
-             |cp_$i AS (
-             |  SELECT p.label, n_train,
-             |    FLOOR(LN(CAST(p.n_c AS DOUBLE) / CAST(n_train AS DOUBLE)) * 1e6) / 1e6 AS log_prior,
-             |    FLOOR(LN(CAST(COALESCE(tc.tot_c, 0) + v AS DOUBLE)) * 1e6) / 1e6 AS log_denom
-             |  FROM pri_$i p
-             |  LEFT JOIN totc_$i tc USING (label)
-             |  CROSS JOIN ntr_$i CROSS JOIN vg_$i),
-             |ms_$i AS (
-             |  SELECT t.doc_id, c.label,
-             |    SUM(CAST(t.tf * (FLOOR(LN(CAST(c.cnt + 1 AS DOUBLE)) * 1e6) / 1e6) AS DECIMAL(28,6))) AS match_sum
-             |  FROM ttf t JOIN ctg_$i c ON c.token = t.token GROUP BY 1, 2),
-             |sc_$i AS (
-             |  SELECT dp.doc_id, dp.true_label, cp.label, cp.n_train,
-             |    CAST(CAST(cp.log_prior AS DECIMAL(28,6))
-             |      - CAST(dp.n_tok * cp.log_denom AS DECIMAL(28,6))
-             |      + COALESCE(ms.match_sum, CAST(0 AS DECIMAL(28,6))) AS DOUBLE) AS score
-             |  FROM dp CROSS JOIN cp_$i cp
-             |  LEFT JOIN ms_$i ms ON ms.doc_id = dp.doc_id AND ms.label = cp.label),
-             |rk_$i AS (
-             |  SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY score DESC, label) AS rn
-             |  FROM sc_$i)""".stripMargin
-        }
-        val sels = fracs.zipWithIndex.map { case (f, i) =>
-          s"""SELECT CAST($f AS DOUBLE) AS train_frac, n_train,
-             |  CAST(COUNT(*) AS BIGINT) AS n_test,
-             |  CAST(SUM(CASE WHEN label = true_label THEN 1 ELSE 0 END) AS BIGINT) AS n_correct,
-             |  CAST(SUM(CASE WHEN label = true_label THEN 1 ELSE 0 END) AS DOUBLE)
-             |    / CAST(COUNT(*) AS DOUBLE) AS accuracy
-             |FROM rk_$i WHERE rn = 1 GROUP BY n_train""".stripMargin
-        }
-        (shared +: blocks).mkString(",\n") + "\n" + sels.mkString("\nUNION ALL\n")
-      },
-
-      // The confusion panel is the NB oracle wrapped in one GROUP BY
-      // — exact (true, predicted) counts.
-      "ml_nb_confusion" ->
-        s"""WITH nb AS (
-           |${nbOracleSql.replace("\n", "\n  ")})
-           |SELECT true_label, pred_label, CAST(COUNT(*) AS BIGINT) AS n_docs
-           |FROM nb GROUP BY 1, 2""".stripMargin,
-
-      // CorpusQc.featureHash: md5-bucket fold to 256 dims, L2 weight
-      // floor-quantized after one IEEE division (identical bits both
-      // engines).
-      "text_feature_hash" ->
-        s"""WITH tok AS (
-           |  SELECT doc_id, UNNEST($toksSql) AS token FROM documents),
-           |tf AS (
-           |  SELECT doc_id,
-           |    CAST(concat('0x', substr(md5(token), 1, 8)) AS BIGINT) % 256 AS bucket,
-           |    COUNT(*) AS tf
-           |  FROM tok WHERE token <> '' GROUP BY 1, 2),
-           |norms AS (
-           |  SELECT doc_id, sqrt(CAST(SUM(tf * tf) AS DOUBLE)) AS nrm
-           |  FROM tf GROUP BY 1)
-           |SELECT tf.doc_id, tf.bucket, tf.tf,
-           |  FLOOR(CAST(tf.tf AS DOUBLE) / norms.nrm * 1e6) / 1e6 AS weight
-           |FROM tf JOIN norms ON norms.doc_id = tf.doc_id""".stripMargin,
-
-      // CorpusQc.sentenceStats: [.!?]+ splits (same regex both
-      // dialects), explicit whitespace class for the token count.
-      "text_sentence_stats" ->
-        """WITH s0 AS (
-          |  SELECT doc_id, UNNEST(regexp_split_to_array(text, '[.!?]+')) AS s
-          |  FROM documents WHERE text IS NOT NULL),
-          |s1 AS (SELECT doc_id, trim(s) AS s FROM s0 WHERE trim(s) <> ''),
-          |s2 AS (
-          |  SELECT doc_id, len(regexp_split_to_array(s, '[ \t\n\r\f]+')) AS ntok,
-          |    length(s) AS nch
-          |  FROM s1)
-          |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_sentences,
-          |  CAST(SUM(ntok) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS avg_sentence_tokens,
-          |  MAX(nch) AS max_sentence_chars
-          |FROM s2 GROUP BY 1""".stripMargin,
-
-      // Profiling.countMinTopN: 4x256 salted md5 cell grid, estimate
-      // = min over the item's 4 cells, top-40 by exact count.
-      "sketch_countmin" ->
-        s"""WITH it AS (
-           |  SELECT token AS item FROM (
-           |    SELECT UNNEST($toksSql) AS token FROM documents)
-           |  WHERE token <> ''),
-           |rs AS (SELECT UNNEST([0, 1, 2, 3]) AS r),
-           |cells AS (
-           |  SELECT r,
-           |    CAST(concat('0x', substr(md5(concat_ws('|', CAST(r AS VARCHAR), item)), 1, 8)) AS BIGINT) % 256 AS bucket,
-           |    COUNT(*) AS cell_n
-           |  FROM it CROSS JOIN rs GROUP BY 1, 2),
-           |exact AS (SELECT item, COUNT(*) AS n_exact FROM it GROUP BY 1),
-           |est AS (
-           |  SELECT e.item, e.n_exact, MIN(c.cell_n) AS n_est
-           |  FROM exact e CROSS JOIN rs
-           |  JOIN cells c ON c.r = rs.r AND c.bucket =
-           |    CAST(concat('0x', substr(md5(concat_ws('|', CAST(rs.r AS VARCHAR), e.item)), 1, 8)) AS BIGINT) % 256
-           |  GROUP BY 1, 2),
-           |rk AS (
-           |  SELECT *, ROW_NUMBER() OVER (ORDER BY n_exact DESC, item) AS rank
-           |  FROM est)
-           |SELECT rank, item, n_exact, n_est, n_est - n_exact AS overcount
-           |FROM rk WHERE rank <= 40""".stripMargin,
-
-      // Profiling.hllOverlapReplayable: the md5-register HLL overlap
-      // panel, hash-gated since r13 (was rows-only on the
-      // DataSketches binary states).
-      "sketch_overlap" -> hllOverlapOracleSql(12),
-
-      // Profiling.kmvOverlap: k-min-values sketch per slice over the
-      // md5Long60 hash (ORDER BY h LIMIT k over the distinct-hash
-      // relation — the sketch state is a plain SQL relation), theta_h =
-      // kth hash when saturated else 2^60, set ops restricted below
-      // min(theta_h). Estimates are EXACT integers — HUGEINT product
-      // (n * 2^60) with truncating `//` division mirrors Spark's
-      // DECIMAL(38,0) `div`; no double appears on either engine (the
-      // r12 gate caught the old 1e-6 double grid flipping at a
-      // boundary).
-      "sketch_theta_ops" ->
-        """WITH keyed AS (
-          |  SELECT CAST(concat('0x', substr(md5(CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h,
-          |    MAX(CASE WHEN CAST(ts AS DATE) <= DATE '2024-01-15' THEN 1 ELSE 0 END) AS in_a,
-          |    MAX(CASE WHEN CAST(ts AS DATE) > DATE '2024-01-15' THEN 1 ELSE 0 END) AS in_b
-          |  FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL
-          |  GROUP BY 1),
-          |ska AS (SELECT h FROM keyed WHERE in_a = 1 ORDER BY h LIMIT 256),
-          |skb AS (SELECT h FROM keyed WHERE in_b = 1 ORDER BY h LIMIT 256),
-          |pa AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_a,
-          |  CASE WHEN COUNT(*) = 256 THEN MAX(h) ELSE 1152921504606846976 END AS theta_h_a
-          |  FROM ska),
-          |pb AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_b,
-          |  CASE WHEN COUNT(*) = 256 THEN MAX(h) ELSE 1152921504606846976 END AS theta_h_b
-          |  FROM skb),
-          |th AS (SELECT n_a, n_b, theta_h_a, theta_h_b,
-          |  LEAST(theta_h_a, theta_h_b) AS theta_h FROM pa CROSS JOIN pb),
-          |j AS (
-          |  SELECT COALESCE(a.h, b.h) AS h,
-          |    a.h IS NOT NULL AS ia, b.h IS NOT NULL AS ib
-          |  FROM ska a FULL OUTER JOIN skb b ON a.h = b.h),
-          |cnt AS (
-          |  SELECT CAST(COUNT(*) AS BIGINT) AS n_union,
-          |    CAST(COALESCE(SUM(CASE WHEN ia AND ib THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_intersect,
-          |    CAST(COALESCE(SUM(CASE WHEN ia AND NOT ib THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_diff_ab
-          |  FROM j CROSS JOIN th WHERE h < theta_h)
-          |SELECT n_union, n_intersect, n_diff_ab,
-          |  theta_h,
-          |  CAST((CAST(CASE WHEN n_a = 256 THEN 255 ELSE n_a END AS HUGEINT)
-          |    * 1152921504606846976) // theta_h_a AS BIGINT) AS est_a,
-          |  CAST((CAST(CASE WHEN n_b = 256 THEN 255 ELSE n_b END AS HUGEINT)
-          |    * 1152921504606846976) // theta_h_b AS BIGINT) AS est_b,
-          |  CAST((CAST(n_union AS HUGEINT) * 1152921504606846976) // theta_h AS BIGINT) AS est_union,
-          |  CAST((CAST(n_intersect AS HUGEINT) * 1152921504606846976) // theta_h AS BIGINT) AS est_intersect,
-          |  CAST((CAST(n_diff_ab AS HUGEINT) * 1152921504606846976) // theta_h AS BIGINT) AS est_diff_ab,
-          |  CASE WHEN n_union > 0
-          |    THEN CAST((n_intersect * 1000000) // n_union AS BIGINT) END AS jaccard_ppm
-          |FROM cnt CROSS JOIN th""".stripMargin,
-
-      // Profiling.kmvRollup: per-day k-min over the distinct (day,
-      // hash) relation, weekly = k-min of the daily retained union
-      // (exact KMV merge), exclusive-theta estimate as an EXACT
-      // integer (HUGEINT product + truncating // — mirrors Spark's
-      // DECIMAL div; no double on either engine).
-      "sketch_kmv_rollup" ->
-        """WITH hashed AS (
-          |  SELECT DISTINCT CAST(ts AS DATE) AS day,
-          |    CAST(concat('0x', substr(md5(CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h
-          |  FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL),
-          |daily AS (
-          |  SELECT day, h FROM hashed
-          |  QUALIFY ROW_NUMBER() OVER (PARTITION BY day ORDER BY h) <= 256),
-          |wk0 AS (
-          |  SELECT DISTINCT CAST(date_trunc('week', day) AS DATE) AS week, h
-          |  FROM daily),
-          |weekly AS (
-          |  SELECT week, h FROM wk0
-          |  QUALIFY ROW_NUMBER() OVER (PARTITION BY week ORDER BY h) <= 256),
-          |nd AS (
-          |  SELECT CAST(date_trunc('week', day) AS DATE) AS week,
-          |    CAST(COUNT(DISTINCT day) AS BIGINT) AS n_days
-          |  FROM daily GROUP BY 1),
-          |p AS (
-          |  SELECT week, CAST(COUNT(*) AS BIGINT) AS n_retained, MAX(h) AS hmax
-          |  FROM weekly GROUP BY 1),
-          |q AS (
-          |  SELECT week, n_retained,
-          |    CASE WHEN n_retained = 256 THEN hmax ELSE 1152921504606846976 END AS theta_h
-          |  FROM p)
-          |SELECT q.week, nd.n_days, q.n_retained,
-          |  theta_h,
-          |  CAST((CAST(CASE WHEN n_retained = 256 THEN 255 ELSE n_retained END AS HUGEINT)
-          |    * 1152921504606846976) // theta_h AS BIGINT) AS est_distinct
-          |FROM q JOIN nd ON nd.week = q.week""".stripMargin,
-
-      // Mirrors the df-cap (stop shingles with df > 1000 leave both
-      // the posting relation and the union sizes — Jaccard is exact
-      // over the filtered shingle space).
-      "dedup_ngram_jaccard" -> jaccardPairsOracleSql(toksSql, shinglesSql),
-
-      // ── r14 md5-register conversions (former §5.1 rows-only) ─────
-      "dedup_minhash_lsh" -> minhashLshOracleSql(0.5),
-      "dedup_simhash" -> simhashOracleSql(8),
-      "text_fingerprint" -> textFingerprintOracleSql,
-      "decontaminate_minhash" -> decontaminateMinhashOracleSql(0.2),
-      "dedup_recall_eval" -> dedupRecallEvalOracleSql(toksSql, shinglesSql),
-
-      // TextDedup.dedupRateCurve mirrored: the pair replay nested as
-      // a CTE, threshold fan-out, keep-lowest-id loser counts, one
-      // guarded share quotient.
-      "dedup_rate_curve" ->
-        s"""WITH pr AS (${jaccardPairsOracleSql(toksSql, shinglesSql)}),
-           |thr AS (SELECT UNNEST(CAST([0.5, 0.6, 0.7, 0.8, 0.9] AS DOUBLE[])) AS threshold),
-           |tot AS (
-           |  SELECT CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs
-           |  FROM documents WHERE doc_id IS NOT NULL AND text IS NOT NULL),
-           |hits AS (
-           |  SELECT t.threshold, CAST(COUNT(*) AS BIGINT) AS n_pairs,
-           |    CAST(COUNT(DISTINCT GREATEST(p.doc_a, p.doc_b)) AS BIGINT) AS n_docs_removed
-           |  FROM thr t JOIN pr p ON t.threshold <= p.jaccard GROUP BY 1)
-           |SELECT t.threshold,
-           |  COALESCE(h.n_pairs, CAST(0 AS BIGINT)) AS n_pairs,
-           |  COALESCE(h.n_docs_removed, CAST(0 AS BIGINT)) AS n_docs_removed,
-           |  n_docs,
-           |  CAST(COALESCE(h.n_docs_removed, CAST(0 AS BIGINT)) AS DOUBLE)
-           |    / CAST(n_docs AS DOUBLE) AS pct_removed
-           |FROM thr t LEFT JOIN hits h ON h.threshold = t.threshold CROSS JOIN tot""".stripMargin,
-
-      // The UNCAPPED exact pair set: the oracle computes the true
-      // all-pairs join directly (feasible at oracle SF); the Spark
-      // side must reproduce it exactly through the prefix filter.
-      "dedup_prefix_filter" ->
-        s"""WITH docs AS (
-           |  SELECT doc_id, $shinglesSql AS shs
-           |  FROM (SELECT doc_id, $toksSql AS t FROM documents)),
-           |sh AS (SELECT doc_id, UNNEST(shs) AS sh FROM docs),
-           |sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-           |pairs AS (
-           |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-           |  FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-           |  GROUP BY 1, 2)
-           |SELECT p.doc_a, p.doc_b, sa.n_sh AS n_sh_a, sb.n_sh AS n_sh_b, p.n_common,
-           |  p.n_common / (sa.n_sh + sb.n_sh - p.n_common) AS jaccard
-           |FROM pairs p
-           |JOIN sizes sa ON sa.doc_id = p.doc_a
-           |JOIN sizes sb ON sb.doc_id = p.doc_b
-           |WHERE p.n_common / (sa.n_sh + sb.n_sh - p.n_common) >= 0.5""".stripMargin,
-
-      "dedup_containment" ->
-        s"""WITH docs AS (
-           |  SELECT doc_id, $shinglesSql AS shs
-           |  FROM (SELECT doc_id, $toksSql AS t FROM documents)),
-           |sh AS (SELECT doc_id, UNNEST(shs) AS sh FROM docs),
-           |dfc AS (SELECT sh, COUNT(*) AS df FROM sh GROUP BY sh HAVING COUNT(*) <= 1000),
-           |kept AS (SELECT s.doc_id, s.sh, d.df FROM sh s JOIN dfc d USING (sh)),
-           |sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM kept GROUP BY doc_id),
-           |pairs AS (
-           |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-           |  FROM kept a JOIN kept b ON a.sh = b.sh AND a.doc_id < b.doc_id
-           |  WHERE a.df >= 2
-           |  GROUP BY 1, 2)
-           |SELECT doc_a, doc_b, n_sh_a, n_sh_b, n_common, containment_a, containment_b
-           |FROM (
-           |  SELECT p.doc_a, p.doc_b, sa.n_sh AS n_sh_a, sb.n_sh AS n_sh_b, p.n_common,
-           |    p.n_common / sa.n_sh AS containment_a,
-           |    p.n_common / sb.n_sh AS containment_b
-           |  FROM pairs p
-           |  JOIN sizes sa ON sa.doc_id = p.doc_a
-           |  JOIN sizes sb ON sb.doc_id = p.doc_b)
-           |WHERE GREATEST(containment_a, containment_b) >= 0.8""".stripMargin,
-
-      // Candidates at the LOW jaccard threshold, then the integer
-      // Levenshtein + one division replayed op-for-op.
-      // Canonical grouping replayed on the normalized STRING itself
-      // (the engine groups on its sha-256 — same partition, 32-byte
-      // keys); DuckDB needs the 'g' flag for replace-ALL.
-      "dedup_exact_canonical" ->
-        """WITH c AS (
-          |  SELECT doc_id, text,
-          |    lower(regexp_replace(trim(text), '[ \t\n\r\f\x0B]+', ' ', 'g')) AS canonical_text
-          |  FROM documents)
-          |SELECT canonical_text, MIN(doc_id) AS keep_id, COUNT(*) AS n_copies,
-          |  COUNT(DISTINCT text) AS n_raw_variants
-          |FROM c GROUP BY 1""".stripMargin,
-
-      "dedup_edit_distance" ->
-        s"""WITH jp AS (${jaccardPairsOracleSql(toksSql, shinglesSql, threshold = 0.3)}),
-           |tx AS (SELECT doc_id, text FROM documents)
-           |SELECT doc_a, doc_b,
-           |  levenshtein(ta.text, tb.text) AS edit_dist,
-           |  CAST(length(ta.text) AS INTEGER) AS len_a,
-           |  CAST(length(tb.text) AS INTEGER) AS len_b,
-           |  1.0 - levenshtein(ta.text, tb.text)
-           |      / CAST(GREATEST(length(ta.text), length(tb.text)) AS DOUBLE) AS edit_sim
-           |FROM (SELECT doc_a, doc_b FROM jp) c
-           |JOIN tx ta ON ta.doc_id = c.doc_a
-           |JOIN tx tb ON tb.doc_id = c.doc_b
-           |WHERE 1.0 - levenshtein(ta.text, tb.text)
-           |      / CAST(GREATEST(length(ta.text), length(tb.text)) AS DOUBLE) >= 0.8""".stripMargin,
-
-      // Same stop-shingle + Jaccard algebra, batch-vs-corpus only; the
-      // decision CASEs mirror the Spark first-match order exactly.
-      "dedup_incremental" -> incrementalDedupSql(toksSql, shinglesSql),
-
-      // STORED-INDEX probe (D95): the decision tail is SHARED Scala
-      // code with dedup_incremental (TextDedup.dedupAgainstIndex), so
-      // the identical oracle pins that the persisted digest/stop/
-      // posting/size tables carry the same decision surface as the
-      // fresh corpus derivation.
-      "dedup_incremental_indexed" -> incrementalDedupSql(toksSql, shinglesSql),
-
-      "dedup_clusters" ->
-        s"""WITH RECURSIVE $clusterCtes
-           |SELECT doc_id, cluster_id FROM clusters""".stripMargin,
-
-      // Cluster-size distribution over the SAME recursive clusters.
-      "dedup_cluster_stats" ->
-        s"""WITH RECURSIVE $clusterCtes,
-           |sizes AS (
-           |  SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS cluster_size
-           |  FROM clusters GROUP BY 1),
-           |tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs_total FROM documents)
-           |SELECT cluster_size, CAST(COUNT(*) AS BIGINT) AS n_clusters,
-           |  CAST(cluster_size * COUNT(*) AS BIGINT) AS n_docs,
-           |  CAST((cluster_size - 1) * COUNT(*) AS BIGINT) AS n_removable,
-           |  CAST(cluster_size * COUNT(*) AS DOUBLE) / CAST(MAX(n_docs_total) AS DOUBLE)
-           |    AS corpus_share
-           |FROM sizes, tot GROUP BY cluster_size""".stripMargin,
-
-      // Survivor selection replayed over the SAME clusters + the SAME
-      // quality score the other oracles pin — ties broken by doc_id.
-      "dedup_corpus_keep" ->
-        s"""WITH RECURSIVE $clusterCtes,
-           |q AS (SELECT doc_id, quality_score FROM ($textStatsSql)),
-           |j AS (
-           |  SELECT q.doc_id, q.quality_score, c.cluster_id
-           |  FROM q LEFT JOIN clusters c USING (doc_id))
-           |SELECT doc_id, quality_score, cluster_id, 'UNIQUE' AS keep_reason
-           |FROM j WHERE cluster_id IS NULL
-           |UNION ALL
-           |SELECT doc_id, quality_score, cluster_id, 'BEST_OF_CLUSTER' AS keep_reason
-           |FROM (
-           |  SELECT *, ROW_NUMBER() OVER (PARTITION BY cluster_id
-           |    ORDER BY quality_score DESC, doc_id) AS rn
-           |  FROM j WHERE cluster_id IS NOT NULL)
-           |WHERE rn = 1""".stripMargin,
-
-      "text_stats" -> textStatsSql,
-
-      // The chained pipeline replayed stage-for-stage: canonical
-      // keepers, the gate CASE, the recursive cluster CTEs over the
-      // stage-1/2 survivor relation, best-of-cluster, cumulative
-      // budget window — first-match CASE at the end.
-      "corpus_curation_pipeline" ->
-        s"""WITH RECURSIVE canon AS (
-           |  SELECT doc_id,
-           |    lower(regexp_replace(trim(text), '[ \\t\\n\\r\\f\\x0B]+', ' ', 'g')) AS norm
-           |  FROM documents),
-           |kp AS (SELECT norm, MIN(doc_id) AS keep_id FROM canon GROUP BY 1),
-           |s1 AS (SELECT c.doc_id, c.doc_id <> k.keep_id AS exact_dup
-           |       FROM canon c JOIN kp k USING (norm)),
-           |st AS (SELECT * FROM ($textStatsSql)),
-           |staged AS (
-           |  SELECT st.doc_id, st.n_tokens, st.quality_score, s1.exact_dup,
-           |    CASE WHEN st.n_tokens < 5 THEN 'TOO_SHORT'
-           |         WHEN st.n_tokens > 100000 THEN 'TOO_LONG'
-           |         WHEN st.punct_ratio > 0.3 THEN 'HIGH_PUNCT'
-           |         WHEN st.avg_token_len < 2.0 OR st.avg_token_len > 12.0 THEN 'BAD_TOKEN_LEN'
-           |         WHEN d.lang = 'en' AND st.n_tokens >= 50 AND st.stopword_ratio < 0.01 THEN 'NO_STOPWORDS'
-           |         ELSE NULL END AS q
-           |  FROM st JOIN documents d USING (doc_id) JOIN s1 USING (doc_id)),
-           |surv12 AS (
-           |  SELECT d.doc_id, d.text FROM documents d JOIN staged sg USING (doc_id)
-           |  WHERE NOT sg.exact_dup AND sg.q IS NULL),
-           |${clusterCtesFor("surv12")},
-           |jq AS (
-           |  SELECT sg.doc_id, sg.quality_score, c.cluster_id
-           |  FROM staged sg JOIN surv12 USING (doc_id)
-           |  LEFT JOIN clusters c USING (doc_id)),
-           |nearkeep AS (
-           |  SELECT doc_id FROM jq WHERE cluster_id IS NULL
-           |  UNION ALL
-           |  SELECT doc_id FROM (
-           |    SELECT doc_id, ROW_NUMBER() OVER (PARTITION BY cluster_id
-           |      ORDER BY quality_score DESC, doc_id) AS rn
-           |    FROM jq WHERE cluster_id IS NOT NULL) WHERE rn = 1),
-           |surv123 AS (
-           |  SELECT sg.doc_id, sg.quality_score, sg.n_tokens
-           |  FROM staged sg JOIN nearkeep USING (doc_id)),
-           |budget AS (
-           |  SELECT doc_id FROM (
-           |    SELECT doc_id, SUM(n_tokens) OVER (ORDER BY quality_score DESC, doc_id
-           |      ROWS UNBOUNDED PRECEDING) AS cum
-           |    FROM surv123) WHERE cum <= 50000)
-           |SELECT sg.doc_id, sg.n_tokens, sg.quality_score,
-           |  CASE WHEN sg.exact_dup THEN 'EXACT_DUP'
-           |       WHEN sg.q IS NOT NULL THEN sg.q
-           |       WHEN nk.doc_id IS NULL THEN 'NEAR_DUP'
-           |       WHEN b.doc_id IS NULL THEN 'OVER_BUDGET'
-           |       ELSE NULL END AS drop_stage,
-           |  CASE WHEN sg.exact_dup THEN 'EXACT_DUP'
-           |       WHEN sg.q IS NOT NULL THEN sg.q
-           |       WHEN nk.doc_id IS NULL THEN 'NEAR_DUP'
-           |       WHEN b.doc_id IS NULL THEN 'OVER_BUDGET'
-           |       ELSE NULL END IS NULL AS is_kept
-           |FROM staged sg
-           |LEFT JOIN nearkeep nk USING (doc_id)
-           |LEFT JOIN budget b USING (doc_id)""".stripMargin,
-
-      // Percentile calibration: integer rank/count windows, one IEEE
-      // division each, fixed left-assoc ensemble sum — replays the
-      // Spark expression tree op-for-op. Single-row sources pin 0.0.
-      "doc_quality_ensemble" ->
-        s"""WITH st AS (SELECT * FROM ($textStatsSql)),
-           |j AS (SELECT st.doc_id, d.source, st.quality_score, st.n_tokens, st.avg_token_len
-           |      FROM st JOIN documents d USING (doc_id)),
-           |r AS (
-           |  SELECT doc_id, source,
-           |    CASE WHEN COUNT(*) OVER (PARTITION BY source) > 1
-           |      THEN CAST(RANK() OVER (PARTITION BY source ORDER BY quality_score) - 1 AS DOUBLE)
-           |           / (COUNT(*) OVER (PARTITION BY source) - 1) ELSE 0.0 END AS pct_quality_score,
-           |    CASE WHEN COUNT(*) OVER (PARTITION BY source) > 1
-           |      THEN CAST(RANK() OVER (PARTITION BY source ORDER BY n_tokens) - 1 AS DOUBLE)
-           |           / (COUNT(*) OVER (PARTITION BY source) - 1) ELSE 0.0 END AS pct_n_tokens,
-           |    CASE WHEN COUNT(*) OVER (PARTITION BY source) > 1
-           |      THEN CAST(RANK() OVER (PARTITION BY source ORDER BY avg_token_len) - 1 AS DOUBLE)
-           |           / (COUNT(*) OVER (PARTITION BY source) - 1) ELSE 0.0 END AS pct_avg_token_len
-           |  FROM j)
-           |SELECT doc_id, source, pct_quality_score, pct_n_tokens, pct_avg_token_len,
-           |  (pct_quality_score + pct_n_tokens + pct_avg_token_len) / 3 AS quality_ensemble
-           |FROM r""".stripMargin,
-
-      // Explicit codepoint-range classes — each identical under Java
-      // regex and RE2 (the dialect rule); counts via length diffs.
-      "text_script_profile" ->
-        s"""WITH c AS (
-           |  SELECT doc_id, length(text) AS n_chars_calc,
-           |    length(text) - length(regexp_replace(text, '[A-Za-z]', '', 'g')) AS n_latin,
-           |    length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS n_digit,
-           |    length(text) - length(regexp_replace(text, '[ \\t\\n\\r\\f]', '', 'g')) AS n_space,
-           |    length(text) - length(regexp_replace(text, '[!-/:-@\\[-`{-~]', '', 'g')) AS n_punct,
-           |    length(text) - length(regexp_replace(text, '[\\x{4e00}-\\x{9fff}]', '', 'g')) AS n_cjk,
-           |    length(text) - length(regexp_replace(text, '[\\x{0400}-\\x{04ff}]', '', 'g')) AS n_cyrillic
-           |  FROM documents)
-           |SELECT doc_id, n_chars_calc, n_latin, n_digit, n_space, n_punct, n_cjk, n_cyrillic,
-           |  n_chars_calc - n_latin - n_digit - n_space - n_punct - n_cjk - n_cyrillic AS n_other,
-           |  CASE WHEN n_latin >= n_cjk AND n_latin >= n_cyrillic AND n_latin > 0 THEN 'latin'
-           |       WHEN n_cjk >= n_cyrillic AND n_cjk > 0 THEN 'cjk'
-           |       WHEN n_cyrillic > 0 THEN 'cyrillic'
-           |       ELSE 'none' END AS dominant_script
-           |FROM c""".stripMargin,
-
-      // Lookaround-free patterns; both engines count leftmost
-      // non-overlapping matches, so the panels replay exactly.
-      "pii_profile" ->
-        s"""WITH c AS (
-           |  SELECT doc_id,
-           |    len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}')) AS n_emails,
-           |    len(regexp_extract_all(text, '[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}')) AS n_ipv4,
-           |    len(regexp_extract_all(text, '[0-9]{8,}')) AS n_digit_runs,
-           |    len(regexp_extract_all(text, 'https?://[^ ]+')) AS n_urls
-           |  FROM documents)
-           |SELECT doc_id, n_emails, n_ipv4, n_digit_runs, n_urls,
-           |  n_emails + n_ipv4 + n_digit_runs > 0 AS has_pii
-           |FROM c""".stripMargin,
-
-      // BM25: ln only on the ≤3-row idf panel (1e-4 floor); constants
-      // and operator order replay CorpusQc.bm25TopK term for term.
-      "text_bm25_topk" ->
-        s"""WITH tk AS (
-           |  SELECT doc_id, UNNEST(t) AS tok
-           |  FROM (SELECT doc_id, $toksSql AS t FROM documents)),
-           |dl AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl FROM tk GROUP BY 1),
-           |st AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs, CAST(SUM(dl) AS BIGINT) AS n_total FROM dl),
-           |tf AS (SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS tf
-           |       FROM tk WHERE tok IN ('spark', 'join', 'window') GROUP BY 1, 2),
-           |idf AS (
-           |  SELECT tok,
-           |    floor(ln((CAST(n_docs - df AS DOUBLE) + 0.5) / (CAST(df AS DOUBLE) + 0.5) + 1.0) * 1e4) / 1e4 AS idf
-           |  FROM (SELECT tok, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY 1), st),
-           |av AS (SELECT CAST(n_total AS DOUBLE) / CAST(n_docs AS DOUBLE) AS avgdl FROM st),
-           |ts AS (
-           |  SELECT tf.doc_id,
-           |    floor(idf * (CAST(tf AS DOUBLE) * 2.2) /
-           |      (CAST(tf AS DOUBLE) + 1.2 * (0.25 + 0.75 * (CAST(dl AS DOUBLE) / avgdl))) * 1e6) / 1e6 AS term_score
-           |  FROM tf JOIN idf USING (tok) JOIN dl USING (doc_id), av),
-           |s AS (
-           |  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_terms_hit,
-           |    SUM(CAST(term_score AS DECIMAL(28,6))) AS sd
-           |  FROM ts GROUP BY 1)
-           |SELECT doc_id, n_terms_hit, CAST(sd AS DOUBLE) AS bm25_score
-           |FROM s ORDER BY bm25_score DESC, doc_id LIMIT 25""".stripMargin,
-
-      // CorpusQc.rrfFuse over the two replayed retrievers: the bm25
-      // CTE chain verbatim (rank over its top-25), the cosine fold
-      // restricted to doc-id vectors with vec 0 as the query, fused
-      // as 1/(60+rank) sums in fixed coalesce order.
-      "search_hybrid_rrf" ->
-        s"""WITH tk AS (
-           |  SELECT doc_id, UNNEST(t) AS tok
-           |  FROM (SELECT doc_id, $toksSql AS t FROM documents)),
-           |dl AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl FROM tk GROUP BY 1),
-           |st AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs, CAST(SUM(dl) AS BIGINT) AS n_total FROM dl),
-           |tf AS (SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS tf
-           |       FROM tk WHERE tok IN ('spark', 'join', 'window') GROUP BY 1, 2),
-           |idf AS (
-           |  SELECT tok,
-           |    floor(ln((CAST(n_docs - df AS DOUBLE) + 0.5) / (CAST(df AS DOUBLE) + 0.5) + 1.0) * 1e4) / 1e4 AS idf
-           |  FROM (SELECT tok, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY 1), st),
-           |av AS (SELECT CAST(n_total AS DOUBLE) / CAST(n_docs AS DOUBLE) AS avgdl FROM st),
-           |ts AS (
-           |  SELECT tf.doc_id,
-           |    floor(idf * (CAST(tf AS DOUBLE) * 2.2) /
-           |      (CAST(tf AS DOUBLE) + 1.2 * (0.25 + 0.75 * (CAST(dl AS DOUBLE) / avgdl))) * 1e6) / 1e6 AS term_score
-           |  FROM tf JOIN idf USING (tok) JOIN dl USING (doc_id), av),
-           |bm AS (
-           |  SELECT doc_id, CAST(SUM(CAST(term_score AS DECIMAL(28,6))) AS DOUBLE) AS bm25_score
-           |  FROM ts GROUP BY 1 ORDER BY bm25_score DESC, doc_id LIMIT 25),
-           |lex AS (
-           |  SELECT doc_id,
-           |    ROW_NUMBER() OVER (ORDER BY bm25_score DESC, doc_id) AS rank_lex
-           |  FROM bm),
-           |base AS (
-           |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-           |  WHERE vec_id IN (SELECT doc_id FROM documents)),
-           |nv AS (
-           |  SELECT vec_id, v,
-           |    sqrt(list_reduce(list_prepend(0.0, list_transform(v, x -> x * x)), (a, b) -> a + b)) AS nrm
-           |  FROM base),
-           |qv AS (SELECT vec_id AS q_id, v AS qv, nrm AS qnrm FROM nv WHERE vec_id < 1),
-           |sc AS (
-           |  SELECT nv.vec_id AS doc_id,
-           |    list_reduce(list_prepend(0.0, list_transform(list_zip(nv.v, qv.qv), p -> p[1] * p[2])), (a, b) -> a + b)
-           |      / (nv.nrm * qv.qnrm) AS cos_sim
-           |  FROM nv CROSS JOIN qv WHERE nv.vec_id <> qv.q_id),
-           |sem AS (
-           |  SELECT doc_id,
-           |    ROW_NUMBER() OVER (ORDER BY cos_sim DESC, doc_id) AS rank_sem
-           |  FROM sc ORDER BY cos_sim DESC, doc_id LIMIT 25),
-           |fused AS (
-           |  SELECT COALESCE(l.doc_id, s.doc_id) AS doc_id, l.rank_lex, s.rank_sem,
-           |    COALESCE(1.0 / CAST(60 + l.rank_lex AS DOUBLE), 0.0)
-           |      + COALESCE(1.0 / CAST(60 + s.rank_sem AS DOUBLE), 0.0) AS rrf_score
-           |  FROM lex l FULL OUTER JOIN sem s ON s.doc_id = l.doc_id)
-           |SELECT doc_id,
-           |  ROW_NUMBER() OVER (ORDER BY rrf_score DESC, doc_id) AS rank,
-           |  rrf_score, rank_lex, rank_sem
-           |FROM fused
-           |QUALIFY rank <= 10""".stripMargin,
-
-      // Bit-length bucketing: length(bin(n)) = floor(log2 n)+1 in
-      // both engines; boundaries via integer shifts.
-      "doc_length_histogram" ->
-        s"""WITH n AS (SELECT CAST(len($toksSql) AS BIGINT) AS n_tokens FROM documents),
-           |b AS (SELECT CAST(length(bin(n_tokens)) AS INT) AS bucket, n_tokens FROM n)
-           |SELECT bucket, CAST(1 AS BIGINT) << (bucket - 1) AS bucket_lo,
-           |  (CAST(1 AS BIGINT) << bucket) - 1 AS bucket_hi,
-           |  CAST(COUNT(*) AS BIGINT) AS n_docs,
-           |  CAST(SUM(n_tokens) AS BIGINT) AS sum_tokens
-           |FROM b GROUP BY 1""".stripMargin,
-
-      "corpus_shuffle" ->
-        """WITH h AS (
-          |  SELECT doc_id, md5(CAST(doc_id AS VARCHAR)) AS shuffle_hash
-          |  FROM documents),
-          |r AS (
-          |  SELECT doc_id, shuffle_hash,
-          |    CAST(ROW_NUMBER() OVER (ORDER BY shuffle_hash, doc_id) AS BIGINT) AS shuffle_pos
-          |  FROM h)
-          |SELECT doc_id, shuffle_hash, shuffle_pos,
-          |  CAST(FLOOR((shuffle_pos - 1) / 256) AS BIGINT) AS shard,
-          |  shuffle_pos - CAST(FLOOR((shuffle_pos - 1) / 256) AS BIGINT) * 256 AS shard_pos
-          |FROM r""".stripMargin,
-
-      // Negative-pair replay: ROW_NUMBER over the md5 order stands in
-      // for the distributed prefix-sum rank; identical offset/mod
-      // arithmetic on the 32-bit md5 prefix.
-      "sample_negative_pairs" ->
-        """WITH r AS (
-          |  SELECT doc_id,
-          |    CAST(ROW_NUMBER() OVER (ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id)
-          |      AS BIGINT) AS rnk
-          |  FROM documents),
-          |n AS (SELECT CAST(COUNT(*) AS BIGINT) AS nn FROM r),
-          |a AS (
-          |  SELECT doc_id, rnk, nn, js.neg_seq
-          |  FROM r, n, (SELECT UNNEST([1, 2, 3, 4]) AS neg_seq) js
-          |  WHERE nn >= 2),
-          |o AS (
-          |  SELECT doc_id, neg_seq, nn,
-          |    ((rnk - 1 +
-          |      (CAST(concat('0x', substr(md5(concat_ws('|',
-          |         CAST(doc_id AS VARCHAR), 'neg', CAST(neg_seq AS VARCHAR))), 1, 8))
-          |        AS BIGINT) % (nn - 1)) + 1) % nn) + 1 AS neg_rank
-          |  FROM a)
-          |SELECT o.doc_id, CAST(o.neg_seq AS INTEGER) AS neg_seq,
-          |  p.doc_id AS neg_doc_id
-          |FROM o JOIN r p ON o.neg_rank = p.rnk""".stripMargin,
-
-      "sample_token_budget" ->
-        s"""WITH st AS (SELECT doc_id, quality_score, n_tokens FROM ($textStatsSql)),
-           |c AS (
-           |  SELECT doc_id, quality_score, n_tokens,
-           |    CAST(SUM(n_tokens) OVER (ORDER BY quality_score DESC, doc_id
-           |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_tokens
-           |  FROM st)
-           |SELECT doc_id, quality_score, n_tokens, cum_tokens
-           |FROM c WHERE cum_tokens <= 15000""".stripMargin,
-
-      // Non-distinct adjacent bigrams; fractions are raw single-
-      // division IEEE quotients (see the SURVEY §6 rounding rule).
-      // Positional marginals from the pair panel; quantized count-ratio
-      // lns, integer-count × grid-point products at the grid scale.
-      "text_bigram_entropy" ->
-        s"""WITH toks AS (SELECT $toksSql AS t FROM documents),
-           |bigs AS (
-           |  SELECT UNNEST(list_transform(range(1, len(t)), i -> t[i])) AS w1,
-           |    UNNEST(list_transform(range(1, len(t)), i -> t[i + 1])) AS w2
-           |  FROM toks WHERE len(t) >= 2),
-           |pair AS (SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS n12 FROM bigs GROUP BY 1, 2),
-           |m1 AS (SELECT w1, CAST(SUM(n12) AS BIGINT) AS n1 FROM pair GROUP BY 1),
-           |tot AS (SELECT CAST(SUM(n12) AS BIGINT) AS t, CAST(COUNT(*) AS BIGINT) AS n_pairs FROM pair),
-           |cond AS (
-           |  SELECT SUM(CAST(n12 *
-           |    (FLOOR(LN(CAST(n1 AS DOUBLE) / CAST(n12 AS DOUBLE)) * 1e6) / 1e6)
-           |    AS DECIMAL(28,6))) AS ch
-           |  FROM pair JOIN m1 USING (w1)),
-           |uni AS (
-           |  SELECT SUM(CAST(n1 *
-           |    (FLOOR(LN(CAST(t AS DOUBLE) / CAST(n1 AS DOUBLE)) * 1e6) / 1e6)
-           |    AS DECIMAL(28,6))) AS uh,
-           |    CAST(COUNT(*) AS BIGINT) AS n_distinct_w1
-           |  FROM m1 CROSS JOIN tot)
-           |SELECT t AS n_bigrams, n_pairs AS n_distinct_pairs, n_distinct_w1,
-           |  CAST(ch AS DOUBLE) / CAST(t AS DOUBLE) AS cond_entropy_nats,
-           |  CAST(uh AS DOUBLE) / CAST(t AS DOUBLE) AS unigram_entropy_nats,
-           |  CASE WHEN CAST(uh AS DOUBLE) / CAST(t AS DOUBLE) > 0 THEN
-           |    (CAST(ch AS DOUBLE) / CAST(t AS DOUBLE))
-           |      / (CAST(uh AS DOUBLE) / CAST(t AS DOUBLE))
-           |  END AS predictability_ratio
-           |FROM cond CROSS JOIN uni CROSS JOIN tot""".stripMargin,
-
-      // Same three regex splits (dialect-shared character classes),
-      // blank segments dropped, one fixed-order score expression.
-      "text_readability" ->
-        """WITH c AS (
-          |  SELECT doc_id,
-          |    len(list_filter(regexp_split_to_array(text, '\s+'),
-          |      x -> len(trim(x)) > 0)) AS n_words,
-          |    len(list_filter(regexp_split_to_array(text, '[.!?]+'),
-          |      x -> len(trim(x)) > 0)) AS n_sentences,
-          |    len(list_filter(regexp_split_to_array(lower(text), '[^aeiouy]+'),
-          |      x -> len(trim(x)) > 0)) AS n_syllables
-          |  FROM documents WHERE text IS NOT NULL)
-          |SELECT doc_id, n_words, n_sentences, n_syllables,
-          |  CASE WHEN n_words > 0 AND n_sentences > 0 THEN
-          |    206.835 - 1.015 * (CAST(n_words AS DOUBLE) / CAST(n_sentences AS DOUBLE))
-          |      - 84.6 * (CAST(n_syllables AS DOUBLE) / CAST(n_words AS DOUBLE))
-          |  END AS flesch
-          |FROM c""".stripMargin,
-
-      // Coverage at each k: exact-integer cumulative counts under the
-      // (freq desc, token) total order, one division at the edge.
-      "text_vocab_coverage" ->
-        s"""WITH vocab AS (
-           |  SELECT tok, CAST(COUNT(*) AS BIGINT) AS cnt
-           |  FROM (SELECT UNNEST($toksSql) AS tok FROM documents)
-           |  WHERE tok <> '' GROUP BY 1),
-           |ranked AS (
-           |  SELECT cnt,
-           |    ROW_NUMBER() OVER (ORDER BY cnt DESC, tok) AS rank,
-           |    SUM(cnt) OVER (ORDER BY cnt DESC, tok
-           |      ROWS UNBOUNDED PRECEDING) AS cum
-           |  FROM vocab),
-           |tot AS (
-           |  SELECT CAST(MAX(cum) AS BIGINT) AS total_tokens,
-           |    CAST(COUNT(*) AS BIGINT) AS n_types
-           |  FROM ranked),
-           |g AS (SELECT UNNEST([100, 1000, 10000]) AS k)
-           |SELECT CAST(k AS INTEGER) AS k, n_types,
-           |  CAST(COUNT(*) AS BIGINT) AS types_used,
-           |  CAST(MAX(cum) AS BIGINT) AS tokens_covered, total_tokens,
-           |  CAST(MAX(cum) AS DOUBLE) / CAST(total_tokens AS DOUBLE) AS coverage
-           |FROM ranked, g, tot
-           |WHERE rank <= k
-           |GROUP BY k, n_types, total_tokens""".stripMargin,
-
-      // Quantized-log OLS over the ranked vocabulary; rank ties broken
-      // by token so both engines rank identically.
-      "text_zipf_fit" ->
-        s"""WITH vocab AS (
-           |  SELECT tok, CAST(COUNT(*) AS BIGINT) AS cnt
-           |  FROM (SELECT UNNEST($toksSql) AS tok FROM documents)
-           |  WHERE tok <> '' GROUP BY 1),
-           |ranked AS (
-           |  SELECT cnt,
-           |    CAST(ROW_NUMBER() OVER (ORDER BY cnt DESC, tok) AS BIGINT) AS rank
-           |  FROM vocab),
-           |pts AS (
-           |  SELECT FLOOR(LN(CAST(rank AS DOUBLE)) * 1e6) / 1e6 AS lx,
-           |    FLOOR(LN(CAST(cnt AS DOUBLE)) * 1e6) / 1e6 AS ly
-           |  FROM ranked),
-           |moms AS (
-           |  SELECT COUNT(*) AS n_types,
-           |    SUM(CAST(FLOOR(lx * 1e8) / 1e8 AS DECIMAL(28,8))) AS sx,
-           |    SUM(CAST(FLOOR(ly * 1e8) / 1e8 AS DECIMAL(28,8))) AS sy,
-           |    SUM(CAST(FLOOR(lx * ly * 1e8) / 1e8 AS DECIMAL(28,8))) AS sxy,
-           |    SUM(CAST(FLOOR(lx * lx * 1e8) / 1e8 AS DECIMAL(28,8))) AS sxx
-           |  FROM pts),
-           |sl AS (
-           |  SELECT n_types, sx, sy,
-           |    (n_types * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-           |      / NULLIF(n_types * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE), 0) AS zipf_slope
-           |  FROM moms)
-           |SELECT n_types, zipf_slope,
-           |  (CAST(sy AS DOUBLE) - zipf_slope * CAST(sx AS DOUBLE)) / n_types AS intercept
-           |FROM sl""".stripMargin,
-
-      // CorpusQc.heapsFit mirrored: md5 doc buckets, min-bucket type
-      // attribution, triangular cumulation, the zipfFit OLS grids.
-      "text_heaps_fit" ->
-        s"""WITH toks AS (
-           |  SELECT CAST(CAST(concat('0x', substr(md5(
-           |      COALESCE(CAST(doc_id AS VARCHAR), '<NULL>')), 1, 8)) AS BIGINT)
-           |      % 16 AS INTEGER) AS bucket,
-           |    UNNEST($toksSql) AS tok
-           |  FROM documents),
-           |tk AS (SELECT * FROM toks WHERE tok <> ''),
-           |pb AS (SELECT bucket, CAST(COUNT(*) AS BIGINT) AS n_tokens
-           |       FROM tk GROUP BY 1),
-           |fs AS (
-           |  SELECT bucket, CAST(COUNT(*) AS BIGINT) AS n_new_types FROM (
-           |    SELECT tok, MIN(bucket) AS bucket FROM tk GROUP BY 1)
-           |  GROUP BY 1),
-           |panel AS (
-           |  SELECT COALESCE(pb.bucket, fs.bucket) AS bucket,
-           |    COALESCE(n_tokens, 0) AS n_tokens,
-           |    COALESCE(n_new_types, 0) AS n_new_types
-           |  FROM pb FULL OUTER JOIN fs ON pb.bucket = fs.bucket),
-           |cum AS (
-           |  SELECT x.bucket AS bucket,
-           |    MAX(x.n_tokens) AS n_tokens,
-           |    MAX(x.n_new_types) AS n_new_types,
-           |    CAST(SUM(y.n_tokens) AS BIGINT) AS cum_tokens,
-           |    CAST(SUM(y.n_new_types) AS BIGINT) AS cum_types
-           |  FROM panel x JOIN panel y ON y.bucket <= x.bucket
-           |  GROUP BY 1),
-           |pts AS (
-           |  SELECT FLOOR(LN(CAST(cum_tokens AS DOUBLE)) * 1e6) / 1e6 AS lx,
-           |    FLOOR(LN(CAST(cum_types AS DOUBLE)) * 1e6) / 1e6 AS ly
-           |  FROM cum WHERE cum_tokens > 0 AND cum_types > 0),
-           |moms AS (
-           |  SELECT COUNT(*) AS n,
-           |    SUM(CAST(FLOOR(lx * 1e8) / 1e8 AS DECIMAL(28,8))) AS sx,
-           |    SUM(CAST(FLOOR(ly * 1e8) / 1e8 AS DECIMAL(28,8))) AS sy,
-           |    SUM(CAST(FLOOR(lx * ly * 1e8) / 1e8 AS DECIMAL(28,8))) AS sxy,
-           |    SUM(CAST(FLOOR(lx * lx * 1e8) / 1e8 AS DECIMAL(28,8))) AS sxx
-           |  FROM pts),
-           |fit AS (
-           |  SELECT
-           |    (n * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-           |      / NULLIF(n * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE), 0)
-           |      AS heaps_beta,
-           |    sx, sy, n
-           |  FROM moms),
-           |fit2 AS (
-           |  SELECT heaps_beta,
-           |    FLOOR(EXP((CAST(sy AS DOUBLE) - heaps_beta * CAST(sx AS DOUBLE)) / n)
-           |      * 1e6) / 1e6 AS heaps_k
-           |  FROM fit)
-           |SELECT bucket, n_tokens, n_new_types, cum_tokens, cum_types,
-           |  heaps_beta, heaps_k
-           |FROM cum CROSS JOIN fit2""".stripMargin,
-
-      // Positional-marginal PMI over the pair panel; count floor and
-      // top-N cut applied AFTER marginals (which cover all pairs).
-      "text_pmi_bigrams" ->
-        s"""WITH toks AS (SELECT $toksSql AS t FROM documents),
-           |bigs AS (
-           |  SELECT UNNEST(list_transform(range(1, len(t)), i -> t[i])) AS w1,
-           |    UNNEST(list_transform(range(1, len(t)), i -> t[i + 1])) AS w2
-           |  FROM toks WHERE len(t) >= 2),
-           |pair AS (SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS n_pair FROM bigs GROUP BY 1, 2),
-           |m1 AS (SELECT w1, CAST(SUM(n_pair) AS BIGINT) AS n_w1 FROM pair GROUP BY 1),
-           |m2 AS (SELECT w2, CAST(SUM(n_pair) AS BIGINT) AS n_w2 FROM pair GROUP BY 1),
-           |tot AS (SELECT CAST(SUM(n_pair) AS BIGINT) AS t FROM pair)
-           |SELECT w1, w2, n_pair, n_w1, n_w2,
-           |  FLOOR(LN(CAST(n_pair * t AS DOUBLE) / CAST(n_w1 * n_w2 AS DOUBLE)) * 1e4) / 1e4 AS pmi
-           |FROM pair JOIN m1 USING (w1) JOIN m2 USING (w2) CROSS JOIN tot
-           |WHERE n_pair >= 5
-           |ORDER BY pmi DESC, w1, w2
-           |LIMIT 50""".stripMargin,
-
-      "doc_bigram_novelty" ->
-        s"""WITH bigs AS (
-           |  SELECT doc_id,
-           |    UNNEST(list_transform(range(1, len(t)), i -> t[i])) AS pre,
-           |    UNNEST(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i + 1])) AS big
-           |  FROM (SELECT doc_id, $toksSql AS t FROM documents)
-           |  WHERE len(t) >= 2),
-           |pd AS (SELECT doc_id, pre, big, COUNT(*) AS cnt_doc FROM bigs GROUP BY 1, 2, 3),
-           |cb AS (SELECT big, CAST(SUM(cnt_doc) AS BIGINT) AS cnt_big FROM pd GROUP BY 1),
-           |cp AS (SELECT pre, COUNT(*) AS cnt_pre FROM bigs GROUP BY 1)
-           |SELECT pd.doc_id,
-           |  CAST(SUM(cnt_doc) AS BIGINT) AS n_bigrams,
-           |  CAST(SUM(CASE WHEN cnt_big = cnt_doc THEN cnt_doc ELSE 0 END) AS BIGINT) AS n_novel,
-           |  CAST(SUM(CAST(FLOOR(CAST(cnt_doc AS DOUBLE)
-           |      * (CAST(cnt_big AS DOUBLE) / CAST(cnt_pre AS DOUBLE)) * 1e6) / 1e6 AS DECIMAL(28,6))) AS DOUBLE)
-           |    / CAST(SUM(cnt_doc) AS BIGINT) AS mean_continuation_share
-           |FROM pd JOIN cb USING (big) JOIN cp USING (pre)
-           |GROUP BY 1""".stripMargin,
-
-      // Integer-exact Simpson diversity: Σc², n and max(c) are exact
-      // counts, each output exactly one double division.
-      "text_char_diversity" ->
-        """WITH pc AS (
-          |  SELECT doc_id, ch, CAST(COUNT(*) AS BIGINT) AS cnt
-          |  FROM (SELECT doc_id, unnest(string_split(text, '')) AS ch
-          |        FROM documents WHERE text IS NOT NULL AND length(text) > 0)
-          |  WHERE ch <> '' GROUP BY 1, 2)
-          |SELECT doc_id,
-          |  CAST(SUM(cnt) AS BIGINT) AS n_chars_counted,
-          |  CAST(COUNT(*) AS BIGINT) AS distinct_chars,
-          |  1.0 - SUM(cnt * cnt) / CAST(SUM(cnt) * SUM(cnt) AS DOUBLE) AS simpson_diversity,
-          |  MAX(cnt) / CAST(SUM(cnt) AS DOUBLE) AS top_char_share
-          |FROM pc GROUP BY 1""".stripMargin,
-
-      "doc_repetition_stats" ->
-        s"""WITH base AS (
-           |  SELECT doc_id, CAST(len(t) AS INTEGER) AS n_tokens, t
-           |  FROM (SELECT doc_id, $toksSql AS t FROM documents)),
-           |grams AS (
-           |  SELECT doc_id,
-           |    UNNEST(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i + 1])) AS g
-           |  FROM base WHERE n_tokens >= 2),
-           |gc AS (SELECT doc_id, g, COUNT(*) AS c FROM grams GROUP BY 1, 2),
-           |agg AS (
-           |  SELECT doc_id, MAX(c) AS maxc, CAST(SUM(c) AS BIGINT) AS tot,
-           |    CAST(SUM(CASE WHEN c > 1 THEN c ELSE 0 END) AS BIGINT) AS dupc,
-           |    COUNT(*) AS n_distinct
-           |  FROM gc GROUP BY 1)
-           |SELECT doc_id, n_tokens,
-           |  COALESCE(tot, 0) AS n_bigrams,
-           |  COALESCE(n_distinct, 0) AS n_distinct_bigrams,
-           |  COALESCE(maxc / tot, 0.0) AS top_bigram_frac,
-           |  COALESCE(dupc / tot, 0.0) AS dup_bigram_frac,
-           |  (COALESCE(maxc / tot, 0.0) > 0.1 OR COALESCE(dupc / tot, 0.0) > 0.2)
-           |    AS is_repetitive
-           |FROM base LEFT JOIN agg USING (doc_id)""".stripMargin,
-
-      // The oracle joins on the 8-gram STRING where the Spark plan
-      // joins on its xxhash64 (the same key substitution the
-      // dedup_ngram_jaccard oracle already replays); the short-doc
-      // whole-text fallback mirrors the shingle kernel.
-      "decontaminate_overlap" ->
-        s"""WITH toks AS (SELECT doc_id, $toksSql AS t FROM documents),
-           |grams AS (
-           |  SELECT doc_id, UNNEST(
-           |    CASE WHEN len(t) >= 8
-           |         THEN list_distinct(list_transform(range(1, len(t) - 6),
-           |              i -> array_to_string(list_slice(t, i, i + 7), ' ')))
-           |         ELSE [array_to_string(t, ' ')] END) AS g
-           |  FROM toks),
-           |stop AS (SELECT g FROM grams GROUP BY g HAVING COUNT(*) > 1000),
-           |kept AS (SELECT doc_id, g FROM grams ANTI JOIN stop USING (g)),
-           |tr AS (SELECT doc_id AS train_id, g FROM kept WHERE doc_id % 10 <> 7),
-           |ev AS (SELECT doc_id AS eval_id, g FROM kept WHERE doc_id % 10 = 7),
-           |ts AS (SELECT train_id, COUNT(*) AS train_ngrams FROM tr GROUP BY 1),
-           |p AS (
-           |  SELECT train_id, eval_id, COUNT(*) AS n_shared
-           |  FROM tr JOIN ev USING (g) GROUP BY 1, 2)
-           |SELECT train_id, eval_id, n_shared, train_ngrams,
-           |  n_shared / train_ngrams AS contamination_frac
-           |FROM p JOIN ts USING (train_id)
-           |WHERE n_shared >= 5""".stripMargin,
-
-      // Span hashes replay as the span STRINGS (the same key
-      // substitution as decontaminate_overlap/dedup_ngram_jaccard);
-      // distinct-per-doc spans make span frequency == document
-      // frequency on both engines.
-      "dup_span_stats" ->
-        s"""WITH toks AS (SELECT doc_id, $toksSql AS t FROM documents),
-           |spans AS (
-           |  SELECT doc_id, UNNEST(
-           |    CASE WHEN len(t) >= 10
-           |         THEN list_distinct(list_transform(range(1, len(t) - 8),
-           |              i -> array_to_string(list_slice(t, i, i + 9), ' ')))
-           |         ELSE [array_to_string(t, ' ')] END) AS g
-           |  FROM toks),
-           |dfq AS (SELECT g, COUNT(*) AS df FROM spans GROUP BY 1)
-           |SELECT doc_id, COUNT(*) AS n_spans,
-           |  COUNT(*) FILTER (WHERE df >= 2) AS n_dup_spans,
-           |  COUNT(*) FILTER (WHERE df >= 2) / COUNT(*) AS dup_span_frac
-           |FROM spans JOIN dfq USING (g) GROUP BY 1""".stripMargin,
-
-      // The span key replays as the span STRING (the dup_span_stats
-      // substitution); first-occurrence = min (doc_id, pos) on both
-      // engines, the rebuild joins surviving tokens by position.
-      "dedup_exact_substring" ->
-        s"""WITH toks AS (SELECT doc_id, $toksSql AS t FROM documents),
-           |spans AS (
-           |  SELECT doc_id,
-           |    UNNEST(range(1, len(t) - 8)) AS pos,
-           |    UNNEST(list_transform(range(1, len(t) - 8),
-           |      i -> array_to_string(list_slice(t, i, i + 9), ' '))) AS g
-           |  FROM toks WHERE len(t) >= 10),
-           |fr AS (
-           |  SELECT doc_id, pos,
-           |    COUNT(*) OVER (PARTITION BY g) AS cnt,
-           |    ROW_NUMBER() OVER (PARTITION BY g ORDER BY doc_id, pos) AS rn
-           |  FROM spans),
-           |rm AS (SELECT doc_id, pos FROM fr WHERE cnt >= 2 AND rn > 1),
-           |cov AS (SELECT DISTINCT doc_id, pos + o AS p
-           |        FROM (SELECT doc_id, pos, UNNEST(range(0, 10)) AS o FROM rm)),
-           |tokpos AS (
-           |  SELECT doc_id, UNNEST(range(1, len(t) + 1)) AS p, UNNEST(t) AS w
-           |  FROM toks),
-           |kept AS (
-           |  SELECT tp.doc_id, tp.p, tp.w
-           |  FROM tokpos tp LEFT JOIN cov c ON tp.doc_id = c.doc_id AND tp.p = c.p
-           |  WHERE c.p IS NULL),
-           |rebuilt AS (
-           |  SELECT doc_id, CAST(COUNT(*) AS INTEGER) AS n_tokens_kept,
-           |    string_agg(w, ' ' ORDER BY p) AS text_clean
-           |  FROM kept GROUP BY 1)
-           |SELECT t.doc_id, CAST(len(t.t) AS INTEGER) AS n_tokens_orig,
-           |  COALESCE(r.n_tokens_kept, 0) AS n_tokens_kept,
-           |  COALESCE(r.text_clean, '') AS text_clean
-           |FROM toks t LEFT JOIN rebuilt r USING (doc_id)""".stripMargin,
-
-      // Mean quality via the centroid parity pattern: exact DECIMAL
-      // sum -> one double division -> 6dp round, so the KEEP/DROP
-      // verdict is engine-replayable.
-      "source_quality_gate" ->
-        s"""WITH q AS (SELECT doc_id, quality_score FROM ($textStatsSql)),
-           |j AS (SELECT d.source, q.quality_score
-           |      FROM documents d JOIN q USING (doc_id)),
-           |agg AS (
-           |  SELECT source, COUNT(*) AS n_docs,
-           |    ROUND(CAST(SUM(CAST(quality_score AS DECIMAL(28,12))) AS DOUBLE)
-           |      / COUNT(*), 6) AS mean_quality
-           |  FROM j GROUP BY 1)
-           |SELECT source, n_docs, mean_quality,
-           |  CASE WHEN n_docs >= 10 AND mean_quality >= 0.5
-           |       THEN 'KEEP' ELSE 'DROP' END AS status
-           |FROM agg""".stripMargin,
-
-      // Integer partials, two final divisions — bit-replayable.
-      "text_freq_familiarity" ->
-        s"""WITH tk AS (
-           |  SELECT doc_id, UNNEST(t) AS tok
-           |  FROM (SELECT doc_id, $toksSql AS t FROM documents)),
-           |freq AS (SELECT tok, COUNT(*) AS cnt FROM tk GROUP BY 1),
-           |tot AS (SELECT CAST(SUM(cnt) AS BIGINT) AS total FROM freq),
-           |per AS (
-           |  SELECT doc_id, COUNT(*) AS n_tokens,
-           |    CAST(SUM(cnt) AS BIGINT) AS sum_cnt, MIN(cnt) AS min_cnt
-           |  FROM tk JOIN freq USING (tok) GROUP BY 1)
-           |SELECT doc_id, n_tokens,
-           |  sum_cnt / n_tokens / total AS mean_token_share,
-           |  min_cnt / total AS min_token_share
-           |FROM per, tot""".stripMargin,
-
-      // ln only on the 64-bucket panel (1e-4 floor); md5 bucketing
-      // and the 1e-6 product floor replay Sampling.importanceWeights
-      // op-for-op.
-      "sample_importance_dsir" ->
-        s"""WITH feat AS (
-           |  SELECT doc_id, lang = 'en' AS is_t,
-           |    CAST(concat('0x', substr(md5(COALESCE(CAST(tok AS VARCHAR), '<NULL>')), 1, 8)) AS BIGINT) % 64 AS b
-           |  FROM (SELECT doc_id, lang, UNNEST(t) AS tok
-           |        FROM (SELECT doc_id, lang, $toksSql AS t FROM documents))),
-           |cb AS (
-           |  SELECT doc_id, b, CAST(COUNT(*) AS BIGINT) AS cb, MAX(is_t) AS is_t
-           |  FROM feat GROUP BY 1, 2),
-           |panel AS (
-           |  SELECT b, CAST(SUM(cb) AS BIGINT) AS rc,
-           |    CAST(SUM(CASE WHEN is_t THEN cb ELSE 0 END) AS BIGINT) AS tc
-           |  FROM cb GROUP BY 1),
-           |tot AS (SELECT CAST(SUM(rc) AS BIGINT) AS tr, CAST(SUM(tc) AS BIGINT) AS tt FROM panel),
-           |lam AS (
-           |  SELECT b,
-           |    floor(ln((CAST(tc + 1 AS DOUBLE) / CAST(tt + 64 AS DOUBLE)) /
-           |             (CAST(rc + 1 AS DOUBLE) / CAST(tr + 64 AS DOUBLE))) * 1e4) / 1e4 AS lam
-           |  FROM panel, tot),
-           |s AS (
-           |  SELECT doc_id, CAST(SUM(cb) AS BIGINT) AS n_feats,
-           |    SUM(CAST(floor(CAST(cb AS DOUBLE) * lam * 1e6) / 1e6 AS DECIMAL(28,6))) AS lw
-           |  FROM cb JOIN lam USING (b) GROUP BY 1)
-           |SELECT doc_id, n_feats, CAST(lw AS DOUBLE) AS log_weight,
-           |  CAST(lw AS DOUBLE) > 0 AS favors_target
-           |FROM s""".stripMargin,
-
-      // CorpusQc.jsBySource mirrored: (source, token) counts, the
-      // token self-join with source_a < source_b, the integer-product
-      // ln argument, gridded terms, ln2*(1-coverage) closure.
-      "text_js_sources" ->
-        s"""WITH tk AS (
-           |  SELECT source AS src, UNNEST(t) AS tok
-           |  FROM (SELECT source, $toksSql AS t FROM documents
-           |        WHERE source IS NOT NULL AND text IS NOT NULL)),
-           |cnt AS (
-           |  SELECT src, tok, CAST(COUNT(*) AS BIGINT) AS n
-           |  FROM tk WHERE tok <> '' GROUP BY 1, 2),
-           |tt AS (SELECT src, CAST(SUM(n) AS BIGINT) AS nt FROM cnt GROUP BY 1),
-           |j AS (
-           |  SELECT a.src AS source_a, b.src AS source_b,
-           |    a.n AS na, b.n AS nb, ta.nt AS ta, tb.nt AS tb
-           |  FROM cnt a JOIN cnt b ON a.tok = b.tok AND a.src < b.src
-           |  JOIN tt ta ON ta.src = a.src JOIN tt tb ON tb.src = b.src),
-           |tm AS (
-           |  SELECT source_a, source_b, na, nb, ta, tb,
-           |    CAST(na AS DOUBLE) * CAST(tb AS DOUBLE) AS c1,
-           |    CAST(nb AS DOUBLE) * CAST(ta AS DOUBLE) AS c2
-           |  FROM j),
-           |ag AS (
-           |  SELECT source_a, source_b,
-           |    CAST(COUNT(*) AS BIGINT) AS n_tokens_common,
-           |    CAST(SUM(na) AS BIGINT) AS ca, CAST(SUM(nb) AS BIGINT) AS cb,
-           |    MAX(ta) AS ta, MAX(tb) AS tb,
-           |    SUM(CAST(FLOOR(CAST(na AS DOUBLE) / CAST(ta AS DOUBLE)
-           |      * ln(2.0 * c1 / (c1 + c2)) * 1e6) / 1e6 AS DECIMAL(28,6))) AS sa,
-           |    SUM(CAST(FLOOR(CAST(nb AS DOUBLE) / CAST(tb AS DOUBLE)
-           |      * ln(2.0 * c2 / (c1 + c2)) * 1e6) / 1e6 AS DECIMAL(28,6))) AS sb
-           |  FROM tm GROUP BY 1, 2)
-           |SELECT source_a, source_b, n_tokens_common,
-           |  0.5 * (CAST(sa AS DOUBLE)
-           |      + 0.6931471805599453 * (1.0 - CAST(ca AS DOUBLE) / CAST(ta AS DOUBLE)))
-           |  + 0.5 * (CAST(sb AS DOUBLE)
-           |      + 0.6931471805599453 * (1.0 - CAST(cb AS DOUBLE) / CAST(tb AS DOUBLE))) AS js_div
-           |FROM ag""".stripMargin,
-
-      // ln() only ever touches the per-type vocab panel, floored to
-      // the 1e-4 grid (engine-ulp-safe); tf·lq re-floors to 1e-6
-      // before the decimal cast, matching the Spark side op-for-op.
-      "text_surprisal" ->
-        s"""WITH tk AS (
-           |  SELECT doc_id, UNNEST(t) AS tok
-           |  FROM (SELECT doc_id, $toksSql AS t FROM documents)),
-           |vocab AS (SELECT tok, COUNT(*) AS cnt FROM tk GROUP BY 1),
-           |tot AS (SELECT CAST(SUM(cnt) AS BIGINT) AS n, COUNT(*) AS v FROM vocab),
-           |lp AS (
-           |  SELECT tok,
-           |    floor(ln(CAST(cnt + 1 AS DOUBLE) / CAST(n + v AS DOUBLE)) * 1e4) / 1e4 AS lq
-           |  FROM vocab, tot),
-           |tf AS (SELECT doc_id, tok, COUNT(*) AS tf FROM tk GROUP BY 1, 2),
-           |s AS (
-           |  SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS n_tokens,
-           |    SUM(CAST(floor(CAST(tf AS DOUBLE) * lq * 1e6) / 1e6 AS DECIMAL(28,6))) AS slp
-           |  FROM tf JOIN lp USING (tok) GROUP BY 1)
-           |SELECT doc_id, n_tokens, CAST(slp AS DOUBLE) AS sum_logp,
-           |  (-CAST(slp AS DOUBLE)) / n_tokens AS nats_per_token
-           |FROM s""".stripMargin,
-
-      // Laplace-smoothed bigram LM: same quantization ladder as
-      // text_surprisal (1e-4 ln grid, 1e-6 term grid, DECIMAL(28,6)
-      // partials, one division at the edge).
-      "text_bigram_lm" ->
-        s"""WITH tk AS (
-           |  SELECT doc_id, t, CAST(len(t) AS INTEGER) AS n
-           |  FROM (SELECT doc_id, $toksSql AS t FROM documents)),
-           |vocab AS (
-           |  SELECT COUNT(DISTINCT tok) AS v
-           |  FROM (SELECT UNNEST(t) AS tok FROM tk)),
-           |bigs AS (
-           |  SELECT doc_id, t[i] AS pre, t[i] || ' ' || t[i + 1] AS big
-           |  FROM tk, UNNEST(range(1, n)) AS r(i)
-           |  WHERE n >= 2),
-           |cbig AS (SELECT pre, big, COUNT(*) AS cbig FROM bigs GROUP BY 1, 2),
-           |cpre AS (SELECT pre, COUNT(*) AS cpre FROM bigs GROUP BY 1),
-           |lp AS (
-           |  SELECT big,
-           |    floor(ln(CAST(cbig + 1 AS DOUBLE) / CAST(cpre + v AS DOUBLE)) * 1e4) / 1e4 AS lq
-           |  FROM cbig JOIN cpre USING (pre), vocab),
-           |tf AS (SELECT doc_id, big, COUNT(*) AS tf FROM bigs GROUP BY 1, 2),
-           |s AS (
-           |  SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS n_bigrams,
-           |    SUM(CAST(floor(CAST(tf AS DOUBLE) * lq * 1e6) / 1e6 AS DECIMAL(28,6))) AS slp
-           |  FROM tf JOIN lp USING (big) GROUP BY 1)
-           |SELECT doc_id, n_bigrams, CAST(slp AS DOUBLE) AS sum_logp,
-           |  (-CAST(slp AS DOUBLE)) / n_bigrams AS nats_per_bigram
-           |FROM s""".stripMargin,
-
-      // 64-token chunks, stride 48; a start inside the previous
-      // chunk's overlap tail (s >= n - 16) is not emitted.
-      "doc_chunks" ->
-        s"""WITH base AS (
-           |  SELECT doc_id, t, CAST(len(t) AS INTEGER) AS n
-           |  FROM (SELECT doc_id, $toksSql AS t FROM documents)
-           |  WHERE len(t) > 0),
-           |st AS (SELECT doc_id, t, n, UNNEST(range(0, greatest(n - 16, 1), 48)) AS s
-           |       FROM base)
-           |SELECT doc_id,
-           |  CAST(s // 48 AS INTEGER) AS chunk_seq,
-           |  CAST(s AS INTEGER) AS chunk_start,
-           |  CAST(LEAST(64, n - s) AS INTEGER) AS n_chunk_tokens,
-           |  array_to_string(list_slice(t, s + 1, s + 64), ' ') AS chunk_text
-           |FROM st""".stripMargin,
-
-      "pack_sequences" ->
-        s"""WITH d AS (
-           |  SELECT doc_id,
-           |    CAST(len($toksSql) AS INTEGER) AS n_tokens,
-           |    CAST(doc_id % 8 AS INTEGER) AS shard
-           |  FROM documents),
-           |c AS (
-           |  SELECT doc_id, n_tokens, shard,
-           |    CAST(SUM(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id)
-           |         AS BIGINT) AS cum_tokens
-           |  FROM d)
-           |SELECT doc_id, n_tokens, shard, cum_tokens,
-           |  CAST(FLOOR((cum_tokens - n_tokens) / 2048) AS BIGINT) AS bin_id,
-           |  CAST((cum_tokens - n_tokens) % 2048 AS BIGINT) AS bin_offset
-           |FROM c""".stripMargin,
-
-      // Exact-quantile tier thresholds + the md5 membership rule —
-      // both already pinned elsewhere (F2's quantile_cont parity,
-      // sample_stratified's bucket rule).
-      "sample_quality_weighted" ->
-        s"""WITH q AS (SELECT doc_id, quality_score FROM ($textStatsSql)),
-           |thr AS (
-           |  SELECT quantile_cont(quality_score, 0.25) AS p25,
-           |         quantile_cont(quality_score, 0.5) AS p50,
-           |         quantile_cont(quality_score, 0.75) AS p75
-           |  FROM q),
-           |tiered AS (
-           |  SELECT doc_id, quality_score,
-           |    CASE WHEN quality_score <= p25 THEN 'T1'
-           |         WHEN quality_score <= p50 THEN 'T2'
-           |         WHEN quality_score <= p75 THEN 'T3'
-           |         ELSE 'T4' END AS quality_tier
-           |  FROM q, thr)
-           |SELECT * FROM (
-           |  SELECT *,
-           |    substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) AS sample_bucket,
-           |    CASE WHEN quality_tier = 'T1' THEN '2000'
-           |         WHEN quality_tier = 'T2' THEN '4000'
-           |         WHEN quality_tier = 'T3' THEN '8000'
-           |         ELSE 'g' END AS sample_threshold
-           |  FROM tiered)
-           |WHERE sample_bucket < sample_threshold""".stripMargin,
-
-      "text_lang_id" -> langIdSql,
-
-      // Label-vs-detector agreement audit on top of the same lang-id
-      // expression; shares are RAW quotients of the label's total.
-      "lang_confusion" ->
-        s"""WITH p AS ($langIdSql),
-           |c AS (SELECT lang, predicted_lang, COUNT(*) AS n_docs
-           |      FROM p GROUP BY 1, 2),
-           |t AS (SELECT lang, CAST(SUM(n_docs) AS BIGINT) AS n_label
-           |      FROM c GROUP BY 1)
-           |SELECT c.lang, c.predicted_lang, c.n_docs, t.n_label,
-           |  c.n_docs / t.n_label AS share_of_label,
-           |  c.lang = c.predicted_lang AS is_match
-           |FROM c JOIN t USING (lang)""".stripMargin,
-
-      // MlLite.cohensKappa over the same declared-vs-predicted pair:
-      // k² confusion panel, marginal products gridded to 1e-12 before
-      // the DECIMAL(28,12) expected-agreement sum, one mirrored ratio.
-      "ml_cohens_kappa" ->
-        s"""WITH p AS ($langIdSql),
-           |c AS (
-           |  SELECT lang AS a, predicted_lang AS b, COUNT(*) AS n
-           |  FROM p WHERE lang IS NOT NULL AND predicted_lang IS NOT NULL
-           |  GROUP BY 1, 2),
-           |tot AS (
-           |  SELECT COALESCE(CAST(SUM(n) AS BIGINT), 0) AS n_items,
-           |    COALESCE(CAST(SUM(CASE WHEN a = b THEN n ELSE 0 END) AS BIGINT), 0) AS n_agree
-           |  FROM c),
-           |ma AS (SELECT a AS cls, CAST(SUM(n) AS BIGINT) AS ra FROM c GROUP BY 1),
-           |mb AS (SELECT b AS cls, CAST(SUM(n) AS BIGINT) AS cb FROM c GROUP BY 1),
-           |nc AS (
-           |  SELECT CAST(COUNT(*) AS BIGINT) AS n_classes
-           |  FROM (SELECT cls FROM ma UNION SELECT cls FROM mb)),
-           |pe AS (
-           |  SELECT COALESCE(CAST(SUM(CAST(FLOOR(
-           |      (CAST(ra AS DOUBLE) / CAST(n_items AS DOUBLE))
-           |      * (CAST(cb AS DOUBLE) / CAST(n_items AS DOUBLE)) * 1e12) / 1e12
-           |    AS DECIMAL(28,12))) AS DECIMAL(28,12)), 0) AS pev
-           |  FROM ma JOIN mb USING (cls) CROSS JOIN tot)
-           |SELECT n_items, n_classes, n_agree,
-           |  CAST(n_agree AS DOUBLE) / NULLIF(CAST(n_items AS DOUBLE), 0.0) AS p_observed,
-           |  CAST(pev AS DOUBLE) AS p_expected,
-           |  (CAST(n_agree AS DOUBLE) / NULLIF(CAST(n_items AS DOUBLE), 0.0)
-           |    - CAST(pev AS DOUBLE))
-           |    / NULLIF(1.0 - CAST(pev AS DOUBLE), 0.0) AS kappa
-           |FROM tot CROSS JOIN nc CROSS JOIN pe""".stripMargin,
-
-      "text_tfidf_topn" ->
-        s"""WITH tok AS (
-           |  SELECT doc_id, UNNEST($toksSql) AS token FROM documents),
-           |tf AS (
-           |  SELECT doc_id, token, COUNT(*) AS tf FROM tok
-           |  WHERE token <> '' GROUP BY 1, 2),
-           |idf AS (SELECT token, COUNT(*) AS df FROM tf GROUP BY 1),
-           |n AS (SELECT COUNT(*) AS n_docs FROM documents),
-           |scored AS (
-           |  SELECT doc_id, token, tf, df,
-           |    ROUND(tf * (n_docs - df + CAST(0.5 AS DOUBLE)) / (df + CAST(0.5 AS DOUBLE)), 6) AS tfidf
-           |  FROM tf JOIN idf USING (token) CROSS JOIN n)
-           |SELECT doc_id,
-           |  CAST(ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, token) AS INTEGER) AS term_rank,
-           |  token, tf, df, tfidf
-           |FROM scored
-           |QUALIFY term_rank <= 3""".stripMargin,
-
-      "text_token_topn" ->
-        s"""SELECT token, COUNT(*) AS n_occurrences
-           |FROM (SELECT UNNEST($toksSql) AS token FROM documents)
-           |WHERE token <> ''
-           |GROUP BY token
-           |ORDER BY n_occurrences DESC, token
-           |LIMIT 50""".stripMargin,
-
-      "doc_quality_gate" ->
-        s"""SELECT *, reason_code IS NULL AS is_valid FROM (
-           |  SELECT *,
-           |    CASE WHEN n_tokens < 5 THEN 'TOO_SHORT'
-           |         WHEN n_tokens > 100000 THEN 'TOO_LONG'
-           |         WHEN punct_ratio > 0.3 THEN 'HIGH_PUNCT'
-           |         WHEN avg_token_len < 2.0 OR avg_token_len > 12.0 THEN 'BAD_TOKEN_LEN'
-           |         WHEN lang = 'en' AND n_tokens >= 50 AND stopword_ratio < 0.01 THEN 'NO_STOPWORDS'
-           |         ELSE NULL END AS reason_code
-           |  FROM (
-           |    SELECT doc_id, lang,
-           |      len(t) AS n_tokens,
-           |      (length(text) - length(regexp_replace(text, '[!-/:-@\\[-`{-~]', '', 'g'))) / greatest(length(text), 1) AS punct_ratio,
-           |      len(list_filter(t, x -> x IN ${TextOps.stopListSql("en")})) / greatest(len(t), 1) AS stopword_ratio,
-           |      list_sum(list_transform(t, x -> length(x))) / greatest(len(t), 1) AS avg_token_len
-           |    FROM (SELECT doc_id, lang, text, $toksSql AS t FROM documents)))""".stripMargin,
-
-      // Frequency-weighted adjacent char pairs over the vocabulary;
-      // deterministic top-N boundary (count DESC, pair ASC).
-      // The training loop replayed as chained MATERIALIZED CTEs: per
-      // round, zip-unnest adjacent symbol pairs, argmax with the
-      // (count desc, pair asc) tie-break, ONE literal boundary-safe
-      // replace over the padded double-space symbol encoding.
-      "bpe_train_merges" -> {
-        val rounds = 6
-        val out = (1 to rounds).map { r =>
-          s"""SELECT $r AS round, l AS merge_left, r AS merge_right,
-             |  l || r AS merged, cnt AS n_occurrences FROM b$r""".stripMargin
-        }.mkString("\nUNION ALL\n")
-        bpeTrainCtes(toksSql, rounds) + "\n" + out
-      },
-
-      // Training CTEs + the merges applied to every corpus token in
-      // round order — per-doc symbol counts.
-      "bpe_encode" -> {
-        val rounds = 6
-        bpeTrainCtes(toksSql, rounds) + ",\n" + bpeApplyCtes(toksSql, rounds) +
-          s"""
-             |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens,
-             |  CAST(SUM(len(string_split(trim(sym), '  '))) AS BIGINT) AS n_symbols
-             |FROM e$rounds GROUP BY 1""".stripMargin
-      },
-
-      // Tokenizer-selection panel: the SAME corpus encoded by all
-      // THREE production tokenizers (D60's BPE merges, D94's unigram
-      // model, D100's WordPiece greedy longest-match), corpus-level
-      // compression totals side by side. One WITH: the bpe chain +
-      // the unigram chain + the wordpiece chain (CTE names disjoint
-      // by construction) + per-tokenizer rollups.
-      "tokenizer_compare" -> {
-        val rounds = 6
-        bpeTrainCtes(toksSql, rounds) + ",\n" + bpeApplyCtes(toksSql, rounds) +
-          ",\n" + UnigramOracle.trainCtes(toksSql).stripPrefix("WITH ") +
-          ",\n" + UnigramOracle.applyCtes(toksSql, "ugtok", "ugpc") +
-          ",\n" + WordpieceOracle.trainCtes(toksSql).stripPrefix("WITH ") +
-          ",\n" + WordpieceOracle.applyCtes(toksSql) +
-          s""",
-             |perdoc AS (
-             |  SELECT 'bpe' AS tokenizer, doc_id,
-             |    CAST(COUNT(*) AS BIGINT) AS n_tokens,
-             |    CAST(SUM(len(string_split(trim(sym), '  '))) AS BIGINT) AS n_symbols
-             |  FROM e$rounds GROUP BY 2
-             |  UNION ALL
-             |  SELECT 'unigram' AS tokenizer, doc_id,
-             |    CAST(COUNT(*) AS BIGINT) AS n_tokens,
-             |    CAST(SUM(n_pieces) AS BIGINT) AS n_symbols
-             |  FROM ugtok JOIN ugpc USING (word) GROUP BY 2
-             |  UNION ALL
-             |  SELECT 'wordpiece' AS tokenizer, doc_id,
-             |    CAST(COUNT(*) AS BIGINT) AS n_tokens,
-             |    CAST(SUM(n_pieces) AS BIGINT) AS n_symbols
-             |  FROM wptok JOIN wpgf USING (word) GROUP BY 2)
-             |SELECT tokenizer, CAST(COUNT(*) AS BIGINT) AS n_docs,
-             |  CAST(SUM(n_tokens) AS BIGINT) AS n_tokens,
-             |  CAST(SUM(n_symbols) AS BIGINT) AS n_symbols,
-             |  FLOOR(CAST(SUM(n_symbols) AS DOUBLE) / CAST(SUM(n_tokens) AS DOUBLE)
-             |    * 1e6) / 1e6 AS symbols_per_token
-             |FROM perdoc GROUP BY 1""".stripMargin
-      },
-
-      // WordPiece training replayed as the WordpieceOracle chain: per
-      // round symbol + pair frequencies, the likelihood-scored winner
-      // (score DESC, pair ASC), one boundary-safe literal replace —
-      // the learned merge table with its score evidence.
-      "wordpiece_train" -> {
-        val out = (1 to WordpieceOracle.rounds).map { r =>
-          s"""SELECT $r AS round, l AS merge_left, r AS merge_right,
-             |  l || r AS merged, np AS n_pair, nl AS n_left, nr AS n_right,
-             |  score FROM wpb$r""".stripMargin
-        }.mkString("\nUNION ALL\n")
-        WordpieceOracle.trainCtes(toksSql) + "\n" + out
-      },
-
-      // Training CTEs + the role-keyed vocab, longest-match table and
-      // unrolled greedy walk — per-doc token and piece counts.
-      "wordpiece_encode" ->
-        (WordpieceOracle.trainCtes(toksSql) + ",\n" +
-          WordpieceOracle.applyCtes(toksSql) +
-          s"""
-             |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens,
-             |  CAST(SUM(n_pieces) AS BIGINT) AS n_symbols
-             |FROM wptok JOIN wpgf USING (word) GROUP BY 1""".stripMargin),
-
-      // Unigram-LM training replayed as the UnigramOracle CTE chain:
-      // substring seed, two hard-EM rounds of unrolled Viterbi +
-      // prune/re-estimate — the final (piece, n_used, log_prob) model.
-      "unigram_train" ->
-        (UnigramOracle.trainCtes(toksSql) +
-          s"\nSELECT piece, n_used, log_prob FROM u${UnigramOracle.emRounds}v"),
-
-      // Training CTEs + one more Viterbi pass under the FINAL vocab,
-      // joined back to the per-doc token relation — per-doc token and
-      // piece counts.
-      "unigram_encode" ->
-        (UnigramOracle.trainCtes(toksSql) + ",\n" +
-          UnigramOracle.applyCtes(toksSql, "tokrel", "pc") +
-          s"""
-             |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens,
-             |  CAST(SUM(n_pieces) AS BIGINT) AS n_symbols
-             |FROM tokrel JOIN pc USING (word) GROUP BY 1""".stripMargin),
-
-      "bpe_pair_counts" ->
-        s"""WITH tk AS (
-           |  SELECT UNNEST(t) AS tok FROM (SELECT $toksSql AS t FROM documents)),
-           |wf AS (SELECT tok, COUNT(*) AS wf FROM tk GROUP BY 1),
-           |cs AS (SELECT wf, regexp_extract_all(tok, '.') AS cs FROM wf),
-           |p AS (
-           |  SELECT wf, UNNEST(list_transform(range(1, len(cs)), i -> cs[i] || cs[i + 1])) AS pair
-           |  FROM cs WHERE len(cs) >= 2)
-           |SELECT pair, CAST(SUM(wf) AS BIGINT) AS n_occurrences
-           |FROM p GROUP BY 1
-           |ORDER BY n_occurrences DESC, pair
-           |LIMIT 20""".stripMargin,
-
-      "text_normalize" ->
-        """SELECT doc_id, nfc_normalize(text) AS text_nfc,
-          |  nfc_normalize(text) <> text AS changed
-          |FROM documents""".stripMargin,
-
-      "text_redact" ->
-        """SELECT doc_id,
-          |  len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS n_emails,
-          |  len(regexp_extract_all(masked, '[0-9]{6,}')) AS n_long_numbers,
-          |  regexp_replace(masked, '[0-9]{6,}', '<NUM>', 'g') AS text_redacted
-          |FROM (
-          |  SELECT doc_id, text,
-          |    regexp_replace(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g') AS masked
-          |  FROM documents)""".stripMargin)
-  }
-
-  /** The df-capped exact-Jaccard pair query, shared by the pairs row
-    * and the clusters row (whose edge set it is).
-    */
-  private def jaccardPairsOracleSql(toksSql: String, shinglesSql: String,
-                                    threshold: Double = 0.5,
-                                    src: String = "documents"): String =
-    s"""WITH docs AS (
-       |  SELECT doc_id, $shinglesSql AS shs
-       |  FROM (SELECT doc_id, $toksSql AS t FROM $src)),
-       |sh AS (SELECT doc_id, UNNEST(shs) AS sh FROM docs),
-       |dfc AS (SELECT sh, COUNT(*) AS df FROM sh GROUP BY sh HAVING COUNT(*) <= 1000),
-       |kept AS (SELECT s.doc_id, s.sh, d.df FROM sh s JOIN dfc d USING (sh)),
-       |sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM kept GROUP BY doc_id),
-       |pairs AS (
-       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-       |  FROM kept a JOIN kept b ON a.sh = b.sh AND a.doc_id < b.doc_id
-       |  WHERE a.df >= 2
-       |  GROUP BY 1, 2)
-       |SELECT p.doc_a, p.doc_b, sa.n_sh AS n_sh_a, sb.n_sh AS n_sh_b, p.n_common,
-       |  p.n_common / (sa.n_sh + sb.n_sh - p.n_common) AS jaccard
-       |FROM pairs p
-       |JOIN sizes sa ON sa.doc_id = p.doc_a
-       |JOIN sizes sb ON sb.doc_id = p.doc_b
-       |WHERE p.n_common / (sa.n_sh + sb.n_sh - p.n_common) >= $threshold""".stripMargin
-
-  /** DuckDB twins of the serving queries. */
-  /** Capped distinct (user, item) interactions — the shared input of
-    * both recsys oracles (mirrors Recsys.interactions exactly).
-    */
-  private def recsysInteractionsSql: String =
-    """SELECT user_id, item_id FROM (
-      |  SELECT user_id, item_id,
-      |    ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY item_id) AS rn
-      |  FROM (
-      |    SELECT DISTINCT o_custkey AS user_id, l_partkey AS item_id
-      |    FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-      |    WHERE o_custkey IS NOT NULL AND l_partkey IS NOT NULL))
-      |WHERE rn <= 1000""".stripMargin
-
-  /** The full recommend-top-N replay — shared by the recsys_recommend
-    * oracle and the coverage panels built over its output (the
-    * Spark side's item PRE-prune is exact — n_both <= min(n_a, n_b)
-    * — so the oracle states only the pair-level support floor).
-    */
-  private def recsysRecommendOracleSql: String = recsysRecommendOracleSql(2)
-
-  /** The recommend chain's CTE body over a NAMED source interaction
-    * relation — shared by the recommend/coverage oracles (src =
-    * capped) and the ranking-eval oracle (src = the LOO train split).
-    */
-  private def recsysRecommendCtes(minSupport: Int, src: String): String =
-    s"""marg AS MATERIALIZED (SELECT item_id, COUNT(*) AS n FROM $src GROUP BY 1),
-      |pairs AS (
-      |  SELECT a.item_id AS ia, b.item_id AS ib, COUNT(*) AS n_both
-      |  FROM $src a JOIN $src b
-      |    ON a.user_id = b.user_id AND a.item_id < b.item_id
-      |  GROUP BY 1, 2 HAVING COUNT(*) >= $minSupport),
-      |-- MATERIALIZED is load-bearing on the replica sweeps: scored is
-      |-- referenced twice by sym, and without it DuckDB re-evaluates
-      |-- the row-scale pair self-join per reference — the re-runs'
-      |-- spill compounded past the host's free disk at 10x
-      |scored AS MATERIALIZED (
-      |  SELECT ia, ib,
-      |    FLOOR(CAST(n_both AS DOUBLE)
-      |      / sqrt(CAST(ma.n AS DOUBLE) * CAST(mb.n AS DOUBLE)) * 1e6) / 1e6 AS cosine
-      |  FROM pairs
-      |  JOIN marg ma ON ia = ma.item_id
-      |  JOIN marg mb ON ib = mb.item_id),
-      |sym AS (
-      |  SELECT ia AS item_id, ib AS neighbor_id, cosine FROM scored
-      |  UNION ALL
-      |  SELECT ib, ia, cosine FROM scored),
-      |nbr AS MATERIALIZED (
-      |  SELECT item_id, neighbor_id, cosine FROM sym
-      |  QUALIFY ROW_NUMBER() OVER (PARTITION BY item_id
-      |    ORDER BY cosine DESC, neighbor_id) <= 10),
-      |cand AS (
-      |  SELECT i.user_id, n.neighbor_id AS rec_item,
-      |    CAST(SUM(CAST(n.cosine AS DECIMAL(28,6))) AS DOUBLE) AS score,
-      |    COUNT(*) AS n_links
-      |  FROM $src i JOIN nbr n ON i.item_id = n.item_id
-      |  GROUP BY 1, 2),
-      |unseen AS (
-      |  SELECT c.* FROM cand c
-      |  LEFT JOIN $src s ON c.user_id = s.user_id AND c.rec_item = s.item_id
-      |  WHERE s.item_id IS NULL)""".stripMargin
-
-  private def recsysRecommendOracleSql(minSupport: Int): String =
-    s"""WITH capped AS MATERIALIZED ($recsysInteractionsSql),
-      |${recsysRecommendCtes(minSupport, "capped")}
-      |SELECT user_id,
-      |  CAST(ROW_NUMBER() OVER (PARTITION BY user_id
-      |    ORDER BY score DESC, rec_item) AS INTEGER) AS rank,
-      |  rec_item, n_links, score
-      |FROM unseen
-      |QUALIFY rank <= 5""".stripMargin
-
-  /** Ranking-eval oracle: deterministic LOO holdout (max md5 per
-    * user with ≥ 2 interactions), the SAME recommend chain over the
-    * train split, pre-gridded per-rank gain literals (identical to
-    * the Spark arrays) summed as DECIMAL(28,6).
-    */
-  private def recsysEvalRankingOracleSql(minSupport: Int, n: Int): String = {
-    def gridConst(x: Double): Double = math.floor(x * 1e6) / 1e6
-    def ladder(gain: Int => Double): String =
-      (1 to n).map(r =>
-        s"WHEN ${r} THEN CAST(${gain(r)} AS DECIMAL(28,6))").mkString(" ")
-    val mrrCase =
-      s"CASE rank ${ladder(r => gridConst(1.0 / r))} ELSE CAST(0 AS DECIMAL(28,6)) END"
-    val ndcgCase =
-      s"CASE rank ${ladder(r => gridConst(math.log(2.0) / math.log(r + 1.0)))} ELSE CAST(0 AS DECIMAL(28,6)) END"
-    s"""WITH cap0 AS MATERIALIZED ($recsysInteractionsSql),
-      |hsh AS (
-      |  SELECT user_id, item_id,
-      |    CAST(concat('0x', substr(md5(concat_ws('|',
-      |      COALESCE(CAST(user_id AS VARCHAR), '<NULL>'),
-      |      COALESCE(CAST(item_id AS VARCHAR), '<NULL>'))), 1, 15)) AS BIGINT) AS hh,
-      |    COUNT(*) OVER (PARTITION BY user_id) AS c
-      |  FROM cap0),
-      |held AS (
-      |  SELECT user_id, item_id AS test_item FROM (
-      |    SELECT user_id, item_id,
-      |      ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY hh DESC, item_id) AS rn
-      |    FROM hsh WHERE c >= 2)
-      |  WHERE rn = 1),
-      |train AS (
-      |  SELECT c0.user_id, c0.item_id FROM cap0 c0
-      |  ANTI JOIN held ON c0.user_id = held.user_id AND c0.item_id = held.test_item),
-      |${recsysRecommendCtes(minSupport, "train")},
-      |recs AS (
-      |  SELECT user_id, rec_item,
-      |    CAST(ROW_NUMBER() OVER (PARTITION BY user_id
-      |      ORDER BY score DESC, rec_item) AS INTEGER) AS rank
-      |  FROM unseen
-      |  QUALIFY rank <= $n),
-      |j AS (
-      |  SELECT held.user_id, r.rank
-      |  FROM held LEFT JOIN recs r
-      |    ON r.user_id = held.user_id AND r.rec_item = held.test_item)
-      |SELECT CAST(COUNT(*) AS BIGINT) AS n_users_evaluated,
-      |  CAST(COUNT(rank) AS BIGINT) AS n_hits,
-      |  CASE WHEN COUNT(*) > 0 THEN
-      |    FLOOR(CAST(COUNT(rank) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) * 1e6) / 1e6
-      |  END AS hit_rate,
-      |  CASE WHEN COUNT(*) > 0 THEN
-      |    FLOOR(CAST(SUM($mrrCase) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) * 1e6) / 1e6
-      |  END AS mrr,
-      |  CASE WHEN COUNT(*) > 0 THEN
-      |    FLOOR(CAST(SUM($ndcgCase) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) * 1e6) / 1e6
-      |  END AS ndcg
-      |FROM j""".stripMargin
-  }
-
-  /** Profiling.hllOverlapReplayable mirrored: md5Long60 → top-lgK-bit
-    * buckets, the leading-zero rank as the same descending exact
-    * threshold CASE chain, register-max panels, the exact-integer raw
-    * estimate (HUGEINT `//` ≡ Spark DECIMAL `div`), the gridded-ln
-    * linear-counting branch, and the integer-ppm Jaccard.
-    */
-  private def hllOverlapOracleSql(lgK: Int): String = {
-    val m = 1 << lgK
-    val w = 60 - lgK
-    val two = BigInt(2)
-    val alphaDen = BigInt(10000) * (1000L * m + 1079)
-    val rawNum = BigInt(7213000) * m * m * m * two.pow(w + 1)
-    val rankCase = (1 to w).map(r =>
-      s"WHEN rem >= ${two.pow(w - r)} THEN $r").mkString(" ")
-    def panel(src: String, suffix: String): String =
-      s"""p$suffix AS (
-         |  SELECT CAST($m - COUNT(*) AS BIGINT) AS v_$suffix,
-         |    CAST(COALESCE(SUM(CAST(1 AS BIGINT) << (${w + 1} - M)), 0)
-         |      + ($m - COUNT(*)) * ${two.pow(w + 1)} AS BIGINT) AS s_$suffix
-         |  FROM (SELECT bucket, MAX(rank) AS M FROM br WHERE $src GROUP BY 1))""".stripMargin
-    def est(suffix: String): String =
-      s"""CASE WHEN CAST(CAST('$rawNum' AS HUGEINT)
-         |      // (CAST(s_$suffix AS HUGEINT) * $alphaDen) AS BIGINT) <= ${5L * m / 2}
-         |    AND v_$suffix > 0
-         |  THEN CAST(FLOOR(CAST($m AS DOUBLE)
-         |    * LN(CAST($m AS DOUBLE) / CAST(v_$suffix AS DOUBLE)) * 1e6) / 1e6
-         |    AS DECIMAL(28,6))
-         |  ELSE CAST(CAST(CAST('$rawNum' AS HUGEINT)
-         |    // (CAST(s_$suffix AS HUGEINT) * $alphaDen) AS BIGINT) AS DECIMAL(28,6))
-         |END""".stripMargin
-    s"""WITH keyed AS (
-       |  SELECT h, MAX(a) AS in_a, MAX(b) AS in_b FROM (
-       |    SELECT CAST(concat('0x', substr(md5(CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h,
-       |      CASE WHEN CAST(ts AS DATE) <= DATE '2024-01-15' THEN 1 ELSE 0 END AS a,
-       |      CASE WHEN CAST(ts AS DATE) > DATE '2024-01-15' THEN 1 ELSE 0 END AS b
-       |    FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL)
-       |  GROUP BY 1 HAVING MAX(a) = 1 OR MAX(b) = 1),
-       |br AS (
-       |  SELECT h // ${two.pow(w)} AS bucket,
-       |    in_a, in_b,
-       |    CASE $rankCase ELSE ${w + 1} END AS rank
-       |  FROM (SELECT h, h % ${two.pow(w)} AS rem, in_a, in_b FROM keyed)),
-       |${panel("in_a = 1", "a")},
-       |${panel("in_b = 1", "b")},
-       |${panel("TRUE", "u")},
-       |e AS (
-       |  SELECT ${est("a")} AS est_a, ${est("b")} AS est_b,
-       |    ${est("u")} AS est_union
-       |  FROM pa CROSS JOIN pb CROSS JOIN pu),
-       |e2 AS (
-       |  SELECT est_a, est_b, est_union,
-       |    GREATEST(CAST(0 AS DECIMAL(28,6)),
-       |      CAST(est_a + est_b - est_union AS DECIMAL(28,6))) AS est_intersect
-       |  FROM e)
-       |SELECT est_a, est_b, est_union, est_intersect,
-       |  CASE WHEN est_union > 0 THEN
-       |    CAST((CAST(est_intersect * 1000000 AS HUGEINT) * 1000000)
-       |      // CAST(est_union * 1000000 AS HUGEINT) AS BIGINT) END AS jaccard_ppm
-       |FROM e2""".stripMargin
-  }
-
-  /** Coverage/exposure panel over the recommend replay at the given
-    * support floor — shared by recsys_coverage (serving floor 8) and
-    * its deeper-pruned sibling (16).
-    */
-  private def recsysCoverageOracleSql(minSupport: Int): String =
-    s"""WITH recs AS (
-      |${recsysRecommendOracleSql(minSupport)}
-      |),
-      |cat AS (
-      |  SELECT CAST(COUNT(DISTINCT l_partkey) AS BIGINT) AS n_items_catalog,
-      |    CAST(COUNT(DISTINCT o_custkey) AS BIGINT) AS n_users_total
-      |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-      |  WHERE o_custkey IS NOT NULL AND l_partkey IS NOT NULL),
-      |srv AS (SELECT CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users_served FROM recs),
-      |expo AS (SELECT rec_item, CAST(COUNT(*) AS BIGINT) AS x FROM recs GROUP BY 1),
-      |rk AS (
-      |  SELECT x, CAST(ROW_NUMBER() OVER (ORDER BY x, rec_item) AS BIGINT) AS i
-      |  FROM expo),
-      |g AS (
-      |  SELECT CAST(COUNT(*) AS BIGINT) AS n_items_recommended,
-      |    CAST(SUM(x) AS BIGINT) AS tot,
-      |    SUM(CAST(i AS DECIMAL(19,0)) * CAST(x AS DECIMAL(19,0))) AS wsum
-      |  FROM rk)
-      |SELECT n_users_total, n_users_served, n_items_catalog, n_items_recommended,
-      |  CAST(n_items_recommended AS DOUBLE) / CAST(n_items_catalog AS DOUBLE)
-      |    AS catalog_coverage,
-      |  CASE WHEN tot > 0 THEN
-      |    (2.0 * CAST(wsum AS DOUBLE)
-      |      - CAST(n_items_recommended + 1 AS DOUBLE) * CAST(tot AS DOUBLE))
-      |    / (CAST(n_items_recommended AS DOUBLE) * CAST(tot AS DOUBLE))
-      |  END AS exposure_gini
-      |FROM cat CROSS JOIN srv CROSS JOIN g""".stripMargin
-
-  private def servingValidSql: String =
-    s"SELECT * EXCLUDE (reason_code) FROM (${qualityAnnotatedSql()}) WHERE reason_code IS NULL"
-
-  private def servingPredSql(includeDays: Boolean): String =
-    "date_sk >= 20240105 AND date_sk <= 20240128" +
-      (if (includeDays) " AND tipo_dia IN ('LABORAL','SABADO')" else "") +
-      " AND event_type_norm IN ('CLICK','VIEW','PURCHASE')" +
-      " AND CAST(FLOOR(time_30m_sk / 2) AS INTEGER) >= 6" +
-      " AND CAST(FLOOR(time_30m_sk / 2) AS INTEGER) <= 22"
-
-  private def sumDSql(c: String, name: String): String =
-    s"CAST(COALESCE(ROUND(SUM(CAST($c AS DECIMAL(18,2))), 2), 0) AS DOUBLE) AS $name"
-
-  private def servingOracleSql: Map[String, String] = {
-    val validSql = servingValidSql
-    def pred(includeDays: Boolean): String = servingPredSql(includeDays)
-    def sumD(c: String, name: String): String = sumDSql(c, name)
-    Map(
-      "svc_overview" ->
-        s"""SELECT
-           |  (SELECT COUNT(*) FROM ($validSql) WHERE ${pred(true)}) AS events_observados,
-           |  (SELECT ${sumD("value", "x")} FROM ($validSql) WHERE ${pred(true)}) AS events_estimados,
-           |  (SELECT COUNT(*) FROM orders) AS orders_observados,
-           |  (SELECT ${sumD("o_totalprice", "x")} FROM orders) AS orders_estimados,
-           |  (SELECT ${sumD("l_quantity", "x")} FROM lineitem) AS lineitem_qty_total""".stripMargin,
-
-      "svc_demand_by_day_type" ->
-        s"""SELECT tipo_dia, COUNT(*) AS etapas_observadas,
-           |  ${sumD("value", "etapas_estimadas")}
-           |FROM ($validSql) WHERE ${pred(false)}
-           |GROUP BY tipo_dia""".stripMargin,
-
-      "svc_demand_by_mode" ->
-        s"""SELECT event_type_norm AS mode_code, COUNT(*) AS etapas_observadas,
-           |  ${sumD("value", "etapas_estimadas")}
-           |FROM ($validSql) WHERE ${pred(true)}
-           |GROUP BY event_type_norm""".stripMargin,
-
-      "svc_top_boardings" ->
-        s"""SELECT user_id AS stop_code, event_type_norm AS mode_code,
-           |  ${sumD("value", "subidas_promedio_total")}
-           |FROM ($validSql) WHERE ${pred(true)}
-           |GROUP BY user_id, event_type_norm
-           |ORDER BY subidas_promedio_total DESC, stop_code, mode_code
-           |LIMIT 20""".stripMargin,
-
-      "svc_map_points" -> mapPointsSql,
-
-      // Cell ids are floor of one IEEE division (engine-identical);
-      // the weight sum follows the roundedSum money convention.
-      "svc_grid_density" ->
-        s"""WITH mp AS (${mapPointsSql.replace("\n", "\n  ")}),
-           |p AS (SELECT 200000.0 + x_utm * 750.0 AS xm,
-           |             6200000.0 + y_utm * 1500.0 AS ym, etapas_estimadas
-           |      FROM mp)
-           |SELECT CAST(FLOOR(xm / 500.0) AS BIGINT) AS cell_x,
-           |  CAST(FLOOR(ym / 500.0) AS BIGINT) AS cell_y,
-           |  CAST(COUNT(*) AS BIGINT) AS n_points,
-           |  CAST(COALESCE(ROUND(SUM(CAST(etapas_estimadas AS DECIMAL(18,2))), 2), 0) AS DOUBLE) AS weight_sum,
-           |  CAST(FLOOR(xm / 500.0) AS BIGINT) * 500.0 AS cell_x_min,
-           |  CAST(FLOOR(ym / 500.0) AS BIGINT) * 500.0 AS cell_y_min
-           |FROM p GROUP BY 1, 2""".stripMargin,
-
-      // Hotspot regions = min-label fixpoint over the 8-neighbor
-      // adjacency of dense (>= 2 points) grid cells, replayed as the
-      // repo's recursive transitive-closure CTE (the dedup_clusters
-      // convention); packed cell id mirrors Serving.hotspotClusters.
-      "svc_hotspot_clusters" ->
-        s"""WITH RECURSIVE mp AS (${mapPointsSql.replace("\n", "\n  ")}),
-           |p AS (SELECT 200000.0 + x_utm * 750.0 AS xm,
-           |             6200000.0 + y_utm * 1500.0 AS ym, etapas_estimadas
-           |      FROM mp),
-           |g AS (
-           |  SELECT CAST(FLOOR(xm / 500.0) AS BIGINT) AS cell_x,
-           |    CAST(FLOOR(ym / 500.0) AS BIGINT) AS cell_y,
-           |    CAST(COUNT(*) AS BIGINT) AS n_points,
-           |    CAST(COALESCE(ROUND(SUM(CAST(etapas_estimadas AS DECIMAL(18,2))), 2), 0) AS DOUBLE) AS weight_sum
-           |  FROM p GROUP BY 1, 2),
-           |d AS (
-           |  SELECT *, (cell_x + 1000000) * 2000000 + (cell_y + 1000000) AS id
-           |  FROM g WHERE n_points >= 2),
-           |e0 AS (
-           |  SELECT a.id AS src, b.id AS dst FROM d a JOIN d b
-           |  ON abs(a.cell_x - b.cell_x) <= 1 AND abs(a.cell_y - b.cell_y) <= 1
-           |    AND a.id < b.id),
-           |edges AS (SELECT src, dst FROM e0 UNION SELECT dst, src FROM e0),
-           |walk(id, label) AS (
-           |  SELECT src, src FROM edges
-           |  UNION
-           |  SELECT e.src, w.label FROM edges e JOIN walk w ON w.id = e.dst),
-           |lab AS (SELECT id, MIN(label) AS cluster_id FROM walk GROUP BY id)
-           |SELECT COALESCE(lab.cluster_id, d.id) AS cluster_id,
-           |  CAST(COUNT(*) AS BIGINT) AS n_cells,
-           |  CAST(SUM(n_points) AS BIGINT) AS n_points,
-           |  CAST(SUM(CAST(weight_sum AS DECIMAL(18,2))) AS DOUBLE) AS weight_sum,
-           |  MIN(cell_x) AS cell_x_min, MAX(cell_x) AS cell_x_max,
-           |  MIN(cell_y) AS cell_y_min, MAX(cell_y) AS cell_y_max
-           |FROM d LEFT JOIN lab ON lab.id = d.id
-           |GROUP BY 1""".stripMargin,
-
-      "svc_utm_to_wgs84" -> utmToWgs84Sql,
-
-      // Nearest-stop spatial join: floor-division cell ids, 3x3 probe,
-      // (dist^2, site id) argmin, 1e-6-grid sqrt at the edge.
-      "geo_nearest_stop" ->
-        s"""WITH valid AS ($servingValidSql),
-           |coords AS (
-           |  SELECT stop_code, x_utm, y_utm FROM (
-           |    SELECT stop_code, x_utm, y_utm, COUNT(*) AS cnt,
-           |      ROW_NUMBER() OVER (PARTITION BY stop_code ORDER BY COUNT(*) DESC, x_utm, y_utm) AS rn
-           |    FROM (
-           |      SELECT user_id AS stop_code, value AS x_utm, CAST(prop_k AS DOUBLE) AS y_utm
-           |      FROM valid WHERE event_type_norm IN ('CLICK','VIEW')
-           |      UNION ALL
-           |      SELECT user_id, value, CAST(prop_k AS DOUBLE)
-           |      FROM valid WHERE event_type_norm NOT IN ('CLICK','VIEW')
-           |    ) c
-           |    WHERE x_utm BETWEEN 10 AND 400 AND y_utm BETWEEN 5 AND 95
-           |    GROUP BY stop_code, x_utm, y_utm) t
-           |  WHERE rn = 1),
-           |sites AS (
-           |  SELECT stop_code AS site_id, x_utm AS sx, y_utm AS sy,
-           |    FLOOR(x_utm / 5.0) AS cx, FLOOR(y_utm / 5.0) AS cy
-           |  FROM coords),
-           |pts AS (
-           |  SELECT event_id AS point_id, value AS px, CAST(prop_k AS DOUBLE) AS py
-           |  FROM valid
-           |  WHERE value BETWEEN 10 AND 400
-           |    AND CAST(prop_k AS DOUBLE) BETWEEN 5 AND 95),
-           |probes AS (
-           |  SELECT point_id, px, py,
-           |    FLOOR(px / 5.0) + ox.o AS cx, FLOOR(py / 5.0) + oy.o AS cy
-           |  FROM pts,
-           |    (SELECT UNNEST([-1, 0, 1]) AS o) ox,
-           |    (SELECT UNNEST([-1, 0, 1]) AS o) oy),
-           |cands AS (
-           |  SELECT p.point_id, p.px, p.py, s.site_id,
-           |    (p.px - s.sx) * (p.px - s.sx) + (p.py - s.sy) * (p.py - s.sy) AS d2
-           |  FROM probes p JOIN sites s ON p.cx = s.cx AND p.cy = s.cy
-           |  WHERE (p.px - s.sx) * (p.px - s.sx) + (p.py - s.sy) * (p.py - s.sy) <= 25.0),
-           |best AS (
-           |  SELECT point_id, site_id, FLOOR(sqrt(d2) * 1e6) / 1e6 AS dist
-           |  FROM cands
-           |  QUALIFY ROW_NUMBER() OVER (PARTITION BY point_id ORDER BY d2, site_id) = 1)
-           |SELECT p.point_id, p.px, p.py, b.site_id, b.dist
-           |FROM pts p LEFT JOIN best b ON p.point_id = b.point_id""".stripMargin)
-  }
-
-  private def mapPointsSql: String =
-    s"""WITH valid AS ($servingValidSql),
-       |coords AS (
-       |  SELECT stop_code, x_utm, y_utm FROM (
-       |    SELECT stop_code, x_utm, y_utm, COUNT(*) AS cnt,
-       |      ROW_NUMBER() OVER (PARTITION BY stop_code ORDER BY COUNT(*) DESC, x_utm, y_utm) AS rn
-       |    FROM (
-       |      SELECT user_id AS stop_code, value AS x_utm, CAST(prop_k AS DOUBLE) AS y_utm
-       |      FROM valid WHERE event_type_norm IN ('CLICK','VIEW')
-       |      UNION ALL
-       |      SELECT user_id, value, CAST(prop_k AS DOUBLE)
-       |      FROM valid WHERE event_type_norm NOT IN ('CLICK','VIEW')
-       |    ) c
-       |    WHERE x_utm BETWEEN 10 AND 400 AND y_utm BETWEEN 5 AND 95
-       |    GROUP BY stop_code, x_utm, y_utm) t
-       |  WHERE rn = 1),
-       |boardings AS (
-       |  SELECT date_sk AS service_date,
-       |    CAST(FLOOR(time_30m_sk / 2) AS INTEGER) AS hour_of_day,
-       |    tipo_dia, event_type_norm AS mode_code, user_id AS stop_code,
-       |    MIN(prop_k) AS comuna,
-       |    ${sumDSql("value", "etapas_estimadas")},
-       |    COUNT(*) AS etapas_observadas
-       |  FROM valid WHERE ${servingPredSql(true)}
-       |  GROUP BY 1, 2, 3, 4, 5)
-       |SELECT b.service_date, b.hour_of_day, b.tipo_dia, b.mode_code,
-       |  b.stop_code, b.comuna, c.x_utm, c.y_utm,
-       |  b.etapas_estimadas, b.etapas_observadas
-       |FROM boardings b JOIN coords c ON c.stop_code = b.stop_code
-       |ORDER BY b.etapas_estimadas DESC, b.stop_code, b.service_date,
-       |  b.hour_of_day, b.mode_code
-       |LIMIT 400""".stripMargin
-
-  /** DuckDB twin of the Snyder inverse transverse Mercator columns
-    * (graft.functions.Geo.utmToLat/utmToLon): the SAME expression tree
-    * op for op — every +,-,*,/ in the same association order, every
-    * Scala-precomputed coefficient injected as its shortest-round-trip
-    * literal, and degrees() written as (rad * 180.0) / pi to replay
-    * java.lang.Math.toDegrees exactly. The only cross-engine risk is a
-    * last-ulp libm difference in sin/cos/tan/pow, masked by the 1e-6
-    * serving rounding (verified hash-green at sf 0.001/0.01/0.1).
-    */
-  private def utmToWgs84Sql: String = {
-    val k = Geo.sqlConstants()
-    s"""WITH pts AS (${mapPointsSql.replace("\n", "\n  ")}),
-       |m AS (SELECT *, 200000.0 + x_utm * 750.0 AS xm, 6200000.0 + y_utm * 1500.0 AS ym FROM pts),
-       |s1 AS (SELECT *, ((ym - ${k("south_fn")}) / ${k("k0")}) / ${k("mu_denom")} AS mu FROM m),
-       |s2 AS (SELECT *, mu + ${k("c2")} * sin(mu * 2) + ${k("c4")} * sin(mu * 4)
-       |  + ${k("c6")} * sin(mu * 6) + ${k("c8")} * sin(mu * 8) AS p1 FROM s1),
-       |s3 AS (SELECT *, sin(p1) AS sinp, cos(p1) AS cosp, tan(p1) AS tanp FROM s2),
-       |s4 AS (SELECT *, ${k("ep2")} * cosp * cosp AS cc1, tanp * tanp AS tt1,
-       |  1.0 - ${k("e2")} * sinp * sinp AS om FROM s3),
-       |s5 AS (SELECT *, ${k("a")} / sqrt(om) AS n1, ${k("a_1me2")} / pow(om, 1.5) AS r1 FROM s4),
-       |s6 AS (SELECT *, (xm - ${k("false_easting")}) / (n1 * ${k("k0")}) AS dd FROM s5),
-       |s7 AS (SELECT *, dd * dd AS dd2 FROM s6),
-       |s8 AS (SELECT *,
-       |  p1 - (n1 * tanp / r1) * (dd2 / 2
-       |    - (5.0 + 3.0 * tt1 + 10.0 * cc1 - 4.0 * cc1 * cc1 - ${k("ep2_9")}) * (dd2 * dd2) / 24
-       |    + (61.0 + 90.0 * tt1 + 298.0 * cc1 + 45.0 * tt1 * tt1 - ${k("ep2_252")} - 3.0 * cc1 * cc1) * (dd2 * dd2 * dd2) / 720) AS latrad,
-       |  ${k("lon0")} + (dd
-       |    - (1.0 + 2.0 * tt1 + cc1) * (dd2 * dd) / 6
-       |    + (5.0 - 2.0 * cc1 + 28.0 * tt1 - 3.0 * cc1 * cc1 + ${k("ep2_8")} + 24.0 * tt1 * tt1) * (dd2 * dd * dd2) / 120) / cosp AS lonrad
-       |  FROM s7)
-       |SELECT service_date, hour_of_day, tipo_dia, mode_code, stop_code, comuna,
-       |  x_utm, y_utm, etapas_estimadas, etapas_observadas,
-       |  ROUND(latrad * 180.0 / ${k("pi")}, 6) AS lat,
-       |  ROUND(lonrad * 180.0 / ${k("pi")}, 6) AS lon
-       |FROM s8""".stripMargin
-  }
-
-  /** DuckDB twin of [[scd2User]]: same window algebra as
-    * Scd2.fromHistory (per-day latest-wins, change points via LAG,
-    * validity ranges via LEAD, sha256 row hash).
-    */
-  /** The change-point SCD2 builder over any (user_id, obs_date,
-    * event_type) observation relation — shared by the snapshot oracle's
-    * present/absent chains (mirrors Scd2.fromHistory step 2-3).
-    */
-  private def scd2BuildSql(obsRel: String): String =
-    s"""SELECT user_id, event_type,
-       |  obs_date AS valid_from,
-       |  LEAD(obs_date) OVER (PARTITION BY user_id ORDER BY obs_date) - 1 AS valid_to,
-       |  LEAD(obs_date) OVER (PARTITION BY user_id ORDER BY obs_date) IS NULL AS is_current,
-       |  sha256(k) AS row_hash
-       |FROM (
-       |  SELECT user_id, obs_date, event_type, k FROM (
-       |    SELECT *, LAG(k) OVER (PARTITION BY user_id ORDER BY obs_date) AS prev FROM (
-       |      SELECT user_id, obs_date, event_type,
-       |        UPPER(TRIM(COALESCE(CAST(event_type AS VARCHAR), ''))) AS k
-       |      FROM ($obsRel)))
-       |  WHERE prev IS NULL OR prev <> k)""".stripMargin
-
-  /** The snapshot-diff SCD2 oracle: present keys rebuild over
-    * pre-cutoff daily observations plus the snapshot observation;
-    * absent keys rebuild over pre-cutoff only and expire at asOf−1.
-    */
-  private def scd2SnapshotSql: String = {
-    val preObs =
-      """SELECT user_id, obs_date, event_type FROM (
-        |  SELECT user_id, CAST(ts AS DATE) AS obs_date, event_type,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id, CAST(ts AS DATE)
-        |                       ORDER BY ts DESC, event_id DESC) AS rn
-        |  FROM events WHERE ts < TIMESTAMP '2024-01-16 00:00:00') WHERE rn = 1""".stripMargin
-    val snapObs =
-      """SELECT user_id, event_type FROM (
-        |  SELECT user_id, event_type,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id
-        |                       ORDER BY ts DESC, event_id DESC) AS rn
-        |  FROM events WHERE ts >= TIMESTAMP '2024-01-16 00:00:00') WHERE rn = 1""".stripMargin
-    val presentObs =
-      s"""SELECT p.user_id, p.obs_date, p.event_type
-         |FROM ($preObs) p WHERE EXISTS (
-         |  SELECT 1 FROM ($snapObs) s WHERE s.user_id = p.user_id)
-         |UNION ALL
-         |SELECT user_id, DATE '2024-01-16' AS obs_date, event_type
-         |FROM ($snapObs)""".stripMargin
-    val absentObs =
-      s"""SELECT p.user_id, p.obs_date, p.event_type
-         |FROM ($preObs) p WHERE NOT EXISTS (
-         |  SELECT 1 FROM ($snapObs) s WHERE s.user_id = p.user_id)""".stripMargin
-    s"""SELECT * FROM (${scd2BuildSql(presentObs)})
-       |UNION ALL
-       |SELECT user_id, event_type, valid_from,
-       |  CASE WHEN is_current THEN DATE '2024-01-15' ELSE valid_to END AS valid_to,
-       |  FALSE AS is_current, row_hash
-       |FROM (${scd2BuildSql(absentObs)})""".stripMargin
-  }
-
-  private def scd2UserSql: String =
-    """SELECT user_id, event_type,
-      |  obs_date AS valid_from,
-      |  LEAD(obs_date) OVER (PARTITION BY user_id ORDER BY obs_date) - 1 AS valid_to,
-      |  LEAD(obs_date) OVER (PARTITION BY user_id ORDER BY obs_date) IS NULL AS is_current,
-      |  sha256(k) AS row_hash
-      |FROM (
-      |  SELECT user_id, obs_date, event_type, k FROM (
-      |    SELECT *, LAG(k) OVER (PARTITION BY user_id ORDER BY obs_date) AS prev FROM (
-      |      SELECT user_id, obs_date, event_type,
-      |        UPPER(TRIM(COALESCE(CAST(event_type AS VARCHAR), ''))) AS k
-      |      FROM (
-      |        SELECT user_id, CAST(ts AS DATE) AS obs_date, event_type,
-      |          ROW_NUMBER() OVER (PARTITION BY user_id, CAST(ts AS DATE)
-      |                             ORDER BY ts DESC, event_id DESC) AS rn
-      |        FROM events) WHERE rn = 1))
-      |  WHERE prev IS NULL OR prev <> k)""".stripMargin
-
-  /** DuckDB twin of [[cleanseEvents]]; `where` lets callers append a predicate. */
-  private def cleanseEventsSql(where: String): String =
-    s"""SELECT event_id, user_id,
-       |  UPPER(TRIM(event_type)) AS event_type_norm,
-       |  CASE WHEN isodow(ts) = 7 THEN 'DOMINGO'
-       |       WHEN isodow(ts) = 6 THEN 'SABADO'
-       |       ELSE 'LABORAL' END AS tipo_dia,
-       |  CAST(strftime(ts, '%Y%m%d') AS INTEGER) AS date_sk,
-       |  CAST(hour(ts)*2 + CASE WHEN minute(ts) >= 30 THEN 1 ELSE 0 END AS INTEGER) AS time_30m_sk,
-       |  value,
-       |  CASE WHEN regexp_matches(json_extract_string(props, '$$.k'), '^-?[0-9]+$$')
-       |       THEN CAST(json_extract_string(props, '$$.k') AS INTEGER) END AS prop_k
-       |FROM events $where""".stripMargin
-
-  /** DuckDB twin of the first-match-wins quality annotation. */
-  private def qualityAnnotatedSql(): String =
-    s"""SELECT *,
-       |  CASE WHEN user_id IS NULL THEN 'MISSING_ID'
-       |       WHEN date_sk IS NULL THEN 'MISSING_TIMESTAMP'
-       |       WHEN value IS NOT NULL AND value < 0 THEN 'NEG_VALUE'
-       |       WHEN value IS NOT NULL AND value > 450.0 THEN 'BAD_RANGE_VALUE'
-       |       WHEN time_30m_sk IS NOT NULL AND (time_30m_sk < 0 OR time_30m_sk > 47) THEN 'BAD_TIME_SLOT'
-       |       ELSE NULL END AS reason_code
-       |FROM (${cleanseEventsSql("")})""".stripMargin
+  /** Every registered query, family by family. */
+  lazy val registry: Seq[Query] = Seq(
+    LakeQueries.records, ServingQueries.records, AnalyticsQueries.records,
+    GraphQueries.records, MlQueries.records, TextQueries.records,
+    EmbeddingQueries.records, StreamingQueries.records, SamplingQueries.records,
+    MediaQueries.records).flatten
+
+  private lazy val byName: Map[String, Query] = Query.index(registry)
+
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    byName.map { case (name, q) => name -> q.build }
+
+  def oracleSql: Map[String, String] =
+    byName.collect { case (name, Query(_, _, Sql(sql))) => name -> sql }
 
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =

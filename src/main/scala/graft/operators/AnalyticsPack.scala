@@ -2684,10 +2684,10 @@ object AnalyticsPack {
     val byDay = byDayPanel(validEvents)
     val other = byDay.select(col("event_type_norm"),
       col("d").as("d2"), col("y").as("y2"))
-    val sPanel = byDay.join(broadcast(other),
-        byDay("event_type_norm") === other("event_type_norm") &&
+    val sPanel = byDay.as("a").join(broadcast(other.as("b")),
+        col("a.event_type_norm") === col("b.event_type_norm") &&
           col("d") < col("d2"))
-      .drop(other("event_type_norm"))
+      .drop(col("b.event_type_norm"))
       .groupBy(col("event_type_norm"))
       .agg(sum(when(col("y2") > col("y"), 1L)
         .when(col("y2") < col("y"), -1L).otherwise(0L)).as("s_stat"))

@@ -2,6 +2,10 @@ package graft
 
 import java.sql.Timestamp
 
+import scala.util.Try
+
+import org.apache.spark.sql.catalyst.expressions.{Attribute, SortOrder}
+import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Scd2, Sessionize}
@@ -22,71 +26,97 @@ class InvariantSpec extends SparkSpec {
     (bk, ts, i.toLong, attr)
   }.toDF("bk", "ts", "event_id", "attr")
 
+  // The join-heavy queries whose plans the first plan test pins.
+  private val heavy = Seq("q5_local_supplier", "gold_fct_star", "gold_asof_join",
+    "gold_merge_grain", "ana_od_matrix", "svc_map_points",
+    "dedup_ngram_jaccard", "dedup_minhash_lsh",
+    "gold_cut_replace", "gold_scd2_incremental", "dedup_embedding_cosine",
+    "ann_lsh_topk", "ann_ivf_topk", "ana_coverage_quartile", "svc_utm_to_wgs84",
+    "attrib_click_purchase", "ana_retention_cohort", "anomaly_zscore",
+    "gold_snapshot_diff", "gold_late_arriving", "fct_accumulating_snapshot",
+    "gold_bridge_alloc", "ana_transition_matrix", "ana_gapfill_30m",
+    "fct_periodic_snapshot", "audit_fk_integrity", "pack_sequences",
+    "audit_table_diff", "dedup_incremental", "dedup_edit_distance",
+    "corpus_shuffle", "sample_token_budget",
+    "graph_triangles", "data_drift_ks", "ann_range_search",
+    "audit_benford_digits", "ana_seasonal_decompose",
+    "dedup_prefix_filter", "join_range_interval", "join_interval_overlap",
+    "table_entropy", "embedding_coreset", "graph_clustering_coeff",
+    "table_mutual_info", "text_pmi_bigrams", "ana_top_paths",
+    "ana_survival_curve", "ana_gini_demand", "ana_theil_sen", "ana_market_basket",
+    "ana_bootstrap_ci",
+    "ml_naive_bayes", "sketch_countmin", "text_feature_hash",
+    "svc_hotspot_clusters",
+    "table_corr_spearman", "table_corr_kendall", "ana_kruskal_wallis",
+    "ana_xcorr_lags", "ana_msprt", "table_chi2_assoc",
+    "privacy_generalize_release",
+    // the r8 bench heavy tier — the queries where a silent
+    // SMJ/cartesian regression would cost the most wall-clock
+    "recsys_item_cosine", "recsys_recommend", "graph_k_core",
+    "graph_link_prediction", "corpus_curation_pipeline",
+    "dedup_recall_eval", "geo_nearest_stop", "dedup_clusters",
+    "bpe_encode", "dedup_corpus_keep", "embedding_pca_project",
+    // the r9 rank-bracket quantile family + graph additions — the
+    // PrefixSum range exchange and the checkpointed panels must
+    // never degrade into SMJ (checkpoints carry no stats)
+    "table_quantiles", "table_outlier_iqr", "anomaly_mad",
+    "ana_wait_percentiles", "embedding_outlier_filter",
+    "graph_modularity", "graph_assortativity", "ana_growth_accounting",
+    // the r9 wave-2 additions with joins worth pinning: the
+    // recommend-chain composition, the nested-fraction NB loops,
+    // the sketch-vs-exact panels and the triangular panel
+    // cumulations must stay broadcast/hash, never SMJ
+    "recsys_coverage", "ml_learning_curve", "sketch_quantile_error",
+    "ml_ks_separation", "text_heaps_fit", "sample_budget_waterfill",
+    "graph_degree_dist", "privacy_t_closeness", "audit_fd_discovery",
+    "er_blocking_stats", "gold_dv_link", "ana_trimmed_mean",
+    "ana_hurst", "ana_periodogram", "ml_cohens_kappa",
+    "audit_schema_drift", "dedup_lsh_curve",
+    // r10: the KLL rollup's day->week sketch aggregation and the
+    // error panel's broadcast panel cross (the sketch_quantile_error
+    // 1-row-panel class) must stay exchange-clean; the new stats
+    // tests' panel self-joins and HITS' per-round passes must stay
+    // broadcast/hash
+    "sketch_kll_rollup", "sketch_kll_error",
+    "ana_mann_kendall", "ana_friedman_dow", "graph_hits",
+    // r13: the KMV tier — the set-op panel (k-row sketches +
+    // broadcast 1-row theta crosses) and the day->week rollup must
+    // stay broadcast/hash like their KLL siblings above. (r12 had
+    // listed these two only in bnljByDesign without ever pinning
+    // them here — an exemption with no invariant behind it; they
+    // are now CHECKED, and empirically need no exemption at all.)
+    "sketch_theta_ops", "sketch_kmv_rollup")
+
+  /** The two registry-wide plan tests share one build per query
+    * (building, with its eager checkpoint jobs, is most of their cost).
+    * Each entry keeps what they read from that query's one
+    * QueryExecution: the executed plan's text for the join-heavy set
+    * and the sort orders of the pre-AQE plan's unpartitioned windows.
+    */
+  private case class RegistryPlan(executedPlan: Option[String],
+                                  unpartitionedWindows: Seq[Seq[SortOrder]])
+
+  private lazy val registryPlans: Map[String, Try[RegistryPlan]] = {
+    val heavySet = heavy.toSet
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      name -> Try {
+        val qe = fn(spark, sf).queryExecution
+        RegistryPlan(
+          if (heavySet(name)) Some(qe.executedPlan.toString) else None,
+          qe.sparkPlan.collect {
+            case w: WindowExec if w.partitionSpec.isEmpty => w.orderSpec
+            case w: WindowGroupLimitExec if w.partitionSpec.isEmpty => w.orderSpec
+          })
+      }
+    }.toMap
+  }
+
   test("plan invariants: join-heavy queries never sort-merge or cartesian") {
     // The §4 contract, locked into the suite: dims broadcast, fact
     // shuffles are hash exchanges, and no plan ever degenerates into a
     // SortMergeJoin or CartesianProduct. (PlanAudit prints the full
     // per-query counts; this pins the invariant for the heavy hitters.)
-    val sfDir = sf
-    val heavy = Seq("q5_local_supplier", "gold_fct_star", "gold_asof_join",
-      "gold_merge_grain", "ana_od_matrix", "svc_map_points",
-      "dedup_ngram_jaccard", "dedup_minhash_lsh",
-      "gold_cut_replace", "gold_scd2_incremental", "dedup_embedding_cosine",
-      "ann_lsh_topk", "ann_ivf_topk", "ana_coverage_quartile", "svc_utm_to_wgs84",
-      "attrib_click_purchase", "ana_retention_cohort", "anomaly_zscore",
-      "gold_snapshot_diff", "gold_late_arriving", "fct_accumulating_snapshot",
-      "gold_bridge_alloc", "ana_transition_matrix", "ana_gapfill_30m",
-      "fct_periodic_snapshot", "audit_fk_integrity", "pack_sequences",
-      "audit_table_diff", "dedup_incremental", "dedup_edit_distance",
-      "corpus_shuffle", "sample_token_budget",
-      "graph_triangles", "data_drift_ks", "ann_range_search",
-      "audit_benford_digits", "ana_seasonal_decompose",
-      "dedup_prefix_filter", "join_range_interval", "join_interval_overlap",
-      "table_entropy", "embedding_coreset", "graph_clustering_coeff",
-      "table_mutual_info", "text_pmi_bigrams", "ana_top_paths",
-      "ana_survival_curve", "ana_gini_demand", "ana_theil_sen", "ana_market_basket",
-      "ana_bootstrap_ci",
-      "ml_naive_bayes", "sketch_countmin", "text_feature_hash",
-      "svc_hotspot_clusters",
-      "table_corr_spearman", "table_corr_kendall", "ana_kruskal_wallis",
-      "ana_xcorr_lags", "ana_msprt", "table_chi2_assoc",
-      "privacy_generalize_release",
-      // the r8 bench heavy tier — the queries where a silent
-      // SMJ/cartesian regression would cost the most wall-clock
-      "recsys_item_cosine", "recsys_recommend", "graph_k_core",
-      "graph_link_prediction", "corpus_curation_pipeline",
-      "dedup_recall_eval", "geo_nearest_stop", "dedup_clusters",
-      "bpe_encode", "dedup_corpus_keep", "embedding_pca_project",
-      // the r9 rank-bracket quantile family + graph additions — the
-      // PrefixSum range exchange and the checkpointed panels must
-      // never degrade into SMJ (checkpoints carry no stats)
-      "table_quantiles", "table_outlier_iqr", "anomaly_mad",
-      "ana_wait_percentiles", "embedding_outlier_filter",
-      "graph_modularity", "graph_assortativity", "ana_growth_accounting",
-      // the r9 wave-2 additions with joins worth pinning: the
-      // recommend-chain composition, the nested-fraction NB loops,
-      // the sketch-vs-exact panels and the triangular panel
-      // cumulations must stay broadcast/hash, never SMJ
-      "recsys_coverage", "ml_learning_curve", "sketch_quantile_error",
-      "ml_ks_separation", "text_heaps_fit", "sample_budget_waterfill",
-      "graph_degree_dist", "privacy_t_closeness", "audit_fd_discovery",
-      "er_blocking_stats", "gold_dv_link", "ana_trimmed_mean",
-      "ana_hurst", "ana_periodogram", "ml_cohens_kappa",
-      "audit_schema_drift", "dedup_lsh_curve",
-      // r10: the KLL rollup's day->week sketch aggregation and the
-      // error panel's broadcast panel cross (the sketch_quantile_error
-      // 1-row-panel class) must stay exchange-clean; the new stats
-      // tests' panel self-joins and HITS' per-round passes must stay
-      // broadcast/hash
-      "sketch_kll_rollup", "sketch_kll_error",
-      "ana_mann_kendall", "ana_friedman_dow", "graph_hits",
-      // r13: the KMV tier — the set-op panel (k-row sketches +
-      // broadcast 1-row theta crosses) and the day->week rollup must
-      // stay broadcast/hash like their KLL siblings above. (r12 had
-      // listed these two only in bnljByDesign without ever pinning
-      // them here — an exemption with no invariant behind it; they
-      // are now CHECKED, and empirically need no exemption at all.)
-      "sketch_theta_ops", "sketch_kmv_rollup")
+
     // fct_periodic_snapshot: its only BNLJ is the broadcast 1-row
     // global-max-month panel crossed onto per-key spans — volume
     // n x 1, the analytics-pack 1-row-total pattern. data_drift_ks /
@@ -175,8 +205,7 @@ class InvariantSpec extends SparkSpec {
       // `heavy`.
       "sketch_theta_ops")
     heavy.foreach { name =>
-      val plan = SparkEntry.queries(name)(spark, sfDir)
-        .queryExecution.executedPlan.toString
+      val plan = registryPlans(name).get.executedPlan.get
       if (!smjRowScaleByDesign(name))
         assert(!plan.contains("SortMergeJoin"), s"$name plans a SortMergeJoin")
       assert(!plan.contains("CartesianProduct"), s"$name plans a CartesianProduct")
@@ -194,8 +223,6 @@ class InvariantSpec extends SparkSpec {
   }
 
   test("window invariant: unpartitioned windows only in the documented panel allowlist") {
-    import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
-    import org.apache.spark.sql.catalyst.expressions.{Attribute, SortOrder}
     // Every name in `allow` has been audited: its unpartitioned window
     // runs over a BOUNDED relation (a day-level panel, a ≤k-row model
     // panel, or a pre-filtered top-N candidate set), never over
@@ -233,16 +260,10 @@ class InvariantSpec extends SparkSpec {
             a.name == "date_sk" || a.name == "d"
         case _ => false
       })
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      val plan = try fn(spark, sf).queryExecution.sparkPlan
-        catch { case e: Throwable => fail(s"$name failed to plan: ${e.getMessage}") }
-      val unpart = plan.collect {
-        case w: WindowExec
-          if w.partitionSpec.isEmpty && !panelIdiom(w.orderSpec) => w
-        case w: WindowGroupLimitExec
-          if w.partitionSpec.isEmpty && !panelIdiom(w.orderSpec) => w
-      }
-      if (unpart.nonEmpty && !allow(name)) Some(name) else None
+    val offenders = registryPlans.toSeq.sortBy(_._1).flatMap { case (name, built) =>
+      val windows = built.fold(e => fail(s"$name failed to plan: ${e.getMessage}"),
+        _.unpartitionedWindows)
+      if (windows.exists(w => !panelIdiom(w)) && !allow(name)) Some(name) else None
     }
     assert(offenders.isEmpty,
       s"unpartitioned windows outside the allowlist: ${offenders.mkString(", ")}")

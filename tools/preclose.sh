@@ -18,8 +18,6 @@ echo "== fresh Verify dump @ $SF =="
 SPARK_GRAFT_CPUS=16 sbt -batch "runMain graft.Verify $SF $OUT"
 echo "== fresh DuckDB compare =="
 python3 tools/check.py "$SF" "$OUT"
-echo "== SURVEY §5.1 <-> no_oracle drift gate =="
-python3 tools/rows_only_audit.py "$OUT"
 if [ -n "$REPLICA" ]; then
   echo "== 10x replica sweep @ $REPLICA =="
   SPARK_GRAFT_CPUS=16 sbt -batch "runMain graft.Verify $REPLICA ${OUT}_replica"
