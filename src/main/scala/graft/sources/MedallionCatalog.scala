@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.charset.StandardCharsets
-
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
@@ -138,10 +136,7 @@ object MedallionCatalog {
 
   private def readMeta(hfs: FileSystem, p: HPath): Option[(Option[Long], Seq[String])] = {
     if (!hfs.exists(p)) return None
-    val in = hfs.open(p)
-    val text =
-      try scala.io.Source.fromInputStream(in, StandardCharsets.UTF_8.name()).mkString
-      finally in.close()
+    val text = SmallFiles.read(hfs, p)
     // A sidecar without row_count (the reference's extract step may
     // write columns only) is UNKNOWN, not a count of -1 — it must
     // surface as NULL in validate, never as a hard mismatch.

@@ -1,8 +1,5 @@
 package graft.sources
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 
@@ -12,8 +9,10 @@ import org.apache.spark.sql.DataFrame
   * Data lands as ZSTD parquet under `dataset=<name>/<partition cols>`;
   * Spark's commit protocol makes the parquet write itself atomic. The
   * quality sidecar is written tmp+rename like the reference's atomic
-  * JSON writes. Row count comes from a post-write metadata-only scan
-  * (parquet footers), not a second full pass over the data.
+  * JSON writes, through the dataset's own FileSystem
+  * ([[SmallFiles.publish]]). Row count comes from a post-write
+  * metadata-only scan (parquet footers), not a second full pass over
+  * the data.
   */
 object MedallionSink {
 
@@ -29,8 +28,10 @@ object MedallionSink {
     val stats = Map("dataset" -> s""""$dataset"""", "rows_written" -> rows.toString) ++
       extraStats.map { case (k, v) => k -> v.toString }
     val json = stats.map { case (k, v) => s""""$k": $v""" }.mkString("{", ", ", "}")
-    atomicWrite(Paths.get(root, s".quality_$dataset.json.tmp"),
-      Paths.get(target, "_quality.json"), json)
+    val quality = new Path(target, "_quality.json")
+    SmallFiles.withPlainFs(quality, df.sparkSession.sparkContext.hadoopConfiguration) {
+      SmallFiles.publish(_, quality, json, replace = true)
+    }
     writeMetaSidecars(df, target, partitionCols)
     rows
   }
@@ -300,17 +301,6 @@ object MedallionSink {
       .write.mode("overwrite").option("compression", "zstd").parquet(path)
   }
 
-  /** Per-partition `_meta.json` sidecars (authoritative row_count +
-    * column list — the reference's bronze sidecar contract, served to
-    * graft.sources.MedallionCatalog's read-side validation). Counts
-    * come from ONE aggregate over the parquet JUST WRITTEN (footer
-    * metadata — never a recompute of the input pipeline, which would
-    * double the load's cost and could even disagree with the files if
-    * the source moved); only #partitions rows reach the driver.
-    * Directory names go through Spark's own partition-path escaping,
-    * so special characters and NULL values land next to the data
-    * files Spark wrote, not in a parallel unescaped tree.
-    */
   /** Read back a partitioned dataset with partition-column type
     * inference DISABLED (values stay the verbatim directory strings).
     * Sidecar directory names are regenerated from the partition
@@ -331,14 +321,21 @@ object MedallionSink {
     s.read.parquet(path)
   }
 
-  /** One `_meta.json` per hive partition directory, written FROM THE
-    * EXECUTORS: the per-partition counts stay a distributed frame and
-    * each task writes the sidecars for the count rows it holds
-    * (tmp→rename through the TABLE'S Hadoop FileSystem — a java.nio
-    * write from a task would land on that executor's LOCAL disk for
-    * any non-POSIX-shared deployment and the sidecars would silently
-    * vanish; resolving `target` through FileSystem targets the actual
-    * table store, exactly as VersionedTable.publish does). The driver
+  /** Per-partition `_meta.json` sidecars (authoritative row_count +
+    * column list — the reference's bronze sidecar contract, served to
+    * graft.sources.MedallionCatalog's read-side validation). Counts
+    * come from ONE aggregate over the parquet JUST WRITTEN (footer
+    * metadata — never a recompute of the input pipeline, which would
+    * double the load's cost and could even disagree with the files if
+    * the source moved); only #partitions rows reach the driver.
+    * Directory names go through Spark's own partition-path escaping,
+    * so special characters and NULL values land next to the data
+    * files Spark wrote, not in a parallel unescaped tree.
+    *
+    * The sidecars are written FROM THE EXECUTORS: the per-partition
+    * counts stay a distributed frame and each task publishes the
+    * sidecars for the count rows it holds ([[SmallFiles.publish]],
+    * through the TABLE'S Hadoop FileSystem). The driver
     * never loops over partitions — at 100k partitions the old
     * collect()-then-write loop was a driver-bound O(#partitions) I/O
     * serialization; this form spreads the I/O across the cluster and
@@ -366,49 +363,23 @@ object MedallionSink {
       .agg(count(lit(1)).as("__n"))
       .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
         import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        import org.apache.hadoop.fs.{Path => HPath}
         if (rows.hasNext) {
           val conf = new org.apache.hadoop.conf.Configuration(false)
           hadoopConfKv.foreach { case (k, v) => conf.set(k, v) }
-          val base = new HPath(tgt)
-          // UNCACHED instance so checksums-off can't leak into the
-          // executor's shared FS (FileSystem.get is JVM-cached);
-          // sidecars are plain JSON a human may hand-edit — a local
-          // .crc twin would turn any out-of-band edit into a
-          // ChecksumException on the next catalog read.
-          val hfs = org.apache.hadoop.fs.FileSystem.newInstance(base.toUri, conf)
-          hfs.setWriteChecksum(false)
-          try rows.foreach { r =>
-            val dir = pCols.zipWithIndex.map { case (c, i) =>
-              val v = r.getString(i)
-              if (v == null) s"$c=${ExternalCatalogUtils.DEFAULT_PARTITION_NAME}"
-              else s"$c=${ExternalCatalogUtils.escapePathName(v)}"
-            }.mkString("/")
-            val n = r.getLong(pCols.length)
-            val json = s"""{"row_count": $n, "columns": $colsJson}"""
-            val tmp = new HPath(base, s"$dir/._meta.json.tmp")
-            val dest = new HPath(base, s"$dir/_meta.json")
-            val out = hfs.create(tmp, true)
-            try out.write(json.getBytes(StandardCharsets.UTF_8)) finally out.close()
-            if (!hfs.rename(tmp, dest)) {
-              // HDFS rename won't overwrite an existing sidecar: replace it.
-              hfs.delete(dest, false)
-              if (!hfs.rename(tmp, dest)) {
-                hfs.delete(tmp, false)
-                throw new java.io.IOException(
-                  s"MedallionSink: sidecar publish $tmp -> $dest failed")
-              }
+          val base = new Path(tgt)
+          SmallFiles.withPlainFs(base, conf) { hfs =>
+            rows.foreach { r =>
+              val dir = pCols.zipWithIndex.map { case (c, i) =>
+                val v = r.getString(i)
+                if (v == null) s"$c=${ExternalCatalogUtils.DEFAULT_PARTITION_NAME}"
+                else s"$c=${ExternalCatalogUtils.escapePathName(v)}"
+              }.mkString("/")
+              val n = r.getLong(pCols.length)
+              SmallFiles.publish(hfs, new Path(base, s"$dir/_meta.json"),
+                s"""{"row_count": $n, "columns": $colsJson}""", replace = true)
             }
-          } finally hfs.close()
+          }
         }
       }
-  }
-
-  private def atomicWrite(tmp: java.nio.file.Path, dest: java.nio.file.Path,
-                          content: String): Unit = {
-    Files.createDirectories(tmp.getParent)
-    Files.write(tmp, content.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, dest,
-      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
   }
 }

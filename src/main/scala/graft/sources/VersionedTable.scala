@@ -1,9 +1,11 @@
 package graft.sources
 
-import java.nio.charset.StandardCharsets
+import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.util.sketch.BloomFilter
 
 /** Versioned table with snapshot isolation and time travel — the
   * manifest-commit layer a lakehouse needs when directory swaps
@@ -55,6 +57,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * is a normal multi-file parquet directory, so commit cost is O(1)
   * driver work regardless of data size.
   *
+  * Each on-disk format has ONE owner here: [[renderManifest]] writes
+  * every manifest, [[sidecar]] reads every stats/bloom sidecar (under
+  * one rule: evidence that cannot be read, or that was built on
+  * another column, never clears a segment), [[writeSegment]] writes
+  * every segment with its sidecars, `Rewrite` is the one path of the
+  * snapshot-derived commits, and [[snapshot]]/[[scan]] are the one
+  * way from a version to its files. Small files go through
+  * [[SmallFiles]], shared with [[MedallionSink]] and
+  * [[MedallionCatalog]].
+  *
   * Writer txn markers (`txns`: writer identity → highest sequence
   * number) are CARRIED FORWARD through every commit — append,
   * overwrite, [[optimizeCompact]] — so the LATEST manifest always
@@ -63,6 +75,29 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * can never resurrect an already-applied batch.
   */
 object VersionedTable {
+
+  /** Manifests and stats sidecars are hand-rendered JSON: an
+    * identifier carrying a quote/backslash/control char would corrupt
+    * the file the COMMIT POINT depends on (the regex readers would
+    * then silently drop segments or txn markers), so identifiers are
+    * rejected at commit time rather than escaped — a column or writer
+    * id with a quote in it is an error upstream, not a rendering
+    * problem.
+    */
+  private def requireJsonSafe(s: String, what: String): String = {
+    require(s.nonEmpty && !s.exists(c => c == '"' || c == '\\' || c.isControl),
+      s"$what must be non-empty and free of quotes/backslashes/control chars " +
+        s"(it is embedded in hand-rendered manifest JSON): ${s.trim}")
+    s
+  }
+
+  /** [[requireJsonSafe]] over every identifier a write may render. */
+  private def requireJsonSafe(statsCol: Option[String], bloomCol: Option[String],
+                              txn: Option[(String, Long)]): Unit = {
+    statsCol.foreach(requireJsonSafe(_, "statsCol"))
+    bloomCol.foreach(requireJsonSafe(_, "bloomCol"))
+    txn.foreach(t => requireJsonSafe(t._1, "txn writer id"))
+  }
 
   /** Commit `df` as the next version. `overwrite=false` appends to the
     * predecessor's visible set; `overwrite=true` replaces it. Returns
@@ -82,39 +117,18 @@ object VersionedTable {
     * twice, while a DIFFERENT query's marker is foreign and never
     * suppresses a batch.
     */
-  /** Manifests and stats sidecars are hand-rendered JSON: an
-    * identifier carrying a quote/backslash/control char would corrupt
-    * the file the COMMIT POINT depends on (the regex readers would
-    * then silently drop segments or txn markers), so identifiers are
-    * rejected at commit time rather than escaped — a column or writer
-    * id with a quote in it is an error upstream, not a rendering
-    * problem.
-    */
-  private def requireJsonSafe(s: String, what: String): String = {
-    require(s.nonEmpty && !s.exists(c => c == '"' || c == '\\' || c.isControl),
-      s"$what must be non-empty and free of quotes/backslashes/control chars " +
-        s"(it is embedded in hand-rendered manifest JSON): ${s.trim}")
-    s
-  }
-
   def commit(df: DataFrame, dir: String, overwrite: Boolean = false,
              statsCol: Option[String] = None,
              txn: Option[(String, Long)] = None,
              bloomCol: Option[String] = None): Long = {
     val spark = df.sparkSession
-    statsCol.foreach(requireJsonSafe(_, "statsCol"))
-    bloomCol.foreach(requireJsonSafe(_, "bloomCol"))
-    txn.foreach(t => requireJsonSafe(t._1, "txn writer id"))
+    requireJsonSafe(statsCol, bloomCol, txn)
     val hfs = fs(spark, dir)
     // The segment writes ONCE, before the claim loop: rebasing is a
     // metadata-only retry (its name encodes the version it first
     // aimed at — cosmetic; manifests reference segments by name).
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val segment = s"c${versions(hfs, dir).maxOption.map(_ + 1).getOrElse(0L)}-$nonce"
-    df.write.mode("errorifexists").option("compression", "zstd")
-      .parquet(s"$dir/data/$segment")
-    statsCol.foreach(writeStatsSidecar(spark, hfs, dir, segment, _))
-    bloomCol.foreach(writeBloomSidecar(spark, hfs, dir, segment, _))
+    val segment = segmentName(versions(hfs, dir).maxOption.map(_ + 1).getOrElse(0L), "")
+    writeSegment(spark, hfs, dir, segment, statsCol, bloomCol)(zstd(df))
     // Optimistic claim loop: a blind append/replace commutes with any
     // winner (its rows are independent of table state it never read),
     // so a lost race re-reads the NEW head's segment list and txn map
@@ -130,13 +144,9 @@ object VersionedTable {
       val prevSegs =
         if (overwrite) Seq.empty
         else prevJson.map(segmentNames).getOrElse(Seq.empty)
-      val mergedTxns = txn.foldLeft(prevJson.map(txnsOf).getOrElse(Map.empty[String, Long])) {
-        case (m, (app, seq)) => m.updated(app, math.max(seq, m.getOrElse(app, Long.MinValue)))
-      }
-      val segs = (prevSegs :+ segment).map(s => s""""$s"""").mkString("[", ", ", "]")
+      val txns = withTxn(prevJson.map(txnsOf).getOrElse(Map.empty), txn)
       val mode = if (overwrite) "overwrite" else "append"
-      val json = s"""{"version": $v, "mode": "$mode", "segments": $segs${txnsJson(mergedTxns)}}"""
-      if (claimSlot(hfs, dir, v, json)) return v
+      if (claimSlot(hfs, dir, v, renderManifest(v, mode, prevSegs :+ segment, txns))) return v
       attempt += 1
     }
     throw new java.util.ConcurrentModificationException(
@@ -150,64 +160,6 @@ object VersionedTable {
     * so 50 losses means 50 concurrent writers landed meanwhile.
     */
   private val MaxCommitAttempts = 50
-
-  /** OPTIMIZE for a log of small streaming appends: rewrite the
-    * CURRENT snapshot as one fresh segment and publish it as an
-    * overwrite commit — readers of older versions are untouched
-    * (history stays readable until [[vacuum]] reclaims it), a crash
-    * mid-rewrite leaves only an invisible orphan, and the carried
-    * txn-marker map keeps replay detection intact across the
-    * rewrite. Source segments are immutable, so reading and
-    * rewriting concurrently is safe by construction.
-    */
-  /** One-column scan of a just-written segment (at footer-stats
-    * maturity this becomes a metadata read; the sidecar contract —
-    * and the pruning it feeds — is identical either way). NaN/
-    * Infinity are not JSON atoms — a segment with non-finite bounds
-    * publishes NO sidecar and is simply always read (conservative).
-    */
-  private def writeStatsSidecar(spark: SparkSession, hfs: FileSystem,
-                                dir: String, segment: String, c: String): Unit = {
-    import org.apache.spark.sql.functions.{col, max, min}
-    val r = spark.read.parquet(s"$dir/data/$segment")
-      .agg(min(col(c)).cast("double"), max(col(c)).cast("double")).head()
-    if (!r.isNullAt(0) &&
-        java.lang.Double.isFinite(r.getDouble(0)) &&
-        java.lang.Double.isFinite(r.getDouble(1)))
-      publish(hfs, new HPath(s"$dir/data/$segment/._graft_stats.json.tmp"),
-        new HPath(s"$dir/data/$segment/_graft_stats.json"),
-        s"""{"column": "$c", "min": ${r.getDouble(0)}, "max": ${r.getDouble(1)}}""")
-  }
-
-  /** Bloom sidecar for POINT lookups: min/max stats prune only when
-    * the data is clustered by the key — on a high-cardinality
-    * unclustered key every segment's range spans everything and
-    * readWhere opens all of them; a per-segment bloom still answers
-    * "definitely not here". Built distributed (partial filters
-    * bit-or merged — no key list at the driver), sized to the
-    * segment's exact key count. An all-null/empty segment publishes
-    * NO sidecar and is simply always read — the conservative rule.
-    */
-  private def writeBloomSidecar(spark: SparkSession, hfs: FileSystem,
-                                dir: String, segment: String, c: String): Unit = {
-    import org.apache.spark.sql.functions.col
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    val segDf = spark.read.parquet(s"$dir/data/$segment")
-    require(Seq(ByteType, ShortType, IntegerType, LongType)
-        .contains(segDf.schema(c).dataType),
-      s"bloomCol '$c' must be integral (bloom keys hash as longs): " +
-        segDf.schema(c).dataType)
-    val keys = segDf.filter(col(c).isNotNull).select(col(c).cast("long").as(c))
-    val n = keys.count()
-    if (n > 0) {
-      val b64 = java.util.Base64.getEncoder.encodeToString(
-        graft.expressions.BloomKernels.serialize(
-          keys.stat.bloomFilter(c, n, 0.01)))
-      publish(hfs, new HPath(s"$dir/data/$segment/._graft_bloom.json.tmp"),
-        new HPath(s"$dir/data/$segment/_graft_bloom.json"),
-        s"""{"column": "$c", "n": $n, "fpp": 0.01, "bits_b64": "$b64"}""")
-    }
-  }
 
   /** Targeted DELETE (the GDPR-erasure shape): remove every row whose
     * integral `keyCol` equals `value`, as a new committed version.
@@ -232,72 +184,28 @@ object VersionedTable {
                   value: Long,
                   statsCol: Option[String] = None,
                   bloomCol: Option[String] = None): (Long, Int, Long) = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val hfs = fs(spark, dir)
-    val committed = versions(hfs, dir)
-    val cur = committed.maxOption.getOrElse(
-      throw new java.util.NoSuchElementException(s"no committed version under $dir"))
-    val prevJson = manifestJson(hfs, dir, cur)
-    val (affected, untouched) = segmentNames(prevJson)
-      .partition(segmentMightContainLong(spark, hfs, dir, _, keyCol, value))
-    if (affected.isEmpty) return (cur, 0, 0L)
-    val v = cur + 1
+    val rw = new Rewrite(spark, dir, statsCol, bloomCol)
+    // the readers' pruning evidence, reused for targeting: a bloom
+    // "definitely not here" or a stats range miss clears a segment;
+    // anything inconclusive is a possible container (a rewrite too
+    // many, never an erasure too few)
+    val (affected, untouched) = rw.segments.partition { s =>
+      bloomFilter(rw.hfs, dir, s, keyCol).forall(_.mightContainLong(value)) &&
+        statsRange(rw.hfs, dir, s, keyCol).forall { case (lo, hi) => lo <= value && value <= hi }
+    }
+    if (affected.isEmpty) return (rw.base, 0, 0L)
     var deleted = 0L
     val rewritten = affected.zipWithIndex.flatMap { case (s, i) =>
-      val srcPath = s"$dir/data/$s"
-      val nonce = java.util.UUID.randomUUID().toString.take(8)
-      val newSeg = s"c$v-$nonce-d$i"
-      val src = spark.read.parquet(srcPath)
-      // null-safe: rows with a NULL key are never the erased subject
-      src.filter(!(col(keyCol).cast("long") <=> lit(value)))
-        .write.mode("errorifexists").option("compression", "zstd")
-        .parquet(s"$dir/data/$newSeg")
-      val keptN = spark.read.parquet(s"$dir/data/$newSeg").count()
-      deleted += src.count() - keptN
-      if (keptN == 0) { hfs.delete(new HPath(s"$dir/data/$newSeg"), true); None }
-      else {
-        statsCol.foreach(writeStatsSidecar(spark, hfs, dir, newSeg, _))
-        bloomCol.foreach(writeBloomSidecar(spark, hfs, dir, newSeg, _))
-        Some(newSeg)
+      rw.segment(s"d$i") { path =>
+        val src = spark.read.parquet(s"$dir/data/$s")
+        // null-safe: rows with a NULL key are never the erased subject
+        zstd(src.filter(!(col(keyCol).cast("long") <=> lit(value))))(path)
+        val keptN = spark.read.parquet(path).count()
+        deleted += src.count() - keptN
+        keptN > 0
       }
     }
-    val segs = (untouched ++ rewritten).map(s => s""""$s"""").mkString("[", ", ", "]")
-    publishDerived(hfs, dir, cur,
-      s"""{"version": $v, "mode": "delete", "segments": $segs${txnsJson(txnsOf(prevJson))}}""",
-      "deleteWhere")
-    (v, affected.size, deleted)
-  }
-
-  /** The reader-side pruning evidence, reused for delete targeting: a
-    * segment may be cleared by its bloom sidecar (keyed on `keyCol`)
-    * or by a stats range miss; anything inconclusive counts as a
-    * possible container (conservative — a rewrite too many, never an
-    * erasure too few).
-    */
-  private def segmentMightContainLong(spark: SparkSession, hfs: FileSystem,
-                                      dir: String, segment: String,
-                                      keyCol: String, value: Long): Boolean = {
-    val bp = new HPath(s"$dir/data/$segment/_graft_bloom.json")
-    val bloomClears =
-      if (!hfs.exists(bp)) false
-      else {
-        val json = readText(hfs, bp)
-        val colM = """"column"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(json).map(_.group(1))
-        val bitsM = """"bits_b64"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(json).map(_.group(1))
-        colM.contains(keyCol) && bitsM.isDefined &&
-          (try !graft.expressions.BloomKernels.deserialize(
-            java.util.Base64.getDecoder.decode(bitsM.get)).mightContainLong(value)
-          catch { case _: Throwable => false })
-      }
-    if (bloomClears) return false
-    val sp = new HPath(s"$dir/data/$segment/_graft_stats.json")
-    if (!hfs.exists(sp)) return true
-    val json = readText(hfs, sp)
-    val colM = """"column"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(json).map(_.group(1))
-    val minM = DoubleField("min").findFirstMatchIn(json).map(_.group(1).toDouble)
-    val maxM = DoubleField("max").findFirstMatchIn(json).map(_.group(1).toDouble)
-    if (!colM.contains(keyCol) || minM.isEmpty || maxM.isEmpty) true
-    else minM.get <= value && value <= maxM.get
+    (rw.publish("delete", untouched ++ rewritten, "deleteWhere"), affected.size, deleted)
   }
 
   /** MERGE INTO (copy-on-write upsert): each source row REPLACES the
@@ -308,10 +216,10 @@ object VersionedTable {
     *
     * Copy-on-write targeting reuses the readers' pruning evidence:
     * segments whose stats range cannot intersect the source-key range
-    * are cleared on the driver; segments with a bloom sidecar are
-    * cleared by ONE distributed membership job (source keys probe
-    * every candidate bloom; output is at most one row per segment —
-    * never a key list at the driver). Only the surviving segments are
+    * are cleared on the driver; segments with a readable bloom sidecar
+    * on `keyCol` are cleared by ONE distributed membership job (source
+    * keys probe every candidate bloom; output is at most one row per
+    * segment — never a key list at the driver). Only the surviving segments are
     * rewritten — merged into a SINGLE fresh segment together with the
     * source rows (their replaced rows dropped by a left-anti join) —
     * so upserting a small batch into a 10k-segment table rewrites the
@@ -331,15 +239,9 @@ object VersionedTable {
             statsCol: Option[String] = None,
             bloomCol: Option[String] = None,
             txn: Option[(String, Long)] = None): (Long, Int, Long, Long) = {
-    import org.apache.spark.sql.functions.{col, count, countDistinct, lit, max, min}
-    statsCol.foreach(requireJsonSafe(_, "statsCol"))
-    bloomCol.foreach(requireJsonSafe(_, "bloomCol"))
-    txn.foreach(t => requireJsonSafe(t._1, "txn writer id"))
-    val hfs = fs(spark, dir)
-    val cur = versions(hfs, dir).maxOption.getOrElse(
-      throw new java.util.NoSuchElementException(s"no committed version under $dir"))
-    val prevJson = manifestJson(hfs, dir, cur)
-    val target = read(spark, dir, Some(cur))
+    import org.apache.spark.sql.functions.{count, countDistinct, max, min}
+    val rw = new Rewrite(spark, dir, statsCol, bloomCol, txn)
+    val target = scan(spark, dir, rw.segments)
     require(source.columns.toSet == target.columns.toSet,
       s"merge source columns ${source.columns.sorted.mkString(",")} must equal " +
         s"target columns ${target.columns.sorted.mkString(",")}")
@@ -349,7 +251,7 @@ object VersionedTable {
     val p = src.agg(count(lit(1)), count(col(keyCol)), countDistinct(col(keyCol)),
       min(col(keyCol)).cast("double"), max(col(keyCol)).cast("double")).head()
     val srcN = p.getLong(0)
-    if (srcN == 0) return (cur, 0, 0L, 0L)
+    if (srcN == 0) return (rw.base, 0, 0L, 0L)
     require(p.getLong(1) == srcN, s"merge source has NULL $keyCol keys")
     require(p.getLong(2) == srcN,
       s"merge source is not unique on $keyCol (${srcN - p.getLong(2)} duplicate rows)")
@@ -361,77 +263,41 @@ object VersionedTable {
     val (srcLo, srcHi) =
       (Math.nextDown(p.getDouble(3)), Math.nextUp(p.getDouble(4)))
     // driver-side range clearing, then one distributed bloom-probe job
-    val segs = segmentNames(prevJson)
-    val rangeSurvivors = segs.filter { s =>
-      val sp = new HPath(s"$dir/data/$s/_graft_stats.json")
-      if (!hfs.exists(sp)) true
-      else {
-        val json = readText(hfs, sp)
-        val colM = """"column"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(json).map(_.group(1))
-        val minM = DoubleField("min").findFirstMatchIn(json).map(_.group(1).toDouble)
-        val maxM = DoubleField("max").findFirstMatchIn(json).map(_.group(1).toDouble)
-        if (!colM.contains(keyCol) || minM.isEmpty || maxM.isEmpty) true
-        else maxM.get >= srcLo && minM.get <= srcHi
-      }
+    val rangeSurvivors = rw.segments.filter { s =>
+      statsRange(rw.hfs, dir, s, keyCol).forall { case (lo, hi) => hi >= srcLo && lo <= srcHi }
     }
-    val bloomBytes: Map[String, Array[Byte]] = rangeSurvivors.flatMap { s =>
-      val bp = new HPath(s"$dir/data/$s/_graft_bloom.json")
-      if (!hfs.exists(bp)) None
-      else {
-        val json = readText(hfs, bp)
-        val colM = """"column"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(json).map(_.group(1))
-        val bitsM = """"bits_b64"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(json).map(_.group(1))
-        if (colM.contains(keyCol) && bitsM.isDefined)
-          Some(s -> java.util.Base64.getDecoder.decode(bitsM.get))
-        else None
-      }
+    val blooms: Map[String, BloomFilter] = rangeSurvivors.flatMap { s =>
+      bloomFilter(rw.hfs, dir, s, keyCol).map(s -> _)
     }.toMap
     val bloomHit: Set[String] =
-      if (bloomBytes.isEmpty) Set.empty
+      if (blooms.isEmpty) Set.empty
       else {
-        val bc = spark.sparkContext.broadcast(bloomBytes)
+        val bc = spark.sparkContext.broadcast(blooms)
         src.select(col(keyCol).cast("long")).distinct().rdd
           .mapPartitions { it =>
-            val filters = bc.value.map { case (s, b) =>
-              s -> graft.expressions.BloomKernels.deserialize(b)
-            }
             val hit = scala.collection.mutable.Set[String]()
             it.foreach { r =>
               val k = r.getLong(0)
-              filters.foreach { case (s, f) =>
+              bc.value.foreach { case (s, f) =>
                 if (!hit(s) && f.mightContainLong(k)) hit += s
               }
             }
             hit.iterator
           }.distinct().collect().toSet
       }
-    val affected = rangeSurvivors.filter(s => !bloomBytes.contains(s) || bloomHit(s))
-    val untouched = segs.filterNot(affected.contains)
-    val v = cur + 1
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val newSeg = s"c$v-$nonce-m"
+    val affected = rangeSurvivors.filter(s => !blooms.contains(s) || bloomHit(s))
+    val untouched = rw.segments.filterNot(affected.contains)
     val (matchedN, rewriteData) =
       if (affected.isEmpty) (0L, src)
       else {
-        val affectedDf = spark.read.option("mergeSchema", "true")
-          .parquet(affected.map(s => s"$dir/data/$s"): _*)
+        val affectedDf = scan(spark, dir, affected)
         val srcKeys = src.select(col(keyCol))
         val m = affectedDf.join(srcKeys, Seq(keyCol), "left_semi").count()
         (m, affectedDf.select(cols.map(col): _*)
           .join(srcKeys, Seq(keyCol), "left_anti")
           .select(cols.map(col): _*).unionByName(src))
       }
-    rewriteData.write.mode("errorifexists").option("compression", "zstd")
-      .parquet(s"$dir/data/$newSeg")
-    statsCol.foreach(writeStatsSidecar(spark, hfs, dir, newSeg, _))
-    bloomCol.foreach(writeBloomSidecar(spark, hfs, dir, newSeg, _))
-    val mergedTxns = txn.foldLeft(txnsOf(prevJson)) {
-      case (m, (app, seq)) => m.updated(app, math.max(seq, m.getOrElse(app, Long.MinValue)))
-    }
-    val segsJson = (untouched :+ newSeg).map(s => s""""$s"""").mkString("[", ", ", "]")
-    publishDerived(hfs, dir, cur,
-      s"""{"version": $v, "mode": "merge", "segments": $segsJson${txnsJson(mergedTxns)}}""",
-      "merge")
+    val v = rw.publish("merge", untouched ++ rw.segment("m")(zstd(rewriteData)), "merge")
     (v, affected.size, matchedN, srcN - matchedN)
   }
 
@@ -455,20 +321,16 @@ object VersionedTable {
     */
   def changeFeed(spark: SparkSession, dir: String, fromVersion: Long,
                  toVersion: Long, keyCol: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
     require(fromVersion < toVersion,
       s"changeFeed: fromVersion=$fromVersion must precede toVersion=$toVersion")
-    val oldSegs = segments(spark, dir, fromVersion)
-    val newSegs = segments(spark, dir, toVersion)
-    val removed = oldSegs.filterNot(newSegs.contains)
-    val added = newSegs.filterNot(oldSegs.contains)
-    val newShape = read(spark, dir, Some(toVersion))
+    val hfs = fs(spark, dir)
+    val oldSegs = segments(hfs, dir, fromVersion)
+    val newSegs = segments(hfs, dir, toVersion)
+    val newShape = scan(spark, dir, newSegs)
     val attrs = newShape.columns.toSeq.filterNot(_ == keyCol)
-    def side(onlySegs: Seq[String], shapeOf: Long): DataFrame = {
-      val df =
-        if (onlySegs.isEmpty) read(spark, dir, Some(shapeOf)).filter(lit(false))
-        else spark.read.option("mergeSchema", "true")
-          .parquet(onlySegs.map(s => s"$dir/data/$s"): _*)
+    // one side reads the segments its version does not share with the other
+    def side(segs: Seq[String], other: Seq[String]): DataFrame = {
+      val df = scan(spark, dir, segs, !other.contains(_))
       // align to the newer version's shape; predated columns NULL-fill
       val have = df.columns.toSet
       val aligned = (keyCol +: attrs).map { c =>
@@ -478,7 +340,7 @@ object VersionedTable {
       df.select(aligned: _*)
     }
     graft.operators.Cdc.snapshotDiff(
-      side(removed, fromVersion), side(added, toVersion), Seq(keyCol), attrs)
+      side(oldSegs, newSegs), side(newSegs, oldSegs), Seq(keyCol), attrs)
   }
 
   /** RESTORE: roll the table's HEAD back to `toVersion`'s content as
@@ -492,20 +354,11 @@ object VersionedTable {
     * let an already-applied streaming batch re-apply).
     */
   def restore(spark: SparkSession, dir: String, toVersion: Long): Long = {
-    val hfs = fs(spark, dir)
-    val cur = versions(hfs, dir).maxOption.getOrElse(
-      throw new java.util.NoSuchElementException(s"no committed version under $dir"))
-    require(toVersion <= cur, s"restore target $toVersion is beyond head $cur")
-    val targetSegs = segments(spark, dir, toVersion)
-    val txns = txnsOf(manifestJson(hfs, dir, cur))
-    val v = cur + 1
-    val segsJson = targetSegs.map(s => s""""$s"""").mkString("[", ", ", "]")
     // restore derives from the head it read (which txn map to carry,
     // which version is "bad"): racing commits must beat it loudly
-    publishDerived(hfs, dir, cur,
-      s"""{"version": $v, "mode": "restore", "segments": $segsJson${txnsJson(txns)}}""",
-      "restore")
-    v
+    val rw = new Rewrite(spark, dir)
+    require(toVersion <= rw.base, s"restore target $toVersion is beyond head ${rw.base}")
+    rw.publish("restore", segments(rw.hfs, dir, toVersion), "restore")
   }
 
   /** Commit-time CONSTRAINT gate (the Delta CHECK-constraint shape):
@@ -549,29 +402,24 @@ object VersionedTable {
         s"constraint violations — commit refused: ${all.mkString("; ")}")
   }
 
+  /** OPTIMIZE for a log of small streaming appends: rewrite the
+    * CURRENT snapshot as one fresh segment and publish it as an
+    * overwrite commit — readers of older versions are untouched
+    * (history stays readable until [[vacuum]] reclaims it), a crash
+    * mid-rewrite leaves only an invisible orphan, and the carried
+    * txn-marker map keeps replay detection intact across the
+    * rewrite. Source segments are immutable, so reading and
+    * rewriting concurrently is safe by construction.
+    */
   def optimizeCompact(spark: SparkSession, dir: String,
                       statsCol: Option[String] = None,
                       bloomCol: Option[String] = None): Long = {
-    statsCol.foreach(requireJsonSafe(_, "statsCol"))
-    bloomCol.foreach(requireJsonSafe(_, "bloomCol"))
-    val hfs = fs(spark, dir)
-    val cur = versions(hfs, dir).maxOption.getOrElse(
-      throw new java.util.NoSuchElementException(s"no committed version under $dir"))
-    val v = cur + 1
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val segment = s"c$v-$nonce-o"
-    // rewrite of the snapshot AT `cur`, not "the latest": a commit
-    // landing mid-rewrite must fail this optimize loudly (via the
-    // derived publish below), never be silently compacted away
-    read(spark, dir, Some(cur)).write.mode("errorifexists")
-      .option("compression", "zstd").parquet(s"$dir/data/$segment")
-    statsCol.foreach(writeStatsSidecar(spark, hfs, dir, segment, _))
-    bloomCol.foreach(writeBloomSidecar(spark, hfs, dir, segment, _))
-    val txns = txnsOf(manifestJson(hfs, dir, cur))
-    publishDerived(hfs, dir, cur,
-      s"""{"version": $v, "mode": "overwrite", "segments": ["$segment"]${txnsJson(txns)}}""",
+    val rw = new Rewrite(spark, dir, statsCol, bloomCol)
+    // rewrite of the snapshot AT the head it read, not "the latest": a
+    // commit landing mid-rewrite must fail this optimize loudly (the
+    // derived publish), never be silently compacted away
+    rw.publish("overwrite", rw.segment("o")(zstd(scan(spark, dir, rw.segments))).toSeq,
       "optimizeCompact")
-    v
   }
 
   /** OPTIMIZE with Z-ORDER re-clustering — [[optimizeCompact]] whose
@@ -595,23 +443,12 @@ object VersionedTable {
                      nFiles: Int, bits: Int = 12,
                      statsCol: Option[String] = None,
                      bloomCol: Option[String] = None): Long = {
-    statsCol.foreach(requireJsonSafe(_, "statsCol"))
-    bloomCol.foreach(requireJsonSafe(_, "bloomCol"))
-    val hfs = fs(spark, dir)
-    val cur = versions(hfs, dir).maxOption.getOrElse(
-      throw new java.util.NoSuchElementException(s"no committed version under $dir"))
-    val v = cur + 1
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val segment = s"c$v-$nonce-z"
-    MedallionSink.writeZOrderedN(read(spark, dir, Some(cur)),
-      s"$dir/data/$segment", cols, nFiles, bits)
-    statsCol.foreach(writeStatsSidecar(spark, hfs, dir, segment, _))
-    bloomCol.foreach(writeBloomSidecar(spark, hfs, dir, segment, _))
-    val txns = txnsOf(manifestJson(hfs, dir, cur))
-    publishDerived(hfs, dir, cur,
-      s"""{"version": $v, "mode": "overwrite", "segments": ["$segment"]${txnsJson(txns)}}""",
-      "optimizeZOrder")
-    v
+    val rw = new Rewrite(spark, dir, statsCol, bloomCol)
+    val segment = rw.segment("z") { path =>
+      MedallionSink.writeZOrderedN(scan(spark, dir, rw.segments), path, cols, nFiles, bits)
+      true
+    }
+    rw.publish("overwrite", segment.toSeq, "optimizeZOrder")
   }
 
   /** Highest `txn` sequence number recorded for writer identity `app`
@@ -644,13 +481,8 @@ object VersionedTable {
     * type-widening rewrite is an OPTIMIZE-style full rewrite, not a
     * silent cast.
     */
-  def read(spark: SparkSession, dir: String, asOf: Option[Long] = None): DataFrame = {
-    val v = asOf.orElse(latestVersion(spark, dir)).getOrElse(
-      throw new java.util.NoSuchElementException(s"no committed version under $dir"))
-    val segs = segments(spark, dir, v)
-    spark.read.option("mergeSchema", "true")
-      .parquet(segs.map(s => s"$dir/data/$s"): _*)
-  }
+  def read(spark: SparkSession, dir: String, asOf: Option[Long] = None): DataFrame =
+    snapshot(spark, dir, asOf)((_, _) => true)
 
   /** (version, mode, n_segments) for every retained manifest,
     * oldest first — the table's commit history.
@@ -675,28 +507,10 @@ object VersionedTable {
     */
   def readWhere(spark: SparkSession, dir: String, statsCol: String,
                 lo: Double, hi: Double, asOf: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions.col
     require(lo <= hi, s"readWhere: lo=$lo > hi=$hi")
-    val hfs = fs(spark, dir)
-    val v = asOf.orElse(latestVersion(spark, dir)).getOrElse(
-      throw new java.util.NoSuchElementException(s"no committed version under $dir"))
-    val kept = segments(spark, dir, v).filter { s =>
-      val p = new HPath(s"$dir/data/$s/_graft_stats.json")
-      if (!hfs.exists(p)) true
-      else {
-        val json = readText(hfs, p)
-        val colM = """"column"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(json).map(_.group(1))
-        val minM = DoubleField("min").findFirstMatchIn(json).map(_.group(1).toDouble)
-        val maxM = DoubleField("max").findFirstMatchIn(json).map(_.group(1).toDouble)
-        if (!colM.contains(statsCol) || minM.isEmpty || maxM.isEmpty) true
-        else maxM.get >= lo && minM.get <= hi
-      }
-    }
-    if (kept.isEmpty)
-      read(spark, dir, Some(v)).filter(org.apache.spark.sql.functions.lit(false))
-    else spark.read.option("mergeSchema", "true")
-      .parquet(kept.map(s => s"$dir/data/$s"): _*)
-      .filter(col(statsCol) >= lo && col(statsCol) <= hi)
+    snapshot(spark, dir, asOf) { (hfs, s) =>
+      statsRange(hfs, dir, s, statsCol).forall { case (min, max) => max >= lo && min <= hi }
+    }.filter(col(statsCol) >= lo && col(statsCol) <= hi)
   }
 
   /** Point-lookup read: rows with `bloomCol == value`, opening only
@@ -713,28 +527,9 @@ object VersionedTable {
     */
   def readPoint(spark: SparkSession, dir: String, bloomCol: String,
                 value: Long, asOf: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val hfs = fs(spark, dir)
-    val v = asOf.orElse(latestVersion(spark, dir)).getOrElse(
-      throw new java.util.NoSuchElementException(s"no committed version under $dir"))
-    val kept = segments(spark, dir, v).filter { s =>
-      val p = new HPath(s"$dir/data/$s/_graft_bloom.json")
-      if (!hfs.exists(p)) true
-      else {
-        val json = readText(hfs, p)
-        val colM = """"column"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(json).map(_.group(1))
-        val bitsM = """"bits_b64"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(json).map(_.group(1))
-        if (!colM.contains(bloomCol) || bitsM.isEmpty) true
-        else try {
-          graft.expressions.BloomKernels.deserialize(
-            java.util.Base64.getDecoder.decode(bitsM.get)).mightContainLong(value)
-        } catch { case _: Throwable => true }
-      }
-    }
-    if (kept.isEmpty) read(spark, dir, Some(v)).filter(lit(false))
-    else spark.read.option("mergeSchema", "true")
-      .parquet(kept.map(s => s"$dir/data/$s"): _*)
-      .filter(col(bloomCol) === value)
+    snapshot(spark, dir, asOf) { (hfs, s) =>
+      bloomFilter(hfs, dir, s, bloomCol).forall(_.mightContainLong(value))
+    }.filter(col(bloomCol) === value)
   }
 
   /** Garbage collection: drop manifests older than the newest
@@ -762,8 +557,8 @@ object VersionedTable {
     val vs = versions(hfs, dir).sorted
     if (vs.isEmpty) return (0, 0)
     val (drop, keep) = vs.splitAt(math.max(vs.size - retainVersions, 0))
-    val live = keep.flatMap(v => segments(spark, dir, v)).toSet
-    val everReferenced = vs.flatMap(v => segments(spark, dir, v)).toSet
+    val live = keep.flatMap(segments(hfs, dir, _)).toSet
+    val everReferenced = vs.flatMap(segments(hfs, dir, _)).toSet
     drop.foreach(v => hfs.delete(new HPath(s"$dir/_graft_log/$v.json"), false))
     val dataDir = new HPath(s"$dir/data")
     val cutoff = System.currentTimeMillis() - orphanGraceMs
@@ -791,96 +586,195 @@ object VersionedTable {
     */
   val DefaultOrphanGraceMs: Long = 60L * 60 * 1000
 
-  private val VersionFile = """(\d+)\.json""".r
+  // ---- reads: one path from a version to its segment files ----------
+
+  /** The snapshot at `asOf` (the head when None), opening only the
+    * segments `keep` admits.
+    */
+  private def snapshot(spark: SparkSession, dir: String, asOf: Option[Long])
+                      (keep: (FileSystem, String) => Boolean): DataFrame = {
+    val hfs = fs(spark, dir)
+    val segs = segments(hfs, dir, asOf.getOrElse(head(hfs, dir)))
+    scan(spark, dir, segs, keep(hfs, _))
+  }
+
+  /** The segments `keep` admits out of `segs`, read with `mergeSchema`
+    * (see [[read]]); when it admits none, an empty frame of the shape
+    * of all of `segs`.
+    */
+  private def scan(spark: SparkSession, dir: String, segs: Seq[String],
+                   keep: String => Boolean = _ => true): DataFrame = {
+    val kept = segs.filter(keep)
+    def parquet(ss: Seq[String]) =
+      spark.read.option("mergeSchema", "true").parquet(ss.map(s => s"$dir/data/$s"): _*)
+    if (kept.isEmpty) parquet(segs).filter(lit(false)) else parquet(kept)
+  }
+
+  // ---- segments and their sidecars -----------------------------------
+
+  private def nonce(): String = java.util.UUID.randomUUID().toString.take(8)
+
+  /** `c<version>-<nonce><tag>`: the version it first aimed at, a
+    * writer-unique nonce, and its origin (`-m` merge, `-dN` delete,
+    * `-o`/`-z` optimize, none for a plain commit).
+    */
+  private def segmentName(v: Long, tag: String): String = s"c$v-${nonce()}$tag"
+
+  /** Segment writer for a whole frame; the segment is always kept. */
+  private def zstd(df: DataFrame): String => Boolean = { path =>
+    df.write.mode("errorifexists").option("compression", "zstd").parquet(path)
+    true
+  }
+
+  /** Fill segment `name` through `write` (handed the segment's path),
+    * then seal it with the requested sidecars — built from the files
+    * just written, inside the segment, before any manifest names it,
+    * so they are part of the commit. `write` returns false to discard
+    * the segment (every row of it deleted): its directory goes before
+    * any sidecar is built. Returns the name of a kept segment.
+    */
+  private def writeSegment(spark: SparkSession, hfs: FileSystem, dir: String, name: String,
+                           statsCol: Option[String], bloomCol: Option[String])
+                          (write: String => Boolean): Option[String] = {
+    val path = s"$dir/data/$name"
+    if (!write(path)) { hfs.delete(new HPath(path), true); None }
+    else {
+      statsCol.foreach(writeStatsSidecar(spark, hfs, path, _))
+      bloomCol.foreach(writeBloomSidecar(spark, hfs, path, _))
+      Some(name)
+    }
+  }
+
+  private val StatsFile = "_graft_stats.json"
+  private val BloomFile = "_graft_bloom.json"
+
+  /** One-column scan of a just-written segment (at footer-stats
+    * maturity this becomes a metadata read; the sidecar contract —
+    * and the pruning it feeds — is identical either way). NaN/
+    * Infinity are not JSON atoms — a segment with non-finite bounds
+    * publishes NO sidecar and is simply always read (conservative).
+    */
+  private def writeStatsSidecar(spark: SparkSession, hfs: FileSystem,
+                                path: String, c: String): Unit = {
+    import org.apache.spark.sql.functions.{max, min}
+    val r = spark.read.parquet(path)
+      .agg(min(col(c)).cast("double"), max(col(c)).cast("double")).head()
+    if (!r.isNullAt(0) &&
+        java.lang.Double.isFinite(r.getDouble(0)) &&
+        java.lang.Double.isFinite(r.getDouble(1)))
+      SmallFiles.publish(hfs, new HPath(path, StatsFile),
+        s"""{"column": "$c", "min": ${r.getDouble(0)}, "max": ${r.getDouble(1)}}""")
+  }
+
+  /** Bloom sidecar for POINT lookups: min/max stats prune only when
+    * the data is clustered by the key — on a high-cardinality
+    * unclustered key every segment's range spans everything and
+    * readWhere opens all of them; a per-segment bloom still answers
+    * "definitely not here". Built distributed (partial filters
+    * bit-or merged — no key list at the driver), sized to the
+    * segment's exact key count. An all-null/empty segment publishes
+    * NO sidecar and is simply always read — the conservative rule.
+    */
+  private def writeBloomSidecar(spark: SparkSession, hfs: FileSystem,
+                                path: String, c: String): Unit = {
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+    val segDf = spark.read.parquet(path)
+    require(Seq(ByteType, ShortType, IntegerType, LongType)
+        .contains(segDf.schema(c).dataType),
+      s"bloomCol '$c' must be integral (bloom keys hash as longs): " +
+        segDf.schema(c).dataType)
+    val keys = segDf.filter(col(c).isNotNull).select(col(c).cast("long").as(c))
+    val n = keys.count()
+    if (n > 0) {
+      val b64 = java.util.Base64.getEncoder.encodeToString(
+        graft.expressions.BloomKernels.serialize(
+          keys.stat.bloomFilter(c, n, 0.01)))
+      SmallFiles.publish(hfs, new HPath(path, BloomFile),
+        s"""{"column": "$c", "n": $n, "fpp": 0.01, "bits_b64": "$b64"}""")
+    }
+  }
+
+  /** The ONE reader of a segment's pruning evidence: the sidecar
+    * `file` of `segment` if it exists, can be read and was built on
+    * `column`. Anything else is no evidence, and no evidence never
+    * clears a segment: every caller keeps (or rewrites) a segment it
+    * cannot clear — a read or a rewrite too many, never a row missed.
+    */
+  private def sidecar(hfs: FileSystem, dir: String, segment: String,
+                      file: String, column: String): Option[String] =
+    try {
+      val p = new HPath(s"$dir/data/$segment/$file")
+      if (!hfs.exists(p)) None
+      else Some(SmallFiles.read(hfs, p)).filter(json =>
+        """"column"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(json).exists(_.group(1) == column))
+    } catch { case NonFatal(_) => None }
+
+  /** `column`'s recorded [min, max] over `segment`. */
+  private def statsRange(hfs: FileSystem, dir: String, segment: String,
+                         column: String): Option[(Double, Double)] =
+    sidecar(hfs, dir, segment, StatsFile, column).flatMap { json =>
+      for {
+        min <- DoubleField("min").findFirstMatchIn(json)
+        max <- DoubleField("max").findFirstMatchIn(json)
+      } yield (min.group(1).toDouble, max.group(1).toDouble)
+    }
 
   // A JSON double as Scala's Double.toString emits it — including
   // scientific notation with NEGATIVE exponents ("1.0E-5").
   private def DoubleField(name: String) =
     ("\"" + name + """"\s*:\s*(-?\d+(?:\.\d+)?(?:[eE][+-]?\d+)?)""").r
 
-  /** Every committed version number under the log dir. */
-  private def versions(hfs: FileSystem, dir: String): Seq[Long] = {
-    val log = new HPath(s"$dir/_graft_log")
-    if (!hfs.exists(log)) Seq.empty
-    else hfs.listStatus(log).map(_.getPath.getName)
-      .collect { case VersionFile(v) => v.toLong }.toSeq
-  }
+  /** `column`'s bloom filter over `segment`'s keys. */
+  private def bloomFilter(hfs: FileSystem, dir: String, segment: String,
+                          column: String): Option[BloomFilter] =
+    sidecar(hfs, dir, segment, BloomFile, column).flatMap { json =>
+      """"bits_b64"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(json).flatMap { m =>
+        // a corrupt header can ask for an impossible bit array: an
+        // OutOfMemoryError here is that allocation refused, not the heap
+        try Some(graft.expressions.BloomKernels.deserialize(
+          java.util.Base64.getDecoder.decode(m.group(1))))
+        catch { case NonFatal(_) | _: OutOfMemoryError => None }
+      }
+    }
 
-  private def segments(spark: SparkSession, dir: String, v: Long): Seq[String] = {
-    val hfs = fs(spark, dir)
-    if (!hfs.exists(new HPath(s"$dir/_graft_log/$v.json")))
-      throw new java.util.NoSuchElementException(s"version $v not found under $dir/_graft_log")
-    segmentNames(manifestJson(hfs, dir, v))
-  }
+  // ---- snapshot-derived commits --------------------------------------
 
-  private def manifestJson(hfs: FileSystem, dir: String, v: Long): String =
-    readText(hfs, new HPath(s"$dir/_graft_log/$v.json"))
-
-  private def readText(hfs: FileSystem, p: HPath): String = {
-    val in = hfs.open(p)
-    try new String(org.apache.commons.io.IOUtils.toByteArray(in), StandardCharsets.UTF_8)
-    finally in.close()
-  }
-
-  /** Atomic single-file publish THROUGH the table's FileSystem (a
-    * java.nio write would land on the driver's local disk for any
-    * remote `dir` and the commit would be silently invisible):
-    * write to a dot-tmp sibling, rename into place. Rename of one
-    * file is atomic on HDFS/local; see the class scaladoc for the
-    * object-store variant. Used for SEGMENT-LOCAL sidecars, where the
-    * segment dir is owned by exactly one writer; the manifest slot —
-    * the contended resource — goes through [[claimSlot]] instead.
+  /** One snapshot-DERIVED commit in the making (optimize, delete,
+    * merge, restore): it resolves the head `base` and reads its
+    * manifest once, writes its fresh segments for version `base + 1`
+    * with the requested sidecars, and publishes through
+    * [[publishDerived]] with the head's txn markers carried forward
+    * (plus `txn`) — so every derived mode shares one conflict rule.
     */
-  private def publish(hfs: FileSystem, tmp: HPath, dest: HPath, content: String): Unit = {
-    val out = hfs.create(tmp, true)
-    try out.write(content.getBytes(StandardCharsets.UTF_8)) finally out.close()
-    if (!hfs.rename(tmp, dest)) {
-      hfs.delete(tmp, false)
-      throw new java.io.IOException(s"VersionedTable: publish $tmp -> $dest failed")
+  private final class Rewrite(spark: SparkSession, dir: String,
+                              statsCol: Option[String] = None,
+                              bloomCol: Option[String] = None,
+                              txn: Option[(String, Long)] = None) {
+    requireJsonSafe(statsCol, bloomCol, txn)
+    val hfs: FileSystem = fs(spark, dir)
+    val base: Long = head(hfs, dir)
+    private val manifest = manifestJson(hfs, dir, base)
+    /** The segments visible at `base`. */
+    val segments: Seq[String] = segmentNames(manifest)
+
+    /** A fresh segment for `base + 1`; see [[writeSegment]]. */
+    def segment(tag: String)(write: String => Boolean): Option[String] =
+      writeSegment(spark, hfs, dir, segmentName(base + 1, s"-$tag"), statsCol, bloomCol)(write)
+
+    /** Publish `base + 1` listing `segs`; returns that version. */
+    def publish(mode: String, segs: Seq[String], what: String): Long = {
+      publishDerived(hfs, dir, base,
+        renderManifest(base + 1, mode, segs, withTxn(txnsOf(manifest), txn)), what)
+      base + 1
     }
   }
 
-  /** CAS on the manifest slot: publish `content` as version `v`'s
-    * manifest IFF no concurrent committer claimed `v` first; returns
-    * whether THIS caller won. The content is fully written to a
-    * writer-unique dot-tmp sibling before the claim, so the slot file
-    * can never be observed half-written whoever wins.
-    *
-    * The atomic fail-if-exists primitive is store-specific — exactly
-    * the "log-store CAS on the manifest slot" every table format
-    * needs: on local filesystems, hard-LINK creation (POSIX link(2)
-    * fails with EEXIST atomically — a plain rename would silently
-    * OVERWRITE a concurrent winner's manifest, losing its commit);
-    * on HDFS, the FileSystem.rename contract itself (rename onto an
-    * existing destination fails, atomically in the NameNode). An
-    * object store without either swaps this one method for a
-    * conditional put (`If-None-Match: *`).
+  /** Test seam: runs after a derived rewrite has read its snapshot and
+    * written its segments, immediately before the manifest claim —
+    * lets a spec interleave a competing commit deterministically.
+    * Production no-op.
     */
-  private def claimSlot(hfs: FileSystem, dir: String, v: Long, content: String): Boolean = {
-    val dest = new HPath(s"$dir/_graft_log/$v.json")
-    if (hfs.exists(dest)) return false // cheap pre-check; the claim below is the gate
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = new HPath(s"$dir/_graft_log/.$v.json.$nonce.tmp")
-    val out = hfs.create(tmp, true)
-    try out.write(content.getBytes(StandardCharsets.UTF_8)) finally out.close()
-    val claimed =
-      if (hfs.getScheme == "file")
-        try {
-          java.nio.file.Files.createLink(
-            java.nio.file.Paths.get(dest.toUri.getPath),
-            java.nio.file.Paths.get(tmp.toUri.getPath))
-          true
-        } catch { case _: java.nio.file.FileAlreadyExistsException => false }
-      else !hfs.exists(dest) && hfs.rename(tmp, dest)
-    hfs.delete(tmp, false) // no-op where the rename already consumed it
-    claimed
-  }
-
-  private def txnsJson(txns: Map[String, Long]): String =
-    if (txns.isEmpty) ""
-    else txns.toSeq.sortBy(_._1)
-      .map { case (a, s) => s""""$a": $s""" }
-      .mkString(""", "txns": {""", ", ", "}")
+  private[graft] var beforeDerivedClaim: () => Unit = () => ()
 
   /** Publish a SNAPSHOT-DERIVED commit (optimize / delete / merge /
     * restore): the caller read the table at `basedOn` and rewrote
@@ -891,13 +785,6 @@ object VersionedTable {
     * caller's already-written segments stay invisible orphans for
     * [[vacuum]].
     */
-  /** Test seam: runs after a derived rewrite has read its snapshot and
-    * written its segments, immediately before the manifest claim —
-    * lets a spec interleave a competing commit deterministically.
-    * Production no-op.
-    */
-  private[graft] var beforeDerivedClaim: () => Unit = () => ()
-
   private def publishDerived(hfs: FileSystem, dir: String, basedOn: Long,
                              json: String, what: String): Unit = {
     beforeDerivedClaim()
@@ -909,6 +796,52 @@ object VersionedTable {
           "and retry (the rewrite's segments are invisible orphans, " +
           "reclaimed by vacuum)")
   }
+
+  // ---- the manifest log ----------------------------------------------
+
+  private val VersionFile = """(\d+)\.json""".r
+
+  /** Every committed version number under the log dir. */
+  private def versions(hfs: FileSystem, dir: String): Seq[Long] = {
+    val log = new HPath(s"$dir/_graft_log")
+    if (!hfs.exists(log)) Seq.empty
+    else hfs.listStatus(log).map(_.getPath.getName)
+      .collect { case VersionFile(v) => v.toLong }.toSeq
+  }
+
+  /** The highest committed version; throws on a table never committed. */
+  private def head(hfs: FileSystem, dir: String): Long =
+    versions(hfs, dir).maxOption.getOrElse(
+      throw new java.util.NoSuchElementException(s"no committed version under $dir"))
+
+  private def segments(hfs: FileSystem, dir: String, v: Long): Seq[String] = {
+    if (!hfs.exists(new HPath(s"$dir/_graft_log/$v.json")))
+      throw new java.util.NoSuchElementException(s"version $v not found under $dir/_graft_log")
+    segmentNames(manifestJson(hfs, dir, v))
+  }
+
+  private def manifestJson(hfs: FileSystem, dir: String, v: Long): String =
+    SmallFiles.read(hfs, new HPath(s"$dir/_graft_log/$v.json"))
+
+  /** The ONE manifest renderer, for every commit mode: version, mode,
+    * the visible segments in order, and the writer txn markers sorted
+    * by writer (the key is omitted when there are none).
+    */
+  private def renderManifest(v: Long, mode: String, segments: Seq[String],
+                             txns: Map[String, Long]): String = {
+    val segs = segments.map(s => s""""$s"""").mkString("[", ", ", "]")
+    val markers =
+      if (txns.isEmpty) ""
+      else txns.toSeq.sortBy(_._1).map { case (a, s) => s""""$a": $s""" }
+        .mkString(""", "txns": {""", ", ", "}")
+    s"""{"version": $v, "mode": "$mode", "segments": $segs$markers}"""
+  }
+
+  /** `txns` with `txn`'s writer raised to at least its sequence number. */
+  private def withTxn(txns: Map[String, Long], txn: Option[(String, Long)]): Map[String, Long] =
+    txn.foldLeft(txns) {
+      case (m, (app, seq)) => m.updated(app, math.max(seq, m.getOrElse(app, Long.MinValue)))
+    }
 
   // Manifests are machine-written flat JSON (this object is the only
   // writer) — regex extraction, same contract as MedallionCatalog.
@@ -931,6 +864,40 @@ object VersionedTable {
       seq <- """"txn_version"\s*:\s*(-?\d+)""".r.findFirstMatchIn(json).map(_.group(1).toLong)
     } yield Map(app -> seq)
     mapForm.orElse(legacyForm).getOrElse(Map.empty)
+  }
+
+  /** CAS on the manifest slot: publish `content` as version `v`'s
+    * manifest IFF no concurrent committer claimed `v` first; returns
+    * whether THIS caller won. The content is fully written to a
+    * writer-unique dot-tmp sibling before the claim, so the slot file
+    * can never be observed half-written whoever wins.
+    *
+    * The atomic fail-if-exists primitive is store-specific — exactly
+    * the "log-store CAS on the manifest slot" every table format
+    * needs: on local filesystems, hard-LINK creation (POSIX link(2)
+    * fails with EEXIST atomically — a plain rename would silently
+    * OVERWRITE a concurrent winner's manifest, losing its commit);
+    * on HDFS, the FileSystem.rename contract itself (rename onto an
+    * existing destination fails, atomically in the NameNode). An
+    * object store without either swaps this one method for a
+    * conditional put (`If-None-Match: *`).
+    */
+  private def claimSlot(hfs: FileSystem, dir: String, v: Long, content: String): Boolean = {
+    val dest = new HPath(s"$dir/_graft_log/$v.json")
+    if (hfs.exists(dest)) return false // cheap pre-check; the claim below is the gate
+    val tmp = new HPath(s"$dir/_graft_log/.$v.json.${nonce()}.tmp")
+    SmallFiles.write(hfs, tmp, content)
+    val claimed =
+      if (hfs.getScheme == "file")
+        try {
+          java.nio.file.Files.createLink(
+            java.nio.file.Paths.get(dest.toUri.getPath),
+            java.nio.file.Paths.get(tmp.toUri.getPath))
+          true
+        } catch { case _: java.nio.file.FileAlreadyExistsException => false }
+      else !hfs.exists(dest) && hfs.rename(tmp, dest)
+    hfs.delete(tmp, false) // no-op where the rename already consumed it
+    claimed
   }
 
   private def fs(spark: SparkSession, dir: String): FileSystem =

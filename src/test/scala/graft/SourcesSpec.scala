@@ -88,20 +88,32 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("medallion sink: partitioned zstd layout + atomic quality sidecar") {
-    val root = Files.createTempDirectory("graft_lake").toString
-    val df = Seq(
-      (1L, 2024, 1, "a"), (2L, 2024, 1, "b"), (3L, 2024, 2, "c"))
-      .toDF("id", "year", "month", "payload")
-    val rows = MedallionSink.write(df, root, "events_t", Seq("year", "month"),
-      extraStats = Map("n_quarantined" -> 0L))
-    assert(rows == 3)
-    assert(Files.exists(Paths.get(root, "dataset=events_t", "year=2024", "month=1")))
-    assert(Files.exists(Paths.get(root, "dataset=events_t", "year=2024", "month=2")))
-    val back = spark.read.parquet(s"$root/dataset=events_t")
-    assert(back.count() == 3)
-    assert(back.select("year").distinct().as[Int].collect().toSet == Set(2024))
-    val quality = Files.readString(Paths.get(root, "dataset=events_t", "_quality.json"))
-    assert(quality.contains("\"rows_written\": 3") && quality.contains("\"n_quarantined\": 0"))
+    // a bare local path and a Hadoop-qualified `file://` root (the form
+    // any hdfs:// root takes) must land the same layout and sidecar
+    val bare = Files.createTempDirectory("graft_lake").toString
+    val qualified = Files.createTempDirectory("graft_lake_q").toString
+    for ((root, local) <- Seq(bare -> bare, s"file://$qualified" -> qualified)) {
+      val df = Seq(
+        (1L, 2024, 1, "a"), (2L, 2024, 1, "b"), (3L, 2024, 2, "c"))
+        .toDF("id", "year", "month", "payload")
+      val rows = MedallionSink.write(df, root, "events_t", Seq("year", "month"),
+        extraStats = Map("n_quarantined" -> 0L))
+      assert(rows == 3)
+      assert(Files.exists(Paths.get(local, "dataset=events_t", "year=2024", "month=1")))
+      assert(Files.exists(Paths.get(local, "dataset=events_t", "year=2024", "month=2")))
+      val back = spark.read.parquet(s"$root/dataset=events_t")
+      assert(back.count() == 3)
+      assert(back.select("year").distinct().as[Int].collect().toSet == Set(2024))
+      val quality = Files.readString(Paths.get(local, "dataset=events_t", "_quality.json"))
+      assert(quality ==
+        """{"dataset": "events_t", "rows_written": 3, "n_quarantined": 0}""", root)
+      // published in place: no tmp file and no checksum twin left behind
+      assert(Files.list(Paths.get(local)).toArray.map(_.toString)
+        .filter(_.contains("quality")).isEmpty, root)
+      assert(Files.list(Paths.get(local, "dataset=events_t")).toArray
+        .map(_.toString.split('/').last).filter(_.contains("quality")).toSeq ==
+        Seq("_quality.json"), root)
+    }
   }
 
   test("meta sidecars land for a multi-hundred-partition write (executor-side I/O)") {

@@ -365,6 +365,79 @@ class VersionedTableSpec extends SparkSpec {
     assert(VersionedTable.lastTxnVersion(spark, dir, "upserter").contains(3L))
   }
 
+  test("merge: an unreadable bloom sidecar never clears its segment") {
+    val dir = Files.createTempDirectory("graft_vt_merge_badbloom").toString
+    for (lo <- Seq(1L, 11L))
+      VersionedTable.commit((lo to lo + 9).map(k => (k, s"v$k")).toDF("k", "v"),
+        dir, bloomCol = Some("k"))
+    // truncate the first segment's filter: the base64 still decodes,
+    // the filter inside it does not (its checksum twin goes too, so the
+    // file itself stays readable)
+    val first = new java.io.File(s"$dir/data").listFiles().map(_.getName)
+      .filter(_.startsWith("c0-")).head
+    val bloom = java.nio.file.Paths.get(dir, "data", first, "_graft_bloom.json")
+    Files.writeString(bloom, Files.readString(bloom)
+      .replaceFirst("(\"bits_b64\": \"[^\"]{8})[^\"]*", "$1"))
+    Files.deleteIfExists(bloom.resolveSibling("._graft_bloom.json.crc"))
+    // readers treat it as "might contain"
+    assert(VersionedTable.readPoint(spark, dir, "k", 5L).count() == 1)
+    val (v, rewritten, updated, inserted) = VersionedTable.merge(spark, dir,
+      Seq((5L, "NEW5"), (99L, "NEW99")).toDF("k", "v"), "k", bloomCol = Some("k"))
+    // c0 rewritten because its bloom cannot be read; c1's bloom clears it
+    assert((v, rewritten, updated, inserted) == ((2L, 1, 1L, 1L)))
+    val expected = (1L to 20L).map(k => k -> s"v$k").toMap ++
+      Map(5L -> "NEW5", 99L -> "NEW99")
+    val got = VersionedTable.read(spark, dir).collect()
+    assert(got.length == expected.size)
+    assert(got.map(r => r.getLong(0) -> r.getString(1)).toMap == expected)
+  }
+
+  test("on-disk format: every manifest and sidecar, byte for byte (nonces masked)") {
+    import scala.jdk.CollectionConverters._
+    val dir = Files.createTempDirectory("graft_vt_format").toString
+    def rows(ks: Seq[Long]) = ks.map(k => (k, k % 3, s"v$k")).toDF("k", "x", "v")
+    val k = Some("k")
+    VersionedTable.commit(rows(1L to 4L), dir, statsCol = k, bloomCol = k,
+      txn = Some(("w", 1L)))                                                   // v0
+    VersionedTable.commit(rows(1L to 6L), dir, overwrite = true, statsCol = k) // v1
+    VersionedTable.commit(rows(20L to 22L), dir, statsCol = k)                 // v2
+    VersionedTable.merge(spark, dir, rows(Seq(2L, 9L)), "k", statsCol = k,
+      txn = Some(("m", 3L)))                                                   // v3
+    VersionedTable.deleteWhere(spark, dir, "k", 21L, statsCol = k, bloomCol = k) // v4
+    VersionedTable.restore(spark, dir, 1L)                                     // v5
+    VersionedTable.optimizeCompact(spark, dir)                                 // v6
+    VersionedTable.optimizeZOrder(spark, dir, Seq("k", "x"), nFiles = 1)      // v7
+    def mask(s: String) = s.replaceAll("""c(\d+)-[0-9a-f]{8}""", "c$1-NONCE")
+    def text(p: java.nio.file.Path) = mask(Files.readString(p))
+    val log = java.nio.file.Paths.get(dir, "_graft_log")
+    val manifests = (0 to 7).map(v => text(log.resolve(s"$v.json")))
+    assert(Files.list(log).iterator().asScala.map(_.getFileName.toString)
+      .filterNot(_.endsWith(".crc")).toSeq.sorted == (0 to 7).map(v => s"$v.json"))
+    assert(manifests == Seq(
+      """{"version": 0, "mode": "append", "segments": ["c0-NONCE"], "txns": {"w": 1}}""",
+      """{"version": 1, "mode": "overwrite", "segments": ["c1-NONCE"], "txns": {"w": 1}}""",
+      """{"version": 2, "mode": "append", "segments": ["c1-NONCE", "c2-NONCE"], "txns": {"w": 1}}""",
+      """{"version": 3, "mode": "merge", "segments": ["c2-NONCE", "c3-NONCE-m"], "txns": {"m": 3, "w": 1}}""",
+      """{"version": 4, "mode": "delete", "segments": ["c3-NONCE-m", "c4-NONCE-d0"], "txns": {"m": 3, "w": 1}}""",
+      """{"version": 5, "mode": "restore", "segments": ["c1-NONCE"], "txns": {"m": 3, "w": 1}}""",
+      """{"version": 6, "mode": "overwrite", "segments": ["c6-NONCE-o"], "txns": {"m": 3, "w": 1}}""",
+      """{"version": 7, "mode": "overwrite", "segments": ["c7-NONCE-z"], "txns": {"m": 3, "w": 1}}"""))
+    val data = java.nio.file.Paths.get(dir, "data")
+    val sidecars = Files.list(data).iterator().asScala.toSeq.flatMap { seg =>
+      Seq("_graft_stats.json", "_graft_bloom.json").map(seg.resolve)
+        .filter(Files.exists(_))
+        .map(p => s"${mask(seg.getFileName.toString)}/${p.getFileName}: ${text(p)}")
+    }.sorted
+    assert(sidecars == Seq(
+      """c0-NONCE/_graft_bloom.json: {"column": "k", "n": 4, "fpp": 0.01, "bits_b64": "AAAAAgAAAAcAAAAAAAAAAaFNFEMCHKTA"}""",
+      """c0-NONCE/_graft_stats.json: {"column": "k", "min": 1.0, "max": 4.0}""",
+      """c1-NONCE/_graft_stats.json: {"column": "k", "min": 1.0, "max": 6.0}""",
+      """c2-NONCE/_graft_stats.json: {"column": "k", "min": 20.0, "max": 22.0}""",
+      """c3-NONCE-m/_graft_stats.json: {"column": "k", "min": 1.0, "max": 9.0}""",
+      """c4-NONCE-d0/_graft_bloom.json: {"column": "k", "n": 2, "fpp": 0.01, "bits_b64": "AAAAAgAAAAcAAAAAAAAAAYIEiBAIgECJ"}""",
+      """c4-NONCE-d0/_graft_stats.json: {"column": "k", "min": 20.0, "max": 22.0}"""))
+  }
+
   test("restore: head rolls back by reference, history and txn markers survive") {
     import org.apache.spark.sql.functions.col
     val dir = Files.createTempDirectory("graft_vt_restore").toString

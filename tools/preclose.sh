@@ -15,12 +15,12 @@ OUT=/tmp/graft_preclose_$$
 echo "== full test suite =="
 sbt -batch test
 echo "== fresh Verify dump @ $SF =="
-SPARK_GRAFT_CPUS=16 sbt -batch "runMain graft.Verify $SF $OUT"
+SPARK_GRAFT_CPUS="$(nproc)" sbt -batch "runMain graft.Verify $SF $OUT"
 echo "== fresh DuckDB compare =="
 python3 tools/check.py "$SF" "$OUT"
 if [ -n "$REPLICA" ]; then
   echo "== 10x replica sweep @ $REPLICA =="
-  SPARK_GRAFT_CPUS=16 sbt -batch "runMain graft.Verify $REPLICA ${OUT}_replica"
+  SPARK_GRAFT_CPUS="$(nproc)" sbt -batch "runMain graft.Verify $REPLICA ${OUT}_replica"
   python3 tools/check.py "$REPLICA" "${OUT}_replica" --json CORRECTNESS_sf1_new.json
 fi
 echo "preclose: all gates green"
