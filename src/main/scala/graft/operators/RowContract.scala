@@ -43,15 +43,6 @@ object RowContract {
 
   // ── Pydantic-helper twins (contracts.py:28-43) ────────────────────
 
-  /** `_require_nonempty`: strip; empty/null fails with `reason`. */
-  def requiredNonempty(name: String, reason: String): Field =
-    Field(name, c => nullif(trim(c), lit("")),
-      Seq(reason -> (c => c.isNotNull)))
-
-  /** `_upper_or_none`: strip + upper, empty to NULL; never fails. */
-  def upperOrNone(name: String): Field =
-    Field(name, c => nullif(upper(trim(c)), lit("")))
-
   /** Upper-or-none that must also land in an allowed code set (the
     * Literal["LABORAL",...] pattern): null passes unless `required`.
     */

@@ -59,8 +59,15 @@ object MedallionSink {
     * truth; recovery in [[recoverSwap]] depends on every site
     * agreeing on these exact strings.
     */
-  val TmpSuffix = ".__graft_tmp"
-  val OldSuffix = ".__graft_old"
+  private[sources] val TmpSuffix = ".__graft_tmp"
+  private[sources] val OldSuffix = ".__graft_old"
+
+  /** The (writer, batch id) marker a replay-guarded writer records
+    * inside its target ([[replaceDir]]'s `marker`, read back by
+    * [[lastBatch]]). The leading '_' hides it from parquet reads; it
+    * travels with every swap, [[compact]]'s included.
+    */
+  private val CommitFile = "_graft_commit.json"
 
   /** Small-file compaction — the lake-maintenance operator every
     * incremental load pattern eventually needs (each micro-batch /
@@ -69,8 +76,8 @@ object MedallionSink {
     * one task per partition-directory group (`repartition` on the
     * partition columns: every directory's rows land in exactly one
     * task, so each directory compacts to ONE file) into a tmp
-    * directory, then crash-safe-swaps it in ([[swapDirs]]) — never a
-    * same-path overwrite, never a whole-lake materialization in
+    * directory, then crash-safe-swaps it in ([[replaceDir]]) — never
+    * a same-path overwrite, never a whole-lake materialization in
     * memory. Directories so large that one file is wrong belong to a
     * cut-partitioned layout (finer partitionCols), not a bigger
     * compactor.
@@ -94,46 +101,92 @@ object MedallionSink {
               partitionCols: Seq[String]): (Long, Long) = {
     import org.apache.spark.sql.functions.col
     val target = s"$root/dataset=$dataset"
-    val tmp = target + TmpSuffix
     val fs = new Path(target).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverSwap(fs, target)
     def nFiles: Long = {
       val it = fs.listFiles(new Path(target), true)
       var n = 0L
       while (it.hasNext) { if (it.next().getPath.getName.endsWith(".parquet")) n += 1 }
       n
     }
-    val before = nFiles
-    readNoInfer(spark, target)
-      .repartition(partitionCols.map(col): _*)
-      .write.mode("overwrite")
-      .option("compression", "zstd")
-      .partitionBy(partitionCols: _*)
-      .parquet(tmp)
-    writeMetaSidecars(readNoInfer(spark, tmp), tmp, partitionCols)
-    // Preserve EVERY top-level underscore sidecar the rewrite did not
-    // regenerate (hidden to parquet reads, but load-bearing state):
-    // `_quality.json`, and on a stream-maintained target the
-    // `_graft_obs/` watermark dir + `_graft_commit.json` batch marker —
-    // losing those would degrade the SCD2 re-observation guard and
-    // re-enable double-apply of a replayed batch id after a compaction.
-    fs.listStatus(new Path(target))
-      .filter(_.getPath.getName.startsWith("_"))
-      .filterNot(s => fs.exists(new Path(tmp, s.getPath.getName)))
-      .foreach { s =>
-        org.apache.hadoop.fs.FileUtil.copy(fs, s.getPath, fs,
-          new Path(tmp, s.getPath.getName), false,
-          spark.sparkContext.hadoopConfiguration)
-      }
-    swapDirs(fs, target)
+    val before = replaceDir(spark, target) { tmp =>
+      val n = nFiles
+      readNoInfer(spark, target)
+        .repartition(partitionCols.map(col): _*)
+        .write.mode("overwrite")
+        .option("compression", "zstd")
+        .partitionBy(partitionCols: _*)
+        .parquet(tmp)
+      writeMetaSidecars(readNoInfer(spark, tmp), tmp, partitionCols)
+      // Preserve EVERY top-level underscore sidecar the rewrite did not
+      // regenerate (hidden to parquet reads, but load-bearing state):
+      // `_quality.json`, and on a stream-maintained target the
+      // `_graft_obs/` watermark dir + `_graft_commit.json` batch marker —
+      // losing those would degrade the SCD2 re-observation guard and
+      // re-enable double-apply of a replayed batch id after a compaction.
+      fs.listStatus(new Path(target))
+        .filter(_.getPath.getName.startsWith("_"))
+        .filterNot(s => fs.exists(new Path(tmp, s.getPath.getName)))
+        .foreach { s =>
+          org.apache.hadoop.fs.FileUtil.copy(fs, s.getPath, fs,
+            new Path(tmp, s.getPath.getName), false,
+            spark.sparkContext.hadoopConfiguration)
+        }
+      n
+    }
     (before, nFiles)
+  }
+
+  /** THE crash-safe replacement of directory `target`, shared by
+    * [[compact]] and the streaming sinks' upsert: heal whatever a
+    * crashed earlier swap left ([[recoverSwap]]), let `fill` write the
+    * new contents — data plus any sidecars that must replace
+    * atomically with it — into `target + TmpSuffix`, then swap that in
+    * ([[swapDirs]]; a plain delete-then-rename would lose the WHOLE
+    * table to a crash between the two calls). `fill` runs on the
+    * healed target, so it may read the current contents — the tmp
+    * write never overwrites the files it reads; its result is
+    * returned. `marker = Some((writer, batchId))` also records that
+    * batch in the new contents' commit marker, so data and marker
+    * replace together.
+    */
+  private[graft] def replaceDir[A](spark: org.apache.spark.sql.SparkSession, target: String,
+                                   marker: Option[(String, Long)] = None)
+                                  (fill: String => A): A = {
+    val fs = new Path(target).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    recoverSwap(fs, target)
+    val tmp = target + TmpSuffix
+    val out = fill(tmp)
+    marker.foreach { case (writer, batchId) =>
+      SmallFiles.write(fs, new Path(tmp, CommitFile),
+        s"""{"batch_id": $batchId, "query_id": "$writer"}""")
+    }
+    swapDirs(fs, target)
+    out
+  }
+
+  /** The last batch id `writer` recorded in `target` through
+    * [[replaceDir]]'s marker; None without a marker, or with another
+    * writer's (a marker that names no writer included). Heals a
+    * half-finished swap first, like every entry into the protocol: a
+    * target renamed aside by a crash must be read, not missed.
+    */
+  private[graft] def lastBatch(spark: org.apache.spark.sql.SparkSession, target: String,
+                               writer: String): Option[Long] = {
+    val fs = new Path(target).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    recoverSwap(fs, target)
+    val p = new Path(target, CommitFile)
+    if (!fs.exists(p)) return None
+    val text = SmallFiles.read(fs, p)
+    val q = """"query_id"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(text).map(_.group(1))
+    if (!q.contains(writer)) None
+    else """"batch_id"\s*:\s*(\d+)""".r.findFirstMatchIn(text).map(_.group(1).toLong)
   }
 
   /** Crash-safe replacement of `target` by `target + TmpSuffix`:
     * rename target aside, rename tmp in, drop the old copy — every
     * rename CHECKED (a false return throws instead of dropping data),
-    * every intermediate state recoverable by [[recoverSwap]]. Shared
-    * by [[compact]] and the streaming sinks' upsert.
+    * every intermediate state recoverable by [[recoverSwap]]. Called
+    * only by [[replaceDir]].
     *
     * ASSUMPTIONS (hold for HDFS / local FS, the container for
     * durability here is a filesystem with atomic directory rename):
@@ -147,7 +200,7 @@ object MedallionSink {
     *    table-format commit instead — on such a lake this operator's
     *    body is a transactional REPLACE TABLE, not directory renames.
     */
-  def swapDirs(fs: org.apache.hadoop.fs.FileSystem, target: String): Unit = {
+  private[sources] def swapDirs(fs: org.apache.hadoop.fs.FileSystem, target: String): Unit = {
     val tPath = new Path(target)
     val tmpPath = new Path(target + TmpSuffix)
     val oldPath = new Path(target + OldSuffix)
@@ -165,7 +218,7 @@ object MedallionSink {
     * both present (died before the old copy was dropped) -> drop the
     * leftover.
     */
-  def recoverSwap(fs: org.apache.hadoop.fs.FileSystem, target: String): Unit = {
+  private[sources] def recoverSwap(fs: org.apache.hadoop.fs.FileSystem, target: String): Unit = {
     val tPath = new Path(target)
     val oldPath = new Path(target + OldSuffix)
     if (!fs.exists(tPath) && fs.exists(oldPath)) {

@@ -2,9 +2,9 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.DecimalType
 
 /** Structured-streaming twins of the batch operators.
@@ -95,20 +95,14 @@ object StreamOps {
     */
   def driftAlertSink(stream: DataFrame, checkpoint: String, target: String,
                      valueCol: String, baselineCounts: Seq[Long],
-                     lo: Double, hi: Double, alertTv: Double = 0.2):
-      org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        driftAlertBatch(batch.toDF(), target, valueCol, baselineCounts,
-          lo, hi, alertTv, batchId)
-      }
+                     lo: Double, hi: Double, alertTv: Double = 0.2): DataStreamWriter[Row] =
+    batchSink(stream, checkpoint)(
+      driftAlertBatch(_, target, valueCol, baselineCounts, lo, hi, alertTv, _))
 
   private[graft] def driftAlertBatch(batch: DataFrame, target: String,
                                      valueCol: String, baselineCounts: Seq[Long],
                                      lo: Double, hi: Double, alertTv: Double,
-                                     batchId: Long = -1L,
+                                     batchId: Long,
                                      writerId: Option[String] = None): Unit = {
     val k = baselineCounts.size
     require(k >= 2, s"need at least 2 baseline buckets: $k")
@@ -172,19 +166,12 @@ object StreamOps {
     */
   def cusumAlertSink(stream: DataFrame, checkpoint: String, target: String,
                      valueCol: String, baselineMean: Double,
-                     threshold: Double):
-      org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        cusumAlertBatch(batch.toDF(), target, valueCol, baselineMean,
-          threshold, batchId)
-      }
+                     threshold: Double): DataStreamWriter[Row] =
+    batchSink(stream, checkpoint)(cusumAlertBatch(_, target, valueCol, baselineMean, threshold, _))
 
   private[graft] def cusumAlertBatch(batch: DataFrame, target: String,
                                      valueCol: String, baselineMean: Double,
-                                     threshold: Double, batchId: Long = -1L,
+                                     threshold: Double, batchId: Long,
                                      writerId: Option[String] = None): Unit = {
     require(threshold > 0, s"cusumAlertBatch: threshold must be positive: $threshold")
     import org.apache.spark.sql.types.DecimalType
@@ -232,19 +219,13 @@ object StreamOps {
     * |cols| rows per batch — monitoring-sized, never data-sized.
     */
   def schemaDriftSink(stream: DataFrame, checkpoint: String, target: String,
-                      cols: Seq[String], expected: Map[String, String]):
-      org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        schemaDriftBatch(batch.toDF(), target, cols, expected, batchId)
-      }
+                      cols: Seq[String], expected: Map[String, String]): DataStreamWriter[Row] =
+    batchSink(stream, checkpoint)(schemaDriftBatch(_, target, cols, expected, _))
 
   private[graft] def schemaDriftBatch(batch: DataFrame, target: String,
                                       cols: Seq[String],
                                       expected: Map[String, String],
-                                      batchId: Long = -1L,
+                                      batchId: Long,
                                       writerId: Option[String] = None): Unit = {
     require(cols.nonEmpty && cols.forall(expected.contains),
       s"every checked column needs an expected type: $cols vs ${expected.keys}")
@@ -454,7 +435,7 @@ object StreamOps {
     * within one.
     *
     * The parquet target is replaced through the crash-safe checked-
-    * rename swap (MedallionSink.swapDirs — the merged frame writes to
+    * rename swap (MedallionSink.replaceDir — the merged frame writes to
     * a tmp directory, never over the files it reads, so no mid-query
     * overwrite is possible). On a lake with a transactional table
     * format the same foreachBatch body becomes a real MERGE INTO;
@@ -463,18 +444,12 @@ object StreamOps {
     * construction.
     */
   def mergeSink(stream: DataFrame, checkpoint: String, target: String,
-                grain: Seq[String], order: Seq[String]):
-      org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        mergeBatchToParquet(batch.toDF(), target, grain, order, batchId)
-      }
+                grain: Seq[String], order: Seq[String]): DataStreamWriter[Row] =
+    batchSink(stream, checkpoint)(mergeBatchToParquet(_, target, grain, order, _))
 
   private[graft] def mergeBatchToParquet(batch: DataFrame, target: String,
                                              grain: Seq[String], order: Seq[String],
-                                             batchId: Long = -1L,
+                                             batchId: Long,
                                              writerId: Option[String] = None): Unit = {
     import graft.operators.{Dedup, Merge}
     val incoming = Dedup.latestByGrain(batch, grain, order)
@@ -495,19 +470,13 @@ object StreamOps {
     * counting is THE failure mode of incremental rollups.
     */
   def aggSink(stream: DataFrame, checkpoint: String, target: String,
-              keys: Seq[String], partial: DataFrame => DataFrame):
-      org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        aggBatchToParquet(batch.toDF(), target, keys, partial, batchId)
-      }
+              keys: Seq[String], partial: DataFrame => DataFrame): DataStreamWriter[Row] =
+    batchSink(stream, checkpoint)(aggBatchToParquet(_, target, keys, partial, _))
 
   private[graft] def aggBatchToParquet(batch: DataFrame, target: String,
                                        keys: Seq[String],
                                        partial: DataFrame => DataFrame,
-                                       batchId: Long = -1L,
+                                       batchId: Long,
                                        writerId: Option[String] = None): Unit = {
     import graft.operators.Merge
     val p = partial(batch)
@@ -527,19 +496,13 @@ object StreamOps {
     * same identity rule as the other replay-guarded sinks.
     */
   def sketchSink(stream: DataFrame, checkpoint: String, target: String,
-                 keys: Seq[String], valueCol: String, lgK: Int = 12):
-      org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        sketchBatchToParquet(batch.toDF(), target, keys, valueCol, lgK, batchId)
-      }
+                 keys: Seq[String], valueCol: String, lgK: Int = 12): DataStreamWriter[Row] =
+    batchSink(stream, checkpoint)(sketchBatchToParquet(_, target, keys, valueCol, lgK, _))
 
   private[graft] def sketchBatchToParquet(batch: DataFrame, target: String,
                                           keys: Seq[String], valueCol: String,
                                           lgK: Int,
-                                          batchId: Long = -1L,
+                                          batchId: Long,
                                           writerId: Option[String] = None): Unit = {
     val p = batch.filter(col(valueCol).isNotNull)
       .groupBy(keys.map(col): _*)
@@ -578,19 +541,13 @@ object StreamOps {
     * the shared identity rule.
     */
   def kmvSink(stream: DataFrame, checkpoint: String, target: String,
-              keys: Seq[String], valueCol: String, k: Int = 256):
-      org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        kmvBatchToParquet(batch.toDF(), target, keys, valueCol, k, batchId)
-      }
+              keys: Seq[String], valueCol: String, k: Int = 256): DataStreamWriter[Row] =
+    batchSink(stream, checkpoint)(kmvBatchToParquet(_, target, keys, valueCol, k, _))
 
   private[graft] def kmvBatchToParquet(batch: DataFrame, target: String,
                                        keys: Seq[String], valueCol: String,
                                        k: Int,
-                                       batchId: Long = -1L,
+                                       batchId: Long,
                                        writerId: Option[String] = None): Unit = {
     import org.apache.spark.sql.expressions.Window
     require(k >= 2, s"kmvBatchToParquet needs k >= 2: $k")
@@ -622,19 +579,13 @@ object StreamOps {
     * sinks.
     */
   def kllSink(stream: DataFrame, checkpoint: String, target: String,
-              keys: Seq[String], valueCol: String, k: Int = 200):
-      org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        kllBatchToParquet(batch.toDF(), target, keys, valueCol, k, batchId)
-      }
+              keys: Seq[String], valueCol: String, k: Int = 200): DataStreamWriter[Row] =
+    batchSink(stream, checkpoint)(kllBatchToParquet(_, target, keys, valueCol, k, _))
 
   private[graft] def kllBatchToParquet(batch: DataFrame, target: String,
                                        keys: Seq[String], valueCol: String,
                                        k: Int,
-                                       batchId: Long = -1L,
+                                       batchId: Long,
                                        writerId: Option[String] = None): Unit = {
     import graft.expressions.Kll
     // NaN excluded to mirror the sketch's own update policy, so the
@@ -684,20 +635,14 @@ object StreamOps {
   def dedupDecisionSink(stream: DataFrame, checkpoint: String,
                         indexDir: String, target: String,
                         idCol: String, textCol: String,
-                        threshold: Double = 0.5):
-      org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        dedupDecisionBatch(batch.toDF(), indexDir, target, idCol, textCol,
-          threshold, batchId)
-      }
+                        threshold: Double = 0.5): DataStreamWriter[Row] =
+    batchSink(stream, checkpoint)(
+      dedupDecisionBatch(_, indexDir, target, idCol, textCol, threshold, _))
 
   private[graft] def dedupDecisionBatch(batch: DataFrame, indexDir: String,
                                         target: String, idCol: String,
                                         textCol: String, threshold: Double,
-                                        batchId: Long = -1L,
+                                        batchId: Long,
                                         writerId: Option[String] = None): Unit = {
     // def, not val: the probe reads the index manifest EAGERLY at
     // plan construction, and upsertParquet's replay guard must be
@@ -738,14 +683,8 @@ object StreamOps {
     * under the same identity rule as the other replay-guarded sinks.
     */
   def topkSink(stream: DataFrame, checkpoint: String, target: String,
-               keys: Seq[String], capacity: Int = 100):
-      org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        topkBatchToParquet(batch.toDF(), target, keys, capacity, batchId)
-      }
+               keys: Seq[String], capacity: Int = 100): DataStreamWriter[Row] =
+    batchSink(stream, checkpoint)(topkBatchToParquet(_, target, keys, capacity, _))
 
   /** MG truncation: after counts are summed, subtract the
     * (capacity+1)-th largest and keep the positive remainder. A row
@@ -779,7 +718,7 @@ object StreamOps {
 
   private[graft] def topkBatchToParquet(batch: DataFrame, target: String,
                                         keys: Seq[String], capacity: Int,
-                                        batchId: Long = -1L,
+                                        batchId: Long,
                                         writerId: Option[String] = None): Unit = {
     val p = batch
       .filter(keys.map(col(_).isNotNull).reduce(_ && _))
@@ -821,18 +760,12 @@ object StreamOps {
     * shared writer-identity rule.
     */
   def countMinSink(stream: DataFrame, checkpoint: String, target: String,
-                   itemCol: String, d: Int = 4, w: Int = 256):
-      org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        countMinBatchToParquet(batch.toDF(), target, itemCol, d, w, batchId)
-      }
+                   itemCol: String, d: Int = 4, w: Int = 256): DataStreamWriter[Row] =
+    batchSink(stream, checkpoint)(countMinBatchToParquet(_, target, itemCol, d, w, _))
 
   private[graft] def countMinBatchToParquet(batch: DataFrame, target: String,
                                             itemCol: String, d: Int, w: Int,
-                                            batchId: Long = -1L,
+                                            batchId: Long,
                                             writerId: Option[String] = None): Unit = {
     require(d >= 1 && w >= 1, s"count-min needs positive dims: $d x $w")
     val cells = batch.filter(col(itemCol).isNotNull)
@@ -869,18 +802,12 @@ object StreamOps {
     * audit never double-counts.
     */
   def latenessSink(stream: DataFrame, checkpoint: String, target: String,
-                   tsCol: String):
-      org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        latenessBatchToParquet(batch.toDF(), target, tsCol, batchId)
-      }
+                   tsCol: String): DataStreamWriter[Row] =
+    batchSink(stream, checkpoint)(latenessBatchToParquet(_, target, tsCol, _))
 
   private[graft] def latenessBatchToParquet(batch: DataFrame, target: String,
                                             tsCol: String,
-                                            batchId: Long = -1L,
+                                            batchId: Long,
                                             writerId: Option[String] = None): Unit = {
     val ts = col(tsCol)
     def auditRow(highWaterBefore: Column): DataFrame =
@@ -930,21 +857,15 @@ object StreamOps {
     */
   def msprtSink(stream: DataFrame, checkpoint: String, stateTarget: String,
                 readoutTarget: String, variantCol: String, a: String,
-                convPred: Column, tau2: Double = 0.01):
-      org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        msprtBatchToParquet(batch.toDF(), stateTarget, readoutTarget,
-          variantCol, a, convPred, tau2, batchId)
-      }
+                convPred: Column, tau2: Double = 0.01): DataStreamWriter[Row] =
+    batchSink(stream, checkpoint)(
+      msprtBatchToParquet(_, stateTarget, readoutTarget, variantCol, a, convPred, tau2, _))
 
   private[graft] def msprtBatchToParquet(batch: DataFrame, stateTarget: String,
                                          readoutTarget: String,
                                          variantCol: String, a: String,
                                          convPred: Column, tau2: Double,
-                                         batchId: Long = -1L,
+                                         batchId: Long,
                                          writerId: Option[String] = None): Unit = {
     val spark = batch.sparkSession
     val userPartial = batch
@@ -1009,24 +930,12 @@ object StreamOps {
     */
   def versionedSink(stream: DataFrame, checkpoint: String, dir: String,
                     statsCol: Option[String] = None,
-                    writerId: Option[String] = None):
-      org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        versionedBatchCommit(batch.toDF(), dir, batchId, statsCol, writerId)
-      }
+                    writerId: Option[String] = None): DataStreamWriter[Row] =
+    batchSink(stream, checkpoint)(versionedBatchCommit(_, dir, _, statsCol, writerId))
 
-  /** The writer identity is the explicit `writerId` when given, else
-    * the running query's id (the `sql.streaming.queryId` local
-    * property StreamExecution sets around foreachBatch). NO silent
-    * fallback: two writers quietly sharing one default identity would
-    * let one writer's recorded batch id permanently suppress the
-    * other's legitimate batches — silent data loss — so an absent
-    * identity (internal key renamed by an upgrade, or a
-    * non-StreamExecution caller that passed no writerId) fails loudly
-    * instead.
+  /** [[versionedSink]]'s batch twin: one append commit carrying the
+    * (writer, batch id) txn marker, skipped before any write when
+    * [[newBatchWriter]] finds the batch already applied.
     */
   private[graft] def versionedBatchCommit(batch: DataFrame, dir: String,
                                           batchId: Long,
@@ -1034,17 +943,8 @@ object StreamOps {
                                           writerId: Option[String] = None): Unit = {
     import graft.sources.VersionedTable
     val spark = batch.sparkSession
-    val qid = writerId
-      .orElse(Option(spark.sparkContext.getLocalProperty("sql.streaming.queryId")))
-      .getOrElse(throw new IllegalStateException(
-        "versionedBatchCommit: no writer identity — sql.streaming.queryId " +
-          "is unset and no explicit writerId was passed; refusing to " +
-          "default to a shared identity (it would cross-suppress batches " +
-          "of distinct writers)"))
-    if (batchId >= 0 &&
-        VersionedTable.lastTxnVersion(spark, dir, qid).exists(batchId <= _)) return
-    VersionedTable.commit(batch, dir, statsCol = statsCol,
-      txn = Some((qid, batchId)))
+    newBatchWriter(spark, writerId, batchId)(VersionedTable.lastTxnVersion(spark, dir, _))
+      .foreach(w => VersionedTable.commit(batch, dir, statsCol = statsCol, txn = Some((w, batchId))))
   }
 
   /** Streaming SCD2 maintenance: each micro-batch of observations is
@@ -1065,39 +965,35 @@ object StreamOps {
     */
   def scd2Sink(stream: DataFrame, checkpoint: String, target: String,
                bk: String, ts: String, tieBreak: Seq[String], attrs: Seq[String]):
-      org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        scd2BatchToParquet(batch.toDF(), target, bk, ts, tieBreak, attrs, batchId)
-      }
+      DataStreamWriter[Row] =
+    batchSink(stream, checkpoint)(scd2BatchToParquet(_, target, bk, ts, tieBreak, attrs, _))
 
-  /** Hidden sidecar names inside a sink-maintained target. Both start
-    * with '_' so a plain `spark.read.parquet(target)` never sees them
-    * (Hadoop's hidden-path filter), yet both travel with swapDirs —
-    * data, watermark and commit marker replace atomically together.
+  /** SCD2's observed-day watermark, a hidden sidecar inside the
+    * target: the leading '_' keeps it out of a plain
+    * `spark.read.parquet(target)` (Hadoop's hidden-path filter), yet it
+    * travels with the swap — data, watermark and commit marker replace
+    * atomically together.
     */
   private[graft] val ObsDir = "_graft_obs"
-  private[graft] val CommitFile = "_graft_commit.json"
 
   private[graft] def scd2BatchToParquet(batch: DataFrame, target: String,
                                             bk: String, ts: String,
                                             tieBreak: Seq[String], attrs: Seq[String],
-                                            batchId: Long = -1L,
+                                            batchId: Long,
                                             writerId: Option[String] = None): Unit = {
     import graft.operators.Scd2
     val spark = batch.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(target)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // heal any half-finished swap BEFORE probing for the watermark — a
-    // target renamed aside by a crash would otherwise read as "no
-    // watermark" and this batch would silently drop the prior one
-    graft.sources.MedallionSink.recoverSwap(fs, target)
     val obsPath = s"$target/$ObsDir"
-    val obsExists = fs.exists(new org.apache.hadoop.fs.Path(obsPath))
+    // lazy: probed only inside the upsert, once the swap protocol has
+    // healed any half-finished swap — a target renamed aside by a crash
+    // would otherwise read as "no watermark" and this batch would
+    // silently drop the prior one
+    lazy val obsExists = {
+      val p = new org.apache.hadoop.fs.Path(obsPath)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+    }
     val batchDays = batch.select(col(bk), to_date(col(ts)).as("__graft_day"))
-    upsertParquet(batch.sparkSession, target, Scd2.fromHistory(batch, bk, ts, tieBreak, attrs),
+    upsertParquet(spark, target, Scd2.fromHistory(batch, bk, ts, tieBreak, attrs),
       { existing =>
         // Re-observation of an already-applied day would replay against
         // the reconstituted MIDNIGHT observation and win regardless of
@@ -1133,105 +1029,88 @@ object StreamOps {
       })
   }
 
-  /** Crash-safe swap of a parquet target that the new frame may itself
-    * read from: the merged frame writes to `target.__graft_tmp`, then
-    * [[graft.sources.MedallionSink.swapDirs]] replaces the target with
-    * checked renames (a plain delete-then-rename would lose the WHOLE
-    * table to a crash between the two calls, and the next restart
-    * would silently re-init from one micro-batch); `recoverSwap` on
-    * entry heals any state a previous crash left. `init` is used when
-    * the target does not exist yet.
-    *
-    * IDEMPOTENT under foreachBatch's at-least-once contract: the last
-    * applied batch id is committed WITH the data (`_graft_commit.json`
-    * written into the tmp dir before the swap), so a crash between the
-    * swap and the stream checkpoint's own commit — which re-delivers
-    * the same batch id on restart — is detected here and skipped as a
-    * no-op. Without this, a non-idempotent merge (scd2's replay guard)
-    * would see its own already-applied rows and poison the stream.
-    *
-    * The marker is keyed on (QUERY identity, batch id), not batch id
-    * alone: batch ids restart at 0 whenever a checkpoint is deleted or
-    * a different query adopts the target, and a bare `batchId <=
-    * marker` check would then silently SKIP genuinely new batches —
-    * data loss with no error (the Delta txnAppId/txnVersion pattern).
-    * The query id comes from the stream-execution thread's local
-    * property and persists across restarts in the checkpoint, so a
-    * restart of the SAME query still dedups, while a marker written by
-    * any other query (or none) is treated as foreign and the batch is
-    * applied. `afterWrite` lets callers place extra sidecar state into
-    * the tmp dir so it replaces atomically with the data.
+  /** The one foreachBatch driver behind every `xxxSink`: checkpointed,
+    * append-mode, each micro-batch handed to its batch twin together
+    * with the batch id the replay rule ([[newBatchWriter]]) keys on.
     */
-  private def upsertParquet(spark: org.apache.spark.sql.SparkSession,
-                            target: String, init: => DataFrame,
-                            merge: DataFrame => DataFrame,
-                            batchId: Long = -1L,
-                            writerId: Option[String] = None,
+  private def batchSink(stream: DataFrame, checkpoint: String)
+                       (twin: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    stream.writeStream
+      .option("checkpointLocation", checkpoint)
+      .outputMode(OutputMode.Append)
+      .foreachBatch((batch: Dataset[Row], batchId: Long) => twin(batch.toDF(), batchId))
+
+  /** The one replay rule of every replay-guarded sink — the parquet
+    * upserts and [[versionedBatchCommit]] alike. Resolves the writer
+    * identity — the explicit `writerId`, else the running query's id
+    * (the `sql.streaming.queryId` local property StreamExecution sets
+    * around foreachBatch, which persists across restarts in the
+    * checkpoint) — and returns it when `batchId` is new for that
+    * writer, None when `lastBatch(writer)`, the last batch the target
+    * records for THAT writer, already covers it.
+    *
+    * Keyed on (writer, batch id), not batch id alone (the Delta
+    * txnAppId/txnVersion pattern): batch ids restart at 0 whenever a
+    * checkpoint is deleted or another query adopts the target, so a
+    * marker from any other writer never counts as applied — a bare
+    * `batchId <= marker` check would silently SKIP genuinely new
+    * batches. NO silent fallback identity either: two writers sharing
+    * one default would let one's recorded batch id permanently
+    * suppress the other's batches, so an absent identity (internal key
+    * renamed by an upgrade, or a direct caller that passed no
+    * writerId) fails loudly.
+    */
+  private def newBatchWriter(spark: SparkSession, writerId: Option[String], batchId: Long)
+                            (lastBatch: String => Option[Long]): Option[String] = {
+    val writer = writerId
+      .orElse(Option(spark.sparkContext.getLocalProperty("sql.streaming.queryId")))
+      .getOrElse(throw new IllegalStateException(
+        "no writer identity — sql.streaming.queryId is unset and no explicit " +
+          "writerId was passed; refusing to default to a shared identity (it " +
+          "would cross-suppress batches of distinct writers)"))
+    if (lastBatch(writer).exists(batchId <= _)) None else Some(writer)
+  }
+
+  /** Replay-guarded replacement of a parquet target that the new frame
+    * may itself read from, through the lake's one crash-safe directory
+    * swap ([[graft.sources.MedallionSink.replaceDir]]): `merge` maps the
+    * current target to its successor, `init` is used when the target
+    * does not exist yet, and `afterWrite` places extra sidecar state
+    * into the tmp dir so it replaces atomically with the data.
+    *
+    * IDEMPOTENT under foreachBatch's at-least-once contract: the
+    * (writer, batch id) commit marker is swapped in WITH the data, so a
+    * crash between the swap and the stream checkpoint's own commit —
+    * which re-delivers the same batch id on restart — is detected by
+    * [[newBatchWriter]] and skipped as a no-op. Without this, a
+    * non-idempotent merge (scd2's replay guard) would see its own
+    * already-applied rows and poison the stream.
+    *
+    * `init` is BY-NAME so a replayed batch id short-circuits at the
+    * marker check without constructing the batch plan — plan
+    * construction is not free for every sink (the dedup-decision probe
+    * reads the index manifest eagerly). The session comes from the
+    * caller's batch DataFrame, NOT SparkSession.active: in a
+    * multi-session app (or a direct batch-twin call from a thread where
+    * a different session is active) the thread-active session would
+    * read/write through the wrong catalog and hadoop conf — and throws
+    * when no session is set on the thread at all.
+    */
+  private def upsertParquet(spark: SparkSession, target: String, init: => DataFrame,
+                            merge: DataFrame => DataFrame, batchId: Long,
+                            writerId: Option[String],
                             afterWrite: String => Unit = _ => ()): Unit = {
     import graft.sources.MedallionSink
-    // `init` is BY-NAME so a replayed batch id short-circuits at the
-    // marker check below without constructing the batch plan — plan
-    // construction is not free for every sink (the dedup-decision
-    // probe reads the index manifest eagerly). The session comes from
-    // the caller's batch DataFrame, NOT SparkSession.active: in a
-    // multi-session app (or a direct batch-twin call from a thread
-    // where a different session is active) the thread-active session
-    // would read/write through the wrong catalog and hadoop conf —
-    // and throws when no session is set on the thread at all.
-    val tPath = new org.apache.hadoop.fs.Path(target)
-    val fs = tPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    MedallionSink.recoverSwap(fs, target)
-    // StreamExecution.QUERY_ID_KEY — set on the micro-batch thread that
-    // runs foreachBatch; None when the batch twin is invoked directly.
-    val qid = writerId.orElse(
-      Option(spark.sparkContext.getLocalProperty("sql.streaming.queryId")))
-    // Replay-guarded writes need a real writer identity: two direct
-    // (non-stream) callers would otherwise share the None identity and
-    // one's marker would silently suppress the other's batches — the
-    // same loud-failure rule as versionedBatchCommit.
-    require(batchId < 0 || qid.isDefined,
-      "upsertParquet: batchId given but no writer identity — " +
-        "sql.streaming.queryId is unset and no explicit writerId was " +
-        "passed; replay-guarded writes sharing one default identity " +
-        "would cross-suppress distinct writers' batches")
-    if (batchId >= 0 &&
-        lastApplied(fs, target).exists { case (b, q) => q == qid && batchId <= b })
-      return
-    val exists = fs.exists(tPath)
-    val out = if (exists) merge(spark.read.parquet(target)) else init
-    val tmp = target + MedallionSink.TmpSuffix
-    out.write.mode("overwrite").parquet(tmp)
-    afterWrite(tmp)
-    if (batchId >= 0) {
-      val qidField = qid.map(q => s""", "query_id": "$q"""").getOrElse("")
-      writeText(fs, new org.apache.hadoop.fs.Path(tmp, CommitFile),
-        s"""{"batch_id": $batchId$qidField}""")
-    }
-    MedallionSink.swapDirs(fs, target)
-  }
-
-  /** (last applied batch id, query id that wrote it) from the commit
-    * marker; query id None for markers written outside a stream.
-    */
-  private def lastApplied(fs: org.apache.hadoop.fs.FileSystem,
-                          target: String): Option[(Long, Option[String])] = {
-    val p = new org.apache.hadoop.fs.Path(target, CommitFile)
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    """"batch_id"\s*:\s*(\d+)""".r.findFirstMatchIn(text).map { m =>
-      val q = """"query_id"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(text).map(_.group(1))
-      (m.group(1).toLong, q)
-    }
-  }
-
-  private def writeText(fs: org.apache.hadoop.fs.FileSystem,
-                        p: org.apache.hadoop.fs.Path, content: String): Unit = {
-    val out = fs.create(p, true)
-    try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    newBatchWriter(spark, writerId, batchId)(MedallionSink.lastBatch(spark, target, _))
+      .foreach { w =>
+        MedallionSink.replaceDir(spark, target, Some((w, batchId))) { tmp =>
+          val tPath = new org.apache.hadoop.fs.Path(target)
+          val exists = tPath.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(tPath)
+          (if (exists) merge(spark.read.parquet(target)) else init)
+            .write.mode("overwrite").parquet(tmp)
+          afterWrite(tmp)
+        }
+      }
   }
 
   final case class FunnelEvent(user_id: Long, ts: Timestamp, event_id: Long, et: String)

@@ -630,11 +630,46 @@ class StreamingSpec extends SparkSpec {
     val b1 = Seq((2L, "B", 3L, 20.0)).toDF("user_id", "event_type", "event_id", "value")
     StreamOps.mergeBatchToParquet(b1, target, Seq("user_id", "event_type"), Seq("event_id"), 1L, Some("w0"))
     assert(spark.read.parquet(target).count() == 2)
+    // the marker's bytes are the on-disk contract: (batch, writer)
+    val marker = java.nio.file.Paths.get(target, "_graft_commit.json")
+    assert(java.nio.file.Files.readString(marker) == """{"batch_id": 1, "query_id": "w0"}""")
+    // a marker that names no writer is foreign: it never suppresses a
+    // batch, even one whose id it covers (the checksum twin goes too,
+    // so the hand edit reads back)
+    java.nio.file.Files.deleteIfExists(
+      java.nio.file.Paths.get(target, "._graft_commit.json.crc"))
+    java.nio.file.Files.writeString(marker, """{"batch_id": 5}""")
+    val b2 = Seq((3L, "C", 4L, 30.0)).toDF("user_id", "event_type", "event_id", "value")
+    StreamOps.mergeBatchToParquet(b2, target, Seq("user_id", "event_type"), Seq("event_id"), 2L, Some("w0"))
+    assert(spark.read.parquet(target).count() == 3)
     // a replay-guarded write with NO identity (no stream, no writerId)
     // fails loudly instead of sharing a default identity
-    intercept[IllegalArgumentException] {
+    val e = intercept[IllegalStateException] {
       StreamOps.mergeBatchToParquet(b1, target,
-        Seq("user_id", "event_type"), Seq("event_id"), 2L)
+        Seq("user_id", "event_type"), Seq("event_id"), 3L)
+    }
+    assert(e.getMessage.contains("no writer identity"))
+  }
+
+  test("merge sink: the next batch heals either crash state a swap can leave") {
+    val grain = Seq("user_id", "event_type"); val order = Seq("event_id")
+    val b0 = Seq((1L, "A", 1L, 10.0)).toDF("user_id", "event_type", "event_id", "value")
+    val b1 = Seq((2L, "B", 2L, 20.0)).toDF("user_id", "event_type", "event_id", "value")
+    for (oldKept <- Seq(false, true)) {
+      val dir = java.nio.file.Files.createTempDirectory("graft_mergecrash").toString
+      val target = s"$dir/fct"
+      StreamOps.mergeBatchToParquet(b0, target, grain, order, 0L, Some("w0"))
+      val old = new java.io.File(target + ".__graft_old")
+      // died between the swap's two renames: the target sits renamed
+      // aside, nothing at `target`; or died before dropping the old
+      // copy: target and the leftover both present
+      if (oldKept) org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(target), old)
+      else assert(new java.io.File(target).renameTo(old))
+      StreamOps.mergeBatchToParquet(b1, target, grain, order, 1L, Some("w0"))
+      assert(!old.exists(), s"leftover ${old.getName} survived (oldKept=$oldKept)")
+      assert(spark.read.parquet(target).collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet ==
+        Set((1L, "A", 1L), (2L, "B", 2L)), s"oldKept=$oldKept")
     }
   }
 
